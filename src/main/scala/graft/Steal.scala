@@ -2,12 +2,14 @@ package graft
 
 import java.util.concurrent.{Executors, TimeUnit}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.anonymise.Anonymiser
 import graft.config.{Config, TableConfig}
 import graft.plan.SubsetPlanner
-import graft.sinks.ParquetSink
+import graft.sinks.{JdbcSink, JdbcSinkConfig, ParquetSink, SqlTextSink}
+import graft.sources.{Drivers, JdbcReadOptions, Resolved}
 
 /** The whole pipeline (≅ `klepto steal`, cmd/steal.go:52-132):
   * catalog → subset plan → anonymise → sink, per table.
@@ -31,6 +33,7 @@ object Steal {
   final case class StealReport(
       table: String, rows: Long, ok: Boolean, error: Option[String])
 
+  /** Lake directory → lake directory, both parquet. */
   def run(
       spark: SparkSession,
       sourceDir: String,
@@ -39,43 +42,124 @@ object Steal {
       secret: String = "graft",
       concurrency: Int = Runtime.getRuntime.availableProcessors(),
       dataOnly: Boolean = false,
-      bestEffort: Boolean = false,
-      consistentParents: Boolean = false): Seq[StealReport] = {
+      bestEffort: Boolean = false): Seq[StealReport] =
+    pipeline(spark, Resolved.File(sourceDir, "parquet"),
+      Resolved.File(targetDir, "parquet"), tables, secret, concurrency,
+      dataOnly, bestEffort)
 
-    val catalog = Tables.list(sourceDir) // source of record
-    val planner = new SubsetPlanner(
-      Tables.load(spark, sourceDir, _), tables, consistentParents, catalog)
+  /** DSN-routed variant (≅ `klepto steal --from <dsn> --to <dsn>`,
+    * cmd/steal.go:21-44): both DSNs resolve through the driver registry
+    * ([[graft.sources.Drivers]]), then run the same [[pipeline]]. */
+  def runDsn(
+      spark: SparkSession,
+      fromDsn: String,
+      toDsn: String,
+      tables: Seq[TableConfig],
+      secret: String = "graft",
+      concurrency: Int = Runtime.getRuntime.availableProcessors(),
+      dataOnly: Boolean = false,
+      bestEffort: Boolean = false,
+      out: java.io.Writer = new java.io.PrintWriter(System.out),
+      readOpts: JdbcReadOptions = JdbcReadOptions(),
+      writeTimeout: Int = 30,
+      writeMaxConns: Int = 5,
+      pushdownScan: Boolean = false): Seq[StealReport] =
+    pipeline(spark, Drivers.resolve(fromDsn), Drivers.resolve(toDsn), tables,
+      secret, concurrency, dataOnly, bestEffort, out, readOpts, writeTimeout,
+      writeMaxConns, pushdownScan)
+
+  /** The one steal pipeline over resolved endpoints: `Resolved.Jdbc` →
+    * JDBC, `Resolved.File` → lake files, `Resolved.Console` → SQL-text
+    * dump (W4, a target only).
+    *
+    * `out` overrides the console writer (klepto's writer selection,
+    * `pkg/dumper/query/writer.go:11-33`; injectable for tests).
+    * `readOpts`, `writeTimeout` and `writeMaxConns` are the connection
+    * governance of a JDBC source and target, with reference-matching
+    * defaults (cmd/steal.go:72-79, COVERAGE.md §2.1).
+    *
+    * `pushdownScan` is the DSv2 total-pushdown leg (VERDICT r12 #4): a
+    * JDBC source's CONFIGURED tables plan through a registered
+    * JDBCTableCatalog, so Catalyst compiles Filter.Limit + Sorts into the
+    * remote SQL (PushedTopN / PushedLimit — the reference's
+    * engine.go:158-163 contract, which the V1 path can only approximate
+    * with a streaming CollectLimit). Off by default: unconfigured full
+    * copies, and configs without a limit, want the V1 PK-partitioned
+    * parallel cursors instead — a V2 JDBC scan is one remote query, the
+    * right shape only when pushdown shrinks the answer at the source. */
+  def pipeline(
+      spark: SparkSession,
+      source: Resolved,
+      target: Resolved,
+      tables: Seq[TableConfig],
+      secret: String = "graft",
+      concurrency: Int = Runtime.getRuntime.availableProcessors(),
+      dataOnly: Boolean = false,
+      bestEffort: Boolean = false,
+      out: java.io.Writer = new java.io.PrintWriter(System.out),
+      readOpts: JdbcReadOptions = JdbcReadOptions(),
+      writeTimeout: Int = 30,
+      writeMaxConns: Int = 5,
+      pushdownScan: Boolean = false): Seq[StealReport] = {
+    val catalog = Drivers.listTables(spark, source) // source of record
+    // a configured table the catalog does not list would never be dumped
+    // under its config, while the catalog's own spelling of it (engines
+    // fold case) would be copied whole and un-anonymised: fail first
+    val unlisted = tables.map(_.name).filterNot(catalog.contains)
+    if (unlisted.nonEmpty) throw new IllegalArgumentException(unlisted.map { t =>
+      val sameIgnoringCase = catalog.filter(_.equalsIgnoreCase(t))
+      s"configured table '$t' is not in the source catalog" +
+        sameIgnoringCase.map(c => s" (catalog has '$c')").mkString
+    }.mkString("; "))
+    val read: String => DataFrame = Drivers.read(spark, source, _, readOpts)
+    val configuredLoad = source match {
+      case jdbc: Resolved.Jdbc if pushdownScan =>
+        Drivers.catalogLoader(spark, Drivers.catalogNameFor(jdbc), jdbc, readOpts)
+      case _ => read
+    }
+    val planner = new SubsetPlanner(configuredLoad, tables, knownTables = catalog)
     val byName = tables.map(t => t.name -> t).toMap
 
-    def dumpTable(name: String): StealReport = {
-      try {
-        val cfg = byName.getOrElse(name, TableConfig(name))
-        val subset: DataFrame =
-          if (byName.contains(name)) planner.plan(name)
-          else Tables.load(spark, sourceDir, name) // unconfigured: full copy
-        val (anonymised, rowsOf) = observed(Anonymiser(subset, cfg, secret))
-        ParquetSink.write(anonymised, targetDir, name, dataOnly)
-        StealReport(name, rowsOf(), ok = true, None)
-      } catch {
-        case e: Exception if bestEffort =>
-          StealReport(name, 0, ok = false, Some(e.getMessage))
-      }
+    /** Writes one table into the target; returns the rows written. */
+    def write(df: DataFrame, name: String): Long = target match {
+      case Resolved.File(path, "parquet") =>
+        counted(df)(ParquetSink.write(_, path, name, dataOnly))
+      case Resolved.File(path, format) =>
+        counted(df)(_.write.mode("overwrite").format(format)
+          .option("header", "true").save(s"$path/$name.$format"))
+      case Resolved.Console(_) =>
+        // single writer: serialize table dumps like the reference's text
+        // dumper (its Dump deliberately ignores concurrency,
+        // query/dumper.go:52-99)
+        out.synchronized { SqlTextSink.write(df, name, out, dataOnly) }
+      case Resolved.Jdbc(url, props) =>
+        counted(df)(JdbcSink.write(_, JdbcSinkConfig(url, name, props,
+          queryTimeout = writeTimeout, maxConns = writeMaxConns)))
     }
 
-    new java.io.File(targetDir).mkdirs()
+    def dumpTable(name: String): StealReport = try {
+      val subset =
+        if (byName.contains(name)) planner.plan(name)
+        else read(name) // unconfigured: full copy
+      val anonymised =
+        Anonymiser(subset, byName.getOrElse(name, TableConfig(name)), secret)
+      StealReport(name, write(anonymised, name), ok = true, None)
+    } catch {
+      case e: Exception if bestEffort =>
+        StealReport(name, 0, ok = false, Some(e.getMessage))
+    }
+
     runPool(catalog, concurrency)(dumpTable)
   }
 
-  /** Attach a row-count observation so the report comes from the write's
-    * OWN execution — the previous re-read of the written parquet (or a
-    * `count()` on the source) cost one extra Spark job per table. Returns
-    * the instrumented frame and a thunk that yields the count once the
-    * write has run. */
-  private def observed(df: DataFrame): (DataFrame, () => Long) = {
-    val obs = new org.apache.spark.sql.Observation()
-    (df.observe(obs, org.apache.spark.sql.functions
-      .count(org.apache.spark.sql.functions.lit(1)).as("rows")),
-      () => obs.get("rows").asInstanceOf[Long])
+  /** Runs `write` over `df` with a row-count observation attached, so the
+    * count comes from the write's OWN execution — a re-read of the output
+    * (or a `count()` on the source) would cost one extra Spark job per
+    * table. */
+  private def counted(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = new Observation()
+    write(df.observe(obs, count(lit(1)).as("rows")))
+    obs.get("rows").asInstanceOf[Long]
   }
 
   /** Bounded per-table pool (reference: dumper/engine/engine.go:88-126).
@@ -105,91 +189,16 @@ object Steal {
     }
   }
 
-  /** DSN-routed variant (≅ `klepto steal --from <dsn> --to <dsn>`,
-    * cmd/steal.go:21-44): source and target resolve through the driver
-    * registry ([[graft.sources.Drivers]]) — `postgres://`/`mysql://` →
-    * JDBC, `file://` → lake files, `os://stdout/` → SQL-text dump (W4).
-    * `out` overrides the console writer (klepto's writer selection,
-    * `pkg/dumper/query/writer.go:11-33`; injectable for tests). */
-  def runDsn(
-      spark: SparkSession,
-      fromDsn: String,
-      toDsn: String,
-      tables: Seq[TableConfig],
-      secret: String = "graft",
-      concurrency: Int = Runtime.getRuntime.availableProcessors(),
-      dataOnly: Boolean = false,
-      bestEffort: Boolean = false,
-      out: java.io.Writer =
-        new java.io.PrintWriter(System.out),
-      // connection governance, reference-matching defaults
-      // (cmd/steal.go:72-79): read cursor timeout/parallelism and write
-      // statement timeout/connection cap — see COVERAGE.md §2.1
-      readOpts: graft.sources.JdbcReadOptions = graft.sources.JdbcReadOptions(),
-      writeTimeout: Int = 30,
-      writeMaxConns: Int = 5,
-      // DSv2 total-pushdown leg (VERDICT r12 #4): route CONFIGURED tables'
-      // subset plans through a registered JDBCTableCatalog so Catalyst
-      // compiles Filter.Limit + Sorts into the remote SQL (PushedTopN /
-      // PushedLimit — the reference's engine.go:158-163 contract, which
-      // the V1 path can only approximate with a streaming CollectLimit).
-      // Off by default: unconfigured full copies, and configs without a
-      // limit, want the V1 PK-partitioned parallel cursors instead — a V2
-      // JDBC scan is one remote query, the right shape only when pushdown
-      // shrinks the answer at the source.
-      pushdownScan: Boolean = false): Seq[StealReport] = {
-    import graft.sources.{Drivers, Resolved}
-    import graft.sinks.{JdbcSink, JdbcSinkConfig, SqlTextSink}
-
-    val catalog = Drivers.listTables(spark, fromDsn)
-    // catalog name derived from the DSN (ADVICE r13 #4): a second runDsn
-    // in the same session against a different source registers its own
-    // catalog instead of silently repointing "graft_src"; readOpts ride
-    // into the catalog conf so GRAFT_READ_TIMEOUT/fetch-size governance
-    // holds on the DSv2 leg too (ADVICE r13 #2)
-    val subsetLoad: String => DataFrame =
-      if (pushdownScan && Drivers.resolve(fromDsn).isInstanceOf[Resolved.Jdbc])
-        Drivers.catalogLoader(
-          spark, Drivers.catalogNameFor(fromDsn), fromDsn, readOpts)
-      else Drivers.read(spark, fromDsn, _, readOpts)
-    val planner = new SubsetPlanner(subsetLoad, tables, knownTables = catalog)
-    val byName = tables.map(t => t.name -> t).toMap
-    val target = Drivers.resolve(toDsn)
-
-    def dumpTable(name: String): StealReport = try {
-      val cfg = byName.getOrElse(name, TableConfig(name))
-      val subset =
-        if (byName.contains(name)) planner.plan(name)
-        else Drivers.read(spark, fromDsn, name, readOpts)
-      val (anonymised, rowsOf) = observed(Anonymiser(subset, cfg, secret))
-      target match {
-        case Resolved.File(path, "parquet") =>
-          ParquetSink.write(anonymised, path, name, dataOnly)
-        case Resolved.File(path, format) =>
-          anonymised.write.mode("overwrite").format(format)
-            .option("header", "true").save(s"$path/$name.$format")
-        case Resolved.Console(_) =>
-          // single writer: serialize table dumps like the reference's text
-          // dumper (its Dump deliberately ignores concurrency,
-          // query/dumper.go:52-99)
-          out.synchronized { SqlTextSink.write(anonymised, name, out, dataOnly) }
-        case Resolved.Jdbc(url, props) =>
-          JdbcSink.write(anonymised, JdbcSinkConfig(url, name, props,
-            queryTimeout = writeTimeout, maxConns = writeMaxConns))
-      }
-      StealReport(name, rowsOf(), ok = true, None)
-    } catch {
-      case e: Exception if bestEffort =>
-        StealReport(name, 0, ok = false, Some(e.getMessage))
-    }
-
-    runPool(catalog, concurrency)(dumpTable)
-  }
+  /** A command-line endpoint: a DSN (`<type>://…`) or raw `jdbc:` URL
+    * resolves through the driver registry; anything else is a parquet
+    * directory, taken verbatim — the DSN grammar would mangle a path
+    * holding `@` or parentheses. */
+  private[graft] def endpoint(arg: String): Resolved =
+    if (arg.startsWith("jdbc:") || arg.contains("://")) Drivers.resolve(arg)
+    else Resolved.File(arg, "parquet")
 
   /** CLI-ish entry: `Steal <sourceDirOrDsn> <targetDirOrDsn> [configPath]`. */
   def main(args: Array[String]): Unit = {
-    val sourceDir = args(0)
-    val targetDir = args(1)
     val tables = if (args.length > 2) Config.loadFile(args(2)) else Nil
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
@@ -204,24 +213,19 @@ object Steal {
     spark.sparkContext.setLogLevel("WARN")
     Logs.quietCheckpointUnpersistWarns()
     try {
-      def asDsn(s: String) =
-        if (s.contains("://")) s else s"file://path($s)/?format=parquet"
       // connection-governance env knobs, CLI-flag parity with the
       // reference's steal command (cmd/steal.go:72-79); defaults match
       def envInt(k: String, d: Int) = sys.env.get(k).map(_.toInt).getOrElse(d)
-      val readOpts = graft.sources.JdbcReadOptions(
+      val readOpts = JdbcReadOptions(
         timeout = envInt("GRAFT_READ_TIMEOUT", 300),
         maxConns = envInt("GRAFT_READ_MAX_CONNS", 5),
         fetchSize = envInt("GRAFT_READ_FETCH_SIZE", 10000))
-      val reports =
-        if (sourceDir.contains("://") || targetDir.contains("://"))
-          runDsn(spark, asDsn(sourceDir), asDsn(targetDir), tables,
-            readOpts = readOpts,
-            writeTimeout = envInt("GRAFT_WRITE_TIMEOUT", 30),
-            writeMaxConns = envInt("GRAFT_WRITE_MAX_CONNS", 5),
-            pushdownScan =
-              sys.env.get("GRAFT_READ_PUSHDOWN").exists(_.toBoolean))
-        else run(spark, sourceDir, targetDir, tables)
+      val reports = pipeline(spark, endpoint(args(0)), endpoint(args(1)),
+        tables,
+        readOpts = readOpts,
+        writeTimeout = envInt("GRAFT_WRITE_TIMEOUT", 30),
+        writeMaxConns = envInt("GRAFT_WRITE_MAX_CONNS", 5),
+        pushdownScan = sys.env.get("GRAFT_READ_PUSHDOWN").exists(_.toBoolean))
       reports.foreach { r =>
         println(s"[steal] ${r.table}: rows=${r.rows} ok=${r.ok}" +
           r.error.map(e => s" error=$e").getOrElse(""))

@@ -46,14 +46,16 @@ object ParquetSink {
   */
 object SqlTextSink {
 
+  /** Returns the number of rows written. */
   def write(df: DataFrame, table: String, out: Writer,
-      dataOnly: Boolean = false, batchRows: Int = 500): Unit = {
+      dataOnly: Boolean = false, batchRows: Int = 500): Long = {
     if (!dataOnly)
       out.write(s"CREATE TABLE $table (${df.schema.toDDL});\n")
     val cols = df.columns.map(quoteIdent).mkString(", ")
     val schema = df.schema
     val it = df.toLocalIterator()
     val batch = new scala.collection.mutable.ArrayBuffer[String](batchRows)
+    var rows = 0L
     def flush(): Unit = if (batch.nonEmpty) {
       out.write(s"INSERT INTO $table ($cols) VALUES\n  ")
       out.write(batch.mkString(",\n  "))
@@ -62,10 +64,12 @@ object SqlTextSink {
     }
     while (it.hasNext) {
       batch += rowLiteral(it.next(), schema)
+      rows += 1
       if (batch.size >= batchRows) flush()
     }
     flush()
     out.flush()
+    rows
   }
 
   def quoteIdent(name: String): String = "\"" + name.replace("\"", "\"\"") + "\""
@@ -92,8 +96,9 @@ object SqlTextSink {
       case TimestampType | TimestampNTZType | DateType => v match {
         case ts: java.sql.Timestamp => s"'${utcTs.format(ts.toInstant)}'"
         case i: java.time.Instant => s"'${utcTs.format(i)}'"
+        case t: java.time.LocalDateTime => s"'${utcTs.format(t)}'"
         case d: java.sql.Date => s"'${d.toLocalDate}'" // field-based, TZ-free
-        case other => s"'${other.toString}'" // LocalDate/LocalDateTime: TZ-free
+        case other => s"'${other.toString}'" // LocalDate: TZ-free
       }
       case BinaryType =>
         "X'" + v.asInstanceOf[Array[Byte]].map("%02x".format(_)).mkString + "'"
@@ -185,16 +190,26 @@ object JdbcSink {
     if (cfg.staging) dropIfExists(cfg, target)
     runSql(cfg, cfg.preSql)
     try {
-      df.write.mode(SaveMode.Append)
-        .option("batchsize", cfg.batchSize.toString)
-        .jdbc(cfg.url,
-          graft.sources.Drivers.quoteTableIfNeeded(cfg.url, target),
-          cfg.properties)
+      append(df, cfg, target)
       if (cfg.staging)
         swapSql(cfg.url, cfg.table, target, tableExists(cfg, cfg.table))
           .foreach(batch => runSqlTxn(cfg, batch))
     } finally runSql(cfg, cfg.postSql)
   }
+
+  /** The one distributed append, into `table` of `cfg`'s database: JDBC
+    * batches of `batchSize` rows, `queryTimeout` per statement, and the
+    * frame coalesced to at most `maxConns` partitions — one connection
+    * each. The coalesce is the writer's `numPartitions` option done by
+    * hand: the option calls `df.rdd` before the write, which empties any
+    * `Dataset.observe` metrics the caller attached (Steal's row counts). */
+  private def append(df: DataFrame, cfg: JdbcSinkConfig, table: String): Unit =
+    df.coalesce(cfg.maxConns).write.mode(SaveMode.Append)
+      .option("batchsize", cfg.batchSize.toString)
+      .option("queryTimeout", cfg.queryTimeout.toString)
+      .jdbc(cfg.url,
+        graft.sources.Drivers.quoteTableIfNeeded(cfg.url, table),
+        cfg.properties)
 
   /** The staging→target swap, engine-aware so it is ATOMIC (a crash between
     * a separate DROP and RENAME would lose the target table entirely):
@@ -223,13 +238,20 @@ object JdbcSink {
         s"ALTER TABLE ${q(staging)} RENAME TO ${q(table)}"))
   }
 
-  private def tableExists(cfg: JdbcSinkConfig, table: String): Boolean = {
+  /** Runs `f` over a fresh driver-side connection to `cfg`'s database,
+    * closing it after. */
+  private def withConn[A](cfg: JdbcSinkConfig)(f: java.sql.Connection => A): A = {
     val conn = java.sql.DriverManager.getConnection(cfg.url, cfg.properties)
-    try Seq(table, table.toUpperCase, table.toLowerCase).distinct.exists { t =>
-      val rs = conn.getMetaData.getTables(null, null, t, null)
-      try rs.next() finally rs.close()
-    } finally conn.close()
+    try f(conn) finally conn.close()
   }
+
+  private def tableExists(cfg: JdbcSinkConfig, table: String): Boolean =
+    withConn(cfg) { conn =>
+      Seq(table, table.toUpperCase, table.toLowerCase).distinct.exists { t =>
+        val rs = conn.getMetaData.getTables(null, null, t, null)
+        try rs.next() finally rs.close()
+      }
+    }
 
   private def dropIfExists(cfg: JdbcSinkConfig, table: String): Unit = {
     val t = graft.sources.Drivers.quoteTableIfNeeded(cfg.url, table)
@@ -240,13 +262,10 @@ object JdbcSink {
   }
 
   private def runSql(cfg: JdbcSinkConfig, stmts: Seq[String]): Unit =
-    if (stmts.nonEmpty) {
-      val conn = java.sql.DriverManager.getConnection(cfg.url, cfg.properties)
-      try {
-        val st = conn.createStatement()
-        stmts.foreach(st.execute)
-        st.close()
-      } finally conn.close()
+    if (stmts.nonEmpty) withConn(cfg) { conn =>
+      val st = conn.createStatement()
+      stmts.foreach(st.execute)
+      st.close()
     }
 
   /** Exactly-once per-epoch apply for a streaming `foreachBatch` JDBC
@@ -290,11 +309,7 @@ object JdbcSink {
     dropIfExists(cfg, stagingT)
     runSql(cfg, cfg.preSql)
     try {
-      df.write.mode(SaveMode.Append)
-        .option("batchsize", cfg.batchSize.toString)
-        .option("queryTimeout", cfg.queryTimeout.toString)
-        .option("numPartitions", cfg.maxConns.toString)
-        .jdbc(cfg.url, q(stagingT), cfg.properties)
+      append(df, cfg, stagingT)
       if (!tableExists(cfg, cfg.table))
         runSql(cfg, Seq(createLikeSql(cfg.url, cfg.table, stagingT)))
       // ALWAYS-quoted, mirroring Spark's JdbcDialect.quoteIdentifier: the
@@ -323,9 +338,8 @@ object JdbcSink {
   }
 
   private def epochApplied(
-      cfg: JdbcSinkConfig, ledger: String, epochId: Long): Boolean = {
-    val conn = java.sql.DriverManager.getConnection(cfg.url, cfg.properties)
-    try {
+      cfg: JdbcSinkConfig, ledger: String, epochId: Long): Boolean =
+    withConn(cfg) { conn =>
       val st = conn.prepareStatement("SELECT 1 FROM " +
         graft.sources.Drivers.quoteTableIfNeeded(cfg.url, ledger) +
         " WHERE epoch_id = ?")
@@ -334,23 +348,19 @@ object JdbcSink {
         val rs = st.executeQuery()
         try rs.next() finally rs.close()
       } finally st.close()
-    } finally conn.close()
-  }
+    }
 
   /** Like runSql but all statements commit (or roll back) as ONE
     * transaction — the swap path. Engines that auto-commit DDL (MySQL)
     * don't go through here. */
   private def runSqlTxn(cfg: JdbcSinkConfig, stmts: Seq[String]): Unit =
-    if (stmts.nonEmpty) {
-      val conn = java.sql.DriverManager.getConnection(cfg.url, cfg.properties)
+    if (stmts.nonEmpty) withConn(cfg) { conn =>
+      conn.setAutoCommit(false)
       try {
-        conn.setAutoCommit(false)
-        try {
-          val st = conn.createStatement()
-          stmts.foreach(st.execute)
-          st.close()
-          conn.commit()
-        } catch { case e: Throwable => conn.rollback(); throw e }
-      } finally conn.close()
+        val st = conn.createStatement()
+        stmts.foreach(st.execute)
+        st.close()
+        conn.commit()
+      } catch { case e: Throwable => conn.rollback(); throw e }
     }
 }

@@ -170,7 +170,11 @@ object Drivers {
     * reference's single-cursor shape — documented in COVERAGE.md §2.1. */
   def read(spark: SparkSession, dsnString: String, table: String,
       opts: JdbcReadOptions = JdbcReadOptions()): DataFrame =
-    resolve(dsnString) match {
+    read(spark, resolve(dsnString), table, opts)
+
+  def read(spark: SparkSession, source: Resolved, table: String,
+      opts: JdbcReadOptions): DataFrame =
+    source match {
       case Resolved.Jdbc(url, props) =>
         val r: DataFrameReader = spark.read.format("jdbc")
           .option("url", url)
@@ -221,9 +225,9 @@ object Drivers {
     * GRAFT_READ_TIMEOUT/fetch-size governance holds on BOTH legs. They
     * are set before the DSN's own params, so an explicit DSN choice wins. */
   def registerCatalog(
-      spark: SparkSession, name: String, dsnString: String,
+      spark: SparkSession, name: String, source: Resolved,
       opts: JdbcReadOptions = JdbcReadOptions()): Unit =
-    resolve(dsnString) match {
+    source match {
       case Resolved.Jdbc(url, props) =>
         // Derby's built-in dialect can't push limits; swap in the
         // FETCH-clause dialect so the pushdown contract holds there too
@@ -263,22 +267,24 @@ object Drivers {
     * (`Filter.Limit` + `Sorts`) where the right move is to ship the whole
     * query to the source and fetch only the answer. */
   def catalogLoader(
-      spark: SparkSession, name: String, dsnString: String,
+      spark: SparkSession, name: String, source: Resolved,
       opts: JdbcReadOptions = JdbcReadOptions()): String => DataFrame = {
-    registerCatalog(spark, name, dsnString, opts)
-    val ns = defaultNamespace(dsnString)
+    registerCatalog(spark, name, source, opts)
+    val ns = defaultNamespace(source)
     t => spark.table(s"`$name`.`$ns`.`$t`")
   }
 
-  /** Session-unique DSv2 catalog name for a DSN (ADVICE r13 #4): catalog
-    * registration is session-conf mutation, so a FIXED name would let a
-    * second runDsn against a different source silently repoint the first
-    * run's catalog (and its lazily-evaluated plans). A short stable hash
-    * of the DSN makes each source its own catalog; the same DSN keeps
-    * resolving to the same name, so re-registration stays idempotent. */
-  def catalogNameFor(dsnString: String): String = {
+  /** Session-unique DSv2 catalog name for a source (ADVICE r13 #4):
+    * catalog registration is session-conf mutation, so a FIXED name would
+    * let a second steal against a different source silently repoint the
+    * first run's catalog (and its lazily-evaluated plans). A short stable
+    * hash of the resolved source — its URL and its connection properties,
+    * where a DSN's user rides — makes each source its own catalog; the
+    * same DSN keeps resolving to the same name, so re-registration stays
+    * idempotent. */
+  def catalogNameFor(source: Resolved): String = {
     val h = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(dsnString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .digest(source.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     "graft_src_" + h.take(6).map(b => f"$b%02x").mkString
   }
 
@@ -289,8 +295,8 @@ object Drivers {
     * DSv2 namespaces are databases (MySQL's Connection.getSchema is
     * null — its JDBCTableCatalog namespaces are the databases, and
     * getCatalog names the one the DSN selected). */
-  private[sources] def defaultNamespace(dsnString: String): String =
-    resolve(dsnString) match {
+  private[sources] def defaultNamespace(source: Resolved): String =
+    source match {
       case Resolved.Jdbc(url, props) =>
         val conn = java.sql.DriverManager.getConnection(url, props)
         try {
@@ -445,7 +451,10 @@ object Drivers {
     else None
 
   def listTables(spark: SparkSession, dsnString: String): Seq[String] =
-    resolve(dsnString) match {
+    listTables(spark, resolve(dsnString))
+
+  def listTables(spark: SparkSession, source: Resolved): Seq[String] =
+    source match {
       case Resolved.Jdbc(url, props) if listTablesQuery(url).isDefined =>
         val r = spark.read.format("jdbc").option("url", url)
           .option("query", listTablesQuery(url).get)

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkTestSession, Steal, Tables}
 import graft.config.Config
+import graft.sources.Resolved
 
 /** DSN-routed steal (≅ `klepto steal --from <dsn> --to <dsn>`,
   * cmd/steal.go:21-44): source/target resolve through the driver registry,
@@ -38,6 +39,8 @@ class DsnStealSpec extends AnyFunSuite {
     val reports = Steal.runDsn(spark, srcDsn, "os://stdout/", cfg,
       concurrency = 2, out = sw)
     assert(reports.forall(_.ok))
+    // counted as the rows reach the writer
+    assert(reports.find(_.table == "nation").map(_.rows).contains(5L), reports)
     val text = sw.toString
     for (t <- Tables.all)
       assert(text.contains(s"CREATE TABLE $t ("), s"missing DDL for $t")
@@ -48,6 +51,23 @@ class DsnStealSpec extends AnyFunSuite {
       .mkString("\n")
     assert(nationInserts.contains("'X'"))
     assert(!nationInserts.contains("NATION_7"))
+  }
+
+  test("main() routes DSNs and jdbc: URLs through the registry, plain paths verbatim") {
+    assert(Steal.endpoint("jdbc:derby:memory:x") match {
+      case Resolved.Jdbc("jdbc:derby:memory:x", _) => true
+      case _ => false
+    })
+    // the DSN grammar would read these as user@address and protocol(address)
+    assert(Steal.endpoint("/tmp/a@b/lake") == Resolved.File("/tmp/a@b/lake", "parquet"))
+    assert(Steal.endpoint("/tmp/run(1)/lake") ==
+      Resolved.File("/tmp/run(1)/lake", "parquet"))
+    Steal.endpoint("postgres://u:p@h:5432/db") match {
+      case Resolved.Jdbc(url, props) =>
+        assert(url == "jdbc:postgresql://h:5432/db")
+        assert(props.getProperty("user") == "u")
+      case other => fail(other.toString)
+    }
   }
 
   test("main() arg routing wraps plain dirs as file DSNs") {

@@ -2,6 +2,7 @@ package graft.sinks
 
 import java.sql.DriverManager
 
+import org.apache.spark.JobExecutionStatus
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -87,6 +88,42 @@ class JdbcRoundTripSpec extends AnyFunSuite {
     assert(users.map(_.getAs[String]("EMAIL")).forall(_ == "REDACTED"))
     assert(users.map(_.getAs[String]("USERNAME")).toSeq ==
       Seq("wbo", "kp", "lp"))
+  }
+
+  test("a configured table the source catalog does not list fails the " +
+    "steal before any table is written") {
+    fixture
+    val tgt = "jdbc:derby:memory:graft_tgt_unlisted;create=true"
+    val e = intercept[IllegalArgumentException](Steal.runDsn(spark, srcUrl, tgt,
+      tables = Seq(TableConfig("users",
+        anonymise = Seq("EMAIL" -> "literal:REDACTED"))),
+      concurrency = 1))
+    // names the config entry and the catalog's spelling of it
+    assert(e.getMessage.contains("'users'") && e.getMessage.contains("USERS"),
+      e.getMessage)
+    assert(Drivers.listTables(spark, tgt).isEmpty)
+  }
+
+  test("JdbcSink caps the write stage at maxConns tasks") {
+    val sc = spark.sparkContext
+    val group = "graft_jdbc_max_conns"
+    val df = spark.range(0, 800, 1, 8).toDF("ID")
+    sc.setJobGroup(group, "JdbcSink maxConns")
+    try JdbcSink.write(df, JdbcSinkConfig(
+      "jdbc:derby:memory:graft_tgt_conns;create=true", "CAPPED", maxConns = 2))
+    finally sc.clearJobGroup()
+    // the status store is fed asynchronously by the listener bus
+    val tracker = sc.statusTracker
+    def writeStageTasks: Seq[Int] = tracker.getJobIdsForGroup(group).toSeq
+      .flatMap(tracker.getJobInfo).filter(_.status == JobExecutionStatus.SUCCEEDED)
+      .flatMap(_.stageIds).flatMap(tracker.getStageInfo).map(_.numTasks)
+    val deadline = System.nanoTime() + 10_000_000_000L
+    while (writeStageTasks.isEmpty && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    val tasks = writeStageTasks
+    assert(tasks.nonEmpty && tasks.max <= 2, tasks)
+    assert(Drivers.read(spark, "jdbc:derby:memory:graft_tgt_conns", "CAPPED")
+      .count() == 800L)
   }
 
   test("pushdownScan steal e2e: DSv2-routed subset config lands the same " +

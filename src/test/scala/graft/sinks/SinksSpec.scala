@@ -44,6 +44,8 @@ class SinksSpec extends AnyFunSuite {
     assert(SqlTextSink.sqlLiteral("O'Hara", StringType) == "'O''Hara'")
     assert(SqlTextSink.sqlLiteral(Double.box(1.5), DoubleType) == "1.5")
     assert(SqlTextSink.sqlLiteral(Array[Byte](0x0a, 0x7f), BinaryType) == "X'0a7f'")
+    assert(SqlTextSink.sqlLiteral(java.time.LocalDateTime.of(1996, 9, 14, 0, 0),
+      TimestampNTZType) == "'1996-09-14 00:00:00.000000'")
   }
 
   test("JdbcSink hook statements match the reference's SQL (W3)") {

@@ -159,7 +159,7 @@ class JdbcPlanSpec extends AnyFunSuite {
     "(PushedLimit — the reference's engine.go:158-163 textual pushdown, " +
     "done by Catalyst; VERDICT r11 #2)") {
     fixture
-    Drivers.registerCatalog(spark, "graftderby", url)
+    Drivers.registerCatalog(spark, "graftderby", Drivers.resolve(url))
     val df = spark.table("graftderby.APP.ACCOUNTS").limit(7)
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("PushedLimit"), p.take(2000))
@@ -224,7 +224,7 @@ class JdbcPlanSpec extends AnyFunSuite {
     "(offset stays Spark-side — Derby's grammar needs OFFSET before " +
     "FETCH, which the default builder can't emit)") {
     fixture
-    Drivers.registerCatalog(spark, "graftderby", url)
+    Drivers.registerCatalog(spark, "graftderby", Drivers.resolve(url))
     val df = spark.table("graftderby.APP.ACCOUNTS")
       .orderBy(org.apache.spark.sql.functions.col("ID")).offset(2).limit(3)
     assert(df.collect().map(_.getInt(0)).toSeq == Seq(2, 3, 4))
@@ -237,8 +237,8 @@ class JdbcPlanSpec extends AnyFunSuite {
     // exactly what Steal.runDsn(pushdownScan = true) builds for its
     // SubsetPlanner: a loader through the registered catalog, with the
     // namespace resolved from the connection (Derby default schema = APP)
-    assert(Drivers.defaultNamespace(url) == "APP")
-    val loader = Drivers.catalogLoader(spark, "graft_src_spec", url)
+    assert(Drivers.defaultNamespace(Drivers.resolve(url)) == "APP")
+    val loader = Drivers.catalogLoader(spark, "graft_src_spec", Drivers.resolve(url))
     val cfg = Seq(TableConfig("ACCOUNTS", filter = Filter(
       matchExpr = "ACTIVE = 1",
       sorts = Seq("BALANCE" -> "desc"), limit = 3)))
@@ -261,7 +261,7 @@ class JdbcPlanSpec extends AnyFunSuite {
     "PushedTopN is rightly absent, and the V2 plan stays value-identical " +
     "to the V1 path under the same config") {
     fixture
-    val loader = Drivers.catalogLoader(spark, "graft_src_nolimit", url)
+    val loader = Drivers.catalogLoader(spark, "graft_src_nolimit", Drivers.resolve(url))
     val cfg = Seq(TableConfig("ACCOUNTS", filter = Filter(
       matchExpr = "ACTIVE = 1", sorts = Seq("BALANCE" -> "desc"))))
     val df = new SubsetPlanner(loader, cfg).plan("ACCOUNTS")
@@ -284,7 +284,7 @@ class JdbcPlanSpec extends AnyFunSuite {
     "queryTimeout/fetchsize land in the catalog conf and the catalog " +
     "still serves reads; MySQL catalogs get useCursorFetch injected") {
     fixture
-    Drivers.registerCatalog(spark, "graft_gov_spec", url,
+    Drivers.registerCatalog(spark, "graft_gov_spec", Drivers.resolve(url),
       JdbcReadOptions(timeout = 42, fetchSize = 7))
     assert(spark.conf.get(
       "spark.sql.catalog.graft_gov_spec.queryTimeout") == "42")
@@ -296,12 +296,13 @@ class JdbcPlanSpec extends AnyFunSuite {
     // MySQL: cursor-fetch injection (registration is conf-only, no
     // connection is opened, so a fake host is fine)
     Drivers.registerCatalog(
-      spark, "graft_gov_my", "jdbc:mysql://h:3306/db")
+      spark, "graft_gov_my", Drivers.resolve("jdbc:mysql://h:3306/db"))
     assert(spark.conf.get(
       "spark.sql.catalog.graft_gov_my.useCursorFetch") == "true")
     // an explicit DSN mode choice is never overridden
     Drivers.registerCatalog(
-      spark, "graft_gov_my2", "jdbc:mysql://h:3306/db?useCursorFetch=false")
+      spark, "graft_gov_my2",
+      Drivers.resolve("jdbc:mysql://h:3306/db?useCursorFetch=false"))
     assert(spark.conf.getOption(
       "spark.sql.catalog.graft_gov_my2.useCursorFetch").isEmpty)
   }
@@ -309,9 +310,12 @@ class JdbcPlanSpec extends AnyFunSuite {
   test("catalogNameFor: stable per DSN, distinct across DSNs, plain " +
     "identifier (ADVICE r13 #4 — a second runDsn must not repoint the " +
     "first run's catalog)") {
-    val a = Drivers.catalogNameFor("jdbc:derby:memory:one")
-    assert(a == Drivers.catalogNameFor("jdbc:derby:memory:one"))
-    assert(a != Drivers.catalogNameFor("jdbc:derby:memory:two"))
+    val a = Drivers.catalogNameFor(Drivers.resolve("jdbc:derby:memory:one"))
+    assert(a == Drivers.catalogNameFor(Drivers.resolve("jdbc:derby:memory:one")))
+    assert(a != Drivers.catalogNameFor(Drivers.resolve("jdbc:derby:memory:two")))
+    // same URL, different user: the user rides in the properties
+    assert(Drivers.catalogNameFor(Drivers.resolve("postgres://a@h:5432/db")) !=
+      Drivers.catalogNameFor(Drivers.resolve("postgres://b@h:5432/db")))
     assert(a.matches("graft_src_[0-9a-f]{12}"))
   }
 
