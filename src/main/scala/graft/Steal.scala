@@ -1,7 +1,11 @@
 package graft
 
-import java.util.concurrent.{Executors, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, ExecutionException,
+  ExecutorCompletionService, Executors}
+import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
@@ -22,7 +26,15 @@ import graft.sources.{Drivers, JdbcReadOptions, Resolved}
   *   - per-table concurrency bounded by a semaphore-like pool, default
   *     NumCPU (dumper/engine/engine.go:88-126, cmd/steal.go:71). Spark
   *     note: tables are independent jobs, so we submit them from parallel
-  *     driver threads and let the scheduler interleave stages.
+  *     driver threads and let the scheduler interleave stages. Tables are
+  *     submitted largest-first (longest-processing-time order), so the
+  *     biggest table — the steal's critical path — never waits behind
+  *     small ones.
+  *
+  * Each source table is opened once per steal and shared: planner chains
+  * and whole-table copies subset against the same `DataFrame`, so every
+  * child sees the same file listing (or JDBC schema) of its parent and no
+  * open is paid twice.
   *
   * Deliberate upgrade (SURVEY §7.4.6): fail-fast by default; the
   * reference's log-and-continue per-table error policy is behind
@@ -101,7 +113,8 @@ object Steal {
       writeTimeout: Int = 30,
       writeMaxConns: Int = 5,
       pushdownScan: Boolean = false): Seq[StealReport] = {
-    val catalog = Drivers.listTables(spark, source) // source of record
+    val sized = Drivers.catalog(spark, source) // source of record
+    val catalog = sized.map(_._1)
     // a configured table the catalog does not list would never be dumped
     // under its config, while the catalog's own spelling of it (engines
     // fold case) would be copied whole and un-anonymised: fail first
@@ -111,10 +124,10 @@ object Steal {
       s"configured table '$t' is not in the source catalog" +
         sameIgnoringCase.map(c => s" (catalog has '$c')").mkString
     }.mkString("; "))
-    val read: String => DataFrame = Drivers.read(spark, source, _, readOpts)
+    val read = once(Drivers.read(spark, source, _, readOpts))
     val configuredLoad = source match {
-      case jdbc: Resolved.Jdbc if pushdownScan =>
-        Drivers.catalogLoader(spark, Drivers.catalogNameFor(jdbc), jdbc, readOpts)
+      case jdbc: Resolved.Jdbc if pushdownScan => once(Drivers.catalogLoader(
+        spark, Drivers.catalogNameFor(jdbc), jdbc, readOpts))
       case _ => read
     }
     val planner = new SubsetPlanner(configuredLoad, tables, knownTables = catalog)
@@ -149,7 +162,18 @@ object Steal {
         StealReport(name, 0, ok = false, Some(e.getMessage))
     }
 
-    runPool(catalog, concurrency)(dumpTable)
+    // largest first; the sort is stable, so equal (or unknown JDBC) sizes
+    // keep catalog order
+    val dispatch = sized.sortBy(-_._2).map(_._1)
+    val reports = runPool(dispatch, concurrency)(dumpTable)
+      .map(r => r.table -> r).toMap
+    catalog.map(reports)
+  }
+
+  /** Memoizes `open` per table for one steal, safely across pool threads. */
+  private def once(open: String => DataFrame): String => DataFrame = {
+    val opened = new ConcurrentHashMap[String, DataFrame]
+    t => opened.computeIfAbsent(t, open(_))
   }
 
   /** Runs `write` over `df` with a row-count observation attached, so the
@@ -162,31 +186,43 @@ object Steal {
     obs.get("rows").asInstanceOf[Long]
   }
 
-  /** Bounded per-table pool (reference: dumper/engine/engine.go:88-126).
-    * Fail-fast semantics done properly: the FIRST failure cancels every
-    * not-yet-started table and rethrows the ORIGINAL cause — the previous
-    * behavior let the whole catalog keep dumping and surfaced an opaque
-    * ExecutionException. In bestEffort mode dumpTable never throws, so
-    * every table still runs to completion. */
-  private def runPool(catalog: Seq[String], concurrency: Int)(
-      dumpTable: String => StealReport): Seq[StealReport] = {
+  /** Bounded per-table pool (reference: dumper/engine/engine.go:88-126):
+    * runs `work` over `items` in their order, at most `concurrency` at a
+    * time, and returns the results in that order. Results are taken as
+    * they complete, so the FIRST failure — not the first in submission
+    * order — cancels every item not yet started and rethrows the original
+    * cause at once. Items already running are neither interrupted nor
+    * waited for: a write stopped mid-commit is worse than one that
+    * finishes, and the failure should not wait behind the longest table.
+    * A bestEffort steal's work never throws, so every table still runs. */
+  private[graft] def runPool[A, B](items: Seq[A], concurrency: Int)(
+      work: A => B): Seq[B] = {
     val pool = Executors.newFixedThreadPool(math.max(concurrency, 1))
     try {
-      val futures = catalog.map(name => pool.submit(
-        new java.util.concurrent.Callable[StealReport] {
-          def call(): StealReport = dumpTable(name)
-        }))
-      try futures.map(_.get())
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          futures.foreach(_.cancel(false))
-          pool.shutdownNow()
-          throw Option(e.getCause).getOrElse(e)
+      val done = new ExecutorCompletionService[B](pool)
+      val futures = items.map(a => done.submit(() => work(a)))
+      items.foreach { _ =>
+        try done.take().get()
+        catch {
+          case e: ExecutionException =>
+            futures.foreach(_.cancel(false))
+            throw Option(e.getCause).getOrElse(e)
+        }
       }
-    } finally {
-      pool.shutdown()
-      pool.awaitTermination(1, TimeUnit.HOURS)
-    }
+      futures.map(_.get())
+    } finally pool.shutdown()
+  }
+
+  /** Counts the Spark jobs started while registered: the job figure of
+    * the CLI summary, at zero extra Spark jobs. */
+  private[graft] final class JobCounter(sc: SparkContext)
+      extends SparkListener with AutoCloseable {
+    private val started = new AtomicLong
+    sc.addSparkListener(this)
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      started.incrementAndGet()
+    def count: Long = started.get
+    def close(): Unit = sc.removeSparkListener(this)
   }
 
   /** A command-line endpoint: a DSN (`<type>://…`) or raw `jdbc:` URL
@@ -220,6 +256,8 @@ object Steal {
         timeout = envInt("GRAFT_READ_TIMEOUT", 300),
         maxConns = envInt("GRAFT_READ_MAX_CONNS", 5),
         fetchSize = envInt("GRAFT_READ_FETCH_SIZE", 10000))
+      val t0 = System.nanoTime()
+      val jobs = new JobCounter(spark.sparkContext)
       val reports = pipeline(spark, endpoint(args(0)), endpoint(args(1)),
         tables,
         readOpts = readOpts,
@@ -230,6 +268,8 @@ object Steal {
         println(s"[steal] ${r.table}: rows=${r.rows} ok=${r.ok}" +
           r.error.map(e => s" error=$e").getOrElse(""))
       }
+      println(f"[steal] tables=${reports.size} rows=${reports.map(_.rows).sum} " +
+        f"jobs=${jobs.count} seconds=${(System.nanoTime() - t0) / 1e9}%.2f")
       if (reports.exists(!_.ok)) sys.exit(1)
     } finally spark.stop()
   }

@@ -29,8 +29,12 @@ object ParquetSink {
       dataOnly: Boolean = false): Unit = {
     df.write.mode(SaveMode.Overwrite).parquet(s"$dir/$table.parquet")
     if (!dataOnly) {
-      val p = java.nio.file.Paths.get(dir, s"$table.schema.json")
-      java.nio.file.Files.writeString(p, df.schema.json)
+      // through the Hadoop FileSystem, like the data: `dir` may be a URI
+      val p = new org.apache.hadoop.fs.Path(dir, s"$table.schema.json")
+      val out = p.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
+        .create(p, true)
+      try out.write(df.schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
     }
   }
 }

@@ -1,6 +1,15 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Driver registry / DSN dispatch (≅ klepto `pkg/reader/reader.go:99-115`,
   * `pkg/dumper/dumper.go:48-69`): each driver probes the DSN and the first
@@ -198,11 +207,52 @@ object Drivers {
               .option("numPartitions", n.toString)
           }
         r.load()
+      case Resolved.File(path, "parquet") =>
+        val p = s"$path/$table.parquet"
+        footerSchema(spark, p).map(spark.read.schema(_).parquet(p))
+          .getOrElse(spark.read.format("parquet").load(p))
       case Resolved.File(path, format) =>
         spark.read.format(format).load(s"$path/$table.$format")
       case Resolved.Console(_) =>
         throw Dsn.DsnError("os:// is a dump target, not a source")
     }
+
+  /** The schema Spark's parquet inference returns for `path`, read on the
+    * driver from the one footer that inference touches with schema merging
+    * off (`ParquetUtils.inferSchema`): `_common_metadata`, else
+    * `_metadata`, else the first data file by path. Spark runs that single
+    * footer read as a one-task job; here it is one listing and one footer
+    * read, converted by Spark's own `readSchemaFromFooter`. None — the
+    * caller falls back to Spark's inference — when schema merging is on,
+    * when the table has subdirectories (partition discovery), or when there
+    * is no footer to read, so Spark raises its own error. */
+  private[sources] def footerSchema(
+      spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled) return None
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    try {
+      val listed = root.getFileSystem(hadoopConf).listStatus(root).toSeq
+      if (listed.exists(_.isDirectory)) return None
+      def named(n: String) = listed.find(_.getPath.getName == n)
+      named("_common_metadata").orElse(named("_metadata"))
+        .orElse(listed.filterNot(f => hidden(f.getPath.getName))
+          .sortBy(_.getPath.toString).headOption)
+        .map { f =>
+          val footer = ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(f, hadoopConf),
+            ParquetMetadataConverter.SKIP_ROW_GROUPS)
+          ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+            new ParquetToSparkSchemaConverter(conf))
+        }
+    } catch { case NonFatal(_) => None }
+  }
+
+  /** Files Spark's file index skips: Hadoop's `_SUCCESS`/`.crc` markers and
+    * in-flight copies. */
+  private def hidden(name: String): Boolean =
+    name.startsWith("_") || name.startsWith(".") || name.endsWith("._COPYING_")
 
   /** Register a JDBC DSN as a Spark DSv2 catalog (`JDBCTableCatalog`) —
     * the TOTAL-pushdown leg (VERDICT r11 #2). The reference pushes LIMIT
@@ -427,13 +477,6 @@ object Drivers {
     } finally conn.close()
   } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Catalog listing (S3, ≅ `GetTables`): BASE TABLES only, views excluded
-    * — the reference's exact rule on both engines (MySQL `SHOW FULL TABLES
-    * WHERE Table_type = 'BASE TABLE'`, `pkg/reader/mysql/reader.go:34-57`;
-    * Postgres `information_schema.tables WHERE table_type = 'BASE TABLE'`
-    * excluding system schemas, `pkg/reader/postgres/reader.go:36-62`).
-    * The JDBC variant pushes the same `information_schema` query to the
-    * source via the `query` option; files list the directory. */
   /** The engine-specific BASE-TABLE catalog query (S3) behind
     * [[listTables]], exposed so its dialect shape is pinnable in specs:
     * MySQL = current DATABASE() base tables (≅ `SHOW FULL TABLES WHERE
@@ -450,6 +493,13 @@ object Drivers {
         "AND table_schema NOT IN ('pg_catalog', 'information_schema')")
     else None
 
+  /** Catalog listing (S3, ≅ `GetTables`): BASE TABLES only, views excluded
+    * — the reference's exact rule on both engines (MySQL `SHOW FULL TABLES
+    * WHERE Table_type = 'BASE TABLE'`, `pkg/reader/mysql/reader.go:34-57`;
+    * Postgres `information_schema.tables WHERE table_type = 'BASE TABLE'`
+    * excluding system schemas, `pkg/reader/postgres/reader.go:36-62`).
+    * The JDBC variant pushes the same `information_schema` query to the
+    * source via the `query` option; files list the directory. */
   def listTables(spark: SparkSession, dsnString: String): Seq[String] =
     listTables(spark, resolve(dsnString))
 
@@ -472,14 +522,38 @@ object Drivers {
           finally rs.close()
           buf.sorted.toSeq
         } finally conn.close()
-      case Resolved.File(path, format) =>
-        val d = new java.io.File(path)
-        Option(d.listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.endsWith(s".$format"))
-          .map(_.getName.stripSuffix(s".$format"))
-          .sorted.toSeq
+      case file: Resolved.File => catalog(spark, file).map(_._1)
       case Resolved.Console(_) =>
         throw Dsn.DsnError("os:// is a dump target, not a source")
+    }
+
+  /** The catalog with each table's source bytes, which the steal dispatches
+    * largest-first on. Files list through the Hadoop `FileSystem` (so
+    * `file:`/`hdfs:`/`s3a:` URIs list like plain paths) and count data
+    * files only; JDBC sizes are unknown and read 0. */
+  private[graft] def catalog(
+      spark: SparkSession, source: Resolved): Seq[(String, Long)] =
+    source match {
+      case Resolved.File(path, format) =>
+        val dir = new Path(path)
+        val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+        fs.listStatus(dir).toSeq
+          .filter(_.getPath.getName.endsWith(s".$format"))
+          .map(t => t.getPath.getName.stripSuffix(s".$format") -> dataBytes(fs, t))
+          .sorted
+      case other => listTables(spark, other).map(_ -> 0L)
+    }
+
+  private def dataBytes(fs: FileSystem, table: FileStatus): Long =
+    if (table.isFile) table.getLen
+    else {
+      val files = fs.listFiles(table.getPath, true)
+      var bytes = 0L
+      while (files.hasNext) {
+        val f = files.next()
+        if (!hidden(f.getPath.getName)) bytes += f.getLen
+      }
+      bytes
     }
 
   /** Column listing (S4, ≅ `GetColumns`,

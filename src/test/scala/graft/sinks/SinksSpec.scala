@@ -2,7 +2,17 @@ package graft.sinks
 
 import java.io.StringWriter
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicBoolean
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{
+  HadoopFsRelation, InsertIntoHadoopFsRelationCommand, LogicalRelation}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkTestSession, Steal, Tables}
@@ -19,6 +29,15 @@ class SinksSpec extends AnyFunSuite {
     val back = spark.read.parquet(s"$dir/region.parquet")
     assert(back.orderBy("r_regionkey").collect()
       .sameElements(src.orderBy("r_regionkey").collect()))
+    val schemaJson = Files.readString(
+      java.nio.file.Paths.get(dir, "region.schema.json"))
+    assert(org.apache.spark.sql.types.DataType.fromJson(schemaJson) == src.schema)
+  }
+
+  test("ParquetSink writes its schema JSON under a file: URI directory") {
+    val dir = Files.createTempDirectory("graft_pq_uri").toString
+    val src = Tables.load(spark, sf, "region")
+    ParquetSink.write(src, s"file://$dir", "region")
     val schemaJson = Files.readString(
       java.nio.file.Paths.get(dir, "region.schema.json"))
     assert(org.apache.spark.sql.types.DataType.fromJson(schemaJson) == src.schema)
@@ -152,5 +171,143 @@ class SinksSpec extends AnyFunSuite {
       bestEffort = true).map(r => r.table -> r).toMap
     assert(!reports("customer").ok)
     assert(reports("region").ok)
+  }
+
+  // The steal's critical path: jobs, opens, dispatch order and the pool.
+
+  /** customer → orders → lineitem, every hop subset by the customer
+    * segment. */
+  private val chain = Config.load(
+    """[Matchers]
+      |  Building = "customer.c_mktsegment = 'BUILDING'"
+      |[[Tables]]
+      |  Name = "customer"
+      |  [Tables.Filter]
+      |    Match = "c_mktsegment = 'BUILDING'"
+      |[[Tables]]
+      |  Name = "orders"
+      |  [Tables.Filter]
+      |    Match = "Building"
+      |  [[Tables.Relationships]]
+      |    ForeignKey = "o_custkey"
+      |    ReferencedTable = "customer"
+      |    ReferencedKey = "c_custkey"
+      |[[Tables]]
+      |  Name = "lineitem"
+      |  [Tables.Filter]
+      |    Match = "Building"
+      |  [[Tables.Relationships]]
+      |    ForeignKey = "l_orderkey"
+      |    ReferencedTable = "orders"
+      |    ReferencedKey = "o_orderkey"
+      |  [[Tables.Relationships]]
+      |    Table = "orders"
+      |    ForeignKey = "o_custkey"
+      |    ReferencedTable = "customer"
+      |    ReferencedKey = "c_custkey"
+      |""".stripMargin)
+
+  /** Runs `body` with a listener registered; returns what it recorded once
+    * the bus delivered every event. */
+  private def listening[L <: AnyRef, T](listener: L)(register: L => Unit,
+      unregister: L => Unit)(body: => T): T = {
+    register(listener)
+    try { val r = body; ListenerBusDrain(spark.sparkContext); r }
+    finally unregister(listener)
+  }
+
+  /** The parquet writes of a run, in completion order: (table, the source
+    * relations the write's plan scans). */
+  private final class Writes extends QueryExecutionListener {
+    val seen = new ConcurrentLinkedQueue[(String, Seq[HadoopFsRelation])]
+    def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+      qe.analyzed.collectFirst { case c: InsertIntoHadoopFsRelationCommand =>
+        c.outputPath.getName.stripSuffix(".parquet") -> c.query.collect {
+          case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+            l.relation.asInstanceOf[HadoopFsRelation]
+        }
+      }.foreach(seen.add)
+    def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+  }
+
+  private def withWrites[T](body: => T): (T, Seq[(String, Seq[HadoopFsRelation])]) = {
+    val w = new Writes
+    val r = listening(w)(spark.listenerManager.register,
+      spark.listenerManager.unregister)(body)
+    (r, w.seen.asScala.toSeq)
+  }
+
+  test("Steal: a chained steal runs no job before its writes, one per table plus broadcasts") {
+    val dir = Files.createTempDirectory("graft_steal_jobs").toString
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]
+    val counter = new Steal.JobCounter(spark.sparkContext)
+    val reports = try listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e)
+    })(spark.sparkContext.addSparkListener, spark.sparkContext.removeSparkListener) {
+      Steal.run(spark, sf, dir, chain, concurrency = 4)
+    } finally counter.close()
+    assert(reports.forall(_.ok) && reports.size == Tables.all.size)
+    val all = jobs.asScala.toSeq
+    // a schema-inference job runs outside any SQL execution; a write and
+    // the broadcasts it triggers run inside one
+    assert(all.forall(_.properties.getProperty("spark.sql.execution.id") != null),
+      all.map(_.properties.getProperty("spark.job.tags")))
+    val broadcasts = all.count(j => Option(j.properties.getProperty(
+      "spark.job.tags")).exists(_.contains("broadcast exchange")))
+    assert(broadcasts > 0)
+    assert(all.size == reports.size + broadcasts)
+    assert(counter.count == all.size)
+  }
+
+  test("Steal: each source table is opened once; reports in catalog order") {
+    val dir = Files.createTempDirectory("graft_steal_once").toString
+    val (reports, writes) = withWrites(Steal.run(spark, sf, dir, chain, concurrency = 4))
+    assert(reports.map(_.table) == Tables.all.sorted)
+    assert(writes.map(_._1).sorted == Tables.all.sorted)
+    // the chain scans customer in three writes and orders in two; every
+    // scan of a table shares the one file index its open listed
+    val byTable = writes.flatMap(_._2).groupBy(_.location.rootPaths.head.getName)
+    assert(byTable("customer.parquet").size == 3)
+    assert(byTable("orders.parquet").size == 2)
+    for ((t, rels) <- byTable)
+      assert(rels.forall(_.location eq rels.head.location), s"$t opened twice")
+  }
+
+  test("Steal: tables are dispatched largest-first") {
+    val dir = Files.createTempDirectory("graft_steal_order").toString
+    val (_, writes) = withWrites(Steal.run(spark, sf, dir, Nil, concurrency = 1))
+    val bySize = Tables.all.sortBy(t => -new java.io.File(s"$sf/$t.parquet").length)
+    assert(writes.map(_._1) == bySize)
+  }
+
+  test("Steal: a file: URI lake steals into a file: URI target, sidecars included") {
+    val dir = Files.createTempDirectory("graft_steal_uri").toString
+    val reports = Steal.run(spark, s"file://$sf", s"file://$dir", Nil, concurrency = 4)
+    assert(reports.map(_.table) == Tables.all.sorted && reports.forall(_.ok))
+    for (t <- Tables.all) {
+      assert(new java.io.File(s"$dir/$t.schema.json").isFile, t)
+      assert(spark.read.parquet(s"$dir/$t.parquet").count() ==
+        spark.read.parquet(s"$sf/$t.parquet").count(), t)
+    }
+  }
+
+  test("Steal pool: fails fast in completion order and starts nothing more") {
+    val started = new ConcurrentLinkedQueue[String]
+    val aDone = new AtomicBoolean(false)
+    val e = intercept[IllegalStateException](
+      Steal.runPool(Seq("A", "B", "C", "D", "E", "F"), concurrency = 2) {
+        case "A" => Thread.sleep(3000); aDone.set(true); "A"
+        case "B" => throw new IllegalStateException("B failed")
+        case x => started.add(x); Thread.sleep(200); x
+      })
+    assert(e.getMessage == "B failed")
+    assert(!aDone.get, "B's failure waited for A")
+    assert(started.size <= 1, started)
+  }
+
+  test("Steal pool: returns results in item order") {
+    assert(Steal.runPool(Seq(3, 1, 2), concurrency = 3) { ms =>
+      Thread.sleep(ms * 50L); ms * 10
+    } == Seq(30, 10, 20))
   }
 }

@@ -2,10 +2,13 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkTestSession, Tables}
+import graft.{SparkTestSession, Steal, Tables}
+import graft.sinks.ParquetSink
 
 /** Cross-format ingestion parity: the engine must produce IDENTICAL
   * results whether a table arrives as parquet, orc, json, or csv — the
@@ -19,6 +22,10 @@ import graft.{SparkTestSession, Tables}
   *   - events → sessionization (timestamps re-encoded by each format
   *     land on whatever type that format defines; `Events.tsMicros`
   *     must adapt).
+  *
+  * A parquet table opened through `Drivers.read` takes its schema from
+  * the one footer Spark's inference would read, on the driver, and must
+  * get exactly the schema `spark.read.parquet` infers.
   */
 class FormatIngestSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -111,5 +118,80 @@ class FormatIngestSpec extends AnyFunSuite {
         graft.ops.Events.tsMicros(scanned), gap)) == want,
         s"sessionize via $fmt")
     }
+  }
+
+  private def read(dir: String, table: String) =
+    Drivers.read(spark, Resolved.File(dir, "parquet"), table, JdbcReadOptions())
+
+  private def inferred(dir: String, table: String) =
+    spark.read.parquet(s"$dir/$table.parquet").schema
+
+  test("footer schema: equals Spark's inferred schema for every sf0.001 table") {
+    for (t <- Tables.all) {
+      assert(Drivers.footerSchema(spark, s"$sf/$t.parquet").isDefined, t)
+      assert(read(sf, t).schema == inferred(sf, t), t)
+    }
+  }
+
+  test("footer schema: opening every sf0.001 table runs no Spark job") {
+    val jobs = new Steal.JobCounter(spark.sparkContext)
+    try {
+      Tables.all.foreach(read(sf, _))
+      ListenerBusDrain(spark.sparkContext)
+      assert(jobs.count == 0)
+    } finally jobs.close()
+  }
+
+  test("footer schema: ParquetSink output with markers, NTZ, DECIMAL, ARRAY<FLOAT>, empty") {
+    val dir = Files.createTempDirectory("graft_footer").toString
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("at", TimestampNTZType),
+      StructField("price", DecimalType(12, 2)),
+      StructField("vec", ArrayType(FloatType)),
+      StructField("name", StringType)))
+    val rows = (0 until 20).map(i => Row(i.toLong,
+      java.time.LocalDateTime.of(1996, 9, 14, 0, i),
+      java.math.BigDecimal.valueOf(i * 125L, 2), Seq(i.toFloat, 0.5f),
+      if (i % 3 == 0) null else s"n$i"))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    ParquetSink.write(df, dir, "typed")
+    ParquetSink.write(df.limit(0), dir, "empty") // IgnoreData's output
+    val names = new java.io.File(s"$dir/typed.parquet").list().toSet
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")), names)
+    for (t <- Seq("typed", "empty")) {
+      assert(Drivers.footerSchema(spark, s"$dir/$t.parquet").isDefined, t)
+      assert(read(dir, t).schema == inferred(dir, t), t)
+    }
+    assert(read(dir, "typed").orderBy("id").collect().toSeq ==
+      spark.read.parquet(s"$dir/typed.parquet").orderBy("id").collect().toSeq)
+  }
+
+  test("footer schema falls back: schema merging on") {
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try {
+      assert(Drivers.footerSchema(spark, s"$sf/region.parquet").isEmpty)
+      assert(read(sf, "region").schema == inferred(sf, "region"))
+    } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+  }
+
+  test("footer schema falls back: a partitioned layout keeps Spark's partition discovery") {
+    val dir = Files.createTempDirectory("graft_footer_part").toString
+    spark.read.parquet(s"$sf/nation.parquet").write
+      .partitionBy("n_regionkey").parquet(s"$dir/nation.parquet")
+    assert(Drivers.footerSchema(spark, s"$dir/nation.parquet").isEmpty)
+    assert(read(dir, "nation").schema == inferred(dir, "nation"))
+    assert(read(dir, "nation").schema.fieldNames.contains("n_regionkey"))
+  }
+
+  test("footer schema falls back: no footer to read surfaces Spark's own error") {
+    val dir = Files.createTempDirectory("graft_footer_none").toString
+    val t = new java.io.File(s"$dir/bare.parquet")
+    t.mkdir()
+    new java.io.File(t, "_SUCCESS").createNewFile()
+    assert(Drivers.footerSchema(spark, t.getPath).isEmpty)
+    val ours = intercept[AnalysisException](read(dir, "bare"))
+    val sparks = intercept[AnalysisException](inferred(dir, "bare"))
+    assert(ours.getMessage == sparks.getMessage)
   }
 }
