@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.Registry
+
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line per flush — the LAST line
   * printed is always the most complete record.
@@ -87,34 +89,8 @@ object Bench {
     * min-of-rounds) always lands in target/bench_latest.json. */
   private val BaselineSet: Set[String] =
     ((1 to 14).map(i => s"k$i") ++ (1 to 13).map(i => s"ns$i")).toSet
-
-  /** Family rollup for the compact line, keyed by id prefix ("ns14") so a
-    * descriptive-suffix rename can't silently re-bucket a query. New queries
-    * not yet registered here fall into "other" — visible, not lost; register
-    * them when adding the query. Taxonomy matches SURVEY §2 / COVERAGE.md
-    * section heads and is append-only for cross-round comparability. */
-  private val Families: Map[String, String] = Map(
-    // exact/near-dup, span/line/url dedup, index lifecycle, decontamination
-    "dedup" -> "ns14 ns16 ns17 ns18 ns21 ns34 ns37 ns40 ns68 ns70 ns128 ns134 ns136 ns137 ns152",
-    // ANN beyond the baseline set: IVF/PQ lifecycle, rerank, recall, audits
-    "ann" -> "ns20 ns30 ns35 ns42 ns52 ns69 ns111 ns123 ns126 ns138 ns143",
-    // tokenizers, langid, quality, fingerprints, retrieval eval
-    "text" -> "ns24 ns29 ns31 ns33 ns36 ns38 ns39 ns51 ns53 ns60 ns61 ns62 ns63 ns98 ns116 ns120 ns121 ns130 ns131 ns132 ns135 ns140 ns144",
-    // sampling, packing, mixtures, splits, SFT/DPO assembly, fold hygiene
-    "curate" -> "ns15 ns19 ns23 ns26 ns45 ns46 ns48 ns65 ns78 ns80 ns92 ns93 ns102 ns104 ns105 ns106 ns112 ns114 ns125 ns127 ns129 ns133 ns139",
-    // image/audio/video feature + near-dup legs
-    "mm" -> "ns81 ns82 ns83 ns90 ns141 ns142 ns145 ns146 ns147 ns151 ns153",
-    // PII/secrets scrubs, k-anonymity, DP releases
-    "priv" -> "ns22 ns66 ns67 ns72 ns89 ns91 ns97",
-    // sessionization, as-of, funnels, retention, transitions
-    "events" -> "ns25 ns27 ns28 ns74 ns75 ns79 ns110 ns119",
-    // salted/range/bucketed/bloom joins, linkage, graph metrics
-    "rel" -> "ns32 ns43 ns50 ns55 ns84 ns87 ns88 ns96 ns113 ns124",
-    // HLL/CMS/quantile/histogram/top-k sketches
-    "sketch" -> "ns44 ns49 ns54 ns57 ns59 ns95",
-    // profiling, drift, snapshots, SCD, ingest formats, dataset cards
-    "gov" -> "ns41 ns47 ns56 ns58 ns64 ns71 ns73 ns76 ns77 ns85 ns86 ns94 ns99 ns100 ns101 ns103 ns107 ns108 ns109 ns115 ns117 ns118 ns122 ns148 ns149 ns150"
-  ).flatMap { case (fam, ids) => ids.split(' ').map(_ -> fam) }
+  private def inBaseline(name: String): Boolean =
+    BaselineSet(Registry.byName(name).id)
 
   /** Window-variance control (BASELINE.md "Window-variance adjudication"):
     * host/VM throughput drifts uniformly between driver windows (r10 ran a
@@ -249,6 +225,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val tProc = System.nanoTime()
+    // SPARK_GRAFT_BENCH_ONLY=ns5,ns2_dedup_minhash (ids or full names)
+    // isolates queries; an unknown one fails here, before any Spark work.
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    val names = Registry.select(only).map(_.name)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // requested WARM rounds; the cold round-1 pass is always added on top,
@@ -371,13 +352,6 @@ object Bench {
       sec
     }
 
-    // SPARK_GRAFT_BENCH_ONLY=ns5_dedup_embedding,ns2_dedup_minhash isolates
-    // queries for local iteration; the driver contract (unset) is unchanged.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
-
     // 1-min system load sampled before and after the timed block (-1 where
     // the platform doesn't report one); loadStart is the post-gate,
     // pre-work reading, so it reflects the host, not us. `steal_run` is
@@ -405,9 +379,6 @@ object Bench {
       val v = math.round(d * 100) / 100.0
       if (v == v.toLong) s"${v.toLong}.0" else v.toString
     }
-    // id prefix before the first '_' ("k1", "ns71") — unique across the
-    // suite (guarded at use sites; a collision falls back to the full name)
-    def idOf(n: String) = n.takeWhile(_ != '_')
 
     /** Archive the full-precision JSON and print the compact line for the
       * state after `completed` rounds (INCLUDING the cold first round).
@@ -568,12 +539,11 @@ object Bench {
         .map { case (k, r) => s""""$k":$r""" }.mkString("{", ",", "}")
       val noCellJson = noCell.map(n => s""""$n"""").mkString("[", ",", "]")
       // per-family subtotals over the NON-baseline queries (the baseline
-      // 27 stay individually visible); unregistered ids land in "other"
-      // so a forgotten Families entry is visible in the line, not dropped
+      // 27 stay individually visible)
       def familiesJson(fmt: Double => String): String = {
         val famTotals = results
-          .filterNot { case (k, _) => BaselineSet(idOf(k)) }
-          .groupBy { case (k, _) => Families.getOrElse(idOf(k), "other") }
+          .filterNot { case (k, _) => inBaseline(k) }
+          .groupBy { case (k, _) => Registry.byName(k).family }
           .map { case (fam, rs) => fam -> rs.map(_._2._1).filter(_ >= 0).sum }
         famTotals.toSeq.sortBy(_._1)
           .map { case (f, s) => s""""$f":${fmt(s)}""" }.mkString("{", ",", "}")
@@ -633,16 +603,12 @@ object Bench {
       // names it). Line size is O(baseline set + families) ≈ 900 B.
       def buildCompact(fmt: Double => String): String = {
         def shortOf(n: String) = {
-          val p = idOf(n)
+          val p = Registry.byName(n).id
           if (p.startsWith("ns")) p.drop(2) else p
         }
-        val baseline = results.filter { case (k, _) => BaselineSet(idOf(k)) }
-        val shortIds = baseline.map(_._1).map(n => n -> shortOf(n))
-        val collided = shortIds.groupBy(_._2).filter(_._2.size > 1)
-          .values.flatten.map(_._1).toSet
+        val baseline = results.filter { case (k, _) => inBaseline(k) }
         val qs = baseline.map { case (k, (med, _)) =>
-          val id = if (collided(k)) k else shortOf(k)
-          s""""$id":${fmt(med)}"""
+          s""""${shortOf(k)}":${fmt(med)}"""
         }.mkString("{", ",", "}")
         s"""{"metric":"total","value":${fmt(total)},"unit":"sec","total_min":${fmt(totalMin)},"stat":"$stat","n":${results.size},"queries":$qs,"families":${familiesJson(fmt)},"control":$controlJson,"ratio":$ratioJson,"ratio_norm":$ratioNormJson,"ratio_min":$ratioMinJson,"gate_valid":$gateValid,"spread":$spreadJson,"over_2x":$over2xJson,${over2xMinCompactJson}"no_cell":${noCell.size},"timed_failed":$tfJson,"detail":"target/bench_latest.json","warmup_failed":$wf,$shapeJson,"load_gate":$loadGateJson,"steal_run":$stealRunJson,"loadavg":[$loadStart,$loadEnd],"sf":"$sfDir"}"""
       }

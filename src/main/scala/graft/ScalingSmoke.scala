@@ -23,7 +23,7 @@ import org.apache.spark.sql.SparkSession
   * case). */
 object ScalingSmoke {
 
-  private val checked = Seq(
+  private val checked = graft.queries.Registry.select(Seq(
     "ns2_dedup_minhash", "ns4_dedup_ngram", "ns14_dedup_incremental",
     "ns16_dedup_survivors", "ns17_dedup_incr_index", "ns18_dedup_index_update",
     // round-4 additions with a pair-shaped failure mode: ns29/ns40 in the
@@ -44,8 +44,8 @@ object ScalingSmoke {
     // and the token-drift agg. ns68 runs as a custom forced entry below:
     // count() over its registered query join-eliminates the dedup.
     "ns69_embedding_outliers", "ns70_dedup_url", "ns71_corpus_drift",
-    "ns73_web_ingest", "ns74_events_funnel", "ns75_events_retention")
-  // ns21/ns34 (decontamination) are NOT run via their SparkEntry queries
+    "ns73_web_ingest", "ns74_events_funnel", "ns75_events_retention"))
+  // ns21/ns34 (decontamination) are NOT run via their registered queries
   // here: those split doc_id%50 at EACH sf, so the benchmark side grows
   // with the corpus and the tainted-row count legitimately scales ~R² —
   // which is report semantics, not an implementation blow-up. The honest
@@ -67,12 +67,12 @@ object ScalingSmoke {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def run(name: String, dir: String): (Long, Double) = {
+    def run(query: graft.queries.Query, dir: String): (Long, Double) = {
       val t0 = System.nanoTime()
       // count() materializes the full pipeline here: every checked query
       // ends in a wide projection whose expensive work (joins, aggregates)
       // Catalyst cannot prune away under a count
-      val rows = SparkEntry.queries(name)(spark, dir).count()
+      val rows = query.build(spark, dir).count()
       val sec = (System.nanoTime() - t0) / 1e9
       // drop blocks the finished query checkpointed (see Bench.execute)
       spark.sparkContext.getPersistentRDDs.values
@@ -172,8 +172,8 @@ object ScalingSmoke {
       failed ||= !ok
       println(f"| $name | $rowsS | $rowsL | $rowRatio%.1f× | $secS%.2f | $secL%.2f | $timeRatio%.1f× | ${if (ok) "sub-quadratic ✓" else "BLOW-UP ✗"} |")
     }
-    checked.foreach { name =>
-      judge(name, run(name, sfSmall), run(name, sfLarge))
+    checked.foreach { q =>
+      judge(q.name, run(q, sfSmall), run(q, sfLarge))
     }
     custom.foreach { case (name, f) =>
       judge(name, runDf(f(sfSmall), aggForced(name)),

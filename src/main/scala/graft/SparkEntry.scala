@@ -1,18 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2, plus equivalent DuckDB SQL in `oracleSql` for the
-  * hash-compare correctness gate.
-  *
-  * The K1–K12 set is SURVEY §2.11's canonical compilation of the reference's
-  * operator inventory (scan/projection/filter/join-subset/sort/limit/
-  * anonymise/copy — klepto `pkg/reader/engine/engine.go:136-167` compiles its
-  * whole config to exactly these shapes). North-star operators (dedup,
-  * similarity, text analysis) register additional entries from graft.ops.
-  */
+/** The query surface: `entry` plus the name-keyed view of
+  * [[graft.queries.Registry]], where each query's builder and its DuckDB
+  * oracle SQL are declared together. */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
@@ -21,5560 +13,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     k9(spark, "/root/testdata/sf0.001")
 
-  // ---- K1–K12: reference-parity operator queries -------------------------
-
-  /** K1 — S1/P1 table scan + column projection (engine.go:88-94,139). */
-  private def k1(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "customer")
-      .select("c_custkey", "c_name")
-      .orderBy("c_custkey")
-
-  /** K2 — F1 raw SQL predicate passthrough (engine.go:154-156): the config
-    * `Match` string is parsed by Spark's own SQL parser via expr(). */
-  private def k2(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "orders")
-      .where(expr("o_totalprice > 100000"))
-      .select("o_orderkey", "o_totalprice")
-      .orderBy("o_orderkey")
-
-  /** K3 — O1+O2 top-k, "latest 100" (docs/usage/config.md:99-120). Catalyst
-    * plans TakeOrderedAndProject: no full sort, no shuffle of all rows. */
-  private def k3(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "events")
-      .orderBy(col("ts").desc, col("event_id"))
-      .limit(100)
-      .select("event_id", "user_id")
-
-  /** K4 — O2 limit with pinned order (engine.go:162-164). */
-  private def k4(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "customer")
-      .orderBy("c_custkey")
-      .limit(10)
-      .select("c_custkey")
-
-  /** K5 — J1 one-hop relationship subset (engine.go:140-152). The reference
-    * emits an inner join used for semi-join purposes; left_semi is the
-    * faithful Spark mapping (no fan-out even on non-unique keys) and lets
-    * Catalyst broadcast the filtered parent side. */
-  private def k5(s: SparkSession, dir: String): DataFrame = {
-    val orders = Tables.load(s, dir, "orders")
-    val parents = Tables.load(s, dir, "customer")
-      .where(col("c_mktsegment") === "BUILDING")
-    orders
-      .join(parents, orders("o_custkey") === parents("c_custkey"), "left_semi")
-      .select("o_orderkey", "o_custkey")
-      .orderBy("o_orderkey")
-  }
-
-  /** K6 — J2 multi-hop join chain (examples/user-orders.toml:33-56):
-    * grandparent filter subsets grandchildren via chained semi-joins. */
-  private def k6(s: SparkSession, dir: String): DataFrame = {
-    val lineitem = Tables.load(s, dir, "lineitem")
-    val orders = Tables.load(s, dir, "orders")
-    val parents = Tables.load(s, dir, "customer")
-      .where(col("c_mktsegment") === "BUILDING")
-    val subOrders = orders
-      .join(parents, orders("o_custkey") === parents("c_custkey"), "left_semi")
-    lineitem
-      .join(subOrders, lineitem("l_orderkey") === subOrders("o_orderkey"),
-        "left_semi")
-      .select("l_orderkey", "l_linenumber")
-      .orderBy("l_orderkey", "l_linenumber")
-  }
-
-  /** K7 — A1 literal anonymise (anonymiser.go:18-20,77-79). */
-  private def k7(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "customer")
-      .withColumn("c_name", lit("REDACTED"))
-      .select("c_custkey", "c_name")
-      .orderBy("c_custkey")
-
-  /** K8 — A2 deterministic anonymise surrogate: md5 stands in for the seeded
-    * faker family (whose realism is property-tested, not oracle-checked). */
-  private def k8(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "customer")
-      .withColumn("c_name", md5(col("c_name").cast("binary")))
-      .select("c_custkey", "c_name")
-      .orderBy("c_custkey")
-
-  /** K9 — F1+J1+O1+O2 combined (user-orders.toml shape): filtered parent
-    * semi-join + top-k on the child. */
-  private def k9(s: SparkSession, dir: String): DataFrame = {
-    val orders = Tables.load(s, dir, "orders")
-    val parents = Tables.load(s, dir, "customer").where(col("c_acctbal") > 0)
-    orders
-      .join(parents, orders("o_custkey") === parents("c_custkey"), "left_semi")
-      .orderBy(col("o_orderdate").desc, col("o_orderkey"))
-      .limit(100)
-      .select("o_orderkey")
-  }
-
-  /** K10 — F2 matcher alias reused on a second table (config.go:101-117). */
-  private def k10(s: SparkSession, dir: String): DataFrame = {
-    val supplier = Tables.load(s, dir, "supplier")
-    val nation = Tables.load(s, dir, "nation")
-      .where(expr("n_name = 'NATION_7'"))
-    supplier
-      .join(nation, supplier("s_nationkey") === nation("n_nationkey"),
-        "left_semi")
-      .select("s_suppkey")
-      .orderBy("s_suppkey")
-  }
-
-  /** K11 — F3 IgnoreData: structure only, zero rows
-    * (dumper/engine/engine.go:99-101). */
-  private def k11(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "nation").limit(0)
-
-  /** K12 — W-fidelity full copy (features/mysql_test.go:122-212 analog):
-    * unfiltered pass-through must be value-identical. */
-  private def k12(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "region").orderBy("r_regionkey")
-
-  /** K13 — the whole config→plan pipeline (klepto steal shape,
-    * cmd/steal.go:52-127): TOML config with matcher, relationship,
-    * ordered sort, limit → SubsetPlanner → subset DataFrame. */
-  private def k13(s: SparkSession, dir: String): DataFrame = {
-    val cfg = graft.config.Config.load(
-      """[Matchers]
-        |  RichCustomers = "customer.c_acctbal > 0"
-        |[[Tables]]
-        |  Name = "orders"
-        |  [Tables.Filter]
-        |    Match = "RichCustomers"
-        |    Limit = 500
-        |    [Tables.Filter.Sorts]
-        |      o_orderkey = "asc"
-        |  [[Tables.Relationships]]
-        |    ForeignKey = "o_custkey"
-        |    ReferencedTable = "customer"
-        |    ReferencedKey = "c_custkey"
-        |""".stripMargin)
-    new graft.plan.SubsetPlanner(Tables.load(s, dir, _), cfg).plan("orders")
-  }
-
-  /** K14 — A2-A5 deterministic seeded fakers (anonymiser.go:82-107).
-    * The persona fakers it exercises (FullName, EmailAddress) are pure
-    * codegen md5-indexed corpus picks ([[graft.anonymise.Persona]]), so
-    * since r10 the query is FULLY hash-oracle-checked: the oracle SQL —
-    * generated from the SAME Corpora vectors, single source of truth —
-    * replays every draw bit-for-bit in DuckDB (list-literal corpus
-    * indexing; the ns89 md5→60-bit-uniform convention). The committed
-    * golden gate ([[graft.GoldenK14Spec]], sha256 at two SFs) is retained
-    * belt-and-braces, and the wider non-persona faker surface stays
-    * property-tested (AnonymiserSpec/FakersSpec). */
-  private def k14(s: SparkSession, dir: String): DataFrame = {
-    val cfg = graft.config.TableConfig("customer", anonymise = Seq(
-      "c_name" -> "FullName",
-      "c_mktsegment" -> "EmailAddress"))
-    graft.anonymise.Anonymiser(
-      Tables.load(s, dir, "customer"), cfg, keyColumns = Seq("c_custkey"))
-      .orderBy("c_custkey")
-  }
-
-  // ---- NS1–NS12: north-star training-data-pipeline operators -------------
-
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
-  private def embs(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
-
-  /** Query vectors for similarity search: the first five embeddings. */
-  private def simQueries(s: SparkSession, dir: String): DataFrame =
-    embs(s, dir).where(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-
-  private def ns1(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Dedup.exact(docs(s, dir))
-  private def ns2(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Dedup.minhashLsh(docs(s, dir))
-  private def ns3(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Dedup.simhash(docs(s, dir))
-  private def ns4(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Dedup.ngramJaccard(docs(s, dir))
-  /** NS5 — the registered query is the LSH-banded scale path (equality join
-    * on band keys, exact cosine on candidates only); the all-pairs exact
-    * variant is the spec-level recall check, not a registered query. */
-  private def ns5(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Dedup.embeddingNearDupLsh(embs(s, dir), threshold = 0.4)
-  private def ns6(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Similarity.bruteForceTopK(embs(s, dir), simQueries(s, dir), k = 10)
-  private def ns7(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Similarity.lshTopK(embs(s, dir), simQueries(s, dir), k = 10)
-  private def ns13(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Similarity.ivfTopK(embs(s, dir), simQueries(s, dir), k = 10)
-  private def ns8(s: SparkSession, dir: String): DataFrame =
-    graft.ops.TextAnalysis.languageId(docs(s, dir))
-  private def ns9(s: SparkSession, dir: String): DataFrame =
-    graft.ops.TextAnalysis.qualityScore(docs(s, dir))
-  private def ns10(s: SparkSession, dir: String): DataFrame =
-    graft.ops.TextAnalysis.tokenCounts(docs(s, dir))
-  private def ns11(s: SparkSession, dir: String): DataFrame =
-    graft.ops.TextAnalysis.fingerprint(docs(s, dir))
-  /** NS12 — multimodal feature extraction, canonicalized array-free: the
-    * decoder's exact per-bin byte-histogram counts are exploded to one row
-    * per (doc_id, dim). Counts come straight from the decode (`bin_counts`
-    * long array), never recovered from the normalized float fractions —
-    * exact at any blob size, where `round(frac * n_bytes)` drifts off by
-    * one past ~8 MB (float mantissa). The driver's canonicalizer can hash
-    * this shape, and the byte math is fully DuckDB-expressible. */
-  private def ns12(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Multimodal.extractFeatures(
-        graft.ops.Multimodal.packBinary(docs(s, dir)))
-      .select(col("doc_id"), col("n_bytes"),
-        posexplode(col("bin_counts")).as(Seq("dim", "n_in_bin")))
-      .select(col("doc_id"), col("dim").cast("long").as("dim"),
-        col("n_in_bin"), col("n_bytes"))
-
-  /** NS14 — incremental ingest dedup: the 20% of docs with doc_id % 5 = 0
-    * arrive as a "new batch" and are deduplicated (exact + minhash near-dup)
-    * against the other 80% as the existing corpus. */
-  private def ns14(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    graft.ops.Dedup.incrementalNew(
-      d.where(col("doc_id") % 5 === 0),
-      d.where(col("doc_id") % 5 =!= 0))
-  }
-
-  /** NS15 — the curation composition: language filter → quality threshold
-    * → exact dedup in one plan (one scan + one shuffle). */
-  private def ns15(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Curation.curate(docs(s, dir))
-
-  /** NS17 — incremental dedup against a PERSISTED minhash corpus index:
-    * same decision as ns14, but the corpus is shingled/sketched once into a
-    * parquet index (built here on first touch — Bench's untimed warmup pass
-    * absorbs the build, so the timed runs measure the pure from-index
-    * path) and each ingest tick reads only the index, never the corpus
-    * parquet. */
-  private def ns17(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
-    val idx = minhashIndexDir(dir, fp)
-    if (!graft.ops.Dedup.minhashIndexMatches(s, idx, fp))
-      graft.ops.Dedup.writeMinhashIndex(
-        docs(s, dir).where(col("doc_id") % 5 =!= 0), idx,
-        fingerprint = Some(fp))
-    graft.ops.Dedup.incrementalNewFromIndex(
-      docs(s, dir).where(col("doc_id") % 5 === 0), idx,
-      expectParams = Some((2, 16, 4)))
-  }
-
-  /** Deterministic index location keyed on the sfDir path AND the content
-    * fingerprint of its documents parquet: regenerating the data under the
-    * same path yields a different fingerprint → a different index dir → a
-    * rebuild, so a stale index can never silently answer for new data. The
-    * fingerprint is also stamped into the index sidecar and re-checked
-    * ([[graft.ops.Dedup.minhashIndexMatches]]), and the build publishes by
-    * atomic-ish rename, closing the concurrent first-touch race between a
-    * bench and a verify JVM. (java.io.tmpdir is the right home only for
-    * this single-JVM harness — on a cluster a deployment passes its own
-    * shared path to the operator API, which is Hadoop-FS-portable.) */
-  private def minhashIndexDir(dir: String, fingerprint: String): String =
-    scratchIndexDir("graft_minhash_idx", dir, fingerprint)
-
-  private def scratchIndexDir(
-      prefix: String, dir: String, fingerprint: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir#$fingerprint".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"${System.getProperty("java.io.tmpdir")}/${prefix}_$key"
-  }
-
-  /** Build-once probe for a bench-local documents layout (ns41/ns58): the
-    * probe artifact is the META sidecar — the NEWEST thing a current-format
-    * layout writes — so a layout cached by an older build (schema sidecar
-    * only, no meta/manifest, which the append/compact lifecycle would
-    * crash on) rebuilds instead of half-working. Returns the
-    * fingerprint-keyed layout path. */
-  private def cachedDocsLayout(s: SparkSession, prefix: String, dir: String)(
-      build: String => Unit): String = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
-    val base = scratchIndexDir(prefix, dir, fp)
-    val marker = new org.apache.hadoop.fs.Path(base, "_layout_meta.txt")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) build(base)
-    base
-  }
-
-  /** Space tokenization shared by the CMS queries (ns54/ns59) — the token
-    * contract (split on single space, drop empties) is load-bearing for
-    * oracle parity, so it lives in ONE place. */
-  private def spaceTokens(src: DataFrame): DataFrame = src
-    .select(explode(split(col("text"), " ")).as("token"))
-    .where(col("token") =!= "")
-
-  /** NS19 — ns15's curation composition for a non-English target: German
-    * docs, quality scored against the GERMAN stopword vocabulary (the
-    * stopword-ratio feature follows the target language;
-    * [[graft.ops.Curation.curate]]'s `stopwordLang` can override). The bar
-    * is 0.3, not ns15's 0.55: the synthetic German docs are shorter, so the
-    * length-dominated score tops out near 0.5 — 0.3 keeps a meaningful
-    * survivor set at every test SF. */
-  private def ns19(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Curation.curate(docs(s, dir), langCode = "de", minQuality = 0.3)
-
-  /** NS18 — index lifecycle: incremental ingest across TWO ticks against one
-    * persisted index that is UPDATED between them. Tick 1 dedups its batch
-    * against the corpus index and appends the accepted docs
-    * ([[graft.ops.Dedup.updateMinhashIndex]]); tick 2 then dedups against
-    * corpus + tick-1 survivors without any rebuild — the steady-state shape
-    * of a continuously-ingesting training pipeline, where ns17 alone would
-    * dedup every tick against a frozen corpus. Runs on a per-run working
-    * copy of the shared base index so reruns never see their own appends.
-    * Output: all surviving new docs across both ticks. */
-  private def ns18(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
-    val base = minhashIndexDir(dir, fp)
-    if (!graft.ops.Dedup.minhashIndexMatches(s, base, fp))
-      graft.ops.Dedup.writeMinhashIndex(
-        docs(s, dir).where(col("doc_id") % 5 =!= 0), base,
-        fingerprint = Some(fp))
-    val work = s"${base}_tick_${java.util.UUID.randomUUID().toString.take(8)}"
-    graft.ops.Dedup.copyMinhashIndex(s, base, work)
-    // working copies are run-scoped scratch: reclaim them at JVM exit so
-    // repeated bench/verify runs don't accumulate dirs under tmp
-    val workPath = new org.apache.hadoop.fs.Path(work)
-    workPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .deleteOnExit(workPath)
-    val tick1 = graft.ops.Dedup.incrementalNewFromIndex(
-        docs(s, dir).where(col("doc_id") % 10 === 0), work)
-      .localCheckpoint(false) // lazy snapshot: the listing is pinned at plan
-      // construction, so the update's FIRST append action materializes the
-      // blocks (one fused job chain) instead of a separate eager pass; the
-      // appended files are never in this plan's file list
-    graft.ops.Dedup.updateMinhashIndex(tick1, work)
-    val tick2 = graft.ops.Dedup.incrementalNewFromIndex(
-      docs(s, dir).where(col("doc_id") % 10 === 5), work)
-    tick1.union(tick2)
-  }
-
-  /** NS20 — IVF index lifecycle: ANN serving that stays current across
-    * ingest. The index is built from the 80% corpus (frozen coarse
-    * quantizer), the 20% batch is appended to its nearest existing cells
-    * ([[graft.ops.Similarity.updateIvfIndex]] — no retrain), and queries
-    * then probe the updated index: results cover corpus + batch with the
-    * corpus-trained centroids. Per-run working copy, same hygiene as
-    * ns18. */
-  private def ns20(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/embeddings.parquet")
-    val base = scratchIndexDir("graft_ivf_idx", dir, fp)
-    if (!graft.ops.Similarity.ivfIndexMatches(s, base, fp))
-      graft.ops.Similarity.writeIvfIndex(
-        embs(s, dir).where(col("vec_id") % 5 =!= 0), base,
-        fingerprint = Some(fp))
-    val work = s"${base}_tick_${java.util.UUID.randomUUID().toString.take(8)}"
-    graft.ops.Similarity.copyIvfIndex(s, base, work)
-    val workPath = new org.apache.hadoop.fs.Path(work)
-    workPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .deleteOnExit(workPath)
-    graft.ops.Similarity.updateIvfIndex(
-      embs(s, dir).where(col("vec_id") % 5 === 0), work)
-    graft.ops.Similarity.ivfTopKFromIndex(s, work, simQueries(s, dir), k = 10)
-  }
-
-  /** NS21 — benchmark decontamination: every 50th doc stands in for the
-    * eval set; the report lists corpus docs sharing any 4-gram with it.
-    * The benchmark side broadcasts (eval sets are MBs against a 100 TB
-    * corpus), so the corpus never shuffles before the per-doc agg. */
-  private def ns21(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    graft.ops.Dedup.decontaminate(
-      d.where(col("doc_id") % 50 =!= 0),
-      d.where(col("doc_id") % 50 === 0),
-      shingleK = 4)
-  }
-
-  /** NS152 — Bloom-prefiltered decontamination
-    * ([[graft.ops.Dedup.decontaminateBloom]]): ns21's exact semantics
-    * (same oracle SQL, hash-identical output is the claim under test)
-    * with the 100 TB deployment shape — a distributed-built Bloom filter
-    * over the benchmark vocabulary kills ~(1−fpp) of the corpus postings
-    * inside the scan stage via Spark's codegen'd `might_contain`
-    * machinery, BEFORE the exact join; false positives survive the
-    * prefilter and die in the join, so the Bloom stage is pure
-    * work-avoidance. */
-  private def ns152(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    graft.ops.Dedup.decontaminateBloom(
-      d.where(col("doc_id") % 50 =!= 0),
-      d.where(col("doc_id") % 50 === 0),
-      shingleK = 4)
-  }
-
-  /** NS153 — VERIFIED grid-index lifecycle
-    * ([[graft.ops.Perceptual.writeGridIndex]] →
-    * [[graft.ops.Perceptual.incrementalNewFromGridIndex]] →
-    * [[graft.ops.Perceptual.updateGridIndex]]): ns82's
-    * build-probe-append-probe shape upgraded to the r13 verified probe —
-    * an ingest doc is rejected only if some indexed doc is BOTH
-    * hamming-close (≤ 3, pigeonhole-exact banding) and content-close
-    * (72-cell luminance SAD ≤ 128: the ns151 verify stage, via the ONE
-    * shared [[graft.ops.Perceptual.sadVerify]] definition), so a
-    * coincidental dHash neighbor can no longer suppress genuinely-new
-    * media at ingest. Corpus = the v0/v1 image groups; tick 1 ingests
-    * the reversed variants and its survivors append WITH their grids (no
-    * re-decode); tick 2 ingests the edit variants and must see tick 1's
-    * acceptances. Index rows are ~300 B/doc, blobs decode once per tick.
-    * Oracle: the ns151 grid-arithmetic replay with the two lifecycle
-    * NOT-EXISTS stages. */
-  private def ns153(s: SparkSession, dir: String): DataFrame = {
-    val synth = udf((t: String) => graft.ops.BmpSynth.bmpOf(t))
-    val fam = ns81Family(s, dir).select(col("doc_id"),
-      synth(col("t")).as("content"))
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
-    val base = scratchIndexDir("graft_grid_idx", dir, fp)
-    if (!graft.ops.Perceptual.phashIndexMatches(s, base, fp))
-      graft.ops.Perceptual.writeGridIndex(fam.where(col("doc_id") % 5 <= 1),
-        base, graft.ops.ImageGridDecoder, fingerprint = Some(fp))
-    val work = s"${base}_tick_${java.util.UUID.randomUUID().toString.take(8)}"
-    // sidecar+data dir copy — index-format-agnostic, same as ns82
-    graft.ops.Perceptual.copyPhashIndex(s, base, work)
-    val workPath = new org.apache.hadoop.fs.Path(work)
-    workPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .deleteOnExit(workPath)
-    val tick1 = graft.ops.Perceptual.incrementalNewFromGridIndex(
-        fam.where(col("doc_id") % 5 === 4), work, maxSad = 128L,
-        expectDecoder = Some("image-grid"))
-      .localCheckpoint(false) // lazy snapshot: the listing is pinned at plan
-      // construction, so the update's FIRST append action materializes the
-      // blocks (one fused job chain) instead of a separate eager pass; the
-      // appended files are never in this plan's file list
-    graft.ops.Perceptual.updateGridIndex(tick1, work)
-    val tick2 = graft.ops.Perceptual.incrementalNewFromGridIndex(
-      fam.where(col("doc_id") % 5 === 2 || col("doc_id") % 5 === 3), work,
-      maxSad = 128L)
-    tick1.select(col("doc_id"), col("phash"))
-      .union(tick2.select(col("doc_id"), col("phash")))
-  }
-
-  /** NS22 — PII scrubbing: emails / IPv4s / phone numbers redacted from
-    * free text before training admission. The synthetic corpus carries no
-    * natural PII, so the query deterministically injects one of each
-    * (derived from doc_id) and the operator must find and redact exactly
-    * those — the regex engines' agreement is what's under test. Narrow
-    * codegen'd projection, zero shuffle. */
-  private def ns22(s: SparkSession, dir: String): DataFrame = {
-    val injected = docs(s, dir).select(
-      col("doc_id"),
-      concat(col("text"),
-        lit(" contact user"), col("doc_id").cast("string"),
-        lit("@example.com or +49151"),
-        lpad((col("doc_id") % 10000).cast("string"), 7, "0"),
-        lit(" from 10."), (col("doc_id") % 256).cast("string"),
-        lit(".0."), ((col("doc_id") * 7) % 256).cast("string")).as("text"))
-    graft.ops.Privacy.scrubPii(injected)
-      .select("doc_id", "n_emails", "n_ipv4", "n_phones", "text")
-  }
-
-  /** NS23 — deterministic stratified sampling: rebalance the corpus by
-    * downsampling over-represented languages (en to 25%, fr to 50%) with a
-    * content-hash predicate — stable under retries, repartitioning and
-    * re-runs, unlike rand(). Zero shuffle. */
-  private def ns23(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Sampling.stratifiedSample(
-        docs(s, dir), "lang", Map("en" -> 0.25, "fr" -> 0.5))
-      .select("doc_id", "lang", "source", "n_chars")
-
-  /** NS24 — Gopher-style repetition stats: duplicate-word and
-    * duplicate-2-gram fractions with a repetitiveness flag, as in-row
-    * array arithmetic (zero shuffle). */
-  private def ns24(s: SparkSession, dir: String): DataFrame =
-    graft.ops.TextAnalysis.repetitionStats(docs(s, dir))
-
-  /** NS25 — sessionization: per-user event sessions split on >8h gaps
-    * (the synthetic log's median inter-event gap is ~7.7h, so the split is
-    * non-trivial both ways). One shuffle by user_id serves the windows AND
-    * the session rollup. Timestamps are normalized to micros BEFORE the
-    * gap math via the schema-adaptive [[graft.ops.Events.tsMicros]]
-    * (DuckDB's `epoch_us(ts)` oracle agrees on any physical encoding). */
-  private def ns25(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Events.sessionize(
-        graft.ops.Events.tsMicros(Tables.load(s, dir, "events")),
-        gap = 28800L * 1000000L)
-
-  /** NS26 — sequence packing: deterministic (seq_id, seq_off) slots inside
-    * 2048-token training sequences, packed per language in doc_id order
-    * (one shuffle, in-partition running sum). */
-  private def ns26(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Sampling.packSequences(docs(s, dir))
-
-  /** NS27 — semi-structured property rollup: a numeric field extracted
-    * from the JSON props column (codegen'd get_json_object) aggregated per
-    * event type with exact-integer / selection aggregates only. */
-  private def ns27(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Events.enrichProps(Tables.load(s, dir, "events"))
-
-  /** NS28 — as-of join: each purchase attributed to the user's most recent
-    * strictly-preceding click (left-outer: purchases with no prior click
-    * keep nulls), plus the attribution gap. ONE shuffle on user_id — the
-    * union+window reformulation, never a pairwise range join. Timestamps
-    * normalized to micros as in ns25 (schema-adaptive) so both engines do
-    * identical integer time math. */
-  private def ns28(s: SparkSession, dir: String): DataFrame = {
-    val ev = graft.ops.Events.tsMicros(Tables.load(s, dir, "events"))
-    graft.ops.Events.asOfJoin(
-        ev.where(col("event_type") === "purchase")
-          .select("user_id", "ts", "event_id", "value"),
-        ev.where(col("event_type") === "click")
-          .select("user_id", "ts", "event_id"))
-      .withColumn("gap_us", col("ts") - col("asof_ts"))
-  }
-
-  /** NS29 — boilerplate detection: per-doc fraction of 3-grams shared by
-    * ≥3 documents corpus-wide; docs above 50% are template chrome. Three
-    * narrow shuffles, nothing pairwise, no broadcast assumption. */
-  private def ns29(s: SparkSession, dir: String): DataFrame =
-    graft.ops.TextAnalysis.boilerplate(docs(s, dir))
-
-  /** NS30 — product-quantization ANN: vectors compressed to 8 one-byte
-    * codes (16× smaller than raw floats), queries score codes via ADC
-    * table lookups — the memory-compression serving path beside LSH
-    * (ns7, bucket pruning) and IVF (ns13, cell pruning). Codebook is the
-    * md5-sampled deterministic quantizer, so encode + scoring mirror in
-    * DuckDB end-to-end. */
-  private def ns30(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Similarity.pqTopK(embs(s, dir), simQueries(s, dir), k = 10)
-
-  /** NS31 — the whole training-data prep as ONE plan: multi-language
-    * langid+quality (stopword feature follows each doc's predicted
-    * language) → quality ≥ 0.3 → exact dedup → English downsampled to 50%
-    * → 2048-token sequence packing. One scan + two shuffles end-to-end;
-    * Catalyst fuses what standalone operators would materialize. */
-  private def ns31(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Curation.prepareCorpus(
-      docs(s, dir), minQuality = 0.3, sampleRates = Map("en" -> 0.5))
-
-  /** NS32 — skew-safe salted join: lineitem⋈orders on the order key with
-    * the left side split across 8 salts and orders replicated per salt,
-    * rolled up per order priority with exact-integer aggregates. The
-    * result is row-identical to the plain join (the oracle IS the plain
-    * join) — only the shuffle distribution changes, which is the point. */
-  private def ns32(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Joins.saltedJoin(
-        Tables.load(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_quantity")),
-        Tables.load(s, dir, "orders")
-          .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority")),
-        keys = Seq("l_orderkey"), salts = 8)
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_items"),
-        sum(col("l_quantity").cast("long")).as("sum_qty"))
-
-  /** NS33 — corpus length distribution per language: exact interpolated
-    * quartiles via rank arithmetic (no per-group buffering — Spark's own
-    * percentile aggregate collects whole groups) + exact mean. Dyadic
-    * fractions over an integer column make every engine's quantile_cont
-    * bit-identical. */
-  private def ns33(s: SparkSession, dir: String): DataFrame =
-    graft.ops.TextAnalysis.lengthStats(docs(s, dir))
-
-  /** NS34 — span-level decontamination: ns21's eval split, but the
-    * contaminated 4-gram SPANS are redacted and the rest of each doc is
-    * kept — the surgical variant of benchmark scrubbing (whole-doc
-    * removal throws away a 10k-word page for one quoted question). */
-  private def ns34(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    graft.ops.Dedup.scrubContaminatedSpans(
-      d.where(col("doc_id") % 50 =!= 0),
-      d.where(col("doc_id") % 50 === 0),
-      shingleK = 4)
-  }
-
-  /** NS35 — IVF-PQ: the composed billion-vector serving stack — IVF cells
-    * prune WHICH rows are scored (partition-pruned probe scan), PQ codes
-    * compress WHAT scoring costs (ADC lookups, no raw vectors in the
-    * index at all). Both quantizers are the md5-derived ones from ns13
-    * and ns30, so the composite mirrors end-to-end. */
-  private def ns35(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/embeddings.parquet")
-    val base = scratchIndexDir("graft_ivfpq_idx", dir, fp)
-    if (!graft.ops.Similarity.pqIndexMatches(s, base, fp))
-      graft.ops.Similarity.writeIvfPqIndex(
-        embs(s, dir), base, fingerprint = Some(fp))
-    graft.ops.Similarity.ivfPqTopKFromIndex(
-      s, base, simQueries(s, dir), k = 10)
-  }
-
-  /** NS53 — BPE-budgeted sequence packing: ns26's greedy packer running on
-    * REAL tokenizer counts (ns51's dictionary-memoized BPE) instead of the
-    * chars/4 estimate — the tokenizer-faithful budget path. Same shapes:
-    * the tokenize join plus packSequences' one stratum shuffle. */
-  private def ns53(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    val counted = d.join(
-      graft.ops.Bpe.tokenize(d, graft.ops.Bpe.default)
-        .select(col("doc_id"), col("n_tokens")),
-      Seq("doc_id"))
-    graft.ops.Sampling.packSequences(counted, tokenBudget = 512,
-      tokenCountCol = Some("n_tokens"))
-  }
-
-  /** NS54 — count-min heavy hitters: token frequencies estimated from a
-    * 4×256 mergeable sketch (sum-merge across shards, vs HLL's max-merge),
-    * candidates probed against broadcast sketch state with no corpus
-    * re-scan. md5 rows make the approximate counts oracle-replayable. */
-  private def ns54(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    graft.ops.Sketches.cmsHeavyHitters(
-      spaceTokens(d), spaceTokens(d.where(col("doc_id") < 10)), "token",
-      minCount = 200L)
-  }
-
-  /** NS55 — Bloom-pruned semi-join: lineitems of high-value orders, with
-    * the fact side thinned by 3 broadcast md5-bit probes BEFORE the exact
-    * join's exchange. Row-identical to the plain semi-join (the oracle IS
-    * the plain semi-join — false positives die in the final exact pass). */
-  private def ns55(s: SparkSession, dir: String): DataFrame = {
-    val l = Tables.load(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"))
-    val o = Tables.load(s, dir, "orders")
-      .where(col("o_totalprice") > 150000)
-      .select(col("o_orderkey").as("l_orderkey"))
-    // forceBloom: at this scale the stats lever would (rightly) skip the
-    // Bloom pass for the broadcast join — pin it on so the query times the
-    // operator's real big-dim machinery, ns32's pattern
-    graft.ops.Joins.bloomSemiJoin(l, o, "l_orderkey",
-        forceBloom = Some(true))
-  }
-
-  /** NS56 — snapshot diff: the re-crawl change-feed. The "new" snapshot is
-    * derived deterministically from the old one (first 20 docs dropped,
-    * every 37th doc's text edited, first 10 docs re-keyed as additions) so
-    * both engines can construct it; the diff must recover exactly those
-    * edits as removed/changed/added rows with matching fingerprints. */
-  /** The ns56/ns86 shared new-snapshot synthesis: docs 0–19 removed,
-    * every 37th text changed, docs 0–9 re-added under shifted ids. The
-    * shift is `max(doc_id) + 1` — STRUCTURAL, so added ids can never
-    * collide with real ids at any corpus size (a fixed +100000 collided
-    * once ScaleProof corpora passed 100k docs, silently violating the
-    * diff's key-uniqueness contract). */
-  private def snapshotTick(
-      d: DataFrame, cols: Seq[String]): DataFrame = {
-    val shift = d.agg(max(col("doc_id"))).head.getLong(0) + 1
-    d.where(col("doc_id") >= 20)
-      .withColumn("text",
-        when(col("doc_id") % 37 === 0, concat(col("text"), lit(" v2")))
-          .otherwise(col("text")))
-      .unionByName(d.where(col("doc_id") < 10)
-        .select((col("doc_id") + shift).as("doc_id") +:
-          cols.map(col): _*))
-  }
-
-  private def ns56(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    val cols = Seq("text", "lang", "source", "n_chars")
-    graft.ops.Versioning.snapshotDiff(
-      d, snapshotTick(d, cols), "doc_id", cols)
-  }
-
-  /** NS57 — mergeable quantiles: per-language length quantiles read off
-    * fixed-width bin counts — the sketch-shaped sibling of ns33's exact
-    * rank walk (per-(group,bin) counts sum-merge across shards/ticks; the
-    * read-off is integer arithmetic, error ≤ binWidth). */
-  private def ns57(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Sketches.quantileBins(docs(s, dir), "n_chars", Seq("lang"),
-      Seq(0.5, 0.9, 0.99), binWidth = 16)
-
-  /** NS59 — persisted CMS sketch lifecycle: the ns18 two-tick pattern for
-    * frequency serving. The base sketch is built from 80% of the corpus
-    * (fingerprint-gated, built once), a per-run working copy absorbs the
-    * remaining 20% as a sum-merge append (no rebuild), and candidates are
-    * estimated off the updated sketch — which must equal a one-shot CMS
-    * over the WHOLE corpus, so the oracle replays exactly that. */
-  private def ns59(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
-    val base = scratchIndexDir("graft_cms_sketch", dir, fp)
-    if (!graft.ops.Sketches.cmsSketchMatches(s, base, fp))
-      graft.ops.Sketches.writeCmsSketch(
-        spaceTokens(docs(s, dir).where(col("doc_id") % 5 =!= 0)), base,
-        "token", fingerprint = Some(fp))
-    val work = s"${base}_tick_${java.util.UUID.randomUUID().toString.take(8)}"
-    graft.ops.Sketches.copyCmsSketch(s, base, work)
-    val workPath = new org.apache.hadoop.fs.Path(work)
-    workPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .deleteOnExit(workPath)
-    graft.ops.Sketches.updateCmsSketch(
-      spaceTokens(docs(s, dir).where(col("doc_id") % 5 === 0)), work, "token")
-    graft.ops.Sketches.cmsEstimateFromSketch(
-        s, work, spaceTokens(docs(s, dir).where(col("doc_id") < 10)), "token")
-      .where(col("cms_count") >= 200)
-  }
-
-  /** NS58 — Z-order layout: documents rewritten clustered on the
-    * INTERLEAVED bits of (n_chars, doc_id), so row-group skipping works
-    * on BOTH filter columns (ns41's lexicographic clustering serves only
-    * its leading column). The two-dimensional predicate reads the
-    * z-layout; the oracle reads the raw table — the rewrite must be
-    * answer-invisible, ns41's contract. */
-  private def ns58(s: SparkSession, dir: String): DataFrame = {
-    val base = cachedDocsLayout(s, "graft_zorder", dir)(p =>
-      graft.ops.Layout.zorder(
-        docs(s, dir), p, Seq("n_chars", "doc_id"), numFiles = 16))
-    graft.ops.Layout.read(s, base)
-      .where(col("n_chars").between(150, 400) &&
-        col("doc_id").between(100, 300))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-  }
-
-  /** NS52 — IVF-PQ with exact re-ranking: the ns35 ADC stage widened to
-    * 4·k candidates, whose raw vectors alone are re-scored with exact
-    * cosine (candidate-bounded corpus read, broadcast semi-join shape).
-    * Same index artifacts as ns35. */
-  private def ns52(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/embeddings.parquet")
-    val base = scratchIndexDir("graft_ivfpq_idx", dir, fp)
-    if (!graft.ops.Similarity.pqIndexMatches(s, base, fp))
-      graft.ops.Similarity.writeIvfPqIndex(
-        embs(s, dir), base, fingerprint = Some(fp))
-    graft.ops.Similarity.ivfPqTopKReranked(
-      s, base, simQueries(s, dir), embs(s, dir), k = 10, rerankFactor = 4)
-  }
-
-  /** NS36 — Unicode NFC normalization: decomposed sequences (e + combining
-    * acute, i + combining diaeresis) are injected as in ns22's PII probe,
-    * and both engines must compose them to identical bytes — the
-    * JVM-Normalizer-vs-utf8proc agreement is what's under test. Zero
-    * shuffle, codegen'd expression. */
-  private def ns36(s: SparkSession, dir: String): DataFrame = {
-    val injected = docs(s, dir).select(col("doc_id"),
-      concat(col("text"),
-        lit(" café naïve armeé")).as("text"))
-    graft.ops.TextAnalysis.normalizeText(injected)
-  }
-
-  /** NS37 — semantic dedup (SemDeDup): embeddings clustered by the ns13
-    * coarse quantizer, duplicates resolved WITHIN cells only — a vector is
-    * dropped iff a lower-id cellmate has cosine ≥ 0.4. The cluster bounds
-    * the pair space (Σ|cell|², never n²); cross-cell near-identicals both
-    * survive by design. */
-  private def ns37(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Dedup.semanticDedup(embs(s, dir))
-
-  /** NS38 — TF-IDF keyword extraction: top-5 characteristic bigrams per
-    * doc under the integer-quantized idf (floor log₂(N÷df)) — every score
-    * an exact integer, so the whole ranking hash-matches across engines.
-    * (Bigrams because the synthetic corpus has a ~31-word vocabulary;
-    * unigram idf would be 0 almost everywhere.) */
-  private def ns38(s: SparkSession, dir: String): DataFrame =
-    graft.ops.TextAnalysis.tfidfKeywords(docs(s, dir))
-
-  /** NS39 — document chunking: 64-token windows with 16-token overlap —
-    * the retrieval/embedding splitter. Zero shuffle; chunk math is exact
-    * in-row integer arithmetic. */
-  private def ns39(s: SparkSession, dir: String): DataFrame =
-    graft.ops.TextAnalysis.chunkDocuments(docs(s, dir))
-
-  /** NS40 — intra-corpus duplicate-span removal (exact substring dedup,
-    * keep-first): any 4-gram in ≥2 docs keeps its first occurrence (min
-    * doc_id) and is redacted everywhere else — ns34's span machinery made
-    * self-referential. */
-  private def ns40(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Dedup.dedupSpans(docs(s, dir))
-
-  /** NS41 — storage-layout optimization: the corpus rewritten partitioned
-    * by lang and range-clustered on n_chars, then a selective query served
-    * FROM the layout — the lang predicate prunes partition directories at
-    * planning time and the n_chars range reaches parquet min/max stats
-    * (both pinned in CorpusOpsSpec). Layout is scratch-cached per content
-    * fingerprint, same staleness contract as the indexes. */
-  private def ns41(s: SparkSession, dir: String): DataFrame = {
-    val base = cachedDocsLayout(s, "graft_layout", dir)(p =>
-      graft.ops.Layout.optimize(
-        docs(s, dir), p, Seq("lang"), Seq("n_chars")))
-    graft.ops.Layout.read(s, base)
-      .where(col("lang") === "en" &&
-        col("n_chars") >= 150 && col("n_chars") <= 400)
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_chars")).as("sum_chars"))
-  }
-
-  /** NS42 — k-means-trained IVF: two Lloyd iterations refine the md5
-    * coarse quantizer (per-dim means rounded to 6 decimals — the contract
-    * that makes a TRAINED quantizer oracle-checkable at all), then ns13's
-    * probe/score serving runs unchanged on the tightened cells. */
-  private def ns42(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Similarity.kmeansIvfTopK(embs(s, dir), simQueries(s, dir), k = 10)
-
-  /** NS43 — bucketed range join: every view within the 24h window before
-    * a purchase by the same user — the attribution-window interval join.
-    * Spark has no native range join; the naive θ-join is a nested loop.
-    * [[graft.ops.Joins.rangeJoin]] manufactures an equality key (time
-    * bucket = window size, so intervals replicate ≤2×) and the range
-    * check rides as a residual condition. */
-  private def ns43(s: SparkSession, dir: String): DataFrame = {
-    val win = 86400L * 1000000L // 24h in micros
-    val ev = graft.ops.Events.tsMicros(Tables.load(s, dir, "events"))
-    val views = ev.where(col("event_type") === "view")
-      .select(col("user_id"), col("event_id").as("view_id"), col("ts"))
-    val purchases = ev.where(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("purchase_id"),
-        (col("ts") - lit(win)).as("start_ts"), col("ts").as("end_ts"))
-    graft.ops.Joins.rangeJoin(views, purchases, "ts", "start_ts", "end_ts",
-        keys = Seq("user_id"), bucket = win)
-      .select(col("purchase_id"), col("view_id"), col("user_id"),
-        (col("end_ts") - col("ts")).as("lead_us"))
-  }
-
-  /** NS44 — engine-reproducible HLL distinct sketch: per-language
-    * estimated distinct texts from md5-derived registers — an APPROXIMATE
-    * aggregate the oracle replays exactly (built-in approx_count_distinct
-    * is engine-specific and unverifiable). */
-  private def ns44(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Sketches.hllDistinct(docs(s, dir), "text", Seq("lang"))
-
-  /** NS45 — corpus mixing: the corpus downsampled to a 4:2:2:1:1
-    * en:de:fr:es:zh target mixture — the data-mixture step of training-set
-    * assembly. The binding stratum (fr at these weights) keeps everything;
-    * every other language downsamples via the deterministic hash
-    * predicate. Rate arithmetic is division-only, so the oracle replays
-    * the exact thresholds. */
-  private def ns45(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Sampling.mixCorpus(docs(s, dir), "lang",
-        Map("en" -> 4.0, "de" -> 2.0, "fr" -> 2.0, "es" -> 1.0, "zh" -> 1.0))
-      .select("doc_id", "lang", "source")
-
-  /** NS46 — train/valid/test split: every doc labeled 90/5/5 by hash
-    * bucket range — exhaustive, disjoint, retry-stable, engine-portable.
-    * Zero shuffle. */
-  private def ns46(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Sampling.splitCorpus(docs(s, dir),
-        Map("train" -> 0.9, "valid" -> 0.05, "test" -> 0.05))
-      .select("doc_id", "lang", "split")
-
-  /** NS47 — cross-source overlap matrix: distinct shared 3-grams (and the
-    * fraction of the smaller vocabulary) for every source pair — the
-    * corpus audit that exposes feeds mirroring each other. Gram-keyed
-    * shuffles; per-gram pair work bounded by sources². */
-  private def ns47(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Dedup.sourceOverlap(docs(s, dir))
-
-  /** NS48 — exact per-stratum sample: exactly 10 docs per language, the
-    * 10 smallest key hashes — guaranteed-size eval carving, unlike the
-    * binomial-size rate predicate of ns23. One shuffle, WindowGroupLimit
-    * caps the per-partition sort. */
-  private def ns48(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Sampling.sampleExact(docs(s, dir), "lang", k = 10)
-      .select("doc_id", "lang")
-
-  /** NS49 — per-language length histogram: exact 50-char buckets (last
-    * bucket clamps outliers) — the distribution shape behind ns33's
-    * quartiles. One (group, bucket)-keyed aggregation. */
-  private def ns49(s: SparkSession, dir: String): DataFrame =
-    graft.ops.TextAnalysis.histogram(docs(s, dir))
-
-  /** NS51 — real BPE tokenization (merges-table algorithm, shipped
-    * sf0.01-trained vocab): per-doc exact token count + md5 of the ordered
-    * token stream. The merge loop runs memoized over the distinct-word
-    * dictionary; the oracle replays it as a recursive CTE. */
-  private def ns51(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Bpe.tokenize(docs(s, dir), graft.ops.Bpe.default)
-
-  /** NS60 — byte-level BPE tokenization: the GPT-2-style pre-tokenizer
-    * (contraction/letter/number/punctuation/whitespace regex classes,
-    * byte→unicode remap with 'Ġ' leading-space markers) driven through a
-    * punctuation-dense injected prefix — every regex class appears in
-    * every row, so the hash check proves the regex path end to end, not
-    * just on space-separated words. Same memoized-dictionary shape as
-    * ns51; the prefix is built from literals + doc_id so the oracle
-    * constructs the identical text in SQL. */
-  private val ns60Prefix1 = "Mr. O'Brien isn't here: it's #"
-  private val ns60Prefix2 =
-    ", we're 99% sure they've won; I'm told he'd pay $3.50, it'll work!"
-  private def ns60(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"),
-      concat(lit(ns60Prefix1), col("doc_id").cast("string"),
-        lit(ns60Prefix2), lit("\t"), lit("\n"), lit("twice  spaced "),
-        col("text")).as("text"))
-    graft.ops.Bpe.tokenize(d, graft.ops.Bpe.default,
-      graft.ops.Bpe.PreTokenizer.ByteLevel)
-  }
-
-  /** NS50 — co-located bucketed join: lineitem and orders bucketed 8 ways
-    * on the order key, then joined WITHOUT any exchange — the write-once
-    * shuffle that every subsequent fact⋈fact join amortizes at 100 TB.
-    * Tables are built ONCE PER SESSION (guarded by catalog existence —
-    * the bucketing metadata lives in the session catalog), so Bench's
-    * untimed warmup absorbs the build and the timed runs measure the
-    * join, the same contract as the ns17/ns18 index builds. The oracle is
-    * the plain join: bucketing must be answer-invisible. */
-  private def ns50(s: SparkSession, dir: String): DataFrame = {
-    // table names keyed on the sfDir so two data dirs never share tables
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val (tl, to) = (s"graft_bl_$key", s"graft_bo_$key")
-    if (!s.catalog.tableExists(tl) || !s.catalog.tableExists(to)) {
-      // per-JVM-unique path: no cross-process overwrite race; reclaimed at
-      // JVM exit (same hygiene as ns18)
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_bucketed_" +
-        s"${key}_${java.util.UUID.randomUUID().toString.take(8)}"
-      graft.ops.Layout.bucketize(
-        Tables.load(s, dir, "lineitem").select("l_orderkey", "l_quantity"),
-        tl, s"$base/lineitem",
-        bucketCols = Seq("l_orderkey"), numBuckets = 8,
-        sortCols = Seq("l_orderkey"))
-      graft.ops.Layout.bucketize(
-        Tables.load(s, dir, "orders").select("o_orderkey", "o_orderpriority"),
-        to, s"$base/orders",
-        bucketCols = Seq("o_orderkey"), numBuckets = 8,
-        sortCols = Seq("o_orderkey"))
-      val p = new org.apache.hadoop.fs.Path(base)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
-    }
-    s.table(tl)
-      .join(s.table(to), col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_items"),
-        sum(col("l_quantity").cast("long")).as("sum_qty"))
-  }
-
-  /** NS16 — near-dup survivor resolution: ns2's minhash pairs → connected
-    * components (min-label propagation with pointer jumping) → the
-    * surviving corpus with per-survivor merge counts. The dedup DECISION a
-    * training pipeline actually needs — chains (A~B, B~C) collapse to one
-    * survivor, which pairwise output alone can't express. */
-  private def ns16(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Dedup.survivorCorpus(
-      docs(s, dir),
-      graft.ops.Dedup.minhashLsh(docs(s, dir))
-        .select(col("doc_a"), col("doc_b")))
-
-  /** NS61 — unigram-LM perplexity filter (CCNet recipe): train on the
-    * corpus, score every doc by mean token nll, flag the outliers. The
-    * per-token nll is quantized to integer micro-nats before the per-doc
-    * sum, so the distributed aggregate is exact and the oracle replays it
-    * bit-for-bit. */
-  private def ns61(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Quality.lmPerplexity(docs(s, dir))
-
-  /** NS62 — hashed-feature linear classifier (fastText recipe): md5-derived
-    * integer milli-weights broadcast as the model table, bag-of-words
-    * inference as one broadcast join + exact-integer per-doc sum. */
-  private def ns62(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Quality.classifierScore(docs(s, dir))
-
-  /** NS63 — HTML main-content extraction: every doc is wrapped in
-    * deterministic page chrome (nav, script, style, entity-laden headline —
-    * every branch of the extractor sees work in every row), then
-    * [[graft.ops.TextAnalysis.htmlToText]] recovers the content. The
-    * oracle builds the identical page in SQL and replays the same
-    * RE2-safe pattern chain. */
-  private[graft] val ns63Chrome1 =
-    "<html><head><title>t</title><style type=\"text/css\">p { margin: 0; }" +
-      "</style><script>if (a < b && c > d) { alert(\"x\"); }</script>" +
-      "</head><body><nav><a href=\"/\">Home</a> | <a href=\"/about\">About" +
-      "</a></nav><h1>Doc &amp; &quot;notes&quot; &#39;n&#39; &lt;tags&gt;" +
-      "</h1><p id=\"main\">"
-  private[graft] val ns63Chrome2 =
-    "</p><div class=\"footer\"><script src=\"x.js\"></script>(c) example" +
-      "</div></body></html>"
-  private def ns63(s: SparkSession, dir: String): DataFrame = {
-    val wrapped = docs(s, dir).select(col("doc_id"),
-      concat(lit(ns63Chrome1), col("text"), lit(ns63Chrome2)).as("text"))
-    graft.ops.TextAnalysis.extractHtml(wrapped)
-  }
-
-  /** NS65 — model-based curation pipeline (CCNet recipe): language gate +
-    * learned-classifier gate fused into one projection, perplexity gate
-    * self-trained on the gated survivors, exact dedup. The modern
-    * counterpart of heuristic ns15 — same corpus in, a learned decision
-    * out, every gate replayable in SQL. */
-  private def ns65(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Curation.curateModel(docs(s, dir))
-
-  /** NS66 — Luhn-validated credit-card scrubbing: every doc gets a
-    * deterministic payment blurb — one known-valid card, one
-    * checksum-invalid lookalike, and a doc_id-varying candidate whose
-    * validity the checksum alone decides (~1 in 10 validate) — then
-    * [[graft.ops.Privacy.scrubCreditCards]] must redact exactly the
-    * Luhn-valid runs. The oracle replays candidate extraction, the
-    * checksum (index lambdas), and the replacement fold in SQL. */
-  private def ns66(s: SparkSession, dir: String): DataFrame = {
-    val blurb = concat(lit(" pay 4111111111111111 ref "),
-      (lit(4242420000000000L) + col("doc_id") % 100000).cast("string"),
-      lit(" order 1234567890123456 end "))
-    graft.ops.Privacy.scrubCreditCards(
-        docs(s, dir).select(col("doc_id"),
-          concat(col("text"), blurb).as("text")))
-      .select(col("doc_id"), col("n_cands"), col("n_redacted"), col("text"))
-  }
-
-  /** NS67 — leaked-credential scrubbing: every doc carries one valid
-    * specimen of each secret shape (AWS key, GitHub token, JWT, 40-hex
-    * secret — md5-derived so the oracle builds the identical page) plus
-    * an AWS lookalike one char short, which must NOT match. The scrub is
-    * [[graft.ops.Privacy.scrubSecrets]]; counts are per-pattern. */
-  private def ns67(s: SparkSession, dir: String): DataFrame = {
-    val d = col("doc_id").cast("string")
-    def m(p: String) = md5(concat(lit(p), d))
-    val blurb = concat(
-      lit(" key AKIA"), upper(substring(m("aws:"), 1, 16)),
-      lit(" fake AKIA"), upper(substring(m("fake:"), 1, 15)),
-      lit(" tok ghp_"), substring(concat(m("g1:"), m("g2:")), 1, 36),
-      lit(" jwt eyJ"), substring(m("j1:"), 1, 10),
-      lit("."), substring(m("j2:"), 1, 12),
-      lit("."), substring(m("j3:"), 1, 10),
-      lit(" sha "), substring(concat(m("h1:"), m("h2:")), 1, 40),
-      lit(" end"))
-    graft.ops.Privacy.scrubSecrets(
-        docs(s, dir).select(col("doc_id"),
-          concat(col("text"), blurb).as("text")))
-      .select(col("doc_id"), col("n_aws_keys"), col("n_gh_tokens"),
-        col("n_jwts"), col("n_hex_secrets"), col("text"))
-  }
-
-  private val ns68Banner = "every mirror of this crawl shares this banner line"
-  private val ns68Footer = "boilerplate footer for "
-
-  /** NS68 — corpus-wide line-level dedup (C4/RefinedWeb boilerplate
-    * removal): docs are given line structure (a banner shared by every
-    * doc, the body chunked 8 words per line, a footer shared per source),
-    * then any line occurring in >1 distinct docs is dropped and the
-    * survivors reassembled in order. Banner and footers vanish; body
-    * lines survive unless two docs genuinely collide. One line-keyed df
-    * aggregation + an AQE-broadcast anti probe + one doc-keyed rebuild. */
-  /** The ns68/ns73 line-structure synthesis: banner + 8-word body lines +
-    * per-source footer. */
-  private def ns68SynthText: org.apache.spark.sql.Column = {
-    val chunked = regexp_replace(col("text"), "((?:\\S+ ){7}\\S+) ", "$1\n")
-    concat(lit(ns68Banner + "\n"), chunked,
-      lit("\n" + ns68Footer), col("source"))
-  }
-
-  private def ns68(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Dedup.lineDedup(
-      docs(s, dir).select(col("doc_id"), ns68SynthText.as("text")))
-
-  /** NS69 — per-label embedding outlier scoring: spherical per-label
-    * centroids (6-decimal rounding contract, as ns42's k-means), then the
-    * 10 lowest-cosine members per label — the label-noise filter of
-    * semantic curation. Centroid agg shuffles only (label, dim) partials;
-    * scoring is a broadcast probe; WindowGroupLimit caps the bottom-k. */
-  private def ns69(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Similarity.outliers(embs(s, dir), k = 10)
-
-  /** NS70 — canonical-URL dedup: five URL spellings per page group
-    * (case-shuffled host, www, default ports, duplicate/trailing slashes,
-    * tracking params, unsorted query, fragments) collapse under
-    * [[graft.ops.Urls.canonicalize]]; the four https variants of a group
-    * dedup to one survivor, the http variant stays distinct (scheme is
-    * load-bearing). Canonicalization is a narrow codegen'd projection;
-    * dedup is ONE canonical-keyed groupBy. */
-  /** The ns70/ns73 URL synthesis: five spellings per doc_id-group of 5,
-    * four of which canonicalize identically (the http variant stays
-    * distinct — scheme is load-bearing). */
-  private def ns70SynthUrl: org.apache.spark.sql.Column = {
-    val g = expr("doc_id DIV 5").cast("string")
-    val m = col("doc_id") % 5
-    when(m === 0, concat(lit("https://WWW.Crawl.Example.org:443//a//"), g,
-      lit("/?utm_source=feed&b=2&a=1#frag")))
-    .when(m === 1, concat(lit("https://crawl.example.org/a/"), g,
-      lit("?a=1&b=2")))
-    .when(m === 2, concat(lit("HTTPS://www.crawl.example.org/a/"), g,
-      lit("/?b=2&a=1&gclid=xyz")))
-    .when(m === 3, concat(lit("https://crawl.example.org:443/a//"), g,
-      lit("?a=1&ref=tw&b=2#x")))
-    .otherwise(concat(lit("http://crawl.example.org:80/a/"), g,
-      lit("?a=1&b=2")))
-  }
-
-  private def ns70(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Urls.dedupByUrl(
-      docs(s, dir).select(col("doc_id"), ns70SynthUrl.as("url")))
-
-  /** NS73 — the fused web-ingest pipeline
-    * ([[graft.ops.Curation.webIngest]]): URL dedup -> line dedup over the
-    * URL survivors -> cleaned-text quality gate -> exact content dedup,
-    * on pages carrying the ns70 URL synthesis AND the ns68 line-structure
-    * synthesis. Mirror copies die at stage 1 before inflating line df;
-    * boilerplate dies at stage 2; chrome-only pages die at stage 3;
-    * identical cleaned bodies collapse at stage 4. */
-  private def ns73(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Curation.webIngest(
-      docs(s, dir).select(col("doc_id"), ns70SynthUrl.as("url"),
-        ns68SynthText.as("text")))
-
-  /** NS71 — token-distribution drift between corpus snapshots: the even
-    * doc_ids stand in for the accepted corpus, the odd for the incoming
-    * crawl; the 50 tokens whose relative frequency moved most are ranked
-    * by the exact integer cross-product metric (no float division — see
-    * [[graft.ops.Versioning.tokenDrift]]). One token-keyed aggregation +
-    * TakeOrderedAndProject. */
-  private def ns71(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    graft.ops.Versioning.tokenDrift(
-      d.where(col("doc_id") % 2 === 0),
-      d.where(col("doc_id") % 2 === 1), topK = 50)
-  }
-
-  /** NS72 — k-anonymity release gate on the customer table: rows are
-    * released only if their (segment, region) quasi-identifier group holds
-    * ≥ 50 rows AND ≥ 3 distinct balance bands (l-diversity) — the
-    * re-identification check the reference's column-rewriting anonymiser
-    * has no answer to. The region and balance-band derivations stand in
-    * for the caller's generalization hierarchy. One quasi-key aggregation
-    * + an AQE-broadcast stats join. */
-  private def ns72(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Privacy.kAnonymize(
-      Tables.load(s, dir, "customer").select(
-        col("c_custkey"),
-        col("c_mktsegment").as("segment"),
-        (col("c_nationkey") % 5).as("region"),
-        floor(col("c_acctbal") / 1000).cast("int").as("balance_band")),
-      Seq("segment", "region"), "balance_band", k = 50, l = 3)
-      .select("c_custkey", "segment", "region", "group_size", "n_sensitive")
-
-  /** NS74 — ordered funnel analysis over the event log: per user, the
-    * furthest stage reached through view -> click -> purchase, each stage
-    * strictly after the previous one's completion
-    * ([[graft.ops.Events.funnel]]). Per-stage type predicates push to the
-    * scan; per-stage frames are user-cardinality and join co-keyed. */
-  private def ns74(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Events.funnel(Tables.load(s, dir, "events"))
-
-  /** NS75 — retention cohorts over the event log: users cohorted by
-    * first-active week, each (cohort, offset) cell counting distinct
-    * members still active ([[graft.ops.Events.retentionCohorts]]).
-    * Integer-only bucket arithmetic; one reused user-keyed partitioning. */
-  private def ns75(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Events.retentionCohorts(Tables.load(s, dir, "events"))
-
-  /** NS76 — dataset-card rollup ([[graft.ops.Curation.describeCorpus]]):
-    * the one-row release summary — volume, diversity, token extremes,
-    * HLL distinct-text estimate. Exact integers everywhere but the
-    * sketch estimate, which follows the ns44 rounding contract. */
-  private def ns76(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Curation.describeCorpus(docs(s, dir))
-
-  /** NS77 — per-HOST reputation gate ([[graft.ops.Urls.hostReputation]]):
-    * pages are released only if their host has enough pages (≥ 3) and a
-    * duplicate rate ≤ 500‰ — the Gopher/RefinedWeb host-level filter. The
-    * synthesis spreads docs over seven hosts (two url spellings each, so
-    * the host normalization is load-bearing), makes host `h0` a template
-    * farm (every page the same body → dup gate kills it) and gives
-    * doc 0 a singleton host (min-docs gate kills it). One
-    * (host, digest)-keyed count-distinct + an AQE-broadcast stats join
-    * back; the text column reduces to its md5 before any exchange. */
-  private def ns77(s: SparkSession, dir: String): DataFrame = {
-    val g = (col("doc_id") % 7).cast("string")
-    val url = when(col("doc_id") === 0,
-        lit("https://lonely.example.org/only"))
-      .when(col("doc_id") % 2 === 0,
-        concat(lit("HTTPS://WWW.h"), g, lit(".Example.org:443/p/"),
-          col("doc_id").cast("string")))
-      .otherwise(concat(lit("https://h"), g, lit(".example.org/p/"),
-        col("doc_id").cast("string")))
-    graft.ops.Urls.hostReputation(
-      docs(s, dir).select(col("doc_id"), url.as("url"),
-        when(col("doc_id") % 7 === 0, lit("cheap spam page body"))
-          .otherwise(col("text")).as("text")),
-      minDocs = 3, maxDupPermille = 500)
-  }
-
-  /** NS80 — curriculum quantile buckets
-    * ([[graft.ops.Sketches.curriculumBuckets]]): every doc labeled with
-    * the within-language length quartile (1..4) off the mergeable
-    * bin-sketch boundaries — the curriculum-learning data-ordering step,
-    * skew-aware where ns49's fixed-width histogram is not. Boundaries
-    * broadcast; the corpus never shuffles. */
-  private def ns80(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Sketches.curriculumBuckets(
-      docs(s, dir).select(col("doc_id"), col("lang"), col("n_chars")),
-      "n_chars", Seq("lang"), numBuckets = 4, binWidth = 16)
-      .select(col("doc_id"), col("lang"), col("n_chars"), col("bucket"))
-
-  /** NS81 — perceptual-hash image near-dup
-    * ([[graft.ops.Perceptual.nearDupPairs]] over
-    * [[graft.ops.Perceptual.dhash63]]): re-encoded / lightly-edited
-    * copies of the same "image" pair up under a banded 63-bit dHash
-    * Hamming join — the multimodal analog of ns3's simhash. The
-    * synthesis builds 5-variant families over the documents table's
-    * blobs (the ns73/ns77 pattern): two exact copies, two 1-byte
-    * length-preserving edits (a small patch — only strides landing on
-    * the edited byte move), and one reversed control that must NOT
-    * pair. maxHamming=3 < bands=4 keeps the banded join
-    * pigeonhole-exact, so the oracle's brute-force all-pairs SQL is the
-    * same function. The hashing pass is one mapPartitions decode (no
-    * shuffle); pairing shuffles once on (band, chunk). */
-  /** The shared ns81/ns83 image-family synthesis: (doc_id, t) text
-    * variants per 5-id family — two exact copies, two 1-byte
-    * length-preserving edits, one reversed control. */
-  private def ns81Family(s: SparkSession, dir: String): DataFrame = {
-    val base = docs(s, dir).select(col("doc_id"), col("text"))
-    base.as("d")
-      .join(base.as("b"),
-        col("b.doc_id") === (col("d.doc_id") - col("d.doc_id") % 5))
-      .select(col("d.doc_id").as("doc_id"),
-        when(col("d.doc_id") % 5 <= 1, col("b.text"))
-          .when(col("d.doc_id") % 5 === 2,
-            concat(substring(col("b.text"), 1, 10), lit("#"),
-              expr("substring(b.text, 12)")))
-          .when(col("d.doc_id") % 5 === 3,
-            concat(substring(col("b.text"), 1, 20), lit("@"),
-              expr("substring(b.text, 22)")))
-          .otherwise(reverse(col("b.text"))).as("t"))
-  }
-
-  /** NS90 — audio near-dup over REAL WAV containers
-    * ([[graft.ops.WavSynth]] → [[graft.ops.WavGridDecoder]] →
-    * [[graft.ops.Perceptual.nearDupPairs]]): the audio leg of the
-    * perceptual family, through the real javax.sound decode path — the
-    * one modality ns81/ns83 left spec-gated only (VERDICT r9 task 4).
-    * Families of three per 3-id group: v0 = 16-bit PCM of the base
-    * text's synthesized samples, v1 = the SAME samples re-encoded as
-    * 8-bit PCM — a different byte stream in a different container that
-    * [[graft.ops.WavGridDecoder]]'s band math hashes IDENTICALLY (the
-    * depth-re-encode dup class byte hashing can never catch) — and
-    * v2 = the reversed-text control that must stay far. The oracle
-    * recomputes the 9×8 time×band grid and dHash INDEPENDENTLY from the
-    * same text bytes in SQL (no WAV container, no javax.sound), so a
-    * green hash certifies the container write + parse + band arithmetic
-    * end-to-end, not just the pairing join. Scale shape = ns81's: one
-    * mapPartitions decode pass (real codec), one banded shuffle,
-    * pigeonhole-exact at maxHamming 3 < bands 4. */
-  private def ns90(s: SparkSession, dir: String): DataFrame = {
-    val base = docs(s, dir).select(col("doc_id"), col("text"))
-    val fam = base.as("d")
-      .join(base.as("b"),
-        col("b.doc_id") === (col("d.doc_id") - col("d.doc_id") % 3))
-      .select(col("d.doc_id").as("doc_id"),
-        when(col("d.doc_id") % 3 === 2, reverse(col("b.text")))
-          .otherwise(col("b.text")).as("t"),
-        when(col("d.doc_id") % 3 === 1, lit(8)).otherwise(lit(16))
-          .as("bits"))
-    val synth = udf((t: String, bits: Int) => graft.ops.WavSynth.wavOf(t, bits))
-    val media = fam.select(col("doc_id"),
-      synth(col("t"), col("bits")).as("content"))
-    graft.ops.Perceptual.nearDupPairs(
-      graft.ops.Perceptual.dhash63(media, graft.ops.WavGridDecoder),
-      maxHamming = 3, bands = 4)
-  }
-
-  private def ns81(s: SparkSession, dir: String): DataFrame = {
-    val media = ns81Family(s, dir).select(col("doc_id"),
-      encode(col("t"), "UTF-8").as("content"))
-    graft.ops.Perceptual.nearDupPairs(
-      graft.ops.Perceptual.dhash63(media), maxHamming = 3, bands = 4)
-  }
-
-  /** NS83 — video-keyframe dedup ([[graft.ops.Multimodal.frameSample]] →
-    * [[graft.ops.Perceptual.dhash63]] per frame → repeated-keyframe
-    * groups): the video leg of the multimodal family. Blobs split into
-    * 64-byte "frames", every 2nd sampled (the keyframe stride), each
-    * sampled frame perceptually hashed, and frames repeated across the
-    * corpus surface as (phash, n_frames, n_docs) groups — the static-
-    * intro/shared-b-roll detector. All narrow until ONE phash-keyed
-    * groupBy: the explode is in-partition codegen (`substring` windows),
-    * the hash pass is the single mapPartitions decode, no pair join
-    * anywhere — frame-dedup volume is group volume, linear in frames. */
-  private def ns83(s: SparkSession, dir: String): DataFrame = {
-    val media = ns81Family(s, dir).select(col("doc_id"),
-      encode(col("t"), "UTF-8").as("content"),
-      struct(length(encode(col("t"), "UTF-8")).cast("long").as("n_bytes"))
-        .as("meta"))
-    val frames = graft.ops.Multimodal.frameSample(
-      media, frameBytes = 64, everyK = 2)
-    // composite frame id: source_frame < 1000 at any plausible doc size
-    // (64-byte frames; the guard keeps silent aliasing impossible)
-    val fmedia = frames.select(
-      (col("doc_id") * 1000 +
-        when(col("source_frame") < 1000, col("source_frame"))
-          .otherwise(raise_error(lit("frame index overflows composite id"))))
-        .as("doc_id"),
-      col("frame").as("content"))
-    graft.ops.Perceptual.dhash63(fmedia)
-      .select(col("phash"), expr("doc_id div 1000").as("orig"))
-      .groupBy(col("phash"))
-      .agg(count(lit(1)).as("n_frames"),
-        count_distinct(col("orig")).as("n_docs"))
-      .where(col("n_frames") > 1)
-  }
-
-  /** The ns82 media-family synthesis: per 5-id family over the documents
-    * blobs — v0/v1 (the index corpus: base + exact copy), v4 (tick 1: the
-    * reversed control, far from the corpus → survives and is ACCEPTED),
-    * v2 (tick 2: a 1-byte edit of the REVERSED text — near-dup of what
-    * tick 1 accepted, so its rejection proves the index UPDATE is
-    * load-bearing), v3 (tick 2: a 1-byte edit of the base — rejected via
-    * the original build). */
-  private def ns82Family(s: SparkSession, dir: String): DataFrame = {
-    val base = docs(s, dir).select(col("doc_id"), col("text"))
-    base.as("d")
-      .join(base.as("b"),
-        col("b.doc_id") === (col("d.doc_id") - col("d.doc_id") % 5))
-      .select(col("d.doc_id").as("doc_id"),
-        encode(
-          when(col("d.doc_id") % 5 <= 1, col("b.text"))
-            .when(col("d.doc_id") % 5 === 2,
-              concat(substring(reverse(col("b.text")), 1, 10), lit("#"),
-                expr("substring(reverse(b.text), 12)")))
-            .when(col("d.doc_id") % 5 === 3,
-              concat(substring(col("b.text"), 1, 20), lit("@"),
-                expr("substring(b.text, 22)")))
-            .otherwise(reverse(col("b.text"))), "UTF-8").as("content"))
-  }
-
-  /** NS82 — perceptual-index ingest lifecycle
-    * ([[graft.ops.Perceptual.writePhashIndex]] /
-    * [[graft.ops.Perceptual.incrementalNewFromPhashIndex]] /
-    * [[graft.ops.Perceptual.updatePhashIndex]]): the ns18 shape for
-    * media — the corpus's perceptual hashes are persisted ONCE (at 100 TB
-    * the codec decode pass dwarfs everything; the index is 16 bytes/doc),
-    * each ingest tick decodes only its batch, probes the stored hashes via
-    * the pigeonhole-exact band join, and appends what it accepts. Tick 2's
-    * near-dups-of-tick-1's-acceptances are rejected ONLY because the
-    * update ran — the maintenance call is load-bearing in the output.
-    * Fingerprint-keyed base index + per-run working copy (ns18 hygiene). */
-  private def ns82(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
-    val base = scratchIndexDir("graft_phash_idx", dir, fp)
-    val fam = ns82Family(s, dir)
-    if (!graft.ops.Perceptual.phashIndexMatches(s, base, fp))
-      graft.ops.Perceptual.writePhashIndex(
-        fam.where(col("doc_id") % 5 <= 1), base, fingerprint = Some(fp))
-    val work = s"${base}_tick_${java.util.UUID.randomUUID().toString.take(8)}"
-    graft.ops.Perceptual.copyPhashIndex(s, base, work)
-    val workPath = new org.apache.hadoop.fs.Path(work)
-    workPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .deleteOnExit(workPath)
-    val tick1 = graft.ops.Perceptual.incrementalNewFromPhashIndex(
-        fam.where(col("doc_id") % 5 === 4), work,
-        expectDecoder = Some("byte-stride"))
-      .localCheckpoint(false) // lazy snapshot: the listing is pinned at plan
-      // construction, so the update's FIRST append action materializes the
-      // blocks (one fused job chain) instead of a separate eager pass; the
-      // appended files are never in this plan's file list
-    graft.ops.Perceptual.updatePhashIndex(tick1, work)
-    val tick2 = graft.ops.Perceptual.incrementalNewFromPhashIndex(
-      fam.where(col("doc_id") % 5 === 2 || col("doc_id") % 5 === 3), work)
-    tick1.union(tick2)
-  }
-
-  /** NS84 — blocked fuzzy record linkage
-    * ([[graft.ops.Linkage.fuzzyDuplicates]]): entity resolution over
-    * structured records — the metadata-dedup counterpart of the
-    * text/media families. The synthesis derives a 12-hex pseudo-name per
-    * customer (md5-based, engine-reproducible) and emits 3 records per
-    * entity: the clean name, a 1-char substitution typo AT POSITION 2 —
-    * deliberately inside the prefix window, so the pair is only
-    * recoverable via the suffix key (the multi-key pigeonhole is
-    * load-bearing, not decorative) — and an unrelated control. Blocking
-    * on (nation, prefix4/suffix4), candidates verified with the codegen
-    * `levenshtein` ≤ 1. The oracle replays the BLOCKED contract
-    * (blocking is the operator's semantics, recall trade documented),
-    * so both sides are the same function. */
-  /** The ns84/ns96 record synthesis: 3 records per customer — v0 base
-    * name, v1 one-substitution typo (links to v0), v2 unrelated. */
-  private def ns84Recs(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "customer")
-      .select(col("c_custkey"), col("c_nationkey"))
-      .withColumn("nm0",
-        substring(md5(col("c_custkey").cast("string").cast("binary")), 1, 12))
-      .select(col("c_custkey"), col("c_nationkey"), col("nm0"),
-        explode(array(lit(0), lit(1), lit(2))).as("v"))
-      .select(
-        (col("c_custkey") * 3 + col("v")).as("rec_id"),
-        col("c_nationkey"),
-        when(col("v") === 0, col("nm0"))
-          .when(col("v") === 1,
-            concat(substring(col("nm0"), 1, 1), lit("z"),
-              expr("substring(nm0, 3)")))
-          .otherwise(substring(
-            md5(concat(lit("x"), col("c_custkey").cast("string"))
-              .cast("binary")), 1, 12)).as("name"))
-
-  private def ns84(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Linkage.fuzzyDuplicates(ns84Recs(s, dir),
-      groupCols = Seq("c_nationkey"), maxDist = 1, prefixLen = 4)
-
-  /** NS96 — survivorship / golden records
-    * ([[graft.ops.Linkage.goldenRecords]]): the step after ns84's
-    * linkage — each resolved entity (pointer-jumping CC over the fuzzy
-    * pairs) elects ONE golden record by the completeness-first policy
-    * (most non-null attributes, smallest id on ties — a total order, so
-    * the winner is partitioning-independent). Synthetic attribute
-    * coverage (phone null on rec_id ≡ 1 mod 4, email null on ≡ 0 mod 3)
-    * makes completeness genuinely load-bearing: clusters routinely
-    * contain records with different non-null counts, so a broken policy
-    * flips winners and the hash. Oracle replays the linkage, resolves
-    * components with a recursive CTE, and re-elects via window rank. */
-  private def ns96(s: SparkSession, dir: String): DataFrame = {
-    val recs = ns84Recs(s, dir)
-      .withColumn("phone",
-        when(col("rec_id") % 4 === 1, lit(null).cast("string"))
-          .otherwise(concat(lit("p"), col("rec_id"))))
-      .withColumn("email",
-        when(col("rec_id") % 3 === 0, lit(null).cast("string"))
-          .otherwise(concat(lit("e"), col("rec_id"))))
-    val pairs = graft.ops.Linkage.fuzzyDuplicates(recs,
-      groupCols = Seq("c_nationkey"), maxDist = 1, prefixLen = 4)
-    graft.ops.Linkage.goldenRecords(recs, pairs,
-      attrCols = Seq("phone", "email"))
-  }
-
-  /** NS97 — DP release of per-language clipped token-mass sums
-    * ([[graft.ops.Privacy.noisySum]]): the DP ladder's "how much" beside
-    * ns89/ns91's "how many" — per-row contribution clipped to 2000
-    * chars (the clip fixes sensitivity; rows above it contribute
-    * exactly the bound, a documented bias), noise = clip·(G₁−G₂) with
-    * the exact geometric sampling, ε = ln 2. Different seed than ns89 —
-    * reusing one seed across releases correlates the draws the
-    * mechanism's analysis assumes independent. */
-  private def ns97(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Privacy.noisySum(docs(s, dir), Seq("lang"), "n_chars",
-      clip = 2000L, seed = 7L)
-
-  /** NS98 — BM25 lexical retrieval ([[graft.ops.Retrieval.bm25TopK]]):
-    * the sparse top-k ranker over the corpus for a 3-term query mixing
-    * one rare term (df≈5%) with two head terms — exercising both the
-    * rational-idf dominance of rare terms and the length-normalized tf
-    * saturation that separates head-term docs. Exact-integer milli-unit
-    * scoring (floor divisions only) so the FULL ranking hash-replays in
-    * DuckDB; the oracle recomputes idf, avgdl, and the saturation from
-    * scratch. */
-  private def ns98(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Retrieval.bm25TopK(docs(s, dir),
-      Seq("dup", "vector", "stream"), topK = 20)
-
-  /** NS99 — SCD-2 corpus history ([[graft.ops.Versioning.scdHistory]]):
-    * three snapshot versions (the ns56 tick applied twice) collapsed to
-    * per-key runs with (valid_from, valid_to, is_current). The tick
-    * produces every run shape: stable keys (one run 0→2), the %37 keys
-    * re-written at each tick (three single-version runs), keys 10–19
-    * terminated at v1, keys <10 terminated at v0 with their shifted
-    * reincarnations opening mid-history. One key-hash exchange total;
-    * the oracle rebuilds both ticks and the run algebra in SQL
-    * windows. */
-  private def ns99(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    val cols = Seq("text", "lang", "source", "n_chars")
-    // v1 is LAZY-checkpointed: it feeds both the history union and v2's
-    // synthesis (whose max-shift probe executes v1's whole plan), so
-    // without blocks the scan tree doubles. v2 has ONE consumer here —
-    // checkpointing it was measured as pure materialization cost
-    val v1 = snapshotTick(d, cols).localCheckpoint(false)
-    val v2 = snapshotTick(v1, cols)
-    graft.ops.Versioning.scdHistory(Seq(d, v1, v2), "doc_id", cols)
-  }
-
-  /** NS100 — incremental SCD-2 merge ([[graft.ops.Versioning
-    * .scdMergeTick]]): ns99's bootstrap history folded forward one tick
-    * (v3) by the O(live-keys) merge — current runs ⋈ the new snapshot's
-    * narrow fp projection, closed history passing through untouched.
-    * The oracle recomputes the FOUR-version history from scratch (the
-    * ns86 IVM proof pattern), so hash equality proves the merge algebra
-    * exact: same-fp advance, change-close at v−1, gone-close,
-    * new-open. */
-  private def ns100(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    val cols = Seq("text", "lang", "source", "n_chars")
-    // ticks LAZY-checkpointed (the ns99 rationale — each feeds the next
-    // tick's synthesis AND a history/merge consumer); the history too:
-    // the merge reads it twice (closed pass-through + current runs), and
-    // unmaterialized that re-runs the three-snapshot window per branch
-    val v1 = snapshotTick(d, cols).localCheckpoint(false)
-    val v2 = snapshotTick(v1, cols).localCheckpoint(false)
-    val v3 = snapshotTick(v2, cols)
-    val h = graft.ops.Versioning.scdHistory(Seq(d, v1, v2), "doc_id", cols)
-      .localCheckpoint(false)
-    graft.ops.Versioning.scdMergeTick(h, v3, 3L, "doc_id", cols)
-  }
-
-  /** NS101 — VARIANT semi-structured extraction ([[graft.sources
-    * .Variants.extractTyped]]): Spark 4's schema-on-read leg beside
-    * ns94's schema-declared JSONL. Deterministic nested JSON payloads
-    * (object-in-object, numeric stats, an array) built from the
-    * documents table, with ns94's truncation injection (`doc_id % 41`)
-    * landing mid-string so BOTH parsers must judge the tail invalid;
-    * `try_parse_json` parses ONCE into the binary variant encoding and
-    * five `try_variant_get` path walks extract typed fields (plus one
-    * deliberately-missing path that must be NULL everywhere). The
-    * oracle rebuilds the identical payload bytes and extracts with
-    * DuckDB's JSON path functions — parser, validity judgment, and
-    * every typed cast inside the hash gate. */
-  private def ns101(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.Variants.PathSpec
-    val d = docs(s, dir)
-    val langJson = when(col("lang").isNull, lit("null"))
-      .otherwise(concat(lit("\""), col("lang"), lit("\"")))
-    val json0 = concat(
-      lit("{\"doc\":{\"lang\":"), langJson,
-      lit(",\"source\":\""), col("source"),
-      lit("\"},\"stats\":{\"chars\":"), col("n_chars").cast("string"),
-      lit(",\"words\":"),
-      size(split(col("text"), " ")).cast("string"),
-      lit("},\"tags\":[\"t"), (col("doc_id") % 5).cast("string"),
-      lit("\",\"x\"]}"))
-    val built = d.select(col("doc_id"), json0.as("j"))
-      .select(col("doc_id"),
-        when(col("doc_id") % 41 === 0,
-          expr("substring(j, 1, length(j) - 7)")).otherwise(col("j"))
-          .as("j"))
-    graft.sources.Variants.extractTyped(built, "j", Seq(
-        PathSpec("j_lang", "$.doc.lang", "string"),
-        PathSpec("j_source", "$.doc.source", "string"),
-        PathSpec("j_chars", "$.stats.chars", "long"),
-        PathSpec("j_words", "$.stats.words", "long"),
-        PathSpec("j_tag0", "$.tags[0]", "string"),
-        PathSpec("j_title", "$.doc.title", "string")))
-      .select(col("doc_id"), col("ok"), col("j_lang"), col("j_source"),
-        col("j_chars"), col("j_words"), col("j_tag0"), col("j_title"))
-  }
-
-  /** NS102 — SFT sample assembly ([[graft.ops.Assembly
-    * .assembleSamples]]): the event log rendered into token-budgeted
-    * training-text records — sessionize at the ns25 8-hour gap, one
-    * `event_type=centivalue` turn line per event in (ts, event_id)
-    * order, prefix-truncate each conversation at 12 tokens cumulative
-    * (`length DIV 4 + 1` costing), join survivors with `\n`. ONE
-    * user_id exchange serves session window, budget window, and the
-    * assembly groupBy; per-sample state is budget-bounded by
-    * construction. The oracle replays the whole chain with
-    * `string_agg(... ORDER BY ts, event_id)` — the assembled STRING is
-    * inside the hash gate, not just the counts. */
-  private def ns102(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Assembly.assembleSamples(
-        graft.ops.Events.tsMicros(Tables.load(s, dir, "events")),
-        gap = 28800L * 1000000L, tokenBudget = 12L)
-
-  /** NS103 — majority-vote label resolution ([[graft.ops.Annotation
-    * .resolveLabels]]): five deterministic synthetic annotators per
-    * document (md5-derived — annotator k flips the true `lang` label to
-    * a synthetic `altN` 20% of the time, the noisy-rater model of
-    * preference-data pipelines), resolved to one gold label per doc
-    * with the explicit lexicographic tie policy. Both the vote
-    * synthesis and the resolution replay in the oracle, so the
-    * tie-break itself is hash-gated. */
-  private def ns103(s: SparkSession, dir: String): DataFrame = {
-    val votes = docs(s, dir)
-      .select(col("doc_id"), col("lang"))
-      .withColumn("k", explode(sequence(lit(1), lit(5))))
-      .withColumn("h", expr(
-        "CAST(conv(substring(md5(CAST(concat('vote:', CAST(doc_id AS STRING)" +
-          ", ':', CAST(k AS STRING)) AS BINARY)), 1, 15), 16, 10) AS BIGINT)"))
-      .withColumn("vote_label", expr(
-        "CASE WHEN h % 10 < 2 THEN concat('alt', CAST(h DIV 10 % 3 AS STRING))" +
-          " ELSE lang END"))
-    graft.ops.Annotation.resolveLabels(votes, "doc_id", "vote_label")
-  }
-
-  /** NS104 — leakage-safe fold assignment ([[graft.ops.Sampling
-    * .leakSafeFolds]]): content-keyed 10-fold split where every exact
-    * duplicate of a document lands in the same fold — the
-    * train/eval-contamination guard a row-hash split cannot give a
-    * corpus that still contains duplicates. The testdata corpus is
-    * all-distinct, so every seventh document is re-keyed and unioned
-    * back (the duplicate-amplification move of the dedup family) —
-    * those twins MUST land in the twin's fold, and `group_size`
-    * carries the invariant into the hash gate row-by-row.
-    * Digest-before-exchange: text never shuffles. */
-  private def ns104(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"), col("text"))
-    // STRUCTURAL shift (max+1), not a fixed constant: a fixed offset
-    // collides with real ids once a scale-synthesized corpus outgrows
-    // it — the ns56/ns86 key-uniqueness rule
-    val shift = d.agg(max(col("doc_id"))).head.getLong(0) + 1L
-    val twins = d.where(col("doc_id") % 7 === 0)
-      .withColumn("doc_id", col("doc_id") + lit(shift))
-    graft.ops.Sampling.leakSafeFolds(d.unionByName(twins), "text", folds = 10)
-  }
-
-  /** NS105 — preference-pair extraction ([[graft.ops.Preference
-    * .extractPairs]]): four deterministic scored candidates per document
-    * (md5-derived milli-scores — the best-of-N judge-model shape) turned
-    * into every (chosen, rejected) pair separated by ≥ 100 milli-points,
-    * the Bradley–Terry/DPO training-pair assembly. Per-item join volume
-    * is 4², generator-bounded, so output is linear in items; the pair
-    * algebra (strict margin, no tie pairs, no self-pairs) replays in the
-    * oracle's self-join. */
-  private def ns105(s: SparkSession, dir: String): DataFrame = {
-    val cands = docs(s, dir).select(col("doc_id"))
-      .withColumn("resp", explode(sequence(lit(0), lit(3))))
-      .withColumn("resp", col("resp").cast("long"))
-      .withColumn("score", expr(
-        "CAST(conv(substring(md5(CAST(concat('score:', CAST(doc_id AS STRING)" +
-          ", ':', CAST(resp AS STRING)) AS BINARY)), 1, 15), 16, 10) AS BIGINT)" +
-          " % 1000"))
-    graft.ops.Preference.extractPairs(
-        cands, "doc_id", "resp", "score", minMargin = 100L)
-  }
-
-  /** NS106 — contrastive negative sampling ([[graft.ops.Sampling
-    * .sampleNegatives]]): four hash-deterministic uniform negatives per
-    * anchor document, resolved through the ns93 distributed global rank
-    * (range exchange + broadcast offsets, no single-partition window);
-    * self-collisions drop (observable via slot gaps), re-draw chains
-    * being unreplayable. The oracle replays the draw with row_number +
-    * the same md5 target arithmetic — the negative SET is hash-gated,
-    * which is exactly what `rand()`-based samplers cannot offer. */
-  private def ns106(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Sampling.sampleNegatives(
-        docs(s, dir).select(col("doc_id")), "doc_id", k = 4, seed = 42L)
-
-  /** Build-once version-partitioned parquet scratch for the
-    * schema-evolution legs (the ns94 fingerprint-keyed contract):
-    * generation v0 writes (doc_id, lang, n_chars); generation v1
-    * RETIRED `lang` and ADDED `quality` — evolution in both
-    * directions, so each generation's rows must null-fill the other's
-    * column under the merged read. */
-  private def evolvedScratch(s: SparkSession, dir: String): String = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
-    val root = scratchIndexDir("graft_evolved", dir, fp)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ok = Seq("version=0", "version=1").forall(v =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$root/$v", "_SUCCESS")))
-    if (!ok) {
-      val d = docs(s, dir)
-      d.where(col("doc_id") % 2 === 0)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .write.mode("overwrite").parquet(s"$root/version=0")
-      d.where(col("doc_id") % 2 === 1)
-        .select(col("doc_id"), col("n_chars"),
-          (col("n_chars") % 5).as("quality"))
-        .write.mode("overwrite").parquet(s"$root/version=1")
-    }
-    root
-  }
-
-  /** NS107 — schema-evolution-tolerant read ([[graft.sources.Evolved
-    * .readMerged]]): two writer generations with columns retired AND
-    * added, read as one unified frame via `mergeSchema` over the
-    * version-partitioned root — both null-fill directions (v1 rows'
-    * NULL `lang`, v0 rows' NULL `quality`) are inside the hash gate;
-    * the oracle rebuilds the union from the base table. The reference
-    * reads live JDBC tables where the catalog has exactly one schema —
-    * this is the FORMAT-tier capability a long-lived parquet store
-    * needs instead. */
-  private def ns107(s: SparkSession, dir: String): DataFrame =
-    graft.sources.Evolved.readMerged(s, evolvedScratch(s, dir))
-      .select(col("doc_id"), col("version").cast("long").as("version"),
-        col("lang"), col("quality"), col("n_chars"))
-
-  /** NS108 — schema drift report ([[graft.sources.Evolved
-    * .driftReport]]): per generation, which columns of the union it
-    * actually populates — the gate an ingestion pipeline reads before
-    * widening a training-set schema. One scan + one version-keyed
-    * aggregation over generation-cardinality output. */
-  private def ns108(s: SparkSession, dir: String): DataFrame =
-    graft.sources.Evolved.driftReport(
-        graft.sources.Evolved.readMerged(s, evolvedScratch(s, dir))
-          .withColumn("version", col("version").cast("long")),
-        "version", Seq("lang", "quality"))
-
-  /** NS109 — group-wise winsorization ([[graft.ops.Quality
-    * .winsorize]]): per-language p95 capping of document length by
-    * EXACT INTEGER RANK — the value at position ⌈19n/20⌉ of the
-    * group's total order, never an interpolated float (the Sketches
-    * exactness doctrine applied to outlier hygiene; interpolation is
-    * engine-dependent, rank selection is not). One lang-keyed exchange
-    * serves both windows; the group-cardinality cutoff frame
-    * broadcasts back. */
-  private def ns109(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Quality.winsorize(
-        docs(s, dir), "lang", "n_chars", "doc_id", p = 19, q = 20)
-
-  /** NS110 — thread linearization ([[graft.ops.Graphs
-    * .linearizePaths]]): a synthetic 3-ary reply forest over the
-    * documents table (`parent = (doc_id − 1) DIV 3`, doc 0 the root)
-    * flattened to per-node (root_id, depth, root-to-node path) by
-    * pointer DOUBLING — ⌈log₂ depth⌉ + 1 equi-join rounds where the
-    * oracle's WITH RECURSIVE walks one level per iteration; the
-    * distributed-vs-SQL algorithm contrast is the point, the hash gate
-    * proves they agree including the assembled path STRINGS. */
-  private def ns110(s: SparkSession, dir: String): DataFrame = {
-    val nodes = docs(s, dir).select(col("doc_id"),
-      when(col("doc_id") === 0, lit(null).cast("long"))
-        .otherwise(expr("(doc_id - 1) DIV 3")).as("parent"))
-    graft.ops.Graphs.linearizePaths(nodes, "doc_id", "parent")
-  }
-
-  /** NS111 — late-interaction maxsim retrieval ([[graft.ops.Similarity
-    * .maxSimTopK]]): each 64-dim vector read as 8 contiguous 8-dim
-    * "token" sub-vectors; score = Σ_qb max_db ⟨qb, db⟩ — the ColBERT
-    * scoring geometry beside whole-vector cosine (ns6) and quantized
-    * ADC (ns30). One codegen'd higher-order expression per pair keeps
-    * float accumulation order fixed by the expression tree, so the
-    * score hash-replays; ns6's broadcast-query bounded-NLJ baseline
-    * contract. */
-  private def ns111(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Similarity.maxSimTopK(embs(s, dir), simQueries(s, dir), k = 10)
-
-  /** NS112 — per-user temporal holdout ([[graft.ops.Sampling
-    * .temporalHoldout]]): each user's LAST ⌈n/5⌉ events in (ts,
-    * event_id) order become test, the prefix stays train — the
-    * leakage-correct eval protocol for sequence models (predict the
-    * future from the past; a row-hash split trains on events AFTER its
-    * own test set). Exact integer rank cut, one user-keyed exchange
-    * for both windows. */
-  private def ns112(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Sampling.temporalHoldout(
-        graft.ops.Events.tsMicros(Tables.load(s, dir, "events"))
-          .select(col("event_id"), col("user_id"), col("ts")),
-        "user_id", "ts", "event_id", p = 1, q = 5)
-
-  /** NS113 — FK orphan audit ([[graft.ops.Integrity.fkOrphans]]): the
-    * read-side complement of the subsetter's FK discipline — for each
-    * declared edge, how many child rows an FK-closed subset would
-    * silently drop. Three TPC-H edges (consistent by construction)
-    * plus the cross-domain events.user_id → customer.c_custkey edge
-    * and a PARTIAL-REPLICA edge (events against only nation-0's
-    * customers — the regional-copy audit scenario), whose orphan count
-    * is genuinely non-zero inside the hash gate.
-    * Parent sides reduce to distinct key projections before the anti
-    * joins; exact per-mille integer arithmetic. */
-  private def ns113(s: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Integrity.FkEdge
-    val li = Tables.load(s, dir, "lineitem")
-    val ord = Tables.load(s, dir, "orders")
-    val cust = Tables.load(s, dir, "customer")
-    val nat = Tables.load(s, dir, "nation")
-    val ev = Tables.load(s, dir, "events")
-    graft.ops.Integrity.fkOrphans(s, Seq(
-        FkEdge("customer->nation", cust, "c_nationkey", nat, "n_nationkey"),
-        FkEdge("events->customer", ev, "user_id", cust, "c_custkey"),
-        FkEdge("events->customer_n0", ev, "user_id",
-          cust.where(col("c_nationkey") === 0), "c_custkey"),
-        FkEdge("lineitem->orders", li, "l_orderkey", ord, "o_orderkey"),
-        FkEdge("orders->customer", ord, "o_custkey", cust, "c_custkey")))
-  }
-
-  /** NS114 — length-bucketed batch formation ([[graft.ops.Sampling
-    * .lengthBuckets]]): documents sorted by the ns26 token count and
-    * cut into 32-doc batches of near-equal length, each padding to its
-    * own max — the padding-waste optimization for attention training
-    * (packSequences concatenates; bucketing keeps documents whole).
-    * Global order via the ns93 distributed rank; per-row `waste` puts
-    * the tokens-burned metric inside the hash gate. */
-  private def ns114(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Sampling.lengthBuckets(
-        docs(s, dir).select(col("doc_id"),
-          expr("CAST(ceil(CAST(length(text) AS DOUBLE) / 4.0) AS BIGINT)")
-            .as("n_tokens")),
-        "n_tokens", "doc_id", batchSize = 32)
-
-  /** NS115 — column completeness profile ([[graft.ops.Integrity
-    * .profile]]): the ingestion-gate statistics per column (rows,
-    * NULLs, exact distinct, lexicographic string min/max) over the
-    * customer table — string-form profiling deliberately, so the
-    * artifact is schema-stable and engine-replayable where float
-    * formatting is not. One stacked aggregation pass. */
-  private def ns115(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Integrity.profile(
-        Tables.load(s, dir, "customer"),
-        Seq("c_custkey", "c_name", "c_nationkey", "c_mktsegment"))
-
-  /** NS116 — bigram LM count table ([[graft.ops.TextAnalysis
-    * .bigramCounts]]): the Kneser–Ney count artifact — pair frequency,
-    * context total (P(w2|w1) denominator), and CONTINUATION count
-    * (distinct left contexts of w2, the KN replacement for raw
-    * unigram frequency) — head-truncated at n_pair ≥ 3. One pair-keyed
-    * aggregation; the ctx/cont re-aggregations run over the
-    * bigram-vocabulary pair table, not the corpus. */
-  private def ns116(s: SparkSession, dir: String): DataFrame =
-    graft.ops.TextAnalysis.bigramCounts(docs(s, dir), minCount = 3L)
-
-  /** NS117 — inter-annotator agreement report ([[graft.ops.Annotation
-    * .agreementReport]]): the QC complement of ns103 over the same
-    * synthetic five-rater votes — per item, exact pairwise agreement
-    * (Σ C(votes_l, 2) over C(n, 2)) in integer per-mille; a float
-    * kappa would not hash-replay. Low-agreement items are what a
-    * pipeline routes to re-annotation instead of training. */
-  private def ns117(s: SparkSession, dir: String): DataFrame = {
-    val votes = docs(s, dir)
-      .select(col("doc_id"), col("lang"))
-      .withColumn("k", explode(sequence(lit(1), lit(5))))
-      .withColumn("h", expr(
-        "CAST(conv(substring(md5(CAST(concat('vote:', CAST(doc_id AS STRING)" +
-          ", ':', CAST(k AS STRING)) AS BINARY)), 1, 15), 16, 10) AS BIGINT)"))
-      .withColumn("vote_label", expr(
-        "CASE WHEN h % 10 < 2 THEN concat('alt', CAST(h DIV 10 % 3 AS STRING))" +
-          " ELSE lang END"))
-    graft.ops.Annotation.agreementReport(votes, "doc_id", "vote_label")
-  }
-
-  /** NS118 — per-annotator reliability report ([[graft.ops.Annotation
-    * .annotatorReport]]): the RATER-management complement of
-    * ns103/ns117 — each synthetic annotator scored against the
-    * corpus's own majority-resolved gold. The synthesis gives annotator
-    * k a flip rate of (k−1)·10% (rater 1 never flips, rater 5 flips
-    * 40%), so the report must recover the monotone reliability
-    * gradient — exact per-mille accuracy, no floats. */
-  private def ns118(s: SparkSession, dir: String): DataFrame = {
-    val votes = docs(s, dir)
-      .select(col("doc_id"), col("lang"))
-      .withColumn("k", explode(sequence(lit(1), lit(5))))
-      .withColumn("h", expr(
-        "CAST(conv(substring(md5(CAST(concat('vote:', CAST(doc_id AS STRING)" +
-          ", ':', CAST(k AS STRING)) AS BINARY)), 1, 15), 16, 10) AS BIGINT)"))
-      .withColumn("vote_label", expr(
-        "CASE WHEN h % 10 < k - 1 THEN concat('alt', CAST(h DIV 10 % 3 AS " +
-          "STRING)) ELSE lang END"))
-      .withColumn("k", col("k").cast("long"))
-    graft.ops.Annotation.annotatorReport(votes, "doc_id", "k", "vote_label")
-  }
-
-  /** NS119 — rolling event-time features ([[graft.ops.Events
-    * .rollingFeatures]]): per event, the user's trailing-7-day activity
-    * (event count + exact centi-value sum over the event-time RANGE
-    * frame) and the gap to the previous event — point-in-time-correct
-    * recency/intensity features for behavioral training, with no
-    * future leakage by frame construction. One user-keyed exchange
-    * serves the range window and the lag window. */
-  private def ns119(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Events.rollingFeatures(
-        Tables.load(s, dir, "events"), windowMicros = 7L * 86400L * 1000000L)
-
-  /** NS120 — C4-style line-policy filter ([[graft.ops.Curation
-    * .c4LineFilter]]): the public C4 cleaning recipe over synthesized
-    * page structure — a nav line (no terminal punctuation), a
-    * "Read more." line every 3rd doc (too short), an enable-javascript
-    * line every 5th (punctuated but boilerplate), 8-word body sentences
-    * ending '.', a bare trailing fragment, a copyright footer, plus
-    * page-gate trips: "lorem ipsum" every 97th doc and a '{' code leak
-    * every 89th. Every rule has a live path; the whole filter is one
-    * zero-shuffle codegen projection. */
-  private def ns120(s: SparkSession, dir: String): DataFrame = {
-    val synth = concat(
-      lit("Home | About | Contact\n"),
-      when(col("doc_id") % 3 === 0, lit("Read more.\n")).otherwise(lit("")),
-      when(col("doc_id") % 5 === 0,
-        lit("please enable javascript to view this site.\n"))
-        .otherwise(lit("")),
-      regexp_replace(col("text"), "((?:\\S+ ){7}\\S+) ", "$1.\n"),
-      lit("\ncopyright "), col("source"),
-      when(col("doc_id") % 97 === 0,
-        lit("\nthis site is under construction lorem ipsum dolor sit amet."))
-        .otherwise(lit("")),
-      when(col("doc_id") % 89 === 0,
-        lit("\nfunction() { cookieConsent(); }")).otherwise(lit("")))
-    graft.ops.Curation.c4LineFilter(
-        docs(s, dir).select(col("doc_id"), synth.as("text")))
-  }
-
-  /** NS121 — domain-blocklist filter ([[graft.ops.Urls
-    * .blocklistFilter]]): seven synthetic host families against a
-    * six-entry blocklist — subdomain suffix matches (`tracker
-    * .example.com` catches `ads.`/`cdn.` subdomains), a longest-match
-    * attribution case (a host matching both `example.com` and
-    * `tracker.example.com` reports the latter), an exact-host entry, a
-    * multi-label public-suffix shape (`example.co.uk`), hostOf
-    * normalization (WWW/:443) feeding the match, and a never-matching
-    * entry. Suffix explode is label-bounded; the blocklist side
-    * broadcasts. */
-  private def ns121(s: SparkSession, dir: String): DataFrame = {
-    val host = expr(
-      "CASE doc_id % 7 WHEN 0 THEN 'ads.tracker.example.com' " +
-        "WHEN 1 THEN 'cdn.tracker.example.com' " +
-        "WHEN 2 THEN 'blog.example.com' " +
-        "WHEN 3 THEN 'example.org' " +
-        "WHEN 4 THEN 'WWW.Mirror.Example.net:443' " +
-        "WHEN 5 THEN 'spam.example.co.uk' " +
-        "ELSE 'docs.example.io' END")
-    val pages = docs(s, dir).select(col("doc_id"),
-      concat(lit("https://"), host, lit("/p/"), col("doc_id")).as("url"))
-    val blocklist = {
-      import s.implicits._
-      Seq("tracker.example.com", "example.com", "mirror.example.net",
-        "example.co.uk", "docs.example.io", "unused.example.gov")
-        .toDF("domain")
-    }
-    graft.ops.Urls.blocklistFilter(pages, blocklist)
-  }
-
-  /** NS122 — per-user activity pivot ([[graft.ops.Events.typePivot]]):
-    * the wide user × event-type count matrix through Spark's relational
-    * PIVOT surface with a PINNED type list (click/view/purchase/signup
-    * declared; the corpus's 'error' type must land in `n_other`, not
-    * silently widen the schema). Absent cells release as 0; `n_total`
-    * closes the row-conservation check. */
-  private def ns122(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Events.typePivot(Tables.load(s, dir, "events"),
-        Seq("click", "view", "purchase", "signup"))
-
-  /** NS123 — kNN margin scoring ([[graft.ops.Similarity
-    * .marginScores]]): the Artetxe–Schwenk distance-margin criterion
-    * over the ns6 query set — best-neighbor cosine minus the k=4
-    * neighborhood mean, released as the n-scaled exact integer
-    * `margin_n_micro` (no division anywhere, so truncate-vs-floor
-    * engine divergence cannot occur). The hub-vector false-positive
-    * filter of bitext mining and semantic dedup. */
-  private def ns123(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Similarity.marginScores(embs(s, dir), simQueries(s, dir), k = 4)
-
-  /** NS124 — join-key cardinality audit ([[graft.ops.Integrity
-    * .joinProfile]]): the pre-flight join-explosion report over four
-    * declared edges — the two TPC-H FK joins (1:N sanity), the
-    * orphan-bearing events→customer edge, and the events SELF-join on
-    * user_id whose `est_pairs = Σ n_u²` is the classic accidental
-    * many-to-many a pipeline should price BEFORE running. The audited
-    * joins never execute; cost is per-side key aggregation. */
-  private def ns124(s: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Integrity.JoinEdge
-    val orders = Tables.load(s, dir, "orders")
-    val cust = Tables.load(s, dir, "customer")
-    val li = Tables.load(s, dir, "lineitem")
-    val ev = Tables.load(s, dir, "events")
-    graft.ops.Integrity.joinProfile(s, Seq(
-        JoinEdge("events_self_user", ev, "user_id", ev, "user_id"),
-        JoinEdge("events->customer", ev, "user_id", cust, "c_custkey"),
-        JoinEdge("lineitem->orders", li, "l_orderkey", orders, "o_orderkey"),
-        JoinEdge("orders->customer", orders, "o_custkey", cust, "c_custkey")))
-  }
-
-  /** NS126 — ANN recall report ([[graft.ops.Similarity.recallReport]]):
-    * per query, |LSH top-10 ∩ exact top-10| and recall in exact
-    * per-mille — the production index-quality alarm, promoted from an
-    * engine-side spec assertion to an oracle-checked operator. Both
-    * sides of the comparison (the ns7 LSH pipeline AND the ns6 exact
-    * baseline) replay in the oracle, so the metric is end-to-end
-    * hash-gated. */
-  private def ns126(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Similarity.recallReport(
-        graft.ops.Similarity.lshTopK(embs(s, dir), simQueries(s, dir), k = 10),
-        graft.ops.Similarity.bruteForceTopK(embs(s, dir), simQueries(s, dir),
-          k = 10))
-
-  /** NS127 — weight-proportional systematic sampling ([[graft.ops
-    * .Sampling.ppsSample]]): an expected-50-docs-per-language sample
-    * drawn ∝ token count — the importance sampler that makes the
-    * SAMPLE's token mass mirror each stratum's, where the uniform
-    * samplers (ns23/ns48) would over-represent short documents.
-    * Exactly k cuts per stratum (Σ n_slots = 50), multiplicity
-    * released honestly; pure integer cut arithmetic on the
-    * deterministic hash line. */
-  private def ns127(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Sampling.ppsSample(
-        docs(s, dir).select(col("doc_id"), col("lang"),
-          expr("CAST(length(text) DIV 4 + 1 AS BIGINT)").as("n_tokens")),
-        "lang", "n_tokens", "doc_id", k = 50)
-
-  /** NS125 — cross-fold contamination audit ([[graft.ops.Dedup
-    * .crossFoldLeakage]]): the ns104 twin-amplified corpus folded
-    * 10-way, then every minhash near-dup pair classified by whether it
-    * straddles folds. `n_exact_cross` = 0 is RELEASED (the fold
-    * guarantee proven corpus-wide inside the hash gate); near-dup
-    * leakage across folds is the honest contamination number an
-    * evaluation protocol must report. */
-  private def ns125(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"), col("text"))
-    val shift = d.agg(max(col("doc_id"))).head.getLong(0) + 1L
-    val twins = d.where(col("doc_id") % 7 === 0)
-      .withColumn("doc_id", col("doc_id") + lit(shift))
-    graft.ops.Dedup.crossFoldLeakage(d.unionByName(twins), folds = 10)
-  }
-
-  /** NS128 — duplication-multiplicity token-mass histogram
-    * ([[graft.ops.Dedup.dupMassHistogram]]): how much of the corpus'
-    * token mass sits in text duplicated exactly k times — the
-    * "effective dataset size" accounting behind every dedup decision
-    * (duplicated text is implicit upweighting). Per multiplicity:
-    * groups, docs, total/unique/excess token mass, and the k-row's
-    * share of all corpus tokens in exact per-mille; Σ excess over
-    * k ≥ 2 is the budget ns1's exact dedup reclaims. The testdata
-    * corpus is exact-dup-free (the raw histogram is the single k = 1
-    * row), so the fixture amplifies with deterministic twins
-    * (doc_id % 7) and triples (% 21) — the k = 1/2/3 algebra is
-    * exercised inside the hash gate, ns125-style. */
-  private def ns128(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    graft.ops.Dedup.dupMassHistogram(
-      d.select(col("text"))
-        .unionByName(d.where(col("doc_id") % 7 === 0).select(col("text")))
-        .unionByName(d.where(col("doc_id") % 21 === 0).select(col("text"))))
-  }
-
-  /** NS129 — packing-efficiency audit ([[graft.ops.Sampling
-    * .packingAudit]]): the ns26 packing re-priced for the trainer —
-    * per stratum, sequence count, boundary-straddling docs, the token
-    * mass needing cross-sequence attention handling (exact
-    * per-mille), and the unfilled tail. Groups on the packer's OWN
-    * partition key, so the audit adds zero exchange. */
-  private def ns129(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Sampling.packingAudit(
-        graft.ops.Sampling.packSequences(docs(s, dir)), tokenBudget = 2048)
-
-  /** NS130 — chunk-level language consistency ([[graft.ops
-    * .TextAnalysis.chunkLangConsistency]]): every 32-token chunk
-    * re-scored by the ns8 marker heuristic against the doc's language
-    * label — the mixed-language / mislabeled-document detector that a
-    * doc-level langid structurally cannot see (one dominant language
-    * outvotes the embedded minority span at doc granularity). */
-  private def ns130(s: SparkSession, dir: String): DataFrame =
-    graft.ops.TextAnalysis.chunkLangConsistency(docs(s, dir))
-
-  /** NS131 — vocabulary-growth (Heaps-law) curve ([[graft.ops
-    * .TextAnalysis.vocabGrowth]]): distinct token types vs corpus
-    * size over ten cumulative hash-random tenths — the diversity
-    * saturation audit (a curve flat by the third decile = repetitive
-    * boilerplate; more data, no new vocabulary). */
-  private def ns131(s: SparkSession, dir: String): DataFrame =
-    graft.ops.TextAnalysis.vocabGrowth(docs(s, dir))
-
-  /** NS132 — tokenizer fertility report ([[graft.ops.Bpe
-    * .fertilityReport]]): per language, BPE tokens per whitespace word
-    * and chars per BPE token in exact per-mille, over the ns51 merge
-    * table — the vocabulary-allocation evidence table (a language at
-    * 2–3× English fertility pays that multiple in effective context
-    * and compute). */
-  private def ns132(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Bpe.fertilityReport(docs(s, dir), graft.ops.Bpe.default)
-
-  /** The ns133 declared mixture: target shares per-mille of the token
-    * budget — ONE definition shared by the query and (literally, via
-    * [[ns133Shares]] interpolation) the oracle CASE chain. en is
-    * upweighted past its availability (multi-epoch), zh is absent
-    * (share 0 — excluded-but-reported). */
-  private val ns133Shares: Seq[(String, Int)] =
-    Seq("en" -> 500, "de" -> 250, "fr" -> 150, "es" -> 100)
-  private val ns133Budget = 50000L
-
-  /** NS133 — data-mixture epoch plan ([[graft.ops.Sampling
-    * .mixturePlan]]): the repeat-factor table ahead of ns45's mixing —
-    * per language: available vs target token mass, full epochs,
-    * last-epoch partial, repeat factor in exact per-mille. */
-  private def ns133(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Sampling.mixturePlan(docs(s, dir), ns133Shares, ns133Budget)
-
-  /** NS135 — character-entropy quality gate ([[graft.ops.TextAnalysis
-    * .charEntropy]]): order-0 compression-ratio proxy in exact
-    * micro-nats, the classic low-entropy spam filter. The corpus sits
-    * at 2.55–2.93 nats, so the fixture injects ONE degenerate padded
-    * doc (7-character alphabet, ≈1.9 nats) — both verdict branches are
-    * inside the hash gate, the ns60 injected-input precedent. */
-  private def ns135(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"), col("text"))
-    val shift = d.agg(max(col("doc_id"))).head.getLong(0) + 1L
-    val spam = d.sparkSession.range(1)
-      .select(lit(shift).as("doc_id"),
-        concat_ws("", array_repeat(lit("buy now "), 64)).as("text"))
-    graft.ops.TextAnalysis.charEntropy(d.unionByName(spam))
-  }
-
-  /** NS136 — incremental duplication-mass maintenance ([[graft.ops
-    * .Versioning.maintainDupGroups]] → [[graft.ops.Dedup
-    * .dupMassHistogramFromGroups]]): the ns128 histogram kept current
-    * across the ns56 snapshot tick by re-digesting ONLY the diff
-    * fringe — ns86's IVM algebra applied to the exact-dup accounting.
-    * The oracle recomputes the NEW snapshot's histogram from scratch,
-    * so hash equality proves the maintenance exact. The tick exercises
-    * every fringe class AND moves multiplicities: docs 10–19 removed,
-    * doc_id % 37 edited (mass moves between digests), docs < 10 kept
-    * AND re-added shifted (k = 1 → 2 twin groups — except doc 0, whose
-    * original takes the % 37 edit while its twin keeps the old text,
-    * so the twin lands in a fresh k = 1 group: the add-into-changed
-    * corner). */
-  private def ns136(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"), col("text"))
-    val shift = d.agg(max(col("doc_id"))).head.getLong(0) + 1L
-    val edited = d.where(col("doc_id") < 10 || col("doc_id") >= 20)
-      .withColumn("text",
-        when(col("doc_id") % 37 === 0, concat(col("text"), lit(" v2")))
-          .otherwise(col("text")))
-    val twins = d.where(col("doc_id") < 10)
-      .select((col("doc_id") + shift).as("doc_id"), col("text"))
-    graft.ops.Dedup.dupMassHistogramFromGroups(
-      graft.ops.Versioning.maintainDupGroups(
-        d, edited.unionByName(twins), graft.ops.Dedup.dupGroupsOf(d)))
-  }
-
-  /** NS137 — normalized near-exact dedup ([[graft.ops.Dedup
-    * .normalizedExact]]): the case/punctuation-variant collapse
-    * byte-exact dedup misses. The corpus has no such variants, so the
-    * fixture injects mangled twins for doc_id % 5 = 0 (uppercased, a
-    * "  !!" tail — normalization-invariant edits), putting the
-    * variant-collapse inside the hash gate; every other doc releases
-    * n_variants = 1. */
-  private def ns137(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"), col("text"))
-    val shift = d.agg(max(col("doc_id"))).head.getLong(0) + 1L
-    val mangled = d.where(col("doc_id") % 5 === 0)
-      .select((col("doc_id") + shift).as("doc_id"),
-        concat(upper(col("text")), lit("  !!")).as("text"))
-    graft.ops.Dedup.normalizedExact(d.unionByName(mangled))
-  }
-
-  /** NS138 — embedding integrity audit ([[graft.ops.Integrity
-    * .embeddingAudit]]): the pre-index ANN data-quality gate. The
-    * testdata vectors are clean (the raw audit is one 'ok' row), so
-    * the fixture injects the four failure classes — NULL column,
-    * truncated dim, NaN components, all-zero — putting every verdict
-    * branch and the first-match priority inside the hash gate. */
-  private def ns138(s: SparkSession, dir: String): DataFrame = {
-    val e = embs(s, dir).select(col("vec_id"), col("embedding"))
-    val shift = e.agg(max(col("vec_id"))).head.getLong(0) + 1L
-    val bad = e.where(col("vec_id") < 4).select(
-      (col("vec_id") + shift).as("vec_id"),
-      when(col("vec_id") === 0, lit(null).cast("array<float>"))
-        .when(col("vec_id") === 1, slice(col("embedding"), 1, 10))
-        .when(col("vec_id") === 2,
-          transform(col("embedding"), _ => lit(Float.NaN)))
-        .otherwise(transform(col("embedding"), _ => lit(0.0f)))
-        .as("embedding"))
-    graft.ops.Integrity.embeddingAudit(e.unionByName(bad))
-  }
-
-  /** NS139 — split-mode packing ([[graft.ops.Sampling
-    * .packSequencesSplit]]): the ns26 packing with straddlers SPLIT at
-    * the 2048-token boundary — one row per (doc, sequence) piece, the
-    * GPT-style exactly-full-sequence layout; the resolution of the
-    * straddle mass ns129 prices. */
-  private def ns139(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Sampling.packSequencesSplit(docs(s, dir))
-
-  /** NS140 — language-ID confusion matrix ([[graft.ops.TextAnalysis
-    * .langConfusion]]): ns8's predictions cross-tabulated against the
-    * label — which language pairs confuse, per-language recall on the
-    * diagonal, row shares in exact per-mille. */
-  private def ns140(s: SparkSession, dir: String): DataFrame =
-    graft.ops.TextAnalysis.langConfusion(docs(s, dir))
-
-  /** NS141 — video scene-cut detection ([[graft.ops.Perceptual
-    * .sceneCuts]]): consecutive-keyframe dHash Hamming distances over
-    * the ns83 media family — where a pipeline should sample densely
-    * (around cuts) vs sparsely (static scenes). Same decode, sampler,
-    * and hash convention as the keyframe dedup. */
-  private def ns141(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Perceptual.sceneCuts(
-      ns81Family(s, dir).select(col("doc_id"),
-        encode(col("t"), "UTF-8").as("content"),
-        struct(length(encode(col("t"), "UTF-8")).cast("long").as("n_bytes"))
-          .as("meta")))
-
-  /** NS142 — audio segment report ([[graft.ops.Perceptual
-    * .audioSegments]]): per WAV clip of the ns90 family, the dominant
-    * loudness band per time slice rolled to band-shift counts — the
-    * cheap audio segmentation signal (static tone vs structured
-    * content), the audio sibling of ns141. Same decoder, same family,
-    * so the 16→8-bit re-encode pairs must segment identically. */
-  private def ns142(s: SparkSession, dir: String): DataFrame = {
-    val base = docs(s, dir).select(col("doc_id"), col("text"))
-    val fam = base.as("d")
-      .join(base.as("b"),
-        col("b.doc_id") === (col("d.doc_id") - col("d.doc_id") % 3))
-      .select(col("d.doc_id").as("doc_id"),
-        when(col("d.doc_id") % 3 === 2, reverse(col("b.text")))
-          .otherwise(col("b.text")).as("t"),
-        when(col("d.doc_id") % 3 === 1, lit(8)).otherwise(lit(16))
-          .as("bits"))
-    val synth = udf((t: String, bits: Int) => graft.ops.WavSynth.wavOf(t, bits))
-    graft.ops.Perceptual.audioSegments(
-      fam.select(col("doc_id"), synth(col("t"), col("bits")).as("content")))
-  }
-
-  /** NS145 — REAL AVI container keyframes ([[graft.ops.AviSynth]] →
-    * [[graft.ops.Avi.keyframes]]): the round-11 upgrade of the ns83
-    * byte-window "frames" to a CONTAINER-AWARE parse (VERDICT r10 #5,
-    * the ns90 pattern applied to video). Each doc's text is muxed into a
-    * spec-true RIFF/AVI with MJPEG-framed 48-byte windows and an idx1
-    * index flagging every 3rd frame AVIIF_KEYFRAME; the engine parses
-    * the real index (movi-relative offsets, even-byte chunk padding) and
-    * reports per doc the frame/keyframe counts, the keyframe offset and
-    * byte totals, and the keyframe payload byte-sum. The oracle
-    * recomputes ALL of it from first principles — window arithmetic +
-    * prefix-summed chunk offsets + hex-expanded payload bytes, no RIFF
-    * container anywhere — so a green hash certifies the muxer, the idx1
-    * parse, and the payload slicing end-to-end. Scale shape: one
-    * mapPartitions decode pass (binary codec — the legit case), tiny
-    * per-frame tuples into one doc_id rollup; corrupt blobs skip as Nil
-    * (AviSpec), never kill a task. */
-  private def ns145(s: SparkSession, dir: String): DataFrame = {
-    val synth = udf((t: String) => graft.ops.AviSynth.aviOf(t))
-    val media = docs(s, dir).select(col("doc_id"),
-      synth(col("text")).as("content"))
-    graft.ops.Avi.keyframes(media, keyframesOnly = false)
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_frames"),
-        sum(when(col("is_key"), 1L).otherwise(0L)).as("n_keyframes"),
-        sum(when(col("is_key"), col("offset"))).as("key_offset_sum"),
-        sum(when(col("is_key"), col("size"))).as("key_bytes"),
-        sum(when(col("is_key"), col("payload_sum"))).as("key_payload_sum"))
-  }
-
-  /** NS146 — keyframe near-dup over REAL AVI containers
-    * ([[graft.ops.AviSynth]] → [[graft.ops.Avi.keyframes]] →
-    * [[graft.ops.Perceptual.dhash63]]): the deployment composition of
-    * ns145's container parse with the ns83 shared-keyframe detector —
-    * frames now come from the idx1 index of real muxed AVI files, not
-    * byte-window slicing, so the repeated-intro/shared-b-roll report is
-    * computed over exactly the bytes a video pipeline would extract. The
-    * ns81 five-variant families make copies share ALL keyframe hashes,
-    * 1-byte edits share all but the touched window, and the reversed
-    * control share none. Oracle: the AVI geometry rebuilt arithmetically
-    * (ns145) + the byte-stride grid dHash over 'ffd8'+window+'ffd9'
-    * payload hex (ns83's cell math) — container, parser, and hash all
-    * independently recomputed. Plan: decode mapPartitions → codegen
-    * phash63 projection → ONE phash-keyed rollup; no pair join. */
-  private def ns146(s: SparkSession, dir: String): DataFrame = {
-    val synth = udf((t: String) => graft.ops.AviSynth.aviOf(t))
-    val media = ns81Family(s, dir).select(col("doc_id"),
-      synth(col("t")).as("content"))
-    val keys = graft.ops.Avi.keyframes(media)
-    val fmedia = keys.select(
-      (col("doc_id") * 1000 +
-        when(col("frame_idx") < 1000, col("frame_idx"))
-          .otherwise(raise_error(lit("frame index overflows composite id"))))
-        .as("doc_id"),
-      col("payload").as("content"))
-    graft.ops.Perceptual.dhash63(fmedia)
-      .select(col("phash"), expr("doc_id div 1000").as("orig"))
-      .groupBy(col("phash"))
-      .agg(count(lit(1)).as("n_frames"),
-        count_distinct(col("orig")).as("n_docs"))
-      .where(col("n_frames") > 1)
-  }
-
-  /** NS147 — image near-dup over REAL BMP containers
-    * ([[graft.ops.BmpSynth]] → [[graft.ops.ImageGridDecoder]] →
-    * [[graft.ops.Perceptual.nearDupPairs]]): completes the real-codec
-    * trilogy (WAV r10, AVI r11, BMP here). Each ns81-family variant is
-    * written as a spec-true 24-bpp bottom-up BMP of grayscale pixels
-    * derived from its text bytes, decoded back through the REAL ImageIO
-    * path, box-averaged to the 9×8 luminance grid, dHashed, and
-    * banded-joined. The geometry makes every decoder division exact
-    * (18×16 px = 2×2-px cells; grayscale collapses BT.601 to the pixel
-    * value), so the oracle recomputes the ENTIRE pipeline — pixels,
-    * luminance grid, dHash, pairs — arithmetically from the text, with
-    * no image library: a green hash certifies the BMP writer, ImageIO's
-    * parse, and the grid math end-to-end. Long-text 1-byte edits perturb
-    * ≤1 pixel → ≤2 hash bits (caught); short texts wrap the byte map and
-    * spread the edit (missed) — honest near-dup semantics both engines
-    * compute identically. Scale shape = ns81/ns90: one mapPartitions
-    * decode, one banded shuffle, pigeonhole-exact at maxHamming 3 <
-    * bands 4. */
-  private def ns147(s: SparkSession, dir: String): DataFrame = {
-    val synth = udf((t: String) => graft.ops.BmpSynth.bmpOf(t))
-    val media = ns81Family(s, dir).select(col("doc_id"),
-      synth(col("t")).as("content"))
-    graft.ops.Perceptual.nearDupPairs(
-      graft.ops.Perceptual.dhash63(media, graft.ops.ImageGridDecoder),
-      maxHamming = 3, bands = 4)
-  }
-
-  /** NS151 — verify-by-content image near-dup (VERDICT r11 #3): ns147's
-    * candidate stage (real BMP → ImageIO decode → banded 63-bit dHash
-    * join) followed by [[graft.ops.Perceptual.nearDupPairsVerified]]'s
-    * verify stage — keep a candidate pair only when the two docs' actual
-    * 72-cell luminance grids agree (sum of absolute differences ≤ 128,
-    * the p99 of true within-family pairs at the 10× decade — keeps ~99%
-    * of genuine re-encodes/edits while the coincidental class sits at
-    * SAD p50 ≈ 400). The dHash keeps gradient SIGNS only,
-    * so at scale coincidental hash neighbors dominate the candidate set
-    * (3.4M pairs at the 100× decade vs 6k at 1×); the grid is content,
-    * and this stage collapses them while true re-encodes/small edits
-    * survive. The oracle replays the whole chain arithmetically
-    * (pixels → 2×2 box grid → dHash → pairs → integer SAD), sharing the
-    * ns147 CTEs. Scale shape: one decode pass emits hash AND grid;
-    * verification joins the collision-bounded pair list to the
-    * ~300-byte/doc grid table twice by doc id — blobs never move. */
-  private def ns151(s: SparkSession, dir: String): DataFrame = {
-    val synth = udf((t: String) => graft.ops.BmpSynth.bmpOf(t))
-    val media = ns81Family(s, dir).select(col("doc_id"),
-      synth(col("t")).as("content"))
-    graft.ops.Perceptual.nearDupPairsVerified(media,
-      graft.ops.ImageGridDecoder, maxHamming = 3, bands = 4, maxSad = 128L)
-  }
-
-  /** The shared ns148/ns149/ns150 WARC fixture mux: 10-doc groups → one
-    * spec-true file each, records ordered by doc_id inside the group
-    * (`sort_array` on the struct — `collect_list` alone is
-    * partition-order nondeterministic), null texts as empty payloads
-    * (the synthesizer contract across the media legs; `coalesce` keeps
-    * engine and oracle aligned should a null ever appear). ONE
-    * definition so the three queries and the ns148 oracle's size
-    * arithmetic cannot desync. */
-  private def warcFixture(recs: DataFrame): DataFrame = {
-    val mux = udf((ids: Seq[Long], texts: Seq[String]) =>
-      graft.ops.WarcSynth.warcOf(ids.zip(texts)))
-    recs
-      .groupBy((col("doc_id") - col("doc_id") % 10).as("warc_id"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("text"))))
-        .as("ds"))
-      .select(col("warc_id"),
-        mux(expr("transform(ds, x -> x.doc_id)"),
-          expr("transform(ds, x -> coalesce(x.text, ''))")).as("content"))
-  }
-
-  /** NS148 — WARC ingest ([[graft.ops.WarcSynth]] →
-    * [[graft.ops.Warc.records]]): real WARC/1.0 framing — the Common
-    * Crawl container, i.e. the actual on-disk format of the canonical
-    * web-scale training corpus. The fixture muxes each 10-doc group into
-    * one spec-true WARC file (one response record per doc, ordered by
-    * doc_id); the engine splits records by the REAL framing (header
-    * block to CRLFCRLF, Content-Length-driven payload slice, CRLFCRLF
-    * separator — scanning-free, so payloads containing "WARC/1.0" text
-    * cannot desync it) and emits the CDX-shaped facts: byte offset,
-    * type, target URI, declared length, payload byte-sum. The oracle
-    * rebuilds every offset arithmetically (97 + digits(id) +
-    * digits(len) + len per record, prefix-summed per file) and payload
-    * sums from hex-expanded text — no WARC bytes anywhere. Scale shape:
-    * synthesis is fixture-only (one group rollup); the OPERATOR is one
-    * mapPartitions framing pass, narrow, corrupt tails keep parsed
-    * records (WarcSpec). */
-  private def ns148(s: SparkSession, dir: String): DataFrame = {
-    val base = docs(s, dir).select(col("doc_id"), col("text"))
-    graft.ops.Warc.records(warcFixture(base))
-  }
-
-  /** NS149 — CDX-indexed WARC fetch ([[graft.ops.Warc.records]] →
-    * offset-sliced payloads): the random-access pattern the ns148 index
-    * exists FOR — parse once to build the CDX facts, then fetch any
-    * record's payload forever via `substring(content, payload_off + 1,
-    * content_length)`, a pure CODEGEN slice with no parser in the loop.
-    * The md5 of every sliced payload must equal md5(encode(text)) — the
-    * oracle computes that directly from the text, so a hash match
-    * certifies byte-exactness of offset + slice through a completely
-    * independent witness (any off-by-one in header arithmetic, CRLF
-    * handling, or multi-byte text lengths breaks the digest). At scale
-    * this is the CC-index fetch: the index side is facts-only (tiny,
-    * broadcastable), blobs never move, and the slice is whole-stage
-    * codegen over the blob column. */
-  private def ns149(s: SparkSession, dir: String): DataFrame = {
-    val base = docs(s, dir).select(col("doc_id"), col("text"))
-    // parse + fetch read the SAME materialized blobs
-    val warcs = warcFixture(base).localCheckpoint(true)
-    val index = graft.ops.Warc.records(warcs)
-      .select(col("warc_id"), col("target_uri"), col("payload_off"),
-        col("content_length"))
-    index.join(warcs, "warc_id")
-      .select(
-        regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
-          .cast("long").as("doc_id"),
-        col("target_uri"),
-        col("content_length"),
-        md5(expr("substring(content, payload_off + 1, content_length)"))
-          .as("payload_md5"))
-  }
-
-  /** NS150 — the full crawl-to-corpus path (WET extraction): WARC →
-    * CDX fetch → HTTP split → HTML extract, composed end-to-end as one
-    * query — each doc's text is wrapped in HTML, wrapped in an HTTP/1.1
-    * response, muxed into a WARC file, then recovered by the REAL
-    * machinery: idx1-indexed payload slice (ns149), codegen HTTP framing
-    * split (status line + Content-Type header + CRLFCRLF body boundary —
-    * `instr`/`regexp_extract`/`substring`, no UDF), and the ns63 HTML
-    * extractor. The released row carries the HTTP facts AND the
-    * extracted text with chrome-to-content lengths — what a WET file
-    * holds per record. Oracle: rebuilds payload text by the same
-    * concatenation and replays split + extraction in SQL; the container
-    * legs ride on the already-certified ns148/ns149 arithmetic. Scale
-    * shape: fixture synthesis aside, one keyed fetch join + pure
-    * projection chain — the whole per-record path is codegen. */
-  private def ns150(s: SparkSession, dir: String): DataFrame = {
-    val base = docs(s, dir).select(col("doc_id"), col("text"))
-    val http = base.select(col("doc_id"),
-      concat(
-        lit("HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n\r\n"),
-        lit("<html><body><h1>Doc "), col("doc_id"),
-        lit("</h1><p>"), coalesce(col("text"), lit("")),
-        lit("</p></body></html>")).as("text"))
-    val warcs = warcFixture(http).localCheckpoint(true)
-    val payloads = graft.ops.Warc.records(warcs)
-      .join(warcs, "warc_id")
-      .select(
-        regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
-          .cast("long").as("doc_id"),
-        expr("cast(substring(content, payload_off + 1, content_length) " +
-          "as string)").as("payload"))
-    val boundary = "instr(payload, '\r\n\r\n')"
-    payloads.select(col("doc_id"),
-        regexp_extract(col("payload"), "^HTTP/1\\.1 (\\d+)", 1)
-          .cast("long").as("http_status"),
-        regexp_extract(col("payload"), "(?i)content-type: ([^\\r\\n]+)", 1)
-          .as("content_type"),
-        expr(s"substring(payload, $boundary + 4)").as("html"))
-      .select(col("doc_id"), col("http_status"), col("content_type"),
-        length(col("html")).cast("long").as("n_raw"),
-        graft.ops.TextAnalysis.htmlToText(col("html")).as("text"))
-      .withColumn("n_text", length(col("text")).cast("long"))
-      .select(col("doc_id"), col("http_status"), col("content_type"),
-        col("n_raw"), col("n_text"), col("text"))
-  }
-
-  /** NS143 — cross-modal staleness audit ([[graft.ops.Integrity
-    * .staleEmbeddings]]): byte-identical texts whose embeddings
-    * disagree — the stale-re-embed bug detector. The raw corpus has no
-    * exact text dups, so the fixture injects % 4 twins whose
-    * embeddings are the original's EXCEPT the % 8 half, which get the
-    * reversed vector (the stale class) — both verdicts in the gate. */
-  private def ns143(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"), col("text"))
-    val e = embs(s, dir).select(col("vec_id"), col("embedding"))
-    val shift = d.agg(max(col("doc_id"))).head.getLong(0) + 1L
-    val twins = d.where(col("doc_id") % 4 === 0)
-      .select((col("doc_id") + shift).as("doc_id"), col("text"))
-    val twinEmb = e.where(col("vec_id") % 4 === 0)
-      .select((col("vec_id") + shift).as("vec_id"),
-        when(col("vec_id") % 8 === 0, reverse(col("embedding")))
-          .otherwise(col("embedding")).as("embedding"))
-    graft.ops.Integrity.staleEmbeddings(
-      d.unionByName(twins), e.unionByName(twinEmb))
-  }
-
-  /** NS144 — lexical self-retrieval eval ([[graft.ops.Retrieval
-    * .bm25TopKPerQuery]] → [[graft.ops.Retrieval.retrievalEval]]): every
-    * 50th doc's first five words become a query whose only relevant doc
-    * is its source; hits@1/3/10 and exact-integer MRR over the
-    * multi-query BM25 ranking — the lexical sibling of ns126's ANN
-    * recall report, measuring whether the ranker can find a document
-    * from its own opening words. */
-  private def ns144(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"), col("text"))
-    val queries = d.where(col("doc_id") % 50 === 0)
-      .select(col("doc_id").as("query_id"),
-        slice(split(col("text"), " "), 1, 5).as("terms"))
-    val relevant = queries.select(col("query_id"),
-      col("query_id").as("doc_id"))
-    graft.ops.Retrieval.retrievalEval(
-      graft.ops.Retrieval.bm25TopKPerQuery(d, queries, topK = 10),
-      relevant)
-  }
-
-  /** NS134 — near-dup dedup-yield histogram ([[graft.ops.Dedup
-    * .clusterSizeHistogram]]): connected components of the ns2 minhash
-    * pair graph rolled up by cluster size — clusters, docs, docs a
-    * keep-one dedup removes, removal per-mille of the corpus. The
-    * near-dup complement of ns128's exact histogram; Σ n_removed over
-    * size ≥ 2 is exactly the ns16 survivor yield. */
-  private def ns134(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Dedup.clusterSizeHistogram(
-      docs(s, dir),
-      graft.ops.Dedup.minhashLsh(docs(s, dir)).select("doc_a", "doc_b"))
-
-  /** NS86 — incremental token-count maintenance
-    * ([[graft.ops.Versioning.maintainTokenCounts]]): the ns56 snapshot
-    * tick's count table updated by re-tokenizing ONLY the diff fringe
-    * (removed + changed-old subtracted, added + changed-new added) — the
-    * incremental-view-maintenance pattern every corpus-wide token
-    * statistic needs at re-crawl scale. The oracle recomputes the new
-    * snapshot's counts FROM SCRATCH, so hash equality proves the
-    * maintenance algebra exact, not merely plausible. Same snapshot
-    * synthesis as ns56. */
-  private def ns86(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    // tick LAZY-checkpointed: the maintenance consumes the new snapshot
-    // twice (fp diff + the added/changed-new tokenization probe)
-    val v1 = snapshotTick(d, Seq("text", "lang", "source", "n_chars"))
-      .localCheckpoint(false)
-    graft.ops.Versioning.maintainTokenCounts(
-      d, v1, graft.ops.Versioning.tokenCountsOf(d))
-  }
-
-  /** NS87 — link-graph authority ([[graft.ops.Graphs.pagerankInt]]):
-    * exact-integer fixed-point PageRank over a deterministic synthetic
-    * link graph (two outlinks per doc, affine mod-N targets — hubs
-    * emerge from modular collisions). Float PageRank is
-    * order-dependent under distributed summation; the micro-unit
-    * integer formulation is partitioning-invariant and replayed
-    * verbatim by the oracle's five chained CTE iterations. */
-  /** The ns87/ns88 shared link-graph synthesis — ONE definition so the
-    * two queries (and their oracles) can never desynchronize: one affine
-    * outlink per doc (a bijection mod n — the "chain") plus one
-    * QUADRATIC outlink — squares collide mod n, so popular targets
-    * emerge and both the rank distribution and the triangle density are
-    * genuinely skewed (two coprime affine maps would make the graph
-    * regular: uniform PageRank fixed point, a fixture unable to catch a
-    * broken iteration). */
-  private def linkEdges(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir).select(col("doc_id"))
-    val n = d.agg(max(col("doc_id"))).head.getLong(0) + 1
-    d.select(col("doc_id").as("src"),
-        ((col("doc_id") * 31 + 7) % n).as("dst"))
-      .unionByName(d.select(col("doc_id").as("src"),
-        ((col("doc_id") * col("doc_id") * 17 + 3) % n).as("dst")))
-  }
-
-  private def ns87(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Graphs.pagerankInt(linkEdges(s, dir), iterations = 5)
-
-  /** NS88 — link-graph triangle density
-    * ([[graft.ops.Graphs.triangleCounts]]): per-page mutual-endorsement
-    * counts over the SAME synthetic link graph as ns87 — link farms are
-    * triangle-dense where organic graphs are tree-like. The engine runs
-    * the degree-ordered-orientation join (candidate volume O(m^{3/2})
-    * regardless of hub skew); the oracle counts triangles brute-force —
-    * orientation is pure execution strategy, so both sides are the same
-    * function. */
-  private def ns88(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Graphs.triangleCounts(linkEdges(s, dir))
-
-  /** NS89 — differentially-private release counts
-    * ([[graft.ops.Privacy.noisyCounts]]): per-language doc counts
-    * released under the two-sided geometric mechanism, ε = ln 2 —
-    * noise sampled EXACTLY (trailing-zero counts of md5-derived
-    * uniforms; no floats), seed-deterministic so the oracle replays the
-    * mechanism bit-for-bit. Completes the privacy family's ladder:
-    * scrub (ns22/66/67) → k-anonymity gate (ns72) → DP release. */
-  private def ns89(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Privacy.noisyCounts(docs(s, dir), Seq("lang"), seed = 42L)
-
-  /** NS91 — DP release over a PUBLIC key domain
-    * ([[graft.ops.Privacy.noisyCountsOverDomain]]): ns89's mechanism with
-    * the observed-keys presence leak closed — every key of a declared
-    * public language domain is released exactly once, unobserved keys
-    * ("it", "ja" at this SF) as noised ZEROS, so the release's support
-    * is the domain itself and carries no information. Same ε = ln 2
-    * two-sided geometric, exact integer sampling, oracle bit-replayed. */
-  private def ns91(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val domain = Seq("de", "en", "es", "fr", "it", "ja", "zh").toDF("lang")
-    graft.ops.Privacy.noisyCountsOverDomain(
-      docs(s, dir), Seq("lang"), domain, seed = 42L)
-  }
-
-  /** NS92 — α = 0.5 temperature rebalancing
-    * ([[graft.ops.Sampling.temperatureSample]]): the mT5/XLM-R
-    * multilingual sampling rule — released per-language sizes ∝ √n,
-    * flattening crawl head-language dominance with no declared mixture
-    * (ns45 hits explicit targets; this applies the standard formula).
-    * Admission is a pure-integer test (u32·⌊√n_s⌋ < 2³²·⌊√n_min⌋,
-    * loop-corrected integer sqrt), so the oracle replays it verbatim.
-    * One strata-cardinality count collect + a zero-shuffle codegen
-    * predicate over the corpus. */
-  private def ns92(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Sampling.temperatureSample(
-      docs(s, dir).select(col("doc_id"), col("lang")), "lang", seed = 42L)
-
-  /** NS93 — epoch-order materialization ([[graft.ops.Layout.epochOrder]]):
-    * the training run's feed order — short-first curriculum buckets
-    * (n_chars DIV 256) with a deterministic md5 within-bucket shuffle and
-    * doc_id tiebreak — as a contiguous global rank, computed WITHOUT the
-    * single-partition window `row_number() OVER (ORDER BY …)` would
-    * plan: range exchange + frozen partitioning + per-partition offsets
-    * + pid-partitioned window. The one total-order shape the suite
-    * lacked, done the way it survives 100 TB. */
-  private def ns93(s: SparkSession, dir: String): DataFrame = {
-    val u60 = conv(substring(
-        md5(concat(lit("ep:42:"), col("doc_id").cast("string"))
-          .cast("binary")), 1, 15),
-      16, 10).cast("long")
-    graft.ops.Layout.epochOrder(
-        docs(s, dir).select(col("doc_id"), col("n_chars")),
-        Seq(expr("n_chars DIV 256"), u60, col("doc_id")))
-      .select(col("pos"), col("doc_id"))
-  }
-
-  /** NS94 — JSONL ingest with corrupt-record policy
-    * ([[graft.sources.JsonLines.readJsonl]]): the suite's first
-    * non-parquet/JDBC FORMAT leg, through Spark's real JSON datasource —
-    * a jsonl snapshot of the documents table is materialized once per
-    * testdata fingerprint (scratch-keyed, the ns64/ns82 pattern) with
-    * every 11th-ish line deterministically TRUNCATED (doc_id % 11 = 3,
-    * last 5 chars dropped — never re-balances to valid JSON), then read
-    * back with an explicit schema + PERMISSIVE `_corrupt_record`
-    * capture. Valid lines parse to typed columns; malformed lines
-    * surface as nulls + raw text, and the query recovers their line id
-    * from the corrupt text — observable, countable quarantine, the
-    * policy a 100 TB crawl ingest needs (FAILFAST kills the job,
-    * DROPMALFORMED silently changes the corpus). The oracle rebuilds
-    * the same lines by concatenation and splits on `json_valid` —
-    * Spark's parser and DuckDB's must agree line-for-line. */
-  private def ns94(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
-    val path = scratchIndexDir("graft_jsonl", dir, fp)
-    val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = success.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(success)) {
-      // coalesce guards concat's null propagation: a NULL lang would
-      // null the whole line, the text writer would emit an empty line,
-      // and Spark's JSON reader silently SKIPS empty lines while the
-      // oracle still emits the row — 'und' (ISO 639 undetermined) on
-      // both sides keeps the row observable
-      docs(s, dir)
-        .select(col("doc_id"), concat(
-          lit("{\"line_id\":"), col("doc_id"),
-          lit(",\"lang\":\""), coalesce(col("lang"), lit("und")),
-          lit("\",\"n_chars\":"), col("n_chars"), lit("}")).as("j"))
-        .selectExpr("CASE WHEN doc_id % 11 = 3 " +
-          "THEN substring(j, 1, length(j) - 5) ELSE j END AS raw")
-        .write.mode("overwrite").text(path)
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("line_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("lang",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("n_chars",
-        org.apache.spark.sql.types.LongType)))
-    val cc = graft.sources.JsonLines.CorruptCol
-    graft.sources.JsonLines.readJsonl(s, path, schema)
-      .select(
-        coalesce(col("line_id"),
-          regexp_extract(col(cc), "\"line_id\":([0-9]+)", 1).cast("long"))
-          .as("line_id"),
-        col("lang"), col("n_chars"),
-        col(cc).isNotNull.as("corrupt"))
-  }
-
-  /** NS95 — per-group top-k by bounded-heap AGGREGATE
-    * ([[graft.functions.TopKByLong]]): top-3 longest docs per language,
-    * computed the way it survives 100 TB — a k-bounded custom
-    * `Aggregator` (map-side partial heaps, the exchange carries
-    * groups × k × partitions rows) instead of the window-rank form that
-    * shuffles and sorts the whole corpus. (doc_id) tiebreak makes the
-    * result total → hash-replayable; the oracle deliberately uses the
-    * window form — same function, scalable execution (the ns93
-    * contrast, applied to aggregation). */
-  private def ns95(s: SparkSession, dir: String): DataFrame = {
-    val topk = udaf(graft.functions.TopKByLong(3))
-    docs(s, dir)
-      .groupBy(col("lang"))
-      .agg(topk(col("n_chars"), col("doc_id")).as("top"))
-      .select(col("lang"), posexplode(col("top")))
-      .select(col("lang"), (col("pos") + 1).cast("long").as("rank"),
-        col("col._2").as("doc_id"), col("col._1").as("n_chars"))
-  }
-
-  /** NS85 — release mix rollup ([[graft.ops.Curation.releaseRollup]]):
-    * the ns76 dataset card drilled down — (source, lang) cells,
-    * per-source subtotals, grand total, in ONE rollup pass with
-    * grouping-marker columns separating subtotal NULLs from data NULLs.
-    * Exact integers only. */
-  private def ns85(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Curation.releaseRollup(docs(s, dir))
-
-  /** NS79 — event-transition matrix ([[graft.ops.Events.transitions]]):
-    * per-user consecutive event-type pairs counted corpus-wide, in the
-    * (ts, event_id) total order — the behavior-sequence audit before
-    * training on interaction logs. One user-keyed shuffle feeds the lead
-    * window; the rollup is type²-cardinality. */
-  private def ns79(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Events.transitions(Tables.load(s, dir, "events"))
-
-  /** NS78 — per-source TOKEN-BUDGET cap
-    * ([[graft.ops.Sampling.capBySource]]): every source contributes at
-    * most 800 tokens (the sf0.01 sources run ~1.3k each, so the gate binds on every source), admitted in deterministic hash order — the
-    * data-mixing guard stated as a budget instead of a rate. One
-    * source-keyed shuffle + running-sum window, the packSequences
-    * pattern. */
-  private def ns78(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Sampling.capBySource(docs(s, dir), capTokens = 800L)
-
-  /** NS64 — persisted LM model lifecycle: the ns59 two-phase pattern for
-    * perplexity serving. The model trains ONCE on the even-doc_id half of
-    * the corpus (fingerprint-gated, atomic publish), then the whole corpus
-    * scores against the frozen artifact — odd docs genuinely exercise the
-    * out-of-vocabulary floor path that self-trained ns61 never hits, and
-    * `oov_frac` reports it. The oracle replays train-on-half /
-    * score-on-all with the same left join + coalesce. */
-  private def ns64(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
-    val model = scratchIndexDir("graft_lm_model", dir, fp)
-    if (!graft.ops.Quality.lmModelMatches(s, model, fp))
-      graft.ops.Quality.writeLmModel(
-        docs(s, dir).where(col("doc_id") % 2 === 0), model,
-        fingerprint = Some(fp))
-    graft.ops.Quality.lmScoreFromModel(docs(s, dir), model)
-  }
-
-  // ------------------------------------------------------------------------
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "k1_scan_project"   -> (k1 _),
-    "k2_filter_match"   -> (k2 _),
-    "k3_topk_latest"    -> (k3 _),
-    "k4_limit_pinned"   -> (k4 _),
-    "k5_subset_onehop"  -> (k5 _),
-    "k6_subset_multihop"-> (k6 _),
-    "k7_anon_literal"   -> (k7 _),
-    "k8_anon_digest"    -> (k8 _),
-    "k9_combined_topk"  -> (k9 _),
-    "k10_matcher_reuse" -> (k10 _),
-    "k11_ignore_data"   -> (k11 _),
-    "k12_full_copy"     -> (k12 _),
-    "k13_config_pipeline" -> (k13 _),
-    "k14_anon_faker"    -> (k14 _),
-    "ns1_dedup_exact"     -> (ns1 _),
-    "ns2_dedup_minhash"   -> (ns2 _),
-    "ns3_dedup_simhash"   -> (ns3 _),
-    "ns4_dedup_ngram"     -> (ns4 _),
-    "ns5_dedup_embedding" -> (ns5 _),
-    "ns6_simsearch_topk"  -> (ns6 _),
-    "ns7_simsearch_lsh"   -> (ns7 _),
-    "ns13_simsearch_ivf"  -> (ns13 _),
-    "ns8_text_langid"     -> (ns8 _),
-    "ns9_text_quality"    -> (ns9 _),
-    "ns10_text_tokens"    -> (ns10 _),
-    "ns11_text_fingerprint" -> (ns11 _),
-    "ns12_multimodal_features" -> (ns12 _),
-    "ns14_dedup_incremental" -> (ns14 _),
-    "ns15_curation_pipeline" -> (ns15 _),
-    "ns16_dedup_survivors" -> (ns16 _),
-    "ns17_dedup_incr_index" -> (ns17 _),
-    "ns18_dedup_index_update" -> (ns18 _),
-    "ns19_curation_de" -> (ns19 _),
-    "ns20_simsearch_ivf_update" -> (ns20 _),
-    "ns21_decontaminate" -> (ns21 _),
-    "ns22_pii_scrub" -> (ns22 _),
-    "ns23_sample_stratified" -> (ns23 _),
-    "ns24_repetition_stats" -> (ns24 _),
-    "ns25_sessionize" -> (ns25 _),
-    "ns26_pack_sequences" -> (ns26 _),
-    "ns27_events_enrich" -> (ns27 _),
-    "ns28_events_asof" -> (ns28 _),
-    "ns29_boilerplate" -> (ns29 _),
-    "ns30_simsearch_pq" -> (ns30 _),
-    "ns31_corpus_prep" -> (ns31 _),
-    "ns32_join_salted" -> (ns32 _),
-    "ns33_corpus_stats" -> (ns33 _),
-    "ns34_decontaminate_spans" -> (ns34 _),
-    "ns35_simsearch_ivfpq" -> (ns35 _),
-    "ns36_text_normalize" -> (ns36 _),
-    "ns37_dedup_semantic" -> (ns37 _),
-    "ns38_keywords_tfidf" -> (ns38 _),
-    "ns39_chunk_documents" -> (ns39 _),
-    "ns40_dedup_spans" -> (ns40 _),
-    "ns41_layout_pruned" -> (ns41 _),
-    "ns42_simsearch_kmeans" -> (ns42 _),
-    "ns43_join_range" -> (ns43 _),
-    "ns44_distinct_hll" -> (ns44 _),
-    "ns45_corpus_mix" -> (ns45 _),
-    "ns46_corpus_split" -> (ns46 _),
-    "ns47_source_overlap" -> (ns47 _),
-    "ns48_sample_exact" -> (ns48 _),
-    "ns49_histogram" -> (ns49 _),
-    "ns50_join_bucketed" -> (ns50 _),
-    "ns51_tokenize_bpe" -> (ns51 _),
-    "ns52_simsearch_rerank" -> (ns52 _),
-    "ns53_pack_bpe" -> (ns53 _),
-    "ns54_heavy_hitters_cms" -> (ns54 _),
-    "ns55_join_bloom" -> (ns55 _),
-    "ns56_snapshot_diff" -> (ns56 _),
-    "ns57_quantile_bins" -> (ns57 _),
-    "ns58_layout_zorder" -> (ns58 _),
-    "ns59_cms_lifecycle" -> (ns59 _),
-    "ns60_tokenize_bytelevel" -> (ns60 _),
-    "ns61_lm_perplexity" -> (ns61 _),
-    "ns62_quality_classifier" -> (ns62 _),
-    "ns63_html_extract" -> (ns63 _),
-    "ns64_lm_lifecycle" -> (ns64 _),
-    "ns65_curation_model" -> (ns65 _),
-    "ns66_pii_luhn" -> (ns66 _),
-    "ns67_secrets_scrub" -> (ns67 _),
-    "ns68_dedup_lines" -> (ns68 _),
-    "ns69_embedding_outliers" -> (ns69 _),
-    "ns70_dedup_url" -> (ns70 _),
-    "ns71_corpus_drift" -> (ns71 _),
-    "ns72_k_anonymity" -> (ns72 _),
-    "ns73_web_ingest" -> (ns73 _),
-    "ns74_events_funnel" -> (ns74 _),
-    "ns75_events_retention" -> (ns75 _),
-    "ns76_dataset_card" -> (ns76 _),
-    "ns77_host_reputation" -> (ns77 _),
-    "ns78_source_token_cap" -> (ns78 _),
-    "ns79_event_transitions" -> (ns79 _),
-    "ns80_curriculum_buckets" -> (ns80 _),
-    "ns81_image_neardup" -> (ns81 _),
-    "ns82_phash_lifecycle" -> (ns82 _),
-    "ns83_keyframe_dedup" -> (ns83 _),
-    "ns84_record_linkage" -> (ns84 _),
-    "ns85_release_rollup" -> (ns85 _),
-    "ns86_token_maintenance" -> (ns86 _),
-    "ns87_link_pagerank" -> (ns87 _),
-    "ns88_link_triangles" -> (ns88 _),
-    "ns89_dp_counts" -> (ns89 _),
-    "ns90_audio_neardup" -> (ns90 _),
-    "ns91_dp_domain" -> (ns91 _),
-    "ns92_temperature_mix" -> (ns92 _),
-    "ns93_epoch_order" -> (ns93 _),
-    "ns94_jsonl_ingest" -> (ns94 _),
-    "ns95_group_topk" -> (ns95 _),
-    "ns96_golden_records" -> (ns96 _),
-    "ns97_dp_sum" -> (ns97 _),
-    "ns98_bm25_retrieval" -> (ns98 _),
-    "ns99_scd_history" -> (ns99 _),
-    "ns100_scd_merge" -> (ns100 _),
-    "ns101_variant_ingest" -> (ns101 _),
-    "ns102_sft_assembly" -> (ns102 _),
-    "ns103_label_vote" -> (ns103 _),
-    "ns104_leak_folds" -> (ns104 _),
-    "ns105_pref_pairs" -> (ns105 _),
-    "ns106_neg_samples" -> (ns106 _),
-    "ns107_evolved_read" -> (ns107 _),
-    "ns108_schema_drift" -> (ns108 _),
-    "ns109_winsorize" -> (ns109 _),
-    "ns110_thread_paths" -> (ns110 _),
-    "ns111_maxsim_topk" -> (ns111 _),
-    "ns112_temporal_split" -> (ns112 _),
-    "ns113_fk_orphans" -> (ns113 _),
-    "ns114_length_batches" -> (ns114 _),
-    "ns115_table_profile" -> (ns115 _),
-    "ns116_bigram_counts" -> (ns116 _),
-    "ns117_vote_agreement" -> (ns117 _),
-    "ns118_rater_report" -> (ns118 _),
-    "ns119_rolling_features" -> (ns119 _),
-    "ns120_c4_line_filter" -> (ns120 _),
-    "ns121_blocklist_filter" -> (ns121 _),
-    "ns122_type_pivot" -> (ns122 _),
-    "ns123_knn_margin" -> (ns123 _),
-    "ns124_join_profile" -> (ns124 _),
-    "ns126_ann_recall" -> (ns126 _),
-    "ns127_pps_sample" -> (ns127 _),
-    "ns125_fold_leakage" -> (ns125 _),
-    "ns128_dup_mass" -> (ns128 _),
-    "ns129_pack_audit" -> (ns129 _),
-    "ns130_chunk_lang" -> (ns130 _),
-    "ns131_vocab_growth" -> (ns131 _),
-    "ns132_fertility" -> (ns132 _),
-    "ns133_mixture_plan" -> (ns133 _),
-    "ns134_dedup_yield" -> (ns134 _),
-    "ns135_char_entropy" -> (ns135 _),
-    "ns136_ivm_dupmass" -> (ns136 _),
-    "ns137_dedup_normalized" -> (ns137 _),
-    "ns138_embedding_audit" -> (ns138 _),
-    "ns139_pack_split" -> (ns139 _),
-    "ns140_lang_confusion" -> (ns140 _),
-    "ns141_scene_cuts" -> (ns141 _),
-    "ns142_audio_segments" -> (ns142 _),
-    "ns143_stale_embeddings" -> (ns143 _),
-    "ns144_retrieval_eval" -> (ns144 _),
-    "ns145_avi_keyframes" -> (ns145 _),
-    "ns146_avi_shared_keyframes" -> (ns146 _),
-    "ns147_bmp_neardup" -> (ns147 _),
-    "ns148_warc_ingest" -> (ns148 _),
-    "ns149_warc_fetch" -> (ns149 _),
-    "ns150_warc_wet" -> (ns150 _),
-    "ns151_bmp_neardup_verified" -> (ns151 _),
-    "ns152_decontaminate_bloom" -> (ns152 _),
-    "ns153_grid_index_lifecycle" -> (ns153 _),
-  )
-
-  /** ns2's full minhash-LSH pair replay, hoisted with a `__DOCS__`
-    * source placeholder so ns125's fold-leakage audit runs the SAME
-    * pipeline over its twin-amplified corpus (single source of truth). */
-  private val minhashPairsSqlTpl: String =
-    """WITH words AS (SELECT doc_id, string_split(text,' ') w FROM __DOCS__),
-      |sh AS (SELECT DISTINCT doc_id, unnest([array_to_string(w[i:i+1],' ') for i in range(1, len(w))]) AS shingle FROM words),
-      |mh AS (SELECT doc_id, s, min(('0x' || substr(md5(shingle || ':' || s), 1, 15))::BIGINT) m FROM sh, (SELECT unnest(range(0,16)) AS s) seeds GROUP BY doc_id, s),
-      |bands AS (SELECT doc_id, s // 4 AS band, string_agg(m::VARCHAR, ',' ORDER BY s) bv FROM mh GROUP BY doc_id, s // 4),
-      |cand AS (SELECT DISTINCT a.doc_id da, b.doc_id db FROM bands a JOIN bands b ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id),
-      |sets AS (SELECT doc_id, list_distinct(list(shingle)) s FROM sh GROUP BY doc_id),
-      |scored AS (SELECT da AS doc_a, db AS doc_b, len(list_intersect(x.s, y.s))::DOUBLE / len(list_distinct(list_concat(x.s, y.s))) AS j FROM cand JOIN sets x ON x.doc_id = cand.da JOIN sets y ON y.doc_id = cand.db)
-      |SELECT doc_a, doc_b, round(j, 6) AS jaccard FROM scored WHERE j >= 0.5 ORDER BY doc_a, doc_b""".stripMargin
-
-  /** The ns90/ns142 shared WAV-grid replay: the 3-id WAV family
-    * synthesis and the samples→(band, slice) count grid recomputed
-    * independently from the synthesis bytes — the javax.sound parse and
-    * the WAV container write are hash-verified through it. Ends with
-    * `grid(doc_id, i, v)` over all 72 cells (zeros materialized). */
-  private val wavGridCteSql: String =
-    """WITH base AS (SELECT doc_id, text FROM documents),
-      |fam AS (SELECT d.doc_id,
-      |  CASE WHEN d.doc_id % 3 = 2 THEN reverse(b.text) ELSE b.text END AS t
-      |  FROM base d JOIN base b ON b.doc_id = d.doc_id - d.doc_id % 3),
-      |h AS (SELECT doc_id, hex(encode(t)) AS hx, octet_length(encode(t)) AS n FROM fam),
-      |samp AS (SELECT doc_id, hx, n, unnest(range(0, n)) AS i FROM h),
-      |vals AS (SELECT doc_id,
-      |    ((('0x' || substr(hx, (2 * i + 1)::INT, 2))::INT * 37 + i * 11) % 256) AS u8,
-      |    ((i * 9) // n)::INT AS slice
-      |  FROM samp),
-      |cells0 AS (SELECT doc_id, ((u8 // 32) * 9 + slice)::INT AS cell, count(*) AS cnt
-      |  FROM vals GROUP BY doc_id, cell),
-      |grid AS (SELECT f.doc_id, g.i, coalesce(c.cnt, 0) AS v
-      |  FROM fam f CROSS JOIN (SELECT unnest(range(0, 72)) AS i) g
-      |  LEFT JOIN cells0 c ON c.doc_id = f.doc_id AND c.cell = g.i)""".stripMargin
-
-  /** The ns83/ns141 shared per-frame dHash replay: the ns81 media-family
-    * synthesis, 64-byte every-2nd frame sampling, and the byte-stride
-    * 9×8 grid dHash per frame — hoisted so the keyframe dedup and the
-    * scene-cut report replay the IDENTICAL frame hashes (one decode and
-    * hash convention, like the engine side). Ends with
-    * `ph(doc_id, f, phash)`. */
-  private val framePhashCteSql: String =
-    """WITH base AS (SELECT doc_id, text FROM documents),
-      |fam AS (SELECT d.doc_id,
-      |  CASE d.doc_id % 5
-      |    WHEN 0 THEN b.text
-      |    WHEN 1 THEN b.text
-      |    WHEN 2 THEN substr(b.text, 1, 10) || '#' || substr(b.text, 12)
-      |    WHEN 3 THEN substr(b.text, 1, 20) || '@' || substr(b.text, 22)
-      |    ELSE reverse(b.text) END AS t
-      |  FROM base d JOIN base b ON b.doc_id = d.doc_id - d.doc_id % 5),
-      |h AS (SELECT doc_id, hex(encode(t)) AS hx, octet_length(encode(t)) AS n FROM fam),
-      |fr AS (SELECT doc_id, f, least(64, n - f * 64) AS m,
-      |  substr(hx, 128 * f + 1, 128) AS fhx
-      |  FROM h, (SELECT unnest(range(0, 1000)) AS f) s
-      |  WHERE f % 2 = 0 AND f * 64 < n),
-      |cells AS (SELECT doc_id, f, i,
-      |  ('0x' || substr(fhx, (2 * ((i * m) // 72) + 1)::INT, 2))::INT AS v
-      |  FROM fr, (SELECT unnest(range(0, 72)) AS i) r),
-      |bits AS (SELECT a.doc_id, a.f, ((a.i // 9) * 8 + (a.i % 9))::INT AS k,
-      |  CASE WHEN a.v < b.v THEN 1::BIGINT ELSE 0::BIGINT END AS bit
-      |  FROM cells a JOIN cells b
-      |    ON a.doc_id = b.doc_id AND a.f = b.f AND b.i = a.i + 1
-      |  WHERE a.i % 9 < 8 AND (a.i // 9) * 8 + (a.i % 9) < 63),
-      |ph AS (SELECT doc_id, f, sum(bit << k)::BIGINT AS phash
-      |  FROM bits GROUP BY doc_id, f)""".stripMargin
-
-  /** ns6's full oracle, hoisted so ns126's recall report can embed the
-    * SAME exact-baseline replay as a CTE (single source of truth). */
-  private val ns6OracleSql: String =
-    """WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
-      |scored AS (SELECT q.query_id, e.vec_id,
-      |  round(list_sum([qv[i]::DOUBLE * e.embedding[i]::DOUBLE for i in range(1,65)]) /
-      |    (sqrt(list_sum([qv[i]::DOUBLE * qv[i]::DOUBLE for i in range(1,65)])) *
-      |     sqrt(list_sum([e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE for i in range(1,65)]))), 6) AS cosine
-      |  FROM embeddings e, q WHERE e.vec_id != q.query_id)
-      |SELECT query_id, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank, vec_id, cosine
-      |FROM scored QUALIFY rank <= 10 ORDER BY query_id, rank""".stripMargin
-
-  /** ns7's full oracle (the md5-derived LSH pipeline replay), hoisted
-    * for the same reuse in ns126. */
-  private val ns7OracleSql: String =
-    """WITH planes AS (SELECT p, list_transform(range(0,64), d -> ((('0x' || substr(md5('plane:' || p || ':' || d), 1, 15))::BIGINT % 2001 - 1000) / 1000.0)) AS pl FROM (SELECT unnest(range(0,8)) AS p)),
-      |emb AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-      |proj AS (SELECT vec_id, p, list_sum(list_transform(range(1,65), i -> v[i] * pl[i])) AS s FROM emb, planes),
-      |buck AS (SELECT vec_id, sum(CASE WHEN s > 0 THEN (1::BIGINT << p) ELSE 0 END)::BIGINT AS bucket FROM proj GROUP BY vec_id),
-      |corpus AS (SELECT e.vec_id, e.v, sqrt(list_sum(list_transform(e.v, x -> x * x))) AS nv, b.bucket FROM emb e JOIN buck b USING (vec_id)),
-      |q AS (SELECT e.vec_id AS query_id, e.v AS qv, sqrt(list_sum(list_transform(e.v, x -> x * x))) AS nq, b.bucket AS qb FROM emb e JOIN buck b USING (vec_id) WHERE e.vec_id < 5),
-      |probes AS (SELECT query_id, qv, nq, unnest(list_prepend(qb, list_transform(range(0,8), p -> xor(qb, 1::BIGINT << p)))) AS bucket FROM q),
-      |scored AS (SELECT DISTINCT pr.query_id, c.vec_id, round(list_sum(list_transform(range(1,65), i -> pr.qv[i] * c.v[i])) / (pr.nq * c.nv), 6) AS cosine
-      |  FROM probes pr JOIN corpus c USING (bucket) WHERE c.vec_id != pr.query_id)
-      |SELECT query_id, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank, vec_id, cosine
-      |FROM scored QUALIFY rank <= 10 ORDER BY query_id, rank""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "k1_scan_project" ->
-      "SELECT c_custkey, c_name FROM customer ORDER BY c_custkey",
-    "k2_filter_match" ->
-      ("SELECT o_orderkey, o_totalprice FROM orders " +
-        "WHERE o_totalprice > 100000 ORDER BY o_orderkey"),
-    "k3_topk_latest" ->
-      ("SELECT event_id, user_id FROM events " +
-        "ORDER BY ts DESC, event_id LIMIT 100"),
-    "k4_limit_pinned" ->
-      "SELECT c_custkey FROM customer ORDER BY c_custkey LIMIT 10",
-    "k5_subset_onehop" ->
-      ("SELECT o.o_orderkey, o.o_custkey FROM orders o " +
-        "JOIN customer c ON c.c_custkey = o.o_custkey " +
-        "WHERE c.c_mktsegment = 'BUILDING' ORDER BY o.o_orderkey"),
-    "k6_subset_multihop" ->
-      ("SELECT l.l_orderkey, l.l_linenumber FROM lineitem l " +
-        "JOIN orders o ON o.o_orderkey = l.l_orderkey " +
-        "JOIN customer c ON c.c_custkey = o.o_custkey " +
-        "WHERE c.c_mktsegment = 'BUILDING' " +
-        "ORDER BY l.l_orderkey, l.l_linenumber"),
-    "k7_anon_literal" ->
-      ("SELECT c_custkey, 'REDACTED' AS c_name FROM customer " +
-        "ORDER BY c_custkey"),
-    "k8_anon_digest" ->
-      ("SELECT c_custkey, md5(c_name) AS c_name FROM customer " +
-        "ORDER BY c_custkey"),
-    "k9_combined_topk" ->
-      ("SELECT o.o_orderkey FROM orders o " +
-        "JOIN customer c ON c.c_custkey = o.o_custkey " +
-        "WHERE c.c_acctbal > 0 " +
-        "ORDER BY o.o_orderdate DESC, o.o_orderkey LIMIT 100"),
-    "k10_matcher_reuse" ->
-      ("SELECT s.s_suppkey FROM supplier s " +
-        "JOIN nation n ON n.n_nationkey = s.s_nationkey " +
-        "WHERE n.n_name = 'NATION_7' ORDER BY s.s_suppkey"),
-    "k11_ignore_data" ->
-      "SELECT * FROM nation WHERE 1 = 0",
-    "k12_full_copy" ->
-      "SELECT * FROM region ORDER BY r_regionkey",
-    "k13_config_pipeline" ->
-      ("SELECT o.* FROM orders o " +
-        "JOIN customer c ON c.c_custkey = o.o_custkey " +
-        "WHERE c.c_acctbal > 0 ORDER BY o.o_orderkey LIMIT 500"),
-    // k14 replays the md5-indexed persona fakers exactly: every draw is an
-    // independent 60-bit uniform from md5(secret␟table␟pk␟tag) indexing an
-    // inline corpus list literal — the SQL is GENERATED from the same
-    // graft.anonymise.Corpora vectors the engine reads (Persona.sql*), so
-    // the two sides cannot drift.
-    "k14_anon_faker" -> {
-      val p = graft.anonymise.Persona
-      s"""WITH b AS (SELECT c_custkey, c_nationkey, c_acctbal,
-         |  ${p.sqlRowKey("graft", "customer", Seq("c_custkey"))} AS k
-         |  FROM customer)
-         |SELECT c_custkey, ${p.sqlFullName} AS c_name, c_nationkey,
-         |  c_acctbal, ${p.sqlEmail("c_mktsegment")} AS c_mktsegment
-         |FROM b ORDER BY c_custkey""".stripMargin
-    },
-    "ns1_dedup_exact" ->
-      ("SELECT min(doc_id) AS doc_id, count(*) AS n_copies FROM documents " +
-        "GROUP BY text ORDER BY doc_id"),
-    "ns21_decontaminate" ->
-      ("""WITH words AS (SELECT doc_id, string_split(text,' ') w FROM documents),
-         |sh AS (SELECT DISTINCT doc_id, unnest([array_to_string(w[i:i+3],' ') for i in range(1, len(w)-2)]) AS shingle FROM words),
-         |bench AS (SELECT doc_id AS bench_id, shingle FROM sh WHERE doc_id % 50 = 0)
-         |SELECT s.doc_id, count(DISTINCT s.shingle) AS matched_shingles, count(DISTINCT b.bench_id) AS bench_docs
-         |FROM sh s JOIN bench b USING (shingle) WHERE s.doc_id % 50 != 0
-         |GROUP BY s.doc_id ORDER BY doc_id""".stripMargin),
-    // ns152: SAME oracle as ns21 — the Bloom prefilter is work-avoidance
-    // only; hash-identical output against the exact-join oracle is the
-    // correctness claim
-    "ns152_decontaminate_bloom" ->
-      ("""WITH words AS (SELECT doc_id, string_split(text,' ') w FROM documents),
-         |sh AS (SELECT DISTINCT doc_id, unnest([array_to_string(w[i:i+3],' ') for i in range(1, len(w)-2)]) AS shingle FROM words),
-         |bench AS (SELECT doc_id AS bench_id, shingle FROM sh WHERE doc_id % 50 = 0)
-         |SELECT s.doc_id, count(DISTINCT s.shingle) AS matched_shingles, count(DISTINCT b.bench_id) AS bench_docs
-         |FROM sh s JOIN bench b USING (shingle) WHERE s.doc_id % 50 != 0
-         |GROUP BY s.doc_id ORDER BY doc_id""".stripMargin),
-    "ns2_dedup_minhash" -> minhashPairsSqlTpl.replace("__DOCS__", "documents"),
-    "ns3_dedup_simhash" ->
-      ("""WITH words AS (SELECT doc_id, string_split(text,' ') w FROM documents),
-         |sh AS (SELECT DISTINCT doc_id, unnest([array_to_string(w[i:i+1],' ') for i in range(1, len(w))]) AS shingle FROM words),
-         |wh AS (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS h FROM sh),
-         |bits AS (SELECT doc_id, b, CASE WHEN sum(((h >> b) & 1) * 2 - 1) > 0 THEN 1 ELSE 0 END AS bit FROM wh, (SELECT unnest(range(0,60)) AS b) bs GROUP BY doc_id, b),
-         |sim AS (SELECT doc_id, sum(bit << b)::BIGINT AS sh FROM bits GROUP BY doc_id),
-         |bands AS (SELECT doc_id, sh, p, (sh >> (p*12)) & 4095 AS chunk FROM sim, (SELECT unnest(range(0,5)) AS p) ps),
-         |cand AS (SELECT DISTINCT a.doc_id da, a.sh sa, b.doc_id db, b.sh sb FROM bands a JOIN bands b ON a.p = b.p AND a.chunk = b.chunk AND a.doc_id < b.doc_id)
-         |SELECT da AS doc_a, db AS doc_b, bit_count(xor(sa, sb)) AS hamming FROM cand WHERE bit_count(xor(sa, sb)) <= 8 ORDER BY doc_a, doc_b""".stripMargin),
-    "ns4_dedup_ngram" ->
-      ("""WITH words AS (SELECT doc_id, string_split(text,' ') w FROM documents),
-         |sh AS (SELECT DISTINCT doc_id, unnest([array_to_string(w[i:i+1],' ') for i in range(1, len(w))]) AS shingle FROM words),
-         |sizes AS (SELECT doc_id, count(*) n FROM sh GROUP BY doc_id),
-         |inter AS (SELECT a.doc_id da, b.doc_id db, count(*) i FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id GROUP BY 1, 2),
-         |scored AS (SELECT da AS doc_a, db AS doc_b, i::DOUBLE / (x.n + y.n - i) AS j FROM inter JOIN sizes x ON x.doc_id = da JOIN sizes y ON y.doc_id = db)
-         |SELECT doc_a, doc_b, round(j, 6) AS jaccard FROM scored WHERE j >= 0.5 ORDER BY doc_a, doc_b""".stripMargin),
-    // ns5/ns7/ns13 mirror the md5-derived LSH/IVF pipelines exactly: the
-    // hyperplane constants, sampling keys, band splits and probe sets are
-    // all deterministic byte math, so DuckDB reproduces the full
-    // approximate pipeline, not just its exact verifier.
-    "ns5_dedup_embedding" ->
-      ("""WITH planes AS (SELECT p, list_transform(range(0,64), d -> ((('0x' || substr(md5('plane:' || p || ':' || d), 1, 15))::BIGINT % 2001 - 1000) / 1000.0)) AS pl FROM (SELECT unnest(range(0,8)) AS p)),
-         |emb AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-         |proj AS (SELECT vec_id, p, list_sum(list_transform(range(1,65), i -> v[i] * pl[i])) AS s FROM emb, planes),
-         |buck AS (SELECT vec_id, sum(CASE WHEN s > 0 THEN (1::BIGINT << p) ELSE 0 END)::BIGINT AS bucket FROM proj GROUP BY vec_id),
-         |base AS (SELECT e.vec_id, e.v, sqrt(list_sum(list_transform(e.v, x -> x * x))) AS n, b.bucket FROM emb e JOIN buck b USING (vec_id)),
-         |bands AS (SELECT vec_id, v, n, bb.b AS band, (bucket >> (bb.b * 4)) & 15 AS bv FROM base, (SELECT unnest(range(0,2)) AS b) bb),
-         |cand AS (SELECT DISTINCT a.vec_id id_a, b.vec_id id_b, round(list_sum(list_transform(range(1,65), i -> a.v[i] * b.v[i])) / (a.n * b.n), 6) AS cosine
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bv = b.bv AND a.vec_id < b.vec_id)
-         |SELECT id_a, id_b, cosine FROM cand WHERE cosine >= 0.4 ORDER BY id_a, id_b""".stripMargin),
-    "ns6_simsearch_topk" -> ns6OracleSql,
-    "ns7_simsearch_lsh" -> ns7OracleSql,
-    "ns13_simsearch_ivf" ->
-      ("""WITH emb AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-         |ranked AS (SELECT vec_id, v, row_number() OVER (ORDER BY ('0x' || substr(md5('centroid:' || vec_id), 1, 15))::BIGINT, vec_id) - 1 AS c FROM emb),
-         |cent AS (SELECT c, CASE WHEN nrm = 0 THEN list_transform(v, x -> 0.0) ELSE list_transform(v, x -> x / nrm) END AS cv
-         |  FROM (SELECT c, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM ranked WHERE c < 16)),
-         |ascore AS (SELECT e.vec_id, e.v, cent.c, list_sum(list_transform(range(1,65), i -> e.v[i] * cent.cv[i])) AS s FROM emb e, cent),
-         |assigned AS (SELECT vec_id, v, c AS cell FROM ascore QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, c DESC) = 1),
-         |corpus AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nv, cell FROM assigned),
-         |qscore AS (SELECT e.vec_id AS query_id, e.v AS qv, cent.c, list_sum(list_transform(range(1,65), i -> e.v[i] * cent.cv[i])) AS s FROM emb e, cent WHERE e.vec_id < 5),
-         |probes AS (SELECT query_id, qv, sqrt(list_sum(list_transform(qv, x -> x * x))) AS nq, c AS cell FROM qscore QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY s DESC, c DESC) <= 4),
-         |scored AS (SELECT DISTINCT pr.query_id, corpus.vec_id, round(list_sum(list_transform(range(1,65), i -> pr.qv[i] * corpus.v[i])) / (pr.nq * corpus.nv), 6) AS cosine
-         |  FROM probes pr JOIN corpus USING (cell) WHERE corpus.vec_id != pr.query_id)
-         |SELECT query_id, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank, vec_id, cosine
-         |FROM scored QUALIFY rank <= 10 ORDER BY query_id, rank""".stripMargin),
-    // ns20 = ns13's IVF pipeline with the coarse quantizer trained on the
-    // 80% corpus only (the frozen-centroid update contract): centroid
-    // ranking is restricted to vec_id % 5 != 0, assignment covers ALL
-    // vectors (corpus-built index + appended batch).
-    "ns20_simsearch_ivf_update" ->
-      ("""WITH emb AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-         |ranked AS (SELECT vec_id, v, row_number() OVER (ORDER BY ('0x' || substr(md5('centroid:' || vec_id), 1, 15))::BIGINT, vec_id) - 1 AS c FROM emb WHERE vec_id % 5 != 0),
-         |cent AS (SELECT c, CASE WHEN nrm = 0 THEN list_transform(v, x -> 0.0) ELSE list_transform(v, x -> x / nrm) END AS cv
-         |  FROM (SELECT c, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM ranked WHERE c < 16)),
-         |ascore AS (SELECT e.vec_id, e.v, cent.c, list_sum(list_transform(range(1,65), i -> e.v[i] * cent.cv[i])) AS s FROM emb e, cent),
-         |assigned AS (SELECT vec_id, v, c AS cell FROM ascore QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, c DESC) = 1),
-         |corpus AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nv, cell FROM assigned),
-         |qscore AS (SELECT e.vec_id AS query_id, e.v AS qv, cent.c, list_sum(list_transform(range(1,65), i -> e.v[i] * cent.cv[i])) AS s FROM emb e, cent WHERE e.vec_id < 5),
-         |probes AS (SELECT query_id, qv, sqrt(list_sum(list_transform(qv, x -> x * x))) AS nq, c AS cell FROM qscore QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY s DESC, c DESC) <= 4),
-         |scored AS (SELECT DISTINCT pr.query_id, corpus.vec_id, round(list_sum(list_transform(range(1,65), i -> pr.qv[i] * corpus.v[i])) / (pr.nq * corpus.nv), 6) AS cosine
-         |  FROM probes pr JOIN corpus USING (cell) WHERE corpus.vec_id != pr.query_id)
-         |SELECT query_id, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank, vec_id, cosine
-         |FROM scored QUALIFY rank <= 10 ORDER BY query_id, rank""".stripMargin),
-    // ns42 unrolls two Lloyd iterations over the ns13 init: assignment
-    // (same argmax tie-break), per-(cell, dim) mean ROUNDED to 6 decimals
-    // (absorbs the engines' cross-row float-sum order noise), driver-order
-    // renormalization, empty cells keeping their previous centroid via the
-    // LEFT JOIN; then the ns13 probe/score tail against the trained cells.
-    "ns42_simsearch_kmeans" ->
-      ("""WITH emb AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-         |ranked AS (SELECT vec_id, v, row_number() OVER (ORDER BY ('0x' || substr(md5('centroid:' || vec_id), 1, 15))::BIGINT, vec_id) - 1 AS c FROM emb),
-         |cent0 AS (SELECT c, CASE WHEN nrm = 0 THEN list_transform(v, x -> 0.0) ELSE list_transform(v, x -> x / nrm) END AS cv
-         |  FROM (SELECT c, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM ranked WHERE c < 16)),
-         |a1 AS (SELECT vec_id, v, c AS cell FROM (SELECT e.vec_id, e.v, cent0.c, list_sum(list_transform(range(1,65), i -> e.v[i] * cent0.cv[i])) AS s FROM emb e, cent0)
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, c DESC) = 1),
-         |a1n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nv, cell FROM a1),
-         |m1 AS (SELECT cell, ii.i, round(sum(v[ii.i] / nv) / count(*), 6) AS m FROM a1n, (SELECT unnest(range(1,65)) AS i) ii WHERE nv > 0 GROUP BY cell, ii.i),
-         |g1 AS (SELECT cell, mv, sqrt(list_sum(list_transform(mv, x -> x * x))) AS nrm FROM (SELECT cell, list(m ORDER BY i) AS mv FROM m1 GROUP BY cell)),
-         |cent1 AS (SELECT cent0.c, CASE WHEN g1.mv IS NULL THEN cent0.cv WHEN g1.nrm = 0 THEN list_transform(g1.mv, x -> 0.0) ELSE list_transform(g1.mv, x -> x / g1.nrm) END AS cv
-         |  FROM cent0 LEFT JOIN g1 ON g1.cell = cent0.c),
-         |a2 AS (SELECT vec_id, v, c AS cell FROM (SELECT e.vec_id, e.v, cent1.c, list_sum(list_transform(range(1,65), i -> e.v[i] * cent1.cv[i])) AS s FROM emb e, cent1)
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, c DESC) = 1),
-         |a2n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nv, cell FROM a2),
-         |m2 AS (SELECT cell, ii.i, round(sum(v[ii.i] / nv) / count(*), 6) AS m FROM a2n, (SELECT unnest(range(1,65)) AS i) ii WHERE nv > 0 GROUP BY cell, ii.i),
-         |g2 AS (SELECT cell, mv, sqrt(list_sum(list_transform(mv, x -> x * x))) AS nrm FROM (SELECT cell, list(m ORDER BY i) AS mv FROM m2 GROUP BY cell)),
-         |cent2 AS (SELECT cent1.c, CASE WHEN g2.mv IS NULL THEN cent1.cv WHEN g2.nrm = 0 THEN list_transform(g2.mv, x -> 0.0) ELSE list_transform(g2.mv, x -> x / g2.nrm) END AS cv
-         |  FROM cent1 LEFT JOIN g2 ON g2.cell = cent1.c),
-         |assigned AS (SELECT vec_id, v, c AS cell FROM (SELECT e.vec_id, e.v, cent2.c, list_sum(list_transform(range(1,65), i -> e.v[i] * cent2.cv[i])) AS s FROM emb e, cent2)
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, c DESC) = 1),
-         |corpus AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nv, cell FROM assigned),
-         |qscore AS (SELECT e.vec_id AS query_id, e.v AS qv, cent2.c, list_sum(list_transform(range(1,65), i -> e.v[i] * cent2.cv[i])) AS s FROM emb e, cent2 WHERE e.vec_id < 5),
-         |probes AS (SELECT query_id, qv, sqrt(list_sum(list_transform(qv, x -> x * x))) AS nq, c AS cell FROM qscore QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY s DESC, c DESC) <= 4),
-         |scored AS (SELECT DISTINCT pr.query_id, corpus.vec_id, round(list_sum(list_transform(range(1,65), i -> pr.qv[i] * corpus.v[i])) / (pr.nq * corpus.nv), 6) AS cosine
-         |  FROM probes pr JOIN corpus USING (cell) WHERE corpus.vec_id != pr.query_id)
-         |SELECT query_id, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank, vec_id, cosine
-         |FROM scored QUALIFY rank <= 10 ORDER BY query_id, rank""".stripMargin),
-    // ns30 mirrors the PQ pipeline end-to-end: md5-sampled codebook,
-    // per-subspace argmin encode (ties to the smaller code), query LUT of
-    // subspace dot products, ADC score as the explicit left-to-right
-    // 8-term sum — identical IEEE arithmetic in both engines.
-    "ns30_simsearch_pq" ->
-      ("""WITH emb AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-         |ranked AS (SELECT vec_id, v, row_number() OVER (ORDER BY ('0x' || substr(md5('pq:' || vec_id), 1, 15))::BIGINT, vec_id) - 1 AS c FROM emb),
-         |cbl AS (SELECT list(v ORDER BY c) AS l FROM ranked WHERE c < 16),
-         |dists AS (SELECT e.vec_id, ss.s, cc.c,
-         |    list_sum(list_transform(range(0,8), d -> cbl.l[cc.c+1][ss.s*8+d+1] * cbl.l[cc.c+1][ss.s*8+d+1]))
-         |    - 2 * list_sum(list_transform(range(0,8), d -> e.v[ss.s*8+d+1] * cbl.l[cc.c+1][ss.s*8+d+1])) AS dist
-         |  FROM emb e, (SELECT unnest(range(0,8)) AS s) ss, (SELECT unnest(range(0,16)) AS c) cc, cbl),
-         |codes AS (SELECT vec_id, list(c ORDER BY s) AS cs FROM (SELECT vec_id, s, c FROM dists QUALIFY row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, c) = 1) GROUP BY vec_id),
-         |q AS (SELECT e.vec_id AS query_id, list_transform(range(0,128), sc -> list_sum(list_transform(range(0,8), d -> e.v[(sc//16)*8+d+1] * cbl.l[sc%16+1][(sc//16)*8+d+1]))) AS lut FROM emb e, cbl WHERE e.vec_id < 5),
-         |scored AS (SELECT q.query_id, c.vec_id,
-         |    q.lut[c.cs[1]+1] + q.lut[16+c.cs[2]+1] + q.lut[32+c.cs[3]+1] + q.lut[48+c.cs[4]+1] + q.lut[64+c.cs[5]+1] + q.lut[80+c.cs[6]+1] + q.lut[96+c.cs[7]+1] + q.lut[112+c.cs[8]+1] AS ip
-         |  FROM codes c, q WHERE c.vec_id != q.query_id)
-         |SELECT query_id, row_number() OVER (PARTITION BY query_id ORDER BY ip DESC, vec_id) AS rank, vec_id, round(ip, 6) AS adc_ip
-         |FROM scored QUALIFY rank <= 10 ORDER BY query_id, rank""".stripMargin),
-    // ns35 composes the ns13 coarse-quantizer CTEs (cells, probes) with
-    // the ns30 PQ CTEs (codebook, codes, LUT): scored pairs are restricted
-    // to each query's probed cells, ranked by the same 8-term ADC sum.
-    "ns35_simsearch_ivfpq" ->
-      ("""WITH emb AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-         |cranked AS (SELECT vec_id, v, row_number() OVER (ORDER BY ('0x' || substr(md5('centroid:' || vec_id), 1, 15))::BIGINT, vec_id) - 1 AS c FROM emb),
-         |cent AS (SELECT c, CASE WHEN nrm = 0 THEN list_transform(v, x -> 0.0) ELSE list_transform(v, x -> x / nrm) END AS cv
-         |  FROM (SELECT c, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM cranked WHERE c < 16)),
-         |ascore AS (SELECT e.vec_id, cent.c, list_sum(list_transform(range(1,65), i -> e.v[i] * cent.cv[i])) AS s FROM emb e, cent),
-         |assigned AS (SELECT vec_id, c AS cell FROM ascore QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, c DESC) = 1),
-         |pranked AS (SELECT vec_id, v, row_number() OVER (ORDER BY ('0x' || substr(md5('pq:' || vec_id), 1, 15))::BIGINT, vec_id) - 1 AS c FROM emb),
-         |cbl AS (SELECT list(v ORDER BY c) AS l FROM pranked WHERE c < 16),
-         |dists AS (SELECT e.vec_id, ss.s, cc.c,
-         |    list_sum(list_transform(range(0,8), d -> cbl.l[cc.c+1][ss.s*8+d+1] * cbl.l[cc.c+1][ss.s*8+d+1]))
-         |    - 2 * list_sum(list_transform(range(0,8), d -> e.v[ss.s*8+d+1] * cbl.l[cc.c+1][ss.s*8+d+1])) AS dist
-         |  FROM emb e, (SELECT unnest(range(0,8)) AS s) ss, (SELECT unnest(range(0,16)) AS c) cc, cbl),
-         |codes AS (SELECT vec_id, list(c ORDER BY s) AS cs FROM (SELECT vec_id, s, c FROM dists QUALIFY row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, c) = 1) GROUP BY vec_id),
-         |qsc AS (SELECT e.vec_id AS query_id, cent.c, list_sum(list_transform(range(1,65), i -> e.v[i] * cent.cv[i])) AS s FROM emb e, cent WHERE e.vec_id < 5),
-         |probes AS (SELECT query_id, c AS cell FROM qsc QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY s DESC, c DESC) <= 4),
-         |q AS (SELECT e.vec_id AS query_id, list_transform(range(0,128), sc -> list_sum(list_transform(range(0,8), d -> e.v[(sc//16)*8+d+1] * cbl.l[sc%16+1][(sc//16)*8+d+1]))) AS lut FROM emb e, cbl WHERE e.vec_id < 5),
-         |scored AS (SELECT q.query_id, c2.vec_id,
-         |    q.lut[c2.cs[1]+1] + q.lut[16+c2.cs[2]+1] + q.lut[32+c2.cs[3]+1] + q.lut[48+c2.cs[4]+1] + q.lut[64+c2.cs[5]+1] + q.lut[80+c2.cs[6]+1] + q.lut[96+c2.cs[7]+1] + q.lut[112+c2.cs[8]+1] AS ip
-         |  FROM codes c2 JOIN assigned a USING (vec_id) JOIN probes pr ON pr.cell = a.cell JOIN q ON q.query_id = pr.query_id
-         |  WHERE c2.vec_id != q.query_id)
-         |SELECT query_id, row_number() OVER (PARTITION BY query_id ORDER BY ip DESC, vec_id) AS rank, vec_id, round(ip, 6) AS adc_ip
-         |FROM scored QUALIFY rank <= 10 ORDER BY query_id, rank""".stripMargin),
-    // ns52 = ns35's ADC chain widened to 40 candidates, then exact-cosine
-    // re-ranked over the raw vectors (same formula as ns6's oracle).
-    "ns52_simsearch_rerank" ->
-      ("""WITH emb AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-         |cranked AS (SELECT vec_id, v, row_number() OVER (ORDER BY ('0x' || substr(md5('centroid:' || vec_id), 1, 15))::BIGINT, vec_id) - 1 AS c FROM emb),
-         |cent AS (SELECT c, CASE WHEN nrm = 0 THEN list_transform(v, x -> 0.0) ELSE list_transform(v, x -> x / nrm) END AS cv
-         |  FROM (SELECT c, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM cranked WHERE c < 16)),
-         |ascore AS (SELECT e.vec_id, cent.c, list_sum(list_transform(range(1,65), i -> e.v[i] * cent.cv[i])) AS s FROM emb e, cent),
-         |assigned AS (SELECT vec_id, c AS cell FROM ascore QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, c DESC) = 1),
-         |pranked AS (SELECT vec_id, v, row_number() OVER (ORDER BY ('0x' || substr(md5('pq:' || vec_id), 1, 15))::BIGINT, vec_id) - 1 AS c FROM emb),
-         |cbl AS (SELECT list(v ORDER BY c) AS l FROM pranked WHERE c < 16),
-         |dists AS (SELECT e.vec_id, ss.s, cc.c,
-         |    list_sum(list_transform(range(0,8), d -> cbl.l[cc.c+1][ss.s*8+d+1] * cbl.l[cc.c+1][ss.s*8+d+1]))
-         |    - 2 * list_sum(list_transform(range(0,8), d -> e.v[ss.s*8+d+1] * cbl.l[cc.c+1][ss.s*8+d+1])) AS dist
-         |  FROM emb e, (SELECT unnest(range(0,8)) AS s) ss, (SELECT unnest(range(0,16)) AS c) cc, cbl),
-         |codes AS (SELECT vec_id, list(c ORDER BY s) AS cs FROM (SELECT vec_id, s, c FROM dists QUALIFY row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, c) = 1) GROUP BY vec_id),
-         |qsc AS (SELECT e.vec_id AS query_id, cent.c, list_sum(list_transform(range(1,65), i -> e.v[i] * cent.cv[i])) AS s FROM emb e, cent WHERE e.vec_id < 5),
-         |probes AS (SELECT query_id, c AS cell FROM qsc QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY s DESC, c DESC) <= 4),
-         |q AS (SELECT e.vec_id AS query_id, list_transform(range(0,128), sc -> list_sum(list_transform(range(0,8), d -> e.v[(sc//16)*8+d+1] * cbl.l[sc%16+1][(sc//16)*8+d+1]))) AS lut FROM emb e, cbl WHERE e.vec_id < 5),
-         |scored AS (SELECT q.query_id, c2.vec_id,
-         |    q.lut[c2.cs[1]+1] + q.lut[16+c2.cs[2]+1] + q.lut[32+c2.cs[3]+1] + q.lut[48+c2.cs[4]+1] + q.lut[64+c2.cs[5]+1] + q.lut[80+c2.cs[6]+1] + q.lut[96+c2.cs[7]+1] + q.lut[112+c2.cs[8]+1] AS ip
-         |  FROM codes c2 JOIN assigned a USING (vec_id) JOIN probes pr ON pr.cell = a.cell JOIN q ON q.query_id = pr.query_id
-         |  WHERE c2.vec_id != q.query_id),
-         |cand AS (SELECT query_id, vec_id FROM scored QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY ip DESC, vec_id) <= 40),
-         |ex AS (SELECT cd.query_id, cd.vec_id,
-         |    round(list_sum(list_transform(range(1,65), i -> qe.v[i] * ce.v[i])) /
-         |      (sqrt(list_sum(list_transform(qe.v, x -> x * x))) *
-         |       sqrt(list_sum(list_transform(ce.v, x -> x * x)))), 6) AS cosine
-         |  FROM cand cd JOIN emb qe ON qe.vec_id = cd.query_id JOIN emb ce ON ce.vec_id = cd.vec_id)
-         |SELECT query_id, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank, vec_id, cosine
-         |FROM ex QUALIFY rank <= 10 ORDER BY query_id, rank""".stripMargin),
-    "ns12_multimodal_features" ->
-      ("""WITH h AS (SELECT doc_id, hex(encode(text)) AS hx, octet_length(encode(text)) AS n FROM documents),
-         |byt AS (SELECT doc_id, ('0x' || substr(hx, (2 * unnest(range(0, n)) + 1)::INT, 2))::INT % 16 AS dim FROM h),
-         |cnt AS (SELECT doc_id, dim, count(*) AS c FROM byt GROUP BY doc_id, dim),
-         |grid AS (SELECT doc_id, n, unnest(range(0, 16)) AS dim FROM h)
-         |SELECT g.doc_id, g.dim, coalesce(c.c, 0) AS n_in_bin, g.n AS n_bytes
-         |FROM grid g LEFT JOIN cnt c ON c.doc_id = g.doc_id AND c.dim = g.dim
-         |ORDER BY g.doc_id, g.dim""".stripMargin),
-    "ns14_dedup_incremental" ->
-      ("""WITH newd AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0),
-         |corp AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 != 0),
-         |exacts AS (SELECT n.doc_id, n.text FROM newd n WHERE NOT EXISTS (SELECT 1 FROM corp c WHERE c.text = n.text)),
-         |wn AS (SELECT doc_id, string_split(text,' ') w FROM exacts),
-         |shn AS (SELECT DISTINCT doc_id, unnest([array_to_string(w[i:i+1],' ') for i in range(1, len(w))]) AS shingle FROM wn),
-         |wc AS (SELECT doc_id, string_split(text,' ') w FROM corp),
-         |shc AS (SELECT DISTINCT doc_id, unnest([array_to_string(w[i:i+1],' ') for i in range(1, len(w))]) AS shingle FROM wc),
-         |mhn AS (SELECT doc_id, s, min(('0x' || substr(md5(shingle || ':' || s), 1, 15))::BIGINT) m FROM shn, (SELECT unnest(range(0,16)) AS s) seeds GROUP BY doc_id, s),
-         |bn AS (SELECT doc_id, s // 4 AS band, string_agg(m::VARCHAR, ',' ORDER BY s) bv FROM mhn GROUP BY doc_id, s // 4),
-         |mhc AS (SELECT doc_id, s, min(('0x' || substr(md5(shingle || ':' || s), 1, 15))::BIGINT) m FROM shc, (SELECT unnest(range(0,16)) AS s) seeds GROUP BY doc_id, s),
-         |bc AS (SELECT doc_id, s // 4 AS band, string_agg(m::VARCHAR, ',' ORDER BY s) bv FROM mhc GROUP BY doc_id, s // 4),
-         |cand AS (SELECT DISTINCT a.doc_id da, b.doc_id db FROM bn a JOIN bc b ON a.band = b.band AND a.bv = b.bv),
-         |setsn AS (SELECT doc_id, list_distinct(list(shingle)) s FROM shn GROUP BY doc_id),
-         |setsc AS (SELECT doc_id, list_distinct(list(shingle)) s FROM shc GROUP BY doc_id),
-         |dups AS (SELECT DISTINCT da FROM cand JOIN setsn x ON x.doc_id = cand.da JOIN setsc y ON y.doc_id = cand.db
-         |  WHERE len(list_intersect(x.s, y.s))::DOUBLE / len(list_distinct(list_concat(x.s, y.s))) >= 0.5)
-         |SELECT doc_id, text FROM exacts WHERE doc_id NOT IN (SELECT da FROM dups) ORDER BY doc_id""".stripMargin),
-    // ns17 = ns14's decision with the index's stored artifacts mirrored:
-    // exact-dup rejection via the corpus text md5s (what the index stores)
-    // instead of raw text equality — identical results absent collisions.
-    "ns17_dedup_incr_index" ->
-      ("""WITH newd AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0),
-         |corp AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 != 0),
-         |exacts AS (SELECT n.doc_id, n.text FROM newd n WHERE NOT EXISTS (SELECT 1 FROM corp c WHERE md5(c.text) = md5(n.text))),
-         |wn AS (SELECT doc_id, string_split(text,' ') w FROM exacts),
-         |shn AS (SELECT DISTINCT doc_id, unnest([array_to_string(w[i:i+1],' ') for i in range(1, len(w))]) AS shingle FROM wn),
-         |wc AS (SELECT doc_id, string_split(text,' ') w FROM corp),
-         |shc AS (SELECT DISTINCT doc_id, unnest([array_to_string(w[i:i+1],' ') for i in range(1, len(w))]) AS shingle FROM wc),
-         |mhn AS (SELECT doc_id, s, min(('0x' || substr(md5(shingle || ':' || s), 1, 15))::BIGINT) m FROM shn, (SELECT unnest(range(0,16)) AS s) seeds GROUP BY doc_id, s),
-         |bn AS (SELECT doc_id, s // 4 AS band, string_agg(m::VARCHAR, ',' ORDER BY s) bv FROM mhn GROUP BY doc_id, s // 4),
-         |mhc AS (SELECT doc_id, s, min(('0x' || substr(md5(shingle || ':' || s), 1, 15))::BIGINT) m FROM shc, (SELECT unnest(range(0,16)) AS s) seeds GROUP BY doc_id, s),
-         |bc AS (SELECT doc_id, s // 4 AS band, string_agg(m::VARCHAR, ',' ORDER BY s) bv FROM mhc GROUP BY doc_id, s // 4),
-         |cand AS (SELECT DISTINCT a.doc_id da, b.doc_id db FROM bn a JOIN bc b ON a.band = b.band AND a.bv = b.bv),
-         |setsn AS (SELECT doc_id, list_distinct(list(shingle)) s FROM shn GROUP BY doc_id),
-         |setsc AS (SELECT doc_id, list_distinct(list(shingle)) s FROM shc GROUP BY doc_id),
-         |dups AS (SELECT DISTINCT da FROM cand JOIN setsn x ON x.doc_id = cand.da JOIN setsc y ON y.doc_id = cand.db
-         |  WHERE len(list_intersect(x.s, y.s))::DOUBLE / len(list_distinct(list_concat(x.s, y.s))) >= 0.5)
-         |SELECT doc_id, text FROM exacts WHERE doc_id NOT IN (SELECT da FROM dups) ORDER BY doc_id""".stripMargin),
-    // ns18 = the ns17 decision applied twice with the index updated between
-    // ticks: tick 2's corpus is corp ∪ tick-1 survivors. Pure composition of
-    // the same md5 minhash family, so DuckDB reproduces the full lifecycle.
-    "ns18_dedup_index_update" ->
-      ("""WITH corp1 AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 != 0),
-         |new1 AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
-         |ex1 AS (SELECT n.doc_id, n.text FROM new1 n WHERE NOT EXISTS (SELECT 1 FROM corp1 c WHERE md5(c.text) = md5(n.text))),
-         |wn1 AS (SELECT doc_id, string_split(text,' ') w FROM ex1),
-         |shn1 AS (SELECT DISTINCT doc_id, unnest([array_to_string(w[i:i+1],' ') for i in range(1, len(w))]) AS shingle FROM wn1),
-         |wc1 AS (SELECT doc_id, string_split(text,' ') w FROM corp1),
-         |shc1 AS (SELECT DISTINCT doc_id, unnest([array_to_string(w[i:i+1],' ') for i in range(1, len(w))]) AS shingle FROM wc1),
-         |mhn1 AS (SELECT doc_id, s, min(('0x' || substr(md5(shingle || ':' || s), 1, 15))::BIGINT) m FROM shn1, (SELECT unnest(range(0,16)) AS s) seeds GROUP BY doc_id, s),
-         |bn1 AS (SELECT doc_id, s // 4 AS band, string_agg(m::VARCHAR, ',' ORDER BY s) bv FROM mhn1 GROUP BY doc_id, s // 4),
-         |mhc1 AS (SELECT doc_id, s, min(('0x' || substr(md5(shingle || ':' || s), 1, 15))::BIGINT) m FROM shc1, (SELECT unnest(range(0,16)) AS s) seeds GROUP BY doc_id, s),
-         |bc1 AS (SELECT doc_id, s // 4 AS band, string_agg(m::VARCHAR, ',' ORDER BY s) bv FROM mhc1 GROUP BY doc_id, s // 4),
-         |cand1 AS (SELECT DISTINCT a.doc_id da, b.doc_id db FROM bn1 a JOIN bc1 b ON a.band = b.band AND a.bv = b.bv),
-         |setsn1 AS (SELECT doc_id, list_distinct(list(shingle)) s FROM shn1 GROUP BY doc_id),
-         |setsc1 AS (SELECT doc_id, list_distinct(list(shingle)) s FROM shc1 GROUP BY doc_id),
-         |dups1 AS (SELECT DISTINCT da FROM cand1 JOIN setsn1 x ON x.doc_id = cand1.da JOIN setsc1 y ON y.doc_id = cand1.db
-         |  WHERE len(list_intersect(x.s, y.s))::DOUBLE / len(list_distinct(list_concat(x.s, y.s))) >= 0.5),
-         |s1 AS (SELECT doc_id, text FROM ex1 WHERE doc_id NOT IN (SELECT da FROM dups1)),
-         |corp2 AS (SELECT doc_id, text FROM corp1 UNION ALL SELECT doc_id, text FROM s1),
-         |new2 AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 5),
-         |ex2 AS (SELECT n.doc_id, n.text FROM new2 n WHERE NOT EXISTS (SELECT 1 FROM corp2 c WHERE md5(c.text) = md5(n.text))),
-         |wn2 AS (SELECT doc_id, string_split(text,' ') w FROM ex2),
-         |shn2 AS (SELECT DISTINCT doc_id, unnest([array_to_string(w[i:i+1],' ') for i in range(1, len(w))]) AS shingle FROM wn2),
-         |wc2 AS (SELECT doc_id, string_split(text,' ') w FROM corp2),
-         |shc2 AS (SELECT DISTINCT doc_id, unnest([array_to_string(w[i:i+1],' ') for i in range(1, len(w))]) AS shingle FROM wc2),
-         |mhn2 AS (SELECT doc_id, s, min(('0x' || substr(md5(shingle || ':' || s), 1, 15))::BIGINT) m FROM shn2, (SELECT unnest(range(0,16)) AS s) seeds GROUP BY doc_id, s),
-         |bn2 AS (SELECT doc_id, s // 4 AS band, string_agg(m::VARCHAR, ',' ORDER BY s) bv FROM mhn2 GROUP BY doc_id, s // 4),
-         |mhc2 AS (SELECT doc_id, s, min(('0x' || substr(md5(shingle || ':' || s), 1, 15))::BIGINT) m FROM shc2, (SELECT unnest(range(0,16)) AS s) seeds GROUP BY doc_id, s),
-         |bc2 AS (SELECT doc_id, s // 4 AS band, string_agg(m::VARCHAR, ',' ORDER BY s) bv FROM mhc2 GROUP BY doc_id, s // 4),
-         |cand2 AS (SELECT DISTINCT a.doc_id da, b.doc_id db FROM bn2 a JOIN bc2 b ON a.band = b.band AND a.bv = b.bv),
-         |setsn2 AS (SELECT doc_id, list_distinct(list(shingle)) s FROM shn2 GROUP BY doc_id),
-         |setsc2 AS (SELECT doc_id, list_distinct(list(shingle)) s FROM shc2 GROUP BY doc_id),
-         |dups2 AS (SELECT DISTINCT da FROM cand2 JOIN setsn2 x ON x.doc_id = cand2.da JOIN setsc2 y ON y.doc_id = cand2.db
-         |  WHERE len(list_intersect(x.s, y.s))::DOUBLE / len(list_distinct(list_concat(x.s, y.s))) >= 0.5),
-         |s2 AS (SELECT doc_id, text FROM ex2 WHERE doc_id NOT IN (SELECT da FROM dups2))
-         |SELECT doc_id, text FROM s1 UNION ALL SELECT doc_id, text FROM s2 ORDER BY doc_id""".stripMargin),
-    "ns15_curation_pipeline" ->
-      ("""WITH w AS (SELECT doc_id, text, string_split(text,' ') w FROM documents),
-         |f AS (SELECT doc_id, text,
-         |  len([x for x in w if list_contains(['der','die','das','und','zu','nicht','ist','ein'], x)]) s_de,
-         |  len([x for x in w if list_contains(['the','a','of','and','to','in','is','that'], x)]) s_en,
-         |  len([x for x in w if list_contains(['el','la','de','los','y','que','en','un'], x)]) s_es,
-         |  len([x for x in w if list_contains(['le','la','de','les','et','que','en','un'], x)]) s_fr,
-         |  len([x for x in w if list_contains(['的','是','了','在','我','有','和','不'], x)]) s_zh,
-         |  len(w) n_words, length(replace(text, ' ', '')) ncns FROM w),
-         |s AS (SELECT *, CASE WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-         |       WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-         |       WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-         |       WHEN s_fr >= s_zh THEN 'fr' ELSE 'zh' END AS pred_lang,
-         |  ncns::DOUBLE / n_words AS avg_word_len, s_en::DOUBLE / n_words AS stopword_ratio FROM f),
-         |q AS (SELECT *, least(n_words::DOUBLE / 100.0, 1.0) * 0.5 + stopword_ratio * 0.3 +
-         |  (CASE WHEN avg_word_len >= 3.0 AND avg_word_len <= 8.0 THEN 0.2 ELSE 0.0 END) AS quality_score FROM s)
-         |SELECT min(doc_id) AS doc_id, min(n_words) AS n_words, min(quality_score) AS quality_score
-         |FROM q WHERE pred_lang = 'en' AND quality_score >= 0.55
-         |GROUP BY text ORDER BY doc_id""".stripMargin),
-    // ns19 = ns15 retargeted at German: pred_lang = 'de' and the stopword
-    // feature counts GERMAN markers (s_de), mirroring curate's stopwordLang.
-    "ns19_curation_de" ->
-      ("""WITH w AS (SELECT doc_id, text, string_split(text,' ') w FROM documents),
-         |f AS (SELECT doc_id, text,
-         |  len([x for x in w if list_contains(['der','die','das','und','zu','nicht','ist','ein'], x)]) s_de,
-         |  len([x for x in w if list_contains(['the','a','of','and','to','in','is','that'], x)]) s_en,
-         |  len([x for x in w if list_contains(['el','la','de','los','y','que','en','un'], x)]) s_es,
-         |  len([x for x in w if list_contains(['le','la','de','les','et','que','en','un'], x)]) s_fr,
-         |  len([x for x in w if list_contains(['的','是','了','在','我','有','和','不'], x)]) s_zh,
-         |  len(w) n_words, length(replace(text, ' ', '')) ncns FROM w),
-         |s AS (SELECT *, CASE WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-         |       WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-         |       WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-         |       WHEN s_fr >= s_zh THEN 'fr' ELSE 'zh' END AS pred_lang,
-         |  ncns::DOUBLE / n_words AS avg_word_len, s_de::DOUBLE / n_words AS stopword_ratio FROM f),
-         |q AS (SELECT *, least(n_words::DOUBLE / 100.0, 1.0) * 0.5 + stopword_ratio * 0.3 +
-         |  (CASE WHEN avg_word_len >= 3.0 AND avg_word_len <= 8.0 THEN 0.2 ELSE 0.0 END) AS quality_score FROM s)
-         |SELECT min(doc_id) AS doc_id, min(n_words) AS n_words, min(quality_score) AS quality_score
-         |FROM q WHERE pred_lang = 'de' AND quality_score >= 0.3
-         |GROUP BY text ORDER BY doc_id""".stripMargin),
-    // ns22's PII injection is mirrored verbatim: BIGINT || VARCHAR coerces
-    // to the same decimal strings Spark's cast produces, and the three
-    // patterns use the Java/RE2-identical regex subset (classes, bounded
-    // repetition, \b) so counts and redactions agree byte-for-byte.
-    "ns22_pii_scrub" ->
-      ("""WITH aug AS (SELECT doc_id, text || ' contact user' || doc_id || '@example.com or +49151' || lpad((doc_id % 10000)::VARCHAR, 7, '0') || ' from 10.' || (doc_id % 256) || '.0.' || ((doc_id * 7) % 256) AS text FROM documents),
-         |c AS (SELECT doc_id, text,
-         |  len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
-         |  len(regexp_extract_all(text, '\b[0-9]{1,3}(\.[0-9]{1,3}){3}\b')) AS n_ipv4,
-         |  len(regexp_extract_all(text, '\+[0-9]{7,15}')) AS n_phones FROM aug)
-         |SELECT doc_id, n_emails, n_ipv4, n_phones,
-         |  regexp_replace(regexp_replace(regexp_replace(text,
-         |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-         |    '\b[0-9]{1,3}(\.[0-9]{1,3}){3}\b', '<IP>', 'g'),
-         |    '\+[0-9]{7,15}', '<PHONE>', 'g') AS text
-         |FROM c ORDER BY doc_id""".stripMargin),
-    "ns23_sample_stratified" ->
-      ("""SELECT doc_id, lang, source, n_chars FROM documents
-         |WHERE ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT % 10000 <
-         |  (CASE WHEN lang = 'en' THEN 2500 WHEN lang = 'fr' THEN 5000 ELSE 10000 END)
-         |ORDER BY doc_id""".stripMargin),
-    // is_repetitive compares the UNROUNDED fraction in both engines (the
-    // doubles are bit-identical: same integer operands, one division).
-    "ns24_repetition_stats" ->
-      ("""WITH w AS (SELECT doc_id, string_split(text,' ') w FROM documents),
-         |g AS (SELECT doc_id, w, CASE WHEN len(w) >= 2 THEN [array_to_string(w[i:i+1],' ') for i in range(1, len(w))] ELSE [] END AS g2 FROM w),
-         |f AS (SELECT doc_id, len(w) AS n_words,
-         |  1.0 - len(list_distinct(w))::DOUBLE / len(w) AS f1,
-         |  CASE WHEN len(g2) = 0 THEN 0.0 ELSE 1.0 - len(list_distinct(g2))::DOUBLE / len(g2) END AS f2 FROM g)
-         |SELECT doc_id, n_words, round(f1, 6) AS dup_word_frac,
-         |  round(f2, 6) AS dup_2gram_frac, f2 > 0.1 AS is_repetitive
-         |FROM f ORDER BY doc_id""".stripMargin),
-    // epoch_us(ts) yields micros for any parquet timestamp encoding, and the
-    // Spark side normalizes to micros via the schema-adaptive
-    // Events.tsMicros, so both engines run identical integer gap arithmetic.
-    "ns25_sessionize" ->
-      ("""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts FROM events),
-         |l AS (SELECT user_id, event_id, ts,
-         |  CASE WHEN lag(ts) OVER w IS NULL OR ts - lag(ts) OVER w > 28800000000 THEN 1 ELSE 0 END AS is_new
-         |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         |s AS (SELECT user_id, ts, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_idx FROM l)
-         |SELECT user_id, session_idx::BIGINT AS session_idx, count(*) AS n_events,
-         |  min(ts) AS start_ts, max(ts) AS end_ts
-         |FROM s GROUP BY user_id, session_idx ORDER BY user_id, session_idx""".stripMargin),
-    "ns26_pack_sequences" ->
-      ("""WITH t AS (SELECT doc_id, lang, ceil(length(text)::DOUBLE / 4.0)::BIGINT AS n_tokens FROM documents),
-         |c AS (SELECT doc_id, lang, n_tokens,
-         |  (sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - n_tokens)::BIGINT AS off FROM t)
-         |SELECT doc_id, lang, n_tokens, (off // 2048)::BIGINT AS seq_id,
-         |  (off % 2048)::BIGINT AS seq_off FROM c ORDER BY doc_id""".stripMargin),
-    "ns27_events_enrich" ->
-      ("""SELECT event_type, count(*) AS n_events,
-         |  sum(json_extract_string(props, '$.k')::BIGINT)::BIGINT AS sum_k,
-         |  min(value) AS min_value, max(value) AS max_value
-         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
-    // ns28 mirrors the union+window as-of reformulation directly: DuckDB's
-    // IGNORE NULLS last_value over the same (ts, event_id) total order
-    // reproduces the strict-past match, including the null (no prior
-    // click) attributions.
-    "ns28_events_asof" ->
-      ("""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts, event_type, value FROM events WHERE event_type IN ('click', 'purchase')),
-         |w AS (SELECT user_id, event_id, ts, event_type, value,
-         |  last_value(CASE WHEN event_type = 'click' THEN event_id END IGNORE NULLS) OVER win AS asof_event_id,
-         |  last_value(CASE WHEN event_type = 'click' THEN ts END IGNORE NULLS) OVER win AS asof_ts
-         |  FROM e WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING))
-         |SELECT user_id, ts, event_id, value, asof_event_id, asof_ts, ts - asof_ts AS gap_us
-         |FROM w WHERE event_type = 'purchase' ORDER BY event_id""".stripMargin),
-    "ns29_boilerplate" ->
-      ("""WITH words AS (SELECT doc_id, string_split(text,' ') w FROM documents),
-         |sh AS (SELECT DISTINCT doc_id, unnest([array_to_string(w[i:i+2],' ') for i in range(1, len(w)-1)]) AS shingle FROM words),
-         |freq AS (SELECT shingle, count(*) AS doc_freq FROM sh GROUP BY shingle),
-         |j AS (SELECT s.doc_id, f.doc_freq FROM sh s JOIN freq f USING (shingle)),
-         |a AS (SELECT doc_id, count(*) AS n_grams, sum(CASE WHEN doc_freq >= 3 THEN 1 ELSE 0 END)::BIGINT AS n_boiler FROM j GROUP BY doc_id)
-         |SELECT doc_id, n_grams, n_boiler, round(n_boiler::DOUBLE / n_grams, 6) AS boiler_frac,
-         |  n_boiler::DOUBLE / n_grams > 0.5 AS is_boiler
-         |FROM a ORDER BY doc_id""".stripMargin),
-    // ns31 composes the ns15/ns19 feature CTEs (stopword feature selected
-    // by predicted language), exact dedup, the ns23 sampling predicate,
-    // and the ns26 packing window into one statement.
-    "ns31_corpus_prep" ->
-      ("""WITH w AS (SELECT doc_id, text, string_split(text,' ') w FROM documents),
-         |f AS (SELECT doc_id, text,
-         |  len([x for x in w if list_contains(['der','die','das','und','zu','nicht','ist','ein'], x)]) s_de,
-         |  len([x for x in w if list_contains(['the','a','of','and','to','in','is','that'], x)]) s_en,
-         |  len([x for x in w if list_contains(['el','la','de','los','y','que','en','un'], x)]) s_es,
-         |  len([x for x in w if list_contains(['le','la','de','les','et','que','en','un'], x)]) s_fr,
-         |  len([x for x in w if list_contains(['的','是','了','在','我','有','和','不'], x)]) s_zh,
-         |  len(w) n_words, length(replace(text, ' ', '')) ncns FROM w),
-         |s AS (SELECT *, CASE WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-         |       WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-         |       WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-         |       WHEN s_fr >= s_zh THEN 'fr' ELSE 'zh' END AS pred_lang,
-         |  ncns::DOUBLE / n_words AS avg_word_len FROM f),
-         |r AS (SELECT *, (CASE pred_lang WHEN 'de' THEN s_de WHEN 'en' THEN s_en WHEN 'es' THEN s_es WHEN 'fr' THEN s_fr ELSE s_zh END)::DOUBLE / n_words AS stopword_ratio FROM s),
-         |sc AS (SELECT *, least(n_words::DOUBLE / 100.0, 1.0) * 0.5 + stopword_ratio * 0.3 +
-         |  (CASE WHEN avg_word_len >= 3.0 AND avg_word_len <= 8.0 THEN 0.2 ELSE 0.0 END) AS quality_score FROM r),
-         |d AS (SELECT min(doc_id) AS doc_id, min(pred_lang) AS pred_lang, ceil(length(text)::DOUBLE / 4.0)::BIGINT AS n_tokens
-         |  FROM sc WHERE quality_score >= 0.3 GROUP BY text),
-         |sam AS (SELECT * FROM d WHERE ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT % 10000 <
-         |  (CASE WHEN pred_lang = 'en' THEN 5000 ELSE 10000 END)),
-         |c AS (SELECT doc_id, pred_lang, n_tokens,
-         |  (sum(n_tokens) OVER (PARTITION BY pred_lang ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - n_tokens)::BIGINT AS off FROM sam)
-         |SELECT doc_id, pred_lang, n_tokens, (off // 2048)::BIGINT AS seq_id,
-         |  (off % 2048)::BIGINT AS seq_off FROM c ORDER BY doc_id""".stripMargin),
-    // ns32's oracle is deliberately the PLAIN join: salting must be
-    // invisible in the result.
-    "ns32_join_salted" ->
-      ("""SELECT o.o_orderpriority, count(*) AS n_items,
-         |  sum(l.l_quantity::BIGINT)::BIGINT AS sum_qty
-         |FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-         |GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority""".stripMargin),
-    "ns33_corpus_stats" ->
-      ("""SELECT lang, count(*) AS n_docs,
-         |  round(quantile_cont(n_chars, 0.25), 6) AS q25,
-         |  round(quantile_cont(n_chars, 0.5), 6) AS q50,
-         |  round(quantile_cont(n_chars, 0.75), 6) AS q75,
-         |  round(sum(n_chars)::DOUBLE / count(*), 6) AS mean_n_chars
-         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
-    // ns34 mirrors the positional-gram taint + span rebuild: DuckDB's
-    // struct comprehension carries (pos, gram), the kept-word
-    // comprehension drops indexes covered by any tainted start.
-    "ns34_decontaminate_spans" ->
-      ("""WITH cw AS (SELECT doc_id, text, string_split(text,' ') w FROM documents WHERE doc_id % 50 != 0),
-         |bench AS (SELECT DISTINCT unnest([array_to_string(w[i:i+3],' ') for i in range(1, len(w)-2)]) AS bsh
-         |  FROM (SELECT string_split(text,' ') w FROM documents WHERE doc_id % 50 = 0)),
-         |pg AS (SELECT doc_id, unnest([{'pos': i - 1, 'sh': array_to_string(w[i:i+3], ' ')} for i in range(1, len(w)-2)]) AS g FROM cw),
-         |t AS (SELECT doc_id, g.pos AS pos FROM pg WHERE g.sh IN (SELECT bsh FROM bench)),
-         |cov AS (SELECT doc_id, list(DISTINCT pos) AS starts FROM t GROUP BY doc_id),
-         |outp AS (SELECT c.doc_id,
-         |    CASE WHEN cov.starts IS NULL THEN c.text
-         |    ELSE coalesce(array_to_string([c.w[j] for j in range(1, len(c.w)+1) if len([s for s in cov.starts if j - 1 >= s AND j - 1 < s + 4]) = 0], ' '), '') END AS text,
-         |    coalesce(len(cov.starts), 0) AS n_spans
-         |  FROM cw c LEFT JOIN cov USING (doc_id))
-         |SELECT doc_id, text, n_spans FROM outp ORDER BY doc_id""".stripMargin),
-    "ns36_text_normalize" ->
-      ("""WITH aug AS (SELECT doc_id, text || ' cafe' || chr(769) || ' nai' || chr(776) || 've armee' || chr(769) AS text FROM documents)
-         |SELECT doc_id, nfc_normalize(text) AS text,
-         |  text != nfc_normalize(text) AS changed
-         |FROM aug ORDER BY doc_id""".stripMargin),
-    // ns37 reuses ns13's coarse-quantizer CTEs (same md5 centroid sample,
-    // same (score DESC, c DESC) argmax tie-break), then resolves dups by a
-    // within-cell equality self-join on the rounded cosine.
-    "ns37_dedup_semantic" ->
-      ("""WITH emb AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-         |ranked AS (SELECT vec_id, v, row_number() OVER (ORDER BY ('0x' || substr(md5('centroid:' || vec_id), 1, 15))::BIGINT, vec_id) - 1 AS c FROM emb),
-         |cent AS (SELECT c, CASE WHEN nrm = 0 THEN list_transform(v, x -> 0.0) ELSE list_transform(v, x -> x / nrm) END AS cv
-         |  FROM (SELECT c, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM ranked WHERE c < 16)),
-         |ascore AS (SELECT e.vec_id, e.v, cent.c, list_sum(list_transform(range(1,65), i -> e.v[i] * cent.cv[i])) AS s FROM emb e, cent),
-         |assigned AS (SELECT vec_id, v, c AS cell FROM ascore QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, c DESC) = 1),
-         |corpus AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nv, cell FROM assigned),
-         |dups AS (SELECT DISTINCT a.vec_id FROM corpus a JOIN corpus b ON a.cell = b.cell AND b.vec_id < a.vec_id
-         |  AND round(list_sum(list_transform(range(1,65), i -> a.v[i] * b.v[i])) / (a.nv * b.nv), 6) >= 0.4)
-         |SELECT c.vec_id, c.cell, (d.vec_id IS NOT NULL) AS is_dup
-         |FROM corpus c LEFT JOIN dups d ON d.vec_id = c.vec_id ORDER BY c.vec_id""".stripMargin),
-    // ns38's idf is exact integer bit-length math (length(bin(N // df)) - 1
-    // = floor log2) — no transcendentals anywhere, so scores hash-match.
-    "ns38_keywords_tfidf" ->
-      ("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         |tok AS (SELECT doc_id, unnest(CASE WHEN len(w) >= 2 THEN [array_to_string(w[i:i+1], ' ') for i in range(1, len(w))] ELSE [] END) AS term FROM w),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-         |df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-         |n AS (SELECT count(*) AS n_docs FROM documents),
-         |sc AS (SELECT tf.doc_id, tf.term, (tf.tf * (length(bin(n.n_docs // df.df)) - 1))::BIGINT AS tfidf
-         |  FROM tf JOIN df USING (term), n),
-         |pos AS (SELECT * FROM sc WHERE tfidf > 0)
-         |SELECT doc_id, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rank, term, tfidf
-         |FROM pos QUALIFY rank <= 5 ORDER BY doc_id, rank""".stripMargin),
-    "ns39_chunk_documents" ->
-      ("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         |c AS (SELECT doc_id, w, 1 + (greatest(len(w) - 64, 0) + 47) // 48 AS nc FROM w),
-         |x AS (SELECT doc_id, w, unnest(range(0, nc)) AS chunk_id FROM c)
-         |SELECT doc_id, chunk_id, len(w[chunk_id*48+1 : chunk_id*48+64]) AS n_tokens,
-         |  array_to_string(w[chunk_id*48+1 : chunk_id*48+64], ' ') AS chunk_text
-         |FROM x ORDER BY doc_id, chunk_id""".stripMargin),
-    // ns40 = ns34's positional-gram device with a keep-first rule: the
-    // gram's min doc_id is the keeper, occurrences in later docs taint.
-    "ns40_dedup_spans" ->
-      ("""WITH cw AS (SELECT doc_id, text, string_split(text,' ') w FROM documents),
-         |pg AS (SELECT doc_id, unnest([{'pos': i - 1, 'sh': array_to_string(w[i:i+3], ' ')} for i in range(1, len(w)-2)]) AS g FROM cw),
-         |keep AS (SELECT g.sh AS sh, min(doc_id) AS keeper FROM pg GROUP BY g.sh HAVING count(DISTINCT doc_id) >= 2),
-         |t AS (SELECT pg.doc_id, pg.g.pos AS pos FROM pg JOIN keep ON pg.g.sh = keep.sh WHERE pg.doc_id > keep.keeper),
-         |cov AS (SELECT doc_id, list(DISTINCT pos) AS starts FROM t GROUP BY doc_id),
-         |outp AS (SELECT c.doc_id,
-         |    CASE WHEN cov.starts IS NULL THEN c.text
-         |    ELSE coalesce(array_to_string([c.w[j] for j in range(1, len(c.w)+1) if len([s for s in cov.starts if j - 1 >= s AND j - 1 < s + 4]) = 0], ' '), '') END AS text,
-         |    coalesce(len(cov.starts), 0) AS n_spans
-         |  FROM cw c LEFT JOIN cov USING (doc_id))
-         |SELECT doc_id, text, n_spans FROM outp ORDER BY doc_id""".stripMargin),
-    // ns43's oracle is the PLAIN θ-join: the bucketing must be invisible
-    // in the result (it changes the plan, never the matches).
-    "ns43_join_range" ->
-      ("""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts, event_type FROM events),
-         |v AS (SELECT user_id, event_id AS view_id, ts FROM e WHERE event_type = 'view'),
-         |p AS (SELECT user_id, event_id AS purchase_id, ts - 86400000000 AS start_ts, ts AS end_ts FROM e WHERE event_type = 'purchase')
-         |SELECT p.purchase_id, v.view_id, v.user_id, p.end_ts - v.ts AS lead_us
-         |FROM v JOIN p ON v.user_id = p.user_id AND v.ts >= p.start_ts AND v.ts < p.end_ts
-         |ORDER BY purchase_id, view_id""".stripMargin),
-    // ns44 replays the HLL registers and estimate: 60-bit md5 prefix, low
-    // 10 bits bucket, leading-zero rank via exact bin() bit-length, powers
-    // of two summed per group, alpha from the same literals, and the
-    // small-range linear-counting branch (the library's one transcendental
-    // — a handful of per-group ln calls, rounded at 1e-6).
-    "ns44_distinct_hll" ->
-      ("""WITH h AS (SELECT lang, ('0x' || substr(md5(text), 1, 15))::BIGINT AS h FROM documents WHERE text IS NOT NULL),
-         |r AS (SELECT lang, h % 1024 AS bucket, h // 1024 AS w FROM h),
-         |rk AS (SELECT lang, bucket, max(CASE WHEN w = 0 THEN 51 ELSE 50 - (length(bin(w)) - 1) END) AS mr FROM r GROUP BY lang, bucket),
-         |agg AS (SELECT lang, count(*) AS n_registers, sum(1.0::DOUBLE / (1::BIGINT << mr)) AS zp FROM rk GROUP BY lang),
-         |e AS (SELECT lang, n_registers, (1024 - n_registers)::DOUBLE AS v,
-         |  0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 1024.0::DOUBLE) * 1024.0::DOUBLE * 1024.0::DOUBLE / (zp + (1024 - n_registers)) AS raw_e
-         |  FROM agg)
-         |SELECT lang, n_registers,
-         |  round(CASE WHEN raw_e <= 2560.0::DOUBLE AND v > 0 THEN 1024.0::DOUBLE * ln(1024.0::DOUBLE / v) ELSE raw_e END, 6) AS hll_estimate
-         |FROM e ORDER BY lang""".stripMargin),
-    // ns45 recomputes the division-only mixture rates (budget = min n/w,
-    // rate = w*budget/n — identical doubles from identical ints in both
-    // engines) and applies the same md5 bucket predicate; floor matches
-    // Scala's positive toInt truncation.
-    "ns45_corpus_mix" ->
-      ("""WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
-         |w AS (SELECT * FROM (VALUES ('en', 4.0::DOUBLE), ('de', 2.0::DOUBLE), ('fr', 2.0::DOUBLE), ('es', 1.0::DOUBLE), ('zh', 1.0::DOUBLE)) AS t(lang, wt)),
-         |b AS (SELECT min(n / wt) AS budget FROM c JOIN w USING (lang)),
-         |r AS (SELECT c.lang, CASE WHEN c.n / wt = b.budget THEN 1.0::DOUBLE ELSE wt * b.budget / c.n END AS rate FROM c JOIN w USING (lang), b)
-         |SELECT d.doc_id, d.lang, d.source FROM documents d JOIN r USING (lang)
-         |WHERE ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 15))::BIGINT % 10000 < floor(r.rate * 10000)::INT
-         |ORDER BY d.doc_id""".stripMargin),
-    // ns46's cutoffs are the name-sorted cumulative quantized fractions:
-    // test [0,500), train [500,9500), valid [9500,10000).
-    "ns46_corpus_split" ->
-      ("""SELECT doc_id, lang,
-         |  CASE WHEN b < 500 THEN 'test' WHEN b < 9500 THEN 'train' ELSE 'valid' END AS split
-         |FROM (SELECT doc_id, lang, ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT % 10000 AS b FROM documents)
-         |ORDER BY doc_id""".stripMargin),
-    "ns47_source_overlap" ->
-      ("""WITH w AS (SELECT source, string_split(text,' ') w FROM documents),
-         |sg AS (SELECT DISTINCT source AS src, unnest([array_to_string(w[i:i+2],' ') for i in range(1, len(w)-1)]) AS shingle FROM w),
-         |sizes AS (SELECT src, count(*) AS n FROM sg GROUP BY src),
-         |sh AS (SELECT a.src AS src_a, b.src AS src_b, count(*) AS shared_grams FROM sg a JOIN sg b ON a.shingle = b.shingle AND a.src < b.src GROUP BY 1, 2)
-         |SELECT src_a, src_b, shared_grams, round(shared_grams::DOUBLE / least(x.n, y.n), 6) AS overlap_frac
-         |FROM sh JOIN sizes x ON x.src = sh.src_a JOIN sizes y ON y.src = sh.src_b
-         |ORDER BY src_a, src_b""".stripMargin),
-    "ns48_sample_exact" ->
-      ("""SELECT doc_id, lang FROM (
-         |  SELECT doc_id, lang, row_number() OVER (PARTITION BY lang ORDER BY ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT, doc_id) AS rn
-         |  FROM documents) WHERE rn <= 10 ORDER BY doc_id""".stripMargin),
-    // ns50's oracle is the PLAIN join (same as ns32): bucketing must be
-    // invisible in the result — it changes the plan, never the matches.
-    "ns50_join_bucketed" ->
-      ("""SELECT o.o_orderpriority, count(*) AS n_items,
-         |  sum(l.l_quantity::BIGINT)::BIGINT AS sum_qty
-         |FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-         |GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority""".stripMargin),
-    // ns51's oracle replays the merge loop itself (recursive CTE over the
-    // same literal merges table) — the md5 checks the token STREAM, not
-    // just counts.
-    "ns51_tokenize_bpe" -> graft.ops.Bpe.oracleSql(graft.ops.Bpe.default),
-    // ns60 replays the byte-level path: same recursive-CTE merge loop,
-    // pre-tokens from the RE2-compatible regex, byte remap via translate
-    // (exact over this ASCII corpus), injected prefix rebuilt literally.
-    "ns60_tokenize_bytelevel" -> graft.ops.Bpe.oracleSql(
-      graft.ops.Bpe.default, graft.ops.Bpe.PreTokenizer.ByteLevel,
-      docsRel = "(SELECT doc_id, " +
-        s"'${ns60Prefix1.replace("'", "''")}' || CAST(doc_id AS VARCHAR) || " +
-        s"'${ns60Prefix2.replace("'", "''")}' || chr(9) || chr(10) || " +
-        "'twice  spaced ' || text AS text FROM documents)"),
-    "ns53_pack_bpe" ->
-      graft.ops.Bpe.oraclePackSql(graft.ops.Bpe.default, tokenBudget = 512),
-    // ns54 replays the whole count-min table (one md5-60 per occurrence,
-    // 4 rows derived by the (a·h + b) mod p mod w affine family) and the
-    // min-over-rows estimate — approximate counts, exactly reproduced.
-    "ns54_heavy_hitters_cms" ->
-      ("""WITH t AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents WHERE text IS NOT NULL),
-         |tt AS (SELECT token, ('0x' || substr(md5(token), 1, 15))::BIGINT % 2147483647 AS hp FROM t WHERE token <> ''),
-         |cms AS (SELECT i, (((1103515245 * (i + 1)) % 2147483647) * hp + (12345 * (i + 1)) % 2147483647) % 2147483647 % 256 AS bucket, count(*) AS cnt
-         |  FROM tt CROSS JOIN range(4) r(i) GROUP BY 1, 2),
-         |cand AS (SELECT DISTINCT token, ('0x' || substr(md5(token), 1, 15))::BIGINT % 2147483647 AS hp
-         |  FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents WHERE doc_id < 10) WHERE token <> ''),
-         |est AS (SELECT c.token, min(coalesce(cms.cnt, 0)) AS cms_count
-         |  FROM cand c CROSS JOIN range(4) r(i)
-         |  LEFT JOIN cms ON cms.i = r.i AND cms.bucket = (((1103515245 * (r.i + 1)) % 2147483647) * c.hp + (12345 * (r.i + 1)) % 2147483647) % 2147483647 % 256
-         |  GROUP BY c.token)
-         |SELECT token, cms_count FROM est WHERE cms_count >= 200
-         |ORDER BY cms_count DESC, token""".stripMargin),
-    // ns55's oracle is the PLAIN semi-join: the Bloom pass is a plan-level
-    // pre-filter whose false positives the exact join removes, so the
-    // result must be bit-identical to no Bloom at all (ns32's contract).
-    "ns55_join_bloom" ->
-      ("""SELECT l_orderkey, l_linenumber, l_partkey FROM lineitem
-         |WHERE l_orderkey IN (SELECT o_orderkey FROM orders WHERE o_totalprice > 150000)
-         |ORDER BY l_orderkey, l_linenumber""".stripMargin),
-    // ns56 rebuilds the same derived "new" snapshot and diffs by the same
-    // chr(31)-joined, chr(30)-null-tagged md5 fingerprint.
-    "ns56_snapshot_diff" ->
-      ("""WITH newsnap AS (
-         |  SELECT doc_id, CASE WHEN doc_id % 37 = 0 THEN text || ' v2' ELSE text END AS text, lang, source, n_chars
-         |  FROM documents WHERE doc_id >= 20
-         |  UNION ALL
-         |  SELECT doc_id + (SELECT max(doc_id) + 1 FROM documents), text, lang, source, n_chars FROM documents WHERE doc_id < 10),
-         |o AS (SELECT doc_id, md5(concat_ws(chr(31), coalesce(text, chr(30)), coalesce(lang, chr(30)), coalesce(source, chr(30)), coalesce(n_chars::VARCHAR, chr(30)))) AS old_fp FROM documents),
-         |n AS (SELECT doc_id, md5(concat_ws(chr(31), coalesce(text, chr(30)), coalesce(lang, chr(30)), coalesce(source, chr(30)), coalesce(n_chars::VARCHAR, chr(30)))) AS new_fp FROM newsnap)
-         |SELECT doc_id,
-         |  CASE WHEN old_fp IS NULL THEN 'added' WHEN new_fp IS NULL THEN 'removed' ELSE 'changed' END AS status,
-         |  old_fp, new_fp
-         |FROM o FULL OUTER JOIN n USING (doc_id)
-         |WHERE old_fp IS NULL OR new_fp IS NULL OR old_fp <> new_fp
-         |ORDER BY doc_id""".stripMargin),
-    // ns58 reads the RAW table (ns41's contract: a layout rewrite changes
-    // I/O, never answers).
-    "ns58_layout_zorder" ->
-      ("""SELECT lang, count(*) AS n_docs, sum(n_chars)::BIGINT AS sum_chars
-         |FROM documents WHERE n_chars BETWEEN 150 AND 400
-         |AND doc_id BETWEEN 100 AND 300
-         |GROUP BY lang ORDER BY lang""".stripMargin),
-    // ns59's two ticks union to the WHOLE corpus, so its oracle is ns54's
-    // one-shot CMS replay verbatim — the lifecycle (persist, copy, append,
-    // serve) must be invisible in the counts.
-    "ns59_cms_lifecycle" ->
-      ("""WITH t AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents WHERE text IS NOT NULL),
-         |tt AS (SELECT token, ('0x' || substr(md5(token), 1, 15))::BIGINT % 2147483647 AS hp FROM t WHERE token <> ''),
-         |cms AS (SELECT i, (((1103515245 * (i + 1)) % 2147483647) * hp + (12345 * (i + 1)) % 2147483647) % 2147483647 % 256 AS bucket, count(*) AS cnt
-         |  FROM tt CROSS JOIN range(4) r(i) GROUP BY 1, 2),
-         |cand AS (SELECT DISTINCT token, ('0x' || substr(md5(token), 1, 15))::BIGINT % 2147483647 AS hp
-         |  FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents WHERE doc_id < 10) WHERE token <> ''),
-         |est AS (SELECT c.token, min(coalesce(cms.cnt, 0)) AS cms_count
-         |  FROM cand c CROSS JOIN range(4) r(i)
-         |  LEFT JOIN cms ON cms.i = r.i AND cms.bucket = (((1103515245 * (r.i + 1)) % 2147483647) * c.hp + (12345 * (r.i + 1)) % 2147483647) % 2147483647 % 256
-         |  GROUP BY c.token)
-         |SELECT token, cms_count FROM est WHERE cms_count >= 200
-         |ORDER BY cms_count DESC, token""".stripMargin),
-    // ns57 replays the fixed-bin walk: cumulative bin counts, first bin
-    // reaching ceil(q·n), lower edge — integer read-off, double q.
-    "ns57_quantile_bins" ->
-      ("""WITH b AS (SELECT lang, n_chars // 16 AS bin FROM documents WHERE n_chars IS NOT NULL),
-         |c AS (SELECT lang, bin, count(*) AS cnt FROM b GROUP BY 1, 2),
-         |w AS (SELECT lang, bin, sum(cnt) OVER (PARTITION BY lang ORDER BY bin) AS cum, sum(cnt) OVER (PARTITION BY lang) AS n FROM c),
-         |qs AS (SELECT unnest([0.5::DOUBLE, 0.9::DOUBLE, 0.99::DOUBLE]) AS q)
-         |SELECT lang, q, min(bin) * 16 AS approx_value
-         |FROM w CROSS JOIN qs WHERE cum >= ceil(q * n)
-         |GROUP BY lang, q ORDER BY lang, q""".stripMargin),
-    // ns49's two-sided clamp is also the oracle contract: engines disagree
-    // on % sign conventions for negatives, but both land every negative in
-    // bucket 0 once clamped.
-    "ns49_histogram" ->
-      ("""WITH b AS (SELECT lang, greatest(least((n_chars - n_chars % 50) // 50, 11), 0) AS bucket FROM documents WHERE n_chars IS NOT NULL)
-         |SELECT lang, bucket, bucket * 50 AS lo, (bucket + 1) * 50 AS hi, count(*) AS n
-         |FROM b GROUP BY lang, bucket ORDER BY lang, bucket""".stripMargin),
-    // ns41's oracle reads the RAW table: the layout rewrite must be
-    // invisible in the result (pruning changes I/O, never answers).
-    "ns41_layout_pruned" ->
-      ("""SELECT source, count(*) AS n_docs, sum(n_chars)::BIGINT AS sum_chars
-         |FROM documents WHERE lang = 'en' AND n_chars BETWEEN 150 AND 400
-         |GROUP BY source ORDER BY source""".stripMargin),
-    "ns8_text_langid" ->
-      ("""WITH w AS (SELECT doc_id, lang, string_split(text,' ') w FROM documents),
-         |s AS (SELECT doc_id, lang,
-         |  len([x for x in w if list_contains(['der','die','das','und','zu','nicht','ist','ein'], x)]) s_de,
-         |  len([x for x in w if list_contains(['the','a','of','and','to','in','is','that'], x)]) s_en,
-         |  len([x for x in w if list_contains(['el','la','de','los','y','que','en','un'], x)]) s_es,
-         |  len([x for x in w if list_contains(['le','la','de','les','et','que','en','un'], x)]) s_fr,
-         |  len([x for x in w if list_contains(['的','是','了','在','我','有','和','不'], x)]) s_zh
-         |  FROM w)
-         |SELECT doc_id, lang,
-         |  CASE WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-         |       WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-         |       WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-         |       WHEN s_fr >= s_zh THEN 'fr' ELSE 'zh' END AS pred_lang
-         |FROM s ORDER BY doc_id""".stripMargin),
-    "ns9_text_quality" ->
-      ("""WITH w AS (SELECT doc_id, string_split(text,' ') w, length(text) n_chars,
-         |  length(replace(text, ' ', '')) ncns FROM documents),
-         |f AS (SELECT doc_id, n_chars, len(w) AS n_words,
-         |  ncns::DOUBLE / len(w) AS avg_word_len,
-         |  len([x for x in w if list_contains(['the','a','of','and','to','in','is','that'], x)])::DOUBLE / len(w) AS stopword_ratio
-         |  FROM w)
-         |SELECT doc_id, n_chars, n_words, avg_word_len, stopword_ratio,
-         |  least(n_words::DOUBLE / 100.0, 1.0) * 0.5 + stopword_ratio * 0.3 +
-         |  (CASE WHEN avg_word_len >= 3.0 AND avg_word_len <= 8.0 THEN 0.2 ELSE 0.0 END) AS quality_score
-         |FROM f ORDER BY doc_id""".stripMargin),
-    "ns10_text_tokens" ->
-      ("""SELECT doc_id, len(string_split(text,' ')) AS n_ws_tokens,
-         |  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS n_bpe_tokens,
-         |  ceil(length(text)::DOUBLE / 4.0)::BIGINT AS n_est_tokens
-         |FROM documents ORDER BY doc_id""".stripMargin),
-    "ns11_text_fingerprint" ->
-      ("""SELECT doc_id, md5(lower(text)) AS md5_fp,
-         |  list_reduce(list_prepend(0::BIGINT,
-         |    [ord(c)::BIGINT for c in string_split(lower(text), '')]),
-         |    (a, b) -> (a * 31 + b) % 1000000007) AS rolling_fp
-         |FROM documents ORDER BY doc_id""".stripMargin),
-    // ns2's pair pipeline verbatim, then connected components as a
-    // recursive transitive closure: min reachable doc_id = cluster label —
-    // the oracle for the distributed min-label-propagation loop.
-    "ns16_dedup_survivors" ->
-      ("""WITH RECURSIVE words AS (SELECT doc_id, string_split(text,' ') w FROM documents),
-         |sh AS (SELECT DISTINCT doc_id, unnest([array_to_string(w[i:i+1],' ') for i in range(1, len(w))]) AS shingle FROM words),
-         |mh AS (SELECT doc_id, s, min(('0x' || substr(md5(shingle || ':' || s), 1, 15))::BIGINT) m FROM sh, (SELECT unnest(range(0,16)) AS s) seeds GROUP BY doc_id, s),
-         |bands AS (SELECT doc_id, s // 4 AS band, string_agg(m::VARCHAR, ',' ORDER BY s) bv FROM mh GROUP BY doc_id, s // 4),
-         |cand AS (SELECT DISTINCT a.doc_id da, b.doc_id db FROM bands a JOIN bands b ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id),
-         |sets AS (SELECT doc_id, list_distinct(list(shingle)) s FROM sh GROUP BY doc_id),
-         |pairs AS (SELECT da AS doc_a, db AS doc_b FROM cand JOIN sets x ON x.doc_id = cand.da JOIN sets y ON y.doc_id = cand.db
-         |  WHERE len(list_intersect(x.s, y.s))::DOUBLE / len(list_distinct(list_concat(x.s, y.s))) >= 0.5),
-         |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs UNION SELECT doc_b, doc_a FROM pairs),
-         |walk AS (SELECT src AS doc_id, src AS reach FROM edges
-         |  UNION SELECT wk.doc_id, e.dst FROM walk wk JOIN edges e ON e.src = wk.reach),
-         |labels AS (SELECT doc_id, min(reach) AS cluster FROM walk GROUP BY doc_id),
-         |sizes AS (SELECT cluster, count(*) AS n FROM labels GROUP BY cluster)
-         |SELECT d.doc_id, coalesce(sz.n, 1)::BIGINT AS n_merged
-         |FROM documents d
-         |LEFT JOIN sizes sz ON sz.cluster = d.doc_id
-         |WHERE NOT EXISTS (SELECT 1 FROM labels l WHERE l.doc_id = d.doc_id AND l.cluster != d.doc_id)
-         |ORDER BY d.doc_id""".stripMargin),
-    // Micro-nat quantization makes the per-doc sum exact-integer in both
-    // engines; only the final display division is floating point.
-    "ns61_lm_perplexity" ->
-      ("""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-         |cnt AS (SELECT tok, count(*) AS c FROM toks GROUP BY tok),
-         |tot AS (SELECT sum(c) AS n, count(*) AS v FROM cnt),
-         |sc AS (SELECT doc_id, CAST(round(-ln((c + 1)::DOUBLE / (n + v)) * 1e6) AS BIGINT) AS nm
-         |  FROM toks JOIN cnt USING (tok) CROSS JOIN tot),
-         |agg AS (SELECT doc_id, count(*) AS n_tokens, sum(nm) AS s FROM sc GROUP BY doc_id)
-         |SELECT doc_id, n_tokens, ((2 * s + n_tokens) // (2 * n_tokens)) / 1e6 AS nll,
-         |  s / 1e6 / n_tokens > 9.0 AS rejected
-         |FROM agg ORDER BY doc_id""".stripMargin),
-    // Integer milli-weights: the per-doc sum is exact; sigmoid runs once on
-    // identical operands. kept at threshold 0.5 is exactly sum >= 0.
-    "ns62_quality_classifier" ->
-      ("""WITH w AS (SELECT b AS bucket, ('0x' || substr(md5('w:' || b), 1, 15))::BIGINT % 2001 - 1000 AS w_milli
-         |  FROM (SELECT unnest(range(0, 512)) AS b)),
-         |toks AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT % 512 AS bucket
-         |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)),
-         |agg AS (SELECT doc_id, count(*) AS n_tokens, sum(w_milli) AS s
-         |  FROM toks JOIN w USING (bucket) GROUP BY doc_id)
-         |SELECT doc_id, n_tokens,
-         |  round(1.0 / (1.0 + exp(-(s / 1000.0 / n_tokens * 4.0))), 6) AS score,
-         |  1.0 / (1.0 + exp(-(s / 1000.0 / n_tokens * 4.0))) >= 0.5 AS kept
-         |FROM agg ORDER BY doc_id""".stripMargin),
-    // The identical page chrome is rebuilt in SQL; every pattern in the
-    // extraction chain is RE2-safe, so both engines run the same regexes.
-    "ns63_html_extract" ->
-      ("""WITH raw AS (SELECT doc_id,
-         |  '<html><head><title>t</title><style type="text/css">p { margin: 0; }</style><script>if (a < b && c > d) { alert("x"); }</script></head><body><nav><a href="/">Home</a> | <a href="/about">About</a></nav><h1>Doc &amp; &quot;notes&quot; &#39;n&#39; &lt;tags&gt;</h1><p id="main">'
-         |    || text ||
-         |  '</p><div class="footer"><script src="x.js"></script>(c) example</div></body></html>' AS h
-         |  FROM documents),
-         |s1 AS (SELECT doc_id, length(h) AS n_raw, regexp_replace(h, '(?s)<script[^>]*>.*?</script>', ' ', 'g') AS t FROM raw),
-         |s2 AS (SELECT doc_id, n_raw, regexp_replace(t, '(?s)<style[^>]*>.*?</style>', ' ', 'g') AS t FROM s1),
-         |s3 AS (SELECT doc_id, n_raw, regexp_replace(t, '<[^>]*>', ' ', 'g') AS t FROM s2),
-         |s4 AS (SELECT doc_id, n_raw, replace(replace(replace(replace(replace(t,
-         |  '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''), '&amp;', '&') AS t FROM s3),
-         |s5 AS (SELECT doc_id, n_raw, trim(regexp_replace(t, '\s+', ' ', 'g')) AS text FROM s4)
-         |SELECT doc_id, n_raw, length(text) AS n_text, text FROM s5 ORDER BY doc_id""".stripMargin),
-    // Train-on-half / score-on-all replay: the left join's NULL count IS
-    // the OOV path, floored at 1/(N+V) by the +1 smoothing.
-    "ns64_lm_lifecycle" ->
-      ("""WITH train AS (SELECT unnest(string_split(text, ' ')) AS tok FROM documents WHERE doc_id % 2 = 0),
-         |cnt AS (SELECT tok, count(*) AS c FROM train GROUP BY tok),
-         |tot AS (SELECT sum(c) AS n, count(*) AS v FROM cnt),
-         |toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-         |sc AS (SELECT doc_id,
-         |    CAST(round(-ln((coalesce(c, 0) + 1)::DOUBLE / (n + v)) * 1e6) AS BIGINT) AS nm,
-         |    CASE WHEN c IS NULL THEN 1 ELSE 0 END AS oov
-         |  FROM toks LEFT JOIN cnt USING (tok) CROSS JOIN tot),
-         |agg AS (SELECT doc_id, count(*) AS n_tokens, sum(nm) AS s, sum(oov) AS n_oov FROM sc GROUP BY doc_id)
-         |SELECT doc_id, n_tokens, ((2 * s + n_tokens) // (2 * n_tokens)) / 1e6 AS nll,
-         |  ((2000000 * n_oov + n_tokens) // (2 * n_tokens)) / 1e6 AS oov_frac,
-         |  s / 1e6 / n_tokens > 9.0 AS rejected
-         |FROM agg ORDER BY doc_id""".stripMargin),
-    // ns15's langid fragment + ns62's classifier + ns61's perplexity (over
-    // the gated survivors) + ns1's min-doc_id dedup, composed exactly as
-    // the fused Spark plan composes them. Gates compare UNROUNDED values.
-    "ns65_curation_model" ->
-      ("""WITH w AS (SELECT doc_id, text, string_split(text,' ') w FROM documents),
-         |f AS (SELECT doc_id, text,
-         |  len([x for x in w if list_contains(['der','die','das','und','zu','nicht','ist','ein'], x)]) s_de,
-         |  len([x for x in w if list_contains(['the','a','of','and','to','in','is','that'], x)]) s_en,
-         |  len([x for x in w if list_contains(['el','la','de','los','y','que','en','un'], x)]) s_es,
-         |  len([x for x in w if list_contains(['le','la','de','les','et','que','en','un'], x)]) s_fr,
-         |  len([x for x in w if list_contains(['的','是','了','在','我','有','和','不'], x)]) s_zh
-         |  FROM w),
-         |lang AS (SELECT *, CASE WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-         |       WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-         |       WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-         |       WHEN s_fr >= s_zh THEN 'fr' ELSE 'zh' END AS pred_lang FROM f),
-         |wt AS (SELECT b AS bucket, ('0x' || substr(md5('w:' || b), 1, 15))::BIGINT % 2001 - 1000 AS w_milli
-         |  FROM (SELECT unnest(range(0, 512)) AS b)),
-         |ctoks AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT % 512 AS bucket
-         |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)),
-         |cs AS (SELECT doc_id, count(*) AS n_tokens, sum(w_milli) AS sw FROM ctoks JOIN wt USING (bucket) GROUP BY doc_id),
-         |sc AS (SELECT doc_id, n_tokens, 1.0 / (1.0 + exp(-(sw / 1000.0 / n_tokens * 4.0))) AS score FROM cs),
-         |s1 AS (SELECT lang.doc_id, lang.text, sc.n_tokens, sc.score FROM lang JOIN sc ON lang.doc_id = sc.doc_id
-         |  WHERE lang.pred_lang = 'en' AND sc.score >= 0.5),
-         |ptoks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM s1),
-         |cnt AS (SELECT tok, count(*) AS c FROM ptoks GROUP BY tok),
-         |tot AS (SELECT sum(c) AS n, count(*) AS v FROM cnt),
-         |pn AS (SELECT doc_id, CAST(round(-ln((c + 1)::DOUBLE / (n + v)) * 1e6) AS BIGINT) AS nm
-         |  FROM ptoks JOIN cnt USING (tok) CROSS JOIN tot),
-         |pa AS (SELECT doc_id, count(*) AS nt, sum(nm) AS sn FROM pn GROUP BY doc_id),
-         |s2 AS (SELECT s1.doc_id, s1.text, s1.n_tokens, s1.score, ((2 * pa.sn + pa.nt) // (2 * pa.nt)) / 1e6 AS nll
-         |  FROM s1 JOIN pa ON s1.doc_id = pa.doc_id WHERE pa.sn / 1e6 / pa.nt <= 9.0)
-         |SELECT min(doc_id) AS doc_id, min(n_tokens) AS n_tokens,
-         |  round(min(score), 6) AS score, min(nll) AS nll
-         |FROM s2 GROUP BY text ORDER BY doc_id""".stripMargin),
-    // DuckDB's lambda index is 1-based (Spark's transform index 0-based):
-    // "double every second digit from the right" is i%2=0 here, i%2==1
-    // there. The replacement fold mirrors aggregate(valid, text, replace).
-    "ns66_pii_luhn" ->
-      ("""WITH raw AS (SELECT doc_id, text || ' pay 4111111111111111 ref ' || (4242420000000000 + doc_id % 100000)::VARCHAR || ' order 1234567890123456 end ' AS text FROM documents),
-         |c AS (SELECT doc_id, text, regexp_extract_all(text, '\d{13,19}', 0) AS cands FROM raw),
-         |v AS (SELECT doc_id, text, cands,
-         |  list_filter(cands, x -> length(x) > 0 AND
-         |    list_sum(list_transform(string_split(reverse(x), ''), (d, i) ->
-         |      CASE WHEN i % 2 = 0 THEN CASE WHEN d::INT * 2 > 9 THEN d::INT * 2 - 9 ELSE d::INT * 2 END ELSE d::INT END)) % 10 = 0) AS valid
-         |  FROM c)
-         |SELECT doc_id, len(cands)::BIGINT AS n_cands, len(valid)::BIGINT AS n_redacted,
-         |  list_reduce(list_prepend(text, valid), (a, b) -> replace(a, b, '<CC>')) AS text
-         |FROM v ORDER BY doc_id""".stripMargin),
-    // Same blurb built in SQL; counts on the raw text, then the redaction
-    // fold in declaration order (JWT before hex, see secretPatterns).
-    "ns67_secrets_scrub" ->
-      ("""WITH raw AS (SELECT doc_id,
-         |  text || ' key AKIA' || upper(substr(md5('aws:' || doc_id), 1, 16))
-         |       || ' fake AKIA' || upper(substr(md5('fake:' || doc_id), 1, 15))
-         |       || ' tok ghp_' || substr(md5('g1:' || doc_id) || md5('g2:' || doc_id), 1, 36)
-         |       || ' jwt eyJ' || substr(md5('j1:' || doc_id), 1, 10) || '.' || substr(md5('j2:' || doc_id), 1, 12) || '.' || substr(md5('j3:' || doc_id), 1, 10)
-         |       || ' sha ' || substr(md5('h1:' || doc_id) || md5('h2:' || doc_id), 1, 40)
-         |       || ' end' AS text FROM documents),
-         |cnt AS (SELECT doc_id, text,
-         |  len(regexp_extract_all(text, '\bAKIA[0-9A-Z]{16}\b')) AS n_aws_keys,
-         |  len(regexp_extract_all(text, '\bghp_[A-Za-z0-9]{36}\b')) AS n_gh_tokens,
-         |  len(regexp_extract_all(text, '\beyJ[A-Za-z0-9_-]+\.[A-Za-z0-9_-]+\.[A-Za-z0-9_-]+\b')) AS n_jwts,
-         |  len(regexp_extract_all(text, '\b[0-9a-f]{40}\b')) AS n_hex_secrets
-         |  FROM raw)
-         |SELECT doc_id, n_aws_keys, n_gh_tokens, n_jwts, n_hex_secrets,
-         |  regexp_replace(regexp_replace(regexp_replace(regexp_replace(text,
-         |    '\bAKIA[0-9A-Z]{16}\b', '<AWS_KEY>', 'g'),
-         |    '\bghp_[A-Za-z0-9]{36}\b', '<GH_TOKEN>', 'g'),
-         |    '\beyJ[A-Za-z0-9_-]+\.[A-Za-z0-9_-]+\.[A-Za-z0-9_-]+\b', '<JWT>', 'g'),
-         |    '\b[0-9a-f]{40}\b', '<HEX_SECRET>', 'g') AS text
-         |FROM cnt ORDER BY doc_id""".stripMargin),
-    // ns68 replays the line synthesis (banner + 8-word chunking + source
-    // footer), then the df>1 line drop and ordered reassembly. DuckDB zips
-    // the two parallel unnests (line, ordinal).
-    "ns68_dedup_lines" ->
-      (s"""WITH base AS (SELECT doc_id,
-         |  '${ns68Banner}' || chr(10) ||
-         |  regexp_replace(text, '((?:\\S+ ){7}\\S+) ', '\\1' || chr(10), 'g') ||
-         |  chr(10) || '${ns68Footer}' || source AS text FROM documents),
-         |lines AS (SELECT doc_id,
-         |  unnest(generate_series(1, len(string_split(text, chr(10))))) AS pos,
-         |  unnest(string_split(text, chr(10))) AS line FROM base),
-         |freq AS (SELECT line FROM (SELECT DISTINCT line, doc_id FROM lines)
-         |  GROUP BY line HAVING count(*) > 1),
-         |kept AS (SELECT l.doc_id, l.pos, l.line FROM lines l
-         |  ANTI JOIN freq f USING (line)),
-         |rebuilt AS (SELECT doc_id,
-         |  string_agg(line, chr(10) ORDER BY pos) AS text_clean,
-         |  count(*) AS kept_lines FROM kept GROUP BY doc_id)
-         |SELECT b.doc_id, coalesce(r.text_clean, '') AS text_clean,
-         |  coalesce(r.kept_lines, 0) AS kept_lines,
-         |  len(string_split(b.text, chr(10))) - coalesce(r.kept_lines, 0) AS dropped_lines
-         |FROM base b LEFT JOIN rebuilt r USING (doc_id) ORDER BY doc_id""".stripMargin),
-    // ns69 mirrors the spherical centroid (unit members, per-dim avg
-    // rounded to 6 — the ns42 rounding contract) and the bottom-k scoring.
-    "ns69_embedding_outliers" ->
-      ("""WITH emb AS (SELECT vec_id, label, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-         |unit AS (SELECT vec_id, label, v, nv, list_transform(v, x -> x / nv) AS u
-         |  FROM (SELECT vec_id, label, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nv FROM emb)
-         |  WHERE nv > 0),
-         |dims AS (SELECT label, unnest(generate_series(1, len(u))) AS d, unnest(u) AS x FROM unit),
-         |cent AS (SELECT label, d, round(avg(x), 6) AS c FROM dims GROUP BY label, d),
-         |centv AS (SELECT label, list(c ORDER BY d) AS cv,
-         |  sqrt(list_sum(list_transform(list(c ORDER BY d), x -> x * x))) AS nc FROM cent GROUP BY label),
-         |scored AS (SELECT u.label, u.vec_id,
-         |  round(list_sum(list_transform(range(1, len(u.v) + 1), i -> u.v[i] * cv[i])) / (u.nv * nc), 6) AS cosine
-         |  FROM unit u JOIN centv USING (label))
-         |SELECT label, row_number() OVER (PARTITION BY label ORDER BY cosine ASC, vec_id) AS rank, vec_id, cosine
-         |FROM scored QUALIFY rank <= 10 ORDER BY label, rank""".stripMargin),
-    // ns70 replays the URL synthesis, then the SAME five canonicalization
-    // steps as graft.ops.Urls.canonicalize (fragment, lowercase
-    // scheme/host, www + default port, slash collapse, tracking-param
-    // strip + sort) — the oracle validates the operator logic, not just
-    // the synthesized duplicates.
-    "ns70_dedup_url" ->
-      ("""WITH pages AS (SELECT doc_id, CASE doc_id % 5
-         |  WHEN 0 THEN 'https://WWW.Crawl.Example.org:443//a//' || (doc_id // 5) || '/?utm_source=feed&b=2&a=1#frag'
-         |  WHEN 1 THEN 'https://crawl.example.org/a/' || (doc_id // 5) || '?a=1&b=2'
-         |  WHEN 2 THEN 'HTTPS://www.crawl.example.org/a/' || (doc_id // 5) || '/?b=2&a=1&gclid=xyz'
-         |  WHEN 3 THEN 'https://crawl.example.org:443/a//' || (doc_id // 5) || '?a=1&ref=tw&b=2#x'
-         |  ELSE 'http://crawl.example.org:80/a/' || (doc_id // 5) || '?a=1&b=2' END AS url
-         |  FROM documents),
-         |parts AS (SELECT doc_id, url, nf,
-         |  lower(regexp_extract(nf, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-         |  lower(regexp_extract(nf, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)) AS hostraw,
-         |  regexp_extract(nf, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS pathraw,
-         |  regexp_extract(nf, '\?([^#]*)', 1) AS qraw
-         |  FROM (SELECT doc_id, url, regexp_replace(url, '#.*$', '') AS nf FROM pages)),
-         |canon AS (SELECT doc_id,
-         |  CASE WHEN scheme = '' THEN url ELSE scheme || '://' ||
-         |    CASE WHEN scheme = 'http' THEN regexp_replace(regexp_replace(hostraw, '^www\.', ''), ':80$', '')
-         |         WHEN scheme = 'https' THEN regexp_replace(regexp_replace(hostraw, '^www\.', ''), ':443$', '')
-         |         ELSE regexp_replace(hostraw, '^www\.', '') END ||
-         |    regexp_replace(regexp_replace(pathraw, '/{2,}', '/', 'g'), '/$', '') ||
-         |    CASE WHEN plist = '' THEN '' ELSE '?' || plist END END AS canonical_url
-         |  FROM (SELECT *, array_to_string(list_sort(list_filter(string_split(qraw, '&'),
-         |    p -> p <> '' AND NOT regexp_matches(p, '^(utm_[^=]*|fbclid|gclid|msclkid|ref|mc_cid|mc_eid)(=.*)?$'))), '&') AS plist
-         |    FROM parts))
-         |SELECT min(doc_id) AS doc_id, canonical_url, count(*) AS n_copies
-         |FROM canon GROUP BY canonical_url ORDER BY doc_id""".stripMargin),
-    // ns71 mirrors the exact-integer drift metric: HUGEINT cross-products,
-    // no float division anywhere.
-    "ns71_corpus_drift" ->
-      ("""WITH tok AS (SELECT doc_id % 2 AS side, unnest(string_split(text, ' ')) AS token FROM documents),
-         |cnt AS (SELECT token,
-         |  count(*) FILTER (WHERE side = 0) AS cnt_before,
-         |  count(*) FILTER (WHERE side = 1) AS cnt_after
-         |  FROM tok GROUP BY token),
-         |tot AS (SELECT sum(cnt_before) AS ta, sum(cnt_after) AS tb FROM cnt),
-         |sel AS (SELECT token, cnt_before, cnt_after,
-         |  (cnt_before::HUGEINT * tb - cnt_after::HUGEINT * ta)::BIGINT AS drift_num
-         |  FROM cnt, tot)
-         |SELECT row_number() OVER (ORDER BY abs(drift_num) DESC, token) AS rank,
-         |  token, cnt_before, cnt_after, drift_num
-         |FROM sel QUALIFY rank <= 50 ORDER BY rank""".stripMargin),
-    // ns73 chains the already-validated ns70 canonicalization and ns68
-    // line-dedup oracles in pipeline order: URL survivors first, line df
-    // computed over survivors only, gate, then content dedup.
-    "ns73_web_ingest" ->
-      (s"""WITH pages AS (SELECT doc_id,
-         |  CASE doc_id % 5
-         |  WHEN 0 THEN 'https://WWW.Crawl.Example.org:443//a//' || (doc_id // 5) || '/?utm_source=feed&b=2&a=1#frag'
-         |  WHEN 1 THEN 'https://crawl.example.org/a/' || (doc_id // 5) || '?a=1&b=2'
-         |  WHEN 2 THEN 'HTTPS://www.crawl.example.org/a/' || (doc_id // 5) || '/?b=2&a=1&gclid=xyz'
-         |  WHEN 3 THEN 'https://crawl.example.org:443/a//' || (doc_id // 5) || '?a=1&ref=tw&b=2#x'
-         |  ELSE 'http://crawl.example.org:80/a/' || (doc_id // 5) || '?a=1&b=2' END AS url,
-         |  '${ns68Banner}' || chr(10) ||
-         |  regexp_replace(text, '((?:\\S+ ){7}\\S+) ', '\\1' || chr(10), 'g') ||
-         |  chr(10) || '${ns68Footer}' || source AS text FROM documents),
-         |parts AS (SELECT doc_id, url, nf,
-         |  lower(regexp_extract(nf, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-         |  lower(regexp_extract(nf, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)) AS hostraw,
-         |  regexp_extract(nf, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS pathraw,
-         |  regexp_extract(nf, '\\?([^#]*)', 1) AS qraw
-         |  FROM (SELECT doc_id, url, regexp_replace(url, '#.*$$', '') AS nf FROM pages)),
-         |canon AS (SELECT doc_id,
-         |  CASE WHEN scheme = '' THEN url ELSE scheme || '://' ||
-         |    CASE WHEN scheme = 'http' THEN regexp_replace(regexp_replace(hostraw, '^www\\.', ''), ':80$$', '')
-         |         WHEN scheme = 'https' THEN regexp_replace(regexp_replace(hostraw, '^www\\.', ''), ':443$$', '')
-         |         ELSE regexp_replace(hostraw, '^www\\.', '') END ||
-         |    regexp_replace(regexp_replace(pathraw, '/{2,}', '/', 'g'), '/$$', '') ||
-         |    CASE WHEN plist = '' THEN '' ELSE '?' || plist END END AS canonical_url
-         |  FROM (SELECT *, array_to_string(list_sort(list_filter(string_split(qraw, '&'),
-         |    p -> p <> '' AND NOT regexp_matches(p, '^(utm_[^=]*|fbclid|gclid|msclkid|ref|mc_cid|mc_eid)(=.*)?$$'))), '&') AS plist
-         |    FROM parts)),
-         |urlkeep AS (SELECT min(doc_id) AS doc_id FROM canon GROUP BY canonical_url),
-         |surv AS (SELECT p.doc_id, p.text FROM pages p JOIN urlkeep USING (doc_id)),
-         |lines AS (SELECT doc_id,
-         |  unnest(generate_series(1, len(string_split(text, chr(10))))) AS pos,
-         |  unnest(string_split(text, chr(10))) AS line FROM surv),
-         |freq AS (SELECT line FROM (SELECT DISTINCT line, doc_id FROM lines)
-         |  GROUP BY line HAVING count(*) > 1),
-         |kept AS (SELECT l.doc_id, l.pos, l.line FROM lines l
-         |  ANTI JOIN freq f USING (line)),
-         |rebuilt AS (SELECT doc_id,
-         |  string_agg(line, chr(10) ORDER BY pos) AS text_clean,
-         |  count(*) AS kept_lines FROM kept GROUP BY doc_id),
-         |cleaned AS (SELECT s.doc_id, coalesce(r.text_clean, '') AS text_clean,
-         |  coalesce(r.kept_lines, 0) AS kept_lines
-         |  FROM surv s LEFT JOIN rebuilt r USING (doc_id)),
-         |gated AS (SELECT * FROM cleaned
-         |  WHERE kept_lines >= 2 AND len(text_clean) >= 40)
-         |SELECT min(doc_id) AS doc_id, count(*) AS n_content_copies,
-         |  min_by(kept_lines, doc_id) AS kept_lines
-         |FROM gated GROUP BY text_clean ORDER BY doc_id""".stripMargin),
-    // ns74 replays the strict-after conditional-min chain per stage.
-    "ns74_events_funnel" ->
-      ("""WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS tu FROM events),
-         |users AS (SELECT DISTINCT user_id FROM ev
-         |  WHERE event_type IN ('view', 'click', 'purchase')),
-         |s1 AS (SELECT user_id, min(tu) AS t1 FROM ev
-         |  WHERE event_type = 'view' GROUP BY user_id),
-         |s2 AS (SELECT e.user_id, min(e.tu) AS t2 FROM ev e
-         |  JOIN s1 ON e.user_id = s1.user_id
-         |  WHERE e.event_type = 'click' AND e.tu > s1.t1 GROUP BY e.user_id),
-         |s3 AS (SELECT e.user_id, min(e.tu) AS t3 FROM ev e
-         |  JOIN s2 ON e.user_id = s2.user_id
-         |  WHERE e.event_type = 'purchase' AND e.tu > s2.t2 GROUP BY e.user_id)
-         |SELECT u.user_id,
-         |  CASE WHEN t3 IS NOT NULL THEN 3 WHEN t2 IS NOT NULL THEN 2
-         |       WHEN t1 IS NOT NULL THEN 1 ELSE 0 END AS reached,
-         |  t1, t2, t3
-         |FROM users u LEFT JOIN s1 USING (user_id)
-         |  LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)
-         |ORDER BY user_id""".stripMargin),
-    // ns75 replays the integer bucket/cohort arithmetic.
-    "ns75_events_retention" ->
-      ("""WITH pairs AS (SELECT DISTINCT user_id,
-         |  epoch_us(ts) // 604800000000 AS bucket FROM events),
-         |fs AS (SELECT user_id, min(bucket) AS cohort FROM pairs GROUP BY user_id)
-         |SELECT fs.cohort, p.bucket - fs.cohort AS week_offset,
-         |  count(DISTINCT p.user_id) AS active_users
-         |FROM pairs p JOIN fs USING (user_id)
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    // ns76 joins the exact base aggregates with the ns44-style global HLL.
-    "ns76_dataset_card" ->
-      ("""WITH t AS (SELECT source, lang, length(text) AS nc,
-         |  len(string_split(text, ' ')) AS nt, text FROM documents),
-         |base AS (SELECT count(*) AS n_docs,
-         |  count(DISTINCT source) AS n_sources,
-         |  count(DISTINCT lang) AS n_langs,
-         |  sum(nc)::BIGINT AS total_chars, sum(nt)::BIGINT AS total_tokens,
-         |  min(nt) AS min_tokens, max(nt) AS max_tokens FROM t),
-         |h AS (SELECT ('0x' || substr(md5(text), 1, 15))::BIGINT AS h
-         |  FROM documents WHERE text IS NOT NULL),
-         |r AS (SELECT h % 1024 AS bucket, h // 1024 AS w FROM h),
-         |rk AS (SELECT bucket, max(CASE WHEN w = 0 THEN 51 ELSE 50 - (length(bin(w)) - 1) END) AS mr FROM r GROUP BY bucket),
-         |agg AS (SELECT count(*) AS n_registers, sum(1.0::DOUBLE / (1::BIGINT << mr)) AS zp FROM rk),
-         |e AS (SELECT n_registers, (1024 - n_registers)::DOUBLE AS v,
-         |  0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 1024.0::DOUBLE) * 1024.0::DOUBLE * 1024.0::DOUBLE / (zp + (1024 - n_registers)) AS raw_e
-         |  FROM agg),
-         |est AS (SELECT n_registers,
-         |  round(CASE WHEN raw_e <= 2560.0::DOUBLE AND v > 0 THEN 1024.0::DOUBLE * ln(1024.0::DOUBLE / v) ELSE raw_e END, 6) AS distinct_text_est
-         |  FROM e)
-         |SELECT b.n_docs, b.n_sources, b.n_langs, b.total_chars,
-         |  b.total_tokens, b.min_tokens, b.max_tokens,
-         |  est.n_registers, est.distinct_text_est
-         |FROM base b, est""".stripMargin),
-    // ns72 replays the quasi-key group stats and the k/l release gate.
-    "ns72_k_anonymity" ->
-      ("""WITH cust AS (SELECT c_custkey, c_mktsegment AS segment,
-         |  c_nationkey % 5 AS region,
-         |  CAST(floor(c_acctbal / 1000) AS INT) AS balance_band FROM customer),
-         |g AS (SELECT segment, region, count(*) AS group_size,
-         |  count(DISTINCT balance_band) AS n_sensitive FROM cust GROUP BY 1, 2
-         |  HAVING count(*) >= 50 AND count(DISTINCT balance_band) >= 3)
-         |SELECT c.c_custkey, c.segment, c.region, g.group_size, g.n_sensitive
-         |FROM cust c JOIN g ON c.segment IS NOT DISTINCT FROM g.segment
-         |  AND c.region IS NOT DISTINCT FROM g.region
-         |ORDER BY c_custkey""".stripMargin),
-    // ns77 replays the url synthesis, the hostOf normalization, the
-    // (host, md5)-distinct stats, and both release gates.
-    "ns77_host_reputation" ->
-      ("""WITH p AS (SELECT doc_id,
-         |  CASE WHEN doc_id = 0 THEN 'https://lonely.example.org/only'
-         |       WHEN doc_id % 2 = 0 THEN 'HTTPS://WWW.h' || (doc_id % 7) || '.Example.org:443/p/' || doc_id
-         |       ELSE 'https://h' || (doc_id % 7) || '.example.org/p/' || doc_id END AS url,
-         |  CASE WHEN doc_id % 7 = 0 THEN 'cheap spam page body' ELSE text END AS t
-         |  FROM documents),
-         |h AS (SELECT doc_id, t, host FROM (SELECT doc_id, t,
-         |  CASE WHEN scheme = 'http' THEN regexp_replace(nw, ':80$', '')
-         |       WHEN scheme = 'https' THEN regexp_replace(nw, ':443$', '')
-         |       ELSE nw END AS host
-         |  FROM (SELECT doc_id, t,
-         |    lower(regexp_extract(nf, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-         |    regexp_replace(lower(regexp_extract(nf, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)), '^www\.', '') AS nw
-         |    FROM (SELECT doc_id, t, regexp_replace(url, '#.*$', '') AS nf FROM p)))
-         |  WHERE host IS NOT NULL AND host <> ''),
-         |g AS (SELECT host, count(*) AS host_docs,
-         |  ((count(*) - count(DISTINCT md5(t))) * 1000 // count(*))::BIGINT AS dup_permille
-         |  FROM h GROUP BY 1),
-         |r AS (SELECT * FROM g WHERE host_docs >= 3 AND dup_permille <= 500)
-         |SELECT h.doc_id, h.host, r.host_docs, r.dup_permille
-         |FROM h JOIN r USING (host) ORDER BY doc_id""".stripMargin),
-    // ns78 replays the hash-ordered running token sum and the budget gate.
-    "ns78_source_token_cap" ->
-      ("""WITH d AS (SELECT doc_id, source,
-         |  len(string_split(text, ' '))::BIGINT AS n_tokens,
-         |  ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT AS hk
-         |  FROM documents),
-         |c AS (SELECT doc_id, source, n_tokens,
-         |  (sum(n_tokens) OVER (PARTITION BY source ORDER BY hk, doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |    - n_tokens)::BIGINT AS cum_before
-         |  FROM d)
-         |SELECT doc_id, source, n_tokens, cum_before FROM c
-         |WHERE cum_before < 800 ORDER BY doc_id""".stripMargin),
-    // ns79 replays the per-user lead window and the type-pair rollup.
-    "ns79_event_transitions" ->
-      ("""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts,
-         |  event_type FROM events),
-         |t AS (SELECT user_id, event_type AS from_type,
-         |  lead(event_type) OVER (PARTITION BY user_id
-         |    ORDER BY ts, event_id) AS to_type FROM e)
-         |SELECT from_type, to_type, count(*) AS n_transitions,
-         |  count(DISTINCT user_id) AS n_users
-         |FROM t WHERE to_type IS NOT NULL GROUP BY 1, 2
-         |ORDER BY n_transitions DESC, from_type, to_type""".stripMargin),
-    // ns80 replays the ns57 bin walk at the quartile qs, then the
-    // strictly-below boundary count per doc.
-    "ns80_curriculum_buckets" ->
-      ("""WITH b AS (SELECT lang, n_chars // 16 AS bin FROM documents WHERE n_chars IS NOT NULL),
-         |c AS (SELECT lang, bin, count(*) AS cnt FROM b GROUP BY 1, 2),
-         |w AS (SELECT lang, bin, sum(cnt) OVER (PARTITION BY lang ORDER BY bin) AS cum, sum(cnt) OVER (PARTITION BY lang) AS n FROM c),
-         |qs AS (SELECT unnest([0.25::DOUBLE, 0.5::DOUBLE, 0.75::DOUBLE]) AS q),
-         |bd AS (SELECT lang, q, min(bin) * 16 AS bv
-         |  FROM w CROSS JOIN qs WHERE cum >= ceil(q * n) GROUP BY lang, q)
-         |SELECT d.doc_id, d.lang, d.n_chars,
-         |  (1 + sum(CASE WHEN d.n_chars > bd.bv THEN 1 ELSE 0 END))::BIGINT AS bucket
-         |FROM documents d JOIN bd ON d.lang IS NOT DISTINCT FROM bd.lang
-         |WHERE d.n_chars IS NOT NULL
-         |GROUP BY d.doc_id, d.lang, d.n_chars ORDER BY d.doc_id""".stripMargin),
-    // ns81 replays the byte-stride 9x8 grid (hex-encoded blob, the ns12
-    // pattern), packs the 63 dHash gradient bits, and computes near-dup
-    // pairs BRUTE-FORCE — the engine's banded join is pigeonhole-exact at
-    // maxHamming=3 < bands=4, so all-pairs SQL is the same function.
-    "ns81_image_neardup" ->
-      ("""WITH base AS (SELECT doc_id, text FROM documents),
-         |fam AS (SELECT d.doc_id,
-         |  CASE d.doc_id % 5
-         |    WHEN 0 THEN b.text
-         |    WHEN 1 THEN b.text
-         |    WHEN 2 THEN substr(b.text, 1, 10) || '#' || substr(b.text, 12)
-         |    WHEN 3 THEN substr(b.text, 1, 20) || '@' || substr(b.text, 22)
-         |    ELSE reverse(b.text) END AS t
-         |  FROM base d JOIN base b ON b.doc_id = d.doc_id - d.doc_id % 5),
-         |h AS (SELECT doc_id, hex(encode(t)) AS hx, octet_length(encode(t)) AS n FROM fam),
-         |cells AS (SELECT doc_id, i,
-         |  CASE WHEN n = 0 THEN 0 ELSE ('0x' || substr(hx, (2 * ((i * n) // 72) + 1)::INT, 2))::INT END AS v
-         |  FROM h, (SELECT unnest(range(0, 72)) AS i) r),
-         |bits AS (SELECT a.doc_id, ((a.i // 9) * 8 + (a.i % 9))::INT AS k,
-         |  CASE WHEN a.v < b.v THEN 1::BIGINT ELSE 0::BIGINT END AS bit
-         |  FROM cells a JOIN cells b ON a.doc_id = b.doc_id AND b.i = a.i + 1
-         |  WHERE a.i % 9 < 8 AND (a.i // 9) * 8 + (a.i % 9) < 63),
-         |ph AS (SELECT doc_id, sum(bit << k)::BIGINT AS phash FROM bits GROUP BY doc_id)
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  bit_count(xor(a.phash, b.phash))::BIGINT AS hamming
-         |FROM ph a JOIN ph b ON a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.phash, b.phash)) <= 3
-         |ORDER BY doc_a, doc_b""".stripMargin),
-    // ns82 replays the two-tick lifecycle DECISION: tick-1 survivors are
-    // batch docs with no corpus hash within hamming 3; tick-2 probes
-    // corpus + tick-1 survivors (the update made load-bearing). The
-    // engine's stored index artifacts must reproduce exactly this.
-    "ns82_phash_lifecycle" ->
-      ("""WITH base AS (SELECT doc_id, text FROM documents),
-         |fam AS (SELECT d.doc_id,
-         |  CASE d.doc_id % 5
-         |    WHEN 0 THEN b.text
-         |    WHEN 1 THEN b.text
-         |    WHEN 2 THEN substr(reverse(b.text), 1, 10) || '#' || substr(reverse(b.text), 12)
-         |    WHEN 3 THEN substr(b.text, 1, 20) || '@' || substr(b.text, 22)
-         |    ELSE reverse(b.text) END AS t
-         |  FROM base d JOIN base b ON b.doc_id = d.doc_id - d.doc_id % 5),
-         |h AS (SELECT doc_id, hex(encode(t)) AS hx, octet_length(encode(t)) AS n FROM fam),
-         |cells AS (SELECT doc_id, i,
-         |  CASE WHEN n = 0 THEN 0 ELSE ('0x' || substr(hx, (2 * ((i * n) // 72) + 1)::INT, 2))::INT END AS v
-         |  FROM h, (SELECT unnest(range(0, 72)) AS i) r),
-         |bits AS (SELECT a.doc_id, ((a.i // 9) * 8 + (a.i % 9))::INT AS k,
-         |  CASE WHEN a.v < b.v THEN 1::BIGINT ELSE 0::BIGINT END AS bit
-         |  FROM cells a JOIN cells b ON a.doc_id = b.doc_id AND b.i = a.i + 1
-         |  WHERE a.i % 9 < 8 AND (a.i // 9) * 8 + (a.i % 9) < 63),
-         |ph AS (SELECT doc_id, sum(bit << k)::BIGINT AS phash FROM bits GROUP BY doc_id),
-         |corpus AS (SELECT phash FROM ph WHERE doc_id % 5 <= 1),
-         |s1 AS (SELECT doc_id, phash FROM ph b WHERE doc_id % 5 = 4
-         |  AND NOT EXISTS (SELECT 1 FROM corpus c
-         |    WHERE bit_count(xor(b.phash, c.phash)) <= 3)),
-         |idx2 AS (SELECT phash FROM corpus UNION ALL SELECT phash FROM s1),
-         |s2 AS (SELECT doc_id, phash FROM ph b WHERE doc_id % 5 IN (2, 3)
-         |  AND NOT EXISTS (SELECT 1 FROM idx2 c
-         |    WHERE bit_count(xor(b.phash, c.phash)) <= 3))
-         |SELECT doc_id, phash FROM s1
-         |UNION ALL SELECT doc_id, phash FROM s2 ORDER BY doc_id""".stripMargin),
-    // ns83 replays the 64-byte frame windows (every 2nd sampled), the
-    // per-frame stride grid + bit packing, and the repeated-keyframe
-    // rollup.
-    "ns83_keyframe_dedup" ->
-      (framePhashCteSql +
-        """
-         |SELECT phash, count(*) AS n_frames,
-         |  count(DISTINCT doc_id) AS n_docs
-         |FROM ph GROUP BY phash HAVING count(*) > 1 ORDER BY phash""".stripMargin),
-    // ns84 replays the BLOCKED linkage contract: same name synthesis,
-    // same two block keys, same levenshtein gate — blocking is the
-    // operator's semantics, so oracle and engine are the same function.
-    "ns84_record_linkage" ->
-      ("""WITH c AS (SELECT c_custkey, c_nationkey,
-         |  substr(md5(c_custkey::VARCHAR), 1, 12) AS nm0 FROM customer),
-         |recs AS (SELECT c_custkey * 3 + v AS rec_id, c_nationkey,
-         |  CASE v WHEN 0 THEN nm0
-         |         WHEN 1 THEN substr(nm0, 1, 1) || 'z' || substr(nm0, 3)
-         |         ELSE substr(md5('x' || c_custkey::VARCHAR), 1, 12) END AS nm
-         |  FROM c, (SELECT unnest([0, 1, 2]) AS v) vs),
-         |blocked AS (SELECT rec_id, c_nationkey, nm, ki,
-         |  CASE ki WHEN 0 THEN substr(nm, 1, 4)
-         |          ELSE substr(nm, greatest(length(nm) - 3, 1), 4) END AS key
-         |  FROM recs, (SELECT unnest([0, 1]) AS ki) ks)
-         |SELECT DISTINCT a.rec_id AS rec_a, b.rec_id AS rec_b,
-         |  levenshtein(a.nm, b.nm)::BIGINT AS dist
-         |FROM blocked a JOIN blocked b
-         |  ON a.ki = b.ki AND a.key = b.key
-         |  AND a.c_nationkey IS NOT DISTINCT FROM b.c_nationkey
-         |  AND a.rec_id < b.rec_id
-         |WHERE levenshtein(a.nm, b.nm) <= 1
-         |ORDER BY rec_a, rec_b""".stripMargin),
-    // ns85 replays the rollup grouping sets with GROUPING markers — the
-    // subtotal-NULL vs data-NULL disambiguation is part of the contract.
-    "ns85_release_rollup" ->
-      ("""SELECT source, lang,
-         |  GROUPING(source)::BIGINT AS g_source,
-         |  GROUPING(lang)::BIGINT AS g_lang,
-         |  count(*) AS n_docs,
-         |  sum(len(string_split(text, ' ')))::BIGINT AS n_tokens
-         |FROM documents
-         |GROUP BY ROLLUP (source, lang)
-         |ORDER BY g_source, g_lang, source NULLS FIRST, lang NULLS FIRST""".stripMargin),
-    // ns86's oracle recomputes the NEW snapshot's token counts from
-    // scratch — the engine side maintains them incrementally off the
-    // fringe, so hash equality proves the maintenance algebra exact.
-    "ns86_token_maintenance" ->
-      ("""WITH newsnap AS (
-         |  SELECT doc_id, CASE WHEN doc_id % 37 = 0 THEN text || ' v2' ELSE text END AS text
-         |  FROM documents WHERE doc_id >= 20
-         |  UNION ALL
-         |  SELECT doc_id + (SELECT max(doc_id) + 1 FROM documents), text FROM documents WHERE doc_id < 10),
-         |tok AS (SELECT unnest(string_split(text, ' ')) AS token FROM newsnap)
-         |SELECT token, count(*) AS cnt FROM tok
-         |GROUP BY token ORDER BY token""".stripMargin),
-    // ns87 replays the exact-integer fixed-point iteration verbatim —
-    // five chained CTE rounds of the same floor-division contribution
-    // and integer sums (sum() is HUGEINT in DuckDB, cast back ::BIGINT:
-    // the ns71 lesson).
-    "ns87_link_pagerank" ->
-      ("""WITH nn AS (SELECT max(doc_id) + 1 AS n FROM documents),
-         |e AS (SELECT doc_id AS src, (doc_id * 31 + 7) % n AS dst FROM documents, nn
-         |  UNION ALL SELECT doc_id, (doc_id * doc_id * 17 + 3) % n FROM documents, nn),
-         |nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-         |deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src),
-         |r0 AS (SELECT node, 1000000::BIGINT AS rank FROM nodes),
-         |c1 AS (SELECT e.dst, sum((850 * r.rank) // (1000 * d.outdeg)) AS m
-         |  FROM e JOIN r0 r ON e.src = r.node JOIN deg d ON d.src = e.src GROUP BY e.dst),
-         |r1 AS (SELECT node, (150000 + coalesce(m, 0))::BIGINT AS rank FROM nodes LEFT JOIN c1 ON c1.dst = node),
-         |c2 AS (SELECT e.dst, sum((850 * r.rank) // (1000 * d.outdeg)) AS m
-         |  FROM e JOIN r1 r ON e.src = r.node JOIN deg d ON d.src = e.src GROUP BY e.dst),
-         |r2 AS (SELECT node, (150000 + coalesce(m, 0))::BIGINT AS rank FROM nodes LEFT JOIN c2 ON c2.dst = node),
-         |c3 AS (SELECT e.dst, sum((850 * r.rank) // (1000 * d.outdeg)) AS m
-         |  FROM e JOIN r2 r ON e.src = r.node JOIN deg d ON d.src = e.src GROUP BY e.dst),
-         |r3 AS (SELECT node, (150000 + coalesce(m, 0))::BIGINT AS rank FROM nodes LEFT JOIN c3 ON c3.dst = node),
-         |c4 AS (SELECT e.dst, sum((850 * r.rank) // (1000 * d.outdeg)) AS m
-         |  FROM e JOIN r3 r ON e.src = r.node JOIN deg d ON d.src = e.src GROUP BY e.dst),
-         |r4 AS (SELECT node, (150000 + coalesce(m, 0))::BIGINT AS rank FROM nodes LEFT JOIN c4 ON c4.dst = node),
-         |c5 AS (SELECT e.dst, sum((850 * r.rank) // (1000 * d.outdeg)) AS m
-         |  FROM e JOIN r4 r ON e.src = r.node JOIN deg d ON d.src = e.src GROUP BY e.dst),
-         |r5 AS (SELECT node, (150000 + coalesce(m, 0))::BIGINT AS rank FROM nodes LEFT JOIN c5 ON c5.dst = node)
-         |SELECT node, rank FROM r5 ORDER BY rank DESC, node""".stripMargin),
-    // ns88 counts triangles BRUTE-FORCE over the canonical a<b edge list
-    // (x<y<z falls out of chaining) — the engine's degree-ordered
-    // orientation is execution strategy, not semantics.
-    "ns88_link_triangles" ->
-      ("""WITH nn AS (SELECT max(doc_id) + 1 AS n FROM documents),
-         |ed AS (SELECT doc_id AS src, (doc_id * 31 + 7) % n AS dst FROM documents, nn
-         |  UNION ALL SELECT doc_id, (doc_id * doc_id * 17 + 3) % n FROM documents, nn),
-         |und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM ed WHERE src <> dst),
-         |nodes AS (SELECT a AS node FROM und UNION SELECT b FROM und),
-         |tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-         |  FROM und e1 JOIN und e2 ON e2.a = e1.b
-         |  JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
-         |cnt AS (SELECT node, count(*) AS c FROM (
-         |  SELECT x AS node FROM tri UNION ALL SELECT y FROM tri
-         |  UNION ALL SELECT z FROM tri) t GROUP BY node)
-         |SELECT nodes.node AS node, coalesce(c, 0)::BIGINT AS n_triangles
-         |FROM nodes LEFT JOIN cnt ON cnt.node = nodes.node
-         |ORDER BY nodes.node""".stripMargin),
-    // ns89 replays the exact geometric sampling: Geometric(1/2) = the
-    // trailing-zero count of an md5-derived 60-bit uniform, computed as
-    // bit_count((h & -h) - 1) — no floats, identical truncation.
-    "ns89_dp_counts" ->
-      ("""WITH g AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
-         |h AS (SELECT lang, n,
-         |  ('0x' || substr(md5('dp1:42:' || coalesce(lang, chr(30))), 1, 15))::BIGINT AS h1,
-         |  ('0x' || substr(md5('dp2:42:' || coalesce(lang, chr(30))), 1, 15))::BIGINT AS h2
-         |  FROM g)
-         |SELECT lang,
-         |  (n + (CASE WHEN h1 = 0 THEN 60 ELSE bit_count((h1 & -h1) - 1) END)
-         |     - (CASE WHEN h2 = 0 THEN 60 ELSE bit_count((h2 & -h2) - 1) END))::BIGINT AS noisy_count
-         |FROM h ORDER BY lang NULLS FIRST""".stripMargin),
-    // ns90 recomputes the audio grid from first principles: sample i of
-    // variant t is u8 = (byte_i·37 + i·11) mod 256, cell = (u8 >> 5)·9 +
-    // (i·9 div n), dHash bits over horizontally-adjacent cell counts —
-    // the engine's WAV container + javax.sound parse must land on the
-    // same 63 bits for every doc for the hash to match.
-    "ns90_audio_neardup" ->
-      (wavGridCteSql +
-        """,
-         |bits AS (SELECT a.doc_id, ((a.i // 9) * 8 + (a.i % 9))::INT AS k,
-         |  CASE WHEN a.v < b.v THEN 1::BIGINT ELSE 0::BIGINT END AS bit
-         |  FROM grid a JOIN grid b ON a.doc_id = b.doc_id AND b.i = a.i + 1
-         |  WHERE a.i % 9 < 8 AND (a.i // 9) * 8 + (a.i % 9) < 63),
-         |ph AS (SELECT doc_id, sum(bit << k)::BIGINT AS phash FROM bits GROUP BY doc_id)
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  bit_count(xor(a.phash, b.phash))::BIGINT AS hamming
-         |FROM ph a JOIN ph b ON a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.phash, b.phash)) <= 3
-         |ORDER BY doc_a, doc_b""".stripMargin),
-    // ns91 replays ns89's mechanism over the declared public domain: a
-    // LEFT JOIN from the domain list carries unobserved keys through as
-    // coalesced zeros, which then draw noise exactly like real counts.
-    "ns91_dp_domain" ->
-      ("""WITH dom AS (SELECT unnest(['de','en','es','fr','it','ja','zh']) AS lang),
-         |g AS (SELECT lang, count(*) AS n_obs FROM documents GROUP BY lang),
-         |f AS (SELECT dom.lang AS lang, coalesce(n_obs, 0) AS n FROM dom
-         |  LEFT JOIN g ON g.lang IS NOT DISTINCT FROM dom.lang),
-         |h AS (SELECT lang, n,
-         |  ('0x' || substr(md5('dp1:42:' || coalesce(lang, chr(30))), 1, 15))::BIGINT AS h1,
-         |  ('0x' || substr(md5('dp2:42:' || coalesce(lang, chr(30))), 1, 15))::BIGINT AS h2
-         |  FROM f)
-         |SELECT lang,
-         |  (n + (CASE WHEN h1 = 0 THEN 60 ELSE bit_count((h1 & -h1) - 1) END)
-         |     - (CASE WHEN h2 = 0 THEN 60 ELSE bit_count((h2 & -h2) - 1) END))::BIGINT AS noisy_count
-         |FROM h ORDER BY lang NULLS FIRST""".stripMargin),
-    // ns92 replays the integer admission test exactly: s = floor(sqrt(n))
-    // is exact below 2^52 (IEEE sqrt is correctly rounded), u32 is the
-    // first 8 md5 hex chars, and all products stay in BIGINT.
-    "ns92_temperature_mix" ->
-      ("""WITH n AS (SELECT lang, count(*) AS n_l FROM documents GROUP BY lang),
-         |s AS (SELECT lang, floor(sqrt(n_l))::BIGINT AS s_l FROM n),
-         |m AS (SELECT min(s_l) AS s_min FROM s)
-         |SELECT d.doc_id, d.lang FROM documents d
-         |JOIN s ON s.lang IS NOT DISTINCT FROM d.lang
-         |CROSS JOIN m
-         |WHERE ('0x' || substr(md5('tmix:42:' || doc_id), 1, 8))::BIGINT * s_l
-         |      < 4294967296 * s_min
-         |ORDER BY d.doc_id""".stripMargin),
-    // ns93's oracle uses the single-partition window the ENGINE refuses
-    // to plan — fine at oracle SF, and exactly the contrast the operator
-    // exists for: same function, scalable execution.
-    "ns93_epoch_order" ->
-      ("""SELECT row_number() OVER (ORDER BY n_chars // 256,
-         |    ('0x' || substr(md5('ep:42:' || doc_id), 1, 15))::BIGINT,
-         |    doc_id)::BIGINT AS pos, doc_id
-         |FROM documents ORDER BY pos""".stripMargin),
-    // ns94 rebuilds the jsonl lines by concatenation (identical bytes to
-    // the engine's writer) and splits on json_valid: Spark's PERMISSIVE
-    // JSON parser and DuckDB's validator must agree line-for-line, and
-    // the corrupt branch recovers line_id with the same regex.
-    "ns94_jsonl_ingest" ->
-      ("""WITH j0 AS (SELECT doc_id,
-         |    '{"line_id":' || doc_id || ',"lang":"' || coalesce(lang, 'und') ||
-         |    '","n_chars":' || n_chars || '}' AS j FROM documents),
-         |raw AS (SELECT CASE WHEN doc_id % 11 = 3
-         |    THEN substr(j, 1, length(j) - 5) ELSE j END AS raw FROM j0)
-         |SELECT
-         |  CASE WHEN json_valid(raw) THEN json_extract(raw, '$.line_id')::BIGINT
-         |       ELSE regexp_extract(raw, '"line_id":([0-9]+)', 1)::BIGINT END AS line_id,
-         |  CASE WHEN json_valid(raw) THEN json_extract_string(raw, '$.lang') END AS lang,
-         |  CASE WHEN json_valid(raw) THEN json_extract(raw, '$.n_chars')::BIGINT END AS n_chars,
-         |  NOT json_valid(raw) AS corrupt
-         |FROM raw ORDER BY line_id""".stripMargin),
-    // ns95's oracle is the window-rank formulation the engine's bounded
-    // heap replaces — same function, scalable execution.
-    "ns95_group_topk" ->
-      ("""SELECT lang, rn AS rank, doc_id, n_chars FROM (
-         |  SELECT lang, doc_id, n_chars,
-         |    row_number() OVER (PARTITION BY lang
-         |      ORDER BY n_chars DESC, doc_id) AS rn
-         |  FROM documents) t
-         |WHERE rn <= 3 ORDER BY lang NULLS FIRST, rank""".stripMargin),
-    // ns96 replays ns84's linkage, resolves components with a recursive
-    // transitive-closure CTE (cluster = min reachable id, the engine's
-    // pointer-jumping contract), and re-elects the golden record by the
-    // same (completeness desc, id asc) total order via window rank.
-    "ns96_golden_records" ->
-      ("""WITH RECURSIVE c AS (SELECT c_custkey, c_nationkey,
-         |  substr(md5(c_custkey::VARCHAR), 1, 12) AS nm0 FROM customer),
-         |recs AS (SELECT c_custkey * 3 + v AS rec_id, c_nationkey,
-         |  CASE v WHEN 0 THEN nm0
-         |         WHEN 1 THEN substr(nm0, 1, 1) || 'z' || substr(nm0, 3)
-         |         ELSE substr(md5('x' || c_custkey::VARCHAR), 1, 12) END AS nm
-         |  FROM c, (SELECT unnest([0, 1, 2]) AS v) vs),
-         |recs2 AS (SELECT rec_id, c_nationkey, nm,
-         |  CASE WHEN rec_id % 4 = 1 THEN NULL ELSE 'p' || rec_id END AS phone,
-         |  CASE WHEN rec_id % 3 = 0 THEN NULL ELSE 'e' || rec_id END AS email
-         |  FROM recs),
-         |blocked AS (SELECT rec_id, c_nationkey, nm, ki,
-         |  CASE ki WHEN 0 THEN substr(nm, 1, 4)
-         |          ELSE substr(nm, greatest(length(nm) - 3, 1), 4) END AS key
-         |  FROM recs2, (SELECT unnest([0, 1]) AS ki) ks),
-         |pairs AS (SELECT DISTINCT a.rec_id AS rec_a, b.rec_id AS rec_b
-         |  FROM blocked a JOIN blocked b
-         |    ON a.ki = b.ki AND a.key = b.key
-         |    AND a.c_nationkey IS NOT DISTINCT FROM b.c_nationkey
-         |    AND a.rec_id < b.rec_id
-         |  WHERE levenshtein(a.nm, b.nm) <= 1),
-         |edges AS (SELECT rec_a AS a, rec_b AS b FROM pairs
-         |  UNION SELECT rec_b, rec_a FROM pairs),
-         |reach AS (SELECT a AS node, b AS r FROM edges
-         |  UNION SELECT reach.node, e.b FROM reach JOIN edges e ON e.a = reach.r),
-         |comp AS (SELECT node, least(node, min(r)) AS cluster
-         |  FROM reach GROUP BY node),
-         |withc AS (SELECT r.rec_id,
-         |  coalesce(comp.cluster, r.rec_id) AS cluster,
-         |  ((CASE WHEN phone IS NULL THEN 0 ELSE 1 END)
-         |   + (CASE WHEN email IS NULL THEN 0 ELSE 1 END))::BIGINT AS compl
-         |  FROM recs2 r LEFT JOIN comp ON comp.node = r.rec_id)
-         |SELECT cluster, golden_id, n_members, completeness FROM (
-         |  SELECT cluster, rec_id AS golden_id,
-         |    count(*) OVER (PARTITION BY cluster) AS n_members,
-         |    max(compl) OVER (PARTITION BY cluster) AS completeness,
-         |    row_number() OVER (PARTITION BY cluster
-         |      ORDER BY compl DESC, rec_id) AS rn
-         |  FROM withc) t
-         |WHERE rn = 1 ORDER BY cluster""".stripMargin),
-    // ns97 replays the clipped sum + clip-scaled geometric noise; the
-    // sum stays HUGEINT internally, final cast ::BIGINT (the ns71 rule).
-    "ns97_dp_sum" ->
-      ("""WITH g AS (SELECT lang,
-         |    sum(least(greatest(n_chars, 0), 2000)) AS n
-         |  FROM documents GROUP BY lang),
-         |h AS (SELECT lang, n,
-         |  ('0x' || substr(md5('dp1:7:' || coalesce(lang, chr(30))), 1, 15))::BIGINT AS h1,
-         |  ('0x' || substr(md5('dp2:7:' || coalesce(lang, chr(30))), 1, 15))::BIGINT AS h2
-         |  FROM g)
-         |SELECT lang,
-         |  (n + 2000 * ((CASE WHEN h1 = 0 THEN 60 ELSE bit_count((h1 & -h1) - 1) END)
-         |             - (CASE WHEN h2 = 0 THEN 60 ELSE bit_count((h2 & -h2) - 1) END)))::BIGINT AS noisy_sum
-         |FROM h ORDER BY lang NULLS FIRST""".stripMargin),
-    // ns98 recomputes the whole exact-integer BM25 pipeline from scratch:
-    // corpus stats, df, the rational milli-idf, and the micro-unit tf
-    // saturation — every division is floor division over integers, so the
-    // scores (not just the top-k membership) must hash-match.
-    "ns98_bm25_retrieval" ->
-      ("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         |st AS (SELECT count(*) AS n_docs, sum(len(w)) AS total_len FROM w),
-         |tok AS (SELECT doc_id, len(w) AS dl, unnest(w) AS term FROM w),
-         |tf AS (SELECT doc_id, term, count(*) AS tf, max(dl) AS dl FROM tok
-         |  WHERE term IN ('dup', 'vector', 'stream') GROUP BY doc_id, term),
-         |df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-         |sc AS (SELECT tf.doc_id,
-         |    ((1000 * (2 * st.n_docs - 2 * df.df + 1)) // (2 * df.df + 1)) *
-         |    ((tf.tf * 2200 * 1000000) // (tf.tf * 1000000 +
-         |      1200 * (1000 - 750 + (750 * tf.dl * 1000) // ((st.total_len * 1000) // st.n_docs)))) AS s_term
-         |  FROM tf JOIN df USING (term), st)
-         |SELECT doc_id, count(*) AS n_matched, sum(s_term)::BIGINT AS bm25_milli
-         |FROM sc GROUP BY doc_id ORDER BY bm25_milli DESC, doc_id LIMIT 20""".stripMargin),
-    // ns99 rebuilds both snapshot ticks and replays the run algebra with
-    // the same lag/lead + conditional-min-over-following-frame device the
-    // engine uses; fingerprints follow the suite's chr(31)/chr(30)
-    // convention from ns56.
-    "ns99_scd_history" ->
-      ("""WITH v0 AS (SELECT doc_id, text, lang, source, n_chars FROM documents),
-         |v1 AS (SELECT doc_id, CASE WHEN doc_id % 37 = 0 THEN text || ' v2' ELSE text END AS text, lang, source, n_chars FROM v0 WHERE doc_id >= 20
-         |  UNION ALL SELECT doc_id + (SELECT max(doc_id) + 1 FROM v0), text, lang, source, n_chars FROM v0 WHERE doc_id < 10),
-         |v2 AS (SELECT doc_id, CASE WHEN doc_id % 37 = 0 THEN text || ' v2' ELSE text END AS text, lang, source, n_chars FROM v1 WHERE doc_id >= 20
-         |  UNION ALL SELECT doc_id + (SELECT max(doc_id) + 1 FROM v1), text, lang, source, n_chars FROM v1 WHERE doc_id < 10),
-         |u AS (
-         |  SELECT doc_id, 0 AS version, md5(concat_ws(chr(31), coalesce(text, chr(30)), coalesce(lang, chr(30)), coalesce(source, chr(30)), coalesce(n_chars::VARCHAR, chr(30)))) AS fp FROM v0
-         |  UNION ALL
-         |  SELECT doc_id, 1, md5(concat_ws(chr(31), coalesce(text, chr(30)), coalesce(lang, chr(30)), coalesce(source, chr(30)), coalesce(n_chars::VARCHAR, chr(30)))) FROM v1
-         |  UNION ALL
-         |  SELECT doc_id, 2, md5(concat_ws(chr(31), coalesce(text, chr(30)), coalesce(lang, chr(30)), coalesce(source, chr(30)), coalesce(n_chars::VARCHAR, chr(30)))) FROM v2),
-         |m AS (SELECT doc_id, version, fp,
-         |    (lag(version) OVER w IS NULL OR lag(version) OVER w <> version - 1 OR lag(fp) OVER w <> fp) AS run_start,
-         |    (lead(version) OVER w IS NULL OR lead(version) OVER w <> version + 1 OR lead(fp) OVER w <> fp) AS run_end
-         |  FROM u WINDOW w AS (PARTITION BY doc_id ORDER BY version)),
-         |e AS (SELECT doc_id, version, fp, run_start,
-         |    min(CASE WHEN run_end THEN version END) OVER (PARTITION BY doc_id ORDER BY version ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS run_end_v
-         |  FROM m)
-         |SELECT doc_id, version::BIGINT AS valid_from, run_end_v::BIGINT AS valid_to, fp, (run_end_v = 2) AS is_current
-         |FROM e WHERE run_start ORDER BY doc_id, valid_from""".stripMargin),
-    // ns100's oracle is the ns99 window algebra over FOUR versions — a
-    // from-scratch rebuild, so the engine's incremental merge is proven
-    // exact, not merely plausible (the ns86 IVM discipline).
-    "ns100_scd_merge" ->
-      ("""WITH v0 AS (SELECT doc_id, text, lang, source, n_chars FROM documents),
-         |v1 AS (SELECT doc_id, CASE WHEN doc_id % 37 = 0 THEN text || ' v2' ELSE text END AS text, lang, source, n_chars FROM v0 WHERE doc_id >= 20
-         |  UNION ALL SELECT doc_id + (SELECT max(doc_id) + 1 FROM v0), text, lang, source, n_chars FROM v0 WHERE doc_id < 10),
-         |v2 AS (SELECT doc_id, CASE WHEN doc_id % 37 = 0 THEN text || ' v2' ELSE text END AS text, lang, source, n_chars FROM v1 WHERE doc_id >= 20
-         |  UNION ALL SELECT doc_id + (SELECT max(doc_id) + 1 FROM v1), text, lang, source, n_chars FROM v1 WHERE doc_id < 10),
-         |v3 AS (SELECT doc_id, CASE WHEN doc_id % 37 = 0 THEN text || ' v2' ELSE text END AS text, lang, source, n_chars FROM v2 WHERE doc_id >= 20
-         |  UNION ALL SELECT doc_id + (SELECT max(doc_id) + 1 FROM v2), text, lang, source, n_chars FROM v2 WHERE doc_id < 10),
-         |u AS (
-         |  SELECT doc_id, 0 AS version, md5(concat_ws(chr(31), coalesce(text, chr(30)), coalesce(lang, chr(30)), coalesce(source, chr(30)), coalesce(n_chars::VARCHAR, chr(30)))) AS fp FROM v0
-         |  UNION ALL
-         |  SELECT doc_id, 1, md5(concat_ws(chr(31), coalesce(text, chr(30)), coalesce(lang, chr(30)), coalesce(source, chr(30)), coalesce(n_chars::VARCHAR, chr(30)))) FROM v1
-         |  UNION ALL
-         |  SELECT doc_id, 2, md5(concat_ws(chr(31), coalesce(text, chr(30)), coalesce(lang, chr(30)), coalesce(source, chr(30)), coalesce(n_chars::VARCHAR, chr(30)))) FROM v2
-         |  UNION ALL
-         |  SELECT doc_id, 3, md5(concat_ws(chr(31), coalesce(text, chr(30)), coalesce(lang, chr(30)), coalesce(source, chr(30)), coalesce(n_chars::VARCHAR, chr(30)))) FROM v3),
-         |m AS (SELECT doc_id, version, fp,
-         |    (lag(version) OVER w IS NULL OR lag(version) OVER w <> version - 1 OR lag(fp) OVER w <> fp) AS run_start,
-         |    (lead(version) OVER w IS NULL OR lead(version) OVER w <> version + 1 OR lead(fp) OVER w <> fp) AS run_end
-         |  FROM u WINDOW w AS (PARTITION BY doc_id ORDER BY version)),
-         |e AS (SELECT doc_id, version, fp, run_start,
-         |    min(CASE WHEN run_end THEN version END) OVER (PARTITION BY doc_id ORDER BY version ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS run_end_v
-         |  FROM m)
-         |SELECT doc_id, version::BIGINT AS valid_from, run_end_v::BIGINT AS valid_to, fp, (run_end_v = 3) AS is_current
-         |FROM e WHERE run_start ORDER BY doc_id, valid_from""".stripMargin),
-    // ns101 rebuilds the identical payload bytes, then extracts with
-    // DuckDB's JSON path functions — json_valid must agree with
-    // try_parse_json on every injected truncation, and each typed cast
-    // must agree with the variant path walk.
-    "ns101_variant_ingest" ->
-      ("""WITH b AS (SELECT doc_id,
-         |    '{"doc":{"lang":' || CASE WHEN lang IS NULL THEN 'null' ELSE '"' || lang || '"' END ||
-         |    ',"source":"' || source || '"},"stats":{"chars":' || n_chars::VARCHAR ||
-         |    ',"words":' || len(string_split(text, ' '))::VARCHAR ||
-         |    '},"tags":["t' || (doc_id % 5)::VARCHAR || '","x"]}' AS j
-         |  FROM documents),
-         |t AS (SELECT doc_id, CASE WHEN doc_id % 41 = 0 THEN substr(j, 1, length(j) - 7) ELSE j END AS j FROM b)
-         |SELECT doc_id, coalesce(json_valid(j), false) AS ok,
-         |  CASE WHEN json_valid(j) THEN json_extract_string(j, '$.doc.lang') END AS j_lang,
-         |  CASE WHEN json_valid(j) THEN json_extract_string(j, '$.doc.source') END AS j_source,
-         |  CASE WHEN json_valid(j) THEN TRY_CAST(json_extract(j, '$.stats.chars') AS BIGINT) END AS j_chars,
-         |  CASE WHEN json_valid(j) THEN TRY_CAST(json_extract(j, '$.stats.words') AS BIGINT) END AS j_words,
-         |  CASE WHEN json_valid(j) THEN json_extract_string(j, '$.tags[0]') END AS j_tag0,
-         |  CASE WHEN json_valid(j) THEN json_extract_string(j, '$.doc.title') END AS j_title
-         |FROM t ORDER BY doc_id""".stripMargin),
-    // ns102: the assembled sample STRING is hash-gated — string_agg with
-    // an explicit ORDER BY replays the (ts, event_id) total order; both
-    // engines render value as exact centi-units through the same IEEE
-    // multiply-then-floor, and NULL values hit the -1 sentinel BEFORE
-    // concat (DuckDB's concat() skips NULLs, Spark's propagates — the
-    // sentinel keeps NULL semantics out of the comparison entirely).
-    "ns102_sft_assembly" ->
-      ("""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts,
-         |    event_type || '=' || CAST(coalesce(floor(value * 100), -1) AS BIGINT)::VARCHAR AS turn_text
-         |  FROM events),
-         |n AS (SELECT *, length(turn_text) // 4 + 1 AS n_tokens FROM e),
-         |l AS (SELECT *, CASE WHEN lag(ts) OVER w IS NULL OR ts - lag(ts) OVER w > 28800000000 THEN 1 ELSE 0 END AS is_new
-         |  FROM n WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         |sx AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_idx FROM l),
-         |c AS (SELECT *, sum(n_tokens) OVER (PARTITION BY user_id, session_idx ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS cum FROM sx)
-         |SELECT user_id, session_idx::BIGINT AS session_idx, count(*) AS n_turns,
-         |  max(cum)::BIGINT AS total_tokens,
-         |  string_agg(turn_text, chr(10) ORDER BY ts, event_id) AS sample_text
-         |FROM c WHERE cum <= 12 GROUP BY user_id, session_idx
-         |ORDER BY user_id, session_idx""".stripMargin),
-    // ns103: vote synthesis AND resolution replay — the md5-derived
-    // annotator noise is the suite-wide hash60 convention, and the
-    // lexicographic tie policy is inside the hash gate (row_number
-    // ORDER BY votes DESC, label ASC on both sides).
-    "ns103_label_vote" ->
-      ("""WITH v AS (SELECT doc_id, lang, k FROM documents
-         |    CROSS JOIN (SELECT unnest(range(1, 6)) AS k) r),
-         |h AS (SELECT doc_id, lang,
-         |    ('0x' || substr(md5('vote:' || doc_id || ':' || k), 1, 15))::BIGINT AS h FROM v),
-         |lab AS (SELECT doc_id,
-         |    CASE WHEN h % 10 < 2 THEN 'alt' || (h // 10 % 3)::VARCHAR ELSE lang END AS vote_label FROM h),
-         |c AS (SELECT doc_id, coalesce(vote_label, chr(30)) AS l, count(*) AS votes FROM lab GROUP BY 1, 2),
-         |r AS (SELECT doc_id, l, votes,
-         |    sum(votes) OVER (PARTITION BY doc_id) AS n_votes,
-         |    row_number() OVER (PARTITION BY doc_id ORDER BY votes DESC, l ASC) AS rk FROM c)
-         |SELECT doc_id, CASE WHEN l = chr(30) THEN NULL ELSE l END AS winner_label,
-         |  votes, n_votes::BIGINT AS n_votes, votes = n_votes AS is_unanimous
-         |FROM r WHERE rk = 1 ORDER BY doc_id""".stripMargin),
-    // ns104: md5(text) group digest + the hash60 fold bucket of the
-    // digest — both pure string/hash math DuckDB replays exactly; NULL
-    // text digests via the chr(30) sentinel.
-    "ns104_leak_folds" ->
-      ("""WITH d AS (SELECT doc_id, text FROM documents
-         |    UNION ALL
-         |    SELECT doc_id + (SELECT max(doc_id) + 1 FROM documents) AS doc_id, text
-         |    FROM documents WHERE doc_id % 7 = 0),
-         |g AS (SELECT doc_id, md5(coalesce(text, chr(30))) AS dup_group FROM d)
-         |SELECT doc_id, dup_group,
-         |  count(*) OVER (PARTITION BY dup_group) AS group_size,
-         |  ('0x' || substr(md5('fold:' || dup_group), 1, 15))::BIGINT % 10 AS fold
-         |FROM g ORDER BY doc_id""".stripMargin),
-    // ns105: candidate synthesis (the suite's hash60 milli-scores) AND
-    // the pair algebra replay in one self-join — strict ≥-margin means
-    // ties and self-pairs vanish on both sides identically.
-    "ns105_pref_pairs" ->
-      ("""WITH c AS (SELECT doc_id, k AS resp,
-         |    ('0x' || substr(md5('score:' || doc_id || ':' || k), 1, 15))::BIGINT % 1000 AS score
-         |  FROM documents CROSS JOIN (SELECT unnest(range(0, 4)) AS k) r)
-         |SELECT a.doc_id, a.resp AS chosen, b.resp AS rejected,
-         |  (a.score - b.score)::BIGINT AS margin
-         |FROM c a JOIN c b ON a.doc_id = b.doc_id AND a.score - b.score >= 100
-         |ORDER BY a.doc_id, chosen, rejected""".stripMargin),
-    // ns106: global rank via row_number + the identical md5 target
-    // arithmetic — the drawn negative SET is inside the hash gate.
-    "ns106_neg_samples" ->
-      ("""WITH r AS (SELECT doc_id, row_number() OVER (ORDER BY doc_id) AS pos FROM documents),
-         |c AS (SELECT d.doc_id AS anchor, k AS slot,
-         |    ('0x' || substr(md5('neg:42:' || d.doc_id || ':' || k), 1, 15))::BIGINT
-         |      % (SELECT count(*) FROM documents) + 1 AS target
-         |  FROM documents d CROSS JOIN (SELECT unnest(range(1, 5)) AS k) s)
-         |SELECT anchor, slot, r.doc_id AS negative
-         |FROM c JOIN r ON c.target = r.pos
-         |WHERE r.doc_id <> c.anchor
-         |ORDER BY anchor, slot""".stripMargin),
-    // ns107/ns108: the oracle rebuilds the two writer generations'
-    // union from the base table — the engine's null-fill under
-    // mergeSchema must match the explicit NULL columns here.
-    "ns107_evolved_read" ->
-      ("""SELECT doc_id, 0::BIGINT AS version, lang, NULL::BIGINT AS quality, n_chars
-         |FROM documents WHERE doc_id % 2 = 0
-         |UNION ALL
-         |SELECT doc_id, 1::BIGINT, NULL, n_chars % 5, n_chars
-         |FROM documents WHERE doc_id % 2 = 1
-         |ORDER BY doc_id""".stripMargin),
-    "ns108_schema_drift" ->
-      ("""WITH u AS (
-         |  SELECT doc_id, 0::BIGINT AS version, lang, NULL::BIGINT AS quality FROM documents WHERE doc_id % 2 = 0
-         |  UNION ALL
-         |  SELECT doc_id, 1::BIGINT, NULL, n_chars % 5 FROM documents WHERE doc_id % 2 = 1)
-         |SELECT version, count(*) AS n_rows,
-         |  count(lang) AS lang_present, count(lang) > 0 AS lang_live,
-         |  count(quality) AS quality_present, count(quality) > 0 AS quality_live
-         |FROM u GROUP BY version ORDER BY version""".stripMargin),
-    // ns109: exact-rank percentile — the cutoff is a value that EXISTS
-    // in the group, selected at an integer rank both engines compute
-    // identically; no interpolation anywhere.
-    "ns109_winsorize" ->
-      ("""WITH r AS (SELECT lang, n_chars, doc_id,
-         |    row_number() OVER (PARTITION BY lang ORDER BY n_chars NULLS FIRST, doc_id) AS rn,
-         |    count(*) OVER (PARTITION BY lang) AS n
-         |  FROM documents),
-         |c AS (SELECT lang, n_chars AS cut FROM r WHERE rn = (n * 19 + 19) // 20)
-         |SELECT d.doc_id, d.lang, d.n_chars,
-         |  least(d.n_chars, c.cut) AS capped, d.n_chars > c.cut AS was_capped
-         |FROM documents d JOIN c ON d.lang IS NOT DISTINCT FROM c.lang
-         |ORDER BY d.doc_id""".stripMargin),
-    // ns110: the oracle's recursion walks ONE level per iteration —
-    // the engine's path doubling must agree on every assembled path.
-    "ns110_thread_paths" ->
-      ("""WITH RECURSIVE d AS (SELECT doc_id,
-         |    CASE WHEN doc_id = 0 THEN NULL ELSE (doc_id - 1) // 3 END AS parent FROM documents),
-         |t AS (
-         |  SELECT doc_id, doc_id AS root_id, 0::BIGINT AS depth, doc_id::VARCHAR AS path
-         |  FROM d WHERE parent IS NULL
-         |  UNION ALL
-         |  SELECT d.doc_id, t.root_id, t.depth + 1, t.path || '/' || d.doc_id
-         |  FROM d JOIN t ON d.parent = t.doc_id)
-         |SELECT doc_id, root_id, depth, path FROM t ORDER BY doc_id""".stripMargin),
-    // ns111: the nested comprehension mirrors the engine's expression
-    // tree exactly — qb-sum of db-max of the fixed-order 8-dim dot —
-    // so both engines accumulate in the same order before round(6).
-    "ns111_maxsim_topk" ->
-      ("""WITH q AS (SELECT vec_id AS query_id, list_transform(embedding, x -> x::DOUBLE) AS qv FROM embeddings WHERE vec_id < 5),
-         |e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-         |scored AS (SELECT q.query_id, e.vec_id,
-         |  round(list_sum(list_transform(range(0, 8), qb ->
-         |    list_max(list_transform(range(0, 8), db ->
-         |      list_sum(list_transform(range(1, 9), i -> qv[qb*8+i] * v[db*8+i])))))), 6) AS maxsim
-         |  FROM e, q WHERE e.vec_id != q.query_id)
-         |SELECT query_id, row_number() OVER (PARTITION BY query_id ORDER BY maxsim DESC, vec_id) AS rank, vec_id, maxsim
-         |FROM scored QUALIFY rank <= 10 ORDER BY query_id, rank""".stripMargin),
-    // ns112: descending exact-rank cut — the last ceil(n/5) events per
-    // user are test on both sides, ties broken on event_id.
-    "ns112_temporal_split" ->
-      ("""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts,
-         |    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rd,
-         |    count(*) OVER (PARTITION BY user_id) AS n
-         |  FROM events)
-         |SELECT event_id, user_id, ts,
-         |  CASE WHEN rd <= (n * 1 + 4) // 5 THEN 'test' ELSE 'train' END AS split
-         |FROM e ORDER BY event_id""".stripMargin),
-    // ns113: left join + IS NULL replays the anti-join per edge (NULL
-    // child keys count as orphans on both sides); exact per-mille.
-    "ns113_fk_orphans" ->
-      ("""WITH r AS (
-         |  SELECT 'customer->nation' AS fk_edge, count(*) AS n_child,
-         |    count(*) FILTER (WHERE p.k IS NULL) AS n_orphans
-         |  FROM customer LEFT JOIN (SELECT DISTINCT n_nationkey AS k FROM nation) p ON c_nationkey = p.k
-         |  UNION ALL
-         |  SELECT 'events->customer', count(*),
-         |    count(*) FILTER (WHERE p.k IS NULL)
-         |  FROM events LEFT JOIN (SELECT DISTINCT c_custkey AS k FROM customer) p ON user_id = p.k
-         |  UNION ALL
-         |  SELECT 'events->customer_n0', count(*),
-         |    count(*) FILTER (WHERE p.k IS NULL)
-         |  FROM events LEFT JOIN (SELECT DISTINCT c_custkey AS k FROM customer WHERE c_nationkey = 0) p ON user_id = p.k
-         |  UNION ALL
-         |  SELECT 'lineitem->orders', count(*),
-         |    count(*) FILTER (WHERE p.k IS NULL)
-         |  FROM lineitem LEFT JOIN (SELECT DISTINCT o_orderkey AS k FROM orders) p ON l_orderkey = p.k
-         |  UNION ALL
-         |  SELECT 'orders->customer', count(*),
-         |    count(*) FILTER (WHERE p.k IS NULL)
-         |  FROM orders LEFT JOIN (SELECT DISTINCT c_custkey AS k FROM customer) p ON o_custkey = p.k)
-         |SELECT fk_edge, n_child, n_orphans, n_orphans * 1000 // n_child AS orphans_per_mille
-         |FROM r ORDER BY fk_edge""".stripMargin),
-    // ns114: the ns26 token costing + a global (length, key) rank cut
-    // into 32-doc batches; waste = batch max - own length.
-    "ns114_length_batches" ->
-      ("""WITH t AS (SELECT doc_id, ceil(length(text)::DOUBLE / 4.0)::BIGINT AS n_tokens FROM documents),
-         |r AS (SELECT doc_id, n_tokens,
-         |    (row_number() OVER (ORDER BY n_tokens NULLS FIRST, doc_id) - 1) // 32 AS batch_id FROM t),
-         |b AS (SELECT *, max(n_tokens) OVER (PARTITION BY batch_id) AS batch_max FROM r)
-         |SELECT doc_id, n_tokens, batch_id, batch_max, batch_max - n_tokens AS waste
-         |FROM b ORDER BY doc_id""".stripMargin),
-    // ns115: per-column stats over the stacked string form — BIGINT
-    // keys render identically in both engines' string casts.
-    "ns115_table_profile" ->
-      ("""WITH p AS (
-         |  SELECT 'c_custkey' AS "column", c_custkey::VARCHAR AS v FROM customer
-         |  UNION ALL SELECT 'c_name', c_name FROM customer
-         |  UNION ALL SELECT 'c_nationkey', c_nationkey::VARCHAR FROM customer
-         |  UNION ALL SELECT 'c_mktsegment', c_mktsegment FROM customer)
-         |SELECT "column", count(*) AS n_rows,
-         |  count(*) FILTER (WHERE v IS NULL) AS n_null,
-         |  count(DISTINCT v) AS n_distinct,
-         |  min(v) AS min_str, max(v) AS max_str
-         |FROM p GROUP BY "column" ORDER BY "column"""".stripMargin),
-    // ns116: the ns47 whitespace-tokenization parity contract; pair
-    // keys travel as a chr(31)-joined string through the comprehension.
-    "ns116_bigram_counts" ->
-      ("""WITH w AS (SELECT string_split(text, ' ') AS ws FROM documents),
-         |bg AS (SELECT unnest([ws[i] || chr(31) || ws[i+1] for i in range(1, len(ws))]) AS b FROM w),
-         |p AS (SELECT split_part(b, chr(31), 1) AS w1, split_part(b, chr(31), 2) AS w2, count(*) AS n_pair FROM bg GROUP BY 1, 2),
-         |c AS (SELECT w1, sum(n_pair)::BIGINT AS n_ctx FROM p GROUP BY 1),
-         |k AS (SELECT w2, count(*) AS n_cont FROM p GROUP BY 1)
-         |SELECT p.w1, p.w2, n_pair, n_ctx, n_cont
-         |FROM p JOIN c USING (w1) JOIN k USING (w2)
-         |WHERE n_pair >= 3
-         |ORDER BY n_pair DESC, p.w1, p.w2""".stripMargin),
-    // ns117: ns103's vote synthesis + the exact pair-counting algebra;
-    // n=5 per item here so total_pairs = 10 and per-mille is exact.
-    "ns117_vote_agreement" ->
-      ("""WITH v AS (SELECT doc_id, lang, k FROM documents
-         |    CROSS JOIN (SELECT unnest(range(1, 6)) AS k) r),
-         |h AS (SELECT doc_id, lang,
-         |    ('0x' || substr(md5('vote:' || doc_id || ':' || k), 1, 15))::BIGINT AS h FROM v),
-         |lab AS (SELECT doc_id,
-         |    CASE WHEN h % 10 < 2 THEN 'alt' || (h // 10 % 3)::VARCHAR ELSE lang END AS vote_label FROM h),
-         |c AS (SELECT doc_id, coalesce(vote_label, chr(30)) AS l, count(*) AS votes FROM lab GROUP BY 1, 2),
-         |a AS (SELECT doc_id, sum(votes)::BIGINT AS n_votes,
-         |    sum(votes * (votes - 1) // 2)::BIGINT AS agree_pairs FROM c GROUP BY 1)
-         |SELECT doc_id, n_votes, agree_pairs,
-         |  n_votes * (n_votes - 1) // 2 AS total_pairs,
-         |  CASE WHEN n_votes > 1 THEN agree_pairs * 1000 // (n_votes * (n_votes - 1) // 2) END AS agreement_per_mille
-         |FROM a ORDER BY doc_id""".stripMargin),
-    // ns118: vote synthesis (per-annotator flip rate k−1 deciles), the
-    // ns103 resolution replay, the null-safe vote-vs-gold match, and
-    // the per-mille arithmetic — all inside the hash gate. ::BIGINT on
-    // the HUGEINT sum (the ns71 lesson).
-    "ns118_rater_report" ->
-      ("""WITH v AS (SELECT doc_id, lang, k FROM documents
-         |    CROSS JOIN (SELECT unnest(range(1, 6)) AS k) r),
-         |h AS (SELECT doc_id, lang, k,
-         |    ('0x' || substr(md5('vote:' || doc_id || ':' || k), 1, 15))::BIGINT AS h FROM v),
-         |lab AS (SELECT doc_id, k,
-         |    CASE WHEN h % 10 < k - 1 THEN 'alt' || (h // 10 % 3)::VARCHAR ELSE lang END AS vote_label FROM h),
-         |c AS (SELECT doc_id, coalesce(vote_label, chr(30)) AS l, count(*) AS votes FROM lab GROUP BY 1, 2),
-         |r2 AS (SELECT doc_id, l, row_number() OVER (PARTITION BY doc_id ORDER BY votes DESC, l ASC) AS rk FROM c),
-         |g AS (SELECT doc_id, CASE WHEN l = chr(30) THEN NULL ELSE l END AS winner_label FROM r2 WHERE rk = 1)
-         |SELECT lab.k, count(*)::BIGINT AS n_votes,
-         |  sum(CASE WHEN vote_label IS NOT DISTINCT FROM winner_label THEN 1 ELSE 0 END)::BIGINT AS n_matched,
-         |  (sum(CASE WHEN vote_label IS NOT DISTINCT FROM winner_label THEN 1 ELSE 0 END)::BIGINT * 1000) // count(*) AS accuracy_per_mille
-         |FROM lab JOIN g USING (doc_id)
-         |GROUP BY lab.k ORDER BY lab.k""".stripMargin),
-    // ns119: both engines define the RANGE frame by order VALUE (all
-    // same-ts peers in each other's frames), the centi contract is the
-    // shared IEEE multiply+floor, and the window sum's HUGEINT casts
-    // ::BIGINT (the ns71 lesson). gap via the (ts, event_id) lag.
-    "ns119_rolling_features" ->
-      ("""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts,
-         |    CAST(floor(value * 100) AS BIGINT) AS vc FROM events)
-         |SELECT user_id, event_id, ts,
-         |  count(*) OVER w AS n_win,
-         |  (sum(vc) OVER w)::BIGINT AS val_win_centi,
-         |  ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-         |FROM e
-         |WINDOW w AS (PARTITION BY user_id ORDER BY ts
-         |  RANGE BETWEEN 604800000000 PRECEDING AND CURRENT ROW)
-         |ORDER BY user_id, ts, event_id""".stripMargin),
-    // ns120: the page synthesis (chunked '.'-terminated body + nav /
-    // short / javascript / footer / lorem-ipsum / brace injections) and
-    // all three line rules + both page gates replay in a DuckDB list
-    // comprehension — Spark's HOF filter and DuckDB's comprehension
-    // must agree on every line verdict for the hash to match.
-    "ns120_c4_line_filter" ->
-      ("""WITH s AS (SELECT doc_id,
-         |    'Home | About | Contact' || chr(10) ||
-         |    CASE WHEN doc_id % 3 = 0 THEN 'Read more.' || chr(10) ELSE '' END ||
-         |    CASE WHEN doc_id % 5 = 0 THEN 'please enable javascript to view this site.' || chr(10) ELSE '' END ||
-         |    regexp_replace(text, '((?:\S+ ){7}\S+) ', '\1.' || chr(10), 'g') ||
-         |    chr(10) || 'copyright ' || source ||
-         |    CASE WHEN doc_id % 97 = 0 THEN chr(10) || 'this site is under construction lorem ipsum dolor sit amet.' ELSE '' END ||
-         |    CASE WHEN doc_id % 89 = 0 THEN chr(10) || 'function() { cookieConsent(); }' ELSE '' END AS text
-         |  FROM documents),
-         |l AS (SELECT doc_id, text, string_split(text, chr(10)) AS ls FROM s),
-         |k AS (SELECT doc_id, text, len(ls)::BIGINT AS n_lines,
-         |    [x for x in ls if right(x, 1) IN ('.', '!', '?', '"')
-         |      AND len(string_split(x, ' ')) >= 5
-         |      AND NOT contains(lower(x), 'javascript')] AS kept
-         |  FROM l)
-         |SELECT doc_id, n_lines, len(kept)::BIGINT AS kept_lines,
-         |  array_to_string(kept, chr(10)) AS text_clean,
-         |  (NOT contains(lower(text), 'lorem ipsum') AND NOT contains(text, '{')
-         |    AND len(kept) >= 3) AS keep
-         |FROM k ORDER BY doc_id""".stripMargin),
-    // ns121: the host synthesis, the ns77 hostOf replay, the dot-suffix
-    // comprehension, the blocklist VALUES join, and the longest-match
-    // attribution window all replay — blocked and blocked_domain are
-    // both inside the hash gate.
-    "ns121_blocklist_filter" ->
-      ("""WITH p AS (SELECT doc_id,
-         |    'https://' || CASE doc_id % 7
-         |      WHEN 0 THEN 'ads.tracker.example.com'
-         |      WHEN 1 THEN 'cdn.tracker.example.com'
-         |      WHEN 2 THEN 'blog.example.com'
-         |      WHEN 3 THEN 'example.org'
-         |      WHEN 4 THEN 'WWW.Mirror.Example.net:443'
-         |      WHEN 5 THEN 'spam.example.co.uk'
-         |      ELSE 'docs.example.io' END || '/p/' || doc_id AS url
-         |  FROM documents),
-         |b AS (SELECT * FROM (VALUES ('tracker.example.com'), ('example.com'),
-         |  ('mirror.example.net'), ('example.co.uk'), ('docs.example.io'),
-         |  ('unused.example.gov')) AS t(domain)),
-         |h AS (SELECT doc_id, url,
-         |  CASE WHEN scheme = 'http' THEN regexp_replace(nw, ':80$', '')
-         |       WHEN scheme = 'https' THEN regexp_replace(nw, ':443$', '')
-         |       ELSE nw END AS host
-         |  FROM (SELECT doc_id, url,
-         |    lower(regexp_extract(nf, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-         |    regexp_replace(lower(regexp_extract(nf, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)), '^www\.', '') AS nw
-         |    FROM (SELECT doc_id, url, regexp_replace(url, '#.*$', '') AS nf FROM p))),
-         |sx AS (SELECT doc_id,
-         |    unnest([array_to_string(ls[i:], '.') for i in range(1, len(ls) + 1)]) AS suffix
-         |  FROM (SELECT doc_id, string_split(host, '.') AS ls FROM h)),
-         |m AS (SELECT doc_id, domain,
-         |    row_number() OVER (PARTITION BY doc_id ORDER BY length(domain) DESC) AS rk
-         |  FROM sx JOIN b ON suffix = domain)
-         |SELECT h.doc_id, h.url, h.host, m.domain AS blocked_domain,
-         |  m.domain IS NOT NULL AS blocked
-         |FROM h LEFT JOIN (SELECT doc_id, domain FROM m WHERE rk = 1) m USING (doc_id)
-         |ORDER BY h.doc_id""".stripMargin),
-    // ns122: the pivot replays as FILTER conditional aggregation — the
-    // declared-list semantics (undeclared AND NULL types to n_other,
-    // absent cells 0) are inside the hash gate.
-    "ns122_type_pivot" ->
-      ("""SELECT user_id,
-         |  count(*) FILTER (WHERE event_type = 'click') AS n_click,
-         |  count(*) FILTER (WHERE event_type = 'view') AS n_view,
-         |  count(*) FILTER (WHERE event_type = 'purchase') AS n_purchase,
-         |  count(*) FILTER (WHERE event_type = 'signup') AS n_signup,
-         |  count(*) FILTER (WHERE event_type IS NULL OR event_type NOT IN
-         |    ('click', 'view', 'purchase', 'signup')) AS n_other,
-         |  count(*) AS n_total
-         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
-    // ns123: the ns6 scored/rank CTEs at k=4, micro conversion, and the
-    // division-free n-scaled margin — min_by mirrors Spark's min_by on
-    // the unique rank key, so attribution is deterministic both sides.
-    "ns123_knn_margin" ->
-      ("""WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
-         |scored AS (SELECT q.query_id, e.vec_id,
-         |  round(list_sum([qv[i]::DOUBLE * e.embedding[i]::DOUBLE for i in range(1,65)]) /
-         |    (sqrt(list_sum([qv[i]::DOUBLE * qv[i]::DOUBLE for i in range(1,65)])) *
-         |     sqrt(list_sum([e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE for i in range(1,65)]))), 6) AS cosine
-         |  FROM embeddings e, q WHERE e.vec_id != q.query_id),
-         |topk AS (SELECT query_id, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank,
-         |    vec_id, CAST(round(cosine * 1000000) AS BIGINT) AS cm
-         |  FROM scored QUALIFY rank <= 4)
-         |SELECT query_id,
-         |  min_by(vec_id, rank) AS best_id,
-         |  min_by(cm, rank) AS best_micro,
-         |  sum(cm)::BIGINT AS sum_micro,
-         |  count(*) AS n_neighbors,
-         |  min_by(cm, rank) * count(*) - sum(cm)::BIGINT AS margin_n_micro
-         |FROM topk GROUP BY query_id ORDER BY query_id""".stripMargin),
-    // ns124: each edge replays as two key-count CTEs + a plain-equality
-    // full outer (NULL keys unmatched — the audited semantics), the
-    // exact Σ nl·nr pair arithmetic, and a (pairs DESC, k DESC LIMIT 1)
-    // hot-key subquery mirroring the engine's lexicographic struct max.
-    "ns124_join_profile" ->
-      ("""WITH
-         |c1l AS (SELECT user_id::VARCHAR AS k, count(*) AS nl FROM events GROUP BY 1),
-         |j1 AS (SELECT coalesce(l.k, r.k) AS k, nl, nr,
-         |    CASE WHEN nl IS NOT NULL AND nr IS NOT NULL THEN nl * nr ELSE 0 END AS pairs
-         |  FROM c1l l FULL OUTER JOIN (SELECT k, nl AS nr FROM c1l) r ON l.k = r.k),
-         |c2r AS (SELECT c_custkey::VARCHAR AS k, count(*) AS nr FROM customer GROUP BY 1),
-         |j2 AS (SELECT coalesce(l.k, r.k) AS k, nl, nr,
-         |    CASE WHEN nl IS NOT NULL AND nr IS NOT NULL THEN nl * nr ELSE 0 END AS pairs
-         |  FROM c1l l FULL OUTER JOIN c2r r ON l.k = r.k),
-         |c3l AS (SELECT l_orderkey::VARCHAR AS k, count(*) AS nl FROM lineitem GROUP BY 1),
-         |c3r AS (SELECT o_orderkey::VARCHAR AS k, count(*) AS nr FROM orders GROUP BY 1),
-         |j3 AS (SELECT coalesce(l.k, r.k) AS k, nl, nr,
-         |    CASE WHEN nl IS NOT NULL AND nr IS NOT NULL THEN nl * nr ELSE 0 END AS pairs
-         |  FROM c3l l FULL OUTER JOIN c3r r ON l.k = r.k),
-         |c4l AS (SELECT o_custkey::VARCHAR AS k, count(*) AS nl FROM orders GROUP BY 1),
-         |j4 AS (SELECT coalesce(l.k, r.k) AS k, nl, nr,
-         |    CASE WHEN nl IS NOT NULL AND nr IS NOT NULL THEN nl * nr ELSE 0 END AS pairs
-         |  FROM c4l l FULL OUTER JOIN c2r r ON l.k = r.k),
-         |a1 AS (SELECT 'events_self_user' AS join_edge,
-         |  sum(coalesce(nl, 0))::BIGINT AS rows_l, sum(coalesce(nr, 0))::BIGINT AS rows_r,
-         |  count(CASE WHEN k IS NOT NULL AND nl IS NOT NULL THEN 1 END)::BIGINT AS distinct_l,
-         |  count(CASE WHEN k IS NOT NULL AND nr IS NOT NULL THEN 1 END)::BIGINT AS distinct_r,
-         |  sum(CASE WHEN k IS NULL THEN coalesce(nl, 0) ELSE 0 END)::BIGINT AS null_l,
-         |  sum(CASE WHEN k IS NULL THEN coalesce(nr, 0) ELSE 0 END)::BIGINT AS null_r,
-         |  sum(pairs)::BIGINT AS est_pairs,
-         |  coalesce((SELECT pairs FROM j1 WHERE pairs > 0 ORDER BY pairs DESC, k DESC LIMIT 1), 0)::BIGINT AS max_key_pairs,
-         |  (SELECT k FROM j1 WHERE pairs > 0 ORDER BY pairs DESC, k DESC LIMIT 1) AS hot_key,
-         |  CASE WHEN sum(coalesce(nl, 0)) > 0 THEN (sum(pairs)::BIGINT * 1000) // sum(coalesce(nl, 0))::BIGINT END AS amp_per_mille
-         |  FROM j1),
-         |a2 AS (SELECT 'events->customer' AS join_edge,
-         |  sum(coalesce(nl, 0))::BIGINT, sum(coalesce(nr, 0))::BIGINT,
-         |  count(CASE WHEN k IS NOT NULL AND nl IS NOT NULL THEN 1 END)::BIGINT,
-         |  count(CASE WHEN k IS NOT NULL AND nr IS NOT NULL THEN 1 END)::BIGINT,
-         |  sum(CASE WHEN k IS NULL THEN coalesce(nl, 0) ELSE 0 END)::BIGINT,
-         |  sum(CASE WHEN k IS NULL THEN coalesce(nr, 0) ELSE 0 END)::BIGINT,
-         |  sum(pairs)::BIGINT,
-         |  coalesce((SELECT pairs FROM j2 WHERE pairs > 0 ORDER BY pairs DESC, k DESC LIMIT 1), 0)::BIGINT,
-         |  (SELECT k FROM j2 WHERE pairs > 0 ORDER BY pairs DESC, k DESC LIMIT 1),
-         |  CASE WHEN sum(coalesce(nl, 0)) > 0 THEN (sum(pairs)::BIGINT * 1000) // sum(coalesce(nl, 0))::BIGINT END
-         |  FROM j2),
-         |a3 AS (SELECT 'lineitem->orders' AS join_edge,
-         |  sum(coalesce(nl, 0))::BIGINT, sum(coalesce(nr, 0))::BIGINT,
-         |  count(CASE WHEN k IS NOT NULL AND nl IS NOT NULL THEN 1 END)::BIGINT,
-         |  count(CASE WHEN k IS NOT NULL AND nr IS NOT NULL THEN 1 END)::BIGINT,
-         |  sum(CASE WHEN k IS NULL THEN coalesce(nl, 0) ELSE 0 END)::BIGINT,
-         |  sum(CASE WHEN k IS NULL THEN coalesce(nr, 0) ELSE 0 END)::BIGINT,
-         |  sum(pairs)::BIGINT,
-         |  coalesce((SELECT pairs FROM j3 WHERE pairs > 0 ORDER BY pairs DESC, k DESC LIMIT 1), 0)::BIGINT,
-         |  (SELECT k FROM j3 WHERE pairs > 0 ORDER BY pairs DESC, k DESC LIMIT 1),
-         |  CASE WHEN sum(coalesce(nl, 0)) > 0 THEN (sum(pairs)::BIGINT * 1000) // sum(coalesce(nl, 0))::BIGINT END
-         |  FROM j3),
-         |a4 AS (SELECT 'orders->customer' AS join_edge,
-         |  sum(coalesce(nl, 0))::BIGINT, sum(coalesce(nr, 0))::BIGINT,
-         |  count(CASE WHEN k IS NOT NULL AND nl IS NOT NULL THEN 1 END)::BIGINT,
-         |  count(CASE WHEN k IS NOT NULL AND nr IS NOT NULL THEN 1 END)::BIGINT,
-         |  sum(CASE WHEN k IS NULL THEN coalesce(nl, 0) ELSE 0 END)::BIGINT,
-         |  sum(CASE WHEN k IS NULL THEN coalesce(nr, 0) ELSE 0 END)::BIGINT,
-         |  sum(pairs)::BIGINT,
-         |  coalesce((SELECT pairs FROM j4 WHERE pairs > 0 ORDER BY pairs DESC, k DESC LIMIT 1), 0)::BIGINT,
-         |  (SELECT k FROM j4 WHERE pairs > 0 ORDER BY pairs DESC, k DESC LIMIT 1),
-         |  CASE WHEN sum(coalesce(nl, 0)) > 0 THEN (sum(pairs)::BIGINT * 1000) // sum(coalesce(nl, 0))::BIGINT END
-         |  FROM j4)
-         |SELECT * FROM a1 UNION ALL SELECT * FROM a2
-         |UNION ALL SELECT * FROM a3 UNION ALL SELECT * FROM a4
-         |ORDER BY join_edge""".stripMargin),
-    // ns126: the ns6 and ns7 oracles embed verbatim as CTE subqueries
-    // (single source of truth — the vals above), then the recall join:
-    // both the approximate pipeline and the exact baseline sit inside
-    // this hash gate.
-    "ns126_ann_recall" ->
-      (s"""WITH ex AS ($ns6OracleSql),
-         |ap AS ($ns7OracleSql),
-         |x AS (SELECT query_id, count(*) AS n_exact FROM ex GROUP BY 1),
-         |h AS (SELECT ex.query_id, count(*) AS n_hit
-         |  FROM ex JOIN ap ON ap.query_id = ex.query_id AND ap.vec_id = ex.vec_id
-         |  GROUP BY 1)
-         |SELECT x.query_id, n_exact,
-         |  coalesce(n_hit, 0)::BIGINT AS n_hit,
-         |  (coalesce(n_hit, 0)::BIGINT * 1000) // n_exact AS recall_per_mille
-         |FROM x LEFT JOIN h USING (query_id) ORDER BY x.query_id""".stripMargin),
-    // ns127: the hash line, both running sums, and the integer cut test
-    // replay verbatim; window sums are HUGEINT in DuckDB, so every
-    // term of the cut arithmetic casts ::BIGINT before the division
-    // (the ns71 lesson), and // on non-negative BIGINTs is the same
-    // floor Spark's DIV truncation gives.
-    "ns127_pps_sample" ->
-      ("""WITH d AS (SELECT doc_id, lang,
-         |    (length(text) // 4 + 1)::BIGINT AS w FROM documents),
-         |h AS (SELECT doc_id, lang, w,
-         |    ('0x' || substr(md5('pps:' || doc_id), 1, 15))::BIGINT AS hk
-         |  FROM d WHERE w > 0),
-         |c AS (SELECT doc_id, lang, w,
-         |    (sum(w) OVER (PARTITION BY lang ORDER BY hk, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::BIGINT AS ce,
-         |    (sum(w) OVER (PARTITION BY lang))::BIGINT AS tw
-         |  FROM h)
-         |SELECT doc_id, lang, w AS weight,
-         |  (ce * 50) // tw - ((ce - w) * 50) // tw AS n_slots
-         |FROM c
-         |WHERE (ce * 50) // tw > ((ce - w) * 50) // tw
-         |ORDER BY doc_id""".stripMargin),
-    // ns125: the twin amplification, the ns2 minhash pipeline (embedded
-    // from the shared template over the amplified corpus), the ns104
-    // fold math, and the cross-classification all replay — including
-    // the released n_exact_cross = 0 invariant.
-    "ns125_fold_leakage" ->
-      (s"""WITH amp AS (SELECT doc_id, text FROM documents
-         |    UNION ALL
-         |    SELECT doc_id + (SELECT max(doc_id) + 1 FROM documents) AS doc_id, text
-         |    FROM documents WHERE doc_id % 7 = 0),
-         |p AS (${minhashPairsSqlTpl.replace("__DOCS__", "amp")}),
-         |f AS (SELECT doc_id, md5(coalesce(text, chr(30))) AS g,
-         |    ('0x' || substr(md5('fold:' || md5(coalesce(text, chr(30)))), 1, 15))::BIGINT % 10 AS fold
-         |  FROM amp)
-         |SELECT count(*)::BIGINT AS n_pairs,
-         |  count(CASE WHEN fa.g = fb.g THEN 1 END)::BIGINT AS n_exact_pairs,
-         |  count(CASE WHEN fa.g = fb.g AND fa.fold != fb.fold THEN 1 END)::BIGINT AS n_exact_cross,
-         |  count(CASE WHEN fa.g != fb.g AND fa.fold != fb.fold THEN 1 END)::BIGINT AS n_near_cross,
-         |  CASE WHEN count(*) > 0
-         |    THEN (count(CASE WHEN fa.g != fb.g AND fa.fold != fb.fold THEN 1 END) * 1000) // count(*)
-         |    ELSE 0 END AS leak_per_mille
-         |FROM p JOIN f fa ON fa.doc_id = p.doc_a
-         |JOIN f fb ON fb.doc_id = p.doc_b""".stripMargin),
-    // ns128: grouping by raw text is semantically identical to the
-    // engine's md5-of-text digest grouping (the digest never reaches the
-    // output — it exists so only 16 bytes ride the engine's shuffle).
-    "ns128_dup_mass" ->
-      ("""WITH amp AS (SELECT text FROM documents
-         |    UNION ALL SELECT text FROM documents WHERE doc_id % 7 = 0
-         |    UNION ALL SELECT text FROM documents WHERE doc_id % 21 = 0),
-         |g AS (SELECT text, count(*)::BIGINT AS k,
-         |    max(len(string_split(text, ' ')))::BIGINT AS toks
-         |  FROM amp GROUP BY text),
-         |h AS (SELECT k, count(*)::BIGINT AS n_groups,
-         |    (sum(toks * k))::BIGINT AS token_mass,
-         |    (sum(toks))::BIGINT AS unique_mass
-         |  FROM g GROUP BY k)
-         |SELECT k AS multiplicity, n_groups, (k * n_groups)::BIGINT AS n_docs,
-         |  token_mass, unique_mass,
-         |  (token_mass - unique_mass)::BIGINT AS excess_mass,
-         |  (token_mass * 1000) // (SELECT sum(token_mass)::BIGINT FROM h)
-         |    AS mass_per_mille
-         |FROM h ORDER BY multiplicity""".stripMargin),
-    // ns129 extends the ns26 packing CTE verbatim (same budget 2048,
-    // same chars/4 costing) with the per-stratum straddle/tail rollup.
-    "ns129_pack_audit" ->
-      ("""WITH t AS (SELECT doc_id, lang, ceil(length(text)::DOUBLE / 4.0)::BIGINT AS n_tokens FROM documents),
-         |c AS (SELECT doc_id, lang, n_tokens,
-         |  (sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - n_tokens)::BIGINT AS off FROM t),
-         |p AS (SELECT lang, n_tokens, (off // 2048)::BIGINT AS seq_id,
-         |  (off % 2048)::BIGINT AS seq_off FROM c)
-         |SELECT lang, count(*)::BIGINT AS n_docs,
-         |  (max(seq_id) + 1)::BIGINT AS n_seqs,
-         |  sum(n_tokens)::BIGINT AS total_tokens,
-         |  count(CASE WHEN seq_off + n_tokens > 2048 THEN 1 END)::BIGINT AS n_straddlers,
-         |  sum(greatest(seq_off + n_tokens - 2048, 0))::BIGINT AS straddle_tokens,
-         |  greatest((max(seq_id) + 1) * 2048 - sum(n_tokens), 0)::BIGINT AS tail_waste,
-         |  (sum(greatest(seq_off + n_tokens - 2048, 0))::BIGINT * 1000)
-         |    // sum(n_tokens)::BIGINT AS straddle_per_mille
-         |FROM p GROUP BY lang ORDER BY lang NULLS FIRST""".stripMargin),
-    // ns130: the ns39 chunker at 32/0 with the ns8 marker scoring run
-    // per chunk; scoring the slice array directly is identical to the
-    // engine's split(concat_ws(' ', slice)) round-trip (concat_ws
-    // preserves empty tokens, and markers never match the empty
-    // string). IS DISTINCT FROM mirrors the engine's null-safe <=>.
-    "ns130_chunk_lang" ->
-      ("""WITH w AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),
-         |c AS (SELECT doc_id, lang, w, 1 + (greatest(len(w) - 32, 0) + 31) // 32 AS nc FROM w),
-         |x AS (SELECT doc_id, lang, w[chunk_id*32+1 : chunk_id*32+32] AS cw
-         |  FROM (SELECT doc_id, lang, w, unnest(range(0, nc)) AS chunk_id FROM c)),
-         |s AS (SELECT doc_id, lang,
-         |  len([t for t in cw if list_contains(['der','die','das','und','zu','nicht','ist','ein'], t)]) s_de,
-         |  len([t for t in cw if list_contains(['the','a','of','and','to','in','is','that'], t)]) s_en,
-         |  len([t for t in cw if list_contains(['el','la','de','los','y','que','en','un'], t)]) s_es,
-         |  len([t for t in cw if list_contains(['le','la','de','les','et','que','en','un'], t)]) s_fr,
-         |  len([t for t in cw if list_contains(['的','是','了','在','我','有','和','不'], t)]) s_zh
-         |  FROM x),
-         |p AS (SELECT doc_id, lang,
-         |  CASE WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-         |       WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-         |       WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-         |       WHEN s_fr >= s_zh THEN 'fr' ELSE 'zh' END AS pred FROM s)
-         |SELECT doc_id, lang, count(*)::BIGINT AS n_chunks,
-         |  count(CASE WHEN pred IS DISTINCT FROM lang THEN 1 END)::BIGINT AS n_offlang,
-         |  (count(CASE WHEN pred IS DISTINCT FROM lang THEN 1 END) * 1000) // count(*)
-         |    AS offlang_per_mille
-         |FROM p GROUP BY doc_id, lang ORDER BY doc_id""".stripMargin),
-    // ns131: the suite-wide 60-bit md5 bucket ('vg:' || doc_id, the
-    // ns127 convention), token first-appearance via a per-token min
-    // window over the (token, bucket) count frame.
-    "ns131_vocab_growth" ->
-      ("""WITH tb AS (SELECT
-         |    ('0x' || substr(md5('vg:' || doc_id), 1, 15))::BIGINT % 10 AS b,
-         |    unnest(string_split(text, ' ')) AS tok FROM documents),
-         |c AS (SELECT tok, b, count(*)::BIGINT AS occ FROM tb GROUP BY tok, b),
-         |m AS (SELECT b, occ,
-         |  CASE WHEN b = min(b) OVER (PARTITION BY tok) THEN 1 END AS isnew FROM c),
-         |h AS (SELECT b AS decile, sum(occ)::BIGINT AS n_tokens,
-         |  count(isnew)::BIGINT AS n_new_types FROM m GROUP BY b)
-         |SELECT decile, n_tokens, n_new_types,
-         |  (sum(n_tokens) OVER (ORDER BY decile ROWS UNBOUNDED PRECEDING))::BIGINT AS cum_tokens,
-         |  (sum(n_new_types) OVER (ORDER BY decile ROWS UNBOUNDED PRECEDING))::BIGINT AS cum_types
-         |FROM h ORDER BY decile""".stripMargin),
-    // ns132: the shared BPE merge-loop CTE (single source of truth with
-    // ns51/ns53/ns60) rolled up per language.
-    "ns132_fertility" ->
-      graft.ops.Bpe.oracleFertilitySql(graft.ops.Bpe.default),
-    // ns133: the declared share map interpolates into the CASE chain from
-    // the SAME Seq the engine folds over — the mixture cannot drift.
-    "ns133_mixture_plan" ->
-      (s"""WITH t AS (SELECT lang, count(*)::BIGINT AS n_docs,
-         |    sum(ceil(length(text)::DOUBLE / 4.0)::BIGINT)::BIGINT AS avail
-         |  FROM documents GROUP BY lang),
-         |s AS (SELECT lang, n_docs, avail,
-         |  (CASE ${ns133Shares.map { case (k, v) =>
-                s"WHEN lang = '$k' THEN $v" }.mkString(" ")}
-         |    ELSE 0 END)::BIGINT AS share FROM t),
-         |p AS (SELECT lang, n_docs, avail, share,
-         |  ($ns133Budget * share) // 1000 AS target FROM s)
-         |SELECT lang, n_docs, avail AS avail_tokens,
-         |  share AS target_per_mille, target AS target_tokens,
-         |  CASE WHEN avail = 0 THEN NULL
-         |       WHEN target = 0 THEN 0
-         |       ELSE (target + avail - 1) // avail END AS epochs,
-         |  CASE WHEN avail = 0 THEN NULL
-         |       WHEN target = 0 THEN 0
-         |       ELSE target - ((target + avail - 1) // avail - 1) * avail
-         |       END AS last_epoch_tokens,
-         |  CASE WHEN avail = 0 THEN NULL
-         |       ELSE (target * 1000) // avail END AS repeat_per_mille
-         |FROM p ORDER BY lang NULLS FIRST""".stripMargin),
-    // ns134: the shared minhash pair template (one source of truth with
-    // ns2/ns125) into the ns16 transitive-closure walk, rolled up by
-    // component size; singletons derived from the corpus count.
-    "ns134_dedup_yield" ->
-      (s"""WITH RECURSIVE
-         |p AS (${minhashPairsSqlTpl.replace("__DOCS__", "documents")}),
-         |edges AS (SELECT doc_a AS src, doc_b AS dst FROM p
-         |  UNION SELECT doc_b, doc_a FROM p),
-         |walk AS (SELECT src AS doc_id, src AS reach FROM edges
-         |  UNION SELECT wk.doc_id, e.dst FROM walk wk JOIN edges e ON e.src = wk.reach),
-         |labels AS (SELECT doc_id, min(reach) AS cluster FROM walk GROUP BY doc_id),
-         |sizes AS (SELECT cluster, count(*)::BIGINT AS m FROM labels GROUP BY cluster),
-         |hist AS (SELECT m, count(*)::BIGINT AS n_clusters FROM sizes GROUP BY m
-         |  UNION ALL
-         |  SELECT 1::BIGINT AS m,
-         |    ((SELECT count(*) FROM documents) - (SELECT count(*) FROM labels))::BIGINT)
-         |SELECT m AS cluster_size, n_clusters, (m * n_clusters)::BIGINT AS n_docs,
-         |  ((m - 1) * n_clusters)::BIGINT AS n_removed,
-         |  ((m - 1) * n_clusters * 1000) // (SELECT count(*) FROM documents)::BIGINT
-         |    AS removed_per_mille
-         |FROM hist WHERE n_clusters > 0 ORDER BY cluster_size""".stripMargin),
-    // ns135: per-char slicing is codepoint-based in both engines (BMP
-    // corpus); the ln micro-nat quantization is the ns61 doctrine — one
-    // IEEE op on the identical double, then exact integers.
-    "ns135_char_entropy" ->
-      ("""WITH amp AS (SELECT doc_id, text FROM documents
-         |    UNION ALL SELECT (SELECT max(doc_id) + 1 FROM documents),
-         |      repeat('buy now ', 64)),
-         |ch AS (SELECT doc_id, unnest([text[i:i] for i in range(1, length(text)+1)]) AS ch FROM amp),
-         |c AS (SELECT doc_id, ch, count(*)::BIGINT AS c FROM ch GROUP BY doc_id, ch),
-         |w AS (SELECT doc_id, c, (sum(c) OVER (PARTITION BY doc_id))::BIGINT AS n FROM c),
-         |h AS (SELECT doc_id, c, n,
-         |  CAST(round(ln(n::DOUBLE / c::DOUBLE) * 1e6) AS BIGINT) AS hm FROM w),
-         |a AS (SELECT doc_id, max(n)::BIGINT AS n_chars, count(*)::BIGINT AS n_distinct,
-         |  sum(c * hm)::BIGINT AS s FROM h GROUP BY doc_id)
-         |SELECT doc_id, n_chars, n_distinct, s // n_chars AS entropy_micro,
-         |  (s // n_chars) < 2500000 AS is_low_entropy
-         |FROM a ORDER BY doc_id""".stripMargin),
-    // ns136: the oracle recomputes the ticked snapshot's dup-mass
-    // histogram FROM SCRATCH (the ns86 discipline) — the engine maintains
-    // the group table off the fringe, so hash equality proves the IVM
-    // algebra exact, including the k = 1 → 2 twin moves.
-    "ns136_ivm_dupmass" ->
-      ("""WITH newsnap AS (
-         |  SELECT doc_id, CASE WHEN doc_id % 37 = 0 THEN text || ' v2' ELSE text END AS text
-         |  FROM documents WHERE doc_id < 10 OR doc_id >= 20
-         |  UNION ALL
-         |  SELECT doc_id + (SELECT max(doc_id) + 1 FROM documents), text FROM documents WHERE doc_id < 10),
-         |g AS (SELECT text, count(*)::BIGINT AS k,
-         |    max(len(string_split(text, ' ')))::BIGINT AS toks
-         |  FROM newsnap GROUP BY text),
-         |h AS (SELECT k, count(*)::BIGINT AS n_groups,
-         |    (sum(toks * k))::BIGINT AS token_mass,
-         |    (sum(toks))::BIGINT AS unique_mass
-         |  FROM g GROUP BY k)
-         |SELECT k AS multiplicity, n_groups, (k * n_groups)::BIGINT AS n_docs,
-         |  token_mass, unique_mass,
-         |  (token_mass - unique_mass)::BIGINT AS excess_mass,
-         |  (token_mass * 1000) // (SELECT sum(token_mass)::BIGINT FROM h)
-         |    AS mass_per_mille
-         |FROM h ORDER BY multiplicity""".stripMargin),
-    // ns137: grouping by the normalized string ≡ the engine's md5-of-
-    // normalized digest grouping; regexp_replace carries the 'g' flag
-    // (DuckDB replaces only the first match without it — the suite-wide
-    // gotcha), and the punct class is spelled as explicit ASCII ranges
-    // so Java regex and RE2 read the identical set.
-    "ns137_dedup_normalized" ->
-      ("""WITH amp AS (SELECT doc_id, text FROM documents
-         |    UNION ALL SELECT doc_id + (SELECT max(doc_id) + 1 FROM documents),
-         |      upper(text) || '  !!' FROM documents WHERE doc_id % 5 = 0),
-         |n AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text),
-         |    '[!-/:-@\[-`{-~]', ' ', 'g'), ' +', ' ', 'g')) AS norm FROM amp)
-         |SELECT min(doc_id)::BIGINT AS doc_id, count(*)::BIGINT AS n_variants
-         |FROM n GROUP BY norm ORDER BY doc_id""".stripMargin),
-    // ns138: the CASE priority chain replays verbatim; NaN/Inf via
-    // isnan/isinf (DuckDB orders NaN as a value, but the non_finite
-    // branch catches it before any comparison matters).
-    "ns138_embedding_audit" ->
-      ("""WITH amp AS (SELECT vec_id, embedding FROM embeddings
-         |  UNION ALL
-         |  SELECT vec_id + (SELECT max(vec_id) + 1 FROM embeddings),
-         |    CASE WHEN vec_id = 0 THEN NULL
-         |         WHEN vec_id = 1 THEN embedding[1:10]
-         |         WHEN vec_id = 2 THEN list_transform(embedding, x -> 'NaN'::FLOAT)
-         |         ELSE list_transform(embedding, x -> 0.0::FLOAT) END
-         |  FROM embeddings WHERE vec_id < 4),
-         |v AS (SELECT CASE WHEN embedding IS NULL THEN 'null'
-         |    WHEN len(embedding) != 64 THEN 'wrong_dim'
-         |    WHEN len([x for x in embedding if isnan(x) OR isinf(x)]) > 0 THEN 'non_finite'
-         |    WHEN len([x for x in embedding if x != 0]) = 0 THEN 'zero'
-         |    ELSE 'ok' END AS verdict FROM amp),
-         |h AS (SELECT verdict, count(*)::BIGINT AS n_vectors FROM v GROUP BY verdict)
-         |SELECT verdict, n_vectors,
-         |  (n_vectors * 1000) // (SELECT sum(n_vectors)::BIGINT FROM h) AS share_per_mille
-         |FROM h ORDER BY verdict""".stripMargin),
-    // ns139: the ns26 packing CTE + integer piece arithmetic; range() is
-    // end-exclusive, hence the +1.
-    "ns139_pack_split" ->
-      ("""WITH t AS (SELECT doc_id, lang, ceil(length(text)::DOUBLE / 4.0)::BIGINT AS n_tokens FROM documents),
-         |c AS (SELECT doc_id, lang, n_tokens,
-         |  (sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - n_tokens)::BIGINT AS off FROM t),
-         |x AS (SELECT doc_id, lang, off, off + n_tokens AS e FROM c WHERE n_tokens > 0),
-         |p AS (SELECT doc_id, lang, off, e,
-         |  unnest(range(off // 2048, (e - 1) // 2048 + 1)) AS seq_id FROM x)
-         |SELECT doc_id, lang, seq_id,
-         |  greatest(off - seq_id * 2048, 0)::BIGINT AS seq_off,
-         |  (least(e, (seq_id + 1) * 2048) - greatest(off, seq_id * 2048))::BIGINT AS piece_tokens,
-         |  (seq_id - off // 2048)::BIGINT AS piece_idx
-         |FROM p ORDER BY doc_id, seq_id""".stripMargin),
-    // ns140: the ns8 scoring CTE + the cell/row-share rollup.
-    "ns140_lang_confusion" ->
-      ("""WITH w AS (SELECT doc_id, lang, string_split(text,' ') w FROM documents),
-         |s AS (SELECT doc_id, lang,
-         |  len([x for x in w if list_contains(['der','die','das','und','zu','nicht','ist','ein'], x)]) s_de,
-         |  len([x for x in w if list_contains(['the','a','of','and','to','in','is','that'], x)]) s_en,
-         |  len([x for x in w if list_contains(['el','la','de','los','y','que','en','un'], x)]) s_es,
-         |  len([x for x in w if list_contains(['le','la','de','les','et','que','en','un'], x)]) s_fr,
-         |  len([x for x in w if list_contains(['的','是','了','在','我','有','和','不'], x)]) s_zh
-         |  FROM w),
-         |p AS (SELECT lang,
-         |  CASE WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-         |       WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-         |       WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-         |       WHEN s_fr >= s_zh THEN 'fr' ELSE 'zh' END AS pred_lang FROM s),
-         |c AS (SELECT lang, pred_lang, count(*)::BIGINT AS n_docs FROM p GROUP BY lang, pred_lang)
-         |SELECT lang, pred_lang, n_docs,
-         |  (n_docs * 1000) // (sum(n_docs) OVER (PARTITION BY lang))::BIGINT AS row_per_mille
-         |FROM c ORDER BY lang NULLS FIRST, pred_lang""".stripMargin),
-    // ns141: the shared frame-phash CTE (one hash convention with ns83)
-    // + a per-video lag rollup.
-    "ns141_scene_cuts" ->
-      (framePhashCteSql +
-        """,
-         |d AS (SELECT doc_id, phash,
-         |  lag(phash) OVER (PARTITION BY doc_id ORDER BY f) AS prev FROM ph)
-         |SELECT doc_id, count(*)::BIGINT AS n_frames,
-         |  count(CASE WHEN bit_count(xor(phash, prev)) > 16 THEN 1 END)::BIGINT AS n_cuts,
-         |  max(bit_count(xor(phash, prev)))::BIGINT AS max_hamming
-         |FROM d GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-    // ns142: the shared WAV-grid CTE (one grid convention with ns90) +
-    // tie-low dominant band per slice + a per-clip lag rollup.
-    "ns142_audio_segments" ->
-      (wavGridCteSql +
-        """,
-         |cb AS (SELECT doc_id, (i // 9)::INT AS band, (i % 9)::INT AS s, v FROM grid),
-         |dom AS (SELECT doc_id, s, band FROM (
-         |  SELECT doc_id, s, band,
-         |    row_number() OVER (PARTITION BY doc_id, s ORDER BY v DESC, band) AS rn
-         |  FROM cb) WHERE rn = 1),
-         |d2 AS (SELECT doc_id, s, band,
-         |  lag(band) OVER (PARTITION BY doc_id ORDER BY s) AS prev FROM dom)
-         |SELECT doc_id,
-         |  count(CASE WHEN band != prev THEN 1 END)::BIGINT AS n_shifts,
-         |  max(CASE WHEN s = 0 THEN band END)::BIGINT AS start_band,
-         |  max(CASE WHEN s = 8 THEN band END)::BIGINT AS end_band
-         |FROM d2 GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-    // ns143: exact-text pair join + the ns6 cosine convention (double
-    // cast, index-order dot, 6-decimal round).
-    "ns143_stale_embeddings" ->
-      ("""WITH ad AS (SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT doc_id + (SELECT max(doc_id) + 1 FROM documents), text
-         |  FROM documents WHERE doc_id % 4 = 0),
-         |ae AS (SELECT vec_id, embedding FROM embeddings
-         |  UNION ALL SELECT vec_id + (SELECT max(doc_id) + 1 FROM documents),
-         |    CASE WHEN vec_id % 8 = 0 THEN list_reverse(embedding) ELSE embedding END
-         |  FROM embeddings WHERE vec_id % 4 = 0),
-         |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM ad a JOIN ad b ON a.text = b.text AND a.doc_id < b.doc_id),
-         |e2 AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v,
-         |  sqrt(list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE))) AS n FROM ae),
-         |c AS (SELECT id_a, id_b,
-         |  round(list_sum([ea.v[i] * eb.v[i] for i in range(1, 65)]) / (ea.n * eb.n), 6) AS cosine
-         |  FROM p JOIN e2 ea ON ea.vec_id = p.id_a JOIN e2 eb ON eb.vec_id = p.id_b)
-         |SELECT id_a, id_b, cosine, cosine < 0.999 AS stale
-         |FROM c ORDER BY id_a, id_b""".stripMargin),
-    // ns144: the ns98 scoring algebra verbatim, fanned out per query and
-    // cut by a rank window; the eval replays the exact 1e6 DIV rank MRR.
-    "ns144_retrieval_eval" ->
-      ("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         |q AS (SELECT DISTINCT doc_id AS query_id, unnest(w[1:5]) AS term
-         |  FROM w WHERE doc_id % 50 = 0),
-         |q0 AS (SELECT query_id, term FROM q WHERE term != ''),
-         |qv AS (SELECT DISTINCT term FROM q0),
-         |st AS (SELECT count(*) AS n_docs, sum(len(w)) AS total_len FROM w),
-         |tok AS (SELECT doc_id, len(w) AS dl, unnest(w) AS term FROM w),
-         |tf AS (SELECT doc_id, term, count(*) AS tf, max(dl) AS dl FROM tok
-         |  JOIN qv USING (term) GROUP BY doc_id, term),
-         |df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-         |sc AS (SELECT tf.term, tf.doc_id,
-         |    ((1000 * (2 * st.n_docs - 2 * df.df + 1)) // (2 * df.df + 1)) *
-         |    ((tf.tf * 2200 * 1000000) // (tf.tf * 1000000 +
-         |      1200 * (1000 - 750 + (750 * tf.dl * 1000) // ((st.total_len * 1000) // st.n_docs)))) AS s_term
-         |  FROM tf JOIN df USING (term), st),
-         |pq AS (SELECT q0.query_id, sc.doc_id, sum(sc.s_term)::BIGINT AS bm25
-         |  FROM sc JOIN q0 USING (term) GROUP BY q0.query_id, sc.doc_id),
-         |rk AS (SELECT query_id, doc_id,
-         |  row_number() OVER (PARTITION BY query_id ORDER BY bm25 DESC, doc_id) AS rank FROM pq),
-         |fr AS (SELECT query_id, min(rank)::BIGINT AS r FROM rk
-         |  WHERE rank <= 10 AND doc_id = query_id GROUP BY query_id),
-         |base AS (SELECT DISTINCT doc_id AS query_id FROM documents WHERE doc_id % 50 = 0)
-         |SELECT count(*)::BIGINT AS n_queries,
-         |  count(CASE WHEN r <= 1 THEN 1 END)::BIGINT AS hits_at_1,
-         |  count(CASE WHEN r <= 3 THEN 1 END)::BIGINT AS hits_at_3,
-         |  count(CASE WHEN r <= 10 THEN 1 END)::BIGINT AS hits_at_10,
-         |  sum(coalesce(1000000 // r, 0))::BIGINT AS mrr_micro_sum,
-         |  count(CASE WHEN r IS NULL THEN 1 END)::BIGINT AS n_missed,
-         |  (sum(coalesce(1000000 // r, 0)) // count(*))::BIGINT AS mrr_micro
-         |FROM base LEFT JOIN fr USING (query_id)""".stripMargin),
-    // ns145 rebuilds the AVI geometry with NO container: 48-byte windows
-    // (w = least(48, n - 48i), payload L = w + 4 markers), chunk stride
-    // 8 + L + L%2 prefix-summed from the movi-relative start offset 4,
-    // keyframes at i % 3 = 0, and payload byte-sums from the hex-expanded
-    // text (+943 for the SOI/EOI markers) - the writer/parser cannot
-    // share a bug with this arithmetic.
-    "ns145_avi_keyframes" ->
-      ("""WITH h AS (SELECT doc_id, hex(encode(text)) AS hx,
-         |    octet_length(encode(text)) AS n FROM documents
-         |  WHERE octet_length(encode(text)) > 0),
-         |fr AS (SELECT doc_id, hx, n, unnest(range(0, (n + 47) // 48)) AS i FROM h),
-         |fz AS (SELECT doc_id, hx, i, least(48, n - 48 * i) AS w FROM fr),
-         |off AS (SELECT doc_id, hx, i, w,
-         |    4 + coalesce(sum(8 + w + 4 + (w % 2)) OVER (PARTITION BY doc_id
-         |      ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-         |  FROM fz),
-         |sel AS (SELECT doc_id, count(*) AS n_frames,
-         |    count(CASE WHEN i % 3 = 0 THEN 1 END) AS n_keyframes,
-         |    sum(CASE WHEN i % 3 = 0 THEN off END) AS key_offset_sum,
-         |    sum(CASE WHEN i % 3 = 0 THEN w + 4 END) AS key_bytes
-         |  FROM off GROUP BY doc_id),
-         |pb AS (SELECT doc_id, i,
-         |    sum(('0x' || substr(hx, (2 * (48 * i + j) + 1)::INT, 2))::INT) AS wsum
-         |  FROM (SELECT doc_id, hx, i, unnest(range(0, w)) AS j FROM off
-         |        WHERE i % 3 = 0)
-         |  GROUP BY doc_id, i),
-         |ps AS (SELECT doc_id, (sum(wsum) + 943 * count(*)) AS key_payload_sum
-         |  FROM pb GROUP BY doc_id)
-         |SELECT s.doc_id, s.n_frames::BIGINT AS n_frames,
-         |  s.n_keyframes::BIGINT AS n_keyframes,
-         |  s.key_offset_sum::BIGINT AS key_offset_sum,
-         |  s.key_bytes::BIGINT AS key_bytes,
-         |  ps.key_payload_sum::BIGINT AS key_payload_sum
-         |FROM sel s JOIN ps USING (doc_id) ORDER BY s.doc_id""".stripMargin),
-    // ns146: ns145's arithmetic container geometry (keyframes i%3=0 of
-    // 48-byte windows) + ns83's byte-stride grid dHash, applied to the
-    // MJPEG payload hex 'ffd8'+window+'ffd9' of length m = w+4 - three
-    // independent computations (muxer, parser, oracle) of the same
-    // shared-keyframe report.
-    "ns146_avi_shared_keyframes" ->
-      ("""WITH base AS (SELECT doc_id, text FROM documents),
-         |fam AS (SELECT d.doc_id,
-         |  CASE d.doc_id % 5
-         |    WHEN 0 THEN b.text
-         |    WHEN 1 THEN b.text
-         |    WHEN 2 THEN substr(b.text, 1, 10) || '#' || substr(b.text, 12)
-         |    WHEN 3 THEN substr(b.text, 1, 20) || '@' || substr(b.text, 22)
-         |    ELSE reverse(b.text) END AS t
-         |  FROM base d JOIN base b ON b.doc_id = d.doc_id - d.doc_id % 5),
-         |h AS (SELECT doc_id, hex(encode(t)) AS hx,
-         |    octet_length(encode(t)) AS n FROM fam
-         |  WHERE octet_length(encode(t)) > 0),
-         |kf AS (SELECT doc_id, hx, n, unnest(range(0, (n + 47) // 48)) AS i FROM h),
-         |kz AS (SELECT doc_id, i AS f, least(48, n - 48 * i) + 4 AS m,
-         |    'FFD8' || substr(hx, 96 * i + 1, 2 * least(48, n - 48 * i)) || 'FFD9' AS fhx
-         |  FROM kf WHERE i % 3 = 0),
-         |cells AS (SELECT doc_id, f, j, m,
-         |    ('0x' || substr(fhx, (2 * ((j * m) // 72) + 1)::INT, 2))::INT AS v
-         |  FROM kz, (SELECT unnest(range(0, 72)) AS j) r),
-         |bits AS (SELECT a.doc_id, a.f, ((a.j // 9) * 8 + (a.j % 9))::INT AS k,
-         |  CASE WHEN a.v < b.v THEN 1::BIGINT ELSE 0::BIGINT END AS bit
-         |  FROM cells a JOIN cells b
-         |    ON a.doc_id = b.doc_id AND a.f = b.f AND b.j = a.j + 1
-         |  WHERE a.j % 9 < 8 AND (a.j // 9) * 8 + (a.j % 9) < 63),
-         |ph AS (SELECT doc_id, f, sum(bit << k)::BIGINT AS phash
-         |  FROM bits GROUP BY doc_id, f)
-         |SELECT phash, count(*) AS n_frames, count(DISTINCT doc_id) AS n_docs
-         |FROM ph GROUP BY phash HAVING count(*) > 1 ORDER BY phash""".stripMargin),
-    // ns147: the whole real-image pipeline rebuilt arithmetically - pixel
-    // v(x,y) = (byte((18y+x) mod n)*31 + 7x + 13y) mod 256 (grayscale, so
-    // BT.601 luminance IS v), 2x2 box averages by exact integer division,
-    // then the standard dHash bits and the all-pairs hamming<=3 filter
-    // (pigeonhole-equal to the engine's banded join at 3 < 4 bands).
-    "ns147_bmp_neardup" ->
-      ("""WITH base AS (SELECT doc_id, text FROM documents),
-         |fam AS (SELECT d.doc_id,
-         |  CASE d.doc_id % 5
-         |    WHEN 0 THEN b.text
-         |    WHEN 1 THEN b.text
-         |    WHEN 2 THEN substr(b.text, 1, 10) || '#' || substr(b.text, 12)
-         |    WHEN 3 THEN substr(b.text, 1, 20) || '@' || substr(b.text, 22)
-         |    ELSE reverse(b.text) END AS t
-         |  FROM base d JOIN base b ON b.doc_id = d.doc_id - d.doc_id % 5),
-         |h AS (SELECT doc_id, hex(encode(coalesce(t, ''))) AS hx,
-         |    octet_length(encode(coalesce(t, ''))) AS n FROM fam),
-         |px AS (SELECT doc_id, (g.i // 9) AS r, (g.i % 9) AS c, g.i AS cell,
-         |    (2 * (g.i % 9) + (p.q % 2)) AS x, (2 * (g.i // 9) + (p.q // 2)) AS y
-         |  FROM h, (SELECT unnest(range(0, 72)) AS i) g,
-         |       (SELECT unnest(range(0, 4)) AS q) p),
-         |pv AS (SELECT px.doc_id, px.cell,
-         |    (CASE WHEN h.n = 0 THEN 0 ELSE
-         |      (('0x' || substr(h.hx, (2 * ((18 * px.y + px.x) % h.n) + 1)::INT, 2))::INT
-         |       * 31 + 7 * px.x + 13 * px.y) % 256 END) AS v
-         |  FROM px JOIN h USING (doc_id)),
-         |grid AS (SELECT doc_id, cell AS i, (sum(v) // 4)::INT AS v
-         |  FROM pv GROUP BY doc_id, cell),
-         |bits AS (SELECT a.doc_id, ((a.i // 9) * 8 + (a.i % 9))::INT AS k,
-         |  CASE WHEN a.v < b.v THEN 1::BIGINT ELSE 0::BIGINT END AS bit
-         |  FROM grid a JOIN grid b ON a.doc_id = b.doc_id AND b.i = a.i + 1
-         |  WHERE a.i % 9 < 8 AND (a.i // 9) * 8 + (a.i % 9) < 63),
-         |ph AS (SELECT doc_id, sum(bit << k)::BIGINT AS phash FROM bits GROUP BY doc_id)
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  bit_count(xor(a.phash, b.phash))::BIGINT AS hamming
-         |FROM ph a JOIN ph b ON a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.phash, b.phash)) <= 3
-         |ORDER BY doc_a, doc_b""".stripMargin),
-    // ns151: the ns147 arithmetic replay extended with the verify stage -
-    // candidate pairs join back to the reconstructed 72-cell grids and
-    // keep sum(abs(cell diff)) <= 128, pure integer arithmetic.
-    "ns151_bmp_neardup_verified" ->
-      ("""WITH base AS (SELECT doc_id, text FROM documents),
-         |fam AS (SELECT d.doc_id,
-         |  CASE d.doc_id % 5
-         |    WHEN 0 THEN b.text
-         |    WHEN 1 THEN b.text
-         |    WHEN 2 THEN substr(b.text, 1, 10) || '#' || substr(b.text, 12)
-         |    WHEN 3 THEN substr(b.text, 1, 20) || '@' || substr(b.text, 22)
-         |    ELSE reverse(b.text) END AS t
-         |  FROM base d JOIN base b ON b.doc_id = d.doc_id - d.doc_id % 5),
-         |h AS (SELECT doc_id, hex(encode(coalesce(t, ''))) AS hx,
-         |    octet_length(encode(coalesce(t, ''))) AS n FROM fam),
-         |px AS (SELECT doc_id, (g.i // 9) AS r, (g.i % 9) AS c, g.i AS cell,
-         |    (2 * (g.i % 9) + (p.q % 2)) AS x, (2 * (g.i // 9) + (p.q // 2)) AS y
-         |  FROM h, (SELECT unnest(range(0, 72)) AS i) g,
-         |       (SELECT unnest(range(0, 4)) AS q) p),
-         |pv AS (SELECT px.doc_id, px.cell,
-         |    (CASE WHEN h.n = 0 THEN 0 ELSE
-         |      (('0x' || substr(h.hx, (2 * ((18 * px.y + px.x) % h.n) + 1)::INT, 2))::INT
-         |       * 31 + 7 * px.x + 13 * px.y) % 256 END) AS v
-         |  FROM px JOIN h USING (doc_id)),
-         |grid AS (SELECT doc_id, cell AS i, (sum(v) // 4)::INT AS v
-         |  FROM pv GROUP BY doc_id, cell),
-         |bits AS (SELECT a.doc_id, ((a.i // 9) * 8 + (a.i % 9))::INT AS k,
-         |  CASE WHEN a.v < b.v THEN 1::BIGINT ELSE 0::BIGINT END AS bit
-         |  FROM grid a JOIN grid b ON a.doc_id = b.doc_id AND b.i = a.i + 1
-         |  WHERE a.i % 9 < 8 AND (a.i // 9) * 8 + (a.i % 9) < 63),
-         |ph AS (SELECT doc_id, sum(bit << k)::BIGINT AS phash FROM bits GROUP BY doc_id),
-         |cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    bit_count(xor(a.phash, b.phash))::BIGINT AS hamming
-         |  FROM ph a JOIN ph b ON a.doc_id < b.doc_id
-         |  WHERE bit_count(xor(a.phash, b.phash)) <= 3),
-         |sadt AS (SELECT c.doc_a, c.doc_b, c.hamming,
-         |    sum(abs(ga.v - gb.v))::BIGINT AS sad
-         |  FROM cand c
-         |  JOIN grid ga ON ga.doc_id = c.doc_a
-         |  JOIN grid gb ON gb.doc_id = c.doc_b AND gb.i = ga.i
-         |  GROUP BY c.doc_a, c.doc_b, c.hamming)
-         |SELECT doc_a, doc_b, hamming, sad FROM sadt WHERE sad <= 128
-         |ORDER BY doc_a, doc_b""".stripMargin),
-    // ns153: the ns151 grid replay driving the TWO-TICK lifecycle - a
-    // probe doc is rejected iff some already-accepted doc is hamming<=3
-    // AND grid-SAD<=128; tick 2's accepted set includes tick 1's
-    // survivors (the index append is load-bearing).
-    "ns153_grid_index_lifecycle" ->
-      ("""WITH base AS (SELECT doc_id, text FROM documents),
-         |fam AS (SELECT d.doc_id,
-         |  CASE d.doc_id % 5
-         |    WHEN 0 THEN b.text
-         |    WHEN 1 THEN b.text
-         |    WHEN 2 THEN substr(b.text, 1, 10) || '#' || substr(b.text, 12)
-         |    WHEN 3 THEN substr(b.text, 1, 20) || '@' || substr(b.text, 22)
-         |    ELSE reverse(b.text) END AS t
-         |  FROM base d JOIN base b ON b.doc_id = d.doc_id - d.doc_id % 5),
-         |h AS (SELECT doc_id, hex(encode(coalesce(t, ''))) AS hx,
-         |    octet_length(encode(coalesce(t, ''))) AS n FROM fam),
-         |px AS (SELECT doc_id, (g.i // 9) AS r, (g.i % 9) AS c, g.i AS cell,
-         |    (2 * (g.i % 9) + (p.q % 2)) AS x, (2 * (g.i // 9) + (p.q // 2)) AS y
-         |  FROM h, (SELECT unnest(range(0, 72)) AS i) g,
-         |       (SELECT unnest(range(0, 4)) AS q) p),
-         |pv AS (SELECT px.doc_id, px.cell,
-         |    (CASE WHEN h.n = 0 THEN 0 ELSE
-         |      (('0x' || substr(h.hx, (2 * ((18 * px.y + px.x) % h.n) + 1)::INT, 2))::INT
-         |       * 31 + 7 * px.x + 13 * px.y) % 256 END) AS v
-         |  FROM px JOIN h USING (doc_id)),
-         |grid AS (SELECT doc_id, cell AS i, (sum(v) // 4)::INT AS v
-         |  FROM pv GROUP BY doc_id, cell),
-         |bits AS (SELECT a.doc_id, ((a.i // 9) * 8 + (a.i % 9))::INT AS k,
-         |  CASE WHEN a.v < b.v THEN 1::BIGINT ELSE 0::BIGINT END AS bit
-         |  FROM grid a JOIN grid b ON a.doc_id = b.doc_id AND b.i = a.i + 1
-         |  WHERE a.i % 9 < 8 AND (a.i // 9) * 8 + (a.i % 9) < 63),
-         |ph AS (SELECT doc_id, sum(bit << k)::BIGINT AS phash FROM bits GROUP BY doc_id),
-         |pairs AS (SELECT a.doc_id AS da, b.doc_id AS db
-         |  FROM ph a JOIN ph b ON a.doc_id <> b.doc_id
-         |  WHERE bit_count(xor(a.phash, b.phash)) <= 3),
-         |sadp AS (SELECT p.da, p.db FROM pairs p
-         |  JOIN grid ga ON ga.doc_id = p.da
-         |  JOIN grid gb ON gb.doc_id = p.db AND gb.i = ga.i
-         |  GROUP BY p.da, p.db HAVING sum(abs(ga.v - gb.v)) <= 128),
-         |corpus AS (SELECT doc_id FROM ph WHERE doc_id % 5 <= 1),
-         |s1 AS (SELECT doc_id, phash FROM ph WHERE doc_id % 5 = 4
-         |  AND NOT EXISTS (SELECT 1 FROM sadp s JOIN corpus c ON s.db = c.doc_id
-         |    WHERE s.da = ph.doc_id)),
-         |acc2 AS (SELECT doc_id FROM corpus UNION ALL SELECT doc_id FROM s1),
-         |s2 AS (SELECT doc_id, phash FROM ph WHERE doc_id % 5 IN (2, 3)
-         |  AND NOT EXISTS (SELECT 1 FROM sadp s JOIN acc2 a ON s.db = a.doc_id
-         |    WHERE s.da = ph.doc_id))
-         |SELECT doc_id, phash FROM s1
-         |UNION ALL SELECT doc_id, phash FROM s2 ORDER BY doc_id""".stripMargin),
-    // ns148: WARC record geometry with no container - per-record size
-    // 97 + digits(doc_id) + digits(len) + len (the fixed header skeleton
-    // plus the two variable-width decimal fields plus the payload),
-    // prefix-summed per 10-doc file in doc_id order; payload sums from
-    // hex expansion. Every byte of the synthesized file is accounted for
-    // (WarcSpec pins sum(rec_size) == file length).
-    "ns148_warc_ingest" ->
-      ("""WITH h AS (SELECT doc_id, doc_id - doc_id % 10 AS warc_id,
-         |    hex(encode(coalesce(text, ''))) AS hx,
-         |    octet_length(encode(coalesce(text, ''))) AS n
-         |  FROM documents),
-         |sz AS (SELECT doc_id, warc_id, n,
-         |    97 + length(doc_id::VARCHAR) + length(n::VARCHAR) + n AS rec_size,
-         |    row_number() OVER (PARTITION BY warc_id ORDER BY doc_id) - 1 AS rec_idx
-         |  FROM h),
-         |off AS (SELECT doc_id, warc_id, n, rec_idx,
-         |    coalesce(sum(rec_size) OVER (PARTITION BY warc_id ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS offset
-         |  FROM sz),
-         |pay AS (SELECT doc_id,
-         |    sum(('0x' || substr(hx, (2 * j + 1)::INT, 2))::INT) AS psum
-         |  FROM (SELECT doc_id, hx, unnest(range(0, n)) AS j FROM h)
-         |  GROUP BY doc_id)
-         |SELECT o.warc_id, o.rec_idx::INT AS rec_idx, o.offset::BIGINT AS offset,
-         |  (o.offset + 93 + length(o.doc_id::VARCHAR) + length(o.n::VARCHAR))::BIGINT
-         |    AS payload_off,
-         |  'response' AS warc_type,
-         |  'http://example.com/doc/' || o.doc_id AS target_uri,
-         |  o.n::BIGINT AS content_length,
-         |  coalesce(p.psum, 0)::BIGINT AS payload_sum
-         |FROM off o LEFT JOIN pay p USING (doc_id)
-         |ORDER BY o.warc_id, o.rec_idx""".stripMargin),
-    // ns149: the independent witness - if the engine's offset+slice is
-    // byte-exact, the sliced payload IS encode(text), so its md5 equals
-    // md5 of the raw text bytes. No container, no offsets, no arithmetic
-    // on the oracle side at all.
-    "ns149_warc_fetch" ->
-      ("""SELECT doc_id,
-         |  'http://example.com/doc/' || doc_id AS target_uri,
-         |  octet_length(encode(coalesce(text, '')))::BIGINT AS content_length,
-         |  md5(coalesce(text, '')) AS payload_md5 -- md5(VARCHAR) = UTF-8 bytes
-         |FROM documents ORDER BY doc_id""".stripMargin),
-    // ns150: the WET replay - payload text by the same concatenation
-    // (container legs already certified by ns148/ns149), HTTP split by
-    // the same framing functions, HTML extraction by the ns63 regex
-    // chain. chr(13)||chr(10) builds CRLF without embedding control
-    // characters in the SQL literal.
-    "ns150_warc_wet" ->
-      ("""WITH crlf AS (SELECT chr(13) || chr(10) AS nl),
-         |pay AS (SELECT doc_id,
-         |    'HTTP/1.1 200 OK' || nl || 'Content-Type: text/html; charset=utf-8'
-         |      || nl || nl ||
-         |    '<html><body><h1>Doc ' || doc_id || '</h1><p>' || coalesce(text, '') ||
-         |    '</p></body></html>' AS p
-         |  FROM documents, crlf),
-         |sp AS (SELECT doc_id,
-         |    regexp_extract(p, '^HTTP/1\.1 ([0-9]+)', 1)::BIGINT AS http_status,
-         |    regexp_extract(p, 'Content-[Tt]ype: ([^' || chr(13) || chr(10) || ']+)', 1)
-         |      AS content_type,
-         |    substr(p, strpos(p, nl || nl) + 4) AS h
-         |  FROM pay, crlf),
-         |s1 AS (SELECT doc_id, http_status, content_type, length(h) AS n_raw,
-         |  regexp_replace(h, '(?s)<script[^>]*>.*?</script>', ' ', 'g') AS t FROM sp),
-         |s2 AS (SELECT doc_id, http_status, content_type, n_raw,
-         |  regexp_replace(t, '(?s)<style[^>]*>.*?</style>', ' ', 'g') AS t FROM s1),
-         |s3 AS (SELECT doc_id, http_status, content_type, n_raw,
-         |  regexp_replace(t, '<[^>]*>', ' ', 'g') AS t FROM s2),
-         |s4 AS (SELECT doc_id, http_status, content_type, n_raw,
-         |  replace(replace(replace(replace(replace(t,
-         |  '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''), '&amp;', '&') AS t FROM s3),
-         |s5 AS (SELECT doc_id, http_status, content_type, n_raw,
-         |  trim(regexp_replace(t, '\s+', ' ', 'g')) AS text FROM s4)
-         |SELECT doc_id, http_status, content_type, n_raw,
-         |  length(text)::BIGINT AS n_text, text
-         |FROM s5 ORDER BY doc_id""".stripMargin),
-  )
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.queries.Registry.all.map(q => q.name -> q.build).toMap
+  private def k9 = queries("k9_combined_topk")
 }

@@ -1,11 +1,17 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.queries.{Query, Registry}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // SPARK_GRAFT_VERIFY_ONLY=ns21,ns2_dedup_minhash (ids or full names)
+    // restricts the dump and the oracle JSON for local iteration; an
+    // unknown entry fails here, before any Spark work.
+    val selected = Registry.select(sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
+      .toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -18,15 +24,17 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Logs.quietCheckpointUnpersistWarns()
+    dump(spark, sfDir, outDir, selected)
+    spark.stop()
+  }
+
+  /** Writes `selected`'s results, their oracle_sql.json and the testdata
+    * manifest.json under `outDir`. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      selected: Seq[Query]): Unit = {
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_VERIFY_ONLY=ns21_decontaminate,… restricts the dump (and
-    // the oracle JSON, so tools/oracle_check.py checks the same subset) for
-    // local iteration; the driver contract (unset) is unchanged.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def selected(name: String) = only.forall(_.contains(name))
-    SparkEntry.queries.filter(e => selected(e._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    for (Query(name, _, build, _) <- selected) {
+      try build(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -55,8 +63,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(e => selected(e._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = selected.map(e => s"${q(e.name)}: ${q(e.oracle())}")
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Testdata-drift guard: stamp the dump with a per-table source
     // fingerprint (md5 over the sorted file listing with sizes+mtimes —
@@ -66,12 +74,10 @@ object Verify {
     // so a testdata regeneration between dump and compare fails loudly
     // instead of silently reddening correctness cells (the r6 ts
     // re-encoding and r7 ns71 burns).
-    val tables = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "events", "documents", "embeddings")
     // per-table best-effort: a missing/unreadable table must not fail the
     // whole dump at the stamping step (the queries are already written);
     // it simply goes unguarded, and oracle_check's per-table loop skips it
-    val tableEntries = tables.flatMap { t =>
+    val tableEntries = Tables.all.flatMap { t =>
       val path = s"$sfDir/$t.parquet"
       try {
         val fp = graft.ops.Dedup.sourceFingerprint(spark, path)
@@ -86,6 +92,5 @@ object Verify {
       s"${q("written_at_ms")}: ${System.currentTimeMillis()}, " +
       s"${q("tables")}: $tableEntries}"
     Files.writeString(Paths.get(s"$outDir/manifest.json"), manifest)
-    spark.stop()
   }
 }

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *     the same UTF-8 bytes, takes the same 15-hex-char prefix, the same
   *     `% corpus` index, and reads the same corpus value from an inline
   *     list literal generated from [[Corpora]] (single source of truth —
-  *     `graft.SparkEntry` builds the SQL from the same vectors).
+  *     `graft.queries.Klepto` builds the SQL from the same vectors).
   *
   * Reference semantics preserved (pkg/anonymiser/anonymiser.go:82-107,
   * fake.go person surface): same value SHAPES (`First Last`,
@@ -134,7 +134,7 @@ object Persona {
   // ---- DuckDB replay (oracle-side SQL generation) -------------------------
   // The SQL twin of the Column surface above, generated from the SAME
   // Corpora vectors so engine and oracle cannot drift. Used by
-  // SparkEntry's k14 oracle entry.
+  // the k14 oracle entry in graft.queries.Klepto.
 
   private def sqlArr(c: IndexedSeq[String]): String =
     c.map(s => "'" + s.replace("'", "''") + "'").mkString("[", ",", "]")

@@ -1,0 +1,488 @@
+package graft
+package queries
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import Shared._
+
+/** Salted/range/bucketed/bloom joins, linkage, graph metrics. */
+private[graft] object Rel extends Family("rel") {
+
+  /** NS32 — skew-safe salted join: lineitem⋈orders on the order key with
+    * the left side split across 8 salts and orders replicated per salt,
+    * rolled up per order priority with exact-integer aggregates. The
+    * result is row-identical to the plain join (the oracle IS the plain
+    * join) — only the shuffle distribution changes, which is the point. */
+  private def ns32(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Joins.saltedJoin(
+        Tables.load(s, dir, "lineitem")
+          .select(col("l_orderkey"), col("l_quantity")),
+        Tables.load(s, dir, "orders")
+          .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority")),
+        keys = Seq("l_orderkey"), salts = 8)
+      .groupBy(col("o_orderpriority"))
+      .agg(count(lit(1)).as("n_items"),
+        sum(col("l_quantity").cast("long")).as("sum_qty"))
+
+  /** NS55 — Bloom-pruned semi-join: lineitems of high-value orders, with
+    * the fact side thinned by 3 broadcast md5-bit probes BEFORE the exact
+    * join's exchange. Row-identical to the plain semi-join (the oracle IS
+    * the plain semi-join — false positives die in the final exact pass). */
+  private def ns55(s: SparkSession, dir: String): DataFrame = {
+    val l = Tables.load(s, dir, "lineitem")
+      .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"))
+    val o = Tables.load(s, dir, "orders")
+      .where(col("o_totalprice") > 150000)
+      .select(col("o_orderkey").as("l_orderkey"))
+    // forceBloom: at this scale the stats lever would (rightly) skip the
+    // Bloom pass for the broadcast join — pin it on so the query times the
+    // operator's real big-dim machinery, ns32's pattern
+    graft.ops.Joins.bloomSemiJoin(l, o, "l_orderkey",
+        forceBloom = Some(true))
+  }
+
+  /** NS43 — bucketed range join: every view within the 24h window before
+    * a purchase by the same user — the attribution-window interval join.
+    * Spark has no native range join; the naive θ-join is a nested loop.
+    * [[graft.ops.Joins.rangeJoin]] manufactures an equality key (time
+    * bucket = window size, so intervals replicate ≤2×) and the range
+    * check rides as a residual condition. */
+  private def ns43(s: SparkSession, dir: String): DataFrame = {
+    val win = 86400L * 1000000L // 24h in micros
+    val ev = graft.ops.Events.tsMicros(Tables.load(s, dir, "events"))
+    val views = ev.where(col("event_type") === "view")
+      .select(col("user_id"), col("event_id").as("view_id"), col("ts"))
+    val purchases = ev.where(col("event_type") === "purchase")
+      .select(col("user_id"), col("event_id").as("purchase_id"),
+        (col("ts") - lit(win)).as("start_ts"), col("ts").as("end_ts"))
+    graft.ops.Joins.rangeJoin(views, purchases, "ts", "start_ts", "end_ts",
+        keys = Seq("user_id"), bucket = win)
+      .select(col("purchase_id"), col("view_id"), col("user_id"),
+        (col("end_ts") - col("ts")).as("lead_us"))
+  }
+
+  /** NS50 — co-located bucketed join: lineitem and orders bucketed 8 ways
+    * on the order key, then joined WITHOUT any exchange — the write-once
+    * shuffle that every subsequent fact⋈fact join amortizes at 100 TB.
+    * Tables are built ONCE PER SESSION (guarded by catalog existence —
+    * the bucketing metadata lives in the session catalog), so Bench's
+    * untimed warmup absorbs the build and the timed runs measure the
+    * join, the same contract as the ns17/ns18 index builds. The oracle is
+    * the plain join: bucketing must be answer-invisible. */
+  private def ns50(s: SparkSession, dir: String): DataFrame = {
+    // table names keyed on the sfDir so two data dirs never share tables
+    val key = java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+    val (tl, to) = (s"graft_bl_$key", s"graft_bo_$key")
+    if (!s.catalog.tableExists(tl) || !s.catalog.tableExists(to)) {
+      // per-JVM-unique path: no cross-process overwrite race; reclaimed at
+      // JVM exit (same hygiene as ns18)
+      val base = s"${System.getProperty("java.io.tmpdir")}/graft_bucketed_" +
+        s"${key}_${java.util.UUID.randomUUID().toString.take(8)}"
+      graft.ops.Layout.bucketize(
+        Tables.load(s, dir, "lineitem").select("l_orderkey", "l_quantity"),
+        tl, s"$base/lineitem",
+        bucketCols = Seq("l_orderkey"), numBuckets = 8,
+        sortCols = Seq("l_orderkey"))
+      graft.ops.Layout.bucketize(
+        Tables.load(s, dir, "orders").select("o_orderkey", "o_orderpriority"),
+        to, s"$base/orders",
+        bucketCols = Seq("o_orderkey"), numBuckets = 8,
+        sortCols = Seq("o_orderkey"))
+      val p = new org.apache.hadoop.fs.Path(base)
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
+    }
+    s.table(tl)
+      .join(s.table(to), col("l_orderkey") === col("o_orderkey"))
+      .groupBy(col("o_orderpriority"))
+      .agg(count(lit(1)).as("n_items"),
+        sum(col("l_quantity").cast("long")).as("sum_qty"))
+  }
+
+  /** NS84 — blocked fuzzy record linkage
+    * ([[graft.ops.Linkage.fuzzyDuplicates]]): entity resolution over
+    * structured records — the metadata-dedup counterpart of the
+    * text/media families. The synthesis derives a 12-hex pseudo-name per
+    * customer (md5-based, engine-reproducible) and emits 3 records per
+    * entity: the clean name, a 1-char substitution typo AT POSITION 2 —
+    * deliberately inside the prefix window, so the pair is only
+    * recoverable via the suffix key (the multi-key pigeonhole is
+    * load-bearing, not decorative) — and an unrelated control. Blocking
+    * on (nation, prefix4/suffix4), candidates verified with the codegen
+    * `levenshtein` ≤ 1. The oracle replays the BLOCKED contract
+    * (blocking is the operator's semantics, recall trade documented),
+    * so both sides are the same function. */
+  /** The ns84/ns96 record synthesis: 3 records per customer — v0 base
+    * name, v1 one-substitution typo (links to v0), v2 unrelated. */
+  private def ns84Recs(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "customer")
+      .select(col("c_custkey"), col("c_nationkey"))
+      .withColumn("nm0",
+        substring(md5(col("c_custkey").cast("string").cast("binary")), 1, 12))
+      .select(col("c_custkey"), col("c_nationkey"), col("nm0"),
+        explode(array(lit(0), lit(1), lit(2))).as("v"))
+      .select(
+        (col("c_custkey") * 3 + col("v")).as("rec_id"),
+        col("c_nationkey"),
+        when(col("v") === 0, col("nm0"))
+          .when(col("v") === 1,
+            concat(substring(col("nm0"), 1, 1), lit("z"),
+              expr("substring(nm0, 3)")))
+          .otherwise(substring(
+            md5(concat(lit("x"), col("c_custkey").cast("string"))
+              .cast("binary")), 1, 12)).as("name"))
+
+  private def ns84(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Linkage.fuzzyDuplicates(ns84Recs(s, dir),
+      groupCols = Seq("c_nationkey"), maxDist = 1, prefixLen = 4)
+
+  /** NS96 — survivorship / golden records
+    * ([[graft.ops.Linkage.goldenRecords]]): the step after ns84's
+    * linkage — each resolved entity (pointer-jumping CC over the fuzzy
+    * pairs) elects ONE golden record by the completeness-first policy
+    * (most non-null attributes, smallest id on ties — a total order, so
+    * the winner is partitioning-independent). Synthetic attribute
+    * coverage (phone null on rec_id ≡ 1 mod 4, email null on ≡ 0 mod 3)
+    * makes completeness genuinely load-bearing: clusters routinely
+    * contain records with different non-null counts, so a broken policy
+    * flips winners and the hash. Oracle replays the linkage, resolves
+    * components with a recursive CTE, and re-elects via window rank. */
+  private def ns96(s: SparkSession, dir: String): DataFrame = {
+    val recs = ns84Recs(s, dir)
+      .withColumn("phone",
+        when(col("rec_id") % 4 === 1, lit(null).cast("string"))
+          .otherwise(concat(lit("p"), col("rec_id"))))
+      .withColumn("email",
+        when(col("rec_id") % 3 === 0, lit(null).cast("string"))
+          .otherwise(concat(lit("e"), col("rec_id"))))
+    val pairs = graft.ops.Linkage.fuzzyDuplicates(recs,
+      groupCols = Seq("c_nationkey"), maxDist = 1, prefixLen = 4)
+    graft.ops.Linkage.goldenRecords(recs, pairs,
+      attrCols = Seq("phone", "email"))
+  }
+
+  /** NS113 — FK orphan audit ([[graft.ops.Integrity.fkOrphans]]): the
+    * read-side complement of the subsetter's FK discipline — for each
+    * declared edge, how many child rows an FK-closed subset would
+    * silently drop. Three TPC-H edges (consistent by construction)
+    * plus the cross-domain events.user_id → customer.c_custkey edge
+    * and a PARTIAL-REPLICA edge (events against only nation-0's
+    * customers — the regional-copy audit scenario), whose orphan count
+    * is genuinely non-zero inside the hash gate.
+    * Parent sides reduce to distinct key projections before the anti
+    * joins; exact per-mille integer arithmetic. */
+  private def ns113(s: SparkSession, dir: String): DataFrame = {
+    import graft.ops.Integrity.FkEdge
+    val li = Tables.load(s, dir, "lineitem")
+    val ord = Tables.load(s, dir, "orders")
+    val cust = Tables.load(s, dir, "customer")
+    val nat = Tables.load(s, dir, "nation")
+    val ev = Tables.load(s, dir, "events")
+    graft.ops.Integrity.fkOrphans(s, Seq(
+        FkEdge("customer->nation", cust, "c_nationkey", nat, "n_nationkey"),
+        FkEdge("events->customer", ev, "user_id", cust, "c_custkey"),
+        FkEdge("events->customer_n0", ev, "user_id",
+          cust.where(col("c_nationkey") === 0), "c_custkey"),
+        FkEdge("lineitem->orders", li, "l_orderkey", ord, "o_orderkey"),
+        FkEdge("orders->customer", ord, "o_custkey", cust, "c_custkey")))
+  }
+
+  /** NS124 — join-key cardinality audit ([[graft.ops.Integrity
+    * .joinProfile]]): the pre-flight join-explosion report over four
+    * declared edges — the two TPC-H FK joins (1:N sanity), the
+    * orphan-bearing events→customer edge, and the events SELF-join on
+    * user_id whose `est_pairs = Σ n_u²` is the classic accidental
+    * many-to-many a pipeline should price BEFORE running. The audited
+    * joins never execute; cost is per-side key aggregation. */
+  private def ns124(s: SparkSession, dir: String): DataFrame = {
+    import graft.ops.Integrity.JoinEdge
+    val orders = Tables.load(s, dir, "orders")
+    val cust = Tables.load(s, dir, "customer")
+    val li = Tables.load(s, dir, "lineitem")
+    val ev = Tables.load(s, dir, "events")
+    graft.ops.Integrity.joinProfile(s, Seq(
+        JoinEdge("events_self_user", ev, "user_id", ev, "user_id"),
+        JoinEdge("events->customer", ev, "user_id", cust, "c_custkey"),
+        JoinEdge("lineitem->orders", li, "l_orderkey", orders, "o_orderkey"),
+        JoinEdge("orders->customer", orders, "o_custkey", cust, "c_custkey")))
+  }
+
+  /** NS87 — link-graph authority ([[graft.ops.Graphs.pagerankInt]]):
+    * exact-integer fixed-point PageRank over a deterministic synthetic
+    * link graph (two outlinks per doc, affine mod-N targets — hubs
+    * emerge from modular collisions). Float PageRank is
+    * order-dependent under distributed summation; the micro-unit
+    * integer formulation is partitioning-invariant and replayed
+    * verbatim by the oracle's five chained CTE iterations. */
+  /** The ns87/ns88 shared link-graph synthesis — ONE definition so the
+    * two queries (and their oracles) can never desynchronize: one affine
+    * outlink per doc (a bijection mod n — the "chain") plus one
+    * QUADRATIC outlink — squares collide mod n, so popular targets
+    * emerge and both the rank distribution and the triangle density are
+    * genuinely skewed (two coprime affine maps would make the graph
+    * regular: uniform PageRank fixed point, a fixture unable to catch a
+    * broken iteration). */
+  private def linkEdges(s: SparkSession, dir: String): DataFrame = {
+    val d = docs(s, dir).select(col("doc_id"))
+    val n = d.agg(max(col("doc_id"))).head.getLong(0) + 1
+    d.select(col("doc_id").as("src"),
+        ((col("doc_id") * 31 + 7) % n).as("dst"))
+      .unionByName(d.select(col("doc_id").as("src"),
+        ((col("doc_id") * col("doc_id") * 17 + 3) % n).as("dst")))
+  }
+
+  private def ns87(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Graphs.pagerankInt(linkEdges(s, dir), iterations = 5)
+
+  /** NS88 — link-graph triangle density
+    * ([[graft.ops.Graphs.triangleCounts]]): per-page mutual-endorsement
+    * counts over the SAME synthetic link graph as ns87 — link farms are
+    * triangle-dense where organic graphs are tree-like. The engine runs
+    * the degree-ordered-orientation join (candidate volume O(m^{3/2})
+    * regardless of hub skew); the oracle counts triangles brute-force —
+    * orientation is pure execution strategy, so both sides are the same
+    * function. */
+  private def ns88(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Graphs.triangleCounts(linkEdges(s, dir))
+
+  val queries: Seq[Query] = Seq(
+    // ns32's oracle is deliberately the PLAIN join: salting must be
+    // invisible in the result.
+    query("ns32_join_salted", ns32)(
+      ("""SELECT o.o_orderpriority, count(*) AS n_items,
+         |  sum(l.l_quantity::BIGINT)::BIGINT AS sum_qty
+         |FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
+         |GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority""".stripMargin)),
+    // ns43's oracle is the PLAIN θ-join: the bucketing must be invisible
+    // in the result (it changes the plan, never the matches).
+    query("ns43_join_range", ns43)(
+      ("""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts, event_type FROM events),
+         |v AS (SELECT user_id, event_id AS view_id, ts FROM e WHERE event_type = 'view'),
+         |p AS (SELECT user_id, event_id AS purchase_id, ts - 86400000000 AS start_ts, ts AS end_ts FROM e WHERE event_type = 'purchase')
+         |SELECT p.purchase_id, v.view_id, v.user_id, p.end_ts - v.ts AS lead_us
+         |FROM v JOIN p ON v.user_id = p.user_id AND v.ts >= p.start_ts AND v.ts < p.end_ts
+         |ORDER BY purchase_id, view_id""".stripMargin)),
+    // ns50's oracle is the PLAIN join (same as ns32): bucketing must be
+    // invisible in the result — it changes the plan, never the matches.
+    query("ns50_join_bucketed", ns50)(
+      ("""SELECT o.o_orderpriority, count(*) AS n_items,
+         |  sum(l.l_quantity::BIGINT)::BIGINT AS sum_qty
+         |FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
+         |GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority""".stripMargin)),
+    // ns55's oracle is the PLAIN semi-join: the Bloom pass is a plan-level
+    // pre-filter whose false positives the exact join removes, so the
+    // result must be bit-identical to no Bloom at all (ns32's contract).
+    query("ns55_join_bloom", ns55)(
+      ("""SELECT l_orderkey, l_linenumber, l_partkey FROM lineitem
+         |WHERE l_orderkey IN (SELECT o_orderkey FROM orders WHERE o_totalprice > 150000)
+         |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    // ns84 replays the BLOCKED linkage contract: same name synthesis,
+    // same two block keys, same levenshtein gate — blocking is the
+    // operator's semantics, so oracle and engine are the same function.
+    query("ns84_record_linkage", ns84)(
+      ("""WITH c AS (SELECT c_custkey, c_nationkey,
+         |  substr(md5(c_custkey::VARCHAR), 1, 12) AS nm0 FROM customer),
+         |recs AS (SELECT c_custkey * 3 + v AS rec_id, c_nationkey,
+         |  CASE v WHEN 0 THEN nm0
+         |         WHEN 1 THEN substr(nm0, 1, 1) || 'z' || substr(nm0, 3)
+         |         ELSE substr(md5('x' || c_custkey::VARCHAR), 1, 12) END AS nm
+         |  FROM c, (SELECT unnest([0, 1, 2]) AS v) vs),
+         |blocked AS (SELECT rec_id, c_nationkey, nm, ki,
+         |  CASE ki WHEN 0 THEN substr(nm, 1, 4)
+         |          ELSE substr(nm, greatest(length(nm) - 3, 1), 4) END AS key
+         |  FROM recs, (SELECT unnest([0, 1]) AS ki) ks)
+         |SELECT DISTINCT a.rec_id AS rec_a, b.rec_id AS rec_b,
+         |  levenshtein(a.nm, b.nm)::BIGINT AS dist
+         |FROM blocked a JOIN blocked b
+         |  ON a.ki = b.ki AND a.key = b.key
+         |  AND a.c_nationkey IS NOT DISTINCT FROM b.c_nationkey
+         |  AND a.rec_id < b.rec_id
+         |WHERE levenshtein(a.nm, b.nm) <= 1
+         |ORDER BY rec_a, rec_b""".stripMargin)),
+    // ns87 replays the exact-integer fixed-point iteration verbatim —
+    // five chained CTE rounds of the same floor-division contribution
+    // and integer sums (sum() is HUGEINT in DuckDB, cast back ::BIGINT:
+    // the ns71 lesson).
+    query("ns87_link_pagerank", ns87)(
+      ("""WITH nn AS (SELECT max(doc_id) + 1 AS n FROM documents),
+         |e AS (SELECT doc_id AS src, (doc_id * 31 + 7) % n AS dst FROM documents, nn
+         |  UNION ALL SELECT doc_id, (doc_id * doc_id * 17 + 3) % n FROM documents, nn),
+         |nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
+         |deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src),
+         |r0 AS (SELECT node, 1000000::BIGINT AS rank FROM nodes),
+         |c1 AS (SELECT e.dst, sum((850 * r.rank) // (1000 * d.outdeg)) AS m
+         |  FROM e JOIN r0 r ON e.src = r.node JOIN deg d ON d.src = e.src GROUP BY e.dst),
+         |r1 AS (SELECT node, (150000 + coalesce(m, 0))::BIGINT AS rank FROM nodes LEFT JOIN c1 ON c1.dst = node),
+         |c2 AS (SELECT e.dst, sum((850 * r.rank) // (1000 * d.outdeg)) AS m
+         |  FROM e JOIN r1 r ON e.src = r.node JOIN deg d ON d.src = e.src GROUP BY e.dst),
+         |r2 AS (SELECT node, (150000 + coalesce(m, 0))::BIGINT AS rank FROM nodes LEFT JOIN c2 ON c2.dst = node),
+         |c3 AS (SELECT e.dst, sum((850 * r.rank) // (1000 * d.outdeg)) AS m
+         |  FROM e JOIN r2 r ON e.src = r.node JOIN deg d ON d.src = e.src GROUP BY e.dst),
+         |r3 AS (SELECT node, (150000 + coalesce(m, 0))::BIGINT AS rank FROM nodes LEFT JOIN c3 ON c3.dst = node),
+         |c4 AS (SELECT e.dst, sum((850 * r.rank) // (1000 * d.outdeg)) AS m
+         |  FROM e JOIN r3 r ON e.src = r.node JOIN deg d ON d.src = e.src GROUP BY e.dst),
+         |r4 AS (SELECT node, (150000 + coalesce(m, 0))::BIGINT AS rank FROM nodes LEFT JOIN c4 ON c4.dst = node),
+         |c5 AS (SELECT e.dst, sum((850 * r.rank) // (1000 * d.outdeg)) AS m
+         |  FROM e JOIN r4 r ON e.src = r.node JOIN deg d ON d.src = e.src GROUP BY e.dst),
+         |r5 AS (SELECT node, (150000 + coalesce(m, 0))::BIGINT AS rank FROM nodes LEFT JOIN c5 ON c5.dst = node)
+         |SELECT node, rank FROM r5 ORDER BY rank DESC, node""".stripMargin)),
+    // ns88 counts triangles BRUTE-FORCE over the canonical a<b edge list
+    // (x<y<z falls out of chaining) — the engine's degree-ordered
+    // orientation is execution strategy, not semantics.
+    query("ns88_link_triangles", ns88)(
+      ("""WITH nn AS (SELECT max(doc_id) + 1 AS n FROM documents),
+         |ed AS (SELECT doc_id AS src, (doc_id * 31 + 7) % n AS dst FROM documents, nn
+         |  UNION ALL SELECT doc_id, (doc_id * doc_id * 17 + 3) % n FROM documents, nn),
+         |und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM ed WHERE src <> dst),
+         |nodes AS (SELECT a AS node FROM und UNION SELECT b FROM und),
+         |tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
+         |  FROM und e1 JOIN und e2 ON e2.a = e1.b
+         |  JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
+         |cnt AS (SELECT node, count(*) AS c FROM (
+         |  SELECT x AS node FROM tri UNION ALL SELECT y FROM tri
+         |  UNION ALL SELECT z FROM tri) t GROUP BY node)
+         |SELECT nodes.node AS node, coalesce(c, 0)::BIGINT AS n_triangles
+         |FROM nodes LEFT JOIN cnt ON cnt.node = nodes.node
+         |ORDER BY nodes.node""".stripMargin)),
+    // ns96 replays ns84's linkage, resolves components with a recursive
+    // transitive-closure CTE (cluster = min reachable id, the engine's
+    // pointer-jumping contract), and re-elects the golden record by the
+    // same (completeness desc, id asc) total order via window rank.
+    query("ns96_golden_records", ns96)(
+      ("""WITH RECURSIVE c AS (SELECT c_custkey, c_nationkey,
+         |  substr(md5(c_custkey::VARCHAR), 1, 12) AS nm0 FROM customer),
+         |recs AS (SELECT c_custkey * 3 + v AS rec_id, c_nationkey,
+         |  CASE v WHEN 0 THEN nm0
+         |         WHEN 1 THEN substr(nm0, 1, 1) || 'z' || substr(nm0, 3)
+         |         ELSE substr(md5('x' || c_custkey::VARCHAR), 1, 12) END AS nm
+         |  FROM c, (SELECT unnest([0, 1, 2]) AS v) vs),
+         |recs2 AS (SELECT rec_id, c_nationkey, nm,
+         |  CASE WHEN rec_id % 4 = 1 THEN NULL ELSE 'p' || rec_id END AS phone,
+         |  CASE WHEN rec_id % 3 = 0 THEN NULL ELSE 'e' || rec_id END AS email
+         |  FROM recs),
+         |blocked AS (SELECT rec_id, c_nationkey, nm, ki,
+         |  CASE ki WHEN 0 THEN substr(nm, 1, 4)
+         |          ELSE substr(nm, greatest(length(nm) - 3, 1), 4) END AS key
+         |  FROM recs2, (SELECT unnest([0, 1]) AS ki) ks),
+         |pairs AS (SELECT DISTINCT a.rec_id AS rec_a, b.rec_id AS rec_b
+         |  FROM blocked a JOIN blocked b
+         |    ON a.ki = b.ki AND a.key = b.key
+         |    AND a.c_nationkey IS NOT DISTINCT FROM b.c_nationkey
+         |    AND a.rec_id < b.rec_id
+         |  WHERE levenshtein(a.nm, b.nm) <= 1),
+         |edges AS (SELECT rec_a AS a, rec_b AS b FROM pairs
+         |  UNION SELECT rec_b, rec_a FROM pairs),
+         |reach AS (SELECT a AS node, b AS r FROM edges
+         |  UNION SELECT reach.node, e.b FROM reach JOIN edges e ON e.a = reach.r),
+         |comp AS (SELECT node, least(node, min(r)) AS cluster
+         |  FROM reach GROUP BY node),
+         |withc AS (SELECT r.rec_id,
+         |  coalesce(comp.cluster, r.rec_id) AS cluster,
+         |  ((CASE WHEN phone IS NULL THEN 0 ELSE 1 END)
+         |   + (CASE WHEN email IS NULL THEN 0 ELSE 1 END))::BIGINT AS compl
+         |  FROM recs2 r LEFT JOIN comp ON comp.node = r.rec_id)
+         |SELECT cluster, golden_id, n_members, completeness FROM (
+         |  SELECT cluster, rec_id AS golden_id,
+         |    count(*) OVER (PARTITION BY cluster) AS n_members,
+         |    max(compl) OVER (PARTITION BY cluster) AS completeness,
+         |    row_number() OVER (PARTITION BY cluster
+         |      ORDER BY compl DESC, rec_id) AS rn
+         |  FROM withc) t
+         |WHERE rn = 1 ORDER BY cluster""".stripMargin)),
+    // ns113: left join + IS NULL replays the anti-join per edge (NULL
+    // child keys count as orphans on both sides); exact per-mille.
+    query("ns113_fk_orphans", ns113)(
+      ("""WITH r AS (
+         |  SELECT 'customer->nation' AS fk_edge, count(*) AS n_child,
+         |    count(*) FILTER (WHERE p.k IS NULL) AS n_orphans
+         |  FROM customer LEFT JOIN (SELECT DISTINCT n_nationkey AS k FROM nation) p ON c_nationkey = p.k
+         |  UNION ALL
+         |  SELECT 'events->customer', count(*),
+         |    count(*) FILTER (WHERE p.k IS NULL)
+         |  FROM events LEFT JOIN (SELECT DISTINCT c_custkey AS k FROM customer) p ON user_id = p.k
+         |  UNION ALL
+         |  SELECT 'events->customer_n0', count(*),
+         |    count(*) FILTER (WHERE p.k IS NULL)
+         |  FROM events LEFT JOIN (SELECT DISTINCT c_custkey AS k FROM customer WHERE c_nationkey = 0) p ON user_id = p.k
+         |  UNION ALL
+         |  SELECT 'lineitem->orders', count(*),
+         |    count(*) FILTER (WHERE p.k IS NULL)
+         |  FROM lineitem LEFT JOIN (SELECT DISTINCT o_orderkey AS k FROM orders) p ON l_orderkey = p.k
+         |  UNION ALL
+         |  SELECT 'orders->customer', count(*),
+         |    count(*) FILTER (WHERE p.k IS NULL)
+         |  FROM orders LEFT JOIN (SELECT DISTINCT c_custkey AS k FROM customer) p ON o_custkey = p.k)
+         |SELECT fk_edge, n_child, n_orphans, n_orphans * 1000 // n_child AS orphans_per_mille
+         |FROM r ORDER BY fk_edge""".stripMargin)),
+    // ns124: each edge replays as two key-count CTEs + a plain-equality
+    // full outer (NULL keys unmatched — the audited semantics), the
+    // exact Σ nl·nr pair arithmetic, and a (pairs DESC, k DESC LIMIT 1)
+    // hot-key subquery mirroring the engine's lexicographic struct max.
+    query("ns124_join_profile", ns124)(
+      ("""WITH
+         |c1l AS (SELECT user_id::VARCHAR AS k, count(*) AS nl FROM events GROUP BY 1),
+         |j1 AS (SELECT coalesce(l.k, r.k) AS k, nl, nr,
+         |    CASE WHEN nl IS NOT NULL AND nr IS NOT NULL THEN nl * nr ELSE 0 END AS pairs
+         |  FROM c1l l FULL OUTER JOIN (SELECT k, nl AS nr FROM c1l) r ON l.k = r.k),
+         |c2r AS (SELECT c_custkey::VARCHAR AS k, count(*) AS nr FROM customer GROUP BY 1),
+         |j2 AS (SELECT coalesce(l.k, r.k) AS k, nl, nr,
+         |    CASE WHEN nl IS NOT NULL AND nr IS NOT NULL THEN nl * nr ELSE 0 END AS pairs
+         |  FROM c1l l FULL OUTER JOIN c2r r ON l.k = r.k),
+         |c3l AS (SELECT l_orderkey::VARCHAR AS k, count(*) AS nl FROM lineitem GROUP BY 1),
+         |c3r AS (SELECT o_orderkey::VARCHAR AS k, count(*) AS nr FROM orders GROUP BY 1),
+         |j3 AS (SELECT coalesce(l.k, r.k) AS k, nl, nr,
+         |    CASE WHEN nl IS NOT NULL AND nr IS NOT NULL THEN nl * nr ELSE 0 END AS pairs
+         |  FROM c3l l FULL OUTER JOIN c3r r ON l.k = r.k),
+         |c4l AS (SELECT o_custkey::VARCHAR AS k, count(*) AS nl FROM orders GROUP BY 1),
+         |j4 AS (SELECT coalesce(l.k, r.k) AS k, nl, nr,
+         |    CASE WHEN nl IS NOT NULL AND nr IS NOT NULL THEN nl * nr ELSE 0 END AS pairs
+         |  FROM c4l l FULL OUTER JOIN c2r r ON l.k = r.k),
+         |a1 AS (SELECT 'events_self_user' AS join_edge,
+         |  sum(coalesce(nl, 0))::BIGINT AS rows_l, sum(coalesce(nr, 0))::BIGINT AS rows_r,
+         |  count(CASE WHEN k IS NOT NULL AND nl IS NOT NULL THEN 1 END)::BIGINT AS distinct_l,
+         |  count(CASE WHEN k IS NOT NULL AND nr IS NOT NULL THEN 1 END)::BIGINT AS distinct_r,
+         |  sum(CASE WHEN k IS NULL THEN coalesce(nl, 0) ELSE 0 END)::BIGINT AS null_l,
+         |  sum(CASE WHEN k IS NULL THEN coalesce(nr, 0) ELSE 0 END)::BIGINT AS null_r,
+         |  sum(pairs)::BIGINT AS est_pairs,
+         |  coalesce((SELECT pairs FROM j1 WHERE pairs > 0 ORDER BY pairs DESC, k DESC LIMIT 1), 0)::BIGINT AS max_key_pairs,
+         |  (SELECT k FROM j1 WHERE pairs > 0 ORDER BY pairs DESC, k DESC LIMIT 1) AS hot_key,
+         |  CASE WHEN sum(coalesce(nl, 0)) > 0 THEN (sum(pairs)::BIGINT * 1000) // sum(coalesce(nl, 0))::BIGINT END AS amp_per_mille
+         |  FROM j1),
+         |a2 AS (SELECT 'events->customer' AS join_edge,
+         |  sum(coalesce(nl, 0))::BIGINT, sum(coalesce(nr, 0))::BIGINT,
+         |  count(CASE WHEN k IS NOT NULL AND nl IS NOT NULL THEN 1 END)::BIGINT,
+         |  count(CASE WHEN k IS NOT NULL AND nr IS NOT NULL THEN 1 END)::BIGINT,
+         |  sum(CASE WHEN k IS NULL THEN coalesce(nl, 0) ELSE 0 END)::BIGINT,
+         |  sum(CASE WHEN k IS NULL THEN coalesce(nr, 0) ELSE 0 END)::BIGINT,
+         |  sum(pairs)::BIGINT,
+         |  coalesce((SELECT pairs FROM j2 WHERE pairs > 0 ORDER BY pairs DESC, k DESC LIMIT 1), 0)::BIGINT,
+         |  (SELECT k FROM j2 WHERE pairs > 0 ORDER BY pairs DESC, k DESC LIMIT 1),
+         |  CASE WHEN sum(coalesce(nl, 0)) > 0 THEN (sum(pairs)::BIGINT * 1000) // sum(coalesce(nl, 0))::BIGINT END
+         |  FROM j2),
+         |a3 AS (SELECT 'lineitem->orders' AS join_edge,
+         |  sum(coalesce(nl, 0))::BIGINT, sum(coalesce(nr, 0))::BIGINT,
+         |  count(CASE WHEN k IS NOT NULL AND nl IS NOT NULL THEN 1 END)::BIGINT,
+         |  count(CASE WHEN k IS NOT NULL AND nr IS NOT NULL THEN 1 END)::BIGINT,
+         |  sum(CASE WHEN k IS NULL THEN coalesce(nl, 0) ELSE 0 END)::BIGINT,
+         |  sum(CASE WHEN k IS NULL THEN coalesce(nr, 0) ELSE 0 END)::BIGINT,
+         |  sum(pairs)::BIGINT,
+         |  coalesce((SELECT pairs FROM j3 WHERE pairs > 0 ORDER BY pairs DESC, k DESC LIMIT 1), 0)::BIGINT,
+         |  (SELECT k FROM j3 WHERE pairs > 0 ORDER BY pairs DESC, k DESC LIMIT 1),
+         |  CASE WHEN sum(coalesce(nl, 0)) > 0 THEN (sum(pairs)::BIGINT * 1000) // sum(coalesce(nl, 0))::BIGINT END
+         |  FROM j3),
+         |a4 AS (SELECT 'orders->customer' AS join_edge,
+         |  sum(coalesce(nl, 0))::BIGINT, sum(coalesce(nr, 0))::BIGINT,
+         |  count(CASE WHEN k IS NOT NULL AND nl IS NOT NULL THEN 1 END)::BIGINT,
+         |  count(CASE WHEN k IS NOT NULL AND nr IS NOT NULL THEN 1 END)::BIGINT,
+         |  sum(CASE WHEN k IS NULL THEN coalesce(nl, 0) ELSE 0 END)::BIGINT,
+         |  sum(CASE WHEN k IS NULL THEN coalesce(nr, 0) ELSE 0 END)::BIGINT,
+         |  sum(pairs)::BIGINT,
+         |  coalesce((SELECT pairs FROM j4 WHERE pairs > 0 ORDER BY pairs DESC, k DESC LIMIT 1), 0)::BIGINT,
+         |  (SELECT k FROM j4 WHERE pairs > 0 ORDER BY pairs DESC, k DESC LIMIT 1),
+         |  CASE WHEN sum(coalesce(nl, 0)) > 0 THEN (sum(pairs)::BIGINT * 1000) // sum(coalesce(nl, 0))::BIGINT END
+         |  FROM j4)
+         |SELECT * FROM a1 UNION ALL SELECT * FROM a2
+         |UNION ALL SELECT * FROM a3 UNION ALL SELECT * FROM a4
+         |ORDER BY join_edge""".stripMargin)),
+  )
+}

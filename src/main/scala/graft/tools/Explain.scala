@@ -1,5 +1,5 @@
 // Dev tool: dump formatted plans for plan review (not part of the library).
-// Run: sbt "runMain graft.tools.Explain <sfDir> [query...]"
+// Run: sbt "runMain graft.tools.Explain <sfDir> [id or name...]"
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val which = if (args.length > 1) args.tail.toSet else Set.empty[String]
+    val selected = graft.queries.Registry.select(args.drop(1).toSeq)
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -16,11 +16,9 @@ object Explain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      if (which.isEmpty || which.contains(name)) {
-        println(s"\n========== $name ==========")
-        fn(spark, sfDir).explain("formatted")
-      }
+    selected.foreach { q =>
+      println(s"\n========== ${q.name} ==========")
+      q.build(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

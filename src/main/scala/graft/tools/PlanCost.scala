@@ -20,14 +20,14 @@ import org.apache.spark.sql.SparkSession
   * job, so "jobs" ≈ "stages" ≈ the per-query fixed-overhead unit that
   * dominates small-SF suite wall time.
   *
-  * Usage: `java -cp ... graft.tools.PlanCost [sfDir] [nameSubstring...]`
+  * Usage: `java -cp ... graft.tools.PlanCost [sfDir] [id or name...]`
   * — writes target/plan_cost.json (one object per query) and prints a
   * jobs-descending table. Compare two trees by diffing the JSONs.
   */
 object PlanCost {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val only = args.drop(1).toSeq
+    val names = graft.queries.Registry.select(args.drop(1).toSeq).map(_.name)
     val spark = SparkSession.builder()
       .master("local[32]")
       .appName("graft-plan-cost")
@@ -60,8 +60,6 @@ object PlanCost {
         .foreach(_.unpersist(blocking = false))
     }
 
-    val names = graft.SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.isEmpty || only.exists(n.contains))
     val rows = names.flatMap { n =>
       try {
         execute(n) // warm pass: one-time setup + codegen cache

@@ -717,8 +717,8 @@ object ScaleProof {
       graft.ops.TextAnalysis.extractHtml(
         spark.read.parquet(s"$dir/documents.parquet")
           .select(col("doc_id"), concat(
-            lit(graft.SparkEntry.ns63Chrome1), col("text"),
-            lit(graft.SparkEntry.ns63Chrome2)).as("text")))
+            lit(graft.queries.Text.ns63Chrome1), col("text"),
+            lit(graft.queries.Text.ns63Chrome2)).as("text")))
         .agg(sum(col("n_text")).as("total_chars"),
           count(lit(1)).as("n_docs"))
 

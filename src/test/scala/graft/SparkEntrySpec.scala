@@ -22,12 +22,6 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every query has matching oracle SQL or is declared rows-only") {
-    // every oracle key must have a query; queries without oracle are allowed
-    // (rows-only check) but should be rare
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
-  }
-
   test("every registered query executes end-to-end at sf0.001") {
     // catches a broken entry in `sbt test` instead of at the driver gate
     SparkEntry.queries.foreach { case (name, fn) =>

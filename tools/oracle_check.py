@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Local pre-check of SparkEntry oracle SQL vs the Verify parquet dumps.
+"""Local pre-check of the registered queries' oracle SQL vs the Verify
+parquet dumps.
 
 Mimics the driver's DuckDB-oracle compare: registers each testdata table as a
 DuckDB view, runs oracle_sql.json, canonicalizes both sides (sort columns by
@@ -7,6 +8,9 @@ name, total row sort, stringify), and hash-compares. Dev tool only — the
 graded check is driver-side.
 
 Usage: python3 tools/oracle_check.py <sfDir> <verifyOutDir>
+
+The last line is `checked=N failed=M`; the exit code is non-zero when any
+query fails or when there is nothing to check (N = 0).
 """
 import json, os, sys, hashlib
 import duckdb
@@ -77,8 +81,9 @@ def canon(df):
         h.update(b"\x1e")
     return len(rows), h.hexdigest()
 
-fails = 0
+fails = checked = 0
 for name, sql in sorted(oracle.items()):
+    checked += 1
     try:
         want = canon(con.execute(sql).df())
         got = canon(duckdb.connect().execute(
@@ -90,4 +95,10 @@ for name, sql in sorted(oracle.items()):
     except Exception as e:
         fails += 1
         print(f"ERR  {name}: {e}")
+print(f"checked={checked} failed={fails}")
+if checked == 0:
+    # an empty oracle_sql.json (a filter that matched nothing, a dump that
+    # never ran) must not read as a pass
+    print("FAIL: no oracle queries to check", file=sys.stderr)
+    sys.exit(1)
 sys.exit(1 if fails else 0)
