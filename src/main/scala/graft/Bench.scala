@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.Registry
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
@@ -231,7 +229,6 @@ object Bench {
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
     val names = Registry.select(only).map(_.name)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // requested WARM rounds; the cold round-1 pass is always added on top,
     // so the default plan is 4 passes — the same wall cost as the old
     // warmup + 3 timed rounds, with one more usable sample
@@ -321,15 +318,7 @@ object Bench {
       s"""{"max_load":$maxLoad,"max_steal":$maxSteal,""" +
         s""""attempts":$gateAttempts,"steal":$stealJson,""" +
         s""""exhausted":$gateExhausted}"""
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Harness.session("graft-bench")
     // ERROR, not WARN (VERDICT r13 #1c): the driver records only a ~2,000
     // byte tail of this process's combined output, and r13's tail was
     // 100% repeated Spark WARN lines (WindowExec/CacheManager/
@@ -338,19 +327,11 @@ object Bench {
     // last thing in that tail; diagnostics live in the archive file.
     spark.sparkContext.setLogLevel("ERROR")
 
-    def execute(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // free blocks the finished query pinned (localCheckpoint reuse in
-      // ns4/ns18): without this, 33 queries × 4 executions accumulate
-      // checkpoint blocks for the whole session and GC pauses land on
-      // whichever unlucky query runs next. Cleanup is not query cost.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      sec
-    }
+    def execute(name: String): Double =
+      Harness.measure(spark) {
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.mode("overwrite").format("noop").save()
+      }._2
 
     // 1-min system load sampled before and after the timed block (-1 where
     // the platform doesn't report one); loadStart is the post-gate,

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, length, sum}
 
 /** sf-scaling smoke (a `main`, driven by tools/scaling_smoke.sh): runs the
   * pair-producing dedup queries at two scale factors and asserts
@@ -55,91 +56,51 @@ object ScalingSmoke {
   def main(args: Array[String]): Unit = {
     val sfSmall = sys.env.getOrElse("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.01")
     val sfLarge = sys.env.getOrElse("SPARK_GRAFT_SF_LARGE", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaling-smoke")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Harness.session("graft-scaling-smoke")
     spark.sparkContext.setLogLevel("WARN")
 
-    def run(query: graft.queries.Query, dir: String): (Long, Double) = {
-      val t0 = System.nanoTime()
-      // count() materializes the full pipeline here: every checked query
-      // ends in a wide projection whose expensive work (joins, aggregates)
-      // Catalyst cannot prune away under a count
-      val rows = query.build(spark, dir).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // drop blocks the finished query checkpointed (see Bench.execute)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+    // Times building and running `df`. count() materializes the full
+    // pipeline of every checked query: each ends in a wide projection
+    // whose joins and aggregates Catalyst cannot prune under a count.
+    // viaCollect: ungrouped-aggregate entries (ns68_lines_forced) must
+    // materialize via collect() — count() over a no-grouping Aggregate is
+    // folded to the literal 1 (OptimizeOneRowPlan) and times an empty job
+    def runDf(df: => DataFrame,
+        viaCollect: Boolean = false): (Long, Double) = {
+      val (rows, sec, _) = Harness.measure(spark) {
+        if (viaCollect) df.collect().length.toLong else df.count()
+      }
       (rows, sec)
     }
+    def run(query: graft.queries.Query, dir: String) =
+      runDf(query.build(spark, dir))
 
-    val docsSmall = spark.read.parquet(s"$sfSmall/documents.parquet").count()
-    val docsLarge = spark.read.parquet(s"$sfLarge/documents.parquet").count()
+    def docs(dir: String) = spark.read.parquet(s"$dir/documents.parquet")
+    val docsSmall = docs(sfSmall).count()
+    val docsLarge = docs(sfLarge).count()
     val r = docsLarge.toDouble / docsSmall
     val rowBound = math.pow(r, 1.5)
     val timeBound = math.pow(r, 1.75)
 
     // fixed-benchmark decontamination: the eval set is always the small
-    // sf's %50 slice; only the corpus side scales
-    val fixedBench = spark.read.parquet(s"$sfSmall/documents.parquet")
-      .where(org.apache.spark.sql.functions.col("doc_id") % 50 === 0)
-    def deconFixed(dir: String) = {
-      import org.apache.spark.sql.functions.col
-      graft.ops.Dedup.decontaminate(
-        spark.read.parquet(s"$dir/documents.parquet")
-          .where(col("doc_id") % 50 =!= 0),
-        fixedBench, shingleK = 4)
-    }
-    def spansFixed(dir: String) = {
-      import org.apache.spark.sql.functions.col
-      graft.ops.Dedup.scrubContaminatedSpans(
-        spark.read.parquet(s"$dir/documents.parquet")
-          .where(col("doc_id") % 50 =!= 0),
-        fixedBench, shingleK = 4)
-    }
-    def linesForced(dir: String) = {
-      import org.apache.spark.sql.functions.{col, length, sum}
-      SparkEntry.queries("ns68_dedup_lines")(spark, dir)
-        .agg(sum(length(col("text_clean"))).as("clean_chars"),
-          sum(col("kept_lines")).as("kept"))
-    }
-    // the Bloom-prefiltered twin runs the same fixed-benchmark shape —
-    // only the corpus side scales, which is exactly the side the
-    // might_contain prefilter thins before the exact join
-    def deconBloomFixed(dir: String) = {
-      import org.apache.spark.sql.functions.col
-      graft.ops.Dedup.decontaminateBloom(
-        spark.read.parquet(s"$dir/documents.parquet")
-          .where(col("doc_id") % 50 =!= 0),
-        fixedBench, shingleK = 4)
-    }
-    val custom: Seq[(String, String => org.apache.spark.sql.DataFrame)] = Seq(
-      "ns21_decon_fixed_bench" -> (deconFixed _),
-      "ns152_decon_bloom_fixed_bench" -> (deconBloomFixed _),
-      "ns34_spans_fixed_bench" -> (spansFixed _),
-      "ns68_lines_forced" -> (linesForced _),
+    // sf's %50 slice; only the corpus side scales — for the Bloom twin,
+    // exactly the side the might_contain prefilter thins before the join
+    val fixedBench = docs(sfSmall).where(col("doc_id") % 50 === 0)
+    def fixed(op: (DataFrame, DataFrame) => DataFrame)(dir: String) =
+      op(docs(dir).where(col("doc_id") % 50 =!= 0), fixedBench)
+    val custom: Seq[(String, String => DataFrame)] = Seq(
+      "ns21_decon_fixed_bench" ->
+        fixed(graft.ops.Dedup.decontaminate(_, _, shingleK = 4)),
+      "ns152_decon_bloom_fixed_bench" ->
+        fixed(graft.ops.Dedup.decontaminateBloom(_, _, shingleK = 4)),
+      "ns34_spans_fixed_bench" ->
+        fixed(graft.ops.Dedup.scrubContaminatedSpans(_, _, shingleK = 4)),
+      "ns68_lines_forced" -> ((d: String) =>
+        SparkEntry.queries("ns68_dedup_lines")(spark, d)
+          .agg(sum(length(col("text_clean"))).as("clean_chars"),
+            sum(col("kept_lines")).as("kept"))),
       "ns76_dataset_card" -> ((d: String) =>
         SparkEntry.queries("ns76_dataset_card")(spark, d)))
-
-    // viaCollect: ungrouped-aggregate entries (ns68_lines_forced) must
-    // materialize via collect() — count() over a no-grouping Aggregate is
-    // folded to the literal 1 (OptimizeOneRowPlan) and times an empty job
-    def runDf(df: org.apache.spark.sql.DataFrame,
-        viaCollect: Boolean = false): (Long, Double) = {
-      val t0 = System.nanoTime()
-      val rows = if (viaCollect) df.collect().length.toLong else df.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      (rows, sec)
-    }
 
     // untimed warmup at BOTH sfs (JIT, codegen, and — critically — the
     // ns17/ns18 one-time index build: warming only sfSmall would leave the

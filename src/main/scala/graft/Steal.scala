@@ -2,10 +2,7 @@ package graft
 
 import java.util.concurrent.{ConcurrentHashMap, ExecutionException,
   ExecutorCompletionService, Executors}
-import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
@@ -213,18 +210,6 @@ object Steal {
     } finally pool.shutdown()
   }
 
-  /** Counts the Spark jobs started while registered: the job figure of
-    * the CLI summary, at zero extra Spark jobs. */
-  private[graft] final class JobCounter(sc: SparkContext)
-      extends SparkListener with AutoCloseable {
-    private val started = new AtomicLong
-    sc.addSparkListener(this)
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      started.incrementAndGet()
-    def count: Long = started.get
-    def close(): Unit = sc.removeSparkListener(this)
-  }
-
   /** A command-line endpoint: a DSN (`<type>://…`) or raw `jdbc:` URL
     * resolves through the driver registry; anything else is a parquet
     * directory, taken verbatim — the DSN grammar would mangle a path
@@ -236,18 +221,8 @@ object Steal {
   /** CLI-ish entry: `Steal <sourceDirOrDsn> <targetDirOrDsn> [configPath]`. */
   def main(args: Array[String]): Unit = {
     val tables = if (args.length > 2) Config.loadFile(args(2)) else Nil
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-steal")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
+    val spark = Harness.session("graft-steal")
     spark.sparkContext.setLogLevel("WARN")
-    Logs.quietCheckpointUnpersistWarns()
     try {
       // connection-governance env knobs, CLI-flag parity with the
       // reference's steal command (cmd/steal.go:72-79); defaults match
@@ -256,20 +231,22 @@ object Steal {
         timeout = envInt("GRAFT_READ_TIMEOUT", 300),
         maxConns = envInt("GRAFT_READ_MAX_CONNS", 5),
         fetchSize = envInt("GRAFT_READ_FETCH_SIZE", 10000))
-      val t0 = System.nanoTime()
-      val jobs = new JobCounter(spark.sparkContext)
-      val reports = pipeline(spark, endpoint(args(0)), endpoint(args(1)),
-        tables,
-        readOpts = readOpts,
-        writeTimeout = envInt("GRAFT_WRITE_TIMEOUT", 30),
-        writeMaxConns = envInt("GRAFT_WRITE_MAX_CONNS", 5),
-        pushdownScan = sys.env.get("GRAFT_READ_PUSHDOWN").exists(_.toBoolean))
+      val (reports, seconds, work) = Harness.measure(spark) {
+        pipeline(spark, endpoint(args(0)), endpoint(args(1)), tables,
+          readOpts = readOpts,
+          writeTimeout = envInt("GRAFT_WRITE_TIMEOUT", 30),
+          writeMaxConns = envInt("GRAFT_WRITE_MAX_CONNS", 5),
+          pushdownScan = sys.env.get("GRAFT_READ_PUSHDOWN").exists(_.toBoolean))
+      }
       reports.foreach { r =>
         println(s"[steal] ${r.table}: rows=${r.rows} ok=${r.ok}" +
           r.error.map(e => s" error=$e").getOrElse(""))
       }
       println(f"[steal] tables=${reports.size} rows=${reports.map(_.rows).sum} " +
-        f"jobs=${jobs.count} seconds=${(System.nanoTime() - t0) / 1e9}%.2f")
+        f"jobs=${work.jobs} stages=${work.stages} " +
+        f"shuffle_mb=${work.shuffleWrite / 1e6}%.1f " +
+        f"spill_mb=${(work.memSpill + work.diskSpill) / 1e6}%.1f " +
+        f"seconds=$seconds%.2f")
       if (reports.exists(!_.ok)) sys.exit(1)
     } finally spark.stop()
   }

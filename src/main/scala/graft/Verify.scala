@@ -12,18 +12,8 @@ object Verify {
     // unknown entry fails here, before any Spark work.
     val selected = Registry.select(sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS) — Spark reads it as LongType
-      // (nanos since epoch); DuckDB orders the same way.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Harness.session("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
-    Logs.quietCheckpointUnpersistWarns()
     dump(spark, sfDir, outDir, selected)
     spark.stop()
   }
@@ -34,9 +24,10 @@ object Verify {
       selected: Seq[Query]): Unit = {
     new java.io.File(outDir).mkdirs()
     for (Query(name, _, build, _) <- selected) {
-      try build(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try Harness.measure(spark) {
+        build(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // a PRIOR run's green dump must not survive a failure: local
         // iteration reuses outDir, and a stale parquet here would make
@@ -47,9 +38,6 @@ object Verify {
             .delete(dir, true)
         } catch { case _: Throwable => () }
       }
-      // drop blocks the finished query checkpointed (see Bench.execute)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1268,8 +1268,8 @@ object Dedup {
     * `localCheckpoint`, under [[defaultPostingsCheckpointBytes]]) inside
     * the first action over the returned frame — later consumers read
     * those executor blocks instead of recomputing the scan→explode
-    * pipeline. graft's own mains sweep them (`getPersistentRDDs` between
-    * bench queries; per-write frees in the index builders), but a
+    * pipeline. graft's own mains sweep them (`Harness.measure` after
+    * every query; per-write frees in the index builders), but a
     * long-lived EXTERNAL session that constructs these plans repeatedly
     * pins memory+disk until the blocks are GC'd. Call this after the
     * result has been fully consumed: it frees every checkpoint leaf the

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the default BPE merges resource
   * (`src/main/resources/graft/bpe_merges.txt`) by training
   * [[graft.ops.Bpe.train]] on a documents corpus — the provenance of the
@@ -12,13 +10,7 @@ import org.apache.spark.sql.SparkSession
 object GenBpeMerges {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: GenBpeMerges <sfDir> <numMerges> <outFile>")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-gen-bpe")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Harness.session("graft-gen-bpe")
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet(s"${args(0)}/documents.parquet")
     val merges = graft.ops.Bpe.train(docs, args(1).toInt)

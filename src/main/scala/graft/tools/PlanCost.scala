@@ -1,8 +1,11 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted}
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.SparkSession
+
+import graft.Harness
+import graft.queries.{Query, Registry}
 
 /** Window-independent cost profile of the query suite: per query, the
   * number of Spark jobs, stages, tasks, and shuffle-write bytes of ONE
@@ -21,73 +24,56 @@ import org.apache.spark.sql.SparkSession
   * dominates small-SF suite wall time.
   *
   * Usage: `java -cp ... graft.tools.PlanCost [sfDir] [id or name...]`
-  * — writes target/plan_cost.json (one object per query) and prints a
-  * jobs-descending table. Compare two trees by diffing the JSONs.
+  * — writes target/plan_cost.json (one object per query, then the
+  * `failed` list) and prints a jobs-descending table; exits 1 when any
+  * query failed. Compare two trees by diffing the JSONs.
   */
 object PlanCost {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = graft.queries.Registry.select(args.drop(1).toSeq).map(_.name)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-plan-cost")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val queries = Registry.select(args.drop(1).toSeq)
+    val spark = Harness.session("graft-plan-cost")
     spark.sparkContext.setLogLevel("ERROR")
-
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val stages = new java.util.concurrent.atomic.AtomicLong
-    val tasks = new java.util.concurrent.atomic.AtomicLong
-    val shufB = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        tasks.addAndGet(s.stageInfo.numTasks)
-        shufB.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-    })
-
-    def execute(name: String): Unit = {
-      graft.SparkEntry.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
-
-    val rows = names.flatMap { n =>
-      try {
-        execute(n) // warm pass: one-time setup + codegen cache
-        Thread.sleep(150) // listener drain
-        val (j0, s0, t0, b0) = (jobs.get, stages.get, tasks.get, shufB.get)
-        execute(n)
-        Thread.sleep(150)
-        Some((n, jobs.get - j0, stages.get - s0, tasks.get - t0,
-          shufB.get - b0))
-      } catch { case e: Throwable =>
-        System.err.println(s"[plan_cost] $n failed: ${e.getMessage}")
-        None
-      }
-    }
-    val json = rows.map { case (n, j, s, t, b) =>
-      s"""  "$n": {"jobs":$j,"stages":$s,"tasks":$t,"shuffle_bytes":$b}"""
-    }.mkString("{\n", ",\n", "\n}\n")
+    val p = try profile(spark, sfDir, queries) finally spark.stop()
     val out = java.nio.file.Paths.get("target", "plan_cost.json")
     java.nio.file.Files.createDirectories(out.getParent)
-    java.nio.file.Files.write(out,
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.nio.file.Files.writeString(out, p.json)
     println(f"${"query"}%-34s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s shufMB")
-    rows.sortBy(-_._2).foreach { case (n, j, s, t, b) =>
-      println(f"$n%-34s $j%5d $s%6d $t%6d ${b / 1e6}%.1f")
+    p.costs.sortBy(-_._2.jobs).foreach { case (n, w) =>
+      println(f"$n%-34s ${w.jobs}%5d ${w.stages}%6d ${w.tasks}%6d " +
+        f"${w.shuffleWrite / 1e6}%.1f")
     }
-    println(f"[plan_cost] totals: jobs ${rows.map(_._2).sum} stages " +
-      f"${rows.map(_._3).sum} tasks ${rows.map(_._4).sum} " +
-      f"shufMB ${rows.map(_._5).sum / 1e6}%.0f -> target/plan_cost.json")
-    spark.stop()
+    val ws = p.costs.map(_._2)
+    println(f"[plan_cost] totals: jobs ${ws.map(_.jobs).sum} stages " +
+      f"${ws.map(_.stages).sum} tasks ${ws.map(_.tasks).sum} " +
+      f"shufMB ${ws.map(_.shuffleWrite).sum / 1e6}%.0f -> target/plan_cost.json")
+    if (p.failed.nonEmpty) sys.exit(1)
+  }
+
+  /** Per query, the work of its second execution; `failed` names every
+    * query that threw, so a missing query is never a silent drop. */
+  final case class Profile(costs: Seq[(String, Harness.Work)],
+      failed: Seq[String]) {
+    /** One object per profiled query, then the `failed` list. */
+    def json: String = (costs.map { case (n, w) =>
+      s"""  "$n": {"jobs":${w.jobs},"stages":${w.stages},""" +
+        s""""tasks":${w.tasks},"shuffle_bytes":${w.shuffleWrite}}"""
+    } :+ failed.map(n => s""""$n"""").mkString("  \"failed\": [", ",", "]"))
+      .mkString("{\n", ",\n", "\n}\n")
+  }
+
+  /** Runs each query twice into the noop sink (a warm pass, then the
+    * counted one); a query that throws is reported and the rest run. */
+  def profile(spark: SparkSession, sfDir: String,
+      queries: Seq[Query]): Profile = {
+    val runs = queries.map(q => q.name -> Try(Seq.fill(2)(
+      Harness.measure(spark) {
+        q.build(spark, sfDir).write.mode("overwrite").format("noop").save()
+      }._3).last))
+    val failed = runs.collect { case (n, Failure(e)) =>
+      System.err.println(s"[plan_cost] $n failed: ${e.getMessage}")
+      n
+    }
+    Profile(runs.collect { case (n, Success(w)) => n -> w }, failed)
   }
 }

@@ -1,15 +1,16 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.Harness
 
 /** Two-decade scale proof for the dedup/ANN/layout family: synthesizes
   * derived corpora at 10× and 100× the sf0.1 volume (deterministic
   * perturbation — `/root/testdata` itself is never written), re-runs the
   * pair-producing operators at 1×/10×/100×, and asserts the ScalingSmoke
   * sub-quadratic bounds across BOTH decades while recording per-query
-  * shuffle and spill totals from a `SparkListener`.
+  * shuffle and spill totals from the [[graft.Harness]] work collector.
   *
   * Synthesis design — the perturbation must keep the DUPLICATE STRUCTURE
   * of the base corpus instead of manufacturing new cross-copy duplicates:
@@ -34,34 +35,9 @@ import org.apache.spark.sql.functions._
   * Env: SPARK_GRAFT_SF_BASE (default /root/testdata/sf0.1),
   *      SPARK_GRAFT_SCALE_FACTORS (default "10,100"),
   *      SPARK_GRAFT_SCALE_DIR (default target/scaleproof),
-  *      SPARK_GRAFT_CPUS (default 32).
+  *      SPARK_GRAFT_CPUS (default: the machine's processor count).
   */
 object ScaleProof {
-
-  /** Accumulates stage-level shuffle/spill totals; reset per query. */
-  private final class StageMetrics extends SparkListener {
-    @volatile var shuffleWrite = 0L
-    @volatile var shuffleRead = 0L
-    @volatile var memSpill = 0L
-    @volatile var diskSpill = 0L
-    @volatile var maxStageShuffleWrite = 0L
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      synchronized {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) {
-          shuffleWrite += m.shuffleWriteMetrics.bytesWritten
-          shuffleRead += m.shuffleReadMetrics.totalBytesRead
-          memSpill += m.memoryBytesSpilled
-          diskSpill += m.diskBytesSpilled
-          maxStageShuffleWrite =
-            math.max(maxStageShuffleWrite, m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    def reset(): Unit = synchronized {
-      shuffleWrite = 0; shuffleRead = 0; memSpill = 0; diskSpill = 0
-      maxStageShuffleWrite = 0
-    }
-  }
 
   private def gib(b: Long): String = f"${b / 1024.0 / 1024.0 / 1024.0}%.2f"
 
@@ -73,19 +49,8 @@ object ScaleProof {
     val factors = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTORS", "10,100")
       .split(",").map(_.trim.toInt).toSeq.distinct.sorted
     val scratch = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/scaleproof")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-proof")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Harness.session("graft-scale-proof")
     spark.sparkContext.setLogLevel("WARN")
-    val metrics = new StageMetrics
-    spark.sparkContext.addSparkListener(metrics)
 
     // ---- synthesis (idempotent: per-dir marker) --------------------------
     // events joined the family after the corpus marker shipped, so it has
@@ -746,36 +711,17 @@ object ScaleProof {
       graft.ops.Similarity.outliers(labeled, k = 10)
     }
 
-    case class Obs(rows: Long, sec: Double, shW: Long, shR: Long,
-      memSp: Long, dskSp: Long, maxStW: Long)
+    case class Obs(rows: Long, sec: Double, work: Harness.Work)
     // The forced variants end in an UNGROUPED aggregate, and count() over
     // a no-grouping Aggregate is folded to the literal 1 by the optimizer
     // (OptimizeOneRowPlan) — the "timing" then measures an empty job.
     // Those entries must materialize via collect() (output is ≤1 row by
     // construction, so the driver fetch is free); row-shaped queries keep
     // count(), whose result IS the scale signal.
-    def measure(df: => DataFrame, viaCollect: Boolean = false): Obs = {
-      metrics.reset()
-      val t0 = System.nanoTime()
-      val rows = if (viaCollect) df.collect().length.toLong else df.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      // stage-completed events arrive async; a fixed sleep can lose a
-      // straggler stage's bytes to the NEXT query's column under heavy
-      // spill — poll until two consecutive snapshots agree (bounded)
-      var last = -1L
-      var same = 0
-      var waited = 0
-      while (same < 2 && waited < 5000) {
-        Thread.sleep(100); waited += 100
-        val cur = metrics.shuffleWrite + metrics.shuffleRead +
-          metrics.memSpill + metrics.diskSpill
-        if (cur == last) same += 1 else { same = 0; last = cur }
-      }
-      Obs(rows, sec, metrics.shuffleWrite, metrics.shuffleRead,
-        metrics.memSpill, metrics.diskSpill, metrics.maxStageShuffleWrite)
-    }
+    def measure(df: => DataFrame, viaCollect: Boolean = false): Obs =
+      Obs.tupled(Harness.measure(spark) {
+        if (viaCollect) df.collect().length.toLong else df.count()
+      })
 
     val dirs: Seq[(String, String)] =
       ("1x", base) +: factors.map(k => (s"${k}x", synthesize(k)))
@@ -893,7 +839,7 @@ object ScaleProof {
           println(s"[scale-proof] MEASURE FAILED $name at $label: " +
             e.getMessage)
           measureFailed ::= s"$name@$label"
-          Obs(-1L, -1.0, 0, 0, 0, 0, 0)
+          Obs(-1L, -1.0, Harness.Work())
         }) }
     }
 
@@ -917,9 +863,11 @@ object ScaleProof {
             (f"$rowRatio%.1f", f"$timeRatio%.1f",
               if (ok) "sub-quadratic ✓" else "BLOW-UP ✗")
         }
+        val w = o.work
         println(f"| $name | $label | ${o.rows} | ${o.sec}%.2f | " +
-          f"${gib(o.shW)}/${gib(o.shR)} | ${gib(o.memSp)}/${gib(o.dskSp)} | " +
-          f"${gib(o.maxStW)} | $rowX | $timeX | $verdict |")
+          f"${gib(w.shuffleWrite)}/${gib(w.shuffleRead)} | " +
+          f"${gib(w.memSpill)}/${gib(w.diskSpill)} | " +
+          f"${gib(w.maxStageShuffleWrite)} | $rowX | $timeX | $verdict |")
         prev = Some(o)
       }
     }

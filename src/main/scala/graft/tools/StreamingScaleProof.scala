@@ -2,7 +2,7 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.types._
@@ -42,7 +42,7 @@ import org.apache.spark.sql.types._
   * Env: SPARK_GRAFT_SF_BASE (default /root/testdata/sf0.1),
   *      SPARK_GRAFT_SCALE_FACTORS (default "1,10,100"),
   *      SPARK_GRAFT_SCALE_DIR (default target/streamproof),
-  *      SPARK_GRAFT_CPUS (default 32).
+  *      SPARK_GRAFT_CPUS (default: the machine's processor count).
   */
 object StreamingScaleProof {
 
@@ -80,16 +80,8 @@ object StreamingScaleProof {
       .split(",").map(_.trim.toInt).toSeq
     val scratch =
       sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/streamproof")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-streaming-scale-proof")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "false") // streaming: AQE off
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Harness.session("graft-streaming-scale-proof")
+    spark.conf.set("spark.sql.adaptive.enabled", "false") // streaming: AQE off
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -7,7 +7,6 @@ import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.{
@@ -15,7 +14,7 @@ import org.apache.spark.sql.execution.datasources.{
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkTestSession, Steal, Tables}
+import graft.{Harness, SparkTestSession, Steal, Tables}
 import graft.config.Config
 
 class SinksSpec extends AnyFunSuite {
@@ -208,11 +207,11 @@ class SinksSpec extends AnyFunSuite {
       |""".stripMargin)
 
   /** Runs `body` with a listener registered; returns what it recorded once
-    * the bus delivered every event. */
+    * the bus delivered every event (a collector snapshot drains it). */
   private def listening[L <: AnyRef, T](listener: L)(register: L => Unit,
       unregister: L => Unit)(body: => T): T = {
     register(listener)
-    try { val r = body; ListenerBusDrain(spark.sparkContext); r }
+    try { val r = body; Harness.work(spark).snapshot(); r }
     finally unregister(listener)
   }
 
@@ -240,12 +239,13 @@ class SinksSpec extends AnyFunSuite {
   test("Steal: a chained steal runs no job before its writes, one per table plus broadcasts") {
     val dir = Files.createTempDirectory("graft_steal_jobs").toString
     val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]
-    val counter = new Steal.JobCounter(spark.sparkContext)
-    val reports = try listening(new SparkListener {
+    val work = Harness.work(spark)
+    val before = work.snapshot()
+    val reports = listening(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e)
     })(spark.sparkContext.addSparkListener, spark.sparkContext.removeSparkListener) {
       Steal.run(spark, sf, dir, chain, concurrency = 4)
-    } finally counter.close()
+    }
     assert(reports.forall(_.ok) && reports.size == Tables.all.size)
     val all = jobs.asScala.toSeq
     // a schema-inference job runs outside any SQL execution; a write and
@@ -256,7 +256,7 @@ class SinksSpec extends AnyFunSuite {
       "spark.job.tags")).exists(_.contains("broadcast exchange")))
     assert(broadcasts > 0)
     assert(all.size == reports.size + broadcasts)
-    assert(counter.count == all.size)
+    assert(work.snapshot(before).jobs == all.size)
   }
 
   test("Steal: each source table is opened once; reports in catalog order") {

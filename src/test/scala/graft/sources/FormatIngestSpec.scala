@@ -2,12 +2,11 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkTestSession, Steal, Tables}
+import graft.{Harness, SparkTestSession, Tables}
 import graft.sinks.ParquetSink
 
 /** Cross-format ingestion parity: the engine must produce IDENTICAL
@@ -134,12 +133,10 @@ class FormatIngestSpec extends AnyFunSuite {
   }
 
   test("footer schema: opening every sf0.001 table runs no Spark job") {
-    val jobs = new Steal.JobCounter(spark.sparkContext)
-    try {
-      Tables.all.foreach(read(sf, _))
-      ListenerBusDrain(spark.sparkContext)
-      assert(jobs.count == 0)
-    } finally jobs.close()
+    val work = Harness.work(spark)
+    val before = work.snapshot()
+    Tables.all.foreach(read(sf, _))
+    assert(work.snapshot(before).jobs == 0)
   }
 
   test("footer schema: ParquetSink output with markers, NTZ, DECIMAL, ARRAY<FLOAT>, empty") {
