@@ -56,7 +56,7 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Testdata-drift guard: stamp the dump with a per-table source
     // fingerprint (md5 over the sorted file listing with sizes+mtimes —
-    // graft.ops.Dedup.sourceFingerprint, the same key the persisted
+    // graft.ops.PersistedIndex.sourceFingerprint, the same key the persisted
     // indexes use). tools/oracle_check.py recomputes the fingerprints
     // against the LIVE testdata and refuses to compare when they differ,
     // so a testdata regeneration between dump and compare fails loudly
@@ -68,7 +68,7 @@ object Verify {
     val tableEntries = Tables.all.flatMap { t =>
       val path = s"$sfDir/$t.parquet"
       try {
-        val fp = graft.ops.Dedup.sourceFingerprint(spark, path)
+        val fp = graft.ops.PersistedIndex.sourceFingerprint(spark, path)
         val rows = spark.read.parquet(path).count()
         Some(s"${q(t)}: {${q("fingerprint")}: ${q(fp)}, ${q("rows")}: $rows}")
       } catch { case e: Throwable =>

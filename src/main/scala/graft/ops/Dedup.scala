@@ -362,8 +362,9 @@ object Dedup {
     * incremental decision needs — band keys (candidate generation), shingle
     * sets (candidate verification), text md5s (exact-dup rejection) — as
     * parquet under `path`, with the sketch parameters (and optionally a
-    * source `fingerprint`, see [[sourceFingerprint]]) in a sidecar: the
-    * reader hashes with the index's recorded family, and a caller that
+    * source `fingerprint`, see [[PersistedIndex.sourceFingerprint]]) in
+    * its meta ([[PersistedIndex]]): the reader hashes with the index's
+    * recorded family, and a caller that
     * requires specific parameters pins them via
     * [[incrementalNewFromIndex]]'s `expectParams` to fail fast on mismatch.
     * Each artifact is bounded by corpus size × doc length, never corpus². */
@@ -375,8 +376,8 @@ object Dedup {
       rowsPerBand: Int = 4,
       fingerprint: Option[String] = None): Unit = {
     require(numHashes % rowsPerBand == 0, "numHashes % rowsPerBand != 0")
-    val spark = corpus.sparkSession
-    IndexSidecar.buildAndPublish(spark, path) { tmp =>
+    PersistedIndex.build(corpus.sparkSession, path, PersistedIndex.Kind.Minhash,
+        fingerprint) { tmp =>
       // ONE fused per-doc aggregation feeds both artifacts: the bands
       // write materializes the lazy checkpoint, the sets write reads its
       // blocks — one postings shuffle total where the split shape paid
@@ -392,9 +393,8 @@ object Dedup {
       unpersistOwnCheckpoints(perDoc, corpus)
       corpus.select(md5(col("text").cast("binary")).as("th")).distinct()
         .write.mode("overwrite").parquet(s"$tmp/texthash")
-      IndexSidecar.write(spark, metaPath(tmp.toString),
-        s"shingleK=$shingleK\nnumHashes=$numHashes\nrowsPerBand=$rowsPerBand" +
-          fingerprint.map(f => s"\nfingerprint=$f").getOrElse(""))
+      Seq("shingleK" -> shingleK, "numHashes" -> numHashes,
+        "rowsPerBand" -> rowsPerBand)
     }
   }
 
@@ -421,9 +421,9 @@ object Dedup {
       path: String,
       fingerprint: Option[String] = None): Unit = {
     val spark = accepted.sparkSession
-    val meta = readSidecar(spark, path)
-    val (shingleK, numHashes, rowsPerBand) = (meta("shingleK").toInt,
-      meta("numHashes").toInt, meta("rowsPerBand").toInt)
+    val meta = PersistedIndex.read(spark, path, PersistedIndex.Kind.Minhash)
+    val (shingleK, numHashes, rowsPerBand) = (meta.int("shingleK"),
+      meta.int("numHashes"), meta.int("rowsPerBand"))
     val accSrc = accepted.select(col("doc_id"), col("text"))
     // a caller passing an ALREADY-materialized batch (the probe output
     // the lifecycle naturally feeds back, eagerly checkpointed by the
@@ -446,71 +446,13 @@ object Dedup {
       .write.mode("append").parquet(s"$path/sets")
     acc.select(md5(col("text").cast("binary")).as("th")).distinct()
       .write.mode("append").parquet(s"$path/texthash")
-    fingerprint.foreach { f =>
-      IndexSidecar.write(spark, metaPath(path),
-        s"shingleK=$shingleK\nnumHashes=$numHashes\nrowsPerBand=$rowsPerBand\nfingerprint=$f")
-    }
+    fingerprint.foreach(
+      PersistedIndex.restamp(spark, path, PersistedIndex.Kind.Minhash, _))
     // frees everything this method materialized — perDoc's blocks plus
     // acc's when acc is our own checkpoint (a pre-materialized batch
     // belongs to the CALLER, who may still consume it — ns18's union)
     unpersistOwnCheckpoints(perDoc, accepted)
   }
-
-  /** Copy a persisted index to a new location (Hadoop-FS-portable). Used to
-    * branch a working index off a shared base — e.g. a what-if ingest run
-    * that appends ticks without touching the canonical index. */
-  def copyMinhashIndex(
-      spark: org.apache.spark.sql.SparkSession, src: String, dst: String): Unit =
-    IndexSidecar.copy(spark, src, dst)
-
-  private def metaPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_meta.txt")
-
-  def minhashIndexExists(
-      spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-    val p = metaPath(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Content fingerprint of a source directory/file: md5 over the sorted
-    * file listing with sizes and mtimes. Cheap (one driver-side FS listing,
-    * no data read) and changes whenever the data under `sourcePath` is
-    * rewritten — the key that keeps a persisted index honest: an index
-    * stamped with [[writeMinhashIndex]]'s `fingerprint` is only trusted
-    * ([[minhashIndexMatches]]) while the source listing still matches. */
-  def sourceFingerprint(
-      spark: org.apache.spark.sql.SparkSession, sourcePath: String): String = {
-    val p = new org.apache.hadoop.fs.Path(sourcePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
-    val entries = collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val f = it.next()
-      // _SUCCESS/CRC markers churn without data changes; data files decide
-      if (!f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-        entries += s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}"
-    }
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(entries.sorted.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-  }
-
-  /** True iff an index exists at `path` AND its sidecar carries exactly
-    * `fingerprint` — a stale index (source rewritten since the build) or a
-    * fingerprint-less one fails the check, so callers rebuild instead of
-    * silently answering from the wrong corpus. */
-  def minhashIndexMatches(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      fingerprint: String): Boolean =
-    minhashIndexExists(spark, path) &&
-      readSidecar(spark, path).get("fingerprint").contains(fingerprint)
-
-  private def readSidecar(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Map[String, String] =
-    IndexSidecar.read(spark, metaPath(path))
-      .split("\n").filter(_.contains("=")).map(_.split("=", 2))
-      .map(a => a(0) -> a(1)).toMap
 
   /** D6 (index probe) — [[incrementalNew]] against a persisted
     * [[writeMinhashIndex]] corpus: identical decision, but the corpus is
@@ -531,10 +473,9 @@ object Dedup {
       threshold: Double = 0.5,
       expectParams: Option[(Int, Int, Int)] = None): DataFrame = {
     val spark = newDocs.sparkSession
-    val meta = readSidecar(spark, path).view.filterKeys(_ != "fingerprint")
-      .mapValues(_.toInt).toMap
-    val (shingleK, numHashes, rowsPerBand) =
-      (meta("shingleK"), meta("numHashes"), meta("rowsPerBand"))
+    val meta = PersistedIndex.read(spark, path, PersistedIndex.Kind.Minhash)
+    val (shingleK, numHashes, rowsPerBand) = (meta.int("shingleK"),
+      meta.int("numHashes"), meta.int("rowsPerBand"))
     expectParams.foreach { case (k, h, r) =>
       require(k == shingleK && h == numHashes && r == rowsPerBand,
         s"index at $path was built with (shingleK=$shingleK, numHashes=" +

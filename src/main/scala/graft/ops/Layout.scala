@@ -28,11 +28,11 @@ object Layout {
 
   /** Rewrite `df` as a pruning-friendly parquet layout at `path`:
     * directories split by `partitionCols`, files range-clustered and
-    * row-group-sorted by `clusterCols`. Publishes by build-into-temp +
-    * rename (the [[Dedup.writeMinhashIndex]] contract): a layout rewrite
-    * is exactly the operation a live reader would otherwise catch
-    * mid-overwrite, and two racing writers each build privately — the
-    * loser discards its copy. */
+    * row-group-sorted by `clusterCols`. Publishes through
+    * [[PersistedIndex.publish]] (the persisted-index contract): a layout
+    * rewrite is exactly the operation a live reader would otherwise catch
+    * mid-overwrite, and a failed write leaves the old layout and no
+    * staging copy. */
   def optimize(
       df: DataFrame, path: String,
       partitionCols: Seq[String], clusterCols: Seq[String],
@@ -42,27 +42,36 @@ object Layout {
     val keys = (partitionCols ++ clusterCols).map(col)
     val n = if (numFiles > 0) numFiles
       else df.sparkSession.sessionState.conf.numShufflePartitions
+    publishLayout(df, path, metaText(partitionCols, clusterCols)) { tmp =>
+      df.repartitionByRange(n, keys: _*)
+        .sortWithinPartitions(keys: _*)
+        .write.mode("overwrite").partitionBy(partitionCols: _*)
+        .parquet(tmp.toString)
+    }
+  }
+
+  /** The [[optimize]]/[[zorder]] rewrite: `write` lays `df` out in the
+    * staging dir, the sidecars go in beside it, and the whole layout is
+    * published through [[PersistedIndex.publish]]. */
+  private def publishLayout(df: DataFrame, path: String, meta: String)(
+      write: org.apache.hadoop.fs.Path => Unit): Unit = {
+    val spark = df.sparkSession
     val dest = new org.apache.hadoop.fs.Path(path)
-    val fs = dest.getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    val tmp = IndexSidecar.stagingFor(dest)
-    df.repartitionByRange(n, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .write.mode("overwrite").partitionBy(partitionCols: _*)
-      .parquet(tmp.toString)
-    // the source schema rides along as a sidecar: partition-column VALUES
-    // become directory names, and reading them back through Spark's type
-    // inference would retype string columns that look numeric ("01" -> 1)
-    IndexSidecar.write(df.sparkSession, schemaPath(tmp),
-      df.schema.json)
-    // layout metadata + the clustered-file manifest are what make
-    // [[append]]/[[compact]] possible later: compact treats any data file
-    // NOT in the manifest as an un-clustered straggler
-    IndexSidecar.write(df.sparkSession, metaPath(tmp),
-      metaText(partitionCols, clusterCols))
-    IndexSidecar.write(df.sparkSession, manifestPath(tmp),
-      dataFiles(fs, tmp).mkString("\n"))
-    IndexSidecar.swap(fs, tmp, dest)
+    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    PersistedIndex.publish(spark, dest) { tmp =>
+      write(tmp)
+      // the source schema rides along as a sidecar: partition-column
+      // VALUES become directory names, and reading them back through
+      // Spark's type inference would retype string columns that look
+      // numeric ("01" -> 1)
+      PersistedIndex.writeText(spark, schemaPath(tmp), df.schema.json)
+      // layout metadata + the clustered-file manifest are what make
+      // [[append]]/[[compact]] possible later: compact treats any data
+      // file NOT in the manifest as an un-clustered straggler
+      PersistedIndex.writeText(spark, metaPath(tmp), meta)
+      PersistedIndex.writeText(spark, manifestPath(tmp),
+        dataFiles(fs, tmp).mkString("\n"))
+    }
   }
 
   /** Append rows to an [[optimize]]d layout WITHOUT re-clustering: the fast
@@ -92,10 +101,11 @@ object Layout {
     * INCREMENTALLY: only partition directories containing files outside
     * the manifest are re-clustered (read, range-repartitioned, re-sorted);
     * every clean partition's files are untouched byte-for-byte. Each dirty
-    * directory is rebuilt privately and swapped by the same delete+rename
-    * publish as the whole-layout rewrite, and the manifest is re-stamped
-    * last — a crash mid-compact leaves every partition either old or new,
-    * both readable, and the next compact simply re-detects stragglers.
+    * directory is rebuilt privately and swapped in by the same
+    * [[PersistedIndex.publish]] as the whole-layout rewrite, and the
+    * manifest is re-stamped last — a crash mid-compact leaves every
+    * partition either old or new, both readable, and the next compact
+    * simply re-detects stragglers.
     * File count per partition is bounded by `filesPerPartition`.
     *
     * Writer contract (same as the persisted indexes): ONE maintainer per
@@ -124,7 +134,7 @@ object Layout {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val before = dataFiles(fs, root)
-    val manifest = IndexSidecar.read(spark, manifestPath(root))
+    val manifest = PersistedIndex.readText(spark, manifestPath(root))
       .split("\n").filter(_.nonEmpty).toSet
     val stragglers0 = before.filterNot(manifest.contains)
     // a stray file at the root of a partitioned layout has no partition
@@ -138,7 +148,7 @@ object Layout {
       return CompactReport(0, before.size, before.size)
     // the full-rewrite paths below just stamped a manifest listing every
     // file — count THAT instead of a second recursive LIST of the tree
-    def manifestCount() = IndexSidecar.read(spark, manifestPath(root))
+    def manifestCount() = PersistedIndex.readText(spark, manifestPath(root))
       .split("\n").count(_.nonEmpty)
     if (meta.zCols.nonEmpty) {
       // Z-ordered layout: the only correct re-cluster is the Z-ORDER
@@ -160,18 +170,18 @@ object Layout {
       rel.substring(0, rel.lastIndexOf('/'))).distinct.sorted
     dirtyDirs.foreach { relDir =>
       val dir = new org.apache.hadoop.fs.Path(root, relDir)
-      val tmp = IndexSidecar.stagingFor(dir)
       val clusterKeys = meta.clusterCols.map(col)
       val part = spark.read.schema(dataSchema).parquet(dir.toString)
-      (if (clusterKeys.nonEmpty)
-        part.repartitionByRange(filesPerPartition, clusterKeys: _*)
-          .sortWithinPartitions(clusterKeys: _*)
-      else part.coalesce(filesPerPartition))
-        .write.mode("overwrite").parquet(tmp.toString)
-      // the staged dir carries a _SUCCESS marker; drop it so partition dirs
-      // hold data files only, like partitionBy-written ones
-      fs.delete(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"), false)
-      IndexSidecar.swap(fs, tmp, dir)
+      PersistedIndex.publish(spark, dir) { tmp =>
+        (if (clusterKeys.nonEmpty)
+          part.repartitionByRange(filesPerPartition, clusterKeys: _*)
+            .sortWithinPartitions(clusterKeys: _*)
+        else part.coalesce(filesPerPartition))
+          .write.mode("overwrite").parquet(tmp.toString)
+        // the staged dir carries a _SUCCESS marker; drop it so partition
+        // dirs hold data files only, like partitionBy-written ones
+        fs.delete(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"), false)
+      }
     }
     // new manifest = old manifest outside the rebuilt dirs + exactly the
     // rebuilt dirs' current files. NOT a full re-listing: a file appended
@@ -188,7 +198,8 @@ object Layout {
     val newManifest =
       (manifest.filterNot(rel => dirtySet.contains(dirOf(rel))).toSeq ++
         rebuiltFiles).sorted
-    IndexSidecar.write(spark, manifestPath(root), newManifest.mkString("\n"))
+    PersistedIndex.writeText(spark, manifestPath(root),
+      newManifest.mkString("\n"))
     CompactReport(dirtyDirs.size, before.size, after.size)
   }
 
@@ -216,7 +227,7 @@ object Layout {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (partitionCols, clusterCols, zCols, zBits) =
       if (fs.exists(metaPath(root))) {
-        val text = IndexSidecar.read(spark, metaPath(root))
+        val text = PersistedIndex.readText(spark, metaPath(root))
         def list(tag: String): Seq[String] =
           text.linesIterator.find(_.startsWith(tag + US))
             .map(_.split(US, -1).drop(1).filter(_.nonEmpty).toSeq)
@@ -229,7 +240,7 @@ object Layout {
         // layouts stamped before the sidecar format change carry
         // _layout_meta.json — readable forever, re-stamped as .txt on the
         // next optimize/compact of the layout
-        val text = IndexSidecar.read(spark, legacyMetaPath(root))
+        val text = PersistedIndex.readText(spark, legacyMetaPath(root))
         def list(key: String): Seq[String] = {
           val re = ("\"" + key + "\"\\s*:\\s*\\[([^\\]]*)\\]").r
           re.findFirstMatchIn(text).map(_.group(1)).getOrElse("")
@@ -240,7 +251,7 @@ object Layout {
           Seq.empty[String], 0)
       }
     val schema = org.apache.spark.sql.types.DataType
-      .fromJson(IndexSidecar.read(spark, schemaPath(root)))
+      .fromJson(PersistedIndex.readText(spark, schemaPath(root)))
       .asInstanceOf[org.apache.spark.sql.types.StructType]
     LayoutMeta(partitionCols, clusterCols, schema, zCols, zBits)
   }
@@ -294,8 +305,8 @@ object Layout {
     * one z-value, and the write range-partitions + sorts on that z-value
     * (then drops it — parquet stats on the REAL columns are what the
     * reader skips with, so quantization error can only cost locality,
-    * never correctness). Same temp+rename publish and schema sidecar as
-    * [[optimize]]; [[read]] works unchanged. NULLs quantize to 0 (they
+    * never correctness). Same publish and schema sidecar as [[optimize]];
+    * [[read]] works unchanged. NULLs quantize to 0 (they
     * cluster with the minimum). */
   def zorder(
       df: DataFrame, path: String, zCols: Seq[String],
@@ -338,23 +349,16 @@ object Layout {
     }.reduce(_.bitwiseOR(_))
     val n = if (numFiles > 0) numFiles
       else spark.sessionState.conf.numShufflePartitions
-    val dest = new org.apache.hadoop.fs.Path(path)
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = IndexSidecar.stagingFor(dest)
-    df.withColumn("_z", z)
-      .repartitionByRange(n, col("_z"))
-      .sortWithinPartitions(col("_z"))
-      .drop("_z")
-      .write.mode("overwrite").parquet(tmp.toString)
-    IndexSidecar.write(spark, schemaPath(tmp), df.schema.json)
-    // z-aware meta + manifest: [[append]] works as-is (no partition dirs),
-    // and [[compact]] re-runs the Z-ORDER rewrite — a lexicographic
+    // z-aware meta: [[append]] works as-is (no partition dirs), and
+    // [[compact]] re-runs the Z-ORDER rewrite — a lexicographic
     // re-cluster would silently destroy the interleaving
-    IndexSidecar.write(spark, metaPath(tmp),
-      metaText(Nil, Nil, zCols, bits))
-    IndexSidecar.write(spark, manifestPath(tmp),
-      dataFiles(fs, tmp).mkString("\n"))
-    IndexSidecar.swap(fs, tmp, dest)
+    publishLayout(df, path, metaText(Nil, Nil, zCols, bits)) { tmp =>
+      df.withColumn("_z", z)
+        .repartitionByRange(n, col("_z"))
+        .sortWithinPartitions(col("_z"))
+        .drop("_z")
+        .write.mode("overwrite").parquet(tmp.toString)
+    }
   }
 
   /** Write `df` as a BUCKETED table: rows hash-distributed into
@@ -392,7 +396,7 @@ object Layout {
     * name type inference). */
   def read(spark: SparkSession, path: String): DataFrame = {
     val schema = org.apache.spark.sql.types.DataType
-      .fromJson(IndexSidecar.read(spark,
+      .fromJson(PersistedIndex.readText(spark,
         schemaPath(new org.apache.hadoop.fs.Path(path))))
       .asInstanceOf[org.apache.spark.sql.types.StructType]
     spark.read.schema(schema).parquet(path)

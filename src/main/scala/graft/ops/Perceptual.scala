@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import PersistedIndex.Kind
+
 /** Perceptual-hash near-duplicate detection over opaque media columns —
   * the image analog of [[Dedup.simhash]] (north-star extension, SURVEY
   * §7.2 M6 depth): re-encoded, resized, or brightness-shifted copies of
@@ -366,61 +368,27 @@ object Perceptual {
     }
   // ---- persisted index lifecycle (the D6 shape for media) -----------------
 
-  private def metaPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_meta.txt")
-
-  private def readSidecar(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Map[String, String] =
-    IndexSidecar.read(spark, metaPath(path))
-      .split("\n").filter(_.contains("=")).map(_.split("=", 2))
-      .map(a => a(0) -> a(1)).toMap
-
-  def phashIndexExists(
-      spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-    val p = metaPath(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** True iff an index exists at `path` AND its sidecar carries exactly
-    * `fingerprint` — the [[Dedup.minhashIndexMatches]] staleness gate. */
-  def phashIndexMatches(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      fingerprint: String): Boolean =
-    phashIndexExists(spark, path) &&
-      readSidecar(spark, path).get("fingerprint").contains(fingerprint)
-
   /** Index build — persist the corpus's (doc_id, phash) rows so ingest
     * ticks never re-DECODE the corpus: for media, the decode pass (real
     * codecs over 100 TB of blobs) dwarfs everything downstream, and the
     * whole point of a persisted perceptual index is that it is paid once.
-    * 16 bytes/doc of parquet; the decoder NAME goes in the sidecar — the
-    * probe must hash new blobs with the family the index was built with
-    * (the [[Dedup.writeMinhashIndex]] parameter-pinning contract) — plus
-    * an optional source `fingerprint` for the staleness gate. Built in a
-    * staging dir and atomically published ([[IndexSidecar]]). */
+    * 16 bytes/doc of parquet; the decoder NAME goes in the index meta —
+    * the probe must hash new blobs with the family the index was built
+    * with (the [[Dedup.writeMinhashIndex]] parameter-pinning contract) —
+    * plus an optional source `fingerprint` for the staleness gate. Built
+    * and published by [[PersistedIndex.build]]. */
   def writePhashIndex(
       media: DataFrame,
       path: String,
       decoder: GridDecoder = ByteStrideGridDecoder,
       fingerprint: Option[String] = None): Unit = {
-    val spark = media.sparkSession
-    IndexSidecar.buildAndPublish(spark, path) { tmp =>
+    PersistedIndex.build(media.sparkSession, path, Kind.Phash,
+        fingerprint) { tmp =>
       dhash63(media, decoder)
         .write.mode("overwrite").parquet(s"$tmp/hashes")
-      IndexSidecar.write(spark, metaPath(tmp.toString),
-        s"decoder=${decoder.name}" +
-          fingerprint.map(f => s"\nfingerprint=$f").getOrElse(""))
+      Seq("decoder" -> decoder.name)
     }
   }
-
-  /** Run-scoped working copy of a phash index (data + sidecar) — the
-    * ns18/ns20 what-if-tick hygiene: appends land on the copy, the
-    * canonical index stays untouched. */
-  def copyPhashIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      src: String, dst: String): Unit =
-    IndexSidecar.copy(spark, src, dst)
 
   /** Index maintenance — append a tick's ACCEPTED (doc_id, phash) rows so
     * the next probe dedups against corpus + everything accepted so far,
@@ -438,17 +406,21 @@ object Perceptual {
   def updatePhashIndex(
       accepted: DataFrame,
       path: String,
-      fingerprint: Option[String] = None): Unit = {
+      fingerprint: Option[String] = None): Unit =
+    appendHashes(accepted, path, Kind.Phash, Seq("doc_id", "phash"),
+      fingerprint)
+
+  /** The phash and grid update: check the index kind, materialize the
+    * batch unless the caller already did, append it, restamp if asked. */
+  private def appendHashes(accepted: DataFrame, path: String, kind: Kind,
+      cols: Seq[String], fingerprint: Option[String]): Unit = {
     val spark = accepted.sparkSession
-    val accSrc = accepted.select(col("doc_id"), col("phash"))
+    PersistedIndex.read(spark, path, kind)
+    val accSrc = accepted.select(cols.map(col): _*)
     val acc = if (Dedup.preMaterialized(accSrc)) accSrc
               else accSrc.localCheckpoint(true)
     acc.write.mode("append").parquet(s"$path/hashes")
-    fingerprint.foreach { f =>
-      val meta = readSidecar(spark, path)
-      IndexSidecar.write(spark, metaPath(path),
-        s"decoder=${meta("decoder")}\nfingerprint=$f")
-    }
+    fingerprint.foreach(PersistedIndex.restamp(spark, path, kind, _))
   }
 
   /** Index maintenance window — compact the hashes directory: per-tick
@@ -457,9 +429,9 @@ object Perceptual {
     * hash rows (harmless for decisions, not for scan cost). The compact
     * rewrites the data DEDUPED (exact (doc_id, phash) duplicates only)
     * into `numFiles` files and publishes by the crash-safe
-    * [[IndexSidecar.swap]] self-rewrite protocol — no step deletes the
-    * last copy; a failed build deletes only its staging. Decisions are
-    * unchanged by construction; the sidecar is untouched. Single
+    * [[PersistedIndex.publish]] — no step deletes the last copy; a failed
+    * build deletes only its staging. Decisions are unchanged by
+    * construction; the meta is untouched. Single
     * maintainer per index, run between ticks (the
     * [[graft.streaming.StreamingWebIngest]] ledger-compaction contract). */
   def compactPhashIndex(
@@ -467,29 +439,22 @@ object Perceptual {
       path: String,
       numFiles: Int = 1): Unit = {
     require(numFiles >= 1, "numFiles must be >= 1")
-    val hashesPath = new org.apache.hadoop.fs.Path(s"$path/hashes")
-    val fsys = hashesPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    PersistedIndex.read(spark, path, Kind.Phash)
     // snapshot (eager) before any rewrite: the plan reads the very files
-    // the swap replaces
+    // the publish replaces
     val snap = spark.read.parquet(s"$path/hashes")
       .distinct().localCheckpoint(true)
-    val tmp = IndexSidecar.stagingFor(hashesPath)
-    try snap.coalesce(numFiles).write.mode("overwrite").parquet(tmp.toString)
-    catch { case e: Throwable =>
-      try fsys.delete(tmp, true) catch { case _: Throwable => () }
-      Dedup.unpersistCheckpoint(snap)
-      throw e
-    }
-    try IndexSidecar.swap(fsys, tmp, hashesPath)
-    finally Dedup.unpersistCheckpoint(snap)
+    try PersistedIndex.publish(spark,
+        new org.apache.hadoop.fs.Path(s"$path/hashes")) { tmp =>
+      snap.coalesce(numFiles).write.mode("overwrite").parquet(tmp.toString)
+    } finally Dedup.unpersistCheckpoint(snap)
   }
 
   /** Index probe — which docs of `newMedia` are NOT a near-dup (hamming ≤
     * `maxHamming`) of anything in the persisted index? Returns the
     * survivors as (doc_id, phash), ready to feed [[updatePhashIndex]].
     *
-    * The new batch is decoded ONCE (with the decoder the index's sidecar
+    * The new batch is decoded ONCE (with the decoder the index's meta
     * declares — never the caller's choice; `expectDecoder` pins it
     * fail-fast); the corpus side reads 16-byte hash rows, never blobs.
     * Candidates come from the same pigeonhole-exact band join as
@@ -504,14 +469,7 @@ object Perceptual {
       maxBandFreq: Long = Long.MaxValue,
       expectDecoder: Option[String] = None): DataFrame = {
     val spark = newMedia.sparkSession
-    val meta = readSidecar(spark, path)
-    val decoderName = meta("decoder")
-    expectDecoder.foreach { e =>
-      require(e == decoderName,
-        s"index at $path was built with decoder=$decoderName, caller " +
-          s"requires $e — refusing to probe across hash families")
-    }
-    val decoder = GridDecoders.byName(decoderName)
+    val decoder = indexDecoder(spark, path, Kind.Phash, expectDecoder)
     // one decode pass, reused by the band join and the final anti-join
     val newHashes = dhash63(newMedia, decoder).localCheckpoint(false)
     val corpusHashes = spark.read.parquet(s"$path/hashes")
@@ -520,6 +478,19 @@ object Perceptual {
       .select(col("doc_id")).distinct()
     newHashes.join(dupIds, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("phash"))
+  }
+
+  /** The decoder the `kind` index at `path` was built with — the probe
+    * must hash new blobs with the same family; `expectDecoder` pins it. */
+  private def indexDecoder(spark: org.apache.spark.sql.SparkSession,
+      path: String, kind: Kind, expectDecoder: Option[String]): GridDecoder = {
+    val name = PersistedIndex.read(spark, path, kind)("decoder")
+    expectDecoder.foreach { e =>
+      require(e == name,
+        s"index at $path was built with decoder=$name, caller " +
+          s"requires $e - refusing to probe across hash families")
+    }
+    GridDecoders.byName(name)
   }
 
   /** Shared banding: probe-side rows whose hash is within `maxHamming` of
@@ -562,20 +533,18 @@ object Perceptual {
   // writer discipline as the phash index.
 
   /** Build the verified index: (doc_id, phash, grid) — one decode pass
-    * ([[gridHashes]]); sidecar pins decoder + `kind=grid` so a phash-only
-    * index can never be probed as a grid index. */
+    * ([[gridHashes]]); the meta pins the decoder, and its `kind=grid`
+    * keeps a phash-only index from being probed as a grid index. */
   def writeGridIndex(
       media: DataFrame,
       path: String,
       decoder: GridDecoder = ByteStrideGridDecoder,
       fingerprint: Option[String] = None): Unit = {
-    val spark = media.sparkSession
-    IndexSidecar.buildAndPublish(spark, path) { tmp =>
+    PersistedIndex.build(media.sparkSession, path, Kind.Grid,
+        fingerprint) { tmp =>
       gridHashes(media, decoder)
         .write.mode("overwrite").parquet(s"$tmp/hashes")
-      IndexSidecar.write(spark, metaPath(tmp.toString),
-        s"decoder=${decoder.name}\nkind=grid" +
-          fingerprint.map(f => s"\nfingerprint=$f").getOrElse(""))
+      Seq("decoder" -> decoder.name)
     }
   }
 
@@ -586,18 +555,9 @@ object Perceptual {
   def updateGridIndex(
       accepted: DataFrame,
       path: String,
-      fingerprint: Option[String] = None): Unit = {
-    val spark = accepted.sparkSession
-    val accSrc = accepted.select(col("doc_id"), col("phash"), col("grid"))
-    val acc = if (Dedup.preMaterialized(accSrc)) accSrc
-              else accSrc.localCheckpoint(true)
-    acc.write.mode("append").parquet(s"$path/hashes")
-    fingerprint.foreach { f =>
-      val meta = readSidecar(spark, path)
-      IndexSidecar.write(spark, metaPath(path),
-        s"decoder=${meta("decoder")}\nkind=grid\nfingerprint=$f")
-    }
-  }
+      fingerprint: Option[String] = None): Unit =
+    appendHashes(accepted, path, Kind.Grid, Seq("doc_id", "phash", "grid"),
+      fingerprint)
 
   /** VERIFIED index probe — which docs of `newMedia` have NO index doc
     * that is BOTH hamming-close (≤ `maxHamming`, pigeonhole-exact banding)
@@ -617,17 +577,7 @@ object Perceptual {
       maxBandFreq: Long = Long.MaxValue,
       expectDecoder: Option[String] = None): DataFrame = {
     val spark = newMedia.sparkSession
-    val meta = readSidecar(spark, path)
-    require(meta.get("kind").contains("grid"),
-      s"index at $path is not a grid index (kind=${meta.getOrElse("kind",
-        "phash")}) - a hash-only index cannot back the verified probe")
-    val decoderName = meta("decoder")
-    expectDecoder.foreach { e =>
-      require(e == decoderName,
-        s"index at $path was built with decoder=$decoderName, caller " +
-          s"requires $e - refusing to probe across hash families")
-    }
-    val decoder = GridDecoders.byName(decoderName)
+    val decoder = indexDecoder(spark, path, Kind.Grid, expectDecoder)
     // one decode pass, shared by banding, verify (sigA) and the anti-join
     val newSig = gridHashes(newMedia, decoder).localCheckpoint(false)
     val corpus = spark.read.parquet(s"$path/hashes")

@@ -226,46 +226,30 @@ object Quality {
 
   // ---- persisted LM model lifecycle --------------------------------------
 
-  private def lmParamsPath(dir: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(dir, "_lm_params")
-  private def lmFingerprintPath(dir: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(dir, "_lm_fingerprint")
-
   /** Q3 — persist the trained unigram model: (tok, c) counts as parquet
-    * plus an `_lm_params` sidecar carrying the frozen (N, V). This is the
+    * plus the index meta ([[PersistedIndex]]) carrying the frozen (N, V)
+    * and an optional source fingerprint. This is the
     * ns17/ns18/ns59 index-lifecycle contract applied to the perplexity
     * filter — in production the reference corpus is curated once and the
     * model scores every future ingest batch, so training must be a
     * separate, atomic, reusable artifact, not a per-run recompute.
-    * Atomic publish via the staging-rename discipline: readers never see
-    * a half-written model. Underscore-prefixed sidecars are invisible to
-    * parquet directory scans, so the model dir IS its own counts table. */
+    * Published by [[PersistedIndex.build]]: readers never see a
+    * half-written model, and the model dir IS its own counts table. */
   def writeLmModel(
       docs: DataFrame, path: String,
       fingerprint: Option[String] = None): Unit = {
     val spark = docs.sparkSession
-    IndexSidecar.buildAndPublish(spark, path) { tmp =>
+    PersistedIndex.build(spark, path, PersistedIndex.Kind.Lm,
+        fingerprint) { tmp =>
       docs.select(explode(split(col("text"), " ")).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("c"))
         .write.mode("overwrite").parquet(tmp.toString)
       val totals = spark.read.parquet(tmp.toString)
         .agg(sum(col("c")), count(lit(1))).head()
-      val n = if (totals.isNullAt(0)) 0L else totals.getLong(0)
-      IndexSidecar.write(spark, lmParamsPath(tmp), s"$n ${totals.getLong(1)}")
-      fingerprint.foreach(f =>
-        IndexSidecar.write(spark, lmFingerprintPath(tmp), f))
+      Seq("n" -> (if (totals.isNullAt(0)) 0L else totals.getLong(0)),
+        "v" -> totals.getLong(1))
     }
   }
-
-  /** Build-once gate: true iff a model exists at `path` whose fingerprint
-    * sidecar matches — the same staleness contract as the minhash/IVF/CMS
-    * indexes (a model trained on last month's corpus must not silently
-    * serve this month's bench). */
-  def lmModelMatches(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      fingerprint: String): Boolean =
-    IndexSidecar.matches(spark,
-      lmFingerprintPath(new org.apache.hadoop.fs.Path(path)), fingerprint)
 
   /** Q4 — score a batch against the FROZEN persisted model. Unlike
     * [[lmPerplexity]] (self-trained, every token seen), scoring new data
@@ -274,7 +258,7 @@ object Quality {
     * reported `oov_frac` is itself a first-class quality signal (a page
     * whose tokens the reference corpus has never seen is exactly what
     * perplexity filtering exists to catch). Same exact-integer micro-nat
-    * discipline as [[lmPerplexity]]; N and V come from the sidecar, not
+    * discipline as [[lmPerplexity]]; N and V come from the meta, not
     * the data, so scoring never re-aggregates the model.
     *
     * Scale shape: one equality left join on the token key against the
@@ -286,9 +270,8 @@ object Quality {
   def lmScoreFromModel(
       docs: DataFrame, path: String, maxNll: Double = 9.0): DataFrame = {
     val spark = docs.sparkSession
-    val Array(n, v) = IndexSidecar
-      .read(spark, lmParamsPath(new org.apache.hadoop.fs.Path(path)))
-      .trim.split(" ").map(_.toLong)
+    val meta = PersistedIndex.read(spark, path, PersistedIndex.Kind.Lm)
+    val (n, v) = (meta("n").toLong, meta("v").toLong)
     val nv = math.max(n + v, 1L).toDouble // empty-trained model: floor path
     val toks = docs.select(col("doc_id"),
       explode(split(col("text"), " ")).as("tok"))
@@ -302,7 +285,7 @@ object Quality {
       round(-log((col("c") + 1).cast("double") / lit(nv)) * 1e6, 0)
         .cast("long"))
     // same measured broadcast gate as [[lmPerplexity]] — V comes from
-    // the sidecar, so the decision is exact without touching the data
+    // the meta, so the decision is exact without touching the data
     toks.join(if (v <= lmBroadcastVocabMax) broadcast(model) else model,
         Seq("tok"), "left")
       .withColumn("nll_micro",

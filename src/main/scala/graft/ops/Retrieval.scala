@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
   * joined back by broadcast. The final top-k is orderBy+limit →
   * `TakeOrderedAndProject` (per-partition heaps, no global sort). One
   * wide shuffle total. For a standing query workload, persist the
-  * (doc_id, term, tf, dl) posting frame once ([[IndexSidecar]] pattern)
+  * (doc_id, term, tf, dl) posting frame once ([[PersistedIndex]] pattern)
   * and amortize the corpus scan across queries.
   */
 object Retrieval {

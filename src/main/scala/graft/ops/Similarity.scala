@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import PersistedIndex.Kind
+
 /** Approximate-nearest-neighbor similarity search over an embedding column
   * (`Array[Float]`) — north-star extension (SURVEY §7.2 M6).
   *
@@ -370,25 +372,21 @@ object Similarity {
     * reads only its cells' files (partition-pruned scan) instead of the
     * whole corpus. Centroids are tiny (C×dims doubles) and stored as text
     * so the index is self-contained. An optional source `fingerprint`
-    * (see [[Dedup.sourceFingerprint]]) is stamped beside the centroids and
-    * re-checked by [[ivfIndexMatches]], the same staleness contract as the
-    * minhash index. */
+    * goes in the index meta ([[PersistedIndex]]), the same staleness
+    * contract as every persisted index. */
   def writeIvfIndex(
       embeddings: DataFrame, path: String, numCentroids: Int = 16,
       fingerprint: Option[String] = None): Unit = {
     val corpus = normalizedCorpus(embeddings)
     val centroids = centroidVectors(corpus, numCentroids)
-    IndexSidecar.buildAndPublish(embeddings.sparkSession, path) { tmp =>
+    val spark = embeddings.sparkSession
+    PersistedIndex.build(spark, path, Kind.Ivf, fingerprint) { tmp =>
       corpus.withColumn("cell",
           array_max(cellScores(col("v"), centroids)).getField("c"))
         .write.mode("overwrite").partitionBy("cell").parquet(tmp.toString)
-      val text = centroids.map { case (i, v) =>
-        s"$i:${v.mkString(",")}"
-      }.mkString("\n")
-      IndexSidecar.write(
-        embeddings.sparkSession, centroidsPath(tmp.toString), text)
-      fingerprint.foreach(f => IndexSidecar.write(
-        embeddings.sparkSession, fingerprintPath(tmp.toString), f))
+      PersistedIndex.writeVectors(spark, centroidsPath(tmp.toString),
+        centroids)
+      Seq("numCentroids" -> numCentroids)
     }
   }
 
@@ -402,41 +400,35 @@ object Similarity {
     * readers between ticks (same contract as
     * [[Dedup.updateMinhashIndex]]). */
   def updateIvfIndex(newEmbeddings: DataFrame, path: String): Unit = {
-    val centroids = readCentroids(newEmbeddings.sparkSession, path)
+    val centroids = readCentroids(newEmbeddings.sparkSession, path, Kind.Ivf)
     normalizedCorpus(newEmbeddings)
       .withColumn("cell",
         array_max(cellScores(col("v"), centroids)).getField("c"))
       .write.mode("append").partitionBy("cell").parquet(path)
   }
 
-  /** True iff an IVF index exists at `path` AND was stamped with exactly
-    * `fingerprint` — unstamped or stale indexes fail, so callers rebuild
-    * instead of serving from the wrong corpus. */
-  def ivfIndexMatches(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      fingerprint: String): Boolean =
-    IndexSidecar.matches(spark, fingerprintPath(path), fingerprint)
-
-  /** Copy a persisted IVF index (cells + sidecars) to a new location —
-    * branch a working index off a shared base (Hadoop-FS-portable). */
-  def copyIvfIndex(
-      spark: org.apache.spark.sql.SparkSession, src: String, dst: String): Unit =
-    IndexSidecar.copy(spark, src, dst)
-
+  // the quantizer tables beside an index's data; each reader first checks
+  // the index is of the kind its caller serves
   private def centroidsPath(path: String) =
     new org.apache.hadoop.fs.Path(path, "_centroids.txt")
 
-  private def fingerprintPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_fingerprint.txt")
+  private def codebookPath(path: String) =
+    new org.apache.hadoop.fs.Path(path, "_pq_codebook.txt")
 
-  private[ops] def readCentroids(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Array[(Int, Array[Double])] =
-    IndexSidecar.read(spark, centroidsPath(path))
-      .split("\n").filter(_.nonEmpty).map { line =>
-        val Array(i, vs) = line.split(":", 2)
-        i.toInt -> vs.split(",").map(_.toDouble)
-      }
+  private def readCentroids(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      kind: Kind): Array[(Int, Array[Double])] = {
+    PersistedIndex.read(spark, path, kind)
+    PersistedIndex.readVectors(spark, centroidsPath(path))
+  }
+
+  private def readPqCodebook(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      kind: Kind): Array[Array[Double]] = {
+    PersistedIndex.read(spark, path, kind)
+    PersistedIndex.readVectors(spark, codebookPath(path))
+      .sortBy(_._1).map(_._2)
+  }
 
   /** ANN top-k against a persisted index: the probed cells are computed
     * up front (≤ C values — same driver-side footprint as the centroids)
@@ -446,7 +438,7 @@ object Similarity {
   def ivfTopKFromIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, k: Int = 10, nProbe: Int = 4): DataFrame = {
-    val centroids = readCentroids(spark, path)
+    val centroids = readCentroids(spark, path, Kind.Ivf)
     val probes = probeCells(queries, centroids, nProbe)
     val wanted = probes.select("cell").distinct().collect().map(_.getInt(0))
     val assigned = spark.read.parquet(path)
@@ -578,22 +570,19 @@ object Similarity {
   /** Persist a PQ index: the code table as parquet plus the codebook as a
     * text sidecar — the serving shape where the 16×-compressed codes are
     * what a cluster keeps hot while raw vectors stay cold. Same staleness
-    * contract as the IVF / minhash indexes: an optional source
-    * `fingerprint` is stamped beside the codebook and re-checked by
-    * [[pqIndexMatches]]. */
+    * contract as every persisted index: an optional source `fingerprint`
+    * goes in the index meta ([[PersistedIndex]]). */
   def writePqIndex(
       embeddings: DataFrame, path: String, m: Int = 8, numCodes: Int = 16,
       fingerprint: Option[String] = None): Unit = {
     val cb = pqCodebook(embeddings, numCodes)
-    IndexSidecar.buildAndPublish(embeddings.sparkSession, path) { tmp =>
+    val spark = embeddings.sparkSession
+    PersistedIndex.build(spark, path, Kind.Pq, fingerprint) { tmp =>
       pqEncode(embeddings, cb, m)
         .write.mode("overwrite").parquet(codesPath(tmp.toString).toString)
-      val text = cb.zipWithIndex
-        .map { case (v, i) => s"$i:${v.mkString(",")}" }.mkString("\n")
-      IndexSidecar.write(
-        embeddings.sparkSession, codebookPath(tmp.toString), text)
-      fingerprint.foreach(f => IndexSidecar.write(
-        embeddings.sparkSession, fingerprintPath(tmp.toString), f))
+      PersistedIndex.writeVectors(spark, codebookPath(tmp.toString),
+        cb.indices.map(i => i -> cb(i)))
+      Seq("m" -> m, "numCodes" -> numCodes)
     }
   }
 
@@ -605,7 +594,7 @@ object Similarity {
     * Single writer per index; readers between ticks. */
   def updatePqIndex(newEmbeddings: DataFrame, path: String): Unit = {
     val spark = newEmbeddings.sparkSession
-    val cb = readPqCodebook(spark, path)
+    val cb = readPqCodebook(spark, path, Kind.Pq)
     // m is READ OFF the stored codes, never taken from the caller — an
     // append with a mismatched subspace count would silently corrupt the
     // table (same parameter-pinning contract as updateMinhashIndex)
@@ -615,13 +604,6 @@ object Similarity {
       .write.mode("append").parquet(codesPath(path).toString)
   }
 
-  /** True iff a PQ index exists at `path` AND was stamped with exactly
-    * `fingerprint`. */
-  def pqIndexMatches(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      fingerprint: String): Boolean =
-    IndexSidecar.matches(spark, fingerprintPath(path), fingerprint)
-
   /** ADC top-k served from a persisted code table: identical scoring to
     * [[pqTopK]], but the corpus side is the stored codes — no raw-vector
     * read, no encode work at query time. `m` is read off the stored code
@@ -629,7 +611,7 @@ object Similarity {
   def pqTopKFromIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, k: Int = 10): DataFrame = {
-    val cb = readPqCodebook(spark, path)
+    val cb = readPqCodebook(spark, path, Kind.Pq)
     val codes = spark.read.parquet(codesPath(path).toString)
     pqScoreCodes(codes, queries, cb,
       storedM(codes, s"PQ index at $path"), k)
@@ -645,7 +627,7 @@ object Similarity {
     * md5-derived, so the whole composite remains engine-reproducible.
     *
     * Index layout: parquet partitioned by `cell`, rows (vec_id, cs);
-    * centroid + codebook + optional fingerprint sidecars. The raw
+    * centroid + codebook sidecars and the index meta. The raw
     * vectors appear nowhere in the index — at 64-float vectors the index
     * is ~16× smaller than an [[writeIvfIndex]] index over the same
     * corpus, which is the difference between codes-in-memory and
@@ -661,21 +643,18 @@ object Similarity {
     val dims = cb.head.length
     require(dims % m == 0, s"dims $dims not divisible by m $m")
     graft.functions.VectorFunctions.register(spark)
-    IndexSidecar.buildAndPublish(spark, path) { tmp =>
+    PersistedIndex.build(spark, path, Kind.IvfPq, fingerprint) { tmp =>
       corpus
         .withColumn("cell",
           array_max(cellScores(col("v"), centroids)).getField("c"))
         .select(col("vec_id"),
           pqCodes(col("v"), m, dims / m, cb).as("cs"), col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(tmp.toString)
-      IndexSidecar.write(spark, centroidsPath(tmp.toString),
-        centroids.map { case (i, v) => s"$i:${v.mkString(",")}" }
-          .mkString("\n"))
-      IndexSidecar.write(spark, codebookPath(tmp.toString),
-        cb.zipWithIndex.map { case (v, i) => s"$i:${v.mkString(",")}" }
-          .mkString("\n"))
-      fingerprint.foreach(f =>
-        IndexSidecar.write(spark, fingerprintPath(tmp.toString), f))
+      PersistedIndex.writeVectors(spark, centroidsPath(tmp.toString),
+        centroids)
+      PersistedIndex.writeVectors(spark, codebookPath(tmp.toString),
+        cb.indices.map(i => i -> cb(i)))
+      Seq("numCentroids" -> numCentroids, "m" -> m, "numCodes" -> numCodes)
     }
   }
 
@@ -686,8 +665,8 @@ object Similarity {
     * scan per tick. Single writer; rebuild = retrain. */
   def updateIvfPqIndex(newEmbeddings: DataFrame, path: String): Unit = {
     val spark = newEmbeddings.sparkSession
-    val centroids = readCentroids(spark, path)
-    val cb = readPqCodebook(spark, path)
+    val centroids = readCentroids(spark, path, Kind.IvfPq)
+    val cb = readPqCodebook(spark, path, Kind.IvfPq)
     val m = storedM(spark.read.parquet(path), s"IVF-PQ index at $path")
     graft.functions.VectorFunctions.register(spark)
     normalizedCorpus(newEmbeddings)
@@ -706,8 +685,8 @@ object Similarity {
   def ivfPqTopKFromIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, k: Int = 10, nProbe: Int = 4): DataFrame = {
-    val centroids = readCentroids(spark, path)
-    val cb = readPqCodebook(spark, path)
+    val centroids = readCentroids(spark, path, Kind.IvfPq)
+    val cb = readPqCodebook(spark, path, Kind.IvfPq)
     val probes = probeCells(queries, centroids, nProbe)
       .select("query_id", "cell").distinct()
     val wanted = probes.select("cell").distinct().collect().map(_.getInt(0))
@@ -782,18 +761,6 @@ object Similarity {
   private def codesPath(path: String) =
     new org.apache.hadoop.fs.Path(path, "codes")
 
-  private def codebookPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_pq_codebook.txt")
-
-  private[ops] def readPqCodebook(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Array[Array[Double]] =
-    IndexSidecar.read(spark, codebookPath(path))
-      .split("\n").filter(_.nonEmpty)
-      .map { line =>
-        val Array(i, vs) = line.split(":", 2)
-        i.toInt -> vs.split(",").map(_.toDouble)
-      }.sortBy(_._1).map(_._2)
 
   /** Per-label embedding outlier scoring — the centroid-distance filter of
     * semantic curation pipelines (flag the vectors farthest from their

@@ -179,23 +179,21 @@ object Sketches {
         candidates, valueCol, depth, width)
       .where(col("cms_count") >= minCount)
 
-  /** Persist a [[cmsBuild]] sketch for serving: cells as parquet plus a
-    * params sidecar (depth and width are PINNED to the index — estimating
-    * against mismatched parameters computes wrong buckets silently, the
-    * same parameter-pinning contract as the minhash/PQ indexes) and an
-    * optional content fingerprint for staleness gating. Atomic
-    * build-into-temp + rename publish. */
+  /** Persist a [[cmsBuild]] sketch for serving: cells as parquet plus the
+    * index meta ([[PersistedIndex]]) carrying depth and width (PINNED to
+    * the index — estimating against mismatched parameters computes wrong
+    * buckets silently, the same parameter-pinning contract as the
+    * minhash/PQ indexes) and an optional content fingerprint for
+    * staleness gating. */
   def writeCmsSketch(
       df: DataFrame, path: String, valueCol: String,
       depth: Int = 4, width: Int = 256,
       fingerprint: Option[String] = None): Unit = {
-    val spark = df.sparkSession
-    IndexSidecar.buildAndPublish(spark, path) { tmp =>
+    PersistedIndex.build(df.sparkSession, path, PersistedIndex.Kind.Cms,
+        fingerprint) { tmp =>
       cmsBuild(df, valueCol, depth, width)
         .write.mode("overwrite").parquet(tmp.toString)
-      IndexSidecar.write(spark, cmsParamsPath(tmp), s"$depth $width")
-      fingerprint.foreach(f =>
-        IndexSidecar.write(spark, cmsFingerprintPath(tmp), f))
+      Seq("depth" -> depth, "width" -> width)
     }
   }
 
@@ -212,7 +210,7 @@ object Sketches {
   }
 
   /** [[cmsEstimate]] against a persisted sketch: parameters read off the
-    * sidecar, partial cells from appends sum-merged before the
+    * meta, partial cells from appends sum-merged before the
     * min-over-rows — the whole table is depth × width rows (× appends),
     * so the re-aggregation is noise. */
   def cmsEstimateFromSketch(
@@ -225,35 +223,11 @@ object Sketches {
     cmsEstimate(cells, candidates, valueCol, depth, width)
   }
 
-  /** True iff a sketch exists at `path` AND was stamped with exactly
-    * `fingerprint` — the staleness gate, as [[graft.ops.Similarity
-    * .pqIndexMatches]]. */
-  def cmsSketchMatches(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      fingerprint: String): Boolean =
-    IndexSidecar.matches(spark,
-      cmsFingerprintPath(new org.apache.hadoop.fs.Path(path)), fingerprint)
-
   private[graft] def cmsStoredParams(
       spark: org.apache.spark.sql.SparkSession, path: String): (Int, Int) = {
-    val parts = IndexSidecar.read(spark,
-      cmsParamsPath(new org.apache.hadoop.fs.Path(path))).trim.split(" ")
-    (parts(0).toInt, parts(1).toInt)
+    val meta = PersistedIndex.read(spark, path, PersistedIndex.Kind.Cms)
+    (meta.int("depth"), meta.int("width"))
   }
-
-  /** Whole-directory copy (cells + sidecars) — for run-scoped working
-    * copies of a shared base sketch, [[graft.ops.Dedup.copyMinhashIndex]]'s
-    * contract. */
-  def copyCmsSketch(
-      spark: org.apache.spark.sql.SparkSession,
-      src: String, dst: String): Unit =
-    IndexSidecar.copy(spark, src, dst)
-
-  private def cmsParamsPath(dir: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(dir, "_cms_params.txt")
-
-  private def cmsFingerprintPath(dir: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(dir, "_cms_fingerprint.txt")
 
   /** Per-group approximate quantiles from fixed-width value bins — the
     * mergeable quantile summary: per (group, bin) counts merge by sum

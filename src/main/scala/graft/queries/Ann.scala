@@ -3,6 +3,8 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.PersistedIndex
+import graft.ops.PersistedIndex.Kind
 import Shared._
 
 /** Similarity search: exact/LSH/IVF top-k, IVF/PQ lifecycle, rerank,
@@ -28,17 +30,12 @@ private[graft] object Ann extends Family("ann") {
     * corpus-trained centroids. Per-run working copy, same hygiene as
     * ns18. */
   private def ns20(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/embeddings.parquet")
-    val base = scratchIndexDir("graft_ivf_idx", dir, fp)
-    if (!graft.ops.Similarity.ivfIndexMatches(s, base, fp))
-      graft.ops.Similarity.writeIvfIndex(
-        embs(s, dir).where(col("vec_id") % 5 =!= 0), base,
-        fingerprint = Some(fp))
-    val work = s"${base}_tick_${java.util.UUID.randomUUID().toString.take(8)}"
-    graft.ops.Similarity.copyIvfIndex(s, base, work)
-    val workPath = new org.apache.hadoop.fs.Path(work)
-    workPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .deleteOnExit(workPath)
+    val work = PersistedIndex.workingCopy(s,
+      PersistedIndex.cached(s, Kind.Ivf, s"$dir/embeddings.parquet") {
+        (path, fp) => graft.ops.Similarity.writeIvfIndex(
+          embs(s, dir).where(col("vec_id") % 5 =!= 0), path,
+          fingerprint = Some(fp))
+      })
     graft.ops.Similarity.updateIvfIndex(
       embs(s, dir).where(col("vec_id") % 5 === 0), work)
     graft.ops.Similarity.ivfTopKFromIndex(s, work, simQueries(s, dir), k = 10)
@@ -58,29 +55,25 @@ private[graft] object Ann extends Family("ann") {
     * compress WHAT scoring costs (ADC lookups, no raw vectors in the
     * index at all). Both quantizers are the md5-derived ones from ns13
     * and ns30, so the composite mirrors end-to-end. */
-  private def ns35(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/embeddings.parquet")
-    val base = scratchIndexDir("graft_ivfpq_idx", dir, fp)
-    if (!graft.ops.Similarity.pqIndexMatches(s, base, fp))
-      graft.ops.Similarity.writeIvfPqIndex(
-        embs(s, dir), base, fingerprint = Some(fp))
+  private def ns35(s: SparkSession, dir: String): DataFrame =
     graft.ops.Similarity.ivfPqTopKFromIndex(
-      s, base, simQueries(s, dir), k = 10)
-  }
+      s, ivfPqBase(s, dir), simQueries(s, dir), k = 10)
+
+  /** The ns35/ns52 IVF-PQ index over the whole corpus, built once per
+    * source fingerprint. */
+  private def ivfPqBase(s: SparkSession, dir: String): String =
+    PersistedIndex.cached(s, Kind.IvfPq, s"$dir/embeddings.parquet") {
+      (path, fp) => graft.ops.Similarity.writeIvfPqIndex(
+        embs(s, dir), path, fingerprint = Some(fp))
+    }
 
   /** NS52 — IVF-PQ with exact re-ranking: the ns35 ADC stage widened to
     * 4·k candidates, whose raw vectors alone are re-scored with exact
     * cosine (candidate-bounded corpus read, broadcast semi-join shape).
     * Same index artifacts as ns35. */
-  private def ns52(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/embeddings.parquet")
-    val base = scratchIndexDir("graft_ivfpq_idx", dir, fp)
-    if (!graft.ops.Similarity.pqIndexMatches(s, base, fp))
-      graft.ops.Similarity.writeIvfPqIndex(
-        embs(s, dir), base, fingerprint = Some(fp))
-    graft.ops.Similarity.ivfPqTopKReranked(
-      s, base, simQueries(s, dir), embs(s, dir), k = 10, rerankFactor = 4)
-  }
+  private def ns52(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Similarity.ivfPqTopKReranked(s, ivfPqBase(s, dir),
+      simQueries(s, dir), embs(s, dir), k = 10, rerankFactor = 4)
 
   /** NS42 — k-means-trained IVF: two Lloyd iterations refine the md5
     * coarse quantizer (per-dim means rounded to 6 decimals — the contract

@@ -3,6 +3,8 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.PersistedIndex
+import graft.ops.PersistedIndex.Kind
 import Shared._
 
 /** Exact/near-dup, span/line/url dedup, index lifecycle, decontamination. */
@@ -37,30 +39,19 @@ private[graft] object Dedup extends Family("dedup") {
     * absorbs the build, so the timed runs measure the pure from-index
     * path) and each ingest tick reads only the index, never the corpus
     * parquet. */
-  private def ns17(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
-    val idx = minhashIndexDir(dir, fp)
-    if (!graft.ops.Dedup.minhashIndexMatches(s, idx, fp))
-      graft.ops.Dedup.writeMinhashIndex(
-        docs(s, dir).where(col("doc_id") % 5 =!= 0), idx,
-        fingerprint = Some(fp))
+  private def ns17(s: SparkSession, dir: String): DataFrame =
     graft.ops.Dedup.incrementalNewFromIndex(
-      docs(s, dir).where(col("doc_id") % 5 === 0), idx,
+      docs(s, dir).where(col("doc_id") % 5 === 0), minhashBase(s, dir),
       expectParams = Some((2, 16, 4)))
-  }
 
-  /** Deterministic index location keyed on the sfDir path AND the content
-    * fingerprint of its documents parquet: regenerating the data under the
-    * same path yields a different fingerprint → a different index dir → a
-    * rebuild, so a stale index can never silently answer for new data. The
-    * fingerprint is also stamped into the index sidecar and re-checked
-    * ([[graft.ops.Dedup.minhashIndexMatches]]), and the build publishes by
-    * atomic-ish rename, closing the concurrent first-touch race between a
-    * bench and a verify JVM. (java.io.tmpdir is the right home only for
-    * this single-JVM harness — on a cluster a deployment passes its own
-    * shared path to the operator API, which is Hadoop-FS-portable.) */
-  private def minhashIndexDir(dir: String, fingerprint: String): String =
-    scratchIndexDir("graft_minhash_idx", dir, fingerprint)
+  /** The ns17/ns18 base index over the 80% corpus, built once per source
+    * fingerprint ([[graft.ops.PersistedIndex.cached]]). */
+  private def minhashBase(s: SparkSession, dir: String): String =
+    PersistedIndex.cached(s, Kind.Minhash, s"$dir/documents.parquet") {
+      (path, fp) => graft.ops.Dedup.writeMinhashIndex(
+        docs(s, dir).where(col("doc_id") % 5 =!= 0), path,
+        fingerprint = Some(fp))
+    }
 
   /** NS18 — index lifecycle: incremental ingest across TWO ticks against one
     * persisted index that is UPDATED between them. Tick 1 dedups its batch
@@ -72,19 +63,7 @@ private[graft] object Dedup extends Family("dedup") {
     * copy of the shared base index so reruns never see their own appends.
     * Output: all surviving new docs across both ticks. */
   private def ns18(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
-    val base = minhashIndexDir(dir, fp)
-    if (!graft.ops.Dedup.minhashIndexMatches(s, base, fp))
-      graft.ops.Dedup.writeMinhashIndex(
-        docs(s, dir).where(col("doc_id") % 5 =!= 0), base,
-        fingerprint = Some(fp))
-    val work = s"${base}_tick_${java.util.UUID.randomUUID().toString.take(8)}"
-    graft.ops.Dedup.copyMinhashIndex(s, base, work)
-    // working copies are run-scoped scratch: reclaim them at JVM exit so
-    // repeated bench/verify runs don't accumulate dirs under tmp
-    val workPath = new org.apache.hadoop.fs.Path(work)
-    workPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .deleteOnExit(workPath)
+    val work = PersistedIndex.workingCopy(s, minhashBase(s, dir))
     val tick1 = graft.ops.Dedup.incrementalNewFromIndex(
         docs(s, dir).where(col("doc_id") % 10 === 0), work)
       .localCheckpoint(false) // lazy snapshot: the listing is pinned at plan

@@ -3,26 +3,12 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.PersistedIndex
+import graft.ops.PersistedIndex.Kind
 import Shared._
 
 /** Profiling, drift, snapshots, SCD, ingest formats, dataset cards. */
 private[graft] object Gov extends Family("gov") {
-
-  /** Build-once probe for a bench-local documents layout (ns41/ns58): the
-    * probe artifact is the META sidecar — the NEWEST thing a current-format
-    * layout writes — so a layout cached by an older build (schema sidecar
-    * only, no meta/manifest, which the append/compact lifecycle would
-    * crash on) rebuilds instead of half-working. Returns the
-    * fingerprint-keyed layout path. */
-  private def cachedDocsLayout(s: SparkSession, prefix: String, dir: String)(
-      build: String => Unit): String = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
-    val base = scratchIndexDir(prefix, dir, fp)
-    val marker = new org.apache.hadoop.fs.Path(base, "_layout_meta.txt")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) build(base)
-    base
-  }
 
   /** NS56 — snapshot diff: the re-crawl change-feed. The "new" snapshot is
     * derived deterministically from the old one (first 20 docs dropped,
@@ -61,7 +47,8 @@ private[graft] object Gov extends Family("gov") {
     * z-layout; the oracle reads the raw table — the rewrite must be
     * answer-invisible, ns41's contract. */
   private def ns58(s: SparkSession, dir: String): DataFrame = {
-    val base = cachedDocsLayout(s, "graft_zorder", dir)(p =>
+    val base = PersistedIndex.scratch(s, "graft_zorder",
+        s"$dir/documents.parquet")(p =>
       graft.ops.Layout.zorder(
         docs(s, dir), p, Seq("n_chars", "doc_id"), numFiles = 16))
     graft.ops.Layout.read(s, base)
@@ -78,7 +65,8 @@ private[graft] object Gov extends Family("gov") {
     * (both pinned in CorpusOpsSpec). Layout is scratch-cached per content
     * fingerprint, same staleness contract as the indexes. */
   private def ns41(s: SparkSession, dir: String): DataFrame = {
-    val base = cachedDocsLayout(s, "graft_layout", dir)(p =>
+    val base = PersistedIndex.scratch(s, "graft_layout",
+        s"$dir/documents.parquet")(p =>
       graft.ops.Layout.optimize(
         docs(s, dir), p, Seq("lang"), Seq("n_chars")))
     graft.ops.Layout.read(s, base)
@@ -265,25 +253,18 @@ private[graft] object Gov extends Family("gov") {
     * RETIRED `lang` and ADDED `quality` — evolution in both
     * directions, so each generation's rows must null-fill the other's
     * column under the merged read. */
-  private def evolvedScratch(s: SparkSession, dir: String): String = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
-    val root = scratchIndexDir("graft_evolved", dir, fp)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ok = Seq("version=0", "version=1").forall(v =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$root/$v", "_SUCCESS")))
-    if (!ok) {
-      val d = docs(s, dir)
-      d.where(col("doc_id") % 2 === 0)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .write.mode("overwrite").parquet(s"$root/version=0")
-      d.where(col("doc_id") % 2 === 1)
-        .select(col("doc_id"), col("n_chars"),
-          (col("n_chars") % 5).as("quality"))
-        .write.mode("overwrite").parquet(s"$root/version=1")
+  private def evolvedScratch(s: SparkSession, dir: String): String =
+    PersistedIndex.scratch(s, "graft_evolved", s"$dir/documents.parquet") {
+      root =>
+        val d = docs(s, dir)
+        d.where(col("doc_id") % 2 === 0)
+          .select(col("doc_id"), col("lang"), col("n_chars"))
+          .write.parquet(s"$root/version=0")
+        d.where(col("doc_id") % 2 === 1)
+          .select(col("doc_id"), col("n_chars"),
+            (col("n_chars") % 5).as("quality"))
+          .write.parquet(s"$root/version=1")
     }
-    root
-  }
 
   /** NS107 — schema-evolution-tolerant read ([[graft.sources.Evolved
     * .readMerged]]): two writer generations with columns retired AND
@@ -534,11 +515,8 @@ private[graft] object Gov extends Family("gov") {
     * the same lines by concatenation and splits on `json_valid` —
     * Spark's parser and DuckDB's must agree line-for-line. */
   private def ns94(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
-    val path = scratchIndexDir("graft_jsonl", dir, fp)
-    val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = success.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(success)) {
+    val path = PersistedIndex.scratch(s, "graft_jsonl",
+        s"$dir/documents.parquet") { p =>
       // coalesce guards concat's null propagation: a NULL lang would
       // null the whole line, the text writer would emit an empty line,
       // and Spark's JSON reader silently SKIPS empty lines while the
@@ -551,7 +529,7 @@ private[graft] object Gov extends Family("gov") {
           lit("\",\"n_chars\":"), col("n_chars"), lit("}")).as("j"))
         .selectExpr("CASE WHEN doc_id % 11 = 3 " +
           "THEN substring(j, 1, length(j) - 5) ELSE j END AS raw")
-        .write.mode("overwrite").text(path)
+        .write.text(p)
     }
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("line_id",
@@ -585,15 +563,13 @@ private[graft] object Gov extends Family("gov") {
     * out-of-vocabulary floor path that self-trained ns61 never hits, and
     * `oov_frac` reports it. The oracle replays train-on-half /
     * score-on-all with the same left join + coalesce. */
-  private def ns64(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
-    val model = scratchIndexDir("graft_lm_model", dir, fp)
-    if (!graft.ops.Quality.lmModelMatches(s, model, fp))
-      graft.ops.Quality.writeLmModel(
-        docs(s, dir).where(col("doc_id") % 2 === 0), model,
-        fingerprint = Some(fp))
-    graft.ops.Quality.lmScoreFromModel(docs(s, dir), model)
-  }
+  private def ns64(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Quality.lmScoreFromModel(docs(s, dir),
+      PersistedIndex.cached(s, Kind.Lm, s"$dir/documents.parquet") {
+        (path, fp) => graft.ops.Quality.writeLmModel(
+          docs(s, dir).where(col("doc_id") % 2 === 0), path,
+          fingerprint = Some(fp))
+      })
 
   val queries: Seq[Query] = Seq(
     // ns41's oracle reads the RAW table: the layout rewrite must be

@@ -3,6 +3,8 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.PersistedIndex
+import graft.ops.PersistedIndex.Kind
 import Shared._
 
 /** Image/audio/video features and near-dup legs. */
@@ -43,17 +45,12 @@ private[graft] object Mm extends Family("mm") {
     val synth = udf((t: String) => graft.ops.BmpSynth.bmpOf(t))
     val fam = ns81Family(s, dir).select(col("doc_id"),
       synth(col("t")).as("content"))
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
-    val base = scratchIndexDir("graft_grid_idx", dir, fp)
-    if (!graft.ops.Perceptual.phashIndexMatches(s, base, fp))
-      graft.ops.Perceptual.writeGridIndex(fam.where(col("doc_id") % 5 <= 1),
-        base, graft.ops.ImageGridDecoder, fingerprint = Some(fp))
-    val work = s"${base}_tick_${java.util.UUID.randomUUID().toString.take(8)}"
-    // sidecar+data dir copy — index-format-agnostic, same as ns82
-    graft.ops.Perceptual.copyPhashIndex(s, base, work)
-    val workPath = new org.apache.hadoop.fs.Path(work)
-    workPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .deleteOnExit(workPath)
+    val work = PersistedIndex.workingCopy(s,
+      PersistedIndex.cached(s, Kind.Grid, s"$dir/documents.parquet") {
+        (path, fp) => graft.ops.Perceptual.writeGridIndex(
+          fam.where(col("doc_id") % 5 <= 1), path, graft.ops.ImageGridDecoder,
+          fingerprint = Some(fp))
+      })
     val tick1 = graft.ops.Perceptual.incrementalNewFromGridIndex(
         fam.where(col("doc_id") % 5 === 4), work, maxSad = 128L,
         expectDecoder = Some("image-grid"))
@@ -212,17 +209,12 @@ private[graft] object Mm extends Family("mm") {
     * update ran — the maintenance call is load-bearing in the output.
     * Fingerprint-keyed base index + per-run working copy (ns18 hygiene). */
   private def ns82(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
-    val base = scratchIndexDir("graft_phash_idx", dir, fp)
     val fam = ns82Family(s, dir)
-    if (!graft.ops.Perceptual.phashIndexMatches(s, base, fp))
-      graft.ops.Perceptual.writePhashIndex(
-        fam.where(col("doc_id") % 5 <= 1), base, fingerprint = Some(fp))
-    val work = s"${base}_tick_${java.util.UUID.randomUUID().toString.take(8)}"
-    graft.ops.Perceptual.copyPhashIndex(s, base, work)
-    val workPath = new org.apache.hadoop.fs.Path(work)
-    workPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .deleteOnExit(workPath)
+    val work = PersistedIndex.workingCopy(s,
+      PersistedIndex.cached(s, Kind.Phash, s"$dir/documents.parquet") {
+        (path, fp) => graft.ops.Perceptual.writePhashIndex(
+          fam.where(col("doc_id") % 5 <= 1), path, fingerprint = Some(fp))
+      })
     val tick1 = graft.ops.Perceptual.incrementalNewFromPhashIndex(
         fam.where(col("doc_id") % 5 === 4), work,
         expectDecoder = Some("byte-stride"))

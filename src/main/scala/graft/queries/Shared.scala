@@ -10,14 +10,6 @@ private[queries] object Shared {
   def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
   def embs(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
 
-  def scratchIndexDir(
-      prefix: String, dir: String, fingerprint: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir#$fingerprint".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"${System.getProperty("java.io.tmpdir")}/${prefix}_$key"
-  }
-
   val ns68Banner = "every mirror of this crawl shares this banner line"
   val ns68Footer = "boilerplate footer for "
 

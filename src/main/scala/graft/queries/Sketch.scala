@@ -3,6 +3,8 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.PersistedIndex
+import graft.ops.PersistedIndex.Kind
 import Shared._
 
 /** HLL/CMS/quantile/histogram/top-k sketches. */
@@ -41,17 +43,12 @@ private[graft] object Sketch extends Family("sketch") {
     * estimated off the updated sketch — which must equal a one-shot CMS
     * over the WHOLE corpus, so the oracle replays exactly that. */
   private def ns59(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.ops.Dedup.sourceFingerprint(s, s"$dir/documents.parquet")
-    val base = scratchIndexDir("graft_cms_sketch", dir, fp)
-    if (!graft.ops.Sketches.cmsSketchMatches(s, base, fp))
-      graft.ops.Sketches.writeCmsSketch(
-        spaceTokens(docs(s, dir).where(col("doc_id") % 5 =!= 0)), base,
-        "token", fingerprint = Some(fp))
-    val work = s"${base}_tick_${java.util.UUID.randomUUID().toString.take(8)}"
-    graft.ops.Sketches.copyCmsSketch(s, base, work)
-    val workPath = new org.apache.hadoop.fs.Path(work)
-    workPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .deleteOnExit(workPath)
+    val work = PersistedIndex.workingCopy(s,
+      PersistedIndex.cached(s, Kind.Cms, s"$dir/documents.parquet") {
+        (path, fp) => graft.ops.Sketches.writeCmsSketch(
+          spaceTokens(docs(s, dir).where(col("doc_id") % 5 =!= 0)), path,
+          "token", fingerprint = Some(fp))
+      })
     graft.ops.Sketches.updateCmsSketch(
       spaceTokens(docs(s, dir).where(col("doc_id") % 5 === 0)), work, "token")
     graft.ops.Sketches.cmsEstimateFromSketch(

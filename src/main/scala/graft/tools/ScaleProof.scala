@@ -104,7 +104,7 @@ object ScaleProof {
     // the r6/r7 failure class Verify's manifest exists for: the marker
     // records the base fingerprint, and a mismatch forces a rebuild so
     // the 1x leg and the 10x/100x legs can never read different data
-    lazy val baseFp = graft.ops.Dedup.sourceFingerprint(spark, base)
+    lazy val baseFp = graft.ops.PersistedIndex.sourceFingerprint(spark, base)
     def markerCurrent(m: java.io.File): Boolean =
       m.exists() && {
         val recorded = new String(java.nio.file.Files.readAllBytes(

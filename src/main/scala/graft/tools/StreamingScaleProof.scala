@@ -2,6 +2,7 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.ListenerBusBridge
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -145,8 +146,9 @@ object StreamingScaleProof {
       q.processAllAvailable()
       q.stop()
       val sec = (System.nanoTime() - tS) / 1e9
-      // the listener bus is async — drain before snapshotting the peaks
-      Thread.sleep(1000)
+      // progress events reach the listener through the async bus — drain
+      // it before snapshotting the peaks
+      ListenerBusBridge.drain(spark.sparkContext)
       (peaks.peakRows.get, peaks.peakBytes.get, peaks.outRows.get,
         peaks.batches.get, sec)
     }
@@ -197,7 +199,7 @@ object StreamingScaleProof {
       q.processAllAvailable()
       q.stop()
       val sec = (System.nanoTime() - tS) / 1e9
-      Thread.sleep(1000)
+      ListenerBusBridge.drain(spark.sparkContext)
       val cells = spark.table(name).where(col("active_users") > 0).count()
       (peaks.peakRows.get, peaks.peakBytes.get, cells, sec)
     }

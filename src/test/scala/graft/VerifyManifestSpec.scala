@@ -38,7 +38,7 @@ class VerifyManifestSpec extends AnyFunSuite {
   test("oracle_check accepts a manifest stamped with the live fingerprint") {
     assume(pythonReady, "python3+duckdb unavailable")
     val dir = java.nio.file.Files.createTempDirectory("graft_manifest_ok")
-    val fp = graft.ops.Dedup.sourceFingerprint(spark, s"$sf/region.parquet")
+    val fp = graft.ops.PersistedIndex.sourceFingerprint(spark, s"$sf/region.parquet")
     SparkEntry.queries("k4_limit_pinned")(spark, sf).coalesce(1)
       .write.parquet(dir.resolve("k4_limit_pinned").toString)
     writeDump(dir, fp, """{"k4_limit_pinned": "SELECT c_custkey FROM """ +
@@ -53,7 +53,7 @@ class VerifyManifestSpec extends AnyFunSuite {
   test("oracle_check fails an empty oracle set instead of passing") {
     assume(pythonReady, "python3+duckdb unavailable")
     val dir = java.nio.file.Files.createTempDirectory("graft_manifest_empty")
-    val fp = graft.ops.Dedup.sourceFingerprint(spark, s"$sf/region.parquet")
+    val fp = graft.ops.PersistedIndex.sourceFingerprint(spark, s"$sf/region.parquet")
     writeDump(dir, fp)
     val (code, out) = oracleCheck(dir)
     assert(code != 0, s"an empty oracle set passed: $out")

@@ -851,16 +851,15 @@ class CorpusOpsSpec extends AnyFunSuite {
         width = 64)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(served == oneShot)
-      // depth/width come OFF the sidecar — the serving path cannot be
+      // depth/width come OFF the meta — the serving path cannot be
       // called with mismatched parameters (width=64 was pinned at write)
-      assert(scala.io.Source.fromFile(
-        new java.io.File(path, "_cms_params.txt")).mkString.trim == "4 64")
+      assert(Sketches.cmsStoredParams(spark, path) == ((4, 64)))
       // fingerprint staleness gate
-      assert(Sketches.cmsSketchMatches(spark, path, "v1"))
-      assert(!Sketches.cmsSketchMatches(spark, path, "v2"))
+      assert(PersistedIndex.matches(spark, path, PersistedIndex.Kind.Cms, "v1"))
+      assert(!PersistedIndex.matches(spark, path, PersistedIndex.Kind.Cms, "v2"))
       // working copies serve independently of the base
       val work = path + "_w"
-      Sketches.copyCmsSketch(spark, path, work)
+      PersistedIndex.copy(spark, path, work)
       try {
         val copied = Sketches
           .cmsEstimateFromSketch(spark, work, cand, "token")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkTestSession, Tables}
+import graft.ops.PersistedIndex.Kind
 
 class DedupSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -164,9 +165,9 @@ class DedupSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1))).toSeq
       .toDF("doc_id", "text") // in-memory: any file scan in the probe plan is index-only
     val idx = s"$dir/index"
-    assert(!Dedup.minhashIndexExists(spark, idx))
+    assert(PersistedIndex.meta(spark, idx).isEmpty)
     Dedup.writeMinhashIndex(corpus, idx)
-    assert(Dedup.minhashIndexExists(spark, idx))
+    assert(PersistedIndex.meta(spark, idx).map(_.kind).contains("minhash"))
 
     val fromIndex = Dedup.incrementalNewFromIndex(fresh, idx)
     // the probe never touches the corpus parquet: every file scan in the
@@ -196,7 +197,7 @@ class DedupSpec extends AnyFunSuite {
     val base = s"$dir/index"
     Dedup.writeMinhashIndex(corpus, base)
     val work = s"$dir/index_work"
-    Dedup.copyMinhashIndex(spark, base, work)
+    PersistedIndex.copy(spark, base, work)
 
     val s1 = Dedup.incrementalNewFromIndex(b1, work).localCheckpoint(true)
     Dedup.updateMinhashIndex(s1, work)
@@ -235,12 +236,12 @@ class DedupSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_mh_upfp").toString
     val idx = s"$dir/idx"
     Dedup.writeMinhashIndex(docs.limit(20), idx, fingerprint = Some("fp-a"))
-    assert(Dedup.minhashIndexMatches(spark, idx, "fp-a"))
+    assert(PersistedIndex.matches(spark, idx, Kind.Minhash, "fp-a"))
     Dedup.updateMinhashIndex(
       Seq((7777L, "brand new accepted text")).toDF("doc_id", "text"), idx,
       fingerprint = Some("fp-b"))
-    assert(!Dedup.minhashIndexMatches(spark, idx, "fp-a"))
-    assert(Dedup.minhashIndexMatches(spark, idx, "fp-b"))
+    assert(!PersistedIndex.matches(spark, idx, Kind.Minhash, "fp-a"))
+    assert(PersistedIndex.matches(spark, idx, Kind.Minhash, "fp-b"))
     // params still pinnable after the update (family unchanged)
     Dedup.incrementalNewFromIndex(docs.limit(1), idx,
       expectParams = Some((2, 16, 4)))
@@ -273,26 +274,26 @@ class DedupSpec extends AnyFunSuite {
     val src = s"$dir/src"
     Seq((1L, "alpha beta gamma"), (2L, "delta epsilon zeta"))
       .toDF("doc_id", "text").write.parquet(src)
-    val fp1 = Dedup.sourceFingerprint(spark, src)
-    assert(fp1 == Dedup.sourceFingerprint(spark, src)) // stable for same data
+    val fp1 = PersistedIndex.sourceFingerprint(spark, src)
+    assert(fp1 == PersistedIndex.sourceFingerprint(spark, src)) // stable for same data
 
     val idx = s"$dir/idx"
-    assert(!Dedup.minhashIndexMatches(spark, idx, fp1)) // nothing there yet
+    assert(!PersistedIndex.matches(spark, idx, Kind.Minhash, fp1)) // nothing there yet
     Dedup.writeMinhashIndex(spark.read.parquet(src), idx, fingerprint = Some(fp1))
-    assert(Dedup.minhashIndexMatches(spark, idx, fp1))
+    assert(PersistedIndex.matches(spark, idx, Kind.Minhash, fp1))
 
     // rewrite the source under the SAME path: fingerprint moves (part file
     // names/sizes/mtimes change), so the stale index no longer matches
     Seq((1L, "alpha beta gamma"), (2L, "delta epsilon zeta"), (3L, "eta theta iota"))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(src)
-    val fp2 = Dedup.sourceFingerprint(spark, src)
+    val fp2 = PersistedIndex.sourceFingerprint(spark, src)
     assert(fp2 != fp1)
-    assert(!Dedup.minhashIndexMatches(spark, idx, fp2))
+    assert(!PersistedIndex.matches(spark, idx, Kind.Minhash, fp2))
     // an index without a recorded fingerprint never matches
     val bare = s"$dir/bare"
     Dedup.writeMinhashIndex(spark.read.parquet(src), bare)
-    assert(Dedup.minhashIndexExists(spark, bare))
-    assert(!Dedup.minhashIndexMatches(spark, bare, fp2))
+    assert(PersistedIndex.meta(spark, bare).map(_.kind).contains("minhash"))
+    assert(!PersistedIndex.matches(spark, bare, Kind.Minhash, fp2))
   }
 
   test("resolveClusters collapses chains to the transitive component") {
@@ -390,12 +391,8 @@ class DedupSpec extends AnyFunSuite {
         // (the wrapper would take the r16 driver fast path on this size).
         val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("doc_a", "doc_b")
         val out = Dedup.resolveClustersCounted(pairs)._1
-        // the listener bus is async — poll until the counter stabilizes
-        var prev = -1
-        var tries = 0
-        while (actions.get() != prev && tries < 50) {
-          prev = actions.get(); Thread.sleep(100); tries += 1
-        }
+        // the listener bus is async — deliver every event posted so far
+        org.apache.spark.ListenerBusBridge.drain(sc)
         out
       } finally spark.listenerManager.unregister(listener)
     // Per round exactly ONE job-running action (the `head` agg that
@@ -913,11 +910,11 @@ class SimilaritySpec extends AnyFunSuite {
     }
     Similarity.writeIvfIndex(
       corpusRows.toDF("vec_id", "embedding"), base, fingerprint = Some("fp-a"))
-    assert(Similarity.ivfIndexMatches(spark, base, "fp-a"))
-    assert(!Similarity.ivfIndexMatches(spark, base, "fp-b"))
+    assert(PersistedIndex.matches(spark, base, Kind.Ivf, "fp-a"))
+    assert(!PersistedIndex.matches(spark, base, Kind.Ivf, "fp-b"))
 
     val work = s"$dir/work"
-    Similarity.copyIvfIndex(spark, base, work)
+    PersistedIndex.copy(spark, base, work)
     Similarity.updateIvfIndex(batchRows.toDF("vec_id", "embedding"), work)
 
     val qs = corpusRows.take(5)
@@ -1021,8 +1018,8 @@ class SimilaritySpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_pq").toString
     val idx = s"$dir/idx"
     Similarity.writePqIndex(embs, idx, fingerprint = Some("fp-a"))
-    assert(Similarity.pqIndexMatches(spark, idx, "fp-a"))
-    assert(!Similarity.pqIndexMatches(spark, idx, "fp-b"))
+    assert(PersistedIndex.matches(spark, idx, Kind.Pq, "fp-a"))
+    assert(!PersistedIndex.matches(spark, idx, Kind.Pq, "fp-b"))
     val fromIdx = Similarity.pqTopKFromIndex(spark, idx, queries)
     val inMem = Similarity.pqTopK(embs, queries)
     assert(fromIdx.collect().toSeq == inMem.collect().toSeq)
@@ -1048,7 +1045,7 @@ class SimilaritySpec extends AnyFunSuite {
   test("IVF-PQ: probed-cell pruning with PQ-exact scores, partition-pruned scan") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
     Similarity.writeIvfPqIndex(embs, dir, fingerprint = Some("fp-x"))
-    assert(Similarity.pqIndexMatches(spark, dir, "fp-x"))
+    assert(PersistedIndex.matches(spark, dir, Kind.IvfPq, "fp-x"))
     val df = Similarity.ivfPqTopKFromIndex(spark, dir, queries, k = 10)
     val got = df.collect()
     assert(got.nonEmpty)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.ops.PersistedIndex.Kind
 
 /** Specs for ns81 — perceptual-hash (63-bit dHash) image near-dup:
   * bit-packing contract, decoder purity/robustness, banded-join exactness
@@ -364,8 +365,8 @@ class PerceptualSpec extends AnyFunSuite {
     val corpus = Seq((1L, a), (2L, a)).toDF("doc_id", "content")
     try {
       Perceptual.writePhashIndex(corpus, dir, fingerprint = Some("fp1"))
-      assert(Perceptual.phashIndexMatches(spark, dir, "fp1"))
-      assert(!Perceptual.phashIndexMatches(spark, dir, "other")) // staleness
+      assert(PersistedIndex.matches(spark, dir, Kind.Phash, "fp1"))
+      assert(!PersistedIndex.matches(spark, dir, Kind.Phash, "other")) // staleness
       // tick 1: b is new (far from corpus), aEdit is a near-dup -> rejected
       val t1 = Perceptual.incrementalNewFromPhashIndex(
         Seq((10L, b), (11L, aEdit)).toDF("doc_id", "content"), dir)
@@ -383,13 +384,13 @@ class PerceptualSpec extends AnyFunSuite {
       assert(before.collect().map(_.getLong(0)).toSeq == Seq(20L))
       // update with tick-1 acceptances; now bEdit is a near-dup of 10L
       Perceptual.updatePhashIndex(t1, dir, fingerprint = Some("fp2"))
-      assert(Perceptual.phashIndexMatches(spark, dir, "fp2")) // restamped
+      assert(PersistedIndex.matches(spark, dir, Kind.Phash, "fp2")) // restamped
       val after = Perceptual.incrementalNewFromPhashIndex(
         Seq((20L, bEdit), (21L, aEdit)).toDF("doc_id", "content"), dir)
       assert(after.collect().isEmpty) // both rejected -> update load-bearing
       // working copy isolates appends from the base
       val work = s"${dir}_work"
-      Perceptual.copyPhashIndex(spark, dir, work)
+      PersistedIndex.copy(spark, dir, work)
       Perceptual.updatePhashIndex(
         Seq((30L, h(bEdit))).toDF("doc_id", "phash"), work)
       assert(spark.read.parquet(s"$work/hashes").count() ==
@@ -424,7 +425,7 @@ class PerceptualSpec extends AnyFunSuite {
       Perceptual.compactPhashIndex(spark, dir)
       assert(spark.read.parquet(s"$dir/hashes").count() == 2L) // deduped
       assert(decision() == before) // decisions unchanged
-      assert(Perceptual.phashIndexMatches(spark, dir, "f")) // sidecar kept
+      assert(PersistedIndex.matches(spark, dir, Kind.Phash, "f")) // sidecar kept
       // one data file after compaction; idempotent second run
       val p = new org.apache.hadoop.fs.Path(s"$dir/hashes")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

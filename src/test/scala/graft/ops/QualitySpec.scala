@@ -81,9 +81,10 @@ class QualitySpec extends AnyFunSuite {
     // fully in-vocabulary doc: zero OOV, scored strictly below the floor
     assert(r(10L)._2 == 0.0 && r(10L)._1 < r(9L)._1)
     // build-once gate: matching fingerprint true, stale false
-    assert(Quality.lmModelMatches(spark, dir, "fp1"))
-    assert(!Quality.lmModelMatches(spark, dir, "fp2"))
-    assert(!Quality.lmModelMatches(spark, dir + "-nowhere", "fp1"))
+    assert(PersistedIndex.matches(spark, dir, PersistedIndex.Kind.Lm, "fp1"))
+    assert(!PersistedIndex.matches(spark, dir, PersistedIndex.Kind.Lm, "fp2"))
+    assert(!PersistedIndex.matches(spark, dir + "-nowhere",
+      PersistedIndex.Kind.Lm, "fp1"))
   }
 
   // ------------------------------------------------------- Q2: classifier

@@ -699,21 +699,6 @@ class WebCorpusOpsSpec extends AnyFunSuite {
     assert(a == b && a.nonEmpty)
   }
 
-  test("buildAndPublish cleans its staging dir when the build fails") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bap").toString
-    val dest = s"$dir/index"
-    intercept[RuntimeException] {
-      IndexSidecar.buildAndPublish(spark, dest) { tmp =>
-        Seq(1, 2).toDF("x").write.parquet(tmp.toString)
-        throw new RuntimeException("boom")
-      }
-    }
-    val leftovers = new java.io.File(dir).listFiles()
-      .map(_.getName).filterNot(_ == "index")
-    assert(leftovers.isEmpty, s"staging leaked: ${leftovers.toSeq}")
-    assert(!new java.io.File(dest).exists()) // nothing published either
-  }
-
   // ---- Sampling.capBySource -----------------------------------------------
 
   test("capBySource admits a hash-ordered prefix per source under the budget") {

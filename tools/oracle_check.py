@@ -19,7 +19,7 @@ sfdir, outdir = sys.argv[1], sys.argv[2]
 
 
 def source_fingerprint(path):
-    """Mirror of graft.ops.Dedup.sourceFingerprint: md5 over the sorted
+    """Mirror of graft.ops.PersistedIndex.sourceFingerprint: md5 over the sorted
     'name:size:mtime_ms' entries of the data files under path (recursive;
     _/. -prefixed marker files excluded). Java File.lastModified() is
     st_mtime_ns // 10**6 on this FS."""
