@@ -99,7 +99,7 @@ class PersistedIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(leftovers(dir).isEmpty, leftovers(dir))
   }
 
-  test("a fresh build whose body throws publishes nothing and cleans its staging") {
+  test("a throwing fresh build publishes nothing and cleans its staging") {
     val dir = tempDir("fresh")
     val dest = s"$dir/index"
     intercept[RuntimeException] {
