@@ -94,19 +94,18 @@ object Harness {
     collectors.computeIfAbsent(spark.sparkContext,
       sc => { val c = new Collector(sc); sc.addSparkListener(c); c })
 
-  /** Runs one query: times `body` alone, then frees every persistent RDD
-    * of the session (the `localCheckpoint` or `cache` blocks the query
-    * left), also when it throws, so blocks and their GC pauses do not pile
-    * onto later queries. Returns the result, its seconds and its work. */
+  /** Runs one query with the context to itself: times `body` alone, then
+    * frees what it persisted ([[graft.ops.Materialize.exclusive]]), also
+    * when it throws, so blocks and their GC pauses do not pile onto later
+    * queries. Returns the result, its seconds and its work. */
   def measure[T](spark: SparkSession)(body: => T): (T, Double, Work) = {
     val collector = work(spark)
     val before = collector.snapshot()
-    val t0 = System.nanoTime()
-    var seconds = 0.0
-    val result =
-      try { val r = body; seconds = (System.nanoTime() - t0) / 1e9; r }
-      finally spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+    val (result, seconds) = graft.ops.Materialize.exclusive(spark) {
+      val t0 = System.nanoTime()
+      val r = body
+      (r, (System.nanoTime() - t0) / 1e9)
+    }
     (result, seconds, collector.snapshot(before))
   }
 }

@@ -177,8 +177,8 @@ object Tables {
     * filter on the corrupt column of an uncached raw scan — and the
     * cache also guarantees both halves see the same parse, so a record
     * is never in both or neither). The cache holds the PARSED columns,
-    * not a second copy of the files; callers unpersist via the returned
-    * frames when done. */
+    * not a second copy of the files; the caller's Materialize scope frees
+    * it (unpersisting `good` or `bad` would free nothing). */
   def loadWithQuarantine(
       spark: SparkSession,
       path: String,
@@ -191,7 +191,8 @@ object Tables {
       "schema already claims _corrupt_record")
     val withCorrupt = StructType(schema.fields :+
       StructField("_corrupt_record", StringType, nullable = true))
-    val raw = loadAs(spark, path, format, Some(withCorrupt)).cache()
+    val raw = graft.ops.Materialize.cached(
+      loadAs(spark, path, format, Some(withCorrupt)))
     val good = raw.where(col("_corrupt_record").isNull)
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
     val bad = raw.where(col("_corrupt_record").isNotNull)

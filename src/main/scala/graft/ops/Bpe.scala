@@ -348,15 +348,15 @@ object Bpe {
     require(maxVocab > 0, "maxVocab must be positive")
     require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
     val toToks = udf((w: String) => splitChars(normalize(w, pt)))
-    var dict = docs.select(explode(preTokensCol(col("text"), pt)).as("word"))
-      .where(col("word") =!= "")
-      .groupBy("word").count()
-      .orderBy(col("count").desc, col("word"))
-      .limit(maxVocab)
-      .select(toToks(col("word")).as("toks"), col("count"))
-      .where(size(col("toks")) > 1)
-      .localCheckpoint(true)
-    var lastCp = dict
+    val snapshots = new Materialize.Latest
+    var dict = snapshots.replace(Materialize.local(
+      docs.select(explode(preTokensCol(col("text"), pt)).as("word"))
+        .where(col("word") =!= "")
+        .groupBy("word").count()
+        .orderBy(col("count").desc, col("word"))
+        .limit(maxVocab)
+        .select(toToks(col("word")).as("toks"), col("count"))
+        .where(size(col("toks")) > 1), eager = true))
     val out = Vector.newBuilder[(String, String)]
     var round = 0
     var exhausted = false
@@ -384,15 +384,12 @@ object Bpe {
         dict = dict.select(applyMerge(col("toks")).as("toks"), col("count"))
           .where(size(col("toks")) > 1)
         round += 1
-        if (round % checkpointEvery == 0 && round < numMerges) {
-          val cp = dict.localCheckpoint(true) // eager: safe to free the old one
-          Dedup.unpersistCheckpoint(lastCp)
-          lastCp = cp
-          dict = cp
-        }
+        // eager, so the old snapshot is free to go
+        if (round % checkpointEvery == 0 && round < numMerges)
+          dict = snapshots.replace(Materialize.local(dict, eager = true))
       }
     }
-    Dedup.unpersistCheckpoint(lastCp)
+    snapshots.close()
     out.result()
   }
 

@@ -80,7 +80,7 @@ object Curation {
     * Scale shape: stage-1 survivors are persisted (MEMORY_AND_DISK) —
     * they feed three consumers (LM training, LM scoring, the final
     * rollup) and re-running the scan+gates per consumer would triple the
-    * corpus reads; the harness's per-query unpersist reclaims it. (r8
+    * corpus reads; the caller's [[Materialize.scope]] frees it. (r8
     * audit, PLANS.md: the persist is load-bearing — the consumers need
     * the survivor ROWS, so an Observation-based shortcut cannot replace
     * it; both broadcast joins keep text off any doc_id shuffle.) After
@@ -108,13 +108,12 @@ object Curation {
       .withColumn("pred_lang", TextAnalysis.predFromScores(c => col(s"s_$c")))
     val (nTokens, milliSum) = Quality.inlineMilliSum(512)
     val score = Quality.sigmoidOf(4.0)
-    val s1 = lang.where(col("pred_lang") === langCode)
+    val s1 = Materialize.cached(lang.where(col("pred_lang") === langCode)
       .select(col("doc_id"), col("text"),
         nTokens.as("n_tokens"), milliSum.as("s"))
       .withColumn("score", score)
       .where(col("score") >= lit(minScore))
-      .select(col("doc_id"), col("text"), col("n_tokens"), col("score"))
-      .persist()
+      .select(col("doc_id"), col("text"), col("n_tokens"), col("score")))
     val kept = Quality.lmPerplexity(s1.select(col("doc_id"), col("text")),
         maxNll)
       .where(!col("rejected"))

@@ -71,8 +71,8 @@ object Dedup {
     * pruned, codegen'd — is the cheaper side, so the plan falls back to
     * recompute automatically. Checkpoints are LAZY (r16): constructing a
     * plan runs no job; blocks materialize inside the first consuming
-    * action and stay pinned afterwards until [[releaseCheckpoints]] is
-    * called on the consumed result (ADVICE r15 #1). */
+    * action and are freed when the caller's [[Materialize.scope]] ends —
+    * made with no scope open, they stay pinned. */
   val defaultPostingsCheckpointBytes: Long = 64L << 30
 
   /** Driver-side postings-size estimate — Catalyst's own statistics for the
@@ -161,7 +161,7 @@ object Dedup {
     val sh = {
       val raw = shingles(docs, shingleK)
       if (postingsEst <= defaultPostingsCheckpointBytes)
-        raw.localCheckpoint(false)
+        Materialize.local(raw, eager = false)
       else raw
     }
 
@@ -202,7 +202,7 @@ object Dedup {
     // shingle→16-hash pipeline a second time (the Perceptual
     // checkpoint-then-filter pattern).
     val bands0 = bandKeys(
-      if (maxBandFreq == Long.MaxValue) mh else mh.localCheckpoint(false),
+      if (maxBandFreq == Long.MaxValue) mh else Materialize.local(mh, eager = false),
       numHashes, rowsPerBand)
     val bands =
       if (maxBandFreq == Long.MaxValue) bands0
@@ -254,8 +254,8 @@ object Dedup {
     * [[defaultPostingsCheckpointBytes]]: it always has >= 2 consumers
     * (band-key explode + set join/write), and LAZY means constructing
     * the plan runs no job (ADVICE r15 #1) — blocks materialize inside
-    * the first consuming action and later consumers read them. Callers
-    * free them via [[releaseCheckpoints]]/ownership-guarded sweeps. */
+    * the first consuming action and later consumers read them. The
+    * caller's [[Materialize.scope]] frees them. */
   private def minhashPerDoc(
       docs: DataFrame, shingleK: Int, numHashes: Int,
       postingsEstimate: Option[BigInt] = None,
@@ -274,7 +274,7 @@ object Dedup {
         // probe): lazy-checkpoint under the cap so the scan+explode runs
         // once inside the consuming action
         val sh = if (postingsEst <= defaultPostingsCheckpointBytes)
-          sh0.localCheckpoint(false) else sh0
+          Materialize.local(sh0, eager = false) else sh0
         val vocab = sh.select("shingle").distinct()
           .select(col("shingle") +: hashCols: _*)
         sh.join(broadcast(vocab), Seq("shingle"))
@@ -283,7 +283,7 @@ object Dedup {
     val agg = posted.groupBy(col("doc_id"))
       .agg(mhCols.head, (mhCols.tail :+ collect_set(col("shingle")).as("s")): _*)
     if (forceCheckpoint || postingsEst <= defaultPostingsCheckpointBytes)
-      agg.localCheckpoint(false)
+      Materialize.local(agg, eager = false)
     else agg
   }
 
@@ -322,7 +322,7 @@ object Dedup {
     val exactSurvivors = {
       val raw = newDocs.join(
         corpus.select(col("text")), Seq("text"), "left_anti")
-      if (newEst <= defaultPostingsCheckpointBytes) raw.localCheckpoint(false)
+      if (newEst <= defaultPostingsCheckpointBytes) Materialize.local(raw, eager = false)
       else raw
     }
 
@@ -381,16 +381,15 @@ object Dedup {
       // ONE fused per-doc aggregation feeds both artifacts: the bands
       // write materializes the lazy checkpoint, the sets write reads its
       // blocks — one postings shuffle total where the split shape paid
-      // two (r16, VERDICT r15 #5)
-      val perDoc = minhashPerDoc(corpus, shingleK, numHashes)
-      bandKeys(perDoc, numHashes, rowsPerBand)
-        .write.mode("overwrite").parquet(s"$tmp/bands")
-      perDoc.select(col("doc_id"), col("s"))
-        .write.mode("overwrite").parquet(s"$tmp/sets")
-      // the checkpoints perDoc may hold are dead once both artifacts are
-      // written — a long-lived session must not retain them (ownership-
-      // guarded: a caller-checkpointed corpus must survive)
-      unpersistOwnCheckpoints(perDoc, corpus)
+      // two (r16, VERDICT r15 #5). Its snapshots are dead once both are
+      // written; the scope frees them and leaves a caller's corpus alone.
+      Materialize.scope {
+        val perDoc = minhashPerDoc(corpus, shingleK, numHashes)
+        bandKeys(perDoc, numHashes, rowsPerBand)
+          .write.mode("overwrite").parquet(s"$tmp/bands")
+        perDoc.select(col("doc_id"), col("s"))
+          .write.mode("overwrite").parquet(s"$tmp/sets")
+      }
       corpus.select(md5(col("text").cast("binary")).as("th")).distinct()
         .write.mode("overwrite").parquet(s"$tmp/texthash")
       Seq("shingleK" -> shingleK, "numHashes" -> numHashes,
@@ -424,34 +423,29 @@ object Dedup {
     val meta = PersistedIndex.read(spark, path, PersistedIndex.Kind.Minhash)
     val (shingleK, numHashes, rowsPerBand) = (meta.int("shingleK"),
       meta.int("numHashes"), meta.int("rowsPerBand"))
-    val accSrc = accepted.select(col("doc_id"), col("text"))
-    // a caller passing an ALREADY-materialized batch (the probe output
-    // the lifecycle naturally feeds back, eagerly checkpointed by the
-    // caller — ns18/StreamingDedup) needs no second copy: LogicalRDD /
-    // LocalRelation leaves cannot observe this method's own appends, so
-    // the self-read hazard the checkpoint exists for is absent. The
-    // batch-size estimate is taken pre-checkpoint either way.
-    val accEst = estimatedPostingsBytes(accSrc, shingleK)
-    val acc = if (preMaterialized(accSrc)) accSrc
-              else accSrc.localCheckpoint(true)
-    // force the fused frame's checkpoint even when the batch arrives as a
-    // LogicalRDD whose default stats overflow every cap: an ingest tick
-    // is tick-sized by contract (<< corpus), and without blocks the sets
-    // write would re-shuffle the postings the bands write just built
-    val perDoc = minhashPerDoc(acc, shingleK, numHashes,
-      postingsEstimate = Some(accEst), forceCheckpoint = true)
-    bandKeys(perDoc, numHashes, rowsPerBand)
-      .write.mode("append").parquet(s"$path/bands")
-    perDoc.select(col("doc_id"), col("s"))
-      .write.mode("append").parquet(s"$path/sets")
-    acc.select(md5(col("text").cast("binary")).as("th")).distinct()
-      .write.mode("append").parquet(s"$path/texthash")
+    // frees what this method made; a caller's snapshot stays (ns18 unions it)
+    Materialize.scope {
+      val accSrc = accepted.select(col("doc_id"), col("text"))
+      // an already-materialized batch (the probe output ns18 and
+      // StreamingDedup feed back) cannot see this method's appends, so it
+      // needs no second copy; the size estimate is taken before either way
+      val accEst = estimatedPostingsBytes(accSrc, shingleK)
+      val acc = Materialize.fixed(accSrc)
+      // force the fused frame's checkpoint even when the batch arrives as a
+      // LogicalRDD whose default stats overflow every cap: an ingest tick
+      // is tick-sized by contract (<< corpus), and without blocks the sets
+      // write would re-shuffle the postings the bands write just built
+      val perDoc = minhashPerDoc(acc, shingleK, numHashes,
+        postingsEstimate = Some(accEst), forceCheckpoint = true)
+      bandKeys(perDoc, numHashes, rowsPerBand)
+        .write.mode("append").parquet(s"$path/bands")
+      perDoc.select(col("doc_id"), col("s"))
+        .write.mode("append").parquet(s"$path/sets")
+      acc.select(md5(col("text").cast("binary")).as("th")).distinct()
+        .write.mode("append").parquet(s"$path/texthash")
+    }
     fingerprint.foreach(
       PersistedIndex.restamp(spark, path, PersistedIndex.Kind.Minhash, _))
-    // frees everything this method materialized — perDoc's blocks plus
-    // acc's when acc is our own checkpoint (a pre-materialized batch
-    // belongs to the CALLER, who may still consume it — ns18's union)
-    unpersistOwnCheckpoints(perDoc, accepted)
   }
 
   /** D6 (index probe) — [[incrementalNew]] against a persisted
@@ -493,7 +487,7 @@ object Dedup {
         .join(spark.read.parquet(s"$path/texthash"),
           col("__th") === col("th"), "left_anti")
         .drop("__th")
-      if (newEst <= defaultPostingsCheckpointBytes) raw.localCheckpoint(false)
+      if (newEst <= defaultPostingsCheckpointBytes) Materialize.local(raw, eager = false)
       else raw
     }
 
@@ -603,7 +597,7 @@ object Dedup {
       broadcastPostings: Option[Boolean] = None,
       broadcastThresholdBytes: Long = defaultBroadcastBytes): DataFrame = {
     val sh0raw = shingles(docs, shingleK)
-    val sh0 = if (reuseShingles) sh0raw.localCheckpoint(false) else sh0raw
+    val sh0 = if (reuseShingles) Materialize.local(sh0raw, eager = false) else sh0raw
     val sh =
       if (maxDocFreq == Long.MaxValue) sh0
       else {
@@ -1026,7 +1020,7 @@ object Dedup {
     val edges = edgeListOf(pairs)
     if (edges.count() <= driverResolveMaxEdges) {
       val labels = driverUnionFind(edges)
-      unpersistCheckpoint(edges)
+      Materialize.release(edges)
       labels
     } else loopFromEdges(edges, maxIterations, hops)._1
   }
@@ -1053,7 +1047,7 @@ object Dedup {
     * setup shuffle bought nothing and quadrupled task counts; the
     * per-round edges shuffle stays, priced at one exchange of the pair
     * graph per round) */
-  private def edgeListOf(pairs: DataFrame): DataFrame = pairs
+  private def edgeListOf(pairs: DataFrame): DataFrame = Materialize.local(pairs
     .select(col("doc_a").cast("long").as("a"),
       col("doc_b").cast("long").as("b"))
     .select(explode(array(
@@ -1062,8 +1056,7 @@ object Dedup {
       struct(col("a").as("src"), col("a").as("dst")),
       struct(col("b").as("src"), col("b").as("dst")))).as("e"))
     .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    .distinct()
-    .localCheckpoint(false)
+    .distinct(), eager = false)
 
   /** In-driver union-find over a gate-small checkpointed edge list:
     * union-by-min (the smaller root adopts, so every root IS its
@@ -1108,7 +1101,6 @@ object Dedup {
     require(hops >= 1, s"hops must be >= 1, got $hops")
     var labels = edges.where(col("src") === col("dst"))
       .select(col("src").as("doc_id"), col("src").as("cluster"))
-    var labelsIsCheckpoint = false // round-0 labels share the edges blocks
     // Convergence detection (r15): labels are per-node monotonically
     // non-increasing (relax takes min over self + neighbors; each hop
     // takes least of a composition), so Σ labels strictly decreases
@@ -1117,6 +1109,7 @@ object Dedup {
     // the round materializes anyway, deleting the old per-round
     // new-vs-old labels join. decimal(38,0): 1e8 docs × 1e18 max id
     // stays exact where a long sum would wrap.
+    val rounds = new Materialize.Latest
     var prevSum: java.math.BigDecimal = null
     var converged = false
     var it = 0
@@ -1135,7 +1128,7 @@ object Dedup {
       while (h < hops) {
         val src =
           if (h == 0) hopped
-          else { val cp = hopped.localCheckpoint(false); hopCps += cp; cp }
+          else { val cp = Materialize.local(hopped, eager = false); hopCps += cp; cp }
         hopped = src.as("x")
           .join(src.as("y"), col("x.cluster") === col("y.doc_id"))
           .select(col("x.doc_id"),
@@ -1151,7 +1144,7 @@ object Dedup {
       // round-0 labels are the identity — i.e. relax applied to identity
       // returned identity, the fixpoint. Σdoc_id rides the same job for
       // free; `cnt` catches the empty graph.
-      val next = hopped.localCheckpoint(false)
+      val next = Materialize.local(hopped, eager = false)
       val row = next.agg(
         coalesce(sum(col("cluster").cast("decimal(38,0)")),
           lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)")),
@@ -1166,77 +1159,17 @@ object Dedup {
       prevSum = sum0
       // the superseded round's label blocks are dead the moment `next` is
       // materialized — at 100M docs / ~27 rounds, keeping them would pin
-      // ~27 copies of the label table. Hop intermediates likewise.
-      // (round-0 labels are a view over the edge blocks — not ours to free)
-      if (labelsIsCheckpoint) unpersistCheckpoint(labels)
-      hopCps.foreach(unpersistCheckpoint)
-      labels = next
-      labelsIsCheckpoint = true
+      // ~27 copies of the label table. Round-0 labels are a view over the
+      // edge blocks, so `rounds` starts empty. Hop snapshots are freed
+      // here too, not as they are superseded: `next` reads them until
+      // its aggregate has run.
+      labels = rounds.replace(next)
+      hopCps.foreach(Materialize.release)
       it += 1
     }
     require(converged, s"resolveClusters did not converge in $maxIterations rounds")
-    unpersistCheckpoint(edges)
+    Materialize.release(edges)
     (labels, it)
-  }
-
-  /** True when every leaf of `df`'s plan is already-materialized data
-    * (LogicalRDD / LocalRelation): such a plan cannot observe later file
-    * appends, so the write-under-self-read snapshot checkpoint the index
-    * updaters otherwise take is unnecessary — and the blocks belong to
-    * whoever materialized them, not the updater. */
-  private[graft] def preMaterialized(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.collectLeaves().forall {
-      case _: org.apache.spark.sql.execution.LogicalRDD => true
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        true
-      case _ => false
-    }
-
-  /** Drop the checkpoint blocks behind a localCheckpoint'ed frame (or a
-    * projection of one). Blocking so callers can bound live block count
-    * deterministically; the wait is a block-removal RPC, trivial next to a
-    * round's join work. */
-  private[graft] def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = true)
-      case _ => ()
-    }
-
-  /** PUBLIC release hook for the checkpoint blocks a dedup plan pins
-    * (ADVICE r15 #1). [[minhashLsh]], [[ngramJaccard]], [[incrementalNew]]
-    * and the index probes materialize their shingle postings ONCE (lazy
-    * `localCheckpoint`, under [[defaultPostingsCheckpointBytes]]) inside
-    * the first action over the returned frame — later consumers read
-    * those executor blocks instead of recomputing the scan→explode
-    * pipeline. graft's own mains sweep them (`Harness.measure` after
-    * every query; per-write frees in the index builders), but a
-    * long-lived EXTERNAL session that constructs these plans repeatedly
-    * pins memory+disk until the blocks are GC'd. Call this after the
-    * result has been fully consumed: it frees every checkpoint leaf the
-    * result's plan owns, leaving any checkpoint reachable from `inputs`
-    * (a caller-checkpointed corpus) alone. Safe to call more than once —
-    * but a localCheckpoint's lineage is truncated, so the frame CANNOT be
-    * re-executed after release: call only when done with it. */
-  def releaseCheckpoints(result: DataFrame, inputs: DataFrame*): Unit =
-    unpersistOwnCheckpoints(result, inputs: _*)
-
-  /** [[unpersistCheckpoint]] restricted to checkpoints `df` OWNS: leaves
-    * also reachable from any of `inputs` are the caller's (a caller-
-    * checkpointed corpus fed into an index build must survive the build)
-    * and are left alone. */
-  private[graft] def unpersistOwnCheckpoints(
-      df: DataFrame, inputs: DataFrame*): Unit = {
-    val callerOwned = inputs.flatMap(
-      _.queryExecution.analyzed.collectLeaves().collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-      }).toSet
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD
-          if !callerOwned(lr.rdd.id) =>
-        lr.rdd.unpersist(blocking = true)
-      case _ => ()
-    }
   }
 
   /** D7 (decision surface) — the surviving corpus after near-dup collapse:
@@ -1274,15 +1207,15 @@ object Dedup {
   def sourceOverlap(
       docs: DataFrame, shingleK: Int = 3,
       groupCol: String = "source"): DataFrame = {
-    val sg = docs
+    val sg = Materialize.local(docs
       .select(col(groupCol).as("src"), split(col("text"), " ").as("w"))
       .select(col("src"), explode(
         when(size(col("w")) >= shingleK,
           expr(s"transform(sequence(0, size(w) - $shingleK), " +
             s"i -> concat_ws(' ', slice(w, i + 1, $shingleK)))"))
           .otherwise(expr("array()"))).as("shingle"))
-      .distinct()
-      .localCheckpoint(false) // three consumers: pair probe, build, sizes
+      .distinct(), eager = false)
+      // three consumers: pair probe, build, sizes
     val sizes = sg.groupBy(col("src")).agg(count(lit(1)).as("n"))
     val shared = sg.as("a").join(sg.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.src") < col("b.src"))
@@ -1330,9 +1263,8 @@ object Dedup {
     val centroids = Similarity.centroidVectors(corpus, numCentroids)
     // three consumers (pair probe, pair build, final left join): checkpoint
     // so the C-dot-product assignment scan runs once, not per consumer
-    val assigned = corpus.withColumn("cell",
-        array_max(Similarity.cellScores(col("v"), centroids)).getField("c"))
-      .localCheckpoint(false)
+    val assigned = Materialize.local(corpus.withColumn("cell",
+        array_max(Similarity.cellScores(col("v"), centroids)).getField("c")), eager = false)
     // bool_or over the per-pair predicate: one row out per vector that has
     // any qualifying lower-id cellmate — no DISTINCT over pair output
     val dups = assigned.as("a").join(assigned.as("b"),

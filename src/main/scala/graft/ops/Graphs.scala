@@ -89,12 +89,10 @@ object Graphs {
     // materializes — free them (the resolveClusters discipline) so a
     // long-lived session doesn't pin one node-table copy per 8 rounds;
     // the FINAL checkpoint stays live inside the returned plan
-    var lastCp: Option[DataFrame] = None
+    val snapshots = new Materialize.Latest
     while (i < iterations && !converged) {
       if (i > 0 && i % checkpointEvery == 0) {
-        ranks = ranks.localCheckpoint(true)
-        lastCp.foreach(Dedup.unpersistCheckpoint)
-        lastCp = Some(ranks)
+        ranks = snapshots.replace(Materialize.local(ranks, eager = true))
         val next = step(ranks)
         val prev = ranks.select(col("node").as("p_node"),
           col("rank").as("p_rank"))
@@ -139,12 +137,11 @@ object Graphs {
     * the dedup/degree work runs ONCE and every join reads the
     * materialized edge list. */
   def triangleCounts(edges: DataFrame): DataFrame = {
-    val und = edges
+    val und = Materialize.local(edges
       .select(least(col("src"), col("dst")).cast("long").as("a"),
         greatest(col("src"), col("dst")).cast("long").as("b"))
       .where(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct(), eager = true)
     val nodes = und.select(col("a").as("node"))
       .unionByName(und.select(col("b").as("node"))).distinct()
     val deg = und.select(col("a").as("node"))
@@ -156,13 +153,12 @@ object Graphs {
         .withColumnRenamed("deg", "deg_a"), "a")
       .join(deg.withColumnRenamed("node", "b")
         .withColumnRenamed("deg", "deg_b"), "b")
-    val oriented = withDeg.select(
+    val oriented = Materialize.local(withDeg.select(
       when(col("deg_a") < col("deg_b") ||
         (col("deg_a") === col("deg_b") && col("a") < col("b")),
         struct(col("a").as("u"), col("b").as("v")))
         .otherwise(struct(col("b").as("u"), col("a").as("v"))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .localCheckpoint(true)
+      .select(col("e.u").as("u"), col("e.v").as("v")), eager = true)
     // wedges at the out-degree-bounded apex, closed against oriented edges
     val wedges = oriented.as("x").join(oriented.as("y"),
         col("x.u") === col("y.u") && col("x.v") < col("y.v"))
@@ -218,12 +214,12 @@ object Graphs {
     // materializes the blocks and returns the open-ancestor count — the
     // old shape paid a separate eager-checkpoint job plus a limit-probe
     // job per round. count(anc) counts non-NULL ancs: 0 IS convergence.
-    var st = nodes
+    val snapshots = new Materialize.Latest
+    var st = snapshots.replace(Materialize.local(nodes
       .select(col(idCol).cast("long").as("id"),
         col(parentCol).cast("long").as("anc"),
         col(idCol).cast("string").as("path"),
-        when(col(parentCol).isNull, 0L).otherwise(1L).as("depth"))
-      .localCheckpoint(false)
+        when(col(parentCol).isNull, 0L).otherwise(1L).as("depth")), eager = false))
     var rounds = 0
     var open = st.agg(count(col("anc"))).head.getLong(0) > 0L
     while (open) {
@@ -249,7 +245,7 @@ object Graphs {
       val cols = if (withFlag)
         baseCols :+ (col("anc").isNotNull && col("__aid").isNull).as("__d")
       else baseCols
-      val next = joined.select(cols: _*).localCheckpoint(false)
+      val next = Materialize.local(joined.select(cols: _*), eager = false)
       val row =
         if (withFlag)
           next.agg(count(col("anc")), sum(col("__d").cast("long"))).head
@@ -259,9 +255,9 @@ object Graphs {
           s"dangling parent pointers in '$parentCol' (not a forest)")
       open = row.getLong(0) > 0L
       // the superseded round's checkpoint is dead the moment `next`
-      // materializes — free it (the pagerankInt lastCp discipline), or a
+      // materializes — free it (the pagerankInt discipline), or a
       // 2^20-deep forest pins 21 full state copies for the session
-      Dedup.unpersistCheckpoint(st)
+      snapshots.replace(next)
       st = if (withFlag) next.drop("__d") else next
       rounds += 1
     }

@@ -196,18 +196,15 @@ object Joins {
       pmod(xxhash64(lit(h), col(key).cast("string")), lit(numBits.toLong))
     // ONE dim scan emits all numHashes positions per key (a union of
     // per-hash scans would read the large dim side numHashes times);
-    // cached because it feeds numHashes broadcasts. persist, NOT an eager
-    // localCheckpoint: plan construction must not run a job (callers build
-    // plans they may never execute), and checkpoint blocks are
-    // unrecoverable on executor loss while a persisted plan recomputes
-    // from lineage. Concurrent first-use broadcasts can race the cache
-    // fill and duplicate the dim scan once — bounded, and still one scan
-    // per broadcast in the worst case vs numHashes scans uncached.
-    val bits = dim.where(col(key).isNotNull)
+    // cached because it feeds numHashes broadcasts, NOT an eager local
+    // snapshot: plan construction must not run a job, and a cached plan
+    // recomputes a lost block. The caller's scope frees it. Concurrent
+    // first-use broadcasts can race the cache fill and duplicate the dim
+    // scan once — still at most one scan per broadcast.
+    val bits = Materialize.cached(dim.where(col(key).isNotNull)
       .select(explode(array((0 until numHashes).map(position): _*))
         .as("_bloom_bit"))
-      .distinct()
-      .persist()
+      .distinct())
     // one broadcast-hash membership probe per hash function; a fact row
     // must survive all of them (Bloom AND-semantics), so the probes chain
     // into a single fact-scan pipeline — the fact side never shuffles

@@ -439,11 +439,10 @@ object Layout {
     val spark = df.sparkSession
     val n = if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
-    val sorted = df
+    val sorted = Materialize.local(df
       .repartitionByRange(n, orderCols: _*)
       .sortWithinPartitions(orderCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
+      .withColumn("__pid", spark_partition_id()), eager = true)
     // bounded collect: one row per non-empty partition
     val counts = sorted.groupBy(col("__pid")).agg(count(lit(1)).as("cnt"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)

@@ -230,7 +230,7 @@ object Perceptual {
     // side, and when that lineage is the dhash63 decode pass the blobs
     // decode TWICE (the ngramJaccard reuseShingles move; 16 bytes/row
     // keeps the checkpoint corpus-cheap)
-    val hs = if (reuseHashes) hashes.localCheckpoint(false) else hashes
+    val hs = if (reuseHashes) Materialize.local(hashes, eager = false) else hashes
     val probe = dropHotBuckets(bandKeys(hs, bands), maxBandFreq)
     probe.as("a").join(probe.as("b"),
         col("a.p") === col("b.p") && col("a.chunk") === col("b.chunk") &&
@@ -289,7 +289,7 @@ object Perceptual {
       bands: Int = 4,
       maxSad: Long = 720L,
       maxBandFreq: Long = Long.MaxValue): DataFrame = {
-    val sig = gridHashes(media, decoder).localCheckpoint(false)
+    val sig = Materialize.local(gridHashes(media, decoder), eager = false)
     val cand = nearDupPairsCore(sig.select(col("doc_id"), col("phash")),
       maxHamming, bands, maxBandFreq, reuseHashes = false)
     val grids = sig.select(col("doc_id"), col("grid"))
@@ -416,10 +416,10 @@ object Perceptual {
       cols: Seq[String], fingerprint: Option[String]): Unit = {
     val spark = accepted.sparkSession
     PersistedIndex.read(spark, path, kind)
-    val accSrc = accepted.select(cols.map(col): _*)
-    val acc = if (Dedup.preMaterialized(accSrc)) accSrc
-              else accSrc.localCheckpoint(true)
-    acc.write.mode("append").parquet(s"$path/hashes")
+    Materialize.scope {
+      Materialize.fixed(accepted.select(cols.map(col): _*))
+        .write.mode("append").parquet(s"$path/hashes")
+    }
     fingerprint.foreach(PersistedIndex.restamp(spark, path, kind, _))
   }
 
@@ -442,12 +442,12 @@ object Perceptual {
     PersistedIndex.read(spark, path, Kind.Phash)
     // snapshot (eager) before any rewrite: the plan reads the very files
     // the publish replaces
-    val snap = spark.read.parquet(s"$path/hashes")
-      .distinct().localCheckpoint(true)
+    val snap = Materialize.local(
+      spark.read.parquet(s"$path/hashes").distinct(), eager = true)
     try PersistedIndex.publish(spark,
         new org.apache.hadoop.fs.Path(s"$path/hashes")) { tmp =>
       snap.coalesce(numFiles).write.mode("overwrite").parquet(tmp.toString)
-    } finally Dedup.unpersistCheckpoint(snap)
+    } finally Materialize.release(snap)
   }
 
   /** Index probe — which docs of `newMedia` are NOT a near-dup (hamming ≤
@@ -471,7 +471,7 @@ object Perceptual {
     val spark = newMedia.sparkSession
     val decoder = indexDecoder(spark, path, Kind.Phash, expectDecoder)
     // one decode pass, reused by the band join and the final anti-join
-    val newHashes = dhash63(newMedia, decoder).localCheckpoint(false)
+    val newHashes = Materialize.local(dhash63(newMedia, decoder), eager = false)
     val corpusHashes = spark.read.parquet(s"$path/hashes")
     val dupIds = bandCandidates(newHashes, corpusHashes,
         maxHamming, bands, maxBandFreq)
@@ -579,7 +579,7 @@ object Perceptual {
     val spark = newMedia.sparkSession
     val decoder = indexDecoder(spark, path, Kind.Grid, expectDecoder)
     // one decode pass, shared by banding, verify (sigA) and the anti-join
-    val newSig = gridHashes(newMedia, decoder).localCheckpoint(false)
+    val newSig = Materialize.local(gridHashes(newMedia, decoder), eager = false)
     val corpus = spark.read.parquet(s"$path/hashes")
     val cand = bandCandidatePairs(
       newSig.select(col("doc_id"), col("phash")),

@@ -68,8 +68,7 @@ object Quality {
     // LAZY-checkpointed: the count table feeds the totals fetch AND the
     // scoring join — without blocks each execution ran the full
     // wordcount twice (once under .head(), again inside the final plan)
-    val counts = toks.groupBy("tok").agg(count(lit(1)).as("c"))
-      .localCheckpoint(false)
+    val counts = Materialize.local(toks.groupBy("tok").agg(count(lit(1)).as("c")), eager = false)
     // bounded driver fetch: exactly two scalars (total tokens N, vocab V).
     // sum() over an EMPTY count table is null (an empty input corpus —
     // e.g. a pipeline stage that filtered everything out — must yield an

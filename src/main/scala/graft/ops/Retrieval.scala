@@ -118,14 +118,13 @@ object Retrieval {
     // token, which beats any interpreted lambda. LAZY-checkpointed:
     // two consumers (df + the score join) would otherwise re-run the
     // corpus pass.
-    val tf = docs
+    val tf = Materialize.local(docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .select(col("doc_id"), size(col("w")).as("dl"),
         explode(col("w")).as("term"))
       .where(col("term").isin(queryTerms: _*))
       .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-      .localCheckpoint(false)
+      .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl")), eager = false)
     // df: at most |Q| rows — broadcast back onto the postings
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val avgdlMilli = expr("(total_len * 1000) DIV n_docs")
@@ -166,19 +165,17 @@ object Retrieval {
     // query vocabulary: query-cardinality, LAZY-checkpointed — it feeds
     // the pre-filter vocab AND the per-query fan-out join, and each
     // branch would otherwise re-run the explode + distinct exchange
-    val qt = queries
+    val qt = Materialize.local(queries
       .select(col("query_id"), explode(col("terms")).as("term"))
-      .where(col("term") =!= "").distinct()
-      .localCheckpoint(false)
+      .where(col("term") =!= "").distinct(), eager = false)
     val vocab = qt.select(col("term")).distinct()
     // per-doc (term, tf) born in-row (see [[inRowTf]]): the broadcast
     // vocab join filters the per-doc-distinct runs map-side, and the
     // frame is already unique on (doc_id, term) — the old explode +
     // groupBy(doc_id, term) exchange (the suite's largest) is gone.
     // LAZY-checkpointed: two consumers (df + the score join).
-    val tf = inRowTf(docs)
-      .join(broadcast(vocab), Seq("term"))
-      .localCheckpoint(false)
+    val tf = Materialize.local(inRowTf(docs)
+      .join(broadcast(vocab), Seq("term")), eager = false)
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val avgdlMilli = expr("(total_len * 1000) DIV n_docs")
     val idfMilli =

@@ -252,7 +252,7 @@ object Similarity {
     // one checkpoint, `iterations` consumers (each Lloyd pass re-scans)
     val corpus0 = normalizedCorpus(embeddings)
     val corpus =
-      if (iterations > 0) corpus0.localCheckpoint(true) else corpus0
+      if (iterations > 0) Materialize.local(corpus0, eager = true) else corpus0
     var cents = centroidVectors(corpus, numCentroids)
     val dims = if (cents.isEmpty) 0 else cents.head._2.length
     for (_ <- 1 to iterations) {
@@ -283,7 +283,7 @@ object Similarity {
         }
       }
     }
-    if (iterations > 0) graft.ops.Dedup.unpersistCheckpoint(corpus)
+    if (iterations > 0) Materialize.release(corpus)
     cents
   }
 

@@ -356,7 +356,7 @@ object TextAnalysis {
           "cast(array() as array<struct<term:string,tf:bigint>>)"))
           .otherwise(runs)).as("tc"))
       .select(col("doc_id"), col("tc.term").as("term"), col("tc.tf").as("tf"))
-    val tf = if (reuseTf) tf0.localCheckpoint(false) else tf0
+    val tf = if (reuseTf) Materialize.local(tf0, eager = false) else tf0
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
     val idf = (length(bin(expr("n_docs DIV df"))) - 1).cast("long")
@@ -496,12 +496,11 @@ object TextAnalysis {
     // materialize inside the first consuming action (no construction
     // job); the ctx/cont re-aggregations then really do run over the
     // bigram-vocabulary pair table, as the contract above states.
-    val pair = docs
+    val pair = Materialize.local(docs
       .select(split(col("text"), " ").as("__w"))
       .select(explode(bg).as("p"))
       .select(col("p.w1"), col("p.w2"))
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_pair"))
-      .localCheckpoint(false)
+      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_pair")), eager = false)
     val ctx = pair.groupBy(col("w1")).agg(sum(col("n_pair")).as("n_ctx"))
     val cont = pair.groupBy(col("w2")).agg(count(lit(1)).as("n_cont"))
     pair.join(ctx, Seq("w1")).join(cont, Seq("w2"))

@@ -119,7 +119,7 @@ final class SubsetPlanner(
           val parentPlan =
             if (consistentParents && tbl != name && byName.contains(tbl))
               Some(memo.getOrElseUpdate(s"materialized|$tbl",
-                plan(byName(tbl), memo).localCheckpoint(true)).as(tbl))
+                graft.ops.Materialize.local(plan(byName(tbl), memo), eager = true)).as(tbl))
             else None
           parentPlan.map(df =>
             if (tbl == predAt && predicate.isDefined) df.where(predicate.get)

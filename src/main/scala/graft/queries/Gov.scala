@@ -3,7 +3,7 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.PersistedIndex
+import graft.ops.{Materialize, PersistedIndex}
 import graft.ops.PersistedIndex.Kind
 import Shared._
 
@@ -157,7 +157,7 @@ private[graft] object Gov extends Family("gov") {
     // synthesis (whose max-shift probe executes v1's whole plan), so
     // without blocks the scan tree doubles. v2 has ONE consumer here —
     // checkpointing it was measured as pure materialization cost
-    val v1 = snapshotTick(d, cols).localCheckpoint(false)
+    val v1 = Materialize.local(snapshotTick(d, cols), eager = false)
     val v2 = snapshotTick(v1, cols)
     graft.ops.Versioning.scdHistory(Seq(d, v1, v2), "doc_id", cols)
   }
@@ -177,11 +177,11 @@ private[graft] object Gov extends Family("gov") {
     // tick's synthesis AND a history/merge consumer); the history too:
     // the merge reads it twice (closed pass-through + current runs), and
     // unmaterialized that re-runs the three-snapshot window per branch
-    val v1 = snapshotTick(d, cols).localCheckpoint(false)
-    val v2 = snapshotTick(v1, cols).localCheckpoint(false)
+    val v1 = Materialize.local(snapshotTick(d, cols), eager = false)
+    val v2 = Materialize.local(snapshotTick(v1, cols), eager = false)
     val v3 = snapshotTick(v2, cols)
-    val h = graft.ops.Versioning.scdHistory(Seq(d, v1, v2), "doc_id", cols)
-      .localCheckpoint(false)
+    val h = Materialize.local(
+      graft.ops.Versioning.scdHistory(Seq(d, v1, v2), "doc_id", cols), eager = false)
     graft.ops.Versioning.scdMergeTick(h, v3, 3L, "doc_id", cols)
   }
 
@@ -421,7 +421,7 @@ private[graft] object Gov extends Family("gov") {
   private def ns149(s: SparkSession, dir: String): DataFrame = {
     val base = docs(s, dir).select(col("doc_id"), col("text"))
     // parse + fetch read the SAME materialized blobs
-    val warcs = warcFixture(base).localCheckpoint(true)
+    val warcs = Materialize.local(warcFixture(base), eager = true)
     val index = graft.ops.Warc.records(warcs)
       .select(col("warc_id"), col("target_uri"), col("payload_off"),
         col("content_length"))
@@ -457,7 +457,7 @@ private[graft] object Gov extends Family("gov") {
         lit("<html><body><h1>Doc "), col("doc_id"),
         lit("</h1><p>"), coalesce(col("text"), lit("")),
         lit("</p></body></html>")).as("text"))
-    val warcs = warcFixture(http).localCheckpoint(true)
+    val warcs = Materialize.local(warcFixture(http), eager = true)
     val payloads = graft.ops.Warc.records(warcs)
       .join(warcs, "warc_id")
       .select(
@@ -493,8 +493,8 @@ private[graft] object Gov extends Family("gov") {
     val d = docs(s, dir)
     // tick LAZY-checkpointed: the maintenance consumes the new snapshot
     // twice (fp diff + the added/changed-new tokenization probe)
-    val v1 = snapshotTick(d, Seq("text", "lang", "source", "n_chars"))
-      .localCheckpoint(false)
+    val v1 = Materialize.local(
+      snapshotTick(d, Seq("text", "lang", "source", "n_chars")), eager = false)
     graft.ops.Versioning.maintainTokenCounts(
       d, v1, graft.ops.Versioning.tokenCountsOf(d))
   }

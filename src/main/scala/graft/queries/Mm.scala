@@ -3,7 +3,7 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.PersistedIndex
+import graft.ops.{Materialize, PersistedIndex}
 import graft.ops.PersistedIndex.Kind
 import Shared._
 
@@ -51,13 +51,12 @@ private[graft] object Mm extends Family("mm") {
           fam.where(col("doc_id") % 5 <= 1), path, graft.ops.ImageGridDecoder,
           fingerprint = Some(fp))
       })
-    val tick1 = graft.ops.Perceptual.incrementalNewFromGridIndex(
+    // lazy snapshot: the update's first append fills it in the same job
+    // chain; its file list, fixed at plan construction, misses the appends
+    val tick1 = Materialize.local(
+      graft.ops.Perceptual.incrementalNewFromGridIndex(
         fam.where(col("doc_id") % 5 === 4), work, maxSad = 128L,
-        expectDecoder = Some("image-grid"))
-      .localCheckpoint(false) // lazy snapshot: the listing is pinned at plan
-      // construction, so the update's FIRST append action materializes the
-      // blocks (one fused job chain) instead of a separate eager pass; the
-      // appended files are never in this plan's file list
+        expectDecoder = Some("image-grid")), eager = false)
     graft.ops.Perceptual.updateGridIndex(tick1, work)
     val tick2 = graft.ops.Perceptual.incrementalNewFromGridIndex(
       fam.where(col("doc_id") % 5 === 2 || col("doc_id") % 5 === 3), work,
@@ -215,13 +214,12 @@ private[graft] object Mm extends Family("mm") {
         (path, fp) => graft.ops.Perceptual.writePhashIndex(
           fam.where(col("doc_id") % 5 <= 1), path, fingerprint = Some(fp))
       })
-    val tick1 = graft.ops.Perceptual.incrementalNewFromPhashIndex(
+    // lazy snapshot: the update's first append fills it in the same job
+    // chain; its file list, fixed at plan construction, misses the appends
+    val tick1 = Materialize.local(
+      graft.ops.Perceptual.incrementalNewFromPhashIndex(
         fam.where(col("doc_id") % 5 === 4), work,
-        expectDecoder = Some("byte-stride"))
-      .localCheckpoint(false) // lazy snapshot: the listing is pinned at plan
-      // construction, so the update's FIRST append action materializes the
-      // blocks (one fused job chain) instead of a separate eager pass; the
-      // appended files are never in this plan's file list
+        expectDecoder = Some("byte-stride")), eager = false)
     graft.ops.Perceptual.updatePhashIndex(tick1, work)
     val tick2 = graft.ops.Perceptual.incrementalNewFromPhashIndex(
       fam.where(col("doc_id") % 5 === 2 || col("doc_id") % 5 === 3), work)

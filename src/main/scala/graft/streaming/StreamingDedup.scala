@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
 
+import graft.ops.Materialize
+
 /** Streaming counterparts of the batch dedup/text operators — the
   * training-data-pipeline shapes that must run incrementally at ingest
   * time (SURVEY §7.2 M6 extension; the reference is strictly batch).
@@ -82,22 +84,13 @@ object StreamingDedup {
     newDocs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // snapshot before the append: the survivor plan reads the same
-        // index files the append rewrites
-        val plan = graft.ops.Dedup
-          .incrementalNewFromIndex(batch.toDF(), indexPath)
-        val survivors = plan.localCheckpoint(true)
-        // Free only the checkpoints the probe plan OWNS: the micro-batch
-        // frame is itself a LogicalRDD (the stream's own source RDD, not
-        // ours to unpersist), so the blanket unpersistCheckpoint would
-        // touch it — ownership-guard against the batch (ADVICE r15 #2).
-        // Estimate reality: a micro-batch LogicalRDD reports the
-        // conservative default sizeInBytes, so incrementalNewFromIndex's
-        // checkpoint/broadcast fast paths never fire here and the probe
-        // keeps the recompute plan — this call is then a no-op, kept as
-        // the guard for any future plan that does checkpoint.
-        graft.ops.Dedup.unpersistOwnCheckpoints(plan, batch.toDF())
-        try {
+        // frees the batch's snapshots, so a forever-running query does
+        // not retain a copy of every accepted batch
+        Materialize.scope {
+          // snapshot before the append: the survivor plan reads the same
+          // index files the append rewrites
+          val survivors = Materialize.local(graft.ops.Dedup
+            .incrementalNewFromIndex(batch.toDF(), indexPath), eager = true)
           if (!survivors.isEmpty) {
             // sink BEFORE index: a crash between the two re-accepts the
             // batch on replay (duplicate sink rows, keyed-idempotent
@@ -106,11 +99,7 @@ object StreamingDedup {
             survivors.write.mode("append").parquet(acceptedSink)
             graft.ops.Dedup.updateMinhashIndex(survivors, indexPath)
           }
-        } finally
-          // a forever-running query would otherwise retain one checkpointed
-          // copy of every accepted batch until storage-memory pressure
-          graft.ops.Dedup.unpersistCheckpoint(survivors)
-        ()
+        }
       }
       .start()
 

@@ -2,6 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 
+import graft.ops.Materialize
+
 /** Streaming counterpart of the ns82 perceptual-index lifecycle
   * ([[graft.ops.Perceptual.incrementalNewFromPhashIndex]]): continuous
   * media ingest where every micro-batch of blobs is perceptually
@@ -35,21 +37,19 @@ object StreamingPerceptual {
     newMedia.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // snapshot before the append: the survivor plan band-joins the
-        // same index files the append rewrites
-        val survivors = graft.ops.Perceptual
-          .incrementalNewFromPhashIndex(batch.toDF(), indexPath)
-          .localCheckpoint(true)
-        try {
+        // the scope frees the batch's snapshots, so a forever-running
+        // query does not retain a copy of every accepted batch's hashes
+        Materialize.scope {
+          // snapshot before the append: the survivor plan band-joins the
+          // same index files the append rewrites
+          val survivors = Materialize.local(graft.ops.Perceptual
+            .incrementalNewFromPhashIndex(batch.toDF(), indexPath),
+            eager = true)
           if (!survivors.isEmpty) {
             survivors.write.mode("append").parquet(acceptedSink)
             graft.ops.Perceptual.updatePhashIndex(survivors, indexPath)
           }
-        } finally
-          // a forever-running query would otherwise retain one
-          // checkpointed copy of every accepted batch's hashes
-          graft.ops.Dedup.unpersistCheckpoint(survivors)
-        ()
+        }
       }
       .start()
 
@@ -76,20 +76,17 @@ object StreamingPerceptual {
     newMedia.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val survivors = graft.ops.Perceptual
-          .incrementalNewFromGridIndex(batch.toDF(), indexPath,
-            maxHamming, bands, maxSad)
-          .localCheckpoint(true)
-        try {
+        Materialize.scope {
+          val survivors = Materialize.local(graft.ops.Perceptual
+            .incrementalNewFromGridIndex(batch.toDF(), indexPath,
+              maxHamming, bands, maxSad), eager = true)
           if (!survivors.isEmpty) {
             // the sink gets ids + hashes; grids stay an index concern
             survivors.select("doc_id", "phash")
               .write.mode("append").parquet(acceptedSink)
             graft.ops.Perceptual.updateGridIndex(survivors, indexPath)
           }
-        } finally
-          graft.ops.Dedup.unpersistCheckpoint(survivors)
-        ()
+        }
       }
       .start()
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize
+
 /** Streaming web-ingest: canonical-URL frontier dedup at the crawl edge —
   * the streaming twin of [[graft.ops.Urls.dedupByUrl]] / the first stage
   * of [[graft.ops.Curation.webIngest]]. A crawler's fetch stream is full
@@ -194,9 +196,9 @@ object StreamingWebIngest {
               "left_anti")
           }
         // snapshot before the ledger append: the anti-join plan reads the
-        // same files the append rewrites
-        val survivors = unseen.localCheckpoint(true)
-        try {
+        // same files the append rewrites; the scope frees it
+        Materialize.scope {
+          val survivors = Materialize.local(unseen, eager = true)
           if (!survivors.isEmpty) {
             // sink BEFORE ledger: a crash between the two re-accepts the
             // page on replay (duplicate sink row, tolerated); the reverse
@@ -205,9 +207,7 @@ object StreamingWebIngest {
             survivors.select(col("canonical_url"))
               .write.mode("append").parquet(ledgerPath)
           }
-        } finally
-          graft.ops.Dedup.unpersistCheckpoint(survivors)
-        ()
+        }
       }
       .start()
 }

@@ -86,11 +86,10 @@ object StreamingScaleProof {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
-    val canon = graft.ops.Events
+    val canon = graft.ops.Materialize.cached(graft.ops.Events
       .tsMicros(spark.read.parquet(s"$base/events.parquet"))
       .select("user_id", "event_id", "ts", "event_type", "value")
-      .orderBy("ts", "event_id")
-      .cache()
+      .orderBy("ts", "event_id"))
     val (t0, t1, nEv) = {
       val r = canon.agg(min("ts"), max("ts"), count(lit(1))).head
       (r.getLong(0), r.getLong(1), r.getLong(2))

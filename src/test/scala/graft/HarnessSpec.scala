@@ -5,13 +5,19 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions.col
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The harness spine: the work collector counts exactly without sleeping,
-  * `measure` frees what a query pinned, and the session follows
-  * `SPARK_GRAFT_CPUS`. */
-class HarnessSpec extends AnyFunSuite {
+  * `measure` frees what a query pinned and nothing else, and the session
+  * follows `SPARK_GRAFT_CPUS`. */
+class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkTestSession.spark
+
+  // specs share one session, and a snapshot made with no scope stays
+  // pinned: start from a session that holds none
+  override def beforeAll(): Unit =
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
 
   // one shuffle: range over 4 partitions → partial agg → exchange → agg
   private def groupCount(): Int =
@@ -61,6 +67,33 @@ class HarnessSpec extends AnyFunSuite {
     assert(pinned == 0)
   }
 
+  test("measure frees only what the body made: an earlier cache stays, also when it throws") {
+    def persistent = spark.sparkContext.getPersistentRDDs.keySet
+    val earlier = spark.range(0, 1000, 1, 2).selectExpr("id * 3 AS x").cache()
+    assert(earlier.count() == 1000)
+    val kept = persistent
+    assert(kept.nonEmpty)
+    try {
+      Harness.measure(spark) {
+        val mine = graft.ops.Materialize.local(spark.range(50).toDF(), eager = true)
+        assert(mine.count() == 50 && persistent.size > kept.size)
+        assert(earlier.where("x % 2 = 0").count() == 500)
+      }
+      assert(persistent == kept)
+      val e = intercept[IllegalStateException] {
+        Harness.measure(spark) {
+          graft.ops.Materialize.cached(spark.range(70).toDF()).count()
+          spark.range(80).localCheckpoint(eager = true)
+          assert(persistent.size == kept.size + 2)
+          throw new IllegalStateException("planted")
+        }
+      }
+      assert(e.getMessage == "planted")
+      assert(persistent == kept)
+      assert(earlier.storageLevel.useMemory && earlier.count() == 1000)
+    } finally earlier.unpersist(blocking = true)
+  }
+
   test("Harness.cpus follows SPARK_GRAFT_CPUS, else the processor count") {
     assert(Harness.cpusFrom(Map("SPARK_GRAFT_CPUS" -> "7")) == 7)
     assert(Harness.cpusFrom(Map("SPARK_GRAFT_CPUS" -> " 32 ")) == 32)
@@ -72,29 +105,38 @@ class HarnessSpec extends AnyFunSuite {
   }
 }
 
-/** Keeps the harness forks from growing back: session building, listener
-  * registration and the persistent-RDD sweep live in `Harness.scala`
-  * only. The benchmark's own sources are not scanned. */
+/** Keeps the harness forks from growing back: session building and
+  * listener registration live in `Harness.scala` only, and materialising
+  * or freeing snapshots in `Materialize.scala` only. The benchmark's own
+  * sources are not scanned. */
 class HarnessGuardSpec extends AnyFunSuite {
-  private def offenders(roots: Seq[String], pattern: String): Seq[String] =
+  private def offenders(roots: Seq[String], pattern: String,
+      owner: String): Seq[String] =
     roots.flatMap { root =>
       val walk = Files.walk(Paths.get(root))
       try walk.iterator.asScala.toList finally walk.close()
     }.filter { p =>
-      p.toString.endsWith(".scala") && p.getFileName.toString != "Harness.scala" &&
+      p.toString.endsWith(".scala") && p.getFileName.toString != owner &&
         pattern.r.findFirstIn(Files.readString(p)).isDefined
     }.map(_.toString).sorted
 
   test("only Harness builds a SparkSession, in main and in test") {
     val hits = offenders(Seq("src/main/scala", "src/test/scala"),
-      """SparkSession\s*\.\s*builder""")
+      """SparkSession\s*\.\s*builder""", "Harness.scala")
     assert(hits.isEmpty, s"build sessions through Harness.session: $hits")
   }
 
-  test("only Harness registers a SparkListener or sweeps persistent RDDs in main") {
+  test("only Harness registers a SparkListener in main") {
+    val hits = offenders(Seq("src/main/scala"), "addSparkListener",
+      "Harness.scala")
+    assert(hits.isEmpty, s"count work with Harness.work: $hits")
+  }
+
+  test("only Materialize materialises or frees snapshots in main") {
     val hits = offenders(Seq("src/main/scala"),
-      """addSparkListener|getPersistentRDDs""")
-    assert(hits.isEmpty,
-      s"count work with Harness.work and release with Harness.measure: $hits")
+      """localCheckpoint\(|\.persist\(|\.cache\(\)|unpersist\(|getPersistentRDDs""",
+      "Materialize.scala")
+    assert(hits.isEmpty, "make snapshots with Materialize.local or " +
+      s"Materialize.cached, free them with Materialize.release or scope: $hits")
   }
 }

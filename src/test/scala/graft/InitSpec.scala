@@ -5,10 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** `klepto init` parity (cmd/init.go:28-46): writes the sample config,
   * refuses to overwrite, and the sample must round-trip through the
   * config loader. */
-class InitSpec extends AnyFunSuite {
+class InitSpec extends AnyFunSuite with TempDirs {
 
   test("init writes a loadable sample config and refuses overwrite") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_init")
+    val dir = tempDir("graft_init")
     val path = dir.resolve(".graft.toml").toString
     assert(Init.run(path) == path)
     val tables = config.Config.loadFile(path)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,12 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * float→double vectors) without changing values — `Tables.conform` must
   * absorb that at the scan boundary so `as[Document]`/`as[Embedding]`
   * and every operator above them are encoding-invariant. */
-class TablesConformSpec extends AnyFunSuite {
+class TablesConformSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
   private lazy val reencodedDir: String = {
-    val base = Files.createTempDirectory("conform").toFile
+    val base = tempDir("conform").toFile
     base.deleteOnExit()
     // documents with n_chars narrowed to int32; embeddings with a
     // double-precision vector and a widened label

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Requires python3 + duckdb (driver-side tooling, present in the build
   * container); cancels cleanly where they are absent. */
-class VerifyManifestSpec extends AnyFunSuite {
+class VerifyManifestSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -37,7 +37,7 @@ class VerifyManifestSpec extends AnyFunSuite {
 
   test("oracle_check accepts a manifest stamped with the live fingerprint") {
     assume(pythonReady, "python3+duckdb unavailable")
-    val dir = java.nio.file.Files.createTempDirectory("graft_manifest_ok")
+    val dir = tempDir("graft_manifest_ok")
     val fp = graft.ops.PersistedIndex.sourceFingerprint(spark, s"$sf/region.parquet")
     SparkEntry.queries("k4_limit_pinned")(spark, sf).coalesce(1)
       .write.parquet(dir.resolve("k4_limit_pinned").toString)
@@ -52,7 +52,7 @@ class VerifyManifestSpec extends AnyFunSuite {
 
   test("oracle_check fails an empty oracle set instead of passing") {
     assume(pythonReady, "python3+duckdb unavailable")
-    val dir = java.nio.file.Files.createTempDirectory("graft_manifest_empty")
+    val dir = tempDir("graft_manifest_empty")
     val fp = graft.ops.PersistedIndex.sourceFingerprint(spark, s"$sf/region.parquet")
     writeDump(dir, fp)
     val (code, out) = oracleCheck(dir)
@@ -61,7 +61,7 @@ class VerifyManifestSpec extends AnyFunSuite {
   }
 
   test("Verify.dump writes the selection's oracle and stamps Tables.all") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_verify_dump")
+    val dir = tempDir("graft_verify_dump")
     Verify.dump(spark, sf, dir.toString,
       graft.queries.Registry.select(Seq("k4")))
     def read(f: String) = java.nio.file.Files.readString(dir.resolve(f))
@@ -76,7 +76,7 @@ class VerifyManifestSpec extends AnyFunSuite {
 
   test("oracle_check refuses loudly on a doctored fingerprint") {
     assume(pythonReady, "python3+duckdb unavailable")
-    val dir = java.nio.file.Files.createTempDirectory("graft_manifest_bad")
+    val dir = tempDir("graft_manifest_bad")
     writeDump(dir, "0" * 32)
     val err = new StringBuilder
     val code = Process(Seq("python3", "tools/oracle_check.py", sf, dir.toString))

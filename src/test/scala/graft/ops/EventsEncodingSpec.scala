@@ -1,13 +1,11 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkTestSession, Tables}
+import graft.{SparkTestSession, Tables, TempDirs}
 
 /** The scan layer must adapt to whatever physical timestamp encoding an
   * external table's writer chose — the round-6 testdata regeneration
@@ -27,7 +25,7 @@ import graft.{SparkTestSession, Tables}
   * `database.Row` carries whatever the driver returns
   * (`pkg/database/database.go:4-6`) and the dumper switches on the runtime
   * type (`pkg/dumper/query/dumper.go:138-163`). */
-class EventsEncodingSpec extends AnyFunSuite {
+class EventsEncodingSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -38,7 +36,7 @@ class EventsEncodingSpec extends AnyFunSuite {
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
 
   private lazy val dirs: Map[String, String] = {
-    val base = Files.createTempDirectory("events-enc").toFile
+    val base = tempDir("events-enc").toFile
     base.deleteOnExit()
     val out = Map(
       "nanos-long" -> canon.withColumn("ts", col("ts") * lit(1000L)),

@@ -4,10 +4,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkTestSession, Tables}
+import graft.{SparkTestSession, Tables, TempDirs}
 import graft.ops.PersistedIndex.Kind
 
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
   private val sf = "/root/testdata/sf0.001"
@@ -156,7 +156,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("persisted minhash index reproduces incrementalNew without corpus re-scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mh_idx").toString
+    val dir = tempDir("graft_mh_idx").toString
     val corpusPq = s"$dir/corpus_docs"
     docs.where(col("doc_id") % 5 =!= 0).write.parquet(corpusPq)
     val corpus = spark.read.parquet(corpusPq)
@@ -186,7 +186,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("updateMinhashIndex: two-tick ingest equals one-shot recompute, base untouched") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mh_upd").toString
+    val dir = tempDir("graft_mh_upd").toString
     val corpusPq = s"$dir/corpus_docs"
     docs.where(col("doc_id") % 5 =!= 0).write.parquet(corpusPq)
     val corpus = spark.read.parquet(corpusPq)
@@ -233,7 +233,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("updateMinhashIndex restamps the sidecar fingerprint when asked, keeps params") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mh_upfp").toString
+    val dir = tempDir("graft_mh_upfp").toString
     val idx = s"$dir/idx"
     Dedup.writeMinhashIndex(docs.limit(20), idx, fingerprint = Some("fp-a"))
     assert(PersistedIndex.matches(spark, idx, Kind.Minhash, "fp-a"))
@@ -248,14 +248,14 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("incrementalNewFromIndex rejects an index with unreadable parameters") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mh_bad").toString
+    val dir = tempDir("graft_mh_bad").toString
     intercept[Exception] {
       Dedup.incrementalNewFromIndex(docs.limit(1), s"$dir/missing").collect()
     }
   }
 
   test("incrementalNewFromIndex fails fast when pinned parameters mismatch the sidecar") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mh_pin").toString
+    val dir = tempDir("graft_mh_pin").toString
     val idx = s"$dir/idx"
     Dedup.writeMinhashIndex(docs.limit(10), idx, shingleK = 2, numHashes = 16)
     // matching pin is accepted (plan builds)
@@ -270,7 +270,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("source fingerprint invalidates a persisted index when data is rewritten") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mh_fp").toString
+    val dir = tempDir("graft_mh_fp").toString
     val src = s"$dir/src"
     Seq((1L, "alpha beta gamma"), (2L, "delta epsilon zeta"))
       .toDF("doc_id", "text").write.parquet(src)
@@ -669,7 +669,7 @@ class CurationSpec extends AnyFunSuite {
   }
 }
 
-class SimilaritySpec extends AnyFunSuite {
+class SimilaritySpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
   private def embs = Tables.load(spark, sf, "embeddings")
@@ -880,7 +880,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("partitioned IVF index matches in-memory IVF and prunes partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = tempDir("graft_ivf").toString
     Similarity.writeIvfIndex(embs, dir)
     val fromIdx = Similarity.ivfTopKFromIndex(spark, dir, queries)
     val inMem = Similarity.ivfTopK(embs, queries)
@@ -897,7 +897,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("updateIvfIndex appends to frozen cells: new vectors are found, base untouched") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_upd").toString
+    val dir = tempDir("graft_ivf_upd").toString
     val base = s"$dir/base"
     // corpus: 100 random vectors; batch: near-twins of 5 of them — a twin
     // lands in its base vector's cell (same nearest centroid), so the
@@ -1015,7 +1015,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("PQ index: from-index equals in-memory; frozen-codebook append finds new twins") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq").toString
+    val dir = tempDir("graft_pq").toString
     val idx = s"$dir/idx"
     Similarity.writePqIndex(embs, idx, fingerprint = Some("fp-a"))
     assert(PersistedIndex.matches(spark, idx, Kind.Pq, "fp-a"))
@@ -1043,7 +1043,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("IVF-PQ: probed-cell pruning with PQ-exact scores, partition-pruned scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
+    val dir = tempDir("graft_ivfpq").toString
     Similarity.writeIvfPqIndex(embs, dir, fingerprint = Some("fp-x"))
     assert(PersistedIndex.matches(spark, dir, Kind.IvfPq, "fp-x"))
     val df = Similarity.ivfPqTopKFromIndex(spark, dir, queries, k = 10)
@@ -1094,7 +1094,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("IVF-PQ rerank: exact scores on ADC candidates, recall >= ADC at equal k") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rerank").toString
+    val dir = tempDir("graft_rerank").toString
     Similarity.writeIvfPqIndex(embs, dir)
     val k = 10
     val rer = Similarity
@@ -1133,9 +1133,9 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("PQ/IVF-PQ serving returns empty, not an exception, for empty queries") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_empty").toString
+    val dir = tempDir("graft_pq_empty").toString
     Similarity.writeIvfPqIndex(embs, dir)
-    val pqDir = java.nio.file.Files.createTempDirectory("graft_pq_e2").toString
+    val pqDir = tempDir("graft_pq_e2").toString
     Similarity.writePqIndex(embs, pqDir)
     val noQueries = queries.where(col("query_id") < 0)
     // an empty query frame leaves zero probed cells / zero scored pairs —

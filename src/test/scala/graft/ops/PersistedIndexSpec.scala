@@ -3,10 +3,9 @@ package graft.ops
 import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, explode, lit, split, when}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 import graft.ops.PersistedIndex.Kind
 
 /** The persisted-index lifecycle ([[PersistedIndex]]): a publish that dies
@@ -14,18 +13,11 @@ import graft.ops.PersistedIndex.Kind
   * layout rewrite that fails keeps the old layout, the staleness gate
   * rebuilds what it cannot trust, and every family's probe and update
   * refuses another family's index, naming both kinds. */
-class PersistedIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PersistedIndexSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private val dirs = collection.mutable.ArrayBuffer.empty[java.io.File]
-  private def tempDir(tag: String) = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_pi_$tag").toFile
-    dirs += d
-    d.toString
-  }
-  override def afterAll(): Unit =
-    dirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+  private def dirFor(tag: String) = tempDir(s"graft_pi_$tag").toString
 
   /** Hidden staging or set-aside siblings left in `dir`. */
   private def leftovers(dir: String): Seq[String] =
@@ -68,7 +60,7 @@ class PersistedIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   faults.foreach { case (name, call, throws, bodyThrows) =>
     test(s"publish keeps the previous index when $name") {
-      val dir = tempDir("fault")
+      val dir = dirFor("fault")
       val idx = s"$dir/index"
       Perceptual.writePhashIndex(Seq((1L, a)).toDF("doc_id", "content"), idx)
       val before = probe(idx)
@@ -88,7 +80,7 @@ class PersistedIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("publish swaps a rebuild in when no step fails") {
-    val dir = tempDir("swap")
+    val dir = dirFor("swap")
     val idx = s"$dir/index"
     Perceptual.writePhashIndex(Seq((1L, a)).toDF("doc_id", "content"), idx)
     PersistedIndex.publish(new RenameFaultFs(0, false), new Path(idx)) { tmp =>
@@ -100,7 +92,7 @@ class PersistedIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a throwing fresh build publishes nothing and cleans its staging") {
-    val dir = tempDir("fresh")
+    val dir = dirFor("fresh")
     val dest = s"$dir/index"
     intercept[RuntimeException] {
       PersistedIndex.build(spark, dest, Kind.Lm, None) { tmp =>
@@ -115,7 +107,7 @@ class PersistedIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---- Layout rewrites go through the same publish -------------------------
 
   test("a failing optimize rewrite keeps the old layout and no staging copy") {
-    val dir = tempDir("layout")
+    val dir = dirFor("layout")
     val path = s"$dir/layout"
     val rows = (1L to 20L).map(i => (i, s"p${i % 2}", i * 10))
       .toDF("id", "part", "v")
@@ -135,7 +127,7 @@ class PersistedIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---- the staleness gate -------------------------------------------------
 
   test("cached builds once per fingerprint and rebuilds a pre-kind index") {
-    val dir = tempDir("cached")
+    val dir = dirFor("cached")
     val src = s"$dir/src"
     Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text")
       .write.parquet(src)
@@ -214,7 +206,7 @@ class PersistedIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
         val own = families(i)
         val other = families((i + 1) % families.size)
         assert(own.kind.name == kind)
-        val path = s"${tempDir(kind)}/index"
+        val path = s"${dirFor(kind)}/index"
         other.build(path)
         (Seq(own.probe) ++ own.update).foreach { read =>
           val e = intercept[IllegalArgumentException](read(path))

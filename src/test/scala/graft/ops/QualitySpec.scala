@@ -3,13 +3,13 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 
 /** Model-based quality filters (Quality) and the HTML extractor
   * (TextAnalysis.htmlToText): semantics on crafted fixtures, and the
   * bit-stability-under-partitioning guarantee the exact-integer
   * quantization exists to provide. */
-class QualitySpec extends AnyFunSuite {
+class QualitySpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -53,8 +53,7 @@ class QualitySpec extends AnyFunSuite {
   test("lmScoreFromModel on the training corpus equals self-trained nll") {
     val docs = corpus((1L, "the cat sat"), (2L, "the dog sat"),
       (3L, "a bird flew high"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-lm-model").toString + "/m"
+    val dir = tempDir("graft-lm-model").toString + "/m"
     Quality.writeLmModel(docs, dir)
     val frozen = Quality.lmScoreFromModel(docs, dir)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
@@ -68,8 +67,7 @@ class QualitySpec extends AnyFunSuite {
 
   test("lmScoreFromModel floors unseen tokens and reports oov_frac") {
     val train = corpus((1L, "the cat sat"), (2L, "the dog sat"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-lm-oov").toString + "/m"
+    val dir = tempDir("graft-lm-oov").toString + "/m"
     Quality.writeLmModel(train, dir, fingerprint = Some("fp1"))
     val r = Quality.lmScoreFromModel(
         corpus((9L, "zz qq ww"), (10L, "the cat sat")), dir)

@@ -1,10 +1,8 @@
 package graft.sinks
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkTestSession, Steal, Tables}
+import graft.{SparkTestSession, Steal, Tables, TempDirs}
 import graft.config.Config
 import graft.sources.Resolved
 
@@ -12,12 +10,12 @@ import graft.sources.Resolved
   * cmd/steal.go:21-44): source/target resolve through the driver registry,
   * with the `os://stdout/` text-dump path injectable for assertion
   * (≅ `pkg/dumper/query/writer_test.go:11-30`). */
-class DsnStealSpec extends AnyFunSuite {
+class DsnStealSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   private val srcDsn = "file://path(/root/testdata/sf0.001)/?format=parquet"
 
   test("file:// → file:// parquet copy is value-identical") {
-    val dir = Files.createTempDirectory("graft_dsn_steal").toString
+    val dir = tempDir("graft_dsn_steal").toString
     val reports = Steal.runDsn(spark, srcDsn,
       s"file://path($dir)/?format=parquet", tables = Nil, concurrency = 4)
     assert(reports.size == Tables.all.size && reports.forall(_.ok))
@@ -72,7 +70,7 @@ class DsnStealSpec extends AnyFunSuite {
 
   test("main() arg routing wraps plain dirs as file DSNs") {
     // plain-dir pair must behave exactly like before (delegates to run)
-    val dir = Files.createTempDirectory("graft_dsn_main").toString
+    val dir = tempDir("graft_dsn_main").toString
     val reports = Steal.run(spark, "/root/testdata/sf0.001", dir, Nil,
       concurrency = 2)
     assert(reports.forall(_.ok))

@@ -6,7 +6,7 @@ import org.apache.spark.JobExecutionStatus
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkTestSession, Steal}
+import graft.{SparkTestSession, Steal, TempDirs}
 import graft.config.TableConfig
 import graft.sources.Drivers
 
@@ -19,7 +19,7 @@ import graft.sources.Drivers
   * [[Ddl.structureFromJdbc]] against a real JDBC catalog and the staging
   * table swap.
   */
-class JdbcRoundTripSpec extends AnyFunSuite {
+class JdbcRoundTripSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private val srcUrl = "jdbc:derby:memory:graft_src;create=true"
@@ -133,8 +133,7 @@ class JdbcRoundTripSpec extends AnyFunSuite {
       filter = graft.config.Filter(
         sorts = Seq("AMOUNT" -> "desc"), limit = 2)))
     def stealTo(pushdown: Boolean): Seq[Seq[Any]] = {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_pushdown_steal").toString
+      val dir = tempDir("graft_pushdown_steal").toString
       val reports = Steal.runDsn(spark, srcUrl,
         s"file://path($dir)/?format=parquet", cfg,
         concurrency = 1, pushdownScan = pushdown)

@@ -14,15 +14,15 @@ import org.apache.spark.sql.execution.datasources.{
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{Harness, SparkTestSession, Steal, Tables}
+import graft.{Harness, SparkTestSession, Steal, Tables, TempDirs}
 import graft.config.Config
 
-class SinksSpec extends AnyFunSuite {
+class SinksSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
   test("ParquetSink round-trips values and writes schema JSON (W5)") {
-    val dir = Files.createTempDirectory("graft_pq").toString
+    val dir = tempDir("graft_pq").toString
     val src = Tables.load(spark, sf, "region")
     ParquetSink.write(src, dir, "region")
     val back = spark.read.parquet(s"$dir/region.parquet")
@@ -34,7 +34,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("ParquetSink writes its schema JSON under a file: URI directory") {
-    val dir = Files.createTempDirectory("graft_pq_uri").toString
+    val dir = tempDir("graft_pq_uri").toString
     val src = Tables.load(spark, sf, "region")
     ParquetSink.write(src, s"file://$dir", "region")
     val schemaJson = Files.readString(
@@ -98,7 +98,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("Steal: full e2e copy fidelity with empty config (features/*_test.go)") {
-    val dir = Files.createTempDirectory("graft_steal").toString
+    val dir = tempDir("graft_steal").toString
     val reports = Steal.run(spark, sf, dir, tables = Nil, concurrency = 4)
     assert(reports.size == Tables.all.size)
     assert(reports.forall(_.ok))
@@ -112,7 +112,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("Steal: config-driven subset + anonymise + ignore-data e2e") {
-    val dir = Files.createTempDirectory("graft_steal2").toString
+    val dir = tempDir("graft_steal2").toString
     val cfg = Config.load(
       """[Matchers]
         |  Building = "customer.c_mktsegment = 'BUILDING'"
@@ -156,7 +156,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("Steal: bestEffort reports failures instead of throwing (§7.4.6)") {
-    val dir = Files.createTempDirectory("graft_steal3").toString
+    val dir = tempDir("graft_steal3").toString
     val cfg = Config.load(
       """[[Tables]]
         |  Name = "customer"
@@ -237,7 +237,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("Steal: a chained steal runs no job before its writes, one per table plus broadcasts") {
-    val dir = Files.createTempDirectory("graft_steal_jobs").toString
+    val dir = tempDir("graft_steal_jobs").toString
     val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]
     val work = Harness.work(spark)
     val before = work.snapshot()
@@ -260,7 +260,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("Steal: each source table is opened once; reports in catalog order") {
-    val dir = Files.createTempDirectory("graft_steal_once").toString
+    val dir = tempDir("graft_steal_once").toString
     val (reports, writes) = withWrites(Steal.run(spark, sf, dir, chain, concurrency = 4))
     assert(reports.map(_.table) == Tables.all.sorted)
     assert(writes.map(_._1).sorted == Tables.all.sorted)
@@ -274,14 +274,14 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("Steal: tables are dispatched largest-first") {
-    val dir = Files.createTempDirectory("graft_steal_order").toString
+    val dir = tempDir("graft_steal_order").toString
     val (_, writes) = withWrites(Steal.run(spark, sf, dir, Nil, concurrency = 1))
     val bySize = Tables.all.sortBy(t => -new java.io.File(s"$sf/$t.parquet").length)
     assert(writes.map(_._1) == bySize)
   }
 
   test("Steal: a file: URI lake steals into a file: URI target, sidecars included") {
-    val dir = Files.createTempDirectory("graft_steal_uri").toString
+    val dir = tempDir("graft_steal_uri").toString
     val reports = Steal.run(spark, s"file://$sf", s"file://$dir", Nil, concurrency = 4)
     assert(reports.map(_.table) == Tables.all.sorted && reports.forall(_.ok))
     for (t <- Tables.all) {

@@ -1,21 +1,19 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 
 /** Schema-evolution-tolerant ingestion: mergeSchema null-fill in both
   * directions, partition pruning on the generation column, and the
   * drift report. */
-class EvolvedSpec extends AnyFunSuite {
+class EvolvedSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private def writeGens(): String = {
-    val root = Files.createTempDirectory("evolved_spec").toString
+    val root = tempDir("evolved_spec").toString
     Seq((1L, "en", 10L), (2L, "de", 20L)).toDF("doc_id", "lang", "n_chars")
       .write.mode("overwrite").parquet(s"$root/version=0")
     Seq((3L, 30L, 7L), (4L, 40L, 9L)).toDF("doc_id", "n_chars", "quality")

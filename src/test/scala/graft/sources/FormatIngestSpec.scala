@@ -6,7 +6,7 @@ import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{Harness, SparkTestSession, Tables}
+import graft.{Harness, SparkTestSession, Tables, TempDirs}
 import graft.sinks.ParquetSink
 
 /** Cross-format ingestion parity: the engine must produce IDENTICAL
@@ -26,7 +26,7 @@ import graft.sinks.ParquetSink
   * the one footer Spark's inference would read, on the driver, and must
   * get exactly the schema `spark.read.parquet` infers.
   */
-class FormatIngestSpec extends AnyFunSuite {
+class FormatIngestSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -36,7 +36,7 @@ class FormatIngestSpec extends AnyFunSuite {
   test("documents: parquet, orc, json and csv scans agree bit-for-bit") {
     val pq = Tables.load(spark, sf, "documents")
     val want = sortedRows(graft.ops.Quality.classifierScore(pq))
-    val tmp = Files.createTempDirectory("graft-fmt-docs").toString
+    val tmp = tempDir("graft-fmt-docs").toString
     pq.coalesce(2).write.orc(s"$tmp/docs.orc")
     pq.coalesce(2).write.json(s"$tmp/docs.json")
     pq.coalesce(2).write
@@ -54,7 +54,7 @@ class FormatIngestSpec extends AnyFunSuite {
 
   test("readJsonl: explicit schema, corrupt capture, line-exact quarantine") {
     import org.apache.spark.sql.types._
-    val tmp = Files.createTempDirectory("graft-jsonl").toString
+    val tmp = tempDir("graft-jsonl").toString
     val lines = Seq(
       """{"line_id":1,"lang":"de","n_chars":10}""",
       """{"line_id":2,"lang":"en","n_chars":20""", // truncated -> corrupt
@@ -84,7 +84,7 @@ class FormatIngestSpec extends AnyFunSuite {
   test("loadAs absorbs schema drift in a binary-format snapshot") {
     import org.apache.spark.sql.functions.{col, lit}
     val pq = Tables.load(spark, sf, "documents")
-    val tmp = Files.createTempDirectory("graft-fmt-drift").toString
+    val tmp = tempDir("graft-fmt-drift").toString
     // an old-generation orc snapshot: n_chars not yet written, a legacy
     // column present, narrowed doc_id, shuffled order
     pq.withColumn("doc_id", col("doc_id").cast("int"))
@@ -104,7 +104,7 @@ class FormatIngestSpec extends AnyFunSuite {
     val gap = 28800L * 1000000L
     val want = sortedRows(
       graft.ops.Events.sessionize(graft.ops.Events.tsMicros(pq), gap))
-    val tmp = Files.createTempDirectory("graft-fmt-events").toString
+    val tmp = tempDir("graft-fmt-events").toString
     pq.coalesce(2).write.orc(s"$tmp/ev.orc")
     pq.coalesce(2).write
       .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
@@ -140,7 +140,7 @@ class FormatIngestSpec extends AnyFunSuite {
   }
 
   test("footer schema: ParquetSink output with markers, NTZ, DECIMAL, ARRAY<FLOAT>, empty") {
-    val dir = Files.createTempDirectory("graft_footer").toString
+    val dir = tempDir("graft_footer").toString
     val schema = StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("at", TimestampNTZType),
@@ -173,7 +173,7 @@ class FormatIngestSpec extends AnyFunSuite {
   }
 
   test("footer schema falls back: a partitioned layout keeps Spark's partition discovery") {
-    val dir = Files.createTempDirectory("graft_footer_part").toString
+    val dir = tempDir("graft_footer_part").toString
     spark.read.parquet(s"$sf/nation.parquet").write
       .partitionBy("n_regionkey").parquet(s"$dir/nation.parquet")
     assert(Drivers.footerSchema(spark, s"$dir/nation.parquet").isEmpty)
@@ -182,7 +182,7 @@ class FormatIngestSpec extends AnyFunSuite {
   }
 
   test("footer schema falls back: no footer to read surfaces Spark's own error") {
-    val dir = Files.createTempDirectory("graft_footer_none").toString
+    val dir = tempDir("graft_footer_none").toString
     val t = new java.io.File(s"$dir/bare.parquet")
     t.mkdir()
     new java.io.File(t, "_SUCCESS").createNewFile()

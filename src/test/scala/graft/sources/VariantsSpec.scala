@@ -2,13 +2,13 @@ package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 import graft.sources.Variants.PathSpec
 
 /** Specs for ns101 — VARIANT extraction: total-function discipline
   * (corrupt / missing / type-mismatch all → NULL, never an exception),
   * row-identity preservation, and the projection-only plan. */
-class VariantsSpec extends AnyFunSuite {
+class VariantsSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -58,8 +58,7 @@ class VariantsSpec extends AnyFunSuite {
 
   test("plan is projection-only over the scan (no shuffle, no join)") {
     // parquet-backed so projections don't constant-fold to LocalTableScan
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_variant_plan").toString
+    val dir = tempDir("graft_variant_plan").toString
     Seq((1L, """{"a":1}""")).toDF("id", "j")
       .write.mode("overwrite").parquet(dir)
     val p = Variants.extractTyped(spark.read.parquet(dir), "j",

@@ -5,12 +5,12 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkTestSession, Tables}
+import graft.{SparkTestSession, Tables, TempDirs}
 
 /** Streaming dedup/stats operators: exact dedup with watermark-bounded
   * state, stateless LSH band parity with the batch path, and
   * mapGroupsWithState running totals across micro-batches. */
-class StreamingDedupSpec extends AnyFunSuite {
+class StreamingDedupSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -40,7 +40,7 @@ class StreamingDedupSpec extends AnyFunSuite {
   test("indexed ingest dedup: later micro-batches see earlier batches' survivors") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_idx").toString
+    val dir = tempDir("graft_stream_idx").toString
     val idx = s"$dir/index"
     val sink = s"$dir/accepted"
     graft.ops.Dedup.writeMinhashIndex(Seq(
@@ -93,7 +93,7 @@ class StreamingDedupSpec extends AnyFunSuite {
   test("streaming decontamination equals the batch scrub on the same prefix") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_decon").toString
+    val dir = tempDir("graft_stream_decon").toString
     val benchmark = Seq(
       (900L, "what is the capital of france answer paris"),
       (901L, "solve for x in two x plus three equals seven"))
@@ -132,8 +132,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     "(the ns152 prefilter at ingest: blob built once, reused per batch)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stream_decon_bloom").toString
+    val dir = tempDir("graft_stream_decon_bloom").toString
     val benchmark = Seq(
       (900L, "what is the capital of france answer paris"))
       .toDF("doc_id", "text")

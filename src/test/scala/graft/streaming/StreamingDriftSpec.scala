@@ -4,19 +4,19 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 
 /** Streaming drift monitor: with a sketch wide enough that the CMS is
   * exact on the fixture vocabulary, the live drift read-off must equal
   * the batch [[graft.ops.Versioning.tokenDrift]] bit-for-bit — counts,
   * metric, ranking, tie-breaks. */
-class StreamingDriftSpec extends AnyFunSuite {
+class StreamingDriftSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   test("live CMS drift equals batch tokenDrift on a collision-free vocab") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift").toString
+    val dir = tempDir("graft_drift").toString
     val refPath = s"$dir/ref_sketch"
 
     // accepted corpus: common words dominate; incoming crawl: a spam burst

@@ -3,21 +3,20 @@ package graft.streaming
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 import graft.ops.Perceptual
 
 /** The streaming perceptual-ingest twin: later micro-batches must be
   * deduplicated against earlier batches' ACCEPTED media — the index
   * update inside the foreachBatch loop is load-bearing, exactly as in
   * the batch ns82 lifecycle. */
-class StreamingPerceptualSpec extends AnyFunSuite {
+class StreamingPerceptualSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   test("indexed media ingest: later batches see earlier acceptances") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stream_phash").toString
+    val dir = tempDir("graft_stream_phash").toString
     val idx = s"$dir/index"
     val sink = s"$dir/accepted"
 
@@ -62,8 +61,7 @@ class StreamingPerceptualSpec extends AnyFunSuite {
     "survives (VERDICT r12 #5 stream-batch equivalence)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stream_grid").toString
+    val dir = tempDir("graft_stream_grid").toString
     val idx = s"$dir/index"
     val sink = s"$dir/accepted"
 

@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkTestSession, Tables}
+import graft.{SparkTestSession, Tables, TempDirs}
 import graft.config.{Filter, TableConfig}
 
 /** Streaming anonymise mode: same config, same deterministic fakers, now
@@ -13,7 +11,7 @@ import graft.config.{Filter, TableConfig}
   * deterministic seeded fakers make the streamed output byte-identical to
   * the batch [[graft.anonymise.Anonymiser]] on the same rows, which is what
   * makes replay/reprocessing idempotent (SURVEY §7.4.1). */
-class StreamingStealSpec extends AnyFunSuite {
+class StreamingStealSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -22,7 +20,7 @@ class StreamingStealSpec extends AnyFunSuite {
     anonymise = Seq("c_name" -> "FullName", "c_mktsegment" -> "literal:REDACTED"))
 
   test("streamed anonymise equals batch anonymise on the same input") {
-    val tmp = Files.createTempDirectory("graft-stream").toString
+    val tmp = tempDir("graft-stream").toString
     val src = Tables.load(spark, sf, "customer")
 
     // stage the table as a streaming source dir (one initial file batch)
@@ -50,7 +48,7 @@ class StreamingStealSpec extends AnyFunSuite {
   }
 
   test("late-arriving files are processed incrementally, not reprocessed") {
-    val tmp = Files.createTempDirectory("graft-stream2").toString
+    val tmp = tempDir("graft-stream2").toString
     val src = Tables.load(spark, sf, "nation")
     val part1 = src.where("n_nationkey < 10")
     val part2 = src.where("n_nationkey >= 10")
@@ -81,7 +79,7 @@ class StreamingStealSpec extends AnyFunSuite {
     import graft.sinks.{JdbcSink, JdbcSinkConfig}
     val url = "jdbc:derby:memory:graft_stream_x1;create=true"
     val jcfg = JdbcSinkConfig(url, "customer_cdc")
-    val tmp = Files.createTempDirectory("graft-stream3").toString
+    val tmp = tempDir("graft-stream3").toString
     val src = Tables.load(spark, sf, "customer")
     src.write.parquet(s"$tmp/src/customer.parquet")
     val schema = spark.read.parquet(s"$tmp/src/customer.parquet").schema

@@ -3,20 +3,20 @@ package graft.streaming
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 import graft.ops.WarcSynth
 
 /** Streaming WARC ingest: stream-over-batches must equal batch-over-union
   * (statelessness is the contract), and a corrupt blob mid-stream keeps
   * the query alive while still yielding its parseable prefix. */
-class StreamingWarcSpec extends AnyFunSuite {
+class StreamingWarcSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   test("two micro-batches of WARC files produce exactly the batch " +
     "operator's records over the union") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_s").toString
+    val dir = tempDir("graft_warc_s").toString
 
     val fileA = WarcSynth.warcOf(Seq(1L -> "alpha", 2L -> "beta"))
     val fileB = WarcSynth.warcOf(Seq(3L -> "gamma"))
@@ -48,7 +48,7 @@ class StreamingWarcSpec extends AnyFunSuite {
     "parseable prefix; later batches are unaffected") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_c").toString
+    val dir = tempDir("graft_warc_c").toString
 
     val good = WarcSynth.warcOf(Seq(7L -> "seven"))
     val corrupt = WarcSynth.warcOf(Seq(8L -> "eight", 9L -> "nine"))

@@ -3,18 +3,18 @@ package graft.streaming
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 
 /** Streaming canonical-URL frontier dedup: within-batch respellings
   * collapse, cross-batch respellings are stopped by the persisted ledger,
   * and a restarted query resumes from ledger contents alone. */
-class StreamingWebIngestSpec extends AnyFunSuite {
+class StreamingWebIngestSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   test("url frontier dedup: within-batch, cross-batch, and post-restart") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_frontier").toString
+    val dir = tempDir("graft_frontier").toString
     val ledger = s"$dir/ledger"
     val sink = s"$dir/accepted"
 
@@ -89,7 +89,7 @@ class StreamingWebIngestSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val dir =
-      java.nio.file.Files.createTempDirectory("graft_frontier_dup").toString
+      tempDir("graft_frontier_dup").toString
     val in = MemoryStream[(Long, String)]
     val q = StreamingWebIngest.urlFrontierDedup(
       in.toDF().toDF("doc_id", "url"),
@@ -110,7 +110,7 @@ class StreamingWebIngestSpec extends AnyFunSuite {
 
   test("recoverLedger repairs every crash window of the compaction swap") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_frontier_rec").toString
+    val dir = tempDir("graft_frontier_rec").toString
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
