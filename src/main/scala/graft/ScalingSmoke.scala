@@ -75,7 +75,7 @@ object ScalingSmoke {
     def run(query: graft.queries.Query, dir: String) =
       runDf(query.build(spark, dir))
 
-    def docs(dir: String) = spark.read.parquet(s"$dir/documents.parquet")
+    def docs(dir: String) = Tables.load(spark, dir, "documents")
     val docsSmall = docs(sfSmall).count()
     val docsLarge = docs(sfLarge).count()
     val r = docsLarge.toDouble / docsSmall

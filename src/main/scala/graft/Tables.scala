@@ -1,6 +1,14 @@
 package graft
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField, StructType}
 
@@ -35,8 +43,53 @@ object Tables {
     // spark.sql.extensions=graft.functions.GraftExtensions still resolve
     // the custom vec_* expressions (registration is idempotent and cheap)
     graft.functions.VectorFunctions.register(spark)
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
   }
+
+  /** The one schema-less parquet open: the files' own schema, read on the
+    * driver from the one footer Spark's inference would read, so opening
+    * runs no Spark job (Spark runs that footer read as a one-task job).
+    * Where [[footerSchema]] declines, Spark infers as usual. Nothing is
+    * cached across opens: the files may change between two of them. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path).map(spark.read.schema(_).parquet(path))
+      .getOrElse(spark.read.parquet(path))
+
+  /** The schema Spark's parquet inference returns for `path`, read from
+    * the one footer that inference touches with schema merging off
+    * (`ParquetUtils.inferSchema`): `_common_metadata`, else `_metadata`,
+    * else the first data file by path, converted by Spark's own
+    * `readSchemaFromFooter`. One listing and one footer read. None — the
+    * caller lets Spark infer — when session schema merging is on, when the
+    * path has subdirectories (partition discovery), or when there is no
+    * footer to read, so Spark raises its own error. */
+  private[graft] def footerSchema(
+      spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled) return None
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    try {
+      val listed = root.getFileSystem(hadoopConf).listStatus(root).toSeq
+      if (listed.exists(_.isDirectory)) return None
+      def named(n: String) = listed.find(_.getPath.getName == n)
+      named("_common_metadata").orElse(named("_metadata"))
+        .orElse(listed.filterNot(f => hidden(f.getPath.getName))
+          .sortBy(_.getPath.toString).headOption)
+        .map { f =>
+          val footer = ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(f, hadoopConf),
+            ParquetMetadataConverter.SKIP_ROW_GROUPS)
+          ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+            new ParquetToSparkSchemaConverter(conf))
+        }
+    } catch { case NonFatal(_) => None }
+  }
+
+  /** Files Spark's file index skips: Hadoop's `_SUCCESS`/`.crc` markers and
+    * in-flight copies. */
+  private[graft] def hidden(name: String): Boolean =
+    name.startsWith("_") || name.startsWith(".") || name.endsWith("._COPYING_")
 
   /** Conform a scanned DataFrame to a canonical schema by casting exactly
     * the columns whose ATOMIC (or array-of-atomic) type differs — the same
@@ -126,6 +179,8 @@ object Tables {
         .option("timestampNTZFormat", tsNtzFmt)
       case f => spark.read.format(f)
     }
+    def open() =
+      if (format == "parquet") parquet(spark, path) else reader.load(path)
     (format, schema) match {
       // text formats: the scan itself parses into the canonical schema
       // (missing fields null, unknown fields never materialize)
@@ -133,8 +188,8 @@ object Tables {
       // binary formats carry their own schema: absorb width re-encodings
       // AND drift (dropped/added/reordered columns) via evolve, so a
       // loadAs caller gets the canonical shape from ANY generation's files
-      case (_, Some(s)) => evolve(reader.load(path), s)
-      case (_, None) => reader.load(path)
+      case (_, Some(s)) => evolve(open(), s)
+      case (_, None) => open()
     }
   }
 

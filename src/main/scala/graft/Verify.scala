@@ -69,7 +69,7 @@ object Verify {
       val path = s"$sfDir/$t.parquet"
       try {
         val fp = graft.ops.PersistedIndex.sourceFingerprint(spark, path)
-        val rows = spark.read.parquet(path).count()
+        val rows = Tables.parquet(spark, path).count()
         Some(s"${q(t)}: {${q("fingerprint")}: ${q(fp)}, ${q("rows")}: $rows}")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] manifest skip $t: ${e.getMessage}")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Deduplication operators for large-scale training-data pipelines —
   * north-star extensions beyond the reference's surface (SURVEY §7.2 M6).
   *
@@ -484,7 +486,7 @@ object Dedup {
     val exactSurvivors = {
       val raw = newDocs
         .withColumn("__th", md5(col("text").cast("binary")))
-        .join(spark.read.parquet(s"$path/texthash"),
+        .join(Tables.parquet(spark, s"$path/texthash"),
           col("__th") === col("th"), "left_anti")
         .drop("__th")
       if (newEst <= defaultPostingsCheckpointBytes) Materialize.local(raw, eager = false)
@@ -495,7 +497,7 @@ object Dedup {
       postingsEstimate = Some(newEst))
     val newBands = bandKeys(newPerDoc, numHashes, rowsPerBand)
     val cand = newBands.as("a")
-      .join(spark.read.parquet(s"$path/bands").as("b"),
+      .join(Tables.parquet(spark, s"$path/bands").as("b"),
         col("a.band") === col("b.band") && col("a.bv") === col("b.bv"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
@@ -505,7 +507,7 @@ object Dedup {
                   else newSets0
     val nearDupIds = cand
       .join(newSets.as("x"), col("doc_a") === col("x.doc_id"))
-      .join(spark.read.parquet(s"$path/sets").as("y"),
+      .join(Tables.parquet(spark, s"$path/sets").as("y"),
         col("doc_b") === col("y.doc_id"))
       .where(size(array_intersect(col("x.s"), col("y.s"))).cast("double") /
         size(array_union(col("x.s"), col("y.s"))) >= threshold)

@@ -6,6 +6,8 @@ import org.apache.spark.sql.types._
 
 import PersistedIndex.Kind
 
+import graft.Tables
+
 /** Perceptual-hash near-duplicate detection over opaque media columns —
   * the image analog of [[Dedup.simhash]] (north-star extension, SURVEY
   * §7.2 M6 depth): re-encoded, resized, or brightness-shifted copies of
@@ -443,7 +445,7 @@ object Perceptual {
     // snapshot (eager) before any rewrite: the plan reads the very files
     // the publish replaces
     val snap = Materialize.local(
-      spark.read.parquet(s"$path/hashes").distinct(), eager = true)
+      Tables.parquet(spark, s"$path/hashes").distinct(), eager = true)
     try PersistedIndex.publish(spark,
         new org.apache.hadoop.fs.Path(s"$path/hashes")) { tmp =>
       snap.coalesce(numFiles).write.mode("overwrite").parquet(tmp.toString)
@@ -472,7 +474,7 @@ object Perceptual {
     val decoder = indexDecoder(spark, path, Kind.Phash, expectDecoder)
     // one decode pass, reused by the band join and the final anti-join
     val newHashes = Materialize.local(dhash63(newMedia, decoder), eager = false)
-    val corpusHashes = spark.read.parquet(s"$path/hashes")
+    val corpusHashes = Tables.parquet(spark, s"$path/hashes")
     val dupIds = bandCandidates(newHashes, corpusHashes,
         maxHamming, bands, maxBandFreq)
       .select(col("doc_id")).distinct()
@@ -580,7 +582,7 @@ object Perceptual {
     val decoder = indexDecoder(spark, path, Kind.Grid, expectDecoder)
     // one decode pass, shared by banding, verify (sigA) and the anti-join
     val newSig = Materialize.local(gridHashes(newMedia, decoder), eager = false)
-    val corpus = spark.read.parquet(s"$path/hashes")
+    val corpus = Tables.parquet(spark, s"$path/hashes")
     val cand = bandCandidatePairs(
       newSig.select(col("doc_id"), col("phash")),
       corpus.select(col("doc_id"), col("phash")),

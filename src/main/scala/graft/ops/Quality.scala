@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Model-based corpus quality filtering — the two standard learned filters
   * a training-data pipeline applies after the cheap heuristic gates
   * ([[TextAnalysis.qualityScores]], [[TextAnalysis.repetitionStats]]):
@@ -243,7 +245,7 @@ object Quality {
       docs.select(explode(split(col("text"), " ")).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("c"))
         .write.mode("overwrite").parquet(tmp.toString)
-      val totals = spark.read.parquet(tmp.toString)
+      val totals = Tables.parquet(spark, tmp.toString)
         .agg(sum(col("c")), count(lit(1))).head()
       Seq("n" -> (if (totals.isNullAt(0)) 0L else totals.getLong(0)),
         "v" -> totals.getLong(1))
@@ -280,7 +282,7 @@ object Quality {
     // same HALF_UP-on-decimal-string rounding as Spark's round(_, 0)
     val floorMicro = BigDecimal(-math.log(1.0 / nv) * 1e6)
       .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-    val model = spark.read.parquet(path).withColumn("nll_micro",
+    val model = Tables.parquet(spark, path).withColumn("nll_micro",
       round(-log((col("c") + 1).cast("double") / lit(nv)) * 1e6, 0)
         .cast("long"))
     // same measured broadcast gate as [[lmPerplexity]] — V comes from

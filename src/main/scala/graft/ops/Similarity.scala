@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import PersistedIndex.Kind
 
+import graft.Tables
+
 /** Approximate-nearest-neighbor similarity search over an embedding column
   * (`Array[Float]`) — north-star extension (SURVEY §7.2 M6).
   *
@@ -441,7 +443,7 @@ object Similarity {
     val centroids = readCentroids(spark, path, Kind.Ivf)
     val probes = probeCells(queries, centroids, nProbe)
     val wanted = probes.select("cell").distinct().collect().map(_.getInt(0))
-    val assigned = spark.read.parquet(path)
+    val assigned = Tables.parquet(spark, path)
       .where(col("cell").isin(wanted.toIndexedSeq: _*))
     scoreProbes(assigned, probes, k)
   }
@@ -598,7 +600,7 @@ object Similarity {
     // m is READ OFF the stored codes, never taken from the caller — an
     // append with a mismatched subspace count would silently corrupt the
     // table (same parameter-pinning contract as updateMinhashIndex)
-    val m = storedM(spark.read.parquet(codesPath(path).toString),
+    val m = storedM(Tables.parquet(spark, codesPath(path).toString),
       s"PQ index at $path")
     pqEncode(newEmbeddings, cb, m)
       .write.mode("append").parquet(codesPath(path).toString)
@@ -612,7 +614,7 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, k: Int = 10): DataFrame = {
     val cb = readPqCodebook(spark, path, Kind.Pq)
-    val codes = spark.read.parquet(codesPath(path).toString)
+    val codes = Tables.parquet(spark, codesPath(path).toString)
     pqScoreCodes(codes, queries, cb,
       storedM(codes, s"PQ index at $path"), k)
   }
@@ -667,7 +669,7 @@ object Similarity {
     val spark = newEmbeddings.sparkSession
     val centroids = readCentroids(spark, path, Kind.IvfPq)
     val cb = readPqCodebook(spark, path, Kind.IvfPq)
-    val m = storedM(spark.read.parquet(path), s"IVF-PQ index at $path")
+    val m = storedM(Tables.parquet(spark, path), s"IVF-PQ index at $path")
     graft.functions.VectorFunctions.register(spark)
     normalizedCorpus(newEmbeddings)
       .withColumn("cell",
@@ -690,7 +692,7 @@ object Similarity {
     val probes = probeCells(queries, centroids, nProbe)
       .select("query_id", "cell").distinct()
     val wanted = probes.select("cell").distinct().collect().map(_.getInt(0))
-    val index = spark.read.parquet(path)
+    val index = Tables.parquet(spark, path)
     val codes = index.where(col("cell").isin(wanted.toIndexedSeq: _*))
     // m comes off the UNFILTERED index: the probe filter legitimately
     // leaves zero rows for an empty query set, but a zero-row INDEX is

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Approximate-distinct sketches with ENGINE-REPRODUCIBLE hashing.
   *
   * `approx_count_distinct` exists in every engine, but each implements a
@@ -217,7 +219,7 @@ object Sketches {
       spark: org.apache.spark.sql.SparkSession, path: String,
       candidates: DataFrame, valueCol: String): DataFrame = {
     val (depth, width) = cmsStoredParams(spark, path)
-    val cells = spark.read.parquet(path)
+    val cells = Tables.parquet(spark, path)
       .groupBy(col("row"), col("bucket"))
       .agg(sum(col("cnt")).as("cnt"))
     cmsEstimate(cells, candidates, valueCol, depth, width)

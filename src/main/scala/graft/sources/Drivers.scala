@@ -1,15 +1,7 @@
 package graft.sources
 
-import scala.util.control.NonFatal
-
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.Footer
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{
-  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.types.StructType
 
 /** Driver registry / DSN dispatch (≅ klepto `pkg/reader/reader.go:99-115`,
   * `pkg/dumper/dumper.go:48-69`): each driver probes the DSN and the first
@@ -208,51 +200,12 @@ object Drivers {
           }
         r.load()
       case Resolved.File(path, "parquet") =>
-        val p = s"$path/$table.parquet"
-        footerSchema(spark, p).map(spark.read.schema(_).parquet(p))
-          .getOrElse(spark.read.format("parquet").load(p))
+        graft.Tables.parquet(spark, s"$path/$table.parquet")
       case Resolved.File(path, format) =>
         spark.read.format(format).load(s"$path/$table.$format")
       case Resolved.Console(_) =>
         throw Dsn.DsnError("os:// is a dump target, not a source")
     }
-
-  /** The schema Spark's parquet inference returns for `path`, read on the
-    * driver from the one footer that inference touches with schema merging
-    * off (`ParquetUtils.inferSchema`): `_common_metadata`, else
-    * `_metadata`, else the first data file by path. Spark runs that single
-    * footer read as a one-task job; here it is one listing and one footer
-    * read, converted by Spark's own `readSchemaFromFooter`. None — the
-    * caller falls back to Spark's inference — when schema merging is on,
-    * when the table has subdirectories (partition discovery), or when there
-    * is no footer to read, so Spark raises its own error. */
-  private[sources] def footerSchema(
-      spark: SparkSession, path: String): Option[StructType] = {
-    val conf = spark.sessionState.conf
-    if (conf.isParquetSchemaMergingEnabled) return None
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    try {
-      val listed = root.getFileSystem(hadoopConf).listStatus(root).toSeq
-      if (listed.exists(_.isDirectory)) return None
-      def named(n: String) = listed.find(_.getPath.getName == n)
-      named("_common_metadata").orElse(named("_metadata"))
-        .orElse(listed.filterNot(f => hidden(f.getPath.getName))
-          .sortBy(_.getPath.toString).headOption)
-        .map { f =>
-          val footer = ParquetFooterReader.readFooter(
-            HadoopInputFile.fromStatus(f, hadoopConf),
-            ParquetMetadataConverter.SKIP_ROW_GROUPS)
-          ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
-            new ParquetToSparkSchemaConverter(conf))
-        }
-    } catch { case NonFatal(_) => None }
-  }
-
-  /** Files Spark's file index skips: Hadoop's `_SUCCESS`/`.crc` markers and
-    * in-flight copies. */
-  private def hidden(name: String): Boolean =
-    name.startsWith("_") || name.startsWith(".") || name.endsWith("._COPYING_")
 
   /** Register a JDBC DSN as a Spark DSv2 catalog (`JDBCTableCatalog`) —
     * the TOTAL-pushdown leg (VERDICT r11 #2). The reference pushes LIMIT
@@ -551,7 +504,7 @@ object Drivers {
       var bytes = 0L
       while (files.hasNext) {
         val f = files.next()
-        if (!hidden(f.getPath.getName)) bytes += f.getLen
+        if (!graft.Tables.hidden(f.getPath.getName)) bytes += f.getLen
       }
       bytes
     }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.ops.Sketches
 
 /** Live token-distribution drift monitoring — the streaming face of
@@ -60,7 +61,7 @@ object StreamingDrift {
       topK: Int = 50, tokenCol: String = "token"): DataFrame = {
     val (depth, width) = Sketches.cmsStoredParams(spark, refPath)
     // appends sum-merge, exactly as cmsEstimateFromSketch serves them
-    val refCells = spark.read.parquet(refPath)
+    val refCells = Tables.parquet(spark, refPath)
       .groupBy(col("row"), col("bucket"))
       .agg(sum(col("cnt")).as("cnt"))
     def total(cells: DataFrame): Long = {

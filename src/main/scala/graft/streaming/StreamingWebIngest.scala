@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.ops.Materialize
 
 /** Streaming web-ingest: canonical-URL frontier dedup at the crawl edge —
@@ -89,7 +90,7 @@ object StreamingWebIngest {
     val staging = stagingPath(root)
     val rootOld = rootOldPath(root)
     fs.delete(staging, true)
-    spark.read.parquet(ledgerPath)
+    Tables.parquet(spark, ledgerPath)
       .select(col("canonical_url")).distinct()
       .repartition(numFiles)
       .write.mode("overwrite").parquet(staging.toString)
@@ -189,7 +190,7 @@ object StreamingWebIngest {
           else {
             // NULL-SAFE membership: plain equality never matches a NULL
             // canonical, so such rows would re-accept + re-ledger forever
-            val ledger = spark.read.parquet(ledgerPath)
+            val ledger = Tables.parquet(spark, ledgerPath)
               .select(col("canonical_url").as("__graft_seen_url"))
             batchKeep.join(ledger,
               col("canonical_url") <=> col("__graft_seen_url"),

@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.Tables
+
 /** Regenerates the default BPE merges resource
   * (`src/main/resources/graft/bpe_merges.txt`) by training
   * [[graft.ops.Bpe.train]] on a documents corpus — the provenance of the
@@ -12,7 +14,7 @@ object GenBpeMerges {
     require(args.length == 3, "usage: GenBpeMerges <sfDir> <numMerges> <outFile>")
     val spark = graft.Harness.session("graft-gen-bpe")
     spark.sparkContext.setLogLevel("WARN")
-    val docs = spark.read.parquet(s"${args(0)}/documents.parquet")
+    val docs = Tables.load(spark, args(0), "documents")
     val merges = graft.ops.Bpe.train(docs, args(1).toInt)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(args(2)),

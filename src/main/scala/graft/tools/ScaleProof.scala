@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Harness
+import graft.Tables
 
 /** Two-decade scale proof for the dedup/ANN/layout family: synthesizes
   * derived corpora at 10× and 100× the sf0.1 volume (deterministic
@@ -64,7 +65,7 @@ object ScaleProof {
       if (marker.exists()) return
       println(s"[scale-proof] synthesizing ${k}x events at $out")
       val copies = spark.range(k).toDF("copy")
-      val ev = spark.read.parquet(s"$base/events.parquet")
+      val ev = Tables.load(spark, base, "events")
       val nUsers = ev.agg(max("user_id")).head.getLong(0) + 1
       val nEv = ev.agg(max("event_id")).head.getLong(0) + 1
       ev.crossJoin(copies)
@@ -88,7 +89,7 @@ object ScaleProof {
       if (marker.exists()) return
       println(s"[scale-proof] synthesizing ${k}x customer at $out")
       val copies = spark.range(k).toDF("copy")
-      val cust = spark.read.parquet(s"$base/customer.parquet")
+      val cust = Tables.load(spark, base, "customer")
       val nCust = cust.agg(max("c_custkey")).head.getLong(0) + 1
       cust.crossJoin(copies)
         .select((cust.columns.map {
@@ -129,7 +130,7 @@ object ScaleProof {
       new java.io.File(s"$out/_scaleproof_ok_customer").delete()
       val copies = spark.range(k).toDF("copy")
 
-      val docs = spark.read.parquet(s"$base/documents.parquet")
+      val docs = Tables.load(spark, base, "documents")
       val nDocs = docs.agg(max("doc_id")).head.getLong(0) + 1
       docs.crossJoin(copies)
         .select(
@@ -144,7 +145,7 @@ object ScaleProof {
         .repartition(math.max(8, k / 2))
         .write.mode("overwrite").parquet(s"$out/documents.parquet")
 
-      val embsIn = spark.read.parquet(s"$base/embeddings.parquet")
+      val embsIn = Tables.load(spark, base, "embeddings")
       val nVecs = embsIn.agg(max("vec_id")).head.getLong(0) + 1
       embsIn.crossJoin(copies)
         .select(
@@ -159,7 +160,7 @@ object ScaleProof {
         .repartition(math.max(4, k / 4))
         .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
 
-      val orders = spark.read.parquet(s"$base/orders.parquet")
+      val orders = Tables.load(spark, base, "orders")
       val nOrd = orders.agg(max("o_orderkey")).head.getLong(0) + 1
       orders.crossJoin(copies)
         .select((orders.columns.map {
@@ -169,7 +170,7 @@ object ScaleProof {
         .repartition(math.max(8, k / 2))
         .write.mode("overwrite").parquet(s"$out/orders.parquet")
 
-      val li = spark.read.parquet(s"$base/lineitem.parquet")
+      val li = Tables.load(spark, base, "lineitem")
       li.crossJoin(copies)
         .select((li.columns.map {
           case "l_orderkey" => (col("l_orderkey") + col("copy") * nOrd).as("l_orderkey")
@@ -456,7 +457,7 @@ object ScaleProof {
       graft.ops.Dedup.resolveClustersCounted(pairs)._1  // loop core, as ns81
     }
     def ns37Scaled(dir: String): DataFrame = {
-      val e = spark.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.load(spark, dir, "embeddings")
       val n = e.count()
       graft.ops.Dedup.semanticDedup(e,
         numCentroids = math.max(16, (n / 250).toInt))
@@ -470,19 +471,19 @@ object ScaleProof {
     // exactly as the ns37 entry scales its quantizer.
     def ns4Capped(dir: String): DataFrame =
       graft.ops.Dedup.ngramJaccard(
-        spark.read.parquet(s"$dir/documents.parquet"), maxDocFreq = 256)
+        Tables.load(spark, dir, "documents"), maxDocFreq = 256)
     // the ns21/ns152 benchmark split mirrors the registered queries
     // (doc_id % 50), so the copy-tagged scale corpora grow benchmark
     // vocabulary linearly with the corpus — exactly the shape where the
     // prefilter must keep paying
     def ns21Shuffle(dir: String): DataFrame = {
-      val d = spark.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.load(spark, dir, "documents")
       graft.ops.Dedup.decontaminate(
         d.where(col("doc_id") % 50 =!= 0), d.where(col("doc_id") % 50 === 0),
         shingleK = 4, broadcastBenchmark = Some(false))
     }
     def ns152Shuffle(dir: String): DataFrame = {
-      val d = spark.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.load(spark, dir, "documents")
       graft.ops.Dedup.decontaminateBloom(
         d.where(col("doc_id") % 50 =!= 0), d.where(col("doc_id") % 50 === 0),
         shingleK = 4, broadcastBenchmark = Some(false))
@@ -495,9 +496,9 @@ object ScaleProof {
     // ≤ hashes × keys, far under the raw key+payload broadcast it stands
     // in for.
     def ns55Scaled(dir: String): DataFrame = {
-      val l = spark.read.parquet(s"$dir/lineitem.parquet")
+      val l = Tables.load(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"))
-      val o = spark.read.parquet(s"$dir/orders.parquet")
+      val o = Tables.load(spark, dir, "orders")
         .where(col("o_totalprice") > 150000)
         .select(col("o_orderkey").as("l_orderkey"))
       val keys = o.count()
@@ -518,7 +519,7 @@ object ScaleProof {
     // the regex + checksum work through an aggregate over its outputs
     def ns66Forced(dir: String): DataFrame =
       graft.ops.Privacy.scrubCreditCards(
-        spark.read.parquet(s"$dir/documents.parquet")
+        Tables.load(spark, dir, "documents")
           .select(col("doc_id"), concat(col("text"),
             lit(" pay 4111111111111111 ref "),
             (lit(4242420000000000L) + col("doc_id") % 100000).cast("string"),
@@ -548,8 +549,8 @@ object ScaleProof {
     // events fact side is what grows, which is the scaling question
     def ns113Scaled(dir: String): DataFrame = {
       import graft.ops.Integrity.FkEdge
-      val ev = spark.read.parquet(s"$dir/events.parquet")
-      val cust = spark.read.parquet(s"$dir/customer.parquet")
+      val ev = Tables.load(spark, dir, "events")
+      val cust = Tables.load(spark, dir, "customer")
       graft.ops.Integrity.fkOrphans(spark, Seq(
           FkEdge("events->customer", ev, "user_id", cust, "c_custkey"),
           FkEdge("events->customer_n0", ev, "user_id",
@@ -680,7 +681,7 @@ object ScaleProof {
 
     def ns63Forced(dir: String): DataFrame =
       graft.ops.TextAnalysis.extractHtml(
-        spark.read.parquet(s"$dir/documents.parquet")
+        Tables.load(spark, dir, "documents")
           .select(col("doc_id"), concat(
             lit(graft.queries.Text.ns63Chrome1), col("text"),
             lit(graft.queries.Text.ns63Chrome2)).as("text")))
@@ -704,7 +705,7 @@ object ScaleProof {
           sum(col("dropped_lines")).as("dropped"))
 
     def ns69Scaled(dir: String): DataFrame = {
-      val e = spark.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.load(spark, dir, "embeddings")
       val labeled = if (e.columns.contains("label")) e
         else e.withColumn("label",
           pmod(hash(col("vec_id")), lit(10)).cast("int"))
@@ -844,7 +845,7 @@ object ScaleProof {
     }
 
     // ---- report + gate ---------------------------------------------------
-    val nb = spark.read.parquet(s"$base/documents.parquet").count()
+    val nb = Tables.load(spark, base, "documents").count()
     println(s"\n[scale-proof] base=$base docs=$nb factors=${factors.mkString(",")}")
     println("| query | size | rows | sec | shuffle w/r GiB | spill mem/disk GiB | max-stage shW GiB | row× | time× | verdict |")
     println("|---|---|---|---|---|---|---|---|---|---|")

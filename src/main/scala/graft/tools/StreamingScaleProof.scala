@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.types._
 
+import graft.Tables
+
 /** Two-decade BOUNDED-STATE proof for the streaming twins
   * ([[graft.streaming.StreamingSessions]] /
   * [[graft.streaming.StreamingEvents]]) — the measurement VERDICT r6
@@ -87,7 +89,7 @@ object StreamingScaleProof {
     import spark.implicits._
 
     val canon = graft.ops.Materialize.cached(graft.ops.Events
-      .tsMicros(spark.read.parquet(s"$base/events.parquet"))
+      .tsMicros(Tables.load(spark, base, "events"))
       .select("user_id", "event_id", "ts", "event_type", "value")
       .orderBy("ts", "event_id"))
     val (t0, t1, nEv) = {

@@ -106,9 +106,10 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 /** Keeps the harness forks from growing back: session building and
-  * listener registration live in `Harness.scala` only, and materialising
-  * or freeing snapshots in `Materialize.scala` only. The benchmark's own
-  * sources are not scanned. */
+  * listener registration live in `Harness.scala` only, materialising or
+  * freeing snapshots in `Materialize.scala` only, and schema-less parquet
+  * opens in `Tables.scala` only. The benchmark's own sources are not
+  * scanned. */
 class HarnessGuardSpec extends AnyFunSuite {
   private def offenders(roots: Seq[String], pattern: String,
       owner: String): Seq[String] =
@@ -138,5 +139,13 @@ class HarnessGuardSpec extends AnyFunSuite {
       "Materialize.scala")
     assert(hits.isEmpty, "make snapshots with Materialize.local or " +
       s"Materialize.cached, free them with Materialize.release or scope: $hits")
+  }
+
+  test("only Tables opens parquet without a schema in main") {
+    val hits = offenders(Seq("src/main/scala"),
+      """\.read\s*\.\s*parquet\(|format\("parquet"\)\s*\.\s*load\(""",
+      "Tables.scala")
+    assert(hits.isEmpty, "open parquet with Tables.parquet or Tables.load, " +
+      s"which read the schema from a footer instead of running a job: $hits")
   }
 }

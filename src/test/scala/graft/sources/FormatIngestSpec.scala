@@ -22,9 +22,10 @@ import graft.sinks.ParquetSink
   *     land on whatever type that format defines; `Events.tsMicros`
   *     must adapt).
   *
-  * A parquet table opened through `Drivers.read` takes its schema from
-  * the one footer Spark's inference would read, on the driver, and must
-  * get exactly the schema `spark.read.parquet` infers.
+  * A parquet table opened through `Tables.parquet` (which `Tables.load`,
+  * `Tables.loadAs` and `Drivers.read` all use) takes its schema from the
+  * one footer Spark's inference would read, on the driver, and must get
+  * exactly the schema `spark.read.parquet` infers.
   */
 class FormatIngestSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
@@ -120,23 +121,59 @@ class FormatIngestSpec extends AnyFunSuite with TempDirs {
   }
 
   private def read(dir: String, table: String) =
-    Drivers.read(spark, Resolved.File(dir, "parquet"), table, JdbcReadOptions())
+    Tables.parquet(spark, s"$dir/$table.parquet")
 
   private def inferred(dir: String, table: String) =
     spark.read.parquet(s"$dir/$table.parquet").schema
 
   test("footer schema: equals Spark's inferred schema for every sf0.001 table") {
     for (t <- Tables.all) {
-      assert(Drivers.footerSchema(spark, s"$sf/$t.parquet").isDefined, t)
+      assert(Tables.footerSchema(spark, s"$sf/$t.parquet").isDefined, t)
       assert(read(sf, t).schema == inferred(sf, t), t)
     }
   }
 
-  test("footer schema: opening every sf0.001 table runs no Spark job") {
+  /** Spark jobs `open` runs for every sf0.001 table. */
+  private def openJobs(open: String => DataFrame): Long = {
     val work = Harness.work(spark)
     val before = work.snapshot()
-    Tables.all.foreach(read(sf, _))
-    assert(work.snapshot(before).jobs == 0)
+    Tables.all.foreach(open)
+    work.snapshot(before).jobs
+  }
+
+  test("footer schema: opening every sf0.001 table runs no Spark job") {
+    assert(openJobs(Drivers.read(spark, Resolved.File(sf, "parquet"), _,
+      JdbcReadOptions())) == 0)
+  }
+
+  test("footer schema: Tables.load of every sf0.001 table runs no Spark job") {
+    assert(openJobs(Tables.load(spark, sf, _)) == 0)
+  }
+
+  test("footer schema: appended phash hashes and minhash bands/sets open as Spark infers them") {
+    import spark.implicits._
+    val dir = tempDir("graft_footer_idx").toString
+    def media(ids: Seq[Long]) = ids.map(i =>
+      (i, Array.tabulate[Byte](300)(j => ((j * (i + 3) * 37 + i) % 251).toByte)))
+      .toDF("doc_id", "content")
+    val phash = s"$dir/phash"
+    graft.ops.Perceptual.writePhashIndex(media(Seq(1L, 2L)), phash)
+    Seq(Seq(3L, 4L), Seq(5L)).foreach(ids => graft.ops.Perceptual
+      .updatePhashIndex(graft.ops.Perceptual.dhash63(media(ids)), phash))
+    val hashFiles = new java.io.File(s"$phash/hashes").list()
+      .count(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    assert(hashFiles >= 3, hashFiles)
+    val minhash = s"$dir/minhash"
+    graft.ops.Dedup.writeMinhashIndex(Tables.load(spark, sf, "documents").limit(20),
+      minhash)
+    for (p <- Seq(s"$phash/hashes", s"$minhash/bands", s"$minhash/sets")) {
+      assert(Tables.footerSchema(spark, p).isDefined, p)
+      val ours = Tables.parquet(spark, p)
+      val sparks = spark.read.parquet(p)
+      assert(ours.schema == sparks.schema, p)
+      assert(sortedRows(ours) == sortedRows(sparks), p)
+    }
+    assert(Tables.parquet(spark, s"$phash/hashes").count() == 5)
   }
 
   test("footer schema: ParquetSink output with markers, NTZ, DECIMAL, ARRAY<FLOAT>, empty") {
@@ -157,7 +194,7 @@ class FormatIngestSpec extends AnyFunSuite with TempDirs {
     val names = new java.io.File(s"$dir/typed.parquet").list().toSet
     assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")), names)
     for (t <- Seq("typed", "empty")) {
-      assert(Drivers.footerSchema(spark, s"$dir/$t.parquet").isDefined, t)
+      assert(Tables.footerSchema(spark, s"$dir/$t.parquet").isDefined, t)
       assert(read(dir, t).schema == inferred(dir, t), t)
     }
     assert(read(dir, "typed").orderBy("id").collect().toSeq ==
@@ -167,7 +204,7 @@ class FormatIngestSpec extends AnyFunSuite with TempDirs {
   test("footer schema falls back: schema merging on") {
     spark.conf.set("spark.sql.parquet.mergeSchema", "true")
     try {
-      assert(Drivers.footerSchema(spark, s"$sf/region.parquet").isEmpty)
+      assert(Tables.footerSchema(spark, s"$sf/region.parquet").isEmpty)
       assert(read(sf, "region").schema == inferred(sf, "region"))
     } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
   }
@@ -176,7 +213,7 @@ class FormatIngestSpec extends AnyFunSuite with TempDirs {
     val dir = tempDir("graft_footer_part").toString
     spark.read.parquet(s"$sf/nation.parquet").write
       .partitionBy("n_regionkey").parquet(s"$dir/nation.parquet")
-    assert(Drivers.footerSchema(spark, s"$dir/nation.parquet").isEmpty)
+    assert(Tables.footerSchema(spark, s"$dir/nation.parquet").isEmpty)
     assert(read(dir, "nation").schema == inferred(dir, "nation"))
     assert(read(dir, "nation").schema.fieldNames.contains("n_regionkey"))
   }
@@ -186,7 +223,7 @@ class FormatIngestSpec extends AnyFunSuite with TempDirs {
     val t = new java.io.File(s"$dir/bare.parquet")
     t.mkdir()
     new java.io.File(t, "_SUCCESS").createNewFile()
-    assert(Drivers.footerSchema(spark, t.getPath).isEmpty)
+    assert(Tables.footerSchema(spark, t.getPath).isEmpty)
     val ours = intercept[AnalysisException](read(dir, "bare"))
     val sparks = intercept[AnalysisException](inferred(dir, "bare"))
     assert(ours.getMessage == sparks.getMessage)
