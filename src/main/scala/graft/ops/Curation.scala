@@ -272,18 +272,6 @@ object Curation {
       .select(col("doc_id"), col("n_content_copies"), col("kept_lines"))
   }
 
-  /** Release mix report with subtotals — the drill-down companion of
-    * [[describeCorpus]]'s single card row: doc and token counts at every
-    * (source, lang) cell, per-source subtotals, and the grand total, in
-    * ONE pass via ROLLUP grouping sets. `grouping()` marker columns
-    * disambiguate a subtotal row's NULL from a genuinely-NULL data value
-    * (the null-group policy the privacy family established — a report
-    * that conflates the two misstates the mix).
-    *
-    * Scale shape: Catalyst expands the rollup to its 3 grouping sets
-    * BEFORE partial aggregation, so the shuffle carries
-    * (sources×langs + sources + 1) partials, never rows; exact integer
-    * outputs only. */
   /** M8 — C4-style line-level policy filter (Raffel et al. 2020 §2.2,
     * the public C4 cleaning recipe): a web page is cleaned LINE by line
     * — keep a line only if it (a) ends in terminal punctuation
@@ -323,6 +311,18 @@ object Curation {
       (pageOk && size(kept) >= minLines).as("keep"))
   }
 
+  /** Release mix report with subtotals — the drill-down companion of
+    * [[describeCorpus]]'s single card row: doc and token counts at every
+    * (source, lang) cell, per-source subtotals, and the grand total, in
+    * ONE pass via ROLLUP grouping sets. `grouping()` marker columns
+    * disambiguate a subtotal row's NULL from a genuinely-NULL data value
+    * (the null-group policy the privacy family established — a report
+    * that conflates the two misstates the mix).
+    *
+    * Scale shape: Catalyst expands the rollup to its 3 grouping sets
+    * BEFORE partial aggregation, so the shuffle carries
+    * (sources×langs + sources + 1) partials, never rows; exact integer
+    * outputs only. */
   def releaseRollup(docs: DataFrame): DataFrame =
     docs
       .select(col("source"), col("lang"),

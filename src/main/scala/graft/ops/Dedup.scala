@@ -150,7 +150,6 @@ object Dedup {
       numHashes: Int = 16,
       rowsPerBand: Int = 4,
       threshold: Double = 0.5,
-      hashVocabulary: Option[Boolean] = None,
       broadcastThresholdBytes: Long = defaultBroadcastBytes,
       maxBandFreq: Long = Long.MaxValue): DataFrame = {
     require(numHashes % rowsPerBand == 0, "numHashes % rowsPerBand != 0")
@@ -167,17 +166,15 @@ object Dedup {
       else raw
     }
 
-    // hashVocabulary: the 16 salted md5s are computed over the DISTINCT
-    // shingle vocabulary once, then mapped back onto postings —
-    // natural-language n-gram vocabularies are Zipf-compressed relative to
-    // postings (16× less hash work where each shingle recurs). The vocab
-    // side is a broadcast build; values are bit-identical to hashing per
-    // posting, so oracle hashes don't move. AUTO-SIZED by default: when the
-    // estimated postings size exceeds `broadcastThresholdBytes` (a vocab
-    // broadcast would not fit), hashing falls back map-side — same values,
-    // no broadcast. Pass Some(true/false) to pin the decision.
-    val useVocab = hashVocabulary.getOrElse(
-      postingsEst <= broadcastThresholdBytes)
+    // the 16 salted md5s are computed over the DISTINCT shingle
+    // vocabulary once, then mapped back onto postings — natural-language
+    // n-gram vocabularies are Zipf-compressed relative to postings (16×
+    // less hash work where each shingle recurs). The vocab side is a
+    // broadcast build; values are bit-identical to hashing per posting, so
+    // oracle hashes don't move. Sized from the estimate: when the postings
+    // exceed `broadcastThresholdBytes` (a vocab broadcast would not fit),
+    // hashing runs map-side — same values, no broadcast.
+    val useVocab = postingsEst <= broadcastThresholdBytes
     val posted =
       if (!useVocab)
         sh.select(col("doc_id") +: (0 until numHashes).map(s =>
@@ -587,19 +584,17 @@ object Dedup {
     * `broadcastThresholdBytes`, and otherwise falls back to a shuffled
     * join, where the pair aggregation re-acquires its exchange
     * (correctness unchanged). Pass `broadcastPostings = Some(true/false)`
-    * to pin the decision. `reuseShingles` materializes the postings once
-    * (lazy localCheckpoint) for its three consumers instead of recomputing
+    * to pin the decision. The postings are materialized once (lazy
+    * localCheckpoint) for their three consumers instead of recomputing
     * scan+explode+distinct per consumer. */
   def ngramJaccard(
       docs: DataFrame,
       shingleK: Int = 2,
       threshold: Double = 0.5,
       maxDocFreq: Long = Long.MaxValue,
-      reuseShingles: Boolean = true,
       broadcastPostings: Option[Boolean] = None,
       broadcastThresholdBytes: Long = defaultBroadcastBytes): DataFrame = {
-    val sh0raw = shingles(docs, shingleK)
-    val sh0 = if (reuseShingles) Materialize.local(sh0raw, eager = false) else sh0raw
+    val sh0 = Materialize.local(shingles(docs, shingleK), eager = false)
     val sh =
       if (maxDocFreq == Long.MaxValue) sh0
       else {
@@ -766,8 +761,9 @@ object Dedup {
 
   /** The corpus with every [[decontaminate]]-flagged doc removed — the
     * writable training set. Anti-join on doc_id; the flagged-id side skips
-    * the report's counts and ordering (just the tainted ids). */
-  /** `bloomBlob` (r12): a [[benchmarkBloom]] filter to gate the corpus
+    * the report's counts and ordering (just the tainted ids).
+    *
+    * `bloomBlob` (r12): a [[benchmarkBloom]] filter to gate the corpus
     * postings through BEFORE the exact tainted join — the
     * [[decontaminateBloom]] prefilter for the REMOVE shape. Semantics
     * unchanged (false positives die in the exact join); built once and
@@ -890,22 +886,17 @@ object Dedup {
     * collect_set holds matched start positions for TAINTED docs only,
     * bounded by doc length. Grams repeated only WITHIN one document are
     * untouched (that is [[graft.ops.TextAnalysis.repetitionStats]]'s job). */
-  def dedupSpans(
-      corpus: DataFrame, shingleK: Int = 4,
-      reuseGrams: Boolean = true): DataFrame = {
+  def dedupSpans(corpus: DataFrame, shingleK: Int = 4): DataFrame = {
     // keeper table from the per-doc-DISTINCT gram stream ([[shingles]]'s
     // in-row array_distinct): count(1) over per-doc-distinct rows IS
     // countDistinct(doc_id) per gram, with a plain (min, count) partial
     // state — one row per gram per task crosses the keeper exchange,
     // where the old countDistinct's distinct-aggregate shuffled the full
     // (gram, doc_id) stream. The positional stream is then down to its
-    // one probe consumer, so the old two-consumer checkpoint is moot;
-    // `reuseGrams` is kept for API compatibility and is a NO-OP (both
-    // settings produce the same plan, which scans the corpus twice:
-    // once for the per-doc-distinct keeper stream, once for the
+    // one probe consumer, so no checkpoint: the plan scans the corpus
+    // twice, once for the per-doc-distinct keeper stream and once for the
     // positional probe stream — the deliberate trade for dropping the
-    // checkpoint; ADVICE r16 #4).
-    val _ = reuseGrams
+    // checkpoint (ADVICE r16 #4).
     val keepers = shingles(corpus, shingleK).groupBy(col("shingle"))
       .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("n_docs"))
       .where(col("n_docs") >= 2)

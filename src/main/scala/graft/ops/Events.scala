@@ -270,25 +270,30 @@ object Events {
     * (bucket = micros DIV `bucketMicros`; rates are the consumer's
     * division, kept out of the engine so the oracle mirrors exactly).
     *
-    * Scale shape: events collapse to distinct (user, bucket) pairs in ONE
-    * user-keyed aggregation whose partitioning the first-seen min() and
-    * the cohort join then REUSE (no second exchange of the pair table);
-    * the final (cohort, offset) rollup shuffles cohort-cardinality
-    * partials only. A power user contributes one row per active bucket,
-    * never an event list. */
+    * Scale shape: ONE user-keyed aggregation collects each user's set of
+    * active buckets and its first-seen min(); exploding the set yields
+    * every distinct (user, bucket) pair exactly once beside its cohort,
+    * so the (cohort, offset) rollup is a plain count that shuffles
+    * cohort-cardinality partials only. No join: the pair table is read
+    * once, and the plan has no join strategy for adaptive execution to
+    * re-decide from run to run. A power user contributes one set of
+    * active buckets, never an event list. */
   def retentionCohorts(
       events: DataFrame,
       bucketMicros: Long = 7L * 24 * 3600 * 1000000L): DataFrame = {
     require(bucketMicros > 0, "bucketMicros must be positive")
-    val pairs = tsMicros(events)
+    tsMicros(events)
       .select(col("user_id"),
         expr(s"ts DIV ${bucketMicros}L").as("bucket"))
-      .distinct()
-    val firstSeen = pairs.groupBy(col("user_id"))
-      .agg(min(col("bucket")).as("cohort"))
-    pairs.join(firstSeen, Seq("user_id"))
+      .where(col("user_id").isNotNull)
+      .groupBy(col("user_id"))
+      // the struct keeps a NULL bucket (NULL ts) in the set as the one
+      // distinct pair it is; min() skips it, as the cohort must
+      .agg(min(col("bucket")).as("cohort"),
+        collect_set(struct(col("bucket"))).as("buckets"))
+      .select(col("cohort"), explode(col("buckets.bucket")).as("bucket"))
       .groupBy(col("cohort"), (col("bucket") - col("cohort")).as("week_offset"))
-      .agg(count_distinct(col("user_id")).as("active_users"))
+      .agg(count(lit(1)).as("active_users"))
   }
 
   /** E4 — ordered funnel analysis: for each user, how far did they get

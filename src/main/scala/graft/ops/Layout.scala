@@ -224,6 +224,7 @@ object Layout {
 
   private def readMeta(spark: SparkSession, path: String): LayoutMeta = {
     val root = new org.apache.hadoop.fs.Path(path)
+    PersistedIndex.present(spark, root)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (partitionCols, clusterCols, zCols, zBits) =
       if (fs.exists(metaPath(root))) {
@@ -395,9 +396,10 @@ object Layout {
     * applied, so partition columns keep their written types (no directory-
     * name type inference). */
   def read(spark: SparkSession, path: String): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    PersistedIndex.present(spark, root)
     val schema = org.apache.spark.sql.types.DataType
-      .fromJson(PersistedIndex.readText(spark,
-        schemaPath(new org.apache.hadoop.fs.Path(path))))
+      .fromJson(PersistedIndex.readText(spark, schemaPath(root)))
       .asInstanceOf[org.apache.spark.sql.types.StructType]
     spark.read.schema(schema).parquet(path)
   }

@@ -84,19 +84,6 @@ object Perceptual {
   def strideHash63(content: Array[Byte]): Long =
     dhashOfGrid(ByteStrideGridDecoder.decode(content))
 
-  /** Hashing pass: (doc_id, content binary) → (doc_id, phash long). No
-    * shuffle; output partitioning == input partitioning.
-    *
-    * Two execution paths with ONE definition of the math:
-    *  - the default byte-stride decoder runs as the codegen'd
-    *    [[graft.functions.Phash63]] expression — a pure PROJECTION, so
-    *    upstream codegen (frame Generate, scan) and downstream partial
-    *    aggregation fuse into one whole-stage span instead of splitting
-    *    around a mapPartitions serialization barrier;
-    *  - any other decoder (real codecs: ImageIO, javax.sound) runs the
-    *    per-partition batched imperative pass, the documented-legit
-    *    mapPartitions case. Null blobs hash to 0 on both paths (the
-    *    decoder all-zero-grid contract). */
   /** P1b — scene-cut detection: per video, the Hamming distance between
     * CONSECUTIVE sampled keyframes' dHashes, rolled up to cut counts —
     * the segmentation step that decides WHERE a video pipeline samples
@@ -175,6 +162,19 @@ object Perceptual {
         max(when(col("s") === 8, col("band"))).as("end_band"))
   }
 
+  /** Hashing pass: (doc_id, content binary) → (doc_id, phash long). No
+    * shuffle; output partitioning == input partitioning.
+    *
+    * Two execution paths with ONE definition of the math:
+    *  - the default byte-stride decoder runs as the codegen'd
+    *    [[graft.functions.Phash63]] expression — a pure PROJECTION, so
+    *    upstream codegen (frame Generate, scan) and downstream partial
+    *    aggregation fuse into one whole-stage span instead of splitting
+    *    around a mapPartitions serialization barrier;
+    *  - any other decoder (real codecs: ImageIO, javax.sound) runs the
+    *    per-partition batched imperative pass, the documented-legit
+    *    mapPartitions case. Null blobs hash to 0 on both paths (the
+    *    decoder all-zero-grid contract). */
   def dhash63(
       media: DataFrame,
       decoder: GridDecoder = ByteStrideGridDecoder): DataFrame = {
@@ -230,7 +230,7 @@ object Perceptual {
     // both join sides derive from ONE materialization of (doc_id, phash):
     // without this the self-join re-runs the upstream lineage on each
     // side, and when that lineage is the dhash63 decode pass the blobs
-    // decode TWICE (the ngramJaccard reuseShingles move; 16 bytes/row
+    // decode TWICE (the ngramJaccard postings-checkpoint move; 16 bytes/row
     // keeps the checkpoint corpus-cheap)
     val hs = if (reuseHashes) Materialize.local(hashes, eager = false) else hashes
     val probe = dropHotBuckets(bandKeys(hs, bands), maxBandFreq)
@@ -430,26 +430,25 @@ object Perceptual {
     * replay ([[graft.streaming.StreamingPerceptual]]) can leave duplicate
     * hash rows (harmless for decisions, not for scan cost). The compact
     * rewrites the data DEDUPED (exact (doc_id, phash) duplicates only)
-    * into `numFiles` files and publishes by the crash-safe
-    * [[PersistedIndex.publish]] — no step deletes the last copy; a failed
-    * build deletes only its staging. Decisions are unchanged by
-    * construction; the meta is untouched. Single
-    * maintainer per index, run between ticks (the
-    * [[graft.streaming.StreamingWebIngest]] ledger-compaction contract). */
+    * into `numFiles` files, and rebuilds the whole index through
+    * [[PersistedIndex.build]] with its meta unchanged — no step deletes
+    * the last copy, a failed build deletes only its staging, and a
+    * compaction killed mid-swap is put back by the next probe. Decisions
+    * are unchanged by construction. Single maintainer per index, run
+    * between ticks (the [[graft.streaming.StreamingWebIngest]]
+    * ledger-compaction contract). */
   def compactPhashIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       numFiles: Int = 1): Unit = {
     require(numFiles >= 1, "numFiles must be >= 1")
-    PersistedIndex.read(spark, path, Kind.Phash)
-    // snapshot (eager) before any rewrite: the plan reads the very files
-    // the publish replaces
-    val snap = Materialize.local(
-      Tables.parquet(spark, s"$path/hashes").distinct(), eager = true)
-    try PersistedIndex.publish(spark,
-        new org.apache.hadoop.fs.Path(s"$path/hashes")) { tmp =>
-      snap.coalesce(numFiles).write.mode("overwrite").parquet(tmp.toString)
-    } finally Materialize.release(snap)
+    val meta = PersistedIndex.read(spark, path, Kind.Phash)
+    // the staged write has read every row before the old index moves
+    PersistedIndex.build(spark, path, Kind.Phash, meta.fingerprint) { tmp =>
+      Tables.parquet(spark, s"$path/hashes").distinct().coalesce(numFiles)
+        .write.parquet(s"$tmp/hashes")
+      meta.params.toSeq
+    }
   }
 
   /** Index probe — which docs of `newMedia` are NOT a near-dup (hamming ≤

@@ -5,12 +5,13 @@ import java.nio.charset.StandardCharsets
 import scala.collection.immutable.ListMap
 
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The persisted-index lifecycle, once for every index family (minhash,
   * IVF, PQ, IVF-PQ, phash, grid, CMS, LM): one sidecar format, one
-  * staleness gate, one crash-safe publish, one copy and one restamp. A
-  * family keeps only its data writer, its probe and its parameters.
+  * staleness gate, one crash-safe publish and its restore, one ingest
+  * step, one copy and one restamp. A family keeps only its data writer,
+  * its probe and its parameters.
   *
   * Every index directory carries one `_meta.txt` of `key=value` lines:
   * `kind`, the family's parameters, and an optional `fingerprint` of the
@@ -67,10 +68,14 @@ object PersistedIndex {
     finally in.close()
   }
 
-  /** The index's meta, or None when `path` holds no `_meta.txt`. */
+  /** The index's meta, or None when `path` holds no `_meta.txt`. A
+    * missing index is first put back if a killed [[publish]] set it aside
+    * ([[present]]); a present one costs the one `exists` of its meta. */
   def meta(spark: SparkSession, path: String): Option[Meta] = {
     val p = metaPath(path)
-    if (!fs(spark, p).exists(p)) None
+    val pfs = fs(spark, p)
+    if (!pfs.exists(p) && !(present(pfs, new Path(path)) && pfs.exists(p)))
+      None
     else {
       val kv = readText(spark, p).split("\n").toSeq
         .filter(_.contains("=")).map(_.split("=", 2)).map(a => a(0) -> a(1))
@@ -143,22 +148,28 @@ object PersistedIndex {
     * sibling; the old copy renames aside, the staged one renames in, and
     * only then is the old copy deleted. A failed write or rename throws
     * with `dest` as it was, and the staging dir is deleted on every path.
-    * One maintainer per target. */
+    * A process killed between the two renames leaves `dest` missing and
+    * the old copy aside: the next reader puts it back ([[present]]), and
+    * the next publish does so before it deletes what the killed one
+    * left. One maintainer per target. */
   def publish(spark: SparkSession, dest: Path)(write: Path => Unit): Unit =
     publish(fs(spark, dest), dest)(write)
 
   private[ops] def publish(fs: FileSystem, dest: Path)(
       write: Path => Unit): Unit = {
-    val tmp = sibling(dest, "tmp")
+    val (tmp, bak) = (sibling(dest, "tmp"), sibling(dest, "bak"))
+    // what a killed publish left: its set-aside copy goes back in place,
+    // and only once `dest` is there is a stale aside copy dropped
+    if (present(fs, dest)) fs.delete(bak, true)
+    fs.delete(tmp, true)
     try {
       write(tmp)
-      val bak = sibling(dest, "bak")
       val hadOld = fs.exists(dest)
       if (hadOld && !fs.rename(dest, bak))
         throw new java.io.IOException(s"cannot move $dest aside to publish")
       // a rename in that fails or throws puts the old copy back; should
-      // that fail too, the data survives in the hidden `.bak` sibling
-      def restore(): Unit = if (hadOld && !fs.exists(dest)) fs.rename(bak, dest)
+      // that fail too, the next reader or publish puts it back
+      def restore(): Unit = if (hadOld) present(fs, dest)
       val in = try fs.rename(tmp, dest)
         catch { case e: Throwable => restore(); throw e }
       if (!in) {
@@ -171,9 +182,52 @@ object PersistedIndex {
     }
   }
 
+  /** Whether `dest` exists, once the copy a [[publish]] killed between its
+    * two renames set aside is renamed back. Only restores, and only a
+    * missing `dest`: one `exists` when nothing is missing, no listing. */
+  def present(spark: SparkSession, dest: Path): Boolean =
+    present(fs(spark, dest), dest)
+
+  private def present(fs: FileSystem, dest: Path): Boolean =
+    fs.exists(dest) || {
+      val bak = sibling(dest, "bak")
+      fs.exists(bak) && fs.rename(bak, dest)
+    }
+
+  // one fixed name per role, so recovery finds them without a listing;
+  // a publish clears both before it starts, so at most one of each exists
   private def sibling(dest: Path, tag: String): Path =
-    new Path(dest.getParent, s".${dest.getName}.$tag-" +
-      java.util.UUID.randomUUID().toString.take(8))
+    new Path(dest.getParent, s".${dest.getName}.$tag-publish")
+
+  // ---- the ingest step ---------------------------------------------------
+
+  /** One ingest tick against a persisted index, in the order every
+    * index-backed dedup shares: fix the rows `probe` lets through, append
+    * them to `sink` when one is given, then to the index through
+    * `update`, and return them. The snapshot gives the sink and the index
+    * the same rows, and keeps the probe — a plan over the index's files —
+    * from seeing the update.
+    *
+    * Sink before index: a tick that dies between the two appends is
+    * replayed, its probe lets the same rows through again, and the sink
+    * gets a duplicate row (consumers key on the id). The reverse order
+    * would index rows the sink never got, and the replay would drop them
+    * for good.
+    *
+    * With a sink (a streaming micro-batch) the snapshot is taken now, and
+    * an empty one writes nothing. Without one (a batch tick whose caller
+    * unions the result) it is taken lazily, so the update's first append
+    * fills it and the tick costs no job of its own; its file list, fixed
+    * when the plan was built, misses the appends. One writer per index. */
+  def ingest(probe: DataFrame, sink: Option[DataFrame => Unit] = None)(
+      update: DataFrame => Unit): DataFrame = {
+    val survivors = Materialize.local(probe, eager = sink.isDefined)
+    if (sink.isEmpty || !survivors.isEmpty) {
+      sink.foreach(_(survivors))
+      update(survivors)
+    }
+    survivors
+  }
 
   // ---- quantizer tables --------------------------------------------------
 
@@ -241,7 +295,7 @@ object PersistedIndex {
       build: String => Unit): String = {
     val path = new Path(
       scratchDir(prefix, source, sourceFingerprint(spark, source)))
-    if (!fs(spark, path).exists(path))
+    if (!present(spark, path))
       publish(spark, path)(tmp => build(tmp.toString))
     path.toString
   }

@@ -23,6 +23,15 @@ import graft.Tables
   */
 object Quality {
 
+  /** Measured broadcast gate for the trained unigram model: a count
+    * table at or under this many DISTINCT tokens (~50 B/row ⇒ ≤ ~100 MB
+    * framed) broadcasts, so the posting stream never shuffles for the
+    * scoring join; above it the join keeps its shuffle path (a 100 TB
+    * corpus has billions of distinct tokens). The gate reads the EXACT
+    * vocabulary count the totals fetch already collected — never a
+    * planner estimate. */
+  private[ops] val lmBroadcastVocabMax = 2000000L
+
   /** Q1 — unigram-LM perplexity filter (CCNet-style, self-trained).
     *
     * Trains an add-one-smoothed unigram language model on the corpus
@@ -55,15 +64,6 @@ object Quality {
     *
     * Output: (doc_id, n_tokens, nll, kept); order unspecified.
     */
-  /** Measured broadcast gate for the trained unigram model: a count
-    * table at or under this many DISTINCT tokens (~50 B/row ⇒ ≤ ~100 MB
-    * framed) broadcasts, so the posting stream never shuffles for the
-    * scoring join; above it the join keeps its shuffle path (a 100 TB
-    * corpus has billions of distinct tokens). The gate reads the EXACT
-    * vocabulary count the totals fetch already collected — never a
-    * planner estimate. */
-  private[ops] val lmBroadcastVocabMax = 2000000L
-
   def lmPerplexity(docs: DataFrame, maxNll: Double = 9.0): DataFrame = {
     val toks = docs.select(col("doc_id"),
       explode(split(col("text"), " ")).as("tok"))
@@ -155,20 +155,6 @@ object Quality {
         (score >= lit(threshold)).as("kept"))
   }
 
-  /** [[classifierScore]] as a single in-row projection: the weight lookup
-    * is inlined into a higher-order `aggregate` fold over the token array
-    * instead of materializing the weight table and joining. Bit-identical
-    * output (same integer milli-weight sum — spec-pinned equal to the
-    * join form), but ZERO shuffles and zero state: score, n_tokens, and
-    * the keep flag are computed where the row is read.
-    *
-    * This is the STREAMING shape of model-based filtering — a stateless
-    * projection needs no watermark, no aggregation mode, and no state
-    * store, so the exact same expressions score documents as they arrive
-    * ([[graft.streaming.StreamingQuality]]). The join form remains the
-    * right BATCH shape once the model outgrows an expression (real
-    * trained weights land in a table, not a formula). Output is unsorted
-    * (one row per input row); callers order for presentation. */
   /** The in-row classifier as a `(n_tokens, milli_sum)` expression pair
     * over a `text` column — shared by [[classifierScoreInline]] and the
     * fused model pipeline ([[Curation.curateModel]]), so both compute the
@@ -211,6 +197,21 @@ object Quality {
     lit(1.0) / (lit(1.0) + exp(-x))
   }
 
+  /** [[classifierScore]] as a single in-row projection: the weight lookup
+    * is inlined into a higher-order `aggregate` fold over the token array
+    * instead of materializing the weight table and joining. Bit-identical
+    * output (same integer milli-weight sum — spec-pinned equal to the
+    * join form), but ZERO shuffles and zero state: score, n_tokens, and
+    * the keep flag are computed where the row is read.
+    *
+    * This is the STREAMING shape of model-based filtering — a stateless
+    * projection needs no watermark, no aggregation mode, and no state
+    * store, so this very operator scores a streaming frame as documents
+    * arrive (StreamingQualitySpec pins stream ≡ batch and zero state
+    * operators). The join form remains the right BATCH shape once the
+    * model outgrows an expression (real trained weights land in a table,
+    * not a formula). Output is unsorted (one row per input row); callers
+    * order for presentation. */
   def classifierScoreInline(
       docs: DataFrame,
       buckets: Int = 512,

@@ -15,13 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  /** Per-mille-of-10000 bucket for a key: the first 60 bits of md5 of the
-    * key's decimal string, mod 10000 — engine-portable (DuckDB computes the
-    * identical bucket) and independent of row order. 60 bits (not 16): a
-    * 16-bit prefix mod 10000 is visibly non-uniform — buckets below
-    * 2¹⁶ mod 10000 get ⌈2¹⁶/10⁴⌉/2¹⁶ ≈ 7/65536 instead of 6/65536, so a
-    * requested 25% rate actually delivered ~26.7%; with 60 bits the same
-    * skew is ~10⁻¹⁵ of the rate. */
   /** The 60-bit md5 prefix of a key's string form — THE key-hash
     * expression of the sampling/sketch family (also [[Sketches]] and the
     * corresponding `('0x' || substr(md5(x), 1, 15))::BIGINT` oracle form);
@@ -30,6 +23,13 @@ object Sampling {
     conv(substring(md5(key.cast("string").cast("binary")), 1, 15), 16, 10)
       .cast("long")
 
+  /** Per-mille-of-10000 bucket for a key: the first 60 bits of md5 of the
+    * key's decimal string, mod 10000 — engine-portable (DuckDB computes the
+    * identical bucket) and independent of row order. 60 bits (not 16): a
+    * 16-bit prefix mod 10000 is visibly non-uniform — buckets below
+    * 2¹⁶ mod 10000 get ⌈2¹⁶/10⁴⌉/2¹⁶ ≈ 7/65536 instead of 6/65536, so a
+    * requested 25% rate actually delivered ~26.7%; with 60 bits the same
+    * skew is ~10⁻¹⁵ of the rate. */
   private def hashBucket(key: Column): Column = hash60Col(key) % 10000
 
   /** C1 — deterministic stratified sampling: keep a row iff its key's hash
@@ -51,8 +51,9 @@ object Sampling {
 
   /** The sampling predicate alone (no projection) — shared with
     * [[Curation.prepareCorpus]], where it sits between dedup and packing
-    * as a plain filter. A no-op when every rate is 1. */
-  /** Rate quantization contract: rates FLOOR to 1/10000 resolution
+    * as a plain filter. A no-op when every rate is 1.
+    *
+    * Rate quantization contract: rates FLOOR to 1/10000 resolution
     * (`(rate * 10000).toInt`), matching the oracle's `floor(rate *
     * 10000)` — floor is identical across engines, while round-half
     * conventions are not (the repo's exact-integer rule). A rate like

@@ -255,25 +255,26 @@ object Sketches {
       groupCols, qs, binWidth)
 
   /** The whole (group, `_qb_bin`, `_qb_cnt`) bin-table construction —
-    * batch and streaming share it END TO END ([[quantileBins]] and
-    * [[graft.streaming.StreamingSketches.quantileBinsStream]] differ only
-    * in whether the aggregation state lives in a shuffle or the state
-    * store), so the spec-pinned streamed≡batch equivalence cannot drift. */
-  private[graft] def binTable(
+    * batch and streaming share it END TO END: on a streaming frame it is
+    * the continuous quantile-bin table, a plain streaming aggregation
+    * whose state is bounded by value range / binWidth per group (run in
+    * update mode; the latest row per (group, bin) is the current count),
+    * and [[quantileBins]] walks the same table in batch. Only where the
+    * aggregation state lives differs, so the spec-pinned streamed≡batch
+    * equivalence cannot drift. */
+  def binTable(
       df: DataFrame, valueCol: String, groupCols: Seq[String],
       binWidth: Long): DataFrame =
     binCounts(df, valueCol, groupCols, binWidth)
       .groupBy(groupCols.map(col) :+ col("_qb_bin"): _*)
       .agg(count(lit(1)).as("_qb_cnt"))
 
-  /** The per-row (group, bin) projection behind [[quantileBins]] — shared
-    * with [[graft.streaming.StreamingSketches.quantileBinsStream]], where
-    * it feeds a streaming aggregation (the running bin counts are the
-    * aggregation state). FLOOR division (the rangeJoin pmod device), not
-    * DIV's truncation: DIV would collapse (-binWidth, 0) and
-    * [0, binWidth) into one bin 0 for signed values, breaking the
-    * lower-edge / error ≤ binWidth contract (and diverging from
-    * floor-division oracles). */
+  /** The per-row (group, bin) projection behind [[binTable]], batch or
+    * streaming (the running bin counts are the aggregation state). FLOOR
+    * division (the rangeJoin pmod device), not DIV's truncation: DIV
+    * would collapse (-binWidth, 0) and [0, binWidth) into one bin 0 for
+    * signed values, breaking the lower-edge / error ≤ binWidth contract
+    * (and diverging from floor-division oracles). */
   private[graft] def binCounts(
       df: DataFrame, valueCol: String, groupCols: Seq[String],
       binWidth: Long): DataFrame = {
@@ -297,11 +298,11 @@ object Sketches {
     * from anywhere counts accumulate. Duplicate (group, bin) rows are
     * SUM-merged first, so concatenated per-shard/tick tables feed in
     * directly. The one source that must be reduced by the CALLER is an
-    * update-mode streaming sink ([[graft.streaming.StreamingSketches
-    * .quantileBinsStream]]): its per-trigger rows are RUNNING TOTALS, not
-    * deltas — summing them double-counts, so take each cell's LATEST row
-    * first (see StreamingSketchesSpec's latestBins). Same walk, same
-    * lower-edge contract. */
+    * update-mode streaming sink ([[binTable]] on a streaming frame): its
+    * per-trigger rows are RUNNING TOTALS, not deltas — summing them
+    * double-counts, so take each cell's LATEST row first (see
+    * StreamingSketchesSpec's latestBins). Same walk, same lower-edge
+    * contract. */
   def quantilesFromBins(
       bins: DataFrame, groupCols: Seq[String],
       qs: Seq[Double], binWidth: Long): DataFrame = {

@@ -548,24 +548,6 @@ object TextAnalysis {
         expr("n_offlang * 1000 DIV n_chunks").as("offlang_per_mille"))
   }
 
-  /** T15 — vocabulary-growth (Heaps-law) curve: distinct token types
-    * versus corpus size, over ten cumulative random tenths of the corpus
-    * — the diversity saturation audit. A corpus whose type curve has
-    * flattened by the third decile is repetitive boilerplate (more data
-    * adds tokens but no vocabulary); a healthy web corpus keeps minting
-    * types along the whole curve. Docs land in one of 10 buckets by the
-    * deterministic md5 hash (an unbiased shuffle — the curve measures
-    * corpus diversity, not ingestion-order artifacts); a token type is
-    * "new" in the FIRST bucket that contains it. Per decile: token
-    * occurrences, new types, and both cumulatives — all exact integers,
-    * so the curve hash-replays.
-    *
-    * Scale shape: the word explode collapses immediately into a
-    * (token, bucket) count with map-side combine (the digest-sized
-    * frame, not the corpus, rides the shuffle); the first-bucket rule is
-    * a token-keyed min window over that frame (vocabulary-sized, narrow);
-    * the decile rollup has 10 groups, and the cumulative window runs
-    * over those 10 rows — bounded, never data-sized. */
   /** T17 — language-ID confusion matrix: [[languageId]]'s predictions
     * cross-tabulated against the label — the eval artifact behind every
     * langid threshold decision (which pairs confuse, is the de/en
@@ -626,6 +608,24 @@ object TextAnalysis {
       .withColumn("is_low_entropy", col("entropy_micro") < minEntropyMicro)
   }
 
+  /** T15 — vocabulary-growth (Heaps-law) curve: distinct token types
+    * versus corpus size, over ten cumulative random tenths of the corpus
+    * — the diversity saturation audit. A corpus whose type curve has
+    * flattened by the third decile is repetitive boilerplate (more data
+    * adds tokens but no vocabulary); a healthy web corpus keeps minting
+    * types along the whole curve. Docs land in one of 10 buckets by the
+    * deterministic md5 hash (an unbiased shuffle — the curve measures
+    * corpus diversity, not ingestion-order artifacts); a token type is
+    * "new" in the FIRST bucket that contains it. Per decile: token
+    * occurrences, new types, and both cumulatives — all exact integers,
+    * so the curve hash-replays.
+    *
+    * Scale shape: the word explode collapses immediately into a
+    * (token, bucket) count with map-side combine (the digest-sized
+    * frame, not the corpus, rides the shuffle); the first-bucket rule is
+    * a token-keyed min window over that frame (vocabulary-sized, narrow);
+    * the decile rollup has 10 groups, and the cumulative window runs
+    * over those 10 rows — bounded, never data-sized. */
   def vocabGrowth(docs: DataFrame, buckets: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(buckets >= 2, "need at least 2 buckets")

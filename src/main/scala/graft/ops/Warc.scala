@@ -126,7 +126,12 @@ object Warc {
   /** Record extraction over a `(warc_id, content)` frame of WARC blobs:
     * one mapPartitions parse pass (binary framing — the legit
     * mapPartitions case), narrow, no shuffle; emits the CDX-shaped
-    * (offset, type, uri, length) facts plus the payload byte-sum. */
+    * (offset, type, uri, length) facts plus the payload byte-sum.
+    * Stateless per blob, so it runs unchanged on a streaming frame of
+    * fetcher flushes: stream-over-batches equals batch-over-union, and a
+    * corrupt blob costs its tail records, not the query
+    * (StreamingWarcSpec). Replayed micro-batches re-emit their records;
+    * idempotent consumers key on (warc_id, rec_idx). */
   def records(warcs: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("warc_id", LongType, nullable = false),

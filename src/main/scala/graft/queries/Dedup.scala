@@ -3,7 +3,7 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.{Materialize, PersistedIndex}
+import graft.ops.PersistedIndex
 import graft.ops.PersistedIndex.Kind
 import Shared._
 
@@ -64,11 +64,9 @@ private[graft] object Dedup extends Family("dedup") {
     * Output: all surviving new docs across both ticks. */
   private def ns18(s: SparkSession, dir: String): DataFrame = {
     val work = PersistedIndex.workingCopy(s, minhashBase(s, dir))
-    // lazy snapshot: the update's first append fills it in the same job
-    // chain; its file list, fixed at plan construction, misses the appends
-    val tick1 = Materialize.local(graft.ops.Dedup.incrementalNewFromIndex(
-      docs(s, dir).where(col("doc_id") % 10 === 0), work), eager = false)
-    graft.ops.Dedup.updateMinhashIndex(tick1, work)
+    val tick1 = PersistedIndex.ingest(graft.ops.Dedup.incrementalNewFromIndex(
+      docs(s, dir).where(col("doc_id") % 10 === 0), work))(
+      graft.ops.Dedup.updateMinhashIndex(_, work))
     val tick2 = graft.ops.Dedup.incrementalNewFromIndex(
       docs(s, dir).where(col("doc_id") % 10 === 5), work)
     tick1.union(tick2)

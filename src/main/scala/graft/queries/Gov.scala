@@ -10,11 +10,6 @@ import Shared._
 /** Profiling, drift, snapshots, SCD, ingest formats, dataset cards. */
 private[graft] object Gov extends Family("gov") {
 
-  /** NS56 — snapshot diff: the re-crawl change-feed. The "new" snapshot is
-    * derived deterministically from the old one (first 20 docs dropped,
-    * every 37th doc's text edited, first 10 docs re-keyed as additions) so
-    * both engines can construct it; the diff must recover exactly those
-    * edits as removed/changed/added rows with matching fingerprints. */
   /** The ns56/ns86 shared new-snapshot synthesis: docs 0–19 removed,
     * every 37th text changed, docs 0–9 re-added under shifted ids. The
     * shift is `max(doc_id) + 1` — STRUCTURAL, so added ids can never
@@ -33,6 +28,11 @@ private[graft] object Gov extends Family("gov") {
           cols.map(col): _*))
   }
 
+  /** NS56 — snapshot diff: the re-crawl change-feed. The "new" snapshot is
+    * derived deterministically from the old one (first 20 docs dropped,
+    * every 37th doc's text edited, first 10 docs re-keyed as additions) so
+    * both engines can construct it; the diff must recover exactly those
+    * edits as removed/changed/added rows with matching fingerprints. */
   private def ns56(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
     val cols = Seq("text", "lang", "source", "n_chars")

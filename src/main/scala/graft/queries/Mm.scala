@@ -3,7 +3,7 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.{Materialize, PersistedIndex}
+import graft.ops.PersistedIndex
 import graft.ops.PersistedIndex.Kind
 import Shared._
 
@@ -51,13 +51,11 @@ private[graft] object Mm extends Family("mm") {
           fam.where(col("doc_id") % 5 <= 1), path, graft.ops.ImageGridDecoder,
           fingerprint = Some(fp))
       })
-    // lazy snapshot: the update's first append fills it in the same job
-    // chain; its file list, fixed at plan construction, misses the appends
-    val tick1 = Materialize.local(
+    val tick1 = PersistedIndex.ingest(
       graft.ops.Perceptual.incrementalNewFromGridIndex(
         fam.where(col("doc_id") % 5 === 4), work, maxSad = 128L,
-        expectDecoder = Some("image-grid")), eager = false)
-    graft.ops.Perceptual.updateGridIndex(tick1, work)
+        expectDecoder = Some("image-grid")))(
+      graft.ops.Perceptual.updateGridIndex(_, work))
     val tick2 = graft.ops.Perceptual.incrementalNewFromGridIndex(
       fam.where(col("doc_id") % 5 === 2 || col("doc_id") % 5 === 3), work,
       maxSad = 128L)
@@ -65,19 +63,6 @@ private[graft] object Mm extends Family("mm") {
       .union(tick2.select(col("doc_id"), col("phash")))
   }
 
-  /** NS81 — perceptual-hash image near-dup
-    * ([[graft.ops.Perceptual.nearDupPairs]] over
-    * [[graft.ops.Perceptual.dhash63]]): re-encoded / lightly-edited
-    * copies of the same "image" pair up under a banded 63-bit dHash
-    * Hamming join — the multimodal analog of ns3's simhash. The
-    * synthesis builds 5-variant families over the documents table's
-    * blobs (the ns73/ns77 pattern): two exact copies, two 1-byte
-    * length-preserving edits (a small patch — only strides landing on
-    * the edited byte move), and one reversed control that must NOT
-    * pair. maxHamming=3 < bands=4 keeps the banded join
-    * pigeonhole-exact, so the oracle's brute-force all-pairs SQL is the
-    * same function. The hashing pass is one mapPartitions decode (no
-    * shuffle); pairing shuffles once on (band, chunk). */
   /** The shared ns81/ns83 image-family synthesis: (doc_id, t) text
     * variants per 5-id family — two exact copies, two 1-byte
     * length-preserving edits, one reversed control. */
@@ -132,6 +117,19 @@ private[graft] object Mm extends Family("mm") {
       maxHamming = 3, bands = 4)
   }
 
+  /** NS81 — perceptual-hash image near-dup
+    * ([[graft.ops.Perceptual.nearDupPairs]] over
+    * [[graft.ops.Perceptual.dhash63]]): re-encoded / lightly-edited
+    * copies of the same "image" pair up under a banded 63-bit dHash
+    * Hamming join — the multimodal analog of ns3's simhash. The
+    * synthesis builds 5-variant families over the documents table's
+    * blobs (the ns73/ns77 pattern): two exact copies, two 1-byte
+    * length-preserving edits (a small patch — only strides landing on
+    * the edited byte move), and one reversed control that must NOT
+    * pair. maxHamming=3 < bands=4 keeps the banded join
+    * pigeonhole-exact, so the oracle's brute-force all-pairs SQL is the
+    * same function. The hashing pass is one mapPartitions decode (no
+    * shuffle); pairing shuffles once on (band, chunk). */
   private def ns81(s: SparkSession, dir: String): DataFrame = {
     val media = ns81Family(s, dir).select(col("doc_id"),
       encode(col("t"), "UTF-8").as("content"))
@@ -214,13 +212,11 @@ private[graft] object Mm extends Family("mm") {
         (path, fp) => graft.ops.Perceptual.writePhashIndex(
           fam.where(col("doc_id") % 5 <= 1), path, fingerprint = Some(fp))
       })
-    // lazy snapshot: the update's first append fills it in the same job
-    // chain; its file list, fixed at plan construction, misses the appends
-    val tick1 = Materialize.local(
+    val tick1 = PersistedIndex.ingest(
       graft.ops.Perceptual.incrementalNewFromPhashIndex(
         fam.where(col("doc_id") % 5 === 4), work,
-        expectDecoder = Some("byte-stride")), eager = false)
-    graft.ops.Perceptual.updatePhashIndex(tick1, work)
+        expectDecoder = Some("byte-stride")))(
+      graft.ops.Perceptual.updatePhashIndex(_, work))
     val tick2 = graft.ops.Perceptual.incrementalNewFromPhashIndex(
       fam.where(col("doc_id") % 5 === 2 || col("doc_id") % 5 === 3), work)
     tick1.union(tick2)

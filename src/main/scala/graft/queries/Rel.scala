@@ -99,19 +99,6 @@ private[graft] object Rel extends Family("rel") {
         sum(col("l_quantity").cast("long")).as("sum_qty"))
   }
 
-  /** NS84 — blocked fuzzy record linkage
-    * ([[graft.ops.Linkage.fuzzyDuplicates]]): entity resolution over
-    * structured records — the metadata-dedup counterpart of the
-    * text/media families. The synthesis derives a 12-hex pseudo-name per
-    * customer (md5-based, engine-reproducible) and emits 3 records per
-    * entity: the clean name, a 1-char substitution typo AT POSITION 2 —
-    * deliberately inside the prefix window, so the pair is only
-    * recoverable via the suffix key (the multi-key pigeonhole is
-    * load-bearing, not decorative) — and an unrelated control. Blocking
-    * on (nation, prefix4/suffix4), candidates verified with the codegen
-    * `levenshtein` ≤ 1. The oracle replays the BLOCKED contract
-    * (blocking is the operator's semantics, recall trade documented),
-    * so both sides are the same function. */
   /** The ns84/ns96 record synthesis: 3 records per customer — v0 base
     * name, v1 one-substitution typo (links to v0), v2 unrelated. */
   private def ns84Recs(s: SparkSession, dir: String): DataFrame =
@@ -132,6 +119,19 @@ private[graft] object Rel extends Family("rel") {
             md5(concat(lit("x"), col("c_custkey").cast("string"))
               .cast("binary")), 1, 12)).as("name"))
 
+  /** NS84 — blocked fuzzy record linkage
+    * ([[graft.ops.Linkage.fuzzyDuplicates]]): entity resolution over
+    * structured records — the metadata-dedup counterpart of the
+    * text/media families. The synthesis derives a 12-hex pseudo-name per
+    * customer (md5-based, engine-reproducible) and emits 3 records per
+    * entity: the clean name, a 1-char substitution typo AT POSITION 2 —
+    * deliberately inside the prefix window, so the pair is only
+    * recoverable via the suffix key (the multi-key pigeonhole is
+    * load-bearing, not decorative) — and an unrelated control. Blocking
+    * on (nation, prefix4/suffix4), candidates verified with the codegen
+    * `levenshtein` ≤ 1. The oracle replays the BLOCKED contract
+    * (blocking is the operator's semantics, recall trade documented),
+    * so both sides are the same function. */
   private def ns84(s: SparkSession, dir: String): DataFrame =
     graft.ops.Linkage.fuzzyDuplicates(ns84Recs(s, dir),
       groupCols = Seq("c_nationkey"), maxDist = 1, prefixLen = 4)
@@ -207,13 +207,6 @@ private[graft] object Rel extends Family("rel") {
         JoinEdge("orders->customer", orders, "o_custkey", cust, "c_custkey")))
   }
 
-  /** NS87 — link-graph authority ([[graft.ops.Graphs.pagerankInt]]):
-    * exact-integer fixed-point PageRank over a deterministic synthetic
-    * link graph (two outlinks per doc, affine mod-N targets — hubs
-    * emerge from modular collisions). Float PageRank is
-    * order-dependent under distributed summation; the micro-unit
-    * integer formulation is partitioning-invariant and replayed
-    * verbatim by the oracle's five chained CTE iterations. */
   /** The ns87/ns88 shared link-graph synthesis — ONE definition so the
     * two queries (and their oracles) can never desynchronize: one affine
     * outlink per doc (a bijection mod n — the "chain") plus one
@@ -231,6 +224,13 @@ private[graft] object Rel extends Family("rel") {
         ((col("doc_id") * col("doc_id") * 17 + 3) % n).as("dst")))
   }
 
+  /** NS87 — link-graph authority ([[graft.ops.Graphs.pagerankInt]]):
+    * exact-integer fixed-point PageRank over a deterministic synthetic
+    * link graph (two outlinks per doc, affine mod-N targets — hubs
+    * emerge from modular collisions). Float PageRank is
+    * order-dependent under distributed summation; the micro-unit
+    * integer formulation is partitioning-invariant and replayed
+    * verbatim by the oracle's five chained CTE iterations. */
   private def ns87(s: SparkSession, dir: String): DataFrame =
     graft.ops.Graphs.pagerankInt(linkEdges(s, dir), iterations = 5)
 

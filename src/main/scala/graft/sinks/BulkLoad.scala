@@ -158,8 +158,6 @@ object BulkLoad {
       .invoke(mgr, postgresCopyStatement(table, schema.fieldNames.toSeq), text)
   }
 
-  /** Generic fallback: multi-row INSERT VALUES batches (one statement per
-    * `batchSize` rows — still set-at-a-time, never row-at-a-time). */
   /** The target's actual column spellings (JDBC metadata case-folds
     * unquoted identifiers per engine), matched case-insensitively against
     * the frame's field names. */
@@ -178,6 +176,8 @@ object BulkLoad {
     names.map(n => actual.getOrElse(n.toLowerCase, n))
   }
 
+  /** Generic fallback: multi-row INSERT VALUES batches (one statement per
+    * `batchSize` rows — still set-at-a-time, never row-at-a-time). */
   private def insertBatches(
       conn: Connection, table: String, schema: StructType,
       rows: Iterator[Row], batchSize: Int): Unit = {

@@ -113,18 +113,6 @@ object SqlTextSink {
   }
 }
 
-/** JDBC batch writer with the reference's constraint-bypass hooks
-  * (W1-W3). The hooks are the same statements the reference issues —
-  * `SET FOREIGN_KEY_CHECKS=0/1` (mysql/dumper.go:192-194),
-  * `ALTER TABLE ... DISABLE/ENABLE TRIGGER ALL`
-  * (postgres/dumper.go:81-121) — executed over a plain JDBC connection
-  * before/after the distributed write.
-  *
-  * Transactionality: the reference does one txn per table
-  * (mysql/dumper.go:74-99); a distributed write can't, so `staging=true`
-  * writes to `<table>_graft_staging` and atomically renames after load
-  * (SURVEY §7.4.7 staging-table-and-swap).
-  */
 /** `queryTimeout`/`maxConns` ≅ the reference's write flags
   * (`cmd/steal.go:76-79`): `--write-timeout` default 30 s →  the JDBC
   * writer's per-statement `queryTimeout`; `--write-max-conns` default 5 →
@@ -141,6 +129,18 @@ final case class JdbcSinkConfig(
     queryTimeout: Int = 30,      // --write-timeout (seconds)
     maxConns: Int = 5)           // --write-max-conns
 
+/** JDBC batch writer with the reference's constraint-bypass hooks
+  * (W1-W3). The hooks are the same statements the reference issues —
+  * `SET FOREIGN_KEY_CHECKS=0/1` (mysql/dumper.go:192-194),
+  * `ALTER TABLE ... DISABLE/ENABLE TRIGGER ALL`
+  * (postgres/dumper.go:81-121) — executed over a plain JDBC connection
+  * before/after the distributed write.
+  *
+  * Transactionality: the reference does one txn per table
+  * (mysql/dumper.go:74-99); a distributed write can't, so `staging=true`
+  * writes to `<table>_graft_staging` and atomically renames after load
+  * (SURVEY §7.4.7 staging-table-and-swap).
+  */
 object JdbcSink {
   /** Hook statements klepto issues for each engine, for parity. */
   def mysqlHooks: (Seq[String], Seq[String]) =

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.GroupStateTimeout
+import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery}
 
-import graft.ops.Materialize
+import graft.ops.{Materialize, PersistedIndex}
 
 /** Streaming counterparts of the batch dedup/text operators — the
   * training-data-pipeline shapes that must run incrementally at ingest
@@ -60,7 +60,7 @@ object StreamingDedup {
     * survivors are appended both to `acceptedSink` (parquet) and to the
     * index itself ([[graft.ops.Dedup.updateMinhashIndex]]) so later batches
     * see them. The streaming version of the ns18 two-tick lifecycle, run
-    * forever.
+    * forever, through the one [[graft.ops.PersistedIndex.ingest]] step.
     *
     * `foreachBatch` is the right tool here — the dedup decision is a batch
     * join against index files, not row-local state, so the state lives IN
@@ -68,38 +68,34 @@ object StreamingDedup {
     * the index contents with no state-store recovery, and the index stays
     * usable by batch consumers between ticks. Micro-batches execute
     * serially, which is exactly the single-writer-per-index contract the
-    * append path assumes. Exactly-once note: foreachBatch is
-    * at-least-once — the sink append runs BEFORE the index append, so a
-    * crash anywhere between sink write and checkpoint commit replays the
-    * batch and re-appends its survivors: duplicate sink rows (idempotent
-    * sinks key on doc_id) and duplicate index rows (harmless for the
-    * decision: candidates are distinct()-ed). The reverse order would
-    * let a crash between the appends index the survivors without sinking
-    * them, and the replayed batch would filter them out forever. */
+    * append path assumes. foreachBatch is at-least-once: a replayed batch
+    * re-sinks its survivors (idempotent sinks key on doc_id), and
+    * duplicate index rows are harmless for the decision (candidates are
+    * distinct()-ed). */
   def indexedIngestDedup(
       newDocs: DataFrame,
       indexPath: String,
       acceptedSink: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs.writeStream
+      checkpointDir: String): StreamingQuery =
+    indexedIngest(newDocs, checkpointDir)(
+      graft.ops.Dedup.incrementalNewFromIndex(_, indexPath),
+      _.write.mode("append").parquet(acceptedSink),
+      graft.ops.Dedup.updateMinhashIndex(_, indexPath))
+
+  /** The query every index-backed ingest twin runs: each micro-batch goes
+    * through [[graft.ops.PersistedIndex.ingest]] — `probe`, snapshot,
+    * `sink`, then `update` — inside a [[Materialize.scope]], so a
+    * forever-running query keeps no copy of the batches it accepted. */
+  private[streaming] def indexedIngest(input: DataFrame, checkpointDir: String)(
+      probe: DataFrame => DataFrame, sink: DataFrame => Unit,
+      update: DataFrame => Unit): StreamingQuery =
+    input.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // frees the batch's snapshots, so a forever-running query does
-        // not retain a copy of every accepted batch
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         Materialize.scope {
-          // snapshot before the append: the survivor plan reads the same
-          // index files the append rewrites
-          val survivors = Materialize.local(graft.ops.Dedup
-            .incrementalNewFromIndex(batch.toDF(), indexPath), eager = true)
-          if (!survivors.isEmpty) {
-            // sink BEFORE index: a crash between the two re-accepts the
-            // batch on replay (duplicate sink rows, keyed-idempotent
-            // consumers tolerate); index-first would filter the replayed
-            // survivors out of the sink forever
-            survivors.write.mode("append").parquet(acceptedSink)
-            graft.ops.Dedup.updateMinhashIndex(survivors, indexPath)
-          }
+          PersistedIndex.ingest(probe(batch.toDF()), Some(sink))(update)
         }
+        ()
       }
       .start()
 
@@ -125,8 +121,7 @@ object StreamingDedup {
       cleanSink: String,
       checkpointDir: String,
       shingleK: Int = 4,
-      bloomFpp: Option[Double] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      bloomFpp: Option[Double] = None): StreamingQuery = {
     // the benchmark is static, so its broadcast-or-shuffle sizing is too:
     // decide once here, not once per micro-batch inside the hot loop
     val broadcastLever = Some(graft.ops.Dedup
@@ -140,7 +135,7 @@ object StreamingDedup {
       graft.ops.Dedup.benchmarkBloom(benchmark, shingleK, fpp))
     newDocs.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         // written unconditionally: an empty append is near-free, while an
         // isEmpty pre-check would execute the whole scrub join twice
         graft.ops.Dedup.removeContaminated(

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * parses once per record, the corrupt column decides the route, and both
   * halves ride the same micro-batch. Stateless — no watermark, no state
   * store, restart replays nothing (same discipline as
-  * [[StreamingQuality]]).
+  * [[graft.ops.Quality.classifierScoreInline]] on a stream).
   */
 object StreamingIngest {
 

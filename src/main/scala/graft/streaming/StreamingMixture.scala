@@ -43,14 +43,4 @@ object StreamingMixture {
       .groupBy(col(strataCol))
       .agg(count(lit(1)).as("n_docs"), sum(col("__t")).as("avail_tokens"))
   }
-
-  /** Plan read-off (batch, between triggers): the batch arithmetic tail
-    * verbatim over `totals` (the sink's latest row per stratum). */
-  def planFromTotals(
-      totals: DataFrame,
-      sharesPerMille: Seq[(String, Int)],
-      budgetTokens: Long,
-      strataCol: String = "lang"): DataFrame =
-    graft.ops.Sampling.mixturePlanFromTotals(
-      totals, sharesPerMille, budgetTokens, strataCol)
 }

@@ -64,7 +64,9 @@ object StreamingSketches {
     * cell equals the batch [[graft.ops.Sketches.cmsBuild]] over the same
     * stream prefix (spec-pinned), so [[graft.ops.Sketches.cmsEstimate]]
     * serves candidate frequencies off the running sketch between
-    * triggers. */
+    * triggers. Quantile bins SUM-merge the same way, so their streaming
+    * form is [[graft.ops.Sketches.binTable]] itself on the streaming
+    * frame. */
   def cmsStream(
       rows: DataFrame, valueCol: String,
       depth: Int = 4, width: Int = 256): DataFrame =
@@ -72,20 +74,4 @@ object StreamingSketches {
       .groupBy(col("row"), col("bucket"))
       .count()
       .withColumnRenamed("count", "cnt")
-
-  /** Continuous quantile bins — streaming face of
-    * [[graft.ops.Sketches.quantileBins]], by the same argument as
-    * [[cmsStream]]: bin counts SUM-merge, so the running per-(group, bin)
-    * table is a plain streaming aggregation whose state is bounded by
-    * the value range / binWidth per group — no watermark, no custom
-    * state. The quantile WALK stays batch-side
-    * ([[graft.ops.Sketches.quantilesFromBins]] over the sink's latest
-    * cells): windows don't stream, and serving reads are cheap against
-    * the tiny bin table. Update mode; latest row per (group, bin) is the
-    * current count (spec-pinned ≡ the batch bins over the same
-    * prefix). */
-  def quantileBinsStream(
-      rows: DataFrame, valueCol: String, groupCols: Seq[String],
-      binWidth: Long = 16): DataFrame =
-    Sketches.binTable(rows, valueCol, groupCols, binWidth)
 }

@@ -11,10 +11,13 @@ import graft.queries.{Query, Registry}
   * number of Spark jobs, stages, tasks, and shuffle-write bytes of ONE
   * warm execution. On this host wall-clock comparisons need minute-scale
   * quiet windows that may never arrive (BASELINE.md, hypervisor
-  * co-tenancy) — these counters are decided by the PLAN, not the
-  * weather, so a structural regression (an extra shuffle, a loop that
-  * stopped coalescing, a broadcast that silently became a sort-merge
-  * join) shows up as an integer diff in any window.
+  * co-tenancy) — the job, stage and task counters are decided by the
+  * PLAN, not the weather, so a structural regression (an extra shuffle,
+  * a loop that stopped coalescing, a broadcast that silently became a
+  * sort-merge join) shows up as an integer diff in any window.
+  * `shuffle_bytes` is not: `RangePartitioner` seeds its sample with the
+  * RDD id, so an ordered query's range bounds, and its shuffle bytes,
+  * move by a few bytes when the jobs run before it change.
   *
   * Counts are taken on the SECOND execution (the first pays one-time
   * index builds / checkpoint materializations that belong to setup, and

@@ -148,4 +148,20 @@ class HarnessGuardSpec extends AnyFunSuite {
     assert(hits.isEmpty, "open parquet with Tables.parquet or Tables.load, " +
       s"which read the schema from a footer instead of running a job: $hits")
   }
+
+  test("only PersistedIndex renames files in main") {
+    val hits = offenders(Seq("src/main/scala"), """\.rename\(""",
+      "PersistedIndex.scala")
+    assert(hits.isEmpty, "replace a directory with PersistedIndex.publish, " +
+      s"which a killed process cannot leave half-swapped: $hits")
+  }
+
+  test("no Scaladoc block in main sits directly above another") {
+    // a doc block followed (blank lines only between) by another attaches
+    // to nothing: the second one shadows it
+    val orphan = """(?m)\*/[ \t]*\n(?:[ \t]*\n)*[ \t]*/\*\*"""
+    val hits = offenders(Seq("src/main/scala"), orphan, "")
+    assert(hits.isEmpty, "merge or move each doc block onto its def: " +
+      hits.mkString(", "))
+  }
 }

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkTestSession, TempDirs}
 import graft.ops.PersistedIndex.Kind
+import graft.streaming.StreamingWebIngest
 
 /** The persisted-index lifecycle ([[PersistedIndex]]): a publish that dies
   * at any step keeps the previous index and leaves no staging copy, a
@@ -24,16 +25,20 @@ class PersistedIndexSpec extends AnyFunSuite with TempDirs {
     new java.io.File(dir).list().toSeq
       .filter(n => n.contains(".tmp-") || n.contains(".bak-"))
 
-  /** The local file system, except that its `call`-th rename fails: it
-    * returns false, or throws. */
-  private class RenameFaultFs(call: Int, throws: Boolean)
+  /** The local file system, except that its `call`-th rename fails (it
+    * returns false, or throws), and with `andAfter` every later rename
+    * returns false too — what a process killed at that rename leaves. */
+  private class RenameFaultFs(call: Int, throws: Boolean,
+      andAfter: Boolean = false)
       extends FilterFileSystem(
         FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)) {
     private var renames = 0
     override def rename(src: Path, dst: Path): Boolean = {
       renames += 1
-      if (renames != call) super.rename(src, dst)
-      else if (throws) throw new java.io.IOException(s"fault on rename $call")
+      if (renames < call || call == 0) super.rename(src, dst)
+      else if (renames == call && throws)
+        throw new java.io.IOException(s"fault on rename $call")
+      else if (renames > call && !andAfter) super.rename(src, dst)
       else false
     }
   }
@@ -50,15 +55,19 @@ class PersistedIndexSpec extends AnyFunSuite with TempDirs {
       .collect().map(_.getLong(0)).toSeq.sorted
 
   // (case, rename call that fails — 0 for none, whether it throws,
-  // whether the build body throws)
+  // whether every later rename fails too, whether the build body throws)
   private val faults = Seq(
-    ("the build body throws", 0, false, true),
-    ("the rename aside returns false", 1, false, false),
-    ("the rename aside throws", 1, true, false),
-    ("the rename in returns false", 2, false, false),
-    ("the rename in throws", 2, true, false))
+    ("the build body throws", 0, false, false, true),
+    ("the rename aside returns false", 1, false, false, false),
+    ("the rename aside throws", 1, true, false, false),
+    ("the rename in returns false", 2, false, false, false),
+    ("the rename in throws", 2, true, false, false),
+    // the in-process restore fails as well: the old index is left set
+    // aside, exactly as a kill between the two renames leaves it, and the
+    // probe below is the next reader
+    ("it dies between its two renames", 2, false, true, false))
 
-  faults.foreach { case (name, call, throws, bodyThrows) =>
+  faults.foreach { case (name, call, throws, andAfter, bodyThrows) =>
     test(s"publish keeps the previous index when $name") {
       val dir = dirFor("fault")
       val idx = s"$dir/index"
@@ -66,7 +75,7 @@ class PersistedIndexSpec extends AnyFunSuite with TempDirs {
       val before = probe(idx)
       assert(before == Seq(11L)) // aEdit is a near-dup of the indexed a
       intercept[Exception] {
-        PersistedIndex.publish(new RenameFaultFs(call, throws),
+        PersistedIndex.publish(new RenameFaultFs(call, throws, andAfter),
             new Path(idx)) { tmp =>
           // a complete rebuild over b, which would let aEdit through
           Perceptual.writePhashIndex(
@@ -104,6 +113,23 @@ class PersistedIndexSpec extends AnyFunSuite with TempDirs {
       new java.io.File(dir).list().toSeq)
   }
 
+  test("a compaction killed between its renames is put back by the next probe") {
+    val dir = dirFor("kill")
+    val idx = PublishKillFs.path(spark, s"$dir/index")
+    Perceptual.writePhashIndex(Seq((1L, a)).toDF("doc_id", "content"), idx)
+    // a replayed tick: a duplicate hash row for the compaction to drop
+    Perceptual.updatePhashIndex(
+      Perceptual.dhash63(Seq((1L, a)).toDF("doc_id", "content")), idx)
+    val before = probe(idx)
+    assert(before == Seq(11L))
+    PublishKillFs.killing(
+      intercept[Exception](Perceptual.compactPhashIndex(spark, idx)))
+    assert(probe(idx) == before)
+    Perceptual.compactPhashIndex(spark, idx)
+    assert(probe(idx) == before)
+    assert(leftovers(dir).isEmpty, leftovers(dir))
+  }
+
   // ---- Layout rewrites go through the same publish -------------------------
 
   test("a failing optimize rewrite keeps the old layout and no staging copy") {
@@ -120,6 +146,23 @@ class PersistedIndexSpec extends AnyFunSuite with TempDirs {
     // tasks, after the staging dir exists
     intercept[Exception](optimize(rows.withColumn("part",
       when(col("id") === 7L, lit("x" * 300)).otherwise(col("part")))))
+    assert(read() == before)
+    assert(leftovers(dir).isEmpty, leftovers(dir))
+  }
+
+  test("a layout rewrite killed between its renames is put back by the next read") {
+    val dir = dirFor("layout_kill")
+    val path = PublishKillFs.path(spark, s"$dir/layout")
+    val rows = (1L to 20L).map(i => (i, s"p${i % 2}", i * 10))
+      .toDF("id", "part", "v")
+    Layout.optimize(rows, path, Seq("part"), Seq("id"), numFiles = 1)
+    def read() = Layout.read(spark, path).orderBy("id").collect().toSeq
+    val before = read()
+    PublishKillFs.killing(intercept[Exception](Layout.optimize(
+      rows.where(col("id") > 10L), path, Seq("part"), Seq("id"), numFiles = 1)))
+    assert(read() == before)
+    // the next rewrite clears the staging copy the kill left
+    Layout.optimize(rows, path, Seq("part"), Seq("id"), numFiles = 1)
     assert(read() == before)
     assert(leftovers(dir).isEmpty, leftovers(dir))
   }
@@ -216,5 +259,86 @@ class PersistedIndexSpec extends AnyFunSuite with TempDirs {
         // its own kind's readers accept it
         other.probe(path)
       }
+    }
+
+  // ---- the ingest step ----------------------------------------------------
+
+  /** One index family as the ingest step drives it: its corpus index, a
+    * batch, its real probe and update, and the rows of its index, all
+    * keyed by `key`. */
+  private case class Ingest(name: String, key: String,
+      build: String => Unit, batch: () => DataFrame,
+      probe: (DataFrame, String) => DataFrame,
+      update: (DataFrame, String) => Unit, indexed: String => DataFrame)
+
+  private val c = Array.tabulate[Byte](300)(i => ((i * 61 + 5) % 233).toByte)
+  private def blobs = Seq((10L, aEdit), (11L, b), (12L, c))
+    .toDF("doc_id", "content")
+
+  private lazy val ingests = Seq(
+    Ingest("minhash", "doc_id",
+      Dedup.writeMinhashIndex(Seq(
+        (100L, "the quick brown fox jumps over the lazy dog"),
+        (101L, "completely different corpus material right here"))
+        .toDF("doc_id", "text"), _),
+      () => Seq(
+        (1L, "the quick brown fox jumps over the lazy dog"),
+        (2L, "the quick brown fox jumps over the lazy cat"),
+        (3L, "entirely novel content with no overlap at all"),
+        (4L, "another brand new document nothing like the others"))
+        .toDF("doc_id", "text"),
+      Dedup.incrementalNewFromIndex(_, _), Dedup.updateMinhashIndex(_, _),
+      idx => spark.read.parquet(s"$idx/sets").select("doc_id")
+        .union(spark.read.parquet(s"$idx/bands").select("doc_id"))),
+    Ingest("phash", "doc_id",
+      Perceptual.writePhashIndex(Seq((1L, a)).toDF("doc_id", "content"), _),
+      () => blobs, Perceptual.incrementalNewFromPhashIndex(_, _),
+      Perceptual.updatePhashIndex(_, _),
+      idx => spark.read.parquet(s"$idx/hashes")),
+    Ingest("grid", "doc_id",
+      Perceptual.writeGridIndex(Seq((1L, a)).toDF("doc_id", "content"), _),
+      () => blobs, Perceptual.incrementalNewFromGridIndex(_, _),
+      Perceptual.updateGridIndex(_, _),
+      idx => spark.read.parquet(s"$idx/hashes")),
+    Ingest("url ledger", "canonical_url",
+      idx => StreamingWebIngest.appendLedger(
+        Seq("https://s.example.org/p").toDF("canonical_url"), idx),
+      () => Seq((1L, "https://www.s.example.org/p/"),
+        (2L, "https://s.example.org/q"), (3L, "https://s.example.org/r"))
+        .toDF("doc_id", "url"),
+      StreamingWebIngest.frontierProbe(_, _),
+      StreamingWebIngest.appendLedger(_, _), spark.read.parquet(_)))
+
+  // where the tick dies: before its update appends anything, or after
+  private val deaths = Seq("before", "after")
+
+  for (f <- ingests; death <- deaths)
+    test(s"ingest: a ${f.name} tick that dies $death its index append " +
+      "loses no survivor on replay") {
+      val dir = dirFor("ingest")
+      val (idx, sinkPath) = (s"$dir/index", s"$dir/sink")
+      f.build(idx)
+      def keys(df: DataFrame): Set[Any] =
+        df.select(f.key).collect().map(_.get(0)).toSet
+      val corpus = keys(f.indexed(idx))
+      val expected = keys(f.probe(f.batch(), idx))
+      assert(expected.nonEmpty && expected.size < f.batch().count())
+      val sink: DataFrame => Unit = _.write.mode("append").parquet(sinkPath)
+      var died = false
+      val dying: DataFrame => Unit = { rows =>
+        if (death == "after") f.update(rows, idx)
+        if (!died) { died = true; throw new RuntimeException("killed") }
+        if (death == "before") f.update(rows, idx)
+      }
+      intercept[RuntimeException](
+        PersistedIndex.ingest(f.probe(f.batch(), idx), Some(sink))(dying))
+      // the replayed tick
+      PersistedIndex.ingest(f.probe(f.batch(), idx), Some(sink))(dying)
+      val sunk = keys(spark.read.parquet(sinkPath))
+      assert(expected.subsetOf(sunk), s"$expected not all in $sunk")
+      val indexed = keys(f.indexed(idx))
+      assert(indexed.subsetOf(corpus ++ sunk), s"$indexed has rows " +
+        s"neither in the corpus $corpus nor in the sink $sunk")
+      assert(expected.subsetOf(indexed))
     }
 }

@@ -48,13 +48,15 @@ class StreamingMixtureSpec extends AnyFunSuite {
       q.processAllAvailable()
       def sorted(rs: Seq[org.apache.spark.sql.Row]) =
         rs.sortBy(_.getString(0))
-      val live1 = StreamingMixture.planFromTotals(latestTotals(), shares, budget)
+      val live1 = graft.ops.Sampling.mixturePlanFromTotals(
+        latestTotals(), shares, budget)
         .collect().toSeq
       assert(sorted(live1) == sorted(batchPlan(tick1).collect().toSeq))
 
       in.addData(tick2)
       q.processAllAvailable()
-      val live2 = StreamingMixture.planFromTotals(latestTotals(), shares, budget)
+      val live2 = graft.ops.Sampling.mixturePlanFromTotals(
+        latestTotals(), shares, budget)
         .collect().toSeq
       assert(sorted(live2) ==
         sorted(batchPlan(tick1 ++ tick2).collect().toSeq))

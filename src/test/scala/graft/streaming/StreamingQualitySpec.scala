@@ -28,7 +28,8 @@ class StreamingQualitySpec extends AnyFunSuite {
       (1L, "the quick brown fox"), (2L, "jumps over the lazy dog"),
       (3L, "zz yy xx ww"), (4L, "the the the the"))
     val in = MemoryStream[(Long, String)]
-    val q = StreamingQuality.scoreStream(in.toDF().toDF("doc_id", "text"))
+    val q = graft.ops.Quality
+      .classifierScoreInline(in.toDF().toDF("doc_id", "text"))
       .writeStream.format("memory").queryName("quality_out")
       .outputMode("append").start()
     in.addData(rows.take(2): _*)
@@ -48,7 +49,8 @@ class StreamingQualitySpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String)]
-    val q = StreamingQuality.scoreStream(in.toDF().toDF("doc_id", "text"))
+    val q = graft.ops.Quality
+      .classifierScoreInline(in.toDF().toDF("doc_id", "text"))
       .writeStream.format("memory").queryName("quality_stateless")
       .outputMode("append").start()
     in.addData((1L, "hello world"))

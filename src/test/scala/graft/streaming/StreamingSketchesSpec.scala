@@ -101,9 +101,8 @@ class StreamingSketchesSpec extends AnyFunSuite {
       .select("lang", "n_chars").as[(String, Long)].collect().toSeq
     val (tick1, tick2) = docs.splitAt(docs.length / 2)
     val in = MemoryStream[(String, Long)]
-    val q = StreamingSketches
-      .quantileBinsStream(in.toDF().toDF("lang", "n_chars"), "n_chars",
-        Seq("lang"))
+    val q = graft.ops.Sketches
+      .binTable(in.toDF().toDF("lang", "n_chars"), "n_chars", Seq("lang"), 16)
       .writeStream.format("memory").queryName("qb_out")
       .outputMode("update").start()
     def latestBins() = {

@@ -23,7 +23,7 @@ class StreamingWarcSpec extends AnyFunSuite with TempDirs {
     val fileC = WarcSynth.warcOf(Seq(4L -> "delta", 5L -> "epsilon"))
 
     val in = MemoryStream[(Long, Array[Byte])]
-    val q = StreamingWarc.records(in.toDF().toDF("warc_id", "content"))
+    val q = graft.ops.Warc.records(in.toDF().toDF("warc_id", "content"))
       .writeStream.format("parquet")
       .option("path", s"$dir/out").option("checkpointLocation", s"$dir/ckpt")
       .outputMode("append").start()
@@ -55,7 +55,7 @@ class StreamingWarcSpec extends AnyFunSuite with TempDirs {
       .dropRight(8) // truncated tail: record 0 parses, record 1 doesn't
 
     val in = MemoryStream[(Long, Array[Byte])]
-    val q = StreamingWarc.records(in.toDF().toDF("warc_id", "content"))
+    val q = graft.ops.Warc.records(in.toDF().toDF("warc_id", "content"))
       .writeStream.format("parquet")
       .option("path", s"$dir/out").option("checkpointLocation", s"$dir/ckpt")
       .outputMode("append").start()

@@ -4,10 +4,12 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkTestSession, TempDirs}
+import graft.ops.PublishKillFs
 
 /** Streaming canonical-URL frontier dedup: within-batch respellings
   * collapse, cross-batch respellings are stopped by the persisted ledger,
-  * and a restarted query resumes from ledger contents alone. */
+  * a restarted query resumes from ledger contents alone, and a compaction
+  * killed mid-swap loses no ledger. */
 class StreamingWebIngestSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
@@ -108,55 +110,43 @@ class StreamingWebIngestSpec extends AnyFunSuite with TempDirs {
     assert(rows == Seq(1L), s"expected exactly one row for doc 1, got $rows")
   }
 
-  test("recoverLedger repairs every crash window of the compaction swap") {
+  test("a ledger compaction killed mid-swap is put back by the next probe") {
     import spark.implicits._
-    val dir = tempDir("graft_frontier_rec").toString
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    def writeLedger(path: String, urls: String*): Unit =
-      urls.toDF("canonical_url").coalesce(1)
-        .write.mode("overwrite").parquet(path)
-    def readLedger(path: String): Set[String] =
-      spark.read.parquet(path).collect().map(_.getString(0)).toSet
-
-    // window 1: staging written, aside-rename not yet done → root intact,
-    // staging is redundant and must be dropped (not promoted: root may
-    // have newer appends than the staged snapshot)
-    val l1 = s"$dir/ledger1"
-    writeLedger(l1, "a", "b")
-    writeLedger(s"$dir/.ledger1_compact_staging", "a")
-    StreamingWebIngest.recoverLedger(fs, p(l1))
-    assert(readLedger(l1) == Set("a", "b"))
-    assert(!fs.exists(p(s"$dir/.ledger1_compact_staging")))
-
-    // window 2: died between the two renames → root missing, root_old +
-    // staging both present; staging (complete compacted copy) is promoted
-    val l2 = s"$dir/ledger2"
-    writeLedger(s"$dir/.ledger2_compact_old", "a", "a", "b")
-    writeLedger(s"$dir/.ledger2_compact_staging", "a", "b")
-    StreamingWebIngest.recoverLedger(fs, p(l2))
-    assert(readLedger(l2) == Set("a", "b"))
-    assert(!fs.exists(p(s"$dir/.ledger2_compact_old")))
-    assert(!fs.exists(p(s"$dir/.ledger2_compact_staging")))
-
-    // window 3: died right after the aside-rename (staging already
-    // promoted in a previous recovery, or lost) → root_old restored
-    val l3 = s"$dir/ledger3"
-    writeLedger(s"$dir/.ledger3_compact_old", "x", "y")
-    StreamingWebIngest.recoverLedger(fs, p(l3))
-    assert(readLedger(l3) == Set("x", "y"))
-
-    // steady state: recovery is a no-op
-    StreamingWebIngest.recoverLedger(fs, p(l3))
-    assert(readLedger(l3) == Set("x", "y"))
-
-    // and compactLedger itself recovers before compacting: a leftover
-    // root_old from a crashed swap doesn't lose the ledger
-    val l4 = s"$dir/ledger4"
-    writeLedger(s"$dir/.ledger4_compact_old", "u", "u", "v")
-    val (nb, na) = StreamingWebIngest.compactLedger(spark, l4)
-    assert(nb == 1 && na == 1, s"$nb -> $na")
-    assert(readLedger(l4) == Set("u", "v"))
+    implicit val sqlCtx = spark.sqlContext
+    val dir = tempDir("graft_frontier_kill").toString
+    val ledger = PublishKillFs.path(spark, s"$dir/ledger")
+    val sink = s"$dir/accepted"
+    def ingest(ckpt: String, pages: (Long, String)*): Unit = {
+      val in = MemoryStream[(Long, String)]
+      val q = StreamingWebIngest.urlFrontierDedup(
+        in.toDF().toDF("doc_id", "url"), ledger, sink, s"$dir/$ckpt")
+      in.addData(pages: _*)
+      q.processAllAvailable()
+      q.stop()
+    }
+    def accepted() = spark.read.parquet(sink).select("doc_id").collect()
+      .map(_.getLong(0)).toSet
+    ingest("ckpt1", (1L, "https://s.example.org/p"))
+    ingest("ckpt2", (2L, "https://s.example.org/q"))
+    // the swap dies after the ledger moved aside, before the compacted
+    // copy moved in: no ledger is left at its path
+    PublishKillFs.killing(
+      intercept[Exception](StreamingWebIngest.compactLedger(spark, ledger)))
+    // the next probe still refuses both known canonicals
+    ingest("ckpt3", (3L, "https://www.s.example.org/p/"),
+      (4L, "https://s.example.org/q?utm_source=z"),
+      (5L, "https://s.example.org/new"))
+    assert(accepted() == Set(1L, 2L, 5L))
+    // killed again, this time followed by a compaction, which puts the
+    // ledger back, clears what the kill left and goes through
+    PublishKillFs.killing(
+      intercept[Exception](StreamingWebIngest.compactLedger(spark, ledger)))
+    val (nBefore, nAfter) = StreamingWebIngest.compactLedger(spark, ledger)
+    assert(nBefore >= 3 && nAfter == 1, s"$nBefore -> $nAfter")
+    assert(spark.read.parquet(ledger).select("canonical_url").collect()
+      .map(_.getString(0)).toSet == Set("https://s.example.org/p",
+        "https://s.example.org/q", "https://s.example.org/new"))
+    val left = new java.io.File(dir).list().filter(_.startsWith(".ledger"))
+    assert(left.isEmpty, left.toSeq)
   }
 }
