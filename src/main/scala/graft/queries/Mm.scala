@@ -32,8 +32,8 @@ private[graft] object Mm extends Family("mm") {
     * build-probe-append-probe shape upgraded to the r13 verified probe —
     * an ingest doc is rejected only if some indexed doc is BOTH
     * hamming-close (≤ 3, pigeonhole-exact banding) and content-close
-    * (72-cell luminance SAD ≤ 128: the ns151 verify stage, via the ONE
-    * shared [[graft.ops.Perceptual.sadVerify]] definition), so a
+    * (72-cell luminance SAD ≤ 128: the ns151 verify test, via the ONE
+    * shared [[graft.ops.Perceptual.sad]] definition), so a
     * coincidental dHash neighbor can no longer suppress genuinely-new
     * media at ingest. Corpus = the v0/v1 image groups; tick 1 ingests
     * the reversed variants and its survivors append WITH their grids (no

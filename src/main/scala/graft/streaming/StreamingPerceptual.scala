@@ -41,8 +41,8 @@ object StreamingPerceptual {
     * if some (corpus + earlier-accepted) doc is hamming-close AND its
     * 72-cell luminance grid agrees (SAD ≤ `maxSad`), so coincidental
     * dHash neighbors (73% of candidates at the measured 100× decade) no
-    * longer suppress genuinely-new media. The verify logic is
-    * [[graft.ops.Perceptual.sadVerify]] — the ONE definition the batch
+    * longer suppress genuinely-new media. The grid distance is
+    * [[graft.ops.Perceptual.sad]] — the ONE definition the batch
     * operator uses — so stream and batch decisions cannot drift; the
     * index carries (phash, grid) (~300 B/doc vs 16) and each batch still
     * decodes exactly once (its grids ride into the index append). The

@@ -238,9 +238,9 @@ object ScaleProof {
       // ns153 (r13): ns82's lifecycle with the grid-verified probe — the
       // base GRID index builds once per size in the untimed warmup
       // (fingerprint-keyed); timed runs measure copy + two decode-once
-      // probes (band join on 16 B hash rows + sadVerify over the
-      // collision-bounded pair list against ~300 B/doc grids) + one
-      // append — all batch-proportional, pairs bounded by band collisions
+      // probes (one pass of band-keyed anti-joins against ~300 B/doc
+      // (phash, grid) index rows, SAD tested per matched row) + one
+      // append — all batch-proportional, matches bounded by band collisions
       "ns153_grid_index_lifecycle",
       // ns83: frame explode + hash pass + ONE phash groupBy — group
       // volume, linear in frames; count() cannot prune the HAVING filter

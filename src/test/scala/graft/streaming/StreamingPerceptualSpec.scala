@@ -122,7 +122,7 @@ class StreamingPerceptualSpec extends AnyFunSuite with TempDirs {
     assert(accepted == Set(1L, 3L))
 
     // ---- stream-batch equivalence: replay the BATCH operator's verified
-    // pair set (nearDupPairsVerified — same sadVerify definition) in
+    // pair set (nearDupPairsVerified — same `sad` definition) in
     // arrival order and demand the identical acceptance set. Within a
     // batch, decisions are against accepted-so-far only (new × index),
     // exactly what the incremental probe computes.
