@@ -137,8 +137,8 @@ object Dedup {
     * aggregates over the 60-bit numeric md5 prefix — an 8-byte agg state
     * per hash instead of a 32-char hex string; selection is identical to
     * full-hex lexicographic min unless two digests share their first 15 hex
-    * chars, ~2⁻⁶⁰) → 4 bands of 4 → equality self-join on (band, band-key)
-    * → exact jaccard verification on candidates only. At scale the band
+    * chars, ~2⁻⁶⁰) → 4 bands of 4, each hashed to one Long key →
+    * [[Blocking.pairs]] self-join → exact jaccard verification on candidates only. At scale the band
     * join is the only pairwise step and touches only colliding docs; a
     * band-collision false positive only adds a candidate, which the exact
     * verify then scores — it can never corrupt the output.
@@ -190,50 +190,29 @@ object Dedup {
     val mhCols = (0 until numHashes).map(s => min(col(s"h$s")).as(s"mh$s"))
     val mh = posted.groupBy(col("doc_id")).agg(mhCols.head, mhCols.tail: _*)
 
-    // the [[ngramJaccard]] maxDocFreq / [[graft.ops.Perceptual]]
-    // maxBandFreq skew lever, for the LSH band join: an adversarial
-    // near-constant corpus collapses every sketch into one (band, bv)
-    // bucket whose self-join is corpus² — over-hot buckets drop from
-    // candidate generation at the same documented recall trade. Default
-    // ∞ keeps the oracle-exact semantics. The CAPPED path materializes
-    // the sketch frame first (doc_id + 16 longs — corpus-cheap): the
-    // hot-bucket count side would otherwise re-execute the whole
-    // shingle→16-hash pipeline a second time (the Perceptual
-    // checkpoint-then-filter pattern).
-    val bands0 = bandKeys(
+    // maxBandFreq is [[Blocking.pairs]]' skew lever: a near-constant
+    // corpus collapses every sketch into one bucket whose self-join is
+    // corpus². The CAPPED path materializes the sketch frame first (doc_id
+    // + 16 longs — corpus-cheap): the hot-bucket count would otherwise
+    // re-execute the whole shingle→16-hash pipeline a second time.
+    val mhKeys = minhashKeys(
       if (maxBandFreq == Long.MaxValue) mh else Materialize.local(mh, eager = false),
       numHashes, rowsPerBand)
-    val bands =
-      if (maxBandFreq == Long.MaxValue) bands0
-      else {
-        val hot = bands0.groupBy(col("band"), col("bv")).count()
-          .where(col("count") > maxBandFreq).select(col("band"), col("bv"))
-        bands0.join(hot, Seq("band", "bv"), "left_anti")
-      }
-
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val cand = Blocking.pairs(mhKeys, None, "doc_id", ("doc_a", "doc_b"),
+      maxBandFreq = maxBandFreq)
 
     verifyJaccard(cand, sh, threshold,
       broadcastSets = postingsEst <= broadcastThresholdBytes)
   }
 
-  /** (doc_id, band, band-value) keys from a minhash sketch frame. */
-  private def bandKeys(
-      mh: DataFrame, numHashes: Int, rowsPerBand: Int): DataFrame = {
-    val numBands = numHashes / rowsPerBand
-    val bandStructs = (0 until numBands).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws(",", (0 until rowsPerBand).map(r =>
-          col(s"mh${b * rowsPerBand + r}").cast("string")): _*)
-          .as("bv"))
-    }
-    mh.select(col("doc_id"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bv").as("bv"))
-  }
+  /** (doc_id, band_key) rows of a minhash sketch frame: band b's key hashes
+    * b and its `rowsPerBand` minima ([[Blocking.hashedKey]]). */
+  private def minhashKeys(
+      mh: DataFrame, numHashes: Int, rowsPerBand: Int): DataFrame =
+    Blocking.banded(mh, (0 until numHashes / rowsPerBand).map { b =>
+      Blocking.hashedKey(lit(b) +: (0 until rowsPerBand).map(r =>
+        col(s"mh${b * rowsPerBand + r}")): _*)
+    }).select(col("doc_id"), col(Blocking.Key))
 
   /** Shared minhash front half, FUSED (r16, VERDICT r15 #5): ONE per-doc
     * frame carrying both the sketch minima and the shingle set —
@@ -328,13 +307,9 @@ object Dedup {
     val newPerDoc = minhashPerDoc(exactSurvivors, shingleK, numHashes,
       postingsEstimate = Some(newEst))
     val corpusPerDoc = minhashPerDoc(corpus, shingleK, numHashes)
-    val newBands = bandKeys(newPerDoc, numHashes, rowsPerBand)
-    val corpusBands = bandKeys(corpusPerDoc, numHashes, rowsPerBand)
-
-    val cand = newBands.as("a").join(corpusBands.as("b"),
-        col("a.band") === col("b.band") && col("a.bv") === col("b.bv"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val cand = Blocking.pairs(minhashKeys(newPerDoc, numHashes, rowsPerBand),
+      Some(minhashKeys(corpusPerDoc, numHashes, rowsPerBand)), "doc_id",
+      ("doc_a", "doc_b"))
 
     // batch-side sets broadcast when the batch's postings fit (the corpus
     // side stays shuffled — it is the big side by construction)
@@ -384,7 +359,7 @@ object Dedup {
       // written; the scope frees them and leaves a caller's corpus alone.
       Materialize.scope {
         val perDoc = minhashPerDoc(corpus, shingleK, numHashes)
-        bandKeys(perDoc, numHashes, rowsPerBand)
+        minhashKeys(perDoc, numHashes, rowsPerBand)
           .write.mode("overwrite").parquet(s"$tmp/bands")
         perDoc.select(col("doc_id"), col("s"))
           .write.mode("overwrite").parquet(s"$tmp/sets")
@@ -436,7 +411,7 @@ object Dedup {
       // write would re-shuffle the postings the bands write just built
       val perDoc = minhashPerDoc(acc, shingleK, numHashes,
         postingsEstimate = Some(accEst), forceCheckpoint = true)
-      bandKeys(perDoc, numHashes, rowsPerBand)
+      minhashKeys(perDoc, numHashes, rowsPerBand)
         .write.mode("append").parquet(s"$path/bands")
       perDoc.select(col("doc_id"), col("s"))
         .write.mode("append").parquet(s"$path/sets")
@@ -492,12 +467,8 @@ object Dedup {
 
     val newPerDoc = minhashPerDoc(exactSurvivors, shingleK, numHashes,
       postingsEstimate = Some(newEst))
-    val newBands = bandKeys(newPerDoc, numHashes, rowsPerBand)
-    val cand = newBands.as("a")
-      .join(Tables.parquet(spark, s"$path/bands").as("b"),
-        col("a.band") === col("b.band") && col("a.bv") === col("b.bv"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val cand = Blocking.pairs(minhashKeys(newPerDoc, numHashes, rowsPerBand),
+      Some(Tables.parquet(spark, s"$path/bands")), "doc_id", ("doc_a", "doc_b"))
 
     val newSets0 = newPerDoc.select(col("doc_id"), col("s"))
     val newSets = if (newEst <= defaultBroadcastBytes) broadcast(newSets0)
@@ -516,8 +487,8 @@ object Dedup {
   }
 
   /** D3 — SimHash near-dup pairs: 60-bit simhash over shingle hashes,
-    * 5×12-bit band join (pigeonhole-complete for hamming ≤ 4; near-complete
-    * at ≤ 8), exact hamming filter. One groupBy with 60 sum() aggregates —
+    * 5×12-bit band join through [[Blocking.pairs]] (pigeonhole-complete for
+    * hamming ≤ 4; near-complete at ≤ 8), exact hamming test in the join. One groupBy with 60 sum() aggregates —
     * no per-bit explode, single shuffle. */
   def simhash(
       docs: DataFrame,
@@ -545,20 +516,10 @@ object Dedup {
       .reduce(_ + _)
     val sim = agg.select(col("doc_id"), simCol.as("sh"))
 
-    val chunks = (0 until 5).map(p =>
-      struct(lit(p).as("p"),
-        shiftright(col("sh"), p * 12).bitwiseAND(lit(4095L)).as("chunk")))
-    val bands = sim.select(col("doc_id"), col("sh"),
-      explode(array(chunks: _*)).as("bk"))
-      .select(col("doc_id"), col("sh"), col("bk.p").as("p"), col("bk.chunk").as("chunk"))
-
-    bands.as("a").join(bands.as("b"),
-        col("a.p") === col("b.p") && col("a.chunk") === col("b.chunk") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).as("hamming"))
-      .distinct()
-      .where(col("hamming") <= maxHamming)
+    val hamming = bit_count(col("a.sh").bitwiseXOR(col("b.sh")))
+    Blocking.pairs(Blocking.banded(sim, Blocking.bitBandKeys(col("sh"), bitsN, 5)),
+      None, "doc_id", ("doc_a", "doc_b"), on = hamming <= maxHamming,
+      out = Seq(hamming.as("hamming")))
   }
 
   /** D4 — exact n-gram jaccard near-dup via inverted-index (postings)
@@ -931,8 +892,8 @@ object Dedup {
   }
 
   /** D5 (scale path) — embedding-cosine near-dup via sign-LSH banding:
-    * candidate pairs come from an EQUALITY self-join on (band, band-bits)
-    * keys — `numPlanes` deterministic hyperplane sign bits split into
+    * candidate pairs come from [[Blocking.pairs]] over sign-band keys —
+    * `numPlanes` deterministic hyperplane sign bits split into
     * `numPlanes/bandBits` bands — then exact cosine is computed on the
     * candidates only and thresholded. Work scales with band-collision
     * counts, not n²: no BroadcastNestedLoopJoin anywhere in the plan. A
@@ -948,23 +909,17 @@ object Dedup {
       bandBits: Int = 4): DataFrame = {
     // norms + bucket in one narrow scan; the vector rides along so the
     // band join needs no second pass over the corpus
-    // (band validation + sizing live in Similarity.signBandKeys)
     val base = embeddings.select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"))
       .withColumn("n", Similarity.norm(col("v")))
       .withColumn("bucket", Similarity.lshBucket(col("v"), numPlanes))
-    val bands = base.select(col("vec_id"), col("v"), col("n"),
-        Similarity.signBandKeys(col("bucket"), numPlanes, bandBits).as("bk"))
-      .select(col("vec_id"), col("v"), col("n"),
-        col("bk.band").as("band"), col("bk.bv").as("bv"))
-    bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        round(Similarity.dot(col("a.v"), col("b.v")) /
-          (col("a.n") * col("b.n")), 6).as("cosine"))
-      .distinct() // a pair can collide in both bands
-      .where(col("cosine") >= threshold)
+    val cosine = round(Similarity.dot(col("a.v"), col("b.v")) /
+      (col("a.n") * col("b.n")), 6)
+    Blocking.pairs(
+      Blocking.banded(base,
+        Blocking.signBandKeys(col("bucket"), numPlanes, bandBits)),
+      None, "vec_id", ("id_a", "id_b"), on = cosine >= threshold,
+      out = Seq(cosine.as("cosine")))
   }
 
   /** D7 — near-dup survivor resolution: the dedup DECISION over candidate

@@ -133,7 +133,8 @@ object Graphs {
     * closure) and `oriented` sits on BOTH sides of the wedge self-join —
     * without materialization the distinct+degree lineage executes three
     * times, tripling the heaviest scan at scale. Both frames are
-    * `localCheckpoint`ed eagerly (the Perceptual.reuseHashes move), so
+    * `localCheckpoint`ed eagerly (one snapshot behind both sides of a
+    * self-join, as `Perceptual.nearDupPairs` takes of its hashes), so
     * the dedup/degree work runs ONCE and every join reads the
     * materialized edge list. */
   def triangleCounts(edges: DataFrame): DataFrame = {

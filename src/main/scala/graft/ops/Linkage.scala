@@ -21,13 +21,14 @@ import org.apache.spark.sql.functions._
   * match — exactly what the oracle replays — with the recall trade
   * documented rather than silently absorbed.
   *
-  * Scale shape: explode ×2 block keys (narrow), ONE shuffle keyed by
-  * (group, key-index, key), same-block self-join — candidate volume is
-  * block-collision volume, never corpus²; `levenshtein` is a codegen'd
-  * Spark built-in evaluated only on candidates. `maxBlockFreq` drops
-  * over-hot blocks (a "Smith" block in a real name file) at a documented
-  * recall cost — the [[Dedup.ngramJaccard]]/[[Perceptual.nearDupPairs]]
-  * skew lever.
+  * Scale shape: explode ×2 block keys (narrow), each one Long hashed
+  * from (key-index, key, groups) with null flags ([[Blocking.hashedKey]]),
+  * ONE shuffle keyed by it, same-block self-join ([[Blocking.pairs]]) —
+  * candidate volume is block-collision volume, never corpus²;
+  * `levenshtein` is a codegen'd Spark built-in evaluated only on
+  * candidates. `maxBlockFreq` drops over-hot blocks (a "Smith" block in a
+  * real name file) at a documented recall cost — [[Blocking.pairs]]'
+  * `maxBandFreq` skew lever.
   */
 object Linkage {
 
@@ -46,41 +47,24 @@ object Linkage {
       maxBlockFreq: Long = Long.MaxValue): DataFrame = {
     require(maxDist >= 0, "maxDist must be >= 0")
     require(prefixLen >= 1, "prefixLen must be >= 1")
-    val nm = col(nameCol)
-    val keys = array(
-      struct(lit(0).as("ki"), substring(nm, 1, prefixLen).as("key")),
-      struct(lit(1).as("ki"),
-        nm.substr(greatest(length(nm) - (prefixLen - 1), lit(1)),
-          lit(prefixLen)).as("key")))
-    val blocked = recs
-      .select(Seq(col(idCol).as("rec_id"), nm.as("nm"),
-        explode(keys).as("bk")) ++ groupCols.map(col): _*)
-      .select(Seq(col("rec_id"), col("nm"), col("bk.ki").as("ki"),
-        col("bk.key").as("key")) ++ groupCols.map(col): _*)
-    val probe =
-      if (maxBlockFreq == Long.MaxValue) blocked
-      else {
-        // the hot-block count groups NULL-SAFE exactly like the pair join
-        // (groupBy treats NULL group keys as one group), so the anti-join
-        // must match with <=> too — a using-column anti-join's EqualTo
-        // never matches NULL, and a flooded NULL-group block would
-        // silently survive the cap, the exact blow-up it exists to stop
-        val hot = blocked
-          .groupBy(col("ki") +: col("key") +: groupCols.map(col): _*)
-          .count().where(col("count") > maxBlockFreq)
-          .select(col("ki") +: col("key") +: groupCols.map(col): _*)
-        val antiCond = (Seq("ki", "key") ++ groupCols)
-          .map(c => blocked(c) <=> hot(c)).reduce(_ && _)
-        blocked.join(hot, antiCond, "left_anti")
+    val groups = groupCols.map(col)
+    val nm = col("nm")
+    val keys = Seq(substring(nm, 1, prefixLen),
+      nm.substr(greatest(length(nm) - (prefixLen - 1), lit(1)), lit(prefixLen)))
+      .zipWithIndex.map { case (key, ki) =>
+        Blocking.hashedKey(lit(ki) +: key +: groups: _*)
       }
-    val joinCond = (Seq("ki", "key") ++ groupCols)
-      .map(c => col(s"a.$c") <=> col(s"b.$c"))
-      .reduce(_ && _) && col("a.rec_id") < col("b.rec_id")
-    probe.as("a").join(probe.as("b"), joinCond)
-      .select(col("a.rec_id").as("rec_a"), col("b.rec_id").as("rec_b"),
-        levenshtein(col("a.nm"), col("b.nm")).cast("long").as("dist"))
-      .where(col("dist") <= maxDist)
-      .distinct()
+    // the groups ride along and are compared null-safe in the join, so a
+    // key collision across groups can never pair them
+    val sameGroup = groupCols.map(c => col(s"a.$c") <=> col(s"b.$c"))
+      .foldLeft(lit(true))(_ && _)
+    val dist = levenshtein(col("a.nm"), col("b.nm")).cast("long")
+    Blocking.pairs(
+      Blocking.banded(
+        recs.select(Seq(col(idCol).as("rec_id"), col(nameCol).as("nm")) ++ groups: _*),
+        keys),
+      None, "rec_id", ("rec_a", "rec_b"), on = sameGroup && dist <= maxDist,
+      out = Seq(dist.as("dist")), maxBandFreq = maxBlockFreq)
   }
 
   /** Entity clusters from the pair stream — one row per linked record

@@ -39,13 +39,13 @@ import graft.Tables
   *     batch of blobs into (doc_id, 1 long). The media column never
   *     shuffles.
   *   - pairing: explode ×`bands` band keys (narrow), ONE shuffle keyed by
-  *     (band_idx, band_bits), band-equality self-join — candidate work is
-  *     collision volume, never corpus². Pigeonhole-complete: hamming ≤
+  *     one Long per band, band-equality self-join ([[Blocking.pairs]]) —
+  *     candidate work is collision volume, never corpus². Pigeonhole-complete: hamming ≤
   *     maxHamming < bands forces ≥ 1 identical band, so the banded join
   *     EXACTLY reproduces the all-pairs semantics the oracle computes.
   *   - skew: a constant-tile corpus (all-black thumbnails) floods one
-  *     band bucket; `maxBandFreq` drops over-hot buckets from candidate
-  *     generation — the [[Dedup.ngramJaccard]] `maxDocFreq` lever, with
+  *     band bucket; `maxBandFreq` ([[Blocking.pairs]]) drops over-hot
+  *     buckets from candidate generation — the [[Dedup.ngramJaccard]] `maxDocFreq` lever, with
   *     the same documented recall trade (default ∞ keeps oracle-exact
   *     semantics).
   */
@@ -202,46 +202,38 @@ object Perceptual {
 
   /** Banded Hamming near-dup pairs over (doc_id, phash): all (doc_a <
     * doc_b) pairs with hamming ≤ `maxHamming`, found via a
-    * (band_idx, band_bits)-equality self-join. The 63 bits split into
+    * [[Blocking.pairs]] self-join on one Long key per band. The 63 bits split into
     * `bands` contiguous chunks whose sizes differ by ≤ 1 (e.g. bands=4 →
     * 16+16+16+15); `maxHamming < bands` makes the banding
     * pigeonhole-EXACT, so the output equals the brute-force all-pairs
     * answer. `maxBandFreq` (default unlimited) drops band buckets with
-    * more than that many members before the join — the skew lever, at a
-    * documented recall cost. */
+    * more than that many members before the join — [[Blocking.pairs]]'
+    * skew lever, at a documented recall cost. */
   def nearDupPairs(
       hashes: DataFrame,
       maxHamming: Int = 3,
       bands: Int = 4,
-      maxBandFreq: Long = Long.MaxValue,
-      reuseHashes: Boolean = true): DataFrame =
-    nearDupPairsCore(hashes, maxHamming, bands, maxBandFreq, reuseHashes)
+      maxBandFreq: Long = Long.MaxValue): DataFrame =
+    // both join sides derive from ONE materialization of (doc_id, phash):
+    // without it the self-join re-runs the upstream lineage on each side,
+    // and when that lineage is the dhash63 decode pass the blobs decode
+    // TWICE (16 bytes/row keeps the snapshot corpus-cheap)
+    hammingPairs(Materialize.local(hashes, eager = false), maxHamming, bands,
+      maxBandFreq)
 
-  /** The unsorted pair pipeline — [[nearDupPairsVerified]] consumes this
-    * directly so no Sort sits between candidate generation and the
-    * verify join. */
-  private def nearDupPairsCore(
+  /** The banded pairs of (doc_id, phash) rows, without a snapshot —
+    * [[nearDupPairsVerified]] feeds its own. */
+  private def hammingPairs(
       hashes: DataFrame,
       maxHamming: Int,
       bands: Int,
-      maxBandFreq: Long,
-      reuseHashes: Boolean): DataFrame = {
+      maxBandFreq: Long): DataFrame = {
     requireBandParams(maxHamming, bands)
-    // both join sides derive from ONE materialization of (doc_id, phash):
-    // without this the self-join re-runs the upstream lineage on each
-    // side, and when that lineage is the dhash63 decode pass the blobs
-    // decode TWICE (the ngramJaccard postings-checkpoint move; 16 bytes/row
-    // keeps the checkpoint corpus-cheap)
-    val hs = if (reuseHashes) Materialize.local(hashes, eager = false) else hashes
-    val probe = dropHotBuckets(bandKeys(hs, bands), maxBandFreq)
-    probe.as("a").join(probe.as("b"),
-        col("a.p") === col("b.p") && col("a.chunk") === col("b.chunk") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col("a.phash").bitwiseXOR(col("b.phash"))).cast("long")
-          .as("hamming"))
-      .distinct()
-      .where(col("hamming") <= maxHamming)
+    val hamming = bit_count(col("a.phash").bitwiseXOR(col("b.phash"))).cast("long")
+    Blocking.pairs(
+      Blocking.banded(hashes, phashKeys(col("phash"), bands)),
+      None, "doc_id", ("doc_a", "doc_b"), on = hamming <= maxHamming,
+      out = Seq(hamming.as("hamming")), maxBandFreq = maxBandFreq)
   }
 
   /** One decode pass → (doc_id, phash, grid): the hash AND its 72-cell
@@ -292,8 +284,8 @@ object Perceptual {
       maxSad: Long = 720L,
       maxBandFreq: Long = Long.MaxValue): DataFrame = {
     val sig = Materialize.local(gridHashes(media, decoder), eager = false)
-    val cand = nearDupPairsCore(sig.select(col("doc_id"), col("phash")),
-      maxHamming, bands, maxBandFreq, reuseHashes = false)
+    val cand = hammingPairs(sig.select(col("doc_id"), col("phash")),
+      maxHamming, bands, maxBandFreq)
     sadVerify(cand, sig.select(col("doc_id"), col("grid")), maxSad)
       .select(col("doc_a"), col("doc_b"), col("hamming"), col("sad"))
   }
@@ -301,7 +293,7 @@ object Perceptual {
   /** THE grid distance: the exact integer sum of absolute differences
     * over the 72 luminance cells of two grids. One definition behind the
     * batch [[sadVerify]] AND the [[incrementalNewFromGridIndex]] probe
-    * (the [[Similarity]] `signBandKeys` shared-definition discipline —
+    * (the [[Blocking.signBandKeys]] shared-definition discipline —
     * VERDICT r12 #5 — so the two paths cannot drift). */
   private def sad(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => abs(x - y)), lit(0L),
@@ -326,8 +318,8 @@ object Perceptual {
 
   // ---- the ONE definition of the band layout ------------------------------
   // The pigeonhole-exactness contract holds across nearDupPairs AND the
-  // index probe only while both band with bit-identical layouts, so the
-  // sizing, chunk extraction, and hot-bucket capping live here alone.
+  // index probe only while both band with bit-identical layouts, so both
+  // take their keys from phashKeys alone.
 
   private def requireBandParams(maxHamming: Int, bands: Int): Unit = {
     require(bands >= 2 && bands <= hashBits,
@@ -336,47 +328,11 @@ object Perceptual {
       "maxHamming < bands is what makes the banded join pigeonhole-exact")
   }
 
-  /** The band chunks of `phash`, band p at index p: the 63 bits split
-    * into `bands` contiguous chunks, sizes floor/ceil of 63/bands (e.g.
-    * bands=4 → 16+16+16+15), so no chunk is wider than 32 bits. */
-  private def bandChunks(phash: Column, bands: Int): Seq[Column] = {
-    val base = hashBits / bands
-    val rem = hashBits % bands
-    val sizes = (0 until bands).map(p => base + (if (p < rem) 1 else 0))
-    val offsets = sizes.scanLeft(0)(_ + _)
-    (0 until bands).map { p =>
-      shiftright(phash, offsets(p)).bitwiseAND(lit((1L << sizes(p)) - 1))
-    }
-  }
+  /** The band keys of a 63-bit `phash`, one Long per band: chunks of
+    * floor/ceil 63/bands bits ([[Blocking.bitBandKeys]]). */
+  private def phashKeys(phash: Column, bands: Int): Seq[Column] =
+    Blocking.bitBandKeys(phash, hashBits, bands)
 
-  /** (doc_id, phash) → one row per band: (doc_id, phash, p, chunk). */
-  private def bandKeys(hashes: DataFrame, bands: Int): DataFrame = {
-    val chunks = bandChunks(col("phash"), bands).zipWithIndex.map {
-      case (chunk, p) => struct(lit(p).as("p"), chunk.as("chunk"))
-    }
-    hashes.select(col("doc_id"), col("phash"),
-        explode(array(chunks: _*)).as("bk"))
-      .select(col("doc_id"), col("phash"),
-        col("bk.p").as("p"), col("bk.chunk").as("chunk"))
-  }
-
-  /** Band p's key of `phash` as one Long, `p << 32 | chunk_p`: injective
-    * over (p, chunk) because every chunk is under 2^32. */
-  private def bandKeyLongs(phash: Column, bands: Int): Seq[Column] =
-    bandChunks(phash, bands).zipWithIndex.map { case (chunk, p) =>
-      chunk.bitwiseOR(lit(p.toLong << 32))
-    }
-
-  /** The skew lever: drop (p, chunk) buckets with more than `maxBandFreq`
-    * members (documented recall trade; default ∞ = exact). */
-  private def dropHotBuckets(
-      banded: DataFrame, maxBandFreq: Long): DataFrame =
-    if (maxBandFreq == Long.MaxValue) banded
-    else {
-      val hot = banded.groupBy(col("p"), col("chunk")).count()
-        .where(col("count") > maxBandFreq).select(col("p"), col("chunk"))
-      banded.join(hot, Seq("p", "chunk"), "left_anti")
-    }
   // ---- persisted index lifecycle (the D6 shape for media) -----------------
 
   /** Index build — persist the corpus's (doc_id, phash) rows so ingest
@@ -515,8 +471,8 @@ object Perceptual {
       maxHamming: Int, bands: Int)(verify: Column): DataFrame = {
     requireBandParams(maxHamming, bands)
     val build = index.select(col("*"),
-      explode(array(bandKeyLongs(col("phash"), bands): _*)).as("band_key"))
-    bandKeyLongs(col("a.phash"), bands).foldLeft(batch) { (survivors, key) =>
+      explode(array(phashKeys(col("phash"), bands): _*)).as("band_key"))
+    phashKeys(col("a.phash"), bands).foldLeft(batch) { (survivors, key) =>
       survivors.as("a").join(build.as("b"),
         key === col("b.band_key") &&
           bit_count(col("a.phash").bitwiseXOR(col("b.phash"))) <= maxHamming &&

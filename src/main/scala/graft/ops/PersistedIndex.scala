@@ -28,7 +28,10 @@ object PersistedIndex {
     override def toString: String = name
   }
   object Kind {
-    case object Minhash extends Kind("minhash")
+    /** `bands` holds one Long `band_key` per (doc, band). The index
+      * before it, kind "minhash", held string band values that match no
+      * Long key, so it must be rebuilt, not read. */
+    case object Minhash extends Kind("minhash64")
     case object Ivf extends Kind("ivf")
     case object Pq extends Kind("pq")
     case object IvfPq extends Kind("ivfpq")

@@ -168,22 +168,6 @@ object Similarity {
       when(dot(vec, plane) > 0, lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  /** ONE definition of the sign-LSH band-key extraction over a packed
-    * `bucket` column: an exploded (band, bv) struct per band.
-    * [[graft.ops.Dedup.embeddingNearDupLsh]] (the batch verify) and
-    * [[graft.streaming.StreamingDedup.lshBands]] (the stream candidate
-    * feed) both band through here, so an edit to the bit layout cannot
-    * silently break the candidates/verify handoff between them. */
-  private[graft] def signBandKeys(
-      bucket: Column, numPlanes: Int, bandBits: Int): Column = {
-    require(numPlanes % bandBits == 0, "numPlanes % bandBits != 0")
-    val numBands = numPlanes / bandBits
-    explode(array((0 until numBands).map(b =>
-      struct(lit(b).as("band"),
-        shiftright(bucket, b * bandBits)
-          .bitwiseAND(lit((1L << bandBits) - 1)).as("bv"))): _*))
-  }
-
   /** IVF (inverted-file) ANN top-k — the second scale path besides
     * [[lshTopK]].
     *

@@ -15,7 +15,8 @@ import graft.ops.{Materialize, PersistedIndex}
   *     document text, and `dropDuplicatesWithinWatermark` lets the state
   *     store EVICT fingerprints once the watermark passes them — state is
   *     bounded by (ingest rate × watermark horizon), not corpus size;
-  *   - LSH band assignment is STATELESS (a projection), so near-dup
+  *   - LSH band assignment is STATELESS (a projection: the batch
+  *     [[graft.ops.Blocking.signBandKeys]] runs on a stream as is), so near-dup
   *     candidate discovery can run in-stream and feed a periodic batch
   *     verify/compaction over the bucketed output — the same
   *     candidates-then-verify split as the batch operators;
@@ -37,21 +38,6 @@ object StreamingDedup {
       .withColumn("fp", md5(col("text").cast("binary")))
       .withWatermark(eventTimeCol, watermark)
       .dropDuplicatesWithinWatermark("fp")
-
-  /** Stateless in-stream LSH band assignment over an embedding column:
-    * one row per (vec, band) with the band key, partition-ready for a
-    * downstream bucketed near-dup verify (same key scheme as
-    * [[graft.ops.Dedup.embeddingNearDupLsh]]). */
-  def lshBands(
-      embeddings: DataFrame, numPlanes: Int = 8, bandBits: Int = 4): DataFrame =
-    embeddings
-      .withColumn("bucket", graft.ops.Similarity.lshBucket(
-        col("embedding").cast("array<double>"), numPlanes))
-      // the SHARED band-key definition — batch verify and stream
-      // candidates cannot drift (Similarity.signBandKeys)
-      .select(col("*"), graft.ops.Similarity
-        .signBandKeys(col("bucket"), numPlanes, bandBits).as("bk"))
-      .select(col("vec_id"), col("bk.band").as("band"), col("bk.bv").as("bv"))
 
   /** Continuous-ingest dedup against a persisted minhash corpus index
     * ([[graft.ops.Dedup.writeMinhashIndex]]): every micro-batch is

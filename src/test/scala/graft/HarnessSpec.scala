@@ -107,9 +107,9 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 /** Keeps the harness forks from growing back: session building and
   * listener registration live in `Harness.scala` only, materialising or
-  * freeing snapshots in `Materialize.scala` only, and schema-less parquet
-  * opens in `Tables.scala` only. The benchmark's own sources are not
-  * scanned. */
+  * freeing snapshots in `Materialize.scala` only, schema-less parquet
+  * opens in `Tables.scala` only, and band-key joins in `Blocking.scala`
+  * only. The benchmark's own sources are not scanned. */
 class HarnessGuardSpec extends AnyFunSuite {
   private def offenders(roots: Seq[String], pattern: String,
       owner: String): Seq[String] =
@@ -154,6 +154,33 @@ class HarnessGuardSpec extends AnyFunSuite {
       "PersistedIndex.scala")
     assert(hits.isEmpty, "replace a directory with PersistedIndex.publish, " +
       s"which a killed process cannot leave half-swapped: $hits")
+  }
+
+  test("only Blocking joins rows on equal band keys in main") {
+    val bandJoin =
+      """col\("a\.(band|bv|p|chunk|ki|key|band_key)"\)\s*(===|<=>)\s*col\("b\.\1"\)"""
+    val hits = offenders(Seq("src/main/scala"), bandJoin, "Blocking.scala")
+    assert(hits.isEmpty, "find candidate pairs with Blocking.pairs: " +
+      hits.mkString(", "))
+    // the guard sees a copy: Dedup.scala with the old minhash band join
+    val planted = Files.createTempDirectory("graft_guard")
+    try {
+      val dedup = planted.resolve("Dedup.scala")
+      Files.writeString(dedup,
+        Files.readString(Paths.get("src/main/scala/graft/ops/Dedup.scala")) +
+          """object Planted { def cand(bands: DataFrame) = bands.as("a")
+            |  .join(bands.as("b"), col("a.band") === col("b.band") &&
+            |    col("a.bv") === col("b.bv") && col("a.doc_id") < col("b.doc_id")) }
+            |""".stripMargin)
+      Files.copy(Paths.get("src/main/scala/graft/ops/Blocking.scala"),
+        planted.resolve("Blocking.scala"))
+      assert(offenders(Seq(planted.toString), bandJoin, "Blocking.scala") ==
+        Seq(dedup.toString))
+    } finally {
+      val walk = Files.walk(planted)
+      try walk.iterator.asScala.toList.reverse.foreach(Files.delete)
+      finally walk.close()
+    }
   }
 
   test("no Scaladoc block in main sits directly above another") {

@@ -72,6 +72,22 @@ class LinkageSpec extends AnyFunSuite {
     assert(cappedNull == Set((200L, 201L)))
   }
 
+  test("groups (NULL, x) and (x, NULL) never pair or share a hot block") {
+    val df = Seq[(Long, String, String, String)](
+      (1L, "abcdefghijkl", null, "x"),
+      (2L, "abcdefghijkl", "x", null), // same name, the NULL moved over
+      (3L, "abcdefghijkX", null, "x")) // 1's group, shares its prefix block
+      .toDF("rec_id", "name", "g1", "g2")
+    // 1 and 3 hold the prefix block alone: 2 rows, under a cap of 2; had 2
+    // hashed into it, the block would hold 3 rows and drop the 1-3 pair
+    Seq(Long.MaxValue, 2L).foreach { cap =>
+      val out = Linkage.fuzzyDuplicates(df, groupCols = Seq("g1", "g2"),
+          maxBlockFreq = cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(out == Set((1L, 3L)), s"maxBlockFreq=$cap")
+    }
+  }
+
   test("linkClusters resolves entities linearly (one row per linked rec)") {
     val df = recs(
       (1L, "abcdefghijkl", 7), (2L, "Xbcdefghijkl", 7),

@@ -167,7 +167,7 @@ class DedupSpec extends AnyFunSuite with TempDirs {
     val idx = s"$dir/index"
     assert(PersistedIndex.meta(spark, idx).isEmpty)
     Dedup.writeMinhashIndex(corpus, idx)
-    assert(PersistedIndex.meta(spark, idx).map(_.kind).contains("minhash"))
+    assert(PersistedIndex.meta(spark, idx).map(_.kind).contains(Kind.Minhash.name))
 
     val fromIndex = Dedup.incrementalNewFromIndex(fresh, idx)
     // the probe never touches the corpus parquet: every file scan in the
@@ -292,7 +292,7 @@ class DedupSpec extends AnyFunSuite with TempDirs {
     // an index without a recorded fingerprint never matches
     val bare = s"$dir/bare"
     Dedup.writeMinhashIndex(spark.read.parquet(src), bare)
-    assert(PersistedIndex.meta(spark, bare).map(_.kind).contains("minhash"))
+    assert(PersistedIndex.meta(spark, bare).map(_.kind).contains(Kind.Minhash.name))
     assert(!PersistedIndex.matches(spark, bare, Kind.Minhash, fp2))
   }
 

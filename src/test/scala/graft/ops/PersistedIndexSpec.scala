@@ -195,6 +195,34 @@ class PersistedIndexSpec extends AnyFunSuite with TempDirs {
     assert(!PersistedIndex.matches(spark, bare, Kind.Ivf, fp))
   }
 
+  test("a minhash index with string band values is rebuilt by cached and refused by the probe") {
+    val dir = dirFor("old_minhash")
+    val src = s"$dir/src"
+    docs.write.parquet(src)
+    var builds = 0
+    def cached() = PersistedIndex.cached(spark, Kind.Minhash, src) { (path, fp) =>
+      builds += 1
+      Dedup.writeMinhashIndex(spark.read.parquet(src), path, fingerprint = Some(fp))
+    }
+    val path = cached()
+    assert(builds == 1)
+    // the layout before Long band keys: kind "minhash", (doc_id, band, bv)
+    val fp = PersistedIndex.sourceFingerprint(spark, src)
+    Seq((1L, 0, "1,2,3,4")).toDF("doc_id", "band", "bv")
+      .write.mode("overwrite").parquet(s"$path/bands")
+    PersistedIndex.writeText(spark, new Path(path, "_meta.txt"),
+      s"kind=minhash\nshingleK=2\nnumHashes=16\nrowsPerBand=4\nfingerprint=$fp")
+    val e = intercept[IllegalArgumentException](
+      Dedup.incrementalNewFromIndex(docs.limit(2), path))
+    assert(e.getMessage.contains(s"is kind 'minhash', not a ${Kind.Minhash} index"),
+      e.getMessage)
+    assert(cached() == path && builds == 2)
+    assert(spark.read.parquet(s"$path/bands").schema.map(f =>
+      f.name -> f.dataType.simpleString) == Seq("doc_id" -> "bigint",
+      "band_key" -> "bigint"))
+    assert(Dedup.incrementalNewFromIndex(docs.limit(2), path).count() == 0)
+  }
+
   // ---- every reader checks its kind ---------------------------------------
 
   private def docs = (1L to 20L)
@@ -243,13 +271,15 @@ class PersistedIndexSpec extends AnyFunSuite with TempDirs {
     Family(Kind.Lm, Quality.writeLmModel(docs.limit(20), _),
       Quality.lmScoreFromModel(docs.limit(2), _), None))
 
-  Seq("minhash", "phash", "grid", "ivfpq", "ivf", "pq", "cms", "lm")
-    .zipWithIndex.foreach { case (kind, i) =>
-      test(s"$kind readers refuse another kind's index, naming both kinds") {
+  Seq("minhash" -> Kind.Minhash, "phash" -> Kind.Phash, "grid" -> Kind.Grid,
+    "ivfpq" -> Kind.IvfPq, "ivf" -> Kind.Ivf, "pq" -> Kind.Pq,
+    "cms" -> Kind.Cms, "lm" -> Kind.Lm)
+    .zipWithIndex.foreach { case ((label, kind), i) =>
+      test(s"$label readers refuse another kind's index, naming both kinds") {
         val own = families(i)
         val other = families((i + 1) % families.size)
-        assert(own.kind.name == kind)
-        val path = s"${dirFor(kind)}/index"
+        assert(own.kind == kind)
+        val path = s"${dirFor(label)}/index"
         other.build(path)
         (Seq(own.probe) ++ own.update).foreach { read =>
           val e = intercept[IllegalArgumentException](read(path))

@@ -71,12 +71,26 @@ class StreamingDedupSpec extends AnyFunSuite with TempDirs {
   }
 
   test("stateless LSH band assignment matches the batch band keys") {
-    val embs = Tables.load(spark, sf, "embeddings")
-    val streamed = StreamingDedup.lshBands(embs)
-      .orderBy("vec_id", "band").collect().map(r =>
-        (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    // batch recomputation of the same keys
     import org.apache.spark.sql.functions._
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val embs = Tables.load(spark, sf, "embeddings")
+    // the batch sign-band keys, run on a stream of the same rows
+    val in = MemoryStream[(Long, Seq[Float])]
+    in.addData(embs.select("vec_id", "embedding").as[(Long, Seq[Float])].collect())
+    val stream = in.toDF().toDF("vec_id", "embedding")
+      .withColumn("bucket", graft.ops.Similarity.lshBucket(
+        col("embedding").cast("array<double>")))
+      .select(col("vec_id"), explode(array(
+        graft.ops.Blocking.signBandKeys(col("bucket"), 8, 4): _*)).as("band_key"))
+    val q = stream.writeStream.format("memory")
+      .queryName("lsh_band_keys").outputMode("append").start()
+    q.processAllAvailable()
+    q.stop()
+    val streamed = spark.table("lsh_band_keys")
+      .orderBy("vec_id", "band_key").collect().map(r =>
+        (r.getLong(0), r.getLong(1))).toSeq
+    // batch recomputation of the same keys, packed band << 32 | bv
     val batch = embs
       .withColumn("bucket", graft.ops.Similarity.lshBucket(
         col("embedding").cast("array<double>")))
@@ -85,8 +99,9 @@ class StreamingDedupSpec extends AnyFunSuite with TempDirs {
           shiftright(col("bucket"), b * 4).bitwiseAND(lit(15L)).as("bv"))): _*))
           .as("bk"))
       .select(col("vec_id"), col("bk.band"), col("bk.bv"))
-      .orderBy("vec_id", "band").collect().map(r =>
-        (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
+      .collect().map(r =>
+        (r.getLong(0), (r.getInt(1).toLong << 32) | r.getLong(2)))
+      .sorted.toSeq
     assert(streamed == batch && streamed.nonEmpty)
   }
 
